@@ -22,8 +22,8 @@ from pyspark.sql import functions as F
 from cliner_spark import fixtures, schemas
 from cliner_spark.canonicalize import canonical_concept_map
 from cliner_spark.link import link_mentions
-from cliner_spark.mentions import scan_mentions_expr
-from cliner_spark.tokenization import tokenize, tokens_col
+from cliner_spark.mentions import scan_mentions_udf
+from cliner_spark.tokenization import sql_tokens, tokenize, tokens_col
 from cliner_spark.triples import build_triples
 
 # --------------------------------------------------------------------------
@@ -72,18 +72,16 @@ GAZ_SQL = fixtures.gazetteer_values_sql(fixtures.DOC_GAZETTEER)
 
 # Shared DuckDB CTE fragments ------------------------------------------------
 
-# tokens per document (empty/blank-safe, mirrors tokenize.tokens_col)
-SQL_DOCS_TOKS = """
+# tokens per document (empty/blank-safe, the DuckDB twin of tokens_col)
+SQL_DOCS_TOKS = f"""
 docs AS (
-  SELECT doc_id, text,
-         list_filter(string_split_regex(trim(coalesce(text, '')), '\\s+'),
-                     x -> x <> '') AS toks
+  SELECT doc_id, text, {sql_tokens()} AS toks
   FROM documents
 )
 """
 
 # candidate n-grams (n=1..4) + gazetteer match + dominance filter
-# (mirrors mentions.scan_mentions_expr; semantics doc in mentions.py)
+# (mirrors mentions.scan_mentions_udf; semantics doc in mentions.py)
 SQL_KEPT_MENTIONS = f"""
 gazv AS (SELECT * FROM {GAZ_SQL}),
 cand AS (
@@ -163,7 +161,7 @@ def _doc_mentions_spark(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(0).alias("turn_idx"),
         "text",
     )
-    m = scan_mentions_expr(docs, DOC_TERMS)
+    m = scan_mentions_udf(docs, DOC_TERMS)
     return m.select(
         F.col("conv_id").cast("bigint").alias("doc_id"),
         "tok_start",
@@ -196,13 +194,13 @@ def q_tokenize_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "q_mention_scan",
-    f"""
+SQL_MENTION_SCAN = f"""
 WITH {SQL_DOCS_TOKS}, {SQL_KEPT_MENTIONS}
 SELECT doc_id, tok_start, tok_end, mention_text FROM mentions
-""",
-)
+"""
+
+
+@register("q_mention_scan", SQL_MENTION_SCAN)
 def q_mention_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _doc_mentions_spark(spark, sf_dir)
 
@@ -353,7 +351,7 @@ def _doc_linked_transcript(spark: SparkSession, sf_dir: str):
         F.lit(None).cast("timestamp").alias("ts"),
     )
     gaz = doc_gazetteer_df(spark)
-    mentions = scan_mentions_expr(tx, DOC_TERMS)
+    mentions = scan_mentions_udf(tx, DOC_TERMS)
     return link_mentions(mentions, gaz), gaz
 
 
@@ -1832,29 +1830,11 @@ def q_iob_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "q_mention_scan_udf",
-    f"""
-WITH {SQL_DOCS_TOKS}, {SQL_KEPT_MENTIONS}
-SELECT doc_id, tok_start, tok_end, mention_text FROM mentions
-""",
-)
+@register("q_mention_scan_udf", SQL_MENTION_SCAN)
 def q_mention_scan_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same semantics as q_mention_scan but through the Arrow mapInPandas
-    trie scanner (the big-gazetteer scale path) — oracle-checked against the
-    identical SQL."""
-    from cliner_spark.mentions import scan_mentions_udf
-
-    docs = load_docs(spark, sf_dir).select(
-        F.col("doc_id").cast("string").alias("conv_id"),
-        F.lit(0).alias("turn_idx"),
-        "text",
-    )
-    m = scan_mentions_udf(docs, DOC_TERMS)
-    return m.select(
-        F.col("conv_id").cast("bigint").alias("doc_id"),
-        "tok_start", "tok_end", "mention_text",
-    )
+    """Same scan and oracle as q_mention_scan, under the registry name that
+    COVERAGE and the query priority list already use."""
+    return _doc_mentions_spark(spark, sf_dir)
 
 
 # ===========================================================================

@@ -2,24 +2,21 @@
 code/feature_extraction/umls_features.py + interpret_umls.py longest-match
 phrase lookup, approx/unverified — SURVEY.md §0).
 
-Semantics (defined once, implemented three ways — Spark expressions, Arrow
-UDF, DuckDB oracle SQL, plus the plain-Python test oracle):
+Semantics (defined once; the DuckDB oracle SQL in entry_queries and the
+plain-Python oracle_py are checked against it):
 
   1. Candidates: every n-gram (1 <= n <= MAX_TERM_TOKENS) of the turn's
-     whitespace tokens whose lowercase join matches a gazetteer term.
+     whitespace tokens (tokenization.py) whose lowercase join matches a
+     gazetteer term.
   2. Dominance filter ("leftmost-longest", set-based): candidate A is dropped
      iff some candidate B overlaps it and B is better — longer, or same
      length with a smaller start. The kept set is provably overlap-free and
      the rule is non-sequential, so it parallelizes (unlike a greedy scan).
 
-Scale notes:
-- `scan_mentions_expr` is 100% JVM expressions over per-turn arrays: zero
-  shuffle, whole-stage codegen, gazetteer embedded as a literal array
-  (fine to a few thousand terms — the plan ships it once per executor).
-- `scan_mentions_udf` is the big-gazetteer path: one mapInPandas pass with a
-  sc.broadcast term map, vectorized over the batch-flattened token array
-  (tagger.kept_ngram_spans); still zero shuffle, Arrow-batched.
-Both return the same rows; tests assert equality.
+Scale: `scan_mentions_udf` is one mapInPandas pass with a sc.broadcast term
+map, vectorized over the batch-flattened token array
+(tagger.kept_ngram_spans); zero shuffle, Arrow-batched. The tagger's
+gazetteer features share the same kernel.
 """
 
 from __future__ import annotations
@@ -27,107 +24,9 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
-from pyspark.sql import functions as F
-
-from cliner_spark.tokenization import tokens_col
+from pyspark.sql import DataFrame
 
 MAX_TERM_TOKENS = 4
-
-_CAND_TYPE = "array<struct<tok_start:int,tok_end:int,term:string>>"
-
-
-def _ngram_candidates(tokens: Column, n: int, start_mask: Column) -> Column:
-    """Candidates of exactly n tokens starting at a masked-in position:
-    struct(tok_start, tok_end, lower term).
-
-    start_mask is a per-position boolean array (first-token-of-some-term
-    membership). Filtering start positions BEFORE building the n-gram string
-    is the whole performance story: without it every position pays a
-    concat_ws + full-term array_contains; with it only plausible starts do
-    (one boolean element_at per position instead).
-    """
-    sz = F.size(tokens)
-    starts = F.filter(
-        F.sequence(F.lit(0), sz - n), lambda i: F.element_at(start_mask, i + 1)
-    )
-    return F.when(
-        sz >= n,
-        F.transform(
-            starts,
-            lambda i: F.struct(
-                i.cast("int").alias("tok_start"),
-                (i + n - 1).cast("int").alias("tok_end"),
-                F.lower(F.concat_ws(" ", F.slice(tokens, i + 1, n))).alias("term"),
-            ),
-        ),
-    ).otherwise(F.array().cast(_CAND_TYPE))
-
-
-def _dominance_keep(matched: Column) -> Column:
-    """Keep candidates not dominated by any overlapping longer/earlier one."""
-
-    def better(o: Column, c: Column) -> Column:
-        o_len = o["tok_end"] - o["tok_start"]
-        c_len = c["tok_end"] - c["tok_start"]
-        overlap = (o["tok_start"] <= c["tok_end"]) & (o["tok_end"] >= c["tok_start"])
-        return overlap & (
-            (o_len > c_len) | ((o_len == c_len) & (o["tok_start"] < c["tok_start"]))
-        )
-
-    return F.filter(matched, lambda c: ~F.exists(matched, lambda o: better(o, c)))
-
-
-def scan_mentions_expr(
-    turns: DataFrame,
-    terms: list[str],
-    text_col: str = "text",
-    max_n: int = MAX_TERM_TOKENS,
-) -> DataFrame:
-    """Pure-expression scan. `terms` is the distinct lowercase gazetteer
-    surface-form list (small: embedded as a literal array in the plan).
-
-    Returns mentions(conv_id, turn_idx, tok_start, tok_end, mention_text)
-    where mention_text is the original-case token slice (text-equality
-    invariant: no normalization leaks into stored mentions).
-    """
-    term_set = sorted({t.lower() for t in terms})
-    term_arr = F.array(*[F.lit(t) for t in term_set])
-    first_words = sorted({t.split()[0] for t in term_set})
-    fw_arr = F.array(*[F.lit(w) for w in first_words])
-    # lengths that actually occur in the gazetteer — no wasted n passes
-    ns = sorted({len(t.split()) for t in term_set if len(t.split()) <= max_n})
-
-    # one boolean per token: could a term start here? (computed once per turn)
-    start_mask = F.transform(
-        F.col("tokens"), lambda t: F.array_contains(fw_arr, F.lower(t))
-    )
-    cands = F.flatten(
-        F.array(
-            *[_ngram_candidates(F.col("tokens"), n, F.col("_fw_mask")) for n in ns]
-        )
-    )
-    matched = F.filter(cands, lambda c: F.array_contains(term_arr, c["term"]))
-
-    return (
-        turns.withColumn("tokens", tokens_col(text_col))
-        .withColumn("_fw_mask", start_mask)
-        .withColumn("m", F.explode(_dominance_keep(matched)))
-        .select(
-            "conv_id",
-            "turn_idx",
-            F.col("m.tok_start").alias("tok_start"),
-            F.col("m.tok_end").alias("tok_end"),
-            F.concat_ws(
-                " ",
-                F.slice(
-                    F.col("tokens"),
-                    F.col("m.tok_start") + 1,
-                    F.col("m.tok_end") - F.col("m.tok_start") + 1,
-                ),
-            ).alias("mention_text"),
-        )
-    )
 
 
 def scan_mentions_udf(
@@ -137,11 +36,10 @@ def scan_mentions_udf(
     max_n: int = MAX_TERM_TOKENS,
     carry_ts: bool = False,
 ) -> DataFrame:
-    """Big-gazetteer scan: mapInPandas + sc.broadcast term map, fully
+    """Gazetteer mention scan: mapInPandas + sc.broadcast term map, fully
     vectorized via tagger.kept_ngram_spans (pandas shift+concat n-gram match
     over the batch-flattened token array + turn-segmented dominance) — no
-    per-row Python loop inside the Arrow batch. Same dominance semantics as
-    scan_mentions_expr; tests assert row equality. Zero shuffle.
+    per-row Python loop inside the Arrow batch. Zero shuffle.
 
     carry_ts=True passes the event-time `ts` column through (streaming path:
     avoids a stream-stream self-join to re-attach event time downstream).

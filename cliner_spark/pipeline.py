@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from cliner_spark import fixtures
 from cliner_spark.canonicalize import canonical_concept_map
 from cliner_spark.link import link_mentions
-from cliner_spark.mentions import scan_mentions_expr, scan_mentions_udf
+from cliner_spark.mentions import scan_mentions_udf
 from cliner_spark.tokenization import drop_blank_turns
 from cliner_spark.triples import build_triples, hot_conversations, write_triples
 
@@ -42,7 +42,7 @@ def run_pipeline(
     spark: SparkSession,
     transcripts: DataFrame,
     gazetteer: DataFrame | None = None,
-    scanner: str = "expr",
+    scanner: str = "udf",
     canon_map: DataFrame | None = None,
     assertions: bool = False,
     with_metrics: bool = False,
@@ -83,9 +83,8 @@ def run_pipeline(
         return df.observe(obs, F.count(F.lit(1)).alias("rows"))
 
     turns = _observe(drop_blank_turns(ensure_parallelism(transcripts)), "turns")
-    if scanner == "expr":
-        mentions = scan_mentions_expr(turns, terms)
-    elif scanner == "udf":
+    # "expr" is an older name for the same Arrow scan, kept for existing callers
+    if scanner in ("udf", "expr"):
         mentions = scan_mentions_udf(turns, terms)
     elif scanner == "tagger":
         # Viterbi tagger path (SURVEY.md §7.1 step 3): features -> batched
@@ -304,7 +303,7 @@ def main(argv: list[str] | None = None) -> None:
     p = sub.add_parser("predict", help="transcripts -> triples (flagship)")
     p.add_argument("--input", help="parquet transcripts (default: fixture)")
     p.add_argument("--output", required=True)
-    p.add_argument("--scanner", default="udf", choices=["expr", "udf", "tagger"])
+    p.add_argument("--scanner", default="udf", choices=["udf", "tagger"])
     p.add_argument(
         "--assertions",
         action="store_true",

@@ -23,6 +23,7 @@ from cliner_spark.entry_queries import (
     load_docs,
     register,
 )
+from cliner_spark.tokenization import WS_TRIM, sql_tokens, tokens_col
 
 _DEC = "decimal(38,4)"
 
@@ -585,8 +586,6 @@ def q_doc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     chunk; zero shuffle, zero Python. At 100 TB this is a map-only stage
     whose output partitioning inherits the input's (write straight to the
     chunk table, no repartition needed unless downstream keys differ)."""
-    from cliner_spark.tokenization import tokens_col
-
     docs = load_docs(spark, sf_dir).select("doc_id", tokens_col(F.col("text")).alias("toks"))
     n = F.size("toks")
     starts = F.sequence(F.lit(0), n - 1, F.lit(CHUNK_STRIDE))
@@ -631,8 +630,6 @@ def q_lexical_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     signals a dedup/quality gate reads). One explode + one two-level
     aggregation; TTR divides two exact BIGINTs in DOUBLE (identical IEEE
     quotient both engines), rounded for hash stability."""
-    from cliner_spark.tokenization import tokens_col
-
     docs = load_docs(spark, sf_dir).select(
         "doc_id", tokens_col(F.col("text")).alias("toks")
     )
@@ -676,7 +673,6 @@ def q_zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-health gate). Rank ties break deterministically (n DESC, token
     ASC). regr_* are single-pass algebraic aggregates; output rounded to 4
     decimals because the float accumulation order differs across engines."""
-    from cliner_spark.tokenization import tokens_col
     from pyspark.sql import Window
 
     docs = load_docs(spark, sf_dir).select(
@@ -741,8 +737,6 @@ def q_boilerplate(spark: SparkSession, sf_dir: str) -> DataFrame:
     count_distinct); coverage re-joins shingles against the (small)
     boilerplate set and expands to positions JVM-side before a distinct on
     (doc, pos)."""
-    from cliner_spark.tokenization import tokens_col
-
     docs = load_docs(spark, sf_dir).select(
         "doc_id", tokens_col(F.col("text")).alias("toks")
     )
@@ -1052,7 +1046,6 @@ def q_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-split partial sketches sum), estimates broadcast the sketch onto
     the vocabulary."""
     from cliner_spark.sketch import countmin_estimates
-    from cliner_spark.tokenization import tokens_col
 
     toks = (
         load_docs(spark, sf_dir)
@@ -1804,17 +1797,17 @@ def q_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_udtf_sentences",
-    r"""
+    f"""
 WITH pieces AS (
-  SELECT doc_id, pi, regexp_replace(pc, '^\s+|\s+$', '', 'g') AS pc
+  SELECT doc_id, pi, regexp_replace(pc, '{WS_TRIM}', '', 'g') AS pc
   FROM (
     SELECT doc_id, generate_subscripts(pcs, 1) AS pi, UNNEST(pcs) AS pc
     FROM (SELECT doc_id, regexp_split_to_array(text, '[.!?]+') AS pcs
           FROM documents)
   )
-  WHERE regexp_replace(pc, '^\s+|\s+$', '', 'g') <> ''
+  WHERE regexp_replace(pc, '{WS_TRIM}', '', 'g') <> ''
 ),
-toks AS (SELECT doc_id, pi, regexp_split_to_array(pc, '\s+') AS tk FROM pieces),
+toks AS (SELECT doc_id, pi, {sql_tokens("pc")} AS tk FROM pieces),
 chunks AS (
   SELECT doc_id, pi,
          UNNEST(generate_series(0, CAST(ceil(len(tk)/12.0) AS INT) - 1)) AS ci,
@@ -2411,8 +2404,6 @@ def q_dup_span_mask(spark: SparkSession, sf_dir: str) -> DataFrame:
     set comes from one groupBy and semi-joins back; only matched windows
     (a small fraction of the corpus) reach the per-doc island windows."""
     docs = load_docs(spark, sf_dir)
-    from cliner_spark.tokenization import tokens_col
-
     t = docs.select("doc_id", tokens_col(F.col("text")).alias("toks"))
     grams = t.select(
         "doc_id",
@@ -2482,8 +2473,6 @@ def q_hash_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     expression. Everything is JVM expression work on the token explode:
     one scan, one groupBy, no Python, reduction-order-independent integer
     sums."""
-    from cliner_spark.tokenization import tokens_col
-
     docs = load_docs(spark, sf_dir)
     tok = docs.select(
         "doc_id", F.explode(tokens_col(F.col("text"))).alias("tok")
@@ -3104,8 +3093,6 @@ def q_seq_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-bucket recursive CTE."""
     import pandas as pd
 
-    from cliner_spark.tokenization import tokens_col
-
     docs = load_docs(spark, sf_dir)
     d = docs.select(
         "doc_id",
@@ -3538,8 +3525,6 @@ txr AS (
 
 def _txr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spark twin of SQL_TXR (tokens_col = the repo's whitespace tokenizer)."""
-    from cliner_spark.entry_queries import tokens_col
-
     docs = load_docs(spark, sf_dir)
     w = Window.partitionBy(F.col("doc_id") % 97).orderBy("doc_id")
     return docs.select(
@@ -4204,8 +4189,6 @@ def q_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     one single-partition window here — at UMLS/real-vocab scale you'd
     replace it with the two-pass threshold trick q_heavy_hitters uses; the
     corpus-sized work (tokenize + freq groupBy) is all partial-aggregated."""
-    from cliner_spark.entry_queries import tokens_col
-
     toks = load_docs(spark, sf_dir).select(
         F.explode(tokens_col(F.col("text"))).alias("tok")
     ).select(F.lower("tok").alias("tok"))
@@ -4233,29 +4216,26 @@ def q_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "q_extractive_summary",
-    r"""
+    rf"""
 WITH nd AS (SELECT CAST(count(*) AS BIGINT) AS n FROM documents),
 dtok AS (
   SELECT DISTINCT doc_id,
          lower(t.tok) AS tok
   FROM (SELECT doc_id,
-               list_filter(string_split_regex(trim(coalesce(text, '')), '\s+'),
-                           x -> x <> '') AS toks
+               {sql_tokens()} AS toks
         FROM documents) d, unnest(toks) AS t(tok)
 ),
 df AS (SELECT tok, CAST(count(*) AS BIGINT) AS dfc FROM dtok GROUP BY tok),
 pieces AS (
-  SELECT doc_id, pi, regexp_replace(pc, '^\s+|\s+$', '', 'g') AS sentence
+  SELECT doc_id, pi, regexp_replace(pc, '{WS_TRIM}', '', 'g') AS sentence
   FROM (SELECT doc_id, generate_subscripts(pcs, 1) AS pi, UNNEST(pcs) AS pc
         FROM (SELECT doc_id, regexp_split_to_array(text, '[.!?]+') AS pcs
               FROM documents))
-  WHERE regexp_replace(pc, '^\s+|\s+$', '', 'g') <> ''
+  WHERE regexp_replace(pc, '{WS_TRIM}', '', 'g') <> ''
 ),
 stok AS (
   SELECT p.doc_id, p.pi, p.sentence, lower(t.tok) AS tok
-  FROM pieces p,
-       unnest(list_filter(string_split_regex(p.sentence, '\s+'),
-                          x -> x <> '')) AS t(tok)
+  FROM pieces p, unnest({sql_tokens("p.sentence")}) AS t(tok)
 ),
 scored AS (
   SELECT s.doc_id, s.pi, s.sentence,
@@ -4281,8 +4261,6 @@ def q_extractive_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocab-dimension-sized -> broadcast onto sentence tokens; the 1-row
     corpus-size carry is a broadcast scalar attach (whitelisted NLJ, same
     as q_tfidf_top_terms); ranking is a per-doc window, never global."""
-    from cliner_spark.entry_queries import tokens_col
-
     docs = load_docs(spark, sf_dir)
     nd = docs.agg(F.count(F.lit(1)).alias("n"))
     dtok = docs.select(
@@ -4294,14 +4272,13 @@ def q_extractive_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id",
             F.posexplode(F.split(F.col("text"), r"[.!?]+")).alias("pi", "pc"),
         )
-        .select("doc_id", "pi", F.trim(F.col("pc")).alias("sentence"))
+        .select(
+            "doc_id", "pi", F.regexp_replace("pc", WS_TRIM, "").alias("sentence")
+        )
         .filter(F.col("sentence") != "")
     )
     stok = pieces.select(
-        "doc_id", "pi", "sentence",
-        F.explode(
-            F.filter(F.split(F.col("sentence"), r"\s+"), lambda x: x != "")
-        ).alias("tok"),
+        "doc_id", "pi", "sentence", F.explode(tokens_col("sentence")).alias("tok")
     ).select("doc_id", "pi", "sentence", F.lower("tok").alias("tok"))
     scored = (
         stok.join(F.broadcast(df), "tok")
@@ -4359,8 +4336,6 @@ def q_topic_tags(spark: SparkSession, sf_dir: str) -> DataFrame:
     available. The lexicon is tiny -> broadcast hash join on the token
     stream; one partial-aggregated groupBy; ranking windows over the
     per-doc key."""
-    from cliner_spark.entry_queries import tokens_col
-
     lex = spark.createDataFrame(TOPIC_DICT, "topic string, term string")
     tok = load_docs(spark, sf_dir).select(
         "doc_id", F.explode(tokens_col(F.col("text"))).alias("tok")
@@ -4513,7 +4488,7 @@ def q_gazetteer_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     loop closed). One equi-join mention->turn tokens with JVM array
     indexing (no window over the corpus), one partial-aggregated groupBy,
     and a per-concept ranking window on the dimension-sized cui key."""
-    from cliner_spark.entry_queries import _doc_mentions_spark, tokens_col
+    from cliner_spark.entry_queries import _doc_mentions_spark
     from cliner_spark.link import link_mentions
 
     docs = load_docs(spark, sf_dir)
@@ -4618,8 +4593,6 @@ def q_curriculum_phases(spark: SparkSession, sf_dir: str) -> DataFrame:
     and a 1-ulp engine difference can't flip a boundary doc). The global
     cumulative window runs over the DISTINCT-length frequency table
     (dimension-sized), not the corpus."""
-    from cliner_spark.entry_queries import tokens_col
-
     lens = load_docs(spark, sf_dir).select(
         "doc_id", F.size(tokens_col(F.col("text"))).cast("long").alias("n_toks")
     )
@@ -4827,8 +4800,6 @@ def q_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     Jaccard/boilerplate family already builds); the join back is
     shingle-keyed and partial-aggregated. No window over the corpus, no
     ordering dependence — min(doc_id) is the arrival rule."""
-    from cliner_spark.entry_queries import tokens_col
-
     docs = load_docs(spark, sf_dir).select(
         "doc_id", tokens_col(F.col("text")).alias("toks")
     )

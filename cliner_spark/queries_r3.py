@@ -19,6 +19,7 @@ from cliner_spark.entry_queries import (  # noqa: F401
     load_docs,
     register,
 )
+from cliner_spark.tokenization import sql_tokens, tokens_col
 
 # Names registered by this module, in driver-verification priority order.
 R3_NAMES: list[str] = []
@@ -273,7 +274,6 @@ def q_kg_eccentricity(spark: SparkSession, sf_dir: str) -> DataFrame:
 from cliner_spark.entry_queries import (  # noqa: E402
     SQL_LM_COUNTS,
     SQL_SHINGLES_3,
-    tokens_col,
 )
 from cliner_spark.queries_r2 import SQL_TXR, _txr  # noqa: E402
 
@@ -2394,8 +2394,7 @@ _SQL_SEGMENT = f"""
 WITH {SQL_DOCS_TOKS}, {SQL_TXR.strip().rstrip(',')},
 tk AS (SELECT DISTINCT t.conv_id, t.turn_idx, lower(u.tok) AS tok
        FROM txr t,
-            unnest(list_filter(string_split_regex(trim(coalesce(t.text, '')),
-                                                  '\\s+'), x -> x <> '')) AS u(tok)),
+            unnest({sql_tokens("t.text")}) AS u(tok)),
 sz AS (SELECT conv_id, turn_idx, CAST(count(*) AS BIGINT) AS u
        FROM tk GROUP BY 1, 2),
 inter AS (SELECT a.conv_id, b.turn_idx,
@@ -3025,11 +3024,10 @@ def q_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SPELL_SQL = """
+_SPELL_SQL = f"""
 WITH docs AS (
   SELECT doc_id,
-         list_filter(string_split_regex(trim(coalesce(text, '')), '\\s+'),
-                     x -> x <> '') AS toks
+         {sql_tokens()} AS toks
   FROM documents
 ),
 q0 AS (
@@ -3108,7 +3106,7 @@ def q_spell_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregates to distinct terms (map-side combine) before exploding."""
     docs = load_docs(spark, sf_dir)
     toks = docs.select(
-        "doc_id", F.expr("filter(split(trim(coalesce(text,'')), '\\\\s+'), x -> x <> '')").alias("toks")
+        "doc_id", tokens_col("text").alias("toks")
     ).filter(F.size("toks") > 0)
     q0 = toks.select(
         "doc_id",
@@ -3152,11 +3150,10 @@ def q_spell_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_CONTAIN_SQL = """
+_CONTAIN_SQL = f"""
 WITH docs AS (
   SELECT doc_id,
-         list_filter(string_split_regex(trim(coalesce(text, '')), '\\s+'),
-                     x -> x <> '') AS toks
+         {sql_tokens()} AS toks
   FROM documents
 ),
 sh AS (
@@ -3243,12 +3240,10 @@ def q_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_COPELAND_SQL = """
+_COPELAND_SQL = f"""
 WITH d AS (
   SELECT doc_id, CAST(doc_id % 8 AS INT) AS player,
-         len(list_distinct(list_filter(
-             string_split_regex(trim(coalesce(text, '')), '\\s+'),
-             x -> x <> ''))) AS score
+         len(list_distinct({sql_tokens()})) AS score
   FROM documents
 ),
 m AS (
@@ -3302,8 +3297,6 @@ def q_copeland_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     twin so the oracle stays pure SQL. Everything downstream aggregates to
     the player-pair matrix (64 cells) then the player table (8 rows):
     map-side combine all the way, no skew possible."""
-    from cliner_spark.tokenization import tokens_col
-
     docs = load_docs(spark, sf_dir)
     d = docs.select(
         "doc_id",
@@ -3472,11 +3465,10 @@ def q_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SOURCE_OVERLAP_SQL = """
+_SOURCE_OVERLAP_SQL = f"""
 WITH docs AS (
   SELECT source,
-         list_filter(string_split_regex(trim(coalesce(text, '')), '\\s+'),
-                     x -> x <> '') AS toks
+         {sql_tokens()} AS toks
   FROM documents
 ),
 sh AS (
@@ -3543,11 +3535,10 @@ def q_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ASSORT_SQL = """
+_ASSORT_SQL = f"""
 WITH docs AS (
   SELECT doc_id,
-         list_filter(string_split_regex(trim(coalesce(text, '')), '\\s+'),
-                     x -> x <> '') AS toks
+         {sql_tokens()} AS toks
   FROM documents
 ),
 sh2 AS (
@@ -3823,11 +3814,10 @@ def q_shuffle_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register_r3(
     "q_mixture_plan",
-    """
+    f"""
 WITH toks AS (
   SELECT source,
-         CAST(len(list_filter(string_split_regex(trim(coalesce(text, '')),
-              '\\s+'), x -> x <> '')) AS BIGINT) AS n_toks
+         CAST(len({sql_tokens()}) AS BIGINT) AS n_toks
   FROM documents
 ),
 sup AS (
@@ -3862,8 +3852,6 @@ def q_mixture_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the only full-data pass; the windowed totals run on the
     |sources|-sized frame. Zero floats anywhere — epochs and flags are
     exact, so the hash check cannot rot."""
-    from cliner_spark.tokenization import tokens_col
-
     docs = load_docs(spark, sf_dir)
     sup = (
         docs.select("source", F.size(tokens_col(F.col("text"))).cast("bigint").alias("n_toks"))
@@ -3905,11 +3893,10 @@ def q_mixture_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register_r3(
     "q_vocab_growth",
-    """
+    f"""
 WITH docs AS (
   SELECT doc_id,
-         list_filter(string_split_regex(trim(coalesce(text, '')), '\\s+'),
-                     x -> x <> '') AS toks
+         {sql_tokens()} AS toks
   FROM documents
 ),
 ord AS (
@@ -3960,8 +3947,6 @@ def q_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     exponent). The only non-equi piece is the 1-row count carry bounding
     the literal spine."""
     docs = load_docs(spark, sf_dir)
-    from cliner_spark.tokenization import tokens_col
-
     w = Window.orderBy(F.md5(F.col("doc_id").cast("string")), F.col("doc_id"))
     ordd = docs.select(
         tokens_col(F.col("text")).alias("toks"), F.row_number().over(w).alias("pos")
@@ -3994,11 +3979,10 @@ def q_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register_r3(
     "q_freq_spectrum",
-    """
+    f"""
 WITH docs AS (
   SELECT doc_id, source,
-         list_filter(string_split_regex(trim(coalesce(text, '')), '\\s+'),
-                     x -> x <> '') AS toks
+         {sql_tokens()} AS toks
   FROM documents
 ),
 tf AS (
@@ -4030,8 +4014,6 @@ def q_freq_spectrum(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-source spectrum) — the same shuffle shape as q_token_freq; all
     outputs are exact BIGINTs, so the hash check cannot rot."""
     docs = load_docs(spark, sf_dir)
-    from cliner_spark.tokenization import tokens_col
-
     tf = (
         docs.select("source", F.explode(tokens_col(F.col("text"))).alias("tok"))
         .select("source", F.lower("tok").alias("tok"))
@@ -4059,14 +4041,13 @@ def q_freq_spectrum(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_register_r3(
     "q_oov_eval",
-    """
+    f"""
 WITH docs AS (
   SELECT doc_id,
          CASE WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 2) < 'cc' THEN 'train'
               WHEN substr(md5(CAST(doc_id AS VARCHAR)), 1, 2) < 'e6' THEN 'val'
               ELSE 'test' END AS split,
-         list_filter(string_split_regex(trim(coalesce(text, '')), '\\s+'),
-                     x -> x <> '') AS toks
+         {sql_tokens()} AS toks
   FROM documents
 ),
 tv AS (
@@ -4104,7 +4085,6 @@ def q_oov_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     token equi-key — both map-side-combinable shuffles; no window, no
     carry, all BIGINT."""
     from cliner_spark.sampling import split_assign
-    from cliner_spark.tokenization import tokens_col
 
     docs = split_assign(load_docs(spark, sf_dir), "doc_id")
     toks = docs.select(
@@ -4239,8 +4219,7 @@ _WINNOW_W = 4  # window of consecutive k-gram hashes
     f"""
 WITH docs AS (
   SELECT doc_id,
-         list_filter(string_split_regex(trim(coalesce(text, '')), '\\s+'),
-                     x -> x <> '') AS toks
+         {sql_tokens()} AS toks
   FROM documents
 ),
 sh AS (
@@ -4284,8 +4263,6 @@ def q_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_id, so the operator is embarrassingly parallel over documents; no
     corpus-wide shuffle at all. Expected density 2/(w+1) keeps the output
     a small fraction of the shingle count at any scale."""
-    from cliner_spark.tokenization import tokens_col
-
     docs = load_docs(spark, sf_dir)
     k, wsz = _WINNOW_K, _WINNOW_W
     sh = (
@@ -4345,8 +4322,7 @@ _PPS_N = 50  # systematic sample size
     f"""
 WITH docs AS (
   SELECT doc_id,
-         CAST(len(list_filter(string_split_regex(trim(coalesce(text, '')),
-              '\\s+'), x -> x <> '')) AS BIGINT) AS n_toks
+         CAST(len({sql_tokens()}) AS BIGINT) AS n_toks
   FROM documents
 ),
 ord AS (
@@ -4380,8 +4356,6 @@ def q_pps_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     cumsums + a |shards|-sized offset scan, the standard distributed
     prefix-sum) and a 1-row total carry; selection is a stateless predicate
     per row, so the operator streams."""
-    from cliner_spark.tokenization import tokens_col
-
     docs = (
         load_docs(spark, sf_dir)
         .select("doc_id", F.size(tokens_col(F.col("text"))).cast("bigint").alias("n_toks"))
@@ -4409,8 +4383,7 @@ def q_pps_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     f"""
 WITH docs AS (
   SELECT doc_id,
-         list_filter(string_split_regex(trim(coalesce(text, '')), '\\s+'),
-                     x -> x <> '') AS toks
+         {sql_tokens()} AS toks
   FROM documents
 ),
 sh AS (
@@ -4450,8 +4423,6 @@ def q_winnow_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     contract as q_jaccard_pairs/q_containment_pairs (a fingerprint shared
     by > 50 docs is boilerplate, not a clone signal — dropped BEFORE the
     pair join, which bounds fanout per fingerprint at any corpus size)."""
-    from cliner_spark.tokenization import tokens_col  # noqa: F401  (parity with twin)
-
     sel = (
         q_winnow_fingerprints(spark, sf_dir)
         .select("doc_id", F.col("fp").alias("h"))

@@ -14,6 +14,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from cliner_spark.tokenization import drop_blank_turns
+
 # MRCONSO.RRF columns (subset we use, 0-based positions in the 18-col format)
 _CONSO_COLS = {0: "cui", 1: "lat", 2: "ts", 4: "pref", 11: "sab", 14: "str"}
 # MRSTY.RRF: cui, tui, stn, sty, atui, cvf
@@ -123,10 +125,12 @@ def read_i2b2_docs(spark: SparkSession, txt_glob: str) -> DataFrame:
     raw = spark.read.text(txt_glob, wholetext=True).select(
         F.input_file_name().alias("_path"), "value"
     )
-    return raw.select(
-        _file_stem(F.col("_path"), "txt").alias("conv_id"),
-        F.posexplode(F.split(F.col("value"), "\n")).alias("turn_idx", "text"),
-    ).filter(F.length(F.trim(F.col("text"))) > 0)
+    return drop_blank_turns(
+        raw.select(
+            _file_stem(F.col("_path"), "txt").alias("conv_id"),
+            F.posexplode(F.split(F.col("value"), "\n")).alias("turn_idx", "text"),
+        )
+    )
 
 
 def read_i2b2_cons(spark: SparkSession, con_glob: str) -> DataFrame:

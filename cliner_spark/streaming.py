@@ -278,7 +278,6 @@ def run_stream_triples(
             batch_df.sparkSession,
             batch_df,
             gazetteer=gazetteer,
-            scanner="expr",
             canon_map=canon,
             assertions=assertions,
         )

@@ -37,9 +37,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.functions import udtf
 
 _SENT_RE = re.compile(r"[.!?]+")
-# regex trim (not str.strip) so the DuckDB oracle twin can apply the exact
-# same `\s` character class with regexp_replace
-_TRIM_RE = re.compile(r"^\s+|\s+$")
 SESSION_GAP_SEC = 1800  # 30 min, matches q_sessionize's gap rule
 MAX_SENT_TOKENS = 12  # re-chunk window for unpunctuated pieces
 
@@ -52,7 +49,7 @@ class SentenceSplit:
     def eval(self, text: str):
         i = 0
         for piece in _SENT_RE.split(text or ""):
-            piece = _TRIM_RE.sub("", piece)
+            piece = piece.strip()  # the DuckDB twin trims with tokenization.WS_TRIM
             if not piece:
                 continue
             toks = piece.split()

@@ -187,13 +187,13 @@ def test_surface_form_counts_salt_invariant(spark):
     from cliner_spark import fixtures
     from cliner_spark.canonicalize import surface_form_counts
     from cliner_spark.link import link_mentions
-    from cliner_spark.mentions import scan_mentions_expr
+    from cliner_spark.mentions import scan_mentions_udf
 
     rows = fixtures.gen_transcripts(n_convs=8, avg_turns=5, seed=17)
     df = fixtures.transcripts_df(spark, rows)
     terms = sorted({t for (t, *_r) in fixtures.CLINICAL_GAZETTEER})
     linked = link_mentions(
-        scan_mentions_expr(df, terms), fixtures.gazetteer_df(spark)
+        scan_mentions_udf(df, terms), fixtures.gazetteer_df(spark)
     ).withColumn("canon_cui", F.col("cui"))
     one = {
         (r["canon_cui"], r["surface"]): r["n_mentions"]

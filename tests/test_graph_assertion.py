@@ -3,6 +3,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from cliner_spark import fixtures
@@ -171,6 +172,28 @@ def test_tool_flow_triples_match_python(spark):
         for a, b in zip(seq, seq[1:]):
             want[(f"tool:{a}", f"tool:{b}")] += 1
     assert got == dict(want)
+
+
+@pytest.mark.parametrize("scanner", ["udf", "tagger"])
+def test_assertions_index_the_scanned_tokens(spark, scanner):
+    """The assertion window reads the same tokens the scanner counted: a
+    leading tab or a no-break space must not shift tok_start."""
+    from cliner_spark.pipeline import run_pipeline
+
+    tx = spark.createDataFrame(
+        [
+            {"conv_id": "c1", "turn_idx": 0, "text": "\tdenies ablation today"},
+            {"conv_id": "c1", "turn_idx": 1, "text": "denies\xa0ablation today"},
+        ]
+    )
+    out = run_pipeline(spark, tx, scanner=scanner, assertions=True)
+    edges = {
+        (r["pred"], r["obj"])
+        for r in out["triples"].filter(
+            F.col("pred").isin("ASSERTED_IN", "NEGATED_IN", "HEDGED_IN")
+        ).collect()
+    }
+    assert edges == {("NEGATED_IN", "turn:c1#0"), ("NEGATED_IN", "turn:c1#1")}
 
 
 def test_pipeline_assertion_refined_triples(spark):

@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 
 from cliner_spark import fixtures, oracle_py
 from cliner_spark.evaluate import triple_prf
-from cliner_spark.mentions import scan_mentions_expr, scan_mentions_udf
+from cliner_spark.mentions import scan_mentions_udf
 from cliner_spark.pipeline import run_pipeline
 from cliner_spark.tokenization import tokenize
 
@@ -19,25 +19,35 @@ def _fixture_rows():
 
 def test_tokenize_blank_and_ws(spark):
     df = spark.createDataFrame(
-        [("c", 0, None, "  a  b\tc ", None, None)],
+        [
+            ("c", 0, None, "  a  b\tc ", None, None),
+            ("c", 1, None, "\ta b", None, None),
+            ("c", 2, None, "a\xa0b", None, None),
+            ("c", 3, None, "a\u3000b ", None, None),
+        ],
         schema=fixtures.schemas.TRANSCRIPTS,
     )
-    row = tokenize(df).select("tokens").first()
-    assert row["tokens"] == ["a", "b", "c"]
+    rows = tokenize(df).orderBy("turn_idx").select("tokens").collect()
+    assert [r["tokens"] for r in rows] == [
+        ["a", "b", "c"],
+        ["a", "b"],
+        ["a", "b"],
+        ["a", "b"],
+    ]
     df2 = spark.createDataFrame(
         [("c", 1, None, "   ", None, None)], schema=fixtures.schemas.TRANSCRIPTS
     )
     assert tokenize(df2).select("tokens").first()["tokens"] == []
 
 
-def test_scan_expr_matches_python_oracle(spark):
+def test_scan_matches_python_oracle(spark):
     rows = _fixture_rows()
     gaz = fixtures.CLINICAL_GAZETTEER
     terms = sorted({t for (t, *_r) in gaz})
     df = fixtures.transcripts_df(spark, rows)
     got = {
         (r["conv_id"], r["turn_idx"], r["tok_start"], r["tok_end"], r["mention_text"])
-        for r in scan_mentions_expr(df, terms).collect()
+        for r in scan_mentions_udf(df, terms).collect()
     }
     want = set()
     for row in rows:
@@ -45,15 +55,6 @@ def test_scan_expr_matches_python_oracle(spark):
             want.add((row["conv_id"], row["turn_idx"], s, e, mtext))
     assert got == want
     assert len(want) > 50  # fixture actually plants mentions
-
-
-def test_scan_udf_equals_expr(spark):
-    rows = _fixture_rows()
-    terms = sorted({t for (t, *_r) in fixtures.CLINICAL_GAZETTEER})
-    df = fixtures.transcripts_df(spark, rows)
-    a = set(map(tuple, scan_mentions_expr(df, terms).collect()))
-    b = set(map(tuple, scan_mentions_udf(df, terms).collect()))
-    assert a == b
 
 
 def test_link_tie_break(spark):
@@ -201,7 +202,7 @@ def test_merge_triples_equals_single_shot_build(spark):
     df = fixtures.transcripts_df(spark, rows)
     terms = sorted({t for (t, *_r) in fixtures.CLINICAL_GAZETTEER})
     gaz = fixtures.gazetteer_df(spark)
-    linked = link_mentions(scan_mentions_expr(df, terms), gaz).cache()
+    linked = link_mentions(scan_mentions_udf(df, terms), gaz).cache()
     canon = canonical_concept_map(gaz)
 
     whole = set(map(tuple, build_triples(linked, canon_map=canon).collect()))

@@ -177,7 +177,7 @@ def test_stream_feeds_mention_scan(spark, tmp_path):
     """The stream's text column composes with the batch mention scanner
     (foreachBatch-style path): KG construction over a live transcript feed."""
     register_sources(spark)
-    from cliner_spark.mentions import scan_mentions_expr
+    from cliner_spark.mentions import scan_mentions_udf
 
     # materialize two deterministic batches via the generator primitive
     from cliner_spark.pysource import _row_at
@@ -187,7 +187,7 @@ def test_stream_feeds_mention_scan(spark, tmp_path):
         "conv_id string, turn_idx int, role string, text string, "
         "tool string, ts timestamp"
     ))
-    found = scan_mentions_expr(df, ["fever", "chest pain", "blood test"])
+    found = scan_mentions_udf(df, ["fever", "chest pain", "blood test"])
     assert found.count() > 0
     assert set(found.select("mention_text").distinct().toPandas()["mention_text"]) <= {
         "fever",

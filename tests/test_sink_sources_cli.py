@@ -168,10 +168,10 @@ def test_i2b2_raw_pair_roundtrip(spark, tmp_path):
 
     # end-to-end: scan the raw docs with the clinical gazetteer and align
     from cliner_spark.evaluate import exact_match_counts, prf
-    from cliner_spark.mentions import scan_mentions_expr
+    from cliner_spark.mentions import scan_mentions_udf
 
     terms = sorted({t for (t, *_r) in fixtures.CLINICAL_GAZETTEER})
-    pred = scan_mentions_expr(docs, terms).select(
+    pred = scan_mentions_udf(docs, terms).select(
         "conv_id", "turn_idx", "tok_start", "tok_end"
     )
     gold_k = gold.select("conv_id", "turn_idx", "tok_start", "tok_end")
@@ -269,13 +269,13 @@ def test_orc_transcript_roundtrip_runs_pipeline(spark, tmp_path):
     ]
     want = sorted(
         tuple(r)
-        for r in run_pipeline(spark, tx, scanner="expr")["triples"]
+        for r in run_pipeline(spark, tx)["triples"]
         .select("conv_id", "subj", "pred", "obj", "turn_idx")
         .collect()
     )
     got = sorted(
         tuple(r)
-        for r in run_pipeline(spark, back, scanner="expr")["triples"]
+        for r in run_pipeline(spark, back)["triples"]
         .select("conv_id", "subj", "pred", "obj", "turn_idx")
         .collect()
     )

@@ -8,13 +8,13 @@ from pyspark.sql import functions as F
 from cliner_spark import fixtures, streaming
 from cliner_spark.con_format import format_con_lines, parse_con_lines
 from cliner_spark.link import link_mentions
-from cliner_spark.mentions import scan_mentions_expr
+from cliner_spark.mentions import scan_mentions_udf
 
 
 def _linked(spark, rows):
     df = fixtures.transcripts_df(spark, rows)
     terms = sorted({t for (t, *_r) in fixtures.CLINICAL_GAZETTEER})
-    m = scan_mentions_expr(df, terms)
+    m = scan_mentions_udf(df, terms)
     return link_mentions(m, fixtures.gazetteer_df(spark))
 
 

@@ -165,7 +165,7 @@ def test_feature_determinism_and_families():
 
 
 def test_tag_mentions_spark_matches_scan(spark):
-    from cliner_spark.mentions import scan_mentions_expr
+    from cliner_spark.mentions import scan_mentions_udf
 
     rows = fixtures.gen_transcripts(n_convs=10, avg_turns=6, seed=5)
     df = fixtures.transcripts_df(spark, rows)
@@ -175,7 +175,7 @@ def test_tag_mentions_spark_matches_scan(spark):
         for r in tagger.tag_mentions(df, model).collect()
     }
     terms = sorted({t for (t, *_r) in fixtures.CLINICAL_GAZETTEER})
-    want = set(map(tuple, scan_mentions_expr(df, terms).collect()))
+    want = set(map(tuple, scan_mentions_udf(df, terms).collect()))
     assert got == want and len(want) > 30
 
 
