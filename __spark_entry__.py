@@ -22,9 +22,8 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # Ordered: this round's new queries, then prior-round high-risk, then
-    # round-1 flagships, then the rest — the driver verifies the first 50
-    # in dict order (see entry_queries.DRIVER_PRIORITY).
+    # Ordered: the KG-construction core first, then the rest in registration
+    # order (see entry_queries.KG_CORE).
     return {name: spec.spark_fn for name, spec in EQ.ordered_registry().items()}
 
 

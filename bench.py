@@ -168,11 +168,11 @@ def main() -> None:
         return dt
 
     # Demoted from the default sweep (round-4 verdict item 3): exact
-    # all-pairs gates whose scale-path twin IS in the sweep. Still fully
-    # oracle-checked in the correctness gate; reported here, never silent.
+    # all-pairs gates too slow for it. Still fully oracle-checked in the
+    # correctness gate; reported here, never silent.
     demoted = {
         "q_knn_loo_eval": "brute-force all-pairs LOO gate (41.7 s at "
-                          "sf0.1); scale path q_knn_loo_ann is swept",
+                          "sf0.1)",
     }
     fns = dict(ordered)
     for name, fn in ordered:

@@ -261,6 +261,21 @@ def _adam_step(
     W -= lr * mh / (np.sqrt(vh) + eps)
 
 
+def _trans_step(
+    T: np.ndarray,
+    grad: np.ndarray,
+    m: np.ndarray,
+    v: np.ndarray,
+    t: int,
+    lr: float,
+    legal: np.ndarray,
+) -> None:
+    """Adam step on the transition weights, then re-pin the illegal entries
+    at NEG: the IOB hard constraints are grammar, not parameters."""
+    _adam_step(T, grad, m, v, t, lr)
+    T[~legal] = float(NEG)
+
+
 def _fresh_base(base: TagModel | None) -> TagModel:
     return base or TagModel(
         W=np.zeros((FT.HASH_DIM, L), dtype=np.float32),
@@ -296,13 +311,14 @@ def train_crf(
     T = model.trans.astype(np.float64).copy()
     mt = np.zeros_like(T)
     vt = np.zeros_like(T)
+    legal = legal_transition_mask(model.trans)
     for t in range(1, iters + 1):
         model = _with_w(model, W.astype(np.float32), T.astype(np.float32))
         if learn_trans:
             _loss, grad, gtr = crf_loss_grad(
                 texts, gold_tags, model, l2=l2, learn_trans=True
             )
-            _adam_step(T, gtr, mt, vt, t, lr)
+            _trans_step(T, gtr, mt, vt, t, lr, legal)
         else:
             _loss, grad = crf_loss_grad(texts, gold_tags, model, l2=l2)
         _adam_step(W, grad, m, v, t, lr)
@@ -380,6 +396,7 @@ def train_crf_distributed(
     T = model.trans.astype(np.float64).copy()
     mt = np.zeros_like(T)
     vt = np.zeros_like(T)
+    legal = legal_transition_mask(model.trans)
     for t in range(1, iters + 1):
         b_cfg = spark.sparkContext.broadcast(
             {
@@ -452,10 +469,7 @@ def train_crf_distributed(
         grad += l2 * W
         _adam_step(W, grad, m, v, t, lr)
         if learn_trans:
-            legal = legal_transition_mask(model.trans)
             gtr += l2 * T * legal
-            _adam_step(T, gtr, mt, vt, t, lr)
-            T *= legal  # keep hard-constraint entries pinned at NEG
-            T += np.where(legal, 0.0, float(NEG))
+            _trans_step(T, gtr, mt, vt, t, lr, legal)
 
     return _with_w(model, W.astype(np.float32), T.astype(np.float32))

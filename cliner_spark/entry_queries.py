@@ -927,11 +927,10 @@ def q_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ===========================================================================
 # Dedup / similarity / text-analysis family (driver mandate beyond the
 # reference: exact + MinHash-LSH + n-gram Jaccard + SimHash dedup, ANN
-# search, quality scoring, token counting, fingerprinting, multimodal meta)
+# search, quality scoring, token counting, fingerprinting)
 # ===========================================================================
 
 from cliner_spark import dedup as _dedup
-from cliner_spark import multimodal as _mm
 from cliner_spark import similarity as _sim
 from cliner_spark import textstats as _ts
 
@@ -1629,89 +1628,6 @@ def q_con_parse(spark: SparkSession, sf_dir: str) -> DataFrame:
         "mention_text",
         "concept_type",
     )
-
-
-@register(
-    "q_multimodal_meta",
-    """
-SELECT doc_id AS media_id,
-       CAST(octet_length(encode(coalesce(text, ''))) AS BIGINT) AS n_bytes,
-       sha256(coalesce(text, '')) AS sha
-FROM documents
-""",
-)
-def q_multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    media = _mm.attach_payload(load(spark, sf_dir, "documents"))
-    return media.select(
-        "media_id",
-        F.col("meta.n_bytes").alias("n_bytes"),
-        F.col("meta.sha256").alias("sha"),
-    )
-
-
-@register(
-    "q_media_features",
-    """
-WITH m AS (
-  SELECT doc_id AS media_id, coalesce(text, '') AS t,
-         regexp_replace(hex(encode(coalesce(text, ''))), '(.)(.)', '\\2', 'g') AS ln
-  FROM documents
-)
-SELECT media_id,
-       CAST(octet_length(encode(t)) AS BIGINT) AS n_bytes,
-       sha256(t) AS sha256,
-       concat_ws(',',
-         length(ln) - length(translate(ln, '08', '')),
-         length(ln) - length(translate(ln, '19', '')),
-         length(ln) - length(translate(ln, '2A', '')),
-         length(ln) - length(translate(ln, '3B', '')),
-         length(ln) - length(translate(ln, '4C', '')),
-         length(ln) - length(translate(ln, '5D', '')),
-         length(ln) - length(translate(ln, '6E', '')),
-         length(ln) - length(translate(ln, '7F', ''))) AS hist_csv
-FROM m
-""",
-)
-def q_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """mapInPandas feature extraction over binary payloads. The oracle twin
-    reproduces the byte histogram mod 8 in pure SQL via the hex low-nibble
-    identity (byte % 8 == low-hex-nibble % 8: bucket d matches the two hex
-    digits d and d+8), counted with length-after-translate; the histogram is
-    serialized as an integer CSV so the value hash is float-format-free and
-    the driver's row canonicalizer has a sortable scalar."""
-    media = _mm.attach_payload(load(spark, sf_dir, "documents"))
-    feats = _mm.extract_features(media, feature_dim=8)
-    return feats.select(
-        "media_id",
-        "n_bytes",
-        "sha256",
-        F.array_join(F.transform("hist", lambda x: x.cast("string")), ",").alias(
-            "hist_csv"
-        ),
-    )
-
-
-@register(
-    "q_media_frames",
-    """
-WITH m AS (
-  SELECT doc_id AS media_id, lower(hex(encode(coalesce(text, '')))) AS h
-  FROM documents
-)
-SELECT media_id, CAST(t.i AS INTEGER) AS frame_idx,
-       CAST(length(substr(h, CAST(t.i * 64 + 1 AS BIGINT), 32)) / 2 AS BIGINT) AS n_bytes,
-       substr(h, CAST(t.i * 64 + 1 AS BIGINT), 32) AS frame_hex
-FROM m, unnest(range(CAST(ceil(length(h) / 64.0) AS BIGINT))) AS t(i)
-WHERE t.i % 2 = 0
-""",
-)
-def q_media_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Frame sampling over binary payloads (multimodal.sample_frames:
-    32-byte frames, stride 2, 16-byte crop). The oracle twin slices the
-    identical frames in hex space (1 byte = 2 hex chars), so the mapInPandas
-    output is hash-checked end to end."""
-    media = _mm.attach_payload(load(spark, sf_dir, "documents"))
-    return _mm.sample_frames(media, frame_bytes=32, stride=2, crop_bytes=16)
 
 
 @register(
@@ -3675,35 +3591,6 @@ def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _dedup.semdedup_keep(emb, threshold=0.35, n_planes=4, dims=64)
 
 
-@register(
-    "q_frame_dedup",
-    """
-WITH m AS (
-  SELECT doc_id AS media_id, lower(hex(encode(coalesce(text, '')))) AS h
-  FROM documents
-),
-fr AS (
-  SELECT media_id, CAST(t.i AS INTEGER) AS frame_idx,
-         substr(h, CAST(t.i * 64 + 1 AS BIGINT), 32) AS frame_hex
-  FROM m, unnest(range(CAST(ceil(length(h) / 64.0) AS BIGINT))) AS t(i)
-  WHERE t.i % 2 = 0
-)
-SELECT md5(frame_hex) AS frame_md5,
-       CAST(count(DISTINCT media_id) AS BIGINT) AS n_media,
-       CAST(count(*) AS BIGINT) AS n_occurrences,
-       min(media_id) AS rep_media,
-       CAST(min(CASE WHEN media_id = mm THEN frame_idx END) AS INTEGER) AS rep_frame_idx
-FROM (SELECT *, min(media_id) OVER (PARTITION BY frame_hex) AS mm FROM fr)
-GROUP BY frame_hex
-HAVING count(DISTINCT media_id) >= 2
-""",
-)
-def q_frame_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cross-media duplicated sampled frames (multimodal.frame_dedup)."""
-    media = _mm.attach_payload(load(spark, sf_dir, "documents"))
-    return _mm.frame_dedup(media, frame_bytes=32, stride=2, crop_bytes=16)
-
-
 # ===========================================================================
 # Round-2 batch 5: window stats, pivot, ntile, salted skew join
 # ===========================================================================
@@ -5209,154 +5096,14 @@ def q_temporal_relations(spark: SparkSession, sf_dir: str) -> DataFrame:
 from cliner_spark import queries_r2  # noqa: E402,F401
 
 # --------------------------------------------------------------------------
-# Driver correctness-window ordering (round-2 verdict item 2; round-4
-# rotation per round-3 verdict items 1+3).
-#
-# The driver hash-checks only the FIRST 50 entries of
-# __spark_entry__.queries() in dict order; plain registration order would
-# leave every post-round-1 operator outside that window forever. The round-4
-# window is therefore curated as:
-#   1. red-history / vacuous-gate queries that must re-certify
-#      (q_embedding_ivf_topk: err rows in r1+r2, never driver-green;
-#       q_dup_discovery: r3 row was 0-rows-vs-0-rows, re-check after the
-#       non-vacuity fix),
-#   2. a 38-slot rotation of the 191 queries that have never appeared in any
-#      driver CORRECTNESS file, ordered by md5("r4:"+name) so the slice is
-#      deterministic but uncorrelated with registration order,
-#   3. this round's new registrations (queries_r4.R4_NAMES, newest first),
-#   4. the historical priority block, then everything else in registration
-#      order. Nothing is dropped — tools/check_oracle.py still covers the
-#      full registry every round.
+# Query order: the KG-construction core first, then every other query in
+# registration order, so a correctness gate that hash-checks only a prefix of
+# __spark_entry__.queries() covers the KG core; tools/check_oracle.py covers
+# the full registry.
 # --------------------------------------------------------------------------
 
-# Union of row keys across CORRECTNESS_r01/r02/r03.json (driver artifacts),
-# frozen here so the rotation is reproducible without reading those files at
-# import time. 100 names; the other 191 registered queries have never had a
-# driver row and feed the rotation below.
-DRIVER_CHECKED_R123: frozenset[str] = frozenset([
-    'q_agent_loop_detect', 'q_ann_leaderboard', 'q_ann_ndcg', 'q_asof_join',
-    'q_assertion', 'q_benford_audit', 'q_between_scatter',
-    'q_calibration_bins', 'q_canonical_cc', 'q_canonical_cc_twostar',
-    'q_class_scatter', 'q_con_format', 'q_con_parse', 'q_concept_counts',
-    'q_concurrency_peak', 'q_confusion', 'q_containment_pairs',
-    'q_cooccur_pmi', 'q_copeland_rank', 'q_cube_events', 'q_cust_no_orders',
-    'q_cusum_changepoint', 'q_dedup_exact', 'q_dup_clusters',
-    'q_dup_discovery', 'q_embedding_ann_recall', 'q_embedding_ivf_seeded',
-    'q_embedding_ivf_topk', 'q_embedding_lsh_topk', 'q_embedding_neardup',
-    'q_embedding_topk', 'q_entity_salience', 'q_eval_exact',
-    'q_eval_overlap', 'q_events_hourly', 'q_fingerprint', 'q_fk_integrity',
-    'q_freq_spectrum', 'q_fuzzy_link', 'q_graph_assortativity',
-    'q_grounding_audit', 'q_hard_negatives', 'q_instruction_pairs',
-    'q_iob_roundtrip', 'q_ivfpq_topk', 'q_jaccard_pairs', 'q_k_anonymity',
-    'q_kg2text', 'q_kg_negative_samples', 'q_kn_bigram', 'q_ks_drift',
-    'q_lag_delta', 'q_lang_id', 'q_langid_confusion', 'q_leadlag_xcorr',
-    'q_link_top1', 'q_lsh_multiprobe', 'q_media_features', 'q_media_frames',
-    'q_mention_scan', 'q_mention_scan_udf', 'q_minhash_lsh',
-    'q_mixture_plan', 'q_mmr_rerank', 'q_modularity', 'q_multimodal_meta',
-    'q_node2vec_walks', 'q_node2vec_weights', 'q_odd_cycle_audit',
-    'q_oov_eval', 'q_pack_efficiency', 'q_percentiles', 'q_pps_sample',
-    'q_pq_adc_topk', 'q_pq_codes', 'q_prf', 'q_pseudonymize',
-    'q_revenue_by_nation', 'q_rocchio_prf', 'q_role_transition_matrix',
-    'q_rollup_sales', 'q_sessionize', 'q_shuffle_quality', 'q_simhash',
-    'q_source_overlap', 'q_spell_candidates', 'q_sssp_path_counts',
-    'q_surface_forms', 'q_tagger_mentions', 'q_text_quality',
-    'q_token_freq', 'q_tokenize_stats', 'q_topk_events', 'q_tpch_q1',
-    'q_triple_upsert', 'q_triples', 'q_turn_segmentation', 'q_vocab_growth',
-    'q_winnow_fingerprints', 'q_winnow_pairs',
-])
-
-# Round-4 driver window (all 50 rows full green in CORRECTNESS_r04.json),
-# frozen like DRIVER_CHECKED_R123 so the round-5 rotation is reproducible.
-DRIVER_CHECKED_R4: frozenset[str] = frozenset([
-    'q_assertion_triples', 'q_bm25_search', 'q_burstiness_memory',
-    'q_cascade_failure', 'q_compaction_plan', 'q_concept_trend',
-    'q_context_disambiguation', 'q_cooccur_window', 'q_dup_discovery',
-    'q_embedding_ivf_topk', 'q_error_after_click', 'q_fim_transform',
-    'q_first_last_event', 'q_gap_fill', 'q_gray_failure', 'q_group_commit',
-    'q_heartbeat_flaps', 'q_incr_agg_merge', 'q_incremental_dedup',
-    'q_isa_closure', 'q_jain_fairness', 'q_json_corrupt_audit', 'q_kg_star',
-    'q_lexical_diversity', 'q_minhash_error_audit', 'q_perplexity_buckets',
-    'q_read_your_writes', 'q_rebalance_plan', 'q_reciprocity',
-    'q_relation_cardinality', 'q_relations', 'q_role_concepts',
-    'q_rrf_fusion', 'q_salt_plan', 'q_scrub', 'q_set_ops', 'q_split_leakage',
-    'q_temporal_relations', 'q_tpch_q10', 'q_tpch_q13', 'q_tpch_q2',
-    'q_tpch_q4', 'q_tpch_q7', 'q_tpch_q8', 'q_triple_pattern', 'q_ttl_jitter',
-    'q_turn_echo', 'q_udtf_sentences', 'q_variant_props', 'q_zipf_fit',
-])
-
-# Must-recertify head of the round-5 window: driver-green queries whose
-# CODE changed this round (q_reciprocity's global-window restructure —
-# bucketed lag + seam stitch). q_cdc_apply / q_transe_eval also changed
-# but have never had a driver row, so they ride the forced-first-timer
-# head below instead of consuming a recertify slot.
-DRIVER_RECERTIFY: list[str] = [
-    "q_reciprocity",
-]
-
-# Never-driver-checked queries pinned to the FRONT of the rotation slice:
-# code changed this round (q_cdc_apply's engine-agnostic tombstone fold,
-# q_transe_eval's two-arm rebuild, q_kcore's oracle unroll budget raised
-# to cover sf0.001's 12-round peel depth) or named by the round-4 verdict
-# (q_knn_loo_eval: the brute-force gate the new q_knn_loo_ann is audited
-# against).
-ROTATION_FORCED: list[str] = [
-    "q_cdc_apply",
-    "q_transe_eval",
-    "q_knn_loo_eval",
-    "q_kcore",
-]
-
-# 50-row window = 3 new (R5_NAMES) + 1 recertify + 46 rotation slots (3
-# forced + 43 md5-rotated; ROTATION_SLOTS trims to the window boundary).
-# That retires 49 never-checked queries and leaves the never-checked
-# count at 465 - 148 - 49 = 268 (< 270, the round-4 verdict target).
-ROTATION_SLOTS = 46
-
-DRIVER_PRIORITY: list[str] = [
-    # (this round's new registrations — queries_r3.R3_NAMES — are prepended
-    # at call time in ordered_registry(), lazily, so import order between
-    # the query modules stays acyclic)
-    # queries whose code changed this round -> must re-verify in-window
-    "q_embedding_ivf_topk",  # new recall-assert formulation (was no_oracle)
-    "q_json_corrupt_audit",  # ADVICE: explicit validity predicate
-    "q_concept_drift",  # ADVICE: zero-guard on freq_shift
-    "q_curriculum_phases",  # ADVICE: integer-exact phase bounds
-    # round-2 operators the r2 verdict flagged as builder-harness-only
-    "q_isa_closure",
-    "q_seq_packing",
-    "q_kg_integrity",
-    "q_ssjoin",
-    "q_incremental_dedup",
-    "q_minhash_error_audit",
-    "q_tpch_q9",
-    "q_tpch_q21",
-    "q_tpch_q17",
-    "q_semdedup",
-    "q_decontaminate",
-    "q_scrub",
-    "q_dsir_weights",
-    "q_bm25_search",
-    "q_zorder_layout",
-    "q_kmeans",
-    "q_kcore",
-    "q_pagerank",
-    "q_kg_bfs",
-    "q_loss_mask",
-    "q_chat_render",
-    "q_funnel",
-    "q_snapshot_diff",
-    "q_hits_authority",
-    "q_closeness",
-    "q_epoch_shuffle",
-    "q_udtf_sessions",
-    "q_grouped_outliers",
-    "q_cogroup_asof",
-    "q_weighted_sample",
-    "q_dup_span_mask",
-    "q_rrf_fusion",
-    "q_minhash_calibration",
-    # round-1 flagships: keep the KG-construction core inside the window
-    "q_triples",
+KG_CORE: list[str] = [
+    ENTRY_QUERY,
     "q_mention_scan_udf",
     "q_canonical_cc",
     "q_prf",
@@ -5371,40 +5118,8 @@ DRIVER_PRIORITY: list[str] = [
 
 
 def ordered_registry() -> dict[str, QuerySpec]:
-    """REGISTRY re-keyed for the driver's 50-row correctness window
-    (round-5 layout, per the round-4 verdict's certification-debt ask):
-    this round's 3 new registrations, then the 1-query recertify head
-    (code changed + driver-green history), then 46 never-driver-checked
-    rotation slots (3 forced code-changed/verdict-named names first, then
-    a deterministic md5('r5:...')-rotated slice), then the rest."""
-    import hashlib
-
-    from cliner_spark import queries_r4, queries_r5
-
-    r5_new = list(reversed(queries_r5.R5_NAMES))
-    checked = DRIVER_CHECKED_R123 | DRIVER_CHECKED_R4
-    rotation_pool = sorted(
-        (
-            n
-            for n in REGISTRY
-            if n not in checked
-            and n not in r5_new
-            and n not in DRIVER_RECERTIFY
-            and n not in ROTATION_FORCED
-        ),
-        key=lambda n: hashlib.md5(("r5:" + n).encode()).hexdigest(),
-    )
-    n_rotate = ROTATION_SLOTS - len(ROTATION_FORCED)
-    priority = [
-        *r5_new,
-        *DRIVER_RECERTIFY,
-        *ROTATION_FORCED,
-        *rotation_pool[:n_rotate],
-        *rotation_pool[n_rotate:],
-        *reversed(queries_r4.R4_NAMES),
-        *DRIVER_PRIORITY,
-    ]
-    out = {n: REGISTRY[n] for n in priority if n in REGISTRY}
+    """REGISTRY re-keyed in query order: KG_CORE, then the rest."""
+    out = {n: REGISTRY[n] for n in KG_CORE}
     for n, s in REGISTRY.items():
         out.setdefault(n, s)
     return out

@@ -1932,60 +1932,6 @@ def q_cogroup_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# --------------------------------------------------------------------------
-# Z-order (Morton) multi-dimensional clustering — cliner_spark.maintenance
-# --------------------------------------------------------------------------
-
-from cliner_spark.maintenance import morton_col, morton_sql  # noqa: E402
-
-_Z_SQL = morton_sql("l_partkey", "l_suppkey")
-
-
-@register(
-    "q_zorder_layout",
-    f"""
-WITH z AS (
-  SELECT l_partkey, l_suppkey, {_Z_SQL} AS zval
-  FROM lineitem
-)
-SELECT CAST(zval >> 16 AS BIGINT) AS zbucket,
-       CAST(count(*) AS BIGINT) AS n_rows,
-       CAST(min(l_partkey) AS BIGINT) AS min_part,
-       CAST(max(l_partkey) AS BIGINT) AS max_part,
-       CAST(min(l_suppkey) AS BIGINT) AS min_supp,
-       CAST(max(l_suppkey) AS BIGINT) AS max_supp
-FROM z GROUP BY 1
-""",
-)
-def q_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Morton (Z-order) interleave of (l_partkey, l_suppkey) — the
-    multi-dimensional clustering key behind Iceberg/Delta zorder rewrites
-    (maintenance.zorder_rewrite) — then per coarse z-bucket min/max of BOTH
-    dims, the parquet-footer stats a manifest planner prunes with: tight on
-    both dimensions at once, which no single-key sort achieves. Pure JVM
-    bitwise expressions (identical generated algebra on the DuckDB side),
-    one hash-agg shuffle, integer-exact."""
-    li = load(spark, sf_dir, "lineitem")
-    z = morton_col(
-        F.col("l_partkey").cast("long"), F.col("l_suppkey").cast("long")
-    )
-    return (
-        li.select(
-            F.shiftright(z, 16).cast("bigint").alias("zbucket"),
-            "l_partkey",
-            "l_suppkey",
-        )
-        .groupBy("zbucket")
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.min("l_partkey").cast("bigint").alias("min_part"),
-            F.max("l_partkey").cast("bigint").alias("max_part"),
-            F.min("l_suppkey").cast("bigint").alias("min_supp"),
-            F.max("l_suppkey").cast("bigint").alias("max_supp"),
-        )
-    )
-
-
 @register(
     "q_snapshot_diff",
     """

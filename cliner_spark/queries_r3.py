@@ -3,9 +3,7 @@
 Same contract as queries_r2: every @register pairs a Spark DataFrame plan
 with a DuckDB ANSI-SQL oracle twin over the driver's parquet tables, column
 names/types aligned on both sides. Imported by entry_queries AFTER all
-helpers exist; R3_NAMES (newest work, highest verification priority) feeds
-the front of entry_queries.DRIVER_PRIORITY so the driver's 50-row
-correctness window always covers the current round first.
+helpers exist.
 """
 
 from __future__ import annotations
@@ -20,19 +18,6 @@ from cliner_spark.entry_queries import (  # noqa: F401
     register,
 )
 from cliner_spark.tokenization import sql_tokens, tokens_col
-
-# Names registered by this module, in driver-verification priority order.
-R3_NAMES: list[str] = []
-
-
-def _register_r3(name: str, sql: str | None):
-    """@register that also appends to R3_NAMES (driver-window priority)."""
-
-    def deco(fn):
-        R3_NAMES.append(name)
-        return register(name, sql)(fn)
-
-    return deco
 
 
 # --------------------------------------------------------------------------
@@ -52,7 +37,7 @@ FROM l ASOF LEFT JOIN r ON l.user_id = r.user_id AND r.ts <= l.ts
 """
 
 
-@_register_r3("q_asof_union_window", _ASOF_SQL)
+@register("q_asof_union_window", _ASOF_SQL)
 def q_asof_union_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Backward as-of join as a UNION + last_value window — the built-in
     twin of q_cogroup_asof (same DuckDB ASOF JOIN oracle, byte-identical
@@ -128,7 +113,7 @@ from cliner_spark.entry_queries import (  # noqa: E402
 from cliner_spark.queries_r2 import SQL_DOCPAIR_GRAPH, _docpair_edges  # noqa: E402
 
 
-@_register_r3(
+@register(
     "q_kg_scc",
     f"""
 WITH RECURSIVE {SQL_DOCS_TOKS}, {SQL_KEPT_MENTIONS}, {SQL_BEST_GAZ}, {SQL_TX_LMT.strip()},
@@ -176,7 +161,7 @@ def q_kg_scc(spark: SparkSession, sf_dir: str) -> DataFrame:
     return strongly_connected_components(edges)
 
 
-@_register_r3(
+@register(
     "q_lpa_communities",
     f"""
 WITH {SQL_DOCS_TOKS}, {SQL_DOCPAIR_GRAPH.strip()},
@@ -221,7 +206,7 @@ def q_lpa_communities(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register_r3(
+@register(
     "q_kg_eccentricity",
     f"""
 WITH RECURSIVE {SQL_DOCS_TOKS}, {SQL_KEPT_MENTIONS}, {SQL_BEST_GAZ}, {SQL_LINKED}, {SQL_DOC_CUI.strip()},
@@ -278,7 +263,7 @@ from cliner_spark.entry_queries import (  # noqa: E402
 from cliner_spark.queries_r2 import SQL_TXR, _txr  # noqa: E402
 
 
-@_register_r3(
+@register(
     "q_perplexity_buckets",
     f"""
 WITH {SQL_DOCS_TOKS}, {SQL_LM_COUNTS},
@@ -348,7 +333,7 @@ def q_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register_r3(
+@register(
     "q_tokenizer_fertility",
     f"""
 WITH {SQL_DOCS_TOKS}
@@ -394,7 +379,7 @@ def q_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register_r3(
+@register(
     "q_dpo_pairs",
     f"""
 WITH {SQL_DOCS_TOKS}, {SQL_TXR.strip()},
@@ -476,7 +461,7 @@ _MASKED = (
 _MASKED_SQL = "substr(md5(doc_id || ':' || (i // 3)), 1, 1) IN ('0', '1')"
 
 
-@_register_r3(
+@register(
     "q_span_corruption",
     f"""
 WITH {SQL_DOCS_TOKS}
@@ -537,7 +522,7 @@ def q_span_corruption(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register_r3(
+@register(
     "q_split_leakage",
     f"""
 WITH {SQL_DOCS_TOKS}, {SQL_SHINGLES_3},
@@ -620,7 +605,7 @@ from cliner_spark.queries_r2 import SQL_TR_CTE  # noqa: E402
 from cliner_spark.triples import hot_conversations  # noqa: E402
 
 
-@_register_r3(
+@register(
     "q_kg_schema_induction",
     f"""
 {SQL_TR_CTE}
@@ -656,7 +641,7 @@ def q_kg_schema_induction(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register_r3(
+@register(
     "q_context_pack",
     f"""
 WITH {SQL_DOCS_TOKS}, {SQL_TXR.strip()}
@@ -692,7 +677,7 @@ def q_context_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register_r3(
+@register(
     "q_fim_transform",
     f"""
 WITH {SQL_DOCS_TOKS},
@@ -748,7 +733,7 @@ def q_fim_transform(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register_r3(
+@register(
     "q_watermark_profile",
     """
 WITH seen AS (
@@ -798,7 +783,7 @@ def q_watermark_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register_r3(
+@register(
     "q_salt_plan",
     """
 WITH tx AS (
@@ -876,7 +861,7 @@ def _curation_sql() -> str:
     )
 
 
-@_register_r3("q_curation_manifest", _curation_sql())
+@register("q_curation_manifest", _curation_sql())
 def q_curation_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The END-TO-END curation manifest (curate.curate): near-dup cluster
     representative + eval-decontamination + repetition + length-band keep
@@ -908,7 +893,7 @@ def q_curation_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
 _ISA_SQL_R3 = ontology_values_sql()
 
 
-@_register_r3(
+@register(
     "q_isa_cycle_audit",
     f"""
 WITH RECURSIVE isa AS (SELECT * FROM {_ISA_SQL_R3}),
@@ -977,7 +962,7 @@ from cliner_spark.entry_queries import SQL_EMB, SQL_SEEDED_TOPK  # noqa: E402
 _SQL_SEEDED_CELLS = SQL_SEEDED_TOPK[: SQL_SEEDED_TOPK.index("sprobes")].rstrip().rstrip(",")
 
 
-@_register_r3(
+@register(
     "q_ivf_cell_profile",
     f"""
 WITH {SQL_EMB}, {_SQL_SEEDED_CELLS},
@@ -1011,7 +996,7 @@ def q_ivf_cell_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register_r3(
+@register(
     "q_embedding_dim_stats",
     f"""
 WITH {SQL_EMB},
@@ -1070,7 +1055,7 @@ _Z3 = morton_sql("l_partkey", "l_suppkey")
 _PRED_SQL = "l_partkey BETWEEN 10 AND 50 AND l_suppkey BETWEEN 1 AND 5"
 
 
-@_register_r3(
+@register(
     "q_zonemap_prune_audit",
     f"""
 WITH z AS (SELECT l_partkey, l_suppkey, {_Z3} AS zval FROM lineitem),
@@ -1152,7 +1137,7 @@ def q_zonemap_prune_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register_r3(
+@register(
     "q_golden_record",
     f"""
 WITH cl AS ({{dup}}),
@@ -1206,7 +1191,7 @@ REGISTRY["q_golden_record"] = REGISTRY["q_golden_record"].__class__(
 )
 
 
-@_register_r3(
+@register(
     "q_kg_path_explain",
     f"""
 WITH RECURSIVE {SQL_DOCS_TOKS}, {SQL_KEPT_MENTIONS}, {SQL_BEST_GAZ}, {SQL_LINKED}, {SQL_DOC_CUI.strip()},
@@ -1282,7 +1267,7 @@ def _ppr_sql(iters: int, seed: str) -> str:
     return ",\n".join(ctes) + f"\nSELECT node, rank_fp FROM r{iters}"
 
 
-@_register_r3(
+@register(
     "q_ppr",
     f"""
 WITH {SQL_DOCS_TOKS}, {SQL_KEPT_MENTIONS}, {SQL_BEST_GAZ}, {SQL_LINKED}, {SQL_DOC_CUI.strip()},
@@ -1367,7 +1352,7 @@ FROM adocs d LEFT JOIN per p USING (doc_id)
 """
 
 
-@_register_r3("q_grounding_audit", _SQL_GROUND)
+@register("q_grounding_audit", _SQL_GROUND)
 def q_grounding_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Attribution/groundedness audit for assistant turns: the share of an
     assistant turn's distinct token trigrams that already appeared in an
@@ -1438,7 +1423,7 @@ HAVING count(*) >= 2
 """
 
 
-@_register_r3("q_agent_loop_detect", _SQL_LOOPS)
+@register("q_agent_loop_detect", _SQL_LOOPS)
 def q_agent_loop_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stuck-agent loop detection: maximal runs of >= 2 CONSECUTIVE turns
     calling the same tool within a conversation (the 'agent retrying the
@@ -1500,7 +1485,7 @@ FROM bg JOIN lt USING (w1) JOIN ct USING (w2) CROSS JOIN tot t
 """
 
 
-@_register_r3("q_kn_bigram", _SQL_KN)
+@register("q_kn_bigram", _SQL_KN)
 def q_kn_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Kneser-Ney (absolute-discount D=0.75) smoothed bigram LM as EXACT
     RATIONAL arithmetic — the standard LM-quality-filter upgrade over the
@@ -1580,7 +1565,7 @@ FROM agg
 """
 
 
-@_register_r3("q_pack_efficiency", _SQL_PACK_EFF)
+@register("q_pack_efficiency", _SQL_PACK_EFF)
 def q_pack_efficiency(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Context-budget frontier for sequence packing — the sizing study run
     BEFORE q_seq_packing commits to a budget: for each candidate context
@@ -1680,7 +1665,7 @@ FROM (SELECT * FROM s1 UNION ALL SELECT * FROM s2 UNION ALL SELECT * FROM s3)
 """
 
 
-@_register_r3("q_mmr_rerank", _SQL_MMR)
+@register("q_mmr_rerank", _SQL_MMR)
 def q_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Maximal-marginal-relevance diversified re-ranking: from the top-10
     relevance candidates for the seed query (vec_id 0's embedding), pick 3
@@ -1776,7 +1761,7 @@ SELECT vec_id, neg_id, sim_fp, rank FROM (
 """
 
 
-@_register_r3("q_hard_negatives", _SQL_HARDNEG)
+@register("q_hard_negatives", _SQL_HARDNEG)
 def q_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Contrastive hard-negative mining: for every anchor vector, the 2
     most-similar vectors with a DIFFERENT label inside the anchor's IVF
@@ -1908,7 +1893,7 @@ def _bm25_score_joined(toks, dl, stats, qterms):
     )
 
 
-@_register_r3("q_rocchio_prf", _SQL_PRF)
+@register("q_rocchio_prf", _SQL_PRF)
 def q_rocchio_prf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pseudo-relevance-feedback query expansion (Rocchio): run BM25 for
     the fixed 4-term query, take the top-5 documents as pseudo-relevant,
@@ -2003,7 +1988,7 @@ FROM dcg d JOIN idcg i USING (query_id)
 """
 
 
-@_register_r3("q_ann_ndcg", _SQL_NDCG)
+@register("q_ann_ndcg", _SQL_NDCG)
 def q_ann_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """nDCG@3 of the seeded-IVF ANN ranking against the exact top-3 — the
     graded-relevance companion to recall@k (q_embedding_ann_recall):
@@ -2084,7 +2069,7 @@ FROM b GROUP BY 1
 """
 
 
-@_register_r3("q_calibration_bins", _SQL_CALIB)
+@register("q_calibration_bins", _SQL_CALIB)
 def q_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reliability-diagram calibration bins for a deterministic quality
     classifier: predicted score = lexical-diversity ratio in exact milli
@@ -2170,7 +2155,7 @@ FROM m
 """
 
 
-@_register_r3("q_leadlag_xcorr", _SQL_LEADLAG)
+@register("q_leadlag_xcorr", _SQL_LEADLAG)
 def q_leadlag_xcorr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lead-lag cross-correlation between the hourly click series and the
     hourly purchase series at lags 0..3 — does click volume this hour
@@ -2274,7 +2259,7 @@ ORDER BY ks_num DESC, x_at_max ASC LIMIT 1
 """
 
 
-@_register_r3("q_ks_drift", _SQL_KS)
+@register("q_ks_drift", _SQL_KS)
 def q_ks_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT two-sample Kolmogorov-Smirnov drift statistic between the
     document-length distributions of the two md5 corpus halves (the repo's
@@ -2359,7 +2344,7 @@ FROM cnt c JOIN tot t USING (from_role)
 """
 
 
-@_register_r3("q_role_transition_matrix", _SQL_ROLETRANS)
+@register("q_role_transition_matrix", _SQL_ROLETRANS)
 def q_role_transition_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Role-transition Markov matrix over the transcript turn sequence:
     counts and conditional probabilities of user/assistant/tool following
@@ -2421,7 +2406,7 @@ FROM adj
 """
 
 
-@_register_r3("q_turn_segmentation", _SQL_SEGMENT)
+@register("q_turn_segmentation", _SQL_SEGMENT)
 def q_turn_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Topic-shift segmentation of each conversation: for every adjacent
     turn pair, the distinct-token Jaccard overlap in EXACT integer form
@@ -2519,7 +2504,7 @@ WHERE rk <= 3
 """
 
 
-@_register_r3("q_entity_salience", _SQL_SALIENCE)
+@register("q_entity_salience", _SQL_SALIENCE)
 def q_entity_salience(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-3 salient entities per conversation: tf-idf transplanted to the
     KG — term frequency = turns in which the concept is asserted (from the
@@ -2580,7 +2565,7 @@ SELECT conv_id, n_facts, text, md5(text) AS text_md5 FROM r
 """
 
 
-@_register_r3("q_kg2text", _SQL_KG2TEXT)
+@register("q_kg2text", _SQL_KG2TEXT)
 def q_kg2text(spark: SparkSession, sf_dir: str) -> DataFrame:
     """KG-to-text verbalization pairs: render each conversation's MENTIONS
     facts into one deterministic natural-language sentence ('Conversation 7
@@ -2639,7 +2624,7 @@ QUALIFY row_number() OVER (PARTITION BY conv_id, pos_obj ORDER BY attempt) = 1
 """
 
 
-@_register_r3("q_kg_negative_samples", _SQL_KG_NEG)
+@register("q_kg_negative_samples", _SQL_KG_NEG)
 def q_kg_negative_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corrupted-triple negative sampling for KG-embedding training
     (TransE/DistMult-style): for every positive (conv, MENTIONS, concept),
@@ -2765,7 +2750,7 @@ FROM cnt c JOIN tot t USING (declared)
 """
 
 
-@_register_r3("q_langid_confusion", _SQL_LANG_CONF)
+@register("q_langid_confusion", _SQL_LANG_CONF)
 def q_langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Confusion matrix of the n-gram language-ID heuristic
     (textstats.language_id, the q_lang_id detector) against the corpus'
@@ -2815,7 +2800,7 @@ JOIN d db ON db.node = c.dst
 """
 
 
-@_register_r3("q_odd_cycle_audit", _SQL_ODD_CYCLE)
+@register("q_odd_cycle_audit", _SQL_ODD_CYCLE)
 def q_odd_cycle_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bipartiteness / odd-cycle audit of the concept co-occurrence graph:
     2-color every node in CD001's component by BFS-distance parity, then
@@ -2877,7 +2862,7 @@ GROUP BY 1, 2
 """
 
 
-@_register_r3("q_sssp_path_counts", _SQL_PATH_COUNTS)
+@register("q_sssp_path_counts", _SQL_PATH_COUNTS)
 def q_sssp_path_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shortest-path COUNTING from concept CD001 (graph.bfs_path_counts):
     per reachable node, the hop distance and the exact number of distinct
@@ -2932,7 +2917,7 @@ FROM nxt WHERE role = 'user' AND next_role = 'assistant'
 """
 
 
-@_register_r3("q_instruction_pairs", _SQL_INSTR_PAIRS)
+@register("q_instruction_pairs", _SQL_INSTR_PAIRS)
 def q_instruction_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Instruction-pair mining — the most basic SFT extraction there is:
     every (user turn, immediately-following assistant turn) adjacency
@@ -2984,7 +2969,7 @@ GROUP BY 1, 2, 3
 """
 
 
-@_register_r3("q_k_anonymity", _K_ANON_SQL)
+@register("q_k_anonymity", _K_ANON_SQL)
 def q_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """k-anonymity / l-diversity audit over the corpus' quasi-identifiers —
     the privacy gate a training-data release pipeline runs before shipping:
@@ -3083,7 +3068,7 @@ def _del_variants(col: str) -> "F.Column":
     )
 
 
-@_register_r3("q_spell_candidates", _SPELL_SQL)
+@register("q_spell_candidates", _SPELL_SQL)
 def q_spell_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Typo-robust match-candidate generation via FastSS deletion
     neighborhoods (Bocek et al. 2007) — the exact, index-based alternative
@@ -3179,7 +3164,7 @@ WHERE 4 * c.common >= 3 * sa.sz
 """
 
 
-@_register_r3("q_containment_pairs", _CONTAIN_SQL)
+@register("q_containment_pairs", _CONTAIN_SQL)
 def q_containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Asymmetric shingle-containment pairs (quote / excerpt detection):
     ordered pairs (doc_in, doc_out) where >= 75% of doc_in's distinct
@@ -3280,7 +3265,7 @@ FROM sides GROUP BY 1
 """
 
 
-@_register_r3("q_copeland_rank", _COPELAND_SQL)
+@register("q_copeland_rank", _COPELAND_SQL)
 def q_copeland_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Copeland pairwise-preference aggregation — the arena-style
     leaderboard over model-variant duels that RLHF / eval pipelines
@@ -3398,7 +3383,7 @@ SELECT c.community, c.n_nodes, coalesce(i.intra_edges, 0) AS intra_edges,
 FROM comm c LEFT JOIN intra i USING (community) CROSS JOIN m
 """
 
-@_register_r3("q_modularity", _MODULARITY_SQL)
+@register("q_modularity", _MODULARITY_SQL)
 def q_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Newman modularity of the LPA communities (q_lpa_communities), in
     exact rational form — the community-quality gate a curation pass runs
@@ -3490,7 +3475,7 @@ JOIN sizes sb ON sb.source = s.src_b
 """
 
 
-@_register_r3("q_source_overlap", _SOURCE_OVERLAP_SQL)
+@register("q_source_overlap", _SOURCE_OVERLAP_SQL)
 def q_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-source 5-gram overlap matrix — the mixture-design audit that
     tells you which corpus sources are textually redundant BEFORE you
@@ -3564,7 +3549,7 @@ FROM e JOIN deg da ON da.node = e.src JOIN deg db ON db.node = e.dst
 """
 
 
-@_register_r3("q_graph_assortativity", _ASSORT_SQL)
+@register("q_graph_assortativity", _ASSORT_SQL)
 def q_graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Degree-assortativity sufficient statistics of the doc-similarity
     graph, exact BIGINT moments over the directed edge list (each
@@ -3662,7 +3647,7 @@ codes AS (
 """
 
 
-@_register_r3(
+@register(
     "q_pq_codes",
     f"""
 WITH {_PQ_SQL_BASE.strip()}
@@ -3687,7 +3672,7 @@ def q_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _sim.pq_codes(emb, cb)
 
 
-@_register_r3(
+@register(
     "q_pq_adc_topk",
     f"""
 WITH {_PQ_SQL_BASE.strip()},
@@ -3745,7 +3730,7 @@ def q_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-@_register_r3(
+@register(
     "q_shuffle_quality",
     """
 WITH ord AS (
@@ -3812,7 +3797,7 @@ def q_shuffle_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register_r3(
+@register(
     "q_mixture_plan",
     f"""
 WITH toks AS (
@@ -3891,7 +3876,7 @@ def q_mixture_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-@_register_r3(
+@register(
     "q_vocab_growth",
     f"""
 WITH docs AS (
@@ -3977,7 +3962,7 @@ def q_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register_r3(
+@register(
     "q_freq_spectrum",
     f"""
 WITH docs AS (
@@ -4039,7 +4024,7 @@ def q_freq_spectrum(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-@_register_r3(
+@register(
     "q_oov_eval",
     f"""
 WITH docs AS (
@@ -4105,7 +4090,7 @@ def q_oov_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register_r3(
+@register(
     "q_dup_discovery",
     """
 WITH ord AS (
@@ -4214,7 +4199,7 @@ _WINNOW_K = 3  # token k-gram size
 _WINNOW_W = 4  # window of consecutive k-gram hashes
 
 
-@_register_r3(
+@register(
     "q_winnow_fingerprints",
     f"""
 WITH docs AS (
@@ -4317,7 +4302,7 @@ def q_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
 _PPS_N = 50  # systematic sample size
 
 
-@_register_r3(
+@register(
     "q_pps_sample",
     f"""
 WITH docs AS (
@@ -4378,7 +4363,7 @@ def q_pps_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register_r3(
+@register(
     "q_winnow_pairs",
     f"""
 WITH docs AS (
@@ -4449,7 +4434,7 @@ def q_winnow_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-@_register_r3(
+@register(
     "q_pseudonymize",
     f"""
 {SQL_TR_CTE},
@@ -4512,7 +4497,7 @@ def q_pseudonymize(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register_r3(
+@register(
     "q_fk_integrity",
     """
 SELECT 'lineitem.l_orderkey->orders' AS fk,
@@ -4603,7 +4588,7 @@ def q_fk_integrity(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-@_register_r3(
+@register(
     "q_cusum_changepoint",
     """
 WITH daily AS (
@@ -4690,7 +4675,7 @@ def q_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register_r3(
+@register(
     "q_benford_audit",
     """
 WITH cents AS (
@@ -4740,7 +4725,7 @@ def q_benford_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-@_register_r3(
+@register(
     "q_concurrency_peak",
     """
 WITH spans AS (
@@ -4822,7 +4807,7 @@ def q_concurrency_peak(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-@_register_r3(
+@register(
     "q_class_scatter",
     """
 WITH fx AS (
@@ -4907,7 +4892,7 @@ def q_class_scatter(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-@_register_r3(
+@register(
     "q_between_scatter",
     """
 WITH fx AS (
@@ -4992,7 +4977,7 @@ def q_between_scatter(spark: SparkSession, sf_dir: str) -> DataFrame:
 from cliner_spark.entry_queries import SQL_EMB, _sql_cos, _sql_lsh_buckets  # noqa: E402
 
 
-@_register_r3(
+@register(
     "q_lsh_multiprobe",
     f"""
 WITH {SQL_EMB},
@@ -5063,7 +5048,7 @@ def q_lsh_multiprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
 from cliner_spark.entry_queries import SQL_SEEDED_TOPK  # noqa: E402
 
 
-@_register_r3(
+@register(
     "q_ivfpq_topk",
     f"""
 WITH {_PQ_SQL_BASE.strip()},
@@ -5137,7 +5122,7 @@ def q_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 from cliner_spark.entry_queries import SQL_RESIDUAL_CTES  # noqa: E402
 
-@_register_r3(
+@register(
     "q_ann_leaderboard",
     f"""
 WITH {_PQ_SQL_BASE.strip()},
@@ -5337,7 +5322,7 @@ from cliner_spark.entry_queries import SQL_DOCS_TOKS  # noqa: E402
 from cliner_spark.queries_r2 import SQL_DOCPAIR_GRAPH as _DPG  # noqa: E402
 
 
-@_register_r3(
+@register(
     "q_node2vec_weights",
     f"""
 WITH {SQL_DOCS_TOKS.strip()},
@@ -5412,7 +5397,7 @@ def q_node2vec_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 
 
-@_register_r3(
+@register(
     "q_node2vec_walks",
     f"""
 WITH {SQL_DOCS_TOKS.strip()},

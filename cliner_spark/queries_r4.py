@@ -4,9 +4,7 @@ Same contract as queries_r2/r3: every @register pairs a Spark DataFrame plan
 with a DuckDB ANSI-SQL oracle twin over the driver's parquet tables, column
 names/types aligned on both sides. Imported from queries_r3's tail so the
 chain entry_queries -> queries_r2 -> queries_r3 -> queries_r4 stays
-cycle-safe; R4_NAMES feeds the round-4 driver window AFTER the recertify
-head and the never-checked rotation slice (see
-entry_queries.ordered_registry).
+cycle-safe.
 """
 
 from __future__ import annotations
@@ -20,92 +18,6 @@ from cliner_spark.entry_queries import (  # noqa: F401
     load_docs,
     register,
 )
-
-# Names registered by this module, in driver-verification priority order.
-R4_NAMES: list[str] = []
-
-
-def _register_r4(name: str, sql: str | None):
-    """@register that also appends to R4_NAMES (driver-window priority)."""
-
-    def deco(fn):
-        R4_NAMES.append(name)
-        return register(name, sql)(fn)
-
-    return deco
-
-
-# --------------------------------------------------------------------------
-# Round 4a: REAL multimodal decode (round-3 verdict item 4). The corpus
-# carries genuine BMP/PNG payloads (built by synth_image_table from a
-# deterministic md5 pixel stream); decode_media runs a real stdlib decoder
-# distributed and emits exact pixel stats. The oracle never decodes — it
-# recomputes the stats analytically from the same md5 stream, so any
-# header/padding/row-order/filter/CRC bug in EITHER codec direction breaks
-# the hash.
-# --------------------------------------------------------------------------
-
-_MEDIA_DECODE_SQL = """
-WITH d AS (
-  SELECT doc_id, 4 + doc_id % 5 AS w, 3 + doc_id % 4 AS h,
-         md5(coalesce(text, '')) AS hx
-  FROM documents
-),
-s AS (
-  SELECT doc_id, w, h, w * h * 3 AS nb,
-         substr(repeat(hx, CAST((w * h * 3 + 15) // 16 AS INT)),
-                1, w * h * 3 * 2) AS sh
-  FROM d
-),
-b AS (
-  SELECT doc_id, CAST(t.i AS BIGINT) % 3 AS ch,
-         (strpos('0123456789abcdef',
-                 substr(sh, CAST(2 * t.i + 1 AS INT), 1)) - 1) * 16
-         + (strpos('0123456789abcdef',
-                   substr(sh, CAST(2 * t.i + 2 AS INT), 1)) - 1) AS v
-  FROM s, unnest(range(nb)) AS t(i)
-),
-sums AS (
-  SELECT doc_id,
-         sum(CASE WHEN ch = 0 THEN v END) AS sum_r,
-         sum(CASE WHEN ch = 1 THEN v END) AS sum_g,
-         sum(CASE WHEN ch = 2 THEN v END) AS sum_b
-  FROM b GROUP BY doc_id
-)
-SELECT CAST(s.doc_id AS BIGINT) AS media_id,
-       CASE WHEN s.doc_id % 2 = 0 THEN 'bmp' ELSE 'png' END AS fmt,
-       CAST(s.w AS INT) AS width, CAST(s.h AS INT) AS height,
-       CAST(s.nb AS BIGINT) AS n_px_bytes,
-       sha256(s.sh) AS px_sha256,
-       CAST(sums.sum_r AS BIGINT) AS sum_r,
-       CAST(sums.sum_g AS BIGINT) AS sum_g,
-       CAST(sums.sum_b AS BIGINT) AS sum_b
-FROM s JOIN sums USING (doc_id)
-"""
-
-
-@_register_r4("q_media_decode", _MEDIA_DECODE_SQL)
-def q_media_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed REAL image decode: documents -> genuine BMP (even
-    doc_id) / PNG (odd doc_id, filter type doc_id%5 so all five PNG
-    scanline filters occur) -> stdlib decoder -> exact per-image channel
-    sums + sha256 of the decoded top-down RGB stream.
-
-    The DuckDB twin computes the same stats ANALYTICALLY from the md5 pixel
-    stream without ever touching the image bytes — encoder and decoder bugs
-    cannot cancel: a matched px_sha256 proves decode(encode(stream)) ==
-    stream through real format bytes (BGR order, bottom-up rows, 4-byte row
-    padding, zlib, filters, CRCs).
-
-    Scale plan: encode+decode fuse into one mapInPandas stage over
-    doc-partitioned input — zero shuffle, no collect; payloads stream
-    through Arrow binary columns exactly as real crawled images would. The
-    per-image Python cost is the codec itself (the honest cost of media
-    decode); at 100 TB the same plan shape holds with the stdlib codec
-    swapped for a native one."""
-    from cliner_spark.multimodal import decode_media, synth_image_table
-
-    return decode_media(synth_image_table(load_docs(spark, sf_dir)))
 
 
 # --------------------------------------------------------------------------
@@ -124,7 +36,7 @@ from cliner_spark.entry_queries import (  # noqa: E402
 _RESIDUAL_SQL_CTES = SQL_RESIDUAL_CTES
 
 
-@_register_r4(
+@register(
     "q_ivfpq_residual_topk",
     f"""
 WITH {SQL_EMB.strip()},
@@ -162,7 +74,7 @@ def q_ivfpq_residual_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_register_r4(
+@register(
     "q_pq_residual_gain",
     f"""
 WITH {SQL_EMB.strip()},
@@ -309,7 +221,7 @@ FROM terms GROUP BY 1, 2, 3, n_g
 """
 
 
-@_register_r4("q_t_closeness", _T_CLOSE_SQL)
+@register("q_t_closeness", _T_CLOSE_SQL)
 def q_t_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
     """t-closeness audit completing the privacy trio (q_k_anonymity gives
     k and l-diversity): for every (lang, source, length-band) QI class,
@@ -449,7 +361,7 @@ FROM ({dim_spine}) m LEFT JOIN hits h USING (dims)
 """
 
 
-@_register_r4("q_matryoshka_recall", _mrl_sql())
+@register("q_matryoshka_recall", _mrl_sql())
 def q_matryoshka_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Matryoshka (MRL) truncation-recall: exact top-3 recall when cosine
     is computed over only the first d of 64 dims, for d in 8/16/32/64 —
@@ -562,7 +474,7 @@ WHERE rn <= 3
 """
 
 
-@_register_r4("q_link_prediction", _LINKPRED_SQL)
+@register("q_link_prediction", _LINKPRED_SQL)
 def q_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-3 predicted missing edges per node over the materialized
     doc-similarity graph: for every non-edge (u, w) sharing >= 1 neighbor,
@@ -670,7 +582,7 @@ FROM trials
 """
 
 
-@_register_r4("q_pass_at_k", _PASS_AT_K_SQL)
+@register("q_pass_at_k", _PASS_AT_K_SQL)
 def q_pass_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Unbiased pass@k (Chen et al. 2021): each user_id is a 'problem',
     its click events are trials, success = value >= 50; pass@k =
@@ -746,7 +658,7 @@ FROM hrs h JOIN seas s USING (event_type) JOIN naiv v USING (event_type)
 """
 
 
-@_register_r4("q_seasonal_naive_mase", _MASE_SQL)
+@register("q_seasonal_naive_mase", _MASE_SQL)
 def q_seasonal_naive_mase(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Seasonal-naive forecast-error ledger (MASE, Hyndman & Koehler 2006)
     over hourly event counts: per event_type, the MAE of the 24h-seasonal
@@ -856,7 +768,7 @@ FROM est
 """
 
 
-@_register_r4("q_countmin_audit", _CMS_SQL)
+@register("q_countmin_audit", _CMS_SQL)
 def q_countmin_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Count-min sketch audit: a {_CMS_D}x{_CMS_W} CMS (md5 row-hashes, so
     the sketch is bit-identical on both engines) over the corpus token
@@ -968,7 +880,7 @@ GROUP BY 1
 """
 
 
-@_register_r4("q_bloom_decontaminate", _BLOOM_SQL)
+@register("q_bloom_decontaminate", _BLOOM_SQL)
 def q_bloom_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bloom-filter decontamination audit: the benchmark's 3-gram shingles
     populate a {_BLOOM_M}-bit / {_BLOOM_K}-hash Bloom filter (md5 bit
@@ -1082,7 +994,7 @@ FROM a{_CORESET_K - 1}
     )
 
 
-@_register_r4("q_coreset_kcenter", _coreset_sql())
+@register("q_coreset_kcenter", _coreset_sql())
 def q_coreset_kcenter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """k-center coreset by farthest-point traversal (Gonzalez 1985), the
     2-approximation every diversity-sampling / facility-location pipeline
@@ -1208,7 +1120,7 @@ FROM est
 """
 
 
-@_register_r4("q_hll_audit", _HLL_SQL)
+@register("q_hll_audit", _HLL_SQL)
 def q_hll_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HyperLogLog cardinality audit (Flajolet 2007): per-source distinct-
     token estimate from a 64-register HLL whose state is EXACT integers on
@@ -1325,7 +1237,7 @@ FROM k ORDER BY knum DESC, u ASC LIMIT 20
 """
 
 
-@_register_r4("q_katz_centrality", _KATZ_SQL)
+@register("q_katz_centrality", _KATZ_SQL)
 def q_katz_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Katz centrality (Katz 1953) truncated at walk length 3, beta = 1/4,
     over the materialized doc-similarity graph: katz(u) = sum over L=1..3
@@ -1404,7 +1316,7 @@ FROM cnt GROUP BY source
 """
 
 
-@_register_r4("q_simpson_diversity", _SIMPSON_SQL)
+@register("q_simpson_diversity", _SIMPSON_SQL)
 def q_simpson_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source lexical diversity ledger in EXACT rationals: Simpson
     concentration sum n_i(n_i-1) / N(N-1) (the probability two sampled
@@ -1486,7 +1398,7 @@ ORDER BY pair_freq DESC, tok_a ASC, tok_b ASC LIMIT 50
 """
 
 
-@_register_r4("q_typo_pairs", _TYPO_SQL)
+@register("q_typo_pairs", _TYPO_SQL)
 def q_typo_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spelling-variant pairs at edit distance <= 2 via the SymSpell
     deletion-neighborhood join (Garbe 2012): each vocabulary word (alpha,
@@ -1607,7 +1519,7 @@ FROM noised
 """
 
 
-@_register_r4("q_dp_release", _DP_SQL)
+@register("q_dp_release", _DP_SQL)
 def q_dp_release(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Differentially-private histogram release of per-source document
     counts under the GEOMETRIC mechanism — the discrete Laplace that real
@@ -1690,7 +1602,7 @@ FROM agg WHERE n_pos > 0 AND n_neg > 0
 """
 
 
-@_register_r4("q_auc_ranksum", _AUC_SQL)
+@register("q_auc_ranksum", _AUC_SQL)
 def q_auc_ranksum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact ROC-AUC per source via the Mann-Whitney rank-sum identity
     (AUC = U / (n_pos * n_neg)), scoring n_chars against the lang == 'en'
@@ -1781,7 +1693,7 @@ FROM wt GROUP BY b
 """
 
 
-@_register_r4("q_poisson_bootstrap", _BOOT_SQL)
+@register("q_poisson_bootstrap", _BOOT_SQL)
 def q_poisson_bootstrap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Poisson bootstrap (Chamandy et al. 2012 — the bootstrap Google runs
     on MapReduce) of the mean document length: each of {_BOOT_B} resamples
@@ -1869,7 +1781,7 @@ LEFT JOIN border b ON b.u = d.doc_id
 """
 
 
-@_register_r4("q_dbscan_clusters", _DBSCAN_SQL)
+@register("q_dbscan_clusters", _DBSCAN_SQL)
 def q_dbscan_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Graph DBSCAN (Ester 1996 recast on the similarity graph): the
     eps-neighborhood is the materialized doc-pair graph's adjacency
@@ -1985,7 +1897,7 @@ ORDER BY rk
 """
 
 
-@_register_r4("q_boruvka_msf", _MSF_SQL)
+@register("q_boruvka_msf", _MSF_SQL)
 def q_boruvka_msf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Maximum spanning forest of the weighted doc-similarity graph
     (weight = shared distinct 3-shingles under the df-cut) by DISTRIBUTED
@@ -2126,7 +2038,7 @@ FROM g
 """
 
 
-@_register_r4("q_kaplan_meier", _KM_SQL)
+@register("q_kaplan_meier", _KM_SQL)
 def q_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Kaplan-Meier (1958) survival ledger over user lifetimes: lifetime =
     calendar days between a user's first and last event; right-censored if
@@ -2200,7 +2112,7 @@ FROM r GROUP BY source
 """
 
 
-@_register_r4("q_gini_concentration", _GINI_SQL)
+@register("q_gini_concentration", _GINI_SQL)
 def q_gini_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gini coefficient of per-document length mass within each source via
     the exact rank identity G = (2*sum(i*x_(i)) - (n+1)*sum(x)) / (n*sum(x))
@@ -2257,7 +2169,7 @@ FROM r GROUP BY source HAVING count(*) >= 2
 """
 
 
-@_register_r4("q_spearman_rank", _SPEARMAN_SQL)
+@register("q_spearman_rank", _SPEARMAN_SQL)
 def q_spearman_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spearman rank correlation between the char-length and token-count
     orderings of each source's documents, via the exact identity
@@ -2333,7 +2245,7 @@ FROM s
 """
 
 
-@_register_r4("q_chao1_richness", _CHAO1_SQL)
+@register("q_chao1_richness", _CHAO1_SQL)
 def q_chao1_richness(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Chao1 unseen-vocabulary estimate per source (Chao 1984, the
     bias-corrected form S_obs + f1(f1-1)/(2(f2+1)) that never divides by
@@ -2399,7 +2311,7 @@ FROM p GROUP BY 1, 2, 3
 """
 
 
-@_register_r4("q_fs_linkage", _FS_SQL)
+@register("q_fs_linkage", _FS_SQL)
 def q_fs_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fellegi-Sunter (1969) record-linkage agreement-pattern sufficient
     statistics: within-block candidate pairs (blocked on nationkey — the
@@ -2501,7 +2413,7 @@ FROM f
 """
 
 
-@_register_r4("q_funnel_conversion", _FUNNEL_SQL)
+@register("q_funnel_conversion", _FUNNEL_SQL)
 def q_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ordered funnel conversion (signup -> click -> purchase) with the
     STRICT temporal-order semantics real funnel engines use: a user counts
@@ -2591,7 +2503,7 @@ FROM spine s LEFT JOIN r ON s.d0 = r.d0 AND s.wk = r.wk
 """
 
 
-@_register_r4("q_retention_cohorts", _RETENTION_SQL)
+@register("q_retention_cohorts", _RETENTION_SQL)
 def q_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Classic retention cohort matrix: users cohorted by first-activity
     day, activity bucketed into 7-day offsets from EACH USER'S OWN day-0
@@ -2671,7 +2583,7 @@ FROM w
 """
 
 
-@_register_r4("q_chisq_independence", _CHISQ_SQL)
+@register("q_chisq_independence", _CHISQ_SQL)
 def q_chisq_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Chi-square independence audit of the source x lang contingency
     table (is language mix independent of crawl source?) with Cramér's V
@@ -2782,7 +2694,7 @@ WHERE sl.pr = (sl.n_pairs + 1) // 2
 """
 
 
-@_register_r4("q_mann_kendall", _MANN_KENDALL_SQL)
+@register("q_mann_kendall", _MANN_KENDALL_SQL)
 def q_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mann-Kendall trend test + Theil-Sen slope over the daily event
     volume (zero-filled day grid): S = sum of pairwise signs (exact
@@ -2906,7 +2818,7 @@ FROM agg
 """
 
 
-@_register_r4("q_ewma_anomaly", _EWMA_SQL)
+@register("q_ewma_anomaly", _EWMA_SQL)
 def q_ewma_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EWMA volume-anomaly ledger over the daily event grid: each day's
     baseline is the alpha=1/2 exponentially-weighted mean of the 16 PRIOR
@@ -3000,7 +2912,7 @@ FROM uni
 """
 
 
-@_register_r4("q_hits_bipartite", _HITS_SQL)
+@register("q_hits_bipartite", _HITS_SQL)
 def q_hits_bipartite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HITS (Kleinberg 1999) on the weighted user x event-type bipartite
     graph, two exact unrolled iterations from a_0 = 1: hubs are users
@@ -3063,105 +2975,6 @@ def q_hits_bipartite(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _sql_truss_round(src: str, out: str) -> str:
-    """One k=4 truss peel round in SQL: recompute per-edge triangle
-    support over the surviving edge set, keep support >= 2."""
-    return f"""
-adj_{out} AS (SELECT lo AS u, hi AS v FROM {src}
-              UNION ALL SELECT hi, lo FROM {src}),
-sup_{out} AS (
-  SELECT e.lo, e.hi, count(*) AS c
-  FROM {src} e
-  JOIN adj_{out} x ON x.u = e.lo
-  JOIN adj_{out} y ON y.u = e.hi AND y.v = x.v
-  GROUP BY 1, 2
-),
-{out} AS (SELECT lo, hi FROM sup_{out} WHERE c >= 2)
-"""
-
-
-_KTRUSS_SQL = f"""
-WITH {SQL_DOCS_TOKS.strip()},
-{_DPG4.strip()},
-e1 AS (SELECT lo, hi FROM ge),
-{_sql_truss_round('e1', 'e2').strip()},
-{_sql_truss_round('e2', 'e3').strip()},
-{_sql_truss_round('e3', 'e4').strip()},
-adj_f AS (SELECT lo AS u, hi AS v FROM e4 UNION ALL SELECT hi, lo FROM e4),
-sup_f AS (
-  SELECT e.lo, e.hi, count(*) AS c
-  FROM e4 e
-  JOIN adj_f x ON x.u = e.lo
-  JOIN adj_f y ON y.u = e.hi AND y.v = x.v
-  GROUP BY 1, 2
-)
-SELECT e4.lo, e4.hi, CAST(coalesce(sup_f.c, 0) AS BIGINT) AS support
-FROM e4 LEFT JOIN sup_f ON e4.lo = sup_f.lo AND e4.hi = sup_f.hi
-"""
-
-
-@_register_r4("q_ktruss_edges", _KTRUSS_SQL)
-def q_ktruss_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """4-truss peel of the doc-similarity graph, 3 rounds: an edge
-    survives a round only if it closes >= 2 triangles WITH OTHER
-    SURVIVORS (support = common neighbors >= k-2 for k=4), recomputed
-    after each peel — the cohesion filter that kills chain/star edges CC
-    and DBSCAN both keep, leaving only triangle-dense duplicate
-    communities (Cohen 2008). Emits surviving edges with their support
-    over the final edge set (coalesced 0 if the peel hasn't converged in
-    3 rounds — the honest column, not a fabricated fixpoint claim).
-
-    Scale plan: each round is one wedge equi-join (adjacency joined on
-    the shared neighbor) over the CURRENT survivor set — monotonically
-    shrinking, df-cut-bounded degrees; rounds are localCheckpoint-pinned
-    so lineage stays flat. The standard distributed truss decomposition
-    shape (one support-recompute per peel, O(k) rounds)."""
-    from cliner_spark.queries_r2 import _docpair_edges
-
-    e = _docpair_edges(spark, sf_dir).select(
-        F.col("src").alias("lo"), F.col("dst").alias("hi")
-    )
-
-    def peel(edges: DataFrame) -> DataFrame:
-        adj = edges.select(F.col("lo").alias("u"), F.col("hi").alias("v")).unionAll(
-            edges.select(F.col("hi").alias("u"), F.col("lo").alias("v"))
-        )
-        x = adj.alias("x")
-        y = adj.alias("y")
-        sup = (
-            edges.alias("e")
-            .join(x, F.col("x.u") == F.col("e.lo"))
-            .join(
-                y,
-                (F.col("y.u") == F.col("e.hi")) & (F.col("y.v") == F.col("x.v")),
-            )
-            .groupBy(F.col("e.lo").alias("lo"), F.col("e.hi").alias("hi"))
-            .agg(F.count(F.lit(1)).alias("c"))
-        )
-        return sup.filter(F.col("c") >= 2).select("lo", "hi").localCheckpoint()
-
-    e4 = e
-    for _ in range(3):
-        e4 = peel(e4)
-    adj = e4.select(F.col("lo").alias("u"), F.col("hi").alias("v")).unionAll(
-        e4.select(F.col("hi").alias("u"), F.col("lo").alias("v"))
-    )
-    x, y = adj.alias("x"), adj.alias("y")
-    supf = (
-        e4.alias("e")
-        .join(x, F.col("x.u") == F.col("e.lo"))
-        .join(y, (F.col("y.u") == F.col("e.hi")) & (F.col("y.v") == F.col("x.v")))
-        .groupBy(F.col("e.lo").alias("lo"), F.col("e.hi").alias("hi"))
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
-    return (
-        e4.join(supf, ["lo", "hi"], "left")
-        .select(
-            "lo", "hi", F.coalesce(F.col("c"), F.lit(0)).cast("bigint").alias("support")
-        )
-    )
-
-
 _LCS_SQL = f"""
 WITH {SQL_DOCS_TOKS.strip()},
 {_DPG4.strip()},
@@ -3195,7 +3008,7 @@ FROM runs GROUP BY 1, 2
 """
 
 
-@_register_r4("q_lcs_pairs", _LCS_SQL)
+@register("q_lcs_pairs", _LCS_SQL)
 def q_lcs_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Longest common token run per near-dup candidate pair — the exact
     substring-dedup primitive (Lee et al. 2022 find verbatim cross-doc
@@ -3316,7 +3129,7 @@ FROM j
 """
 
 
-@_register_r4("q_bleu_neardup", _BLEU_SQL)
+@register("q_bleu_neardup", _BLEU_SQL)
 def q_bleu_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus BLEU-2 (Papineni 2002) of each near-dup candidate's HIGHER
     doc against its LOWER doc: clipped unigram/bigram precisions as exact
@@ -3456,7 +3269,7 @@ FROM f GROUP BY 1, 2
 """
 
 
-@_register_r4("q_zorder_layout", _ZORDER_SQL)
+@register("q_zorder_layout", _ZORDER_SQL)
 def q_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Z-order (Morton) vs linear file-layout audit — the data-layout
     decision behind Delta/Iceberg OPTIMIZE ZORDER: events keyed by
@@ -3565,7 +3378,7 @@ FROM ix JOIN mx ON mx.i = ix.i AND mx.rn2 = 1
 """
 
 
-@_register_r4("q_isotonic_calibration", _ISO_SQL)
+@register("q_isotonic_calibration", _ISO_SQL)
 def q_isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Isotonic (PAV) recalibration of the q_calibration_bins classifier —
     the standard fix when the reliability diagram says scores are
@@ -3707,7 +3520,7 @@ FROM p
 """
 
 
-@_register_r4("q_kendall_taub", _KENDALL_SQL)
+@register("q_kendall_taub", _KENDALL_SQL)
 def q_kendall_taub(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Kendall tau-b between daily event VOLUME and daily REVENUE (exact
     integer cents) over the zero-filled day grid: concordant/discordant/
@@ -3799,7 +3612,7 @@ FROM t
 """
 
 
-@_register_r4("q_rbo_topk", _RBO_SQL)
+@register("q_rbo_topk", _RBO_SQL)
 def q_rbo_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rank-biased overlap (Webber 2010) between the char-length and
     token-count document rankings at p = 1/2, depths 1..20: per depth the
@@ -3900,7 +3713,7 @@ FROM f
 """
 
 
-@_register_r4("q_mcnemar_gates", _MCNEMAR_SQL)
+@register("q_mcnemar_gates", _MCNEMAR_SQL)
 def q_mcnemar_gates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """McNemar paired comparison of two document quality gates on the SAME
     corpus (lexical-diversity >= 0.5 vs length >= 200 chars): the full
@@ -3994,7 +3807,7 @@ FROM w
 """
 
 
-@_register_r4("q_anova_sources", _ANOVA_SQL)
+@register("q_anova_sources", _ANOVA_SQL)
 def q_anova_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One-way ANOVA of document length across crawl sources: per-source
     sufficient statistics (n, sum, sum-of-squares — exact BIGINTs over the
@@ -4086,7 +3899,7 @@ FROM tb, obs
 """
 
 
-@_register_r4("q_permutation_test", _PERM_SQL)
+@register("q_permutation_test", _PERM_SQL)
 def q_permutation_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Paired sign-flip permutation test (the exact nonparametric paired
     test, Fisher 1935) of H0 'users click as often as they view': per-user
@@ -4175,7 +3988,7 @@ FROM p JOIN m ma ON ma.t = p.a JOIN m mb ON mb.t = p.b, tot
 """
 
 
-@_register_r4("q_seq2_support", _SEQ2_SQL)
+@register("q_seq2_support", _SEQ2_SQL)
 def q_seq2_support(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ordered 2-sequence support mining (the GSP/PrefixSpan length-2
     core): for every ordered event-type pair (a, b), the number of users
@@ -4260,7 +4073,7 @@ FROM grid g LEFT JOIN c ON c.lang = g.lang AND c.fold = g.fold
 """
 
 
-@_register_r4("q_kfold_assignment", _KFOLD_SQL)
+@register("q_kfold_assignment", _KFOLD_SQL)
 def q_kfold_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic 5-fold cross-validation assignment audit: folds come
     from md5(doc_id) — reproducible on any shard with zero coordination,
@@ -4350,7 +4163,7 @@ FROM j GROUP BY 1
 """
 
 
-@_register_r4("q_consistent_hashing", _CHASH_SQL)
+@register("q_consistent_hashing", _CHASH_SQL)
 def q_consistent_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Consistent-hashing ring audit (Karger 1997) for the doc store: 8
     shards x 4 md5 vnodes on the hex ring, each doc owned by the first
@@ -4464,7 +4277,7 @@ FROM dense GROUP BY 1
 """
 
 
-@_register_r4("q_fano_burstiness", _FANO_SQL)
+@register("q_fano_burstiness", _FANO_SQL)
 def q_fano_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fano-factor burstiness ledger per event type over the zero-filled
     day grid: F = Var/Mean with the population identity n*Var = n*sum(x^2)
@@ -4539,7 +4352,7 @@ FROM bkt GROUP BY bucket
 """
 
 
-@_register_r4("q_watermark_lateness", _LATE_SQL)
+@register("q_watermark_lateness", _LATE_SQL)
 def q_watermark_lateness(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Watermark-lateness histogram — the number that CHOOSES a streaming
     watermark delay: each event's lateness is (running max event-time) -
@@ -4649,7 +4462,7 @@ FROM seg
 """
 
 
-@_register_r4("q_wasserstein_lengths", _W1_SQL)
+@register("q_wasserstein_lengths", _W1_SQL)
 def q_wasserstein_lengths(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact Wasserstein-1 (earth-mover) distance between the English and
     non-English document-length distributions, via the 1-D identity
@@ -4748,7 +4561,7 @@ FROM c GROUP BY 1
 """
 
 
-@_register_r4("q_skew_audit", _SKEW_SQL)
+@register("q_skew_audit", _SKEW_SQL)
 def q_skew_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Join-key skew audit over the three hottest shuffle keys in the
     schema (lineitem->orders, orders->customer, events per user): per key
@@ -4856,7 +4669,7 @@ FROM agg a LEFT JOIN cut c ON c.cluster_id = a.cluster_id, tot t
 """
 
 
-@_register_r4("q_cluster_conductance", _COND_SQL)
+@register("q_cluster_conductance", _COND_SQL)
 def q_cluster_conductance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Conductance of every non-singleton dup cluster against the WEAKER
     doc-similarity graph (common >= 2 shingles): cut edges / min(vol,
@@ -4958,7 +4771,7 @@ FROM h, n
 """
 
 
-@_register_r4("q_degree_ccdf", _CCDF_SQL)
+@register("q_degree_ccdf", _CCDF_SQL)
 def q_degree_ccdf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Degree CCDF spectrum of the doc-similarity graph (nodes = docs
     with at least one candidate edge): per observed degree the node
@@ -5026,7 +4839,7 @@ FROM u, g
 """
 
 
-@_register_r4("q_laplace_rates", _LAPLACE_SQL)
+@register("q_laplace_rates", _LAPLACE_SQL)
 def q_laplace_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Laplace (add-one Beta(1,1)) smoothed per-user purchase-per-click
     rates: the posterior mean (purchases+1)/(clicks+2) as an exact
@@ -5118,7 +4931,7 @@ FROM far1, far2
 """
 
 
-@_register_r4("q_diameter_sweep", _DIAM_SQL)
+@register("q_diameter_sweep", _DIAM_SQL)
 def q_diameter_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Double-BFS diameter sweep (the classic 2-sweep lower bound,
     exact on trees and near-tight in practice) over the concept
@@ -5209,7 +5022,7 @@ FROM w GROUP BY 1
 """
 
 
-@_register_r4("q_best_of_n", _BON_SQL)
+@register("q_best_of_n", _BON_SQL)
 def q_best_of_n(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Best-of-4 selection ledger per source (the rejection-sampling /
     BoN primitive of RFT data pipelines): docs are md5-grouped into
@@ -5288,155 +5101,6 @@ def q_best_of_n(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Round 4v: Luby's maximal-independent-set rounds over the doc-similarity
-# graph — the classic O(log n)-round distributed symmetry-breaking
-# primitive (Luby 1986), with md5 priorities so every round is
-# engine-reproducible.
-# --------------------------------------------------------------------------
-
-
-def _luby_sql() -> str:
-    blocks = []
-    prev = "surv0"
-    for r in (1, 2, 3):
-        blocks.append(f"""
-pr{r} AS (
-  SELECT node, md5('{r}:' || node::VARCHAR) || '#'
-         || lpad(node::VARCHAR, 12, '0') AS k
-  FROM {prev}
-),
-ea{r} AS (
-  SELECT a.node AS u, b.node AS v, pb.k AS kv
-  FROM adj
-  JOIN pr{r} a ON a.node = adj.u
-  JOIN pr{r} b ON b.node = adj.v
-  JOIN pr{r} pb ON pb.node = adj.v
-),
-mn{r} AS (SELECT u AS node, min(kv) AS min_nb FROM ea{r} GROUP BY 1),
-sel{r} AS (
-  SELECT p.node FROM pr{r} p LEFT JOIN mn{r} m ON m.node = p.node
-  WHERE m.min_nb IS NULL OR p.k < m.min_nb
-),
-del{r} AS (
-  SELECT node FROM sel{r}
-  UNION
-  SELECT adj.v FROM adj JOIN sel{r} s ON s.node = adj.u
-  JOIN pr{r} pv ON pv.node = adj.v
-),
-surv{r} AS (
-  SELECT node FROM {prev} WHERE node NOT IN (SELECT node FROM del{r})
-)""".strip())
-        prev = f"surv{r}"
-    return ",\n".join(blocks)
-
-
-_LUBY_SQL = f"""
-WITH {SQL_DOCS_TOKS.strip()},
-{_DPG4.strip()},
-nodes AS (SELECT lo AS node FROM ge UNION SELECT hi FROM ge),
-adj AS (SELECT lo AS u, hi AS v FROM ge UNION ALL SELECT hi, lo FROM ge),
-surv0 AS (SELECT node FROM nodes),
-{_luby_sql()}
-SELECT n.node,
-       CAST(CASE WHEN n.node IN (SELECT node FROM sel1) THEN 1
-                 WHEN n.node IN (SELECT node FROM sel2) THEN 2
-                 WHEN n.node IN (SELECT node FROM sel3) THEN 3
-                 ELSE -1 END AS INT) AS sel_round,
-       (n.node IN (SELECT node FROM surv3)) AS still_active
-FROM nodes n
-"""
-
-
-@_register_r4("q_luby_mis", _LUBY_SQL)
-def q_luby_mis(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Luby's maximal-independent-set algorithm (Luby 1986 — THE
-    distributed symmetry-breaking primitive behind parallel coloring and
-    scheduling), 3 rounds over the doc-similarity graph: each round every
-    surviving node draws the md5-keyed priority md5(round:node)#node (a
-    strict total order — the node suffix breaks any hex tie), joins the
-    MIS iff its key beats every surviving neighbor's, and selected nodes
-    eliminate their neighborhoods. Per round this selects an independent
-    set in expectation-constant fraction of edges — O(log n) rounds to
-    exhaustion; the 3-round ledger emits each node's selection round
-    (-1 = not selected) and whether it is still undecided. The selected
-    set is independent BY CONSTRUCTION at every prefix — the replica
-    asserts it; applied to dedup, MIS of the similarity graph is a
-    maximal set of pairwise-dissimilar representatives (an alternative
-    keep-policy to min-id CC).
-
-    Scale plan: each round is one adjacency equi-join against the
-    surviving node frame (priorities are stateless md5 projections — any
-    shard regenerates them), a min-per-node map-side combine, and an
-    anti-join elimination; rounds are localCheckpoint-pinned. No
-    cartesian anywhere; exactly the Pregel MIS shape."""
-    from cliner_spark.queries_r2 import _docpair_edges
-
-    ge = _docpair_edges(spark, sf_dir).select(
-        F.col("src").alias("lo"), F.col("dst").alias("hi")
-    )
-    nodes = (
-        ge.select(F.col("lo").alias("node"))
-        .union(ge.select(F.col("hi").alias("node")))
-        .distinct()
-        .localCheckpoint()
-    )
-    adj = ge.select(F.col("lo").alias("u"), F.col("hi").alias("v")).unionAll(
-        ge.select(F.col("hi").alias("u"), F.col("lo").alias("v"))
-    ).localCheckpoint()
-
-    def key(r: int, col: str):
-        return F.concat(
-            F.md5(F.concat(F.lit(f"{r}:"), F.col(col).cast("string"))),
-            F.lit("#"),
-            F.lpad(F.col(col).cast("string"), 12, "0"),
-        )
-
-    surv = nodes
-    sels = []
-    for r in (1, 2, 3):
-        pr = surv.select("node", key(r, "node").alias("k"))
-        ea = (
-            adj.join(pr.select(F.col("node").alias("u")), "u")
-            .join(
-                pr.select(F.col("node").alias("v"), F.col("k").alias("kv")),
-                "v",
-            )
-            .select("u", "kv")
-        )
-        mn = ea.groupBy(F.col("u").alias("node")).agg(
-            F.min("kv").alias("min_nb")
-        )
-        sel = (
-            pr.join(mn, "node", "left")
-            .filter(F.col("min_nb").isNull() | (F.col("k") < F.col("min_nb")))
-            .select("node")
-            .localCheckpoint()
-        )
-        elim = (
-            adj.join(sel.select(F.col("node").alias("u")), "u")
-            .select(F.col("v").alias("node"))
-            .join(surv, "node", "left_semi")
-            .union(sel)
-            .distinct()
-        )
-        surv = surv.join(elim, "node", "left_anti").localCheckpoint()
-        sels.append(sel.withColumn("sel_round", F.lit(r)))
-    sel_all = sels[0].unionAll(sels[1]).unionAll(sels[2])
-    out = (
-        nodes.join(sel_all, "node", "left")
-        .join(surv.withColumn("active", F.lit(True)), "node", "left")
-        .select(
-            "node",
-            F.coalesce(F.col("sel_round"), F.lit(-1)).cast("int").alias(
-                "sel_round"
-            ),
-            F.coalesce(F.col("active"), F.lit(False)).alias("still_active"),
-        )
-    )
-    return out
-
-
-# --------------------------------------------------------------------------
 # Round 4p: marketing-attribution trio — the revenue-credit ledgers every
 # product-analytics stack runs over its event stream. Three credit models
 # over the same (purchase x preceding-touch) frame: positional (first/last
@@ -5491,7 +5155,7 @@ FROM lastt l FULL OUTER JOIN firstt f ON l.channel = f.channel
 """
 
 
-@_register_r4("q_touch_attribution", _TOUCH_ATTR_SQL)
+@register("q_touch_attribution", _TOUCH_ATTR_SQL)
 def q_touch_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """First-touch / last-touch revenue attribution: every purchase is
     credited to the latest (and, in the twin column set, the earliest)
@@ -5631,7 +5295,7 @@ CROSS JOIN vw
 """
 
 
-@_register_r4("q_shapley_attribution", _SHAPLEY_SQL)
+@register("q_shapley_attribution", _SHAPLEY_SQL)
 def q_shapley_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact 3-player Shapley-value attribution (the data-driven MTA model
     of Zhao et al. 2018, "Shapley value methods for attribution modeling"):
@@ -5784,7 +5448,7 @@ FROM s
 """
 
 
-@_register_r4("q_rfm_segments", _RFM_SQL)
+@register("q_rfm_segments", _RFM_SQL)
 def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RFM segmentation (recency / frequency / monetary), the classic
     campaign-targeting ledger: per purchasing user, exact days since last
@@ -5907,7 +5571,7 @@ FROM winner WHERE rn = 1 GROUP BY 1, 2
 """
 
 
-@_register_r4("q_majority_vote", _MAJVOTE_SQL)
+@register("q_majority_vote", _MAJVOTE_SQL)
 def q_majority_vote(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Self-consistency majority voting (Wang et al. 2022): docs are
     md5-grouped into complete groups of 5 per source (the "k samples of
@@ -6021,7 +5685,7 @@ FROM k3
 """
 
 
-@_register_r4("q_successive_halving", _SH_SQL)
+@register("q_successive_halving", _SH_SQL)
 def q_successive_halving(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Successive halving (Jamieson & Talwalkar AISTATS 2016 — the
     Hyperband inner loop): 16 md5-assigned configs are evaluated on
@@ -6165,7 +5829,7 @@ FROM pol GROUP BY 1
 """
 
 
-@_register_r4("q_replay_policy_eval", _REPLAY_SQL)
+@register("q_replay_policy_eval", _REPLAY_SQL)
 def q_replay_policy_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Offline policy evaluation by replay matching (Li et al. WSDM 2011):
     three candidate policies — two constant arms and an md5-personalized
@@ -6312,7 +5976,7 @@ FROM pairs
 """
 
 
-@_register_r4("q_jl_distortion", _JL_SQL)
+@register("q_jl_distortion", _JL_SQL)
 def q_jl_distortion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Johnson-Lindenstrauss projection distortion audit: every embedding
     is projected 64 -> 16 dims through a literal ±1 md5 sign matrix
@@ -6421,7 +6085,7 @@ FROM types t LEFT JOIN v1 ON v1.ty = t.ty
 """
 
 
-@_register_r4("q_markov_stationary", _MARKOV_SQL)
+@register("q_markov_stationary", _MARKOV_SQL)
 def q_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Long-run event-mix forecast: the user-event chain's empirical
     transition matrix, iterated three power steps from uniform in exact
@@ -6594,7 +6258,7 @@ _SPARK_D2 = (
 )
 
 
-@_register_r4("q_graph_greedy_search", _GREEDY_SQL)
+@register("q_graph_greedy_search", _GREEDY_SQL)
 def q_graph_greedy_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Greedy best-first vector search over a navigable graph — the NSW /
     HNSW layer-0 primitive (Malkov & Yashunin 2016): from a fixed entry
@@ -6779,7 +6443,7 @@ GROUP BY bin, tot.n_all, tot.p_all
 """
 
 
-@_register_r4("q_brier_decomposition", _BRIER_SQL)
+@register("q_brier_decomposition", _BRIER_SQL)
 def q_brier_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Murphy decomposition of the Brier score for the deterministic
     quality classifier (same milli-unit forecast and gazetteer-linked
@@ -6906,7 +6570,7 @@ FROM r GROUP BY 1
 """
 
 
-@_register_r4("q_randomized_response", _RR_SQL)
+@register("q_randomized_response", _RR_SQL)
 def q_randomized_response(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Warner-1965 randomized response, the local-DP collection primitive:
     each document's sensitive bit (lang == 'en') is flipped with
@@ -6997,7 +6661,7 @@ FROM cum
 """
 
 
-@_register_r4("q_gains_chart", _GAINS_SQL)
+@register("q_gains_chart", _GAINS_SQL)
 def q_gains_chart(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cumulative gains / lift chart, the standard targeting-model eval:
     users ranked by a deterministic model score (click count, ties pinned
@@ -7194,7 +6858,7 @@ def _suffix_levels(
     return levels
 
 
-@_register_r4("q_suffix_ranks", _SUFFIX_SQL)
+@register("q_suffix_ranks", _SUFFIX_SQL)
 def q_suffix_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus-global suffix ranking by prefix doubling (Manber-Myers):
     round 0 dense-ranks every (doc, pos) suffix by its first token; round
@@ -7280,7 +6944,7 @@ FROM cells
 """
 
 
-@_register_r4("q_stratified_ate", _STRAT_ATE_SQL)
+@register("q_stratified_ate", _STRAT_ATE_SQL)
 def q_stratified_ate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stratified average treatment effect of an md5 user-bucket treatment
     on lifetime purchase cents, one row per market-segment stratum. Within
@@ -7401,7 +7065,7 @@ FROM w
 """
 
 
-@_register_r4("q_did_estimator", _DID_SQL)
+@register("q_did_estimator", _DID_SQL)
 def q_did_estimator(spark: SparkSession, sf_dir: str) -> DataFrame:
     """2x2 difference-in-differences: unit = user, periods split at
     day-of-month 16 (wall-clock component, engine-stable per
@@ -7530,7 +7194,7 @@ FROM s
 """
 
 
-@_register_r4("q_cuped_adjustment", _CUPED_SQL)
+@register("q_cuped_adjustment", _CUPED_SQL)
 def q_cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUPED variance reduction (Deng et al. WSDM 2013): per segment, the
     pre-period purchase cents X is the control covariate for the
@@ -7650,7 +7314,7 @@ FROM lv GROUP BY doc_id
 """
 
 
-@_register_r4("q_repeat_extent", _EXTENT_SQL)
+@register("q_repeat_extent", _EXTENT_SQL)
 def q_repeat_extent(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc repeated-window extent profile: for each width w in
     {1,2,4,8,16}, dup_w{w} counts the doc's positions whose w-token window
@@ -7753,7 +7417,7 @@ FROM denom d LEFT JOIN agg a ON a.w = d.w
 _TANDEM_SQL = _tandem_sql()
 
 
-@_register_r4("q_tandem_repeats", _TANDEM_SQL)
+@register("q_tandem_repeats", _TANDEM_SQL)
 def q_tandem_repeats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tandem (period-w) repeat census: an anchor at (doc, pos) for width
     w means the w-token windows at pos and pos+w are identical (equal
@@ -7884,7 +7548,7 @@ FROM g0
 _LCP_SQL = _lcp_sql()
 
 
-@_register_r4("q_lcp_adjacent", _LCP_SQL)
+@register("q_lcp_adjacent", _LCP_SQL)
 def q_lcp_adjacent(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LCP array over the (16-token-precision) suffix array: suffixes are
     totally ordered by (rank16, doc_id, pos) and each SA-adjacent pair
@@ -8041,7 +7705,7 @@ FROM {prev}
 _IPF_SQL = _ipf_sql()
 
 
-@_register_r4("q_ipf_raking", _IPF_SQL)
+@register("q_ipf_raking", _IPF_SQL)
 def q_ipf_raking(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Iterative proportional fitting (raking, Deming-Stephan 1940) of the
     source x lang document mix toward UNIFORM target marginals — the
@@ -8148,7 +7812,7 @@ FROM s GROUP BY source
 """
 
 
-@_register_r4("q_horvitz_thompson", _HT_SQL)
+@register("q_horvitz_thompson", _HT_SQL)
 def q_horvitz_thompson(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Horvitz-Thompson estimation under unequal-probability Poisson
     sampling: docs are included with pi = (cls+1)/4 by length class
@@ -8241,7 +7905,7 @@ FROM r
 """
 
 
-@_register_r4("q_hamilton_apportionment", _HAMILTON_SQL)
+@register("q_hamilton_apportionment", _HAMILTON_SQL)
 def q_hamilton_apportionment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hamilton largest-remainder apportionment of a 997-slot sampling
     budget across sources, proportional to total chars: integer quota
@@ -8331,7 +7995,7 @@ FROM per_term GROUP BY 1
 """
 
 
-@_register_r4("q_postings_varint", _POSTINGS_SQL)
+@register("q_postings_varint", _POSTINGS_SQL)
 def q_postings_varint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Inverted-index postings compression audit: per term the sorted
     doc-id postings list becomes delta gaps (first entry stored as
@@ -8437,7 +8101,7 @@ LEFT JOIN agg a ON a.scheme = s.scheme AND a.bin = s.bin
 """
 
 
-@_register_r4("q_histogram_quality", _HIST_SQL)
+@register("q_histogram_quality", _HIST_SQL)
 def q_histogram_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Histogram-design shootout: the doc-length distribution binned two
     ways — equi-width (8 bins over [min,max] via exact integer floor
@@ -8559,7 +8223,7 @@ FROM h WHERE n_hits >= 1
 """
 
 
-@_register_r4("q_systematic_pps", _PPS_SQL)
+@register("q_systematic_pps", _PPS_SQL)
 def q_systematic_pps(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Systematic probability-proportional-to-size sampling: docs are laid
     on a char-mass line in md5 order (the deterministic stand-in for the
@@ -8668,7 +8332,7 @@ FROM s
 """
 
 
-@_register_r4("q_cusum_page", _CUSUM_SQL)
+@register("q_cusum_page", _CUSUM_SQL)
 def q_cusum_page(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUSUM changepoint ledger (Page 1954) over daily per-type event
     volumes on the zero-filled type x day grid: with target = floor
@@ -8764,7 +8428,7 @@ FROM d
 """
 
 
-@_register_r4("q_ks_two_sample", _KS_SQL)
+@register("q_ks_two_sample", _KS_SQL)
 def q_ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact two-sample Kolmogorov-Smirnov profile comparing the
     doc-length distribution of English vs non-English docs: at every
@@ -8875,7 +8539,7 @@ FROM w WHERE d1 + d0 > 0
 """
 
 
-@_register_r4("q_logrank_test", _LOGRANK_SQL)
+@register("q_logrank_test", _LOGRANK_SQL)
 def q_logrank_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Log-rank test ledger (Mantel 1966) comparing time-to-first-big-
     purchase (>= $190, the 'death' event; users who never convert are
@@ -9054,7 +8718,7 @@ FROM istar
 """
 
 
-@_register_r4("q_bh_fdr", _BH_SQL)
+@register("q_bh_fdr", _BH_SQL)
 def q_bh_fdr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benjamini-Hochberg step-up FDR control (1995) over one hypothesis
     per source — H0_s: 'source s has the corpus-wide English share'. The
@@ -9211,7 +8875,7 @@ GROUP BY p.source, q.n_cal, q.k, q.qhat
 """
 
 
-@_register_r4("q_conformal_calibration", _CONF_SQL)
+@register("q_conformal_calibration", _CONF_SQL)
 def q_conformal_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Split-conformal calibration audit (Vovk's inductive conformal;
     Angelopoulos-Bates 2021) for the lexical-diversity 'English-ness'
@@ -9360,7 +9024,7 @@ FROM met JOIN pair p ON p.source = met.source CROSS JOIN mm
 """
 
 
-@_register_r4("q_borda_condorcet", _BORDA_SQL)
+@register("q_borda_condorcet", _BORDA_SQL)
 def q_borda_condorcet(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Borda + Condorcet rank aggregation of five REAL per-source quality
     criteria — total chars, doc count, English share, vocabulary size,
@@ -9511,7 +9175,7 @@ FROM picks p JOIN mad m ON m.source = p.source
 """
 
 
-@_register_r4("q_order_stats", _ORDER_SQL)
+@register("q_order_stats", _ORDER_SQL)
 def q_order_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact per-source order statistics of doc length — p50/p90/p99 as
     the ceil(q*n)-th smallest value (rank formulas (n+1) div 2,
@@ -9588,7 +9252,7 @@ FROM c GROUP BY source
 """
 
 
-@_register_r4("q_weighted_median", _WMED_SQL)
+@register("q_weighted_median", _WMED_SQL)
 def q_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Char-mass weighted median per source — the doc length below which
     half the source's CHARACTERS (not docs) live, i.e. the smallest x
@@ -9693,7 +9357,7 @@ LEFT JOIN d4 ON d4.node = n.v
 _BF_SQL = _bf_sql()
 
 
-@_register_r4("q_bellman_ford_hubs", _BF_SQL)
+@register("q_bellman_ford_hubs", _BF_SQL)
 def q_bellman_ford_hubs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multi-source bounded Bellman-Ford: every 100th vec_id is a hub with
     distance 0, edges are the deterministic ring (weight 1..16 from an
@@ -9823,7 +9487,7 @@ FROM s
 """
 
 
-@_register_r4("q_simpson_paradox", _SIMPSON_SQL)
+@register("q_simpson_paradox", _SIMPSON_SQL)
 def q_simpson_paradox(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Simpson's-paradox detector over the stratified conversion table
     (md5 treatment, conversion = any purchase >= $150, market-segment
@@ -9943,7 +9607,7 @@ FROM r GROUP BY source
 """
 
 
-@_register_r4("q_trimmed_mean", _TRIM_SQL)
+@register("q_trimmed_mean", _TRIM_SQL)
 def q_trimmed_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     """5%-trimmed and winsorized means per source, exactly: with
     k = n div 20, the trimmed sum drops the k smallest and k largest
@@ -10035,7 +9699,7 @@ FROM runs GROUP BY event_type
 """
 
 
-@_register_r4("q_runs_test", _RUNS_SQL)
+@register("q_runs_test", _RUNS_SQL)
 def q_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Wald-Wolfowitz runs test of serial randomness per event type: daily
     volumes dichotomize against the exact lower median (ties to the
@@ -10126,7 +9790,7 @@ FROM s CROSS JOIN tot
 """
 
 
-@_register_r4("q_german_tank", _GT_SQL)
+@register("q_german_tank", _GT_SQL)
 def q_german_tank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """German-tank (serial-number) population estimation: at four md5
     sampling rates (1/16 .. 8/16) the minimum-variance unbiased estimator
@@ -10209,7 +9873,7 @@ FROM nxt CROSS JOIN tot
 """
 
 
-@_register_r4("q_good_turing", _GOODTURING_SQL)
+@register("q_good_turing", _GOODTURING_SQL)
 def q_good_turing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Good-Turing frequency-of-frequencies ledger: N_r = number of token
     types seen exactly r times, the smoothed count r* = (r+1)N_{r+1}/N_r
@@ -10330,7 +9994,7 @@ FROM pick{k} pk CROSS JOIN vocab"""
 _SETCOVER_SQL = _setcover_sql()
 
 
-@_register_r4("q_set_cover_greedy", _SETCOVER_SQL)
+@register("q_set_cover_greedy", _SETCOVER_SQL)
 def q_set_cover_greedy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed greedy set cover of the corpus BIGRAM vocabulary by
     documents (916 distinct bigrams on this fixture vs only 31 unigrams —
@@ -10460,7 +10124,7 @@ FROM pred GROUP BY true_label
 """
 
 
-@_register_r4("q_knn_loo_eval", _KNN_SQL)
+@register("q_knn_loo_eval", _KNN_SQL)
 def q_knn_loo_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Leave-one-out 5-NN classification accuracy per label over the
     embedding table — THE sanity benchmark for 'do these vectors encode
@@ -10573,7 +10237,7 @@ JOIN stats sb ON sb.label = d.lb
 """
 
 
-@_register_r4("q_cluster_separation", _SEP_SQL)
+@register("q_cluster_separation", _SEP_SQL)
 def q_cluster_separation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pairwise cluster-separation matrix over the labeled embeddings,
     computed in CLOSED FORM from per-label sufficient statistics — the
@@ -10666,7 +10330,7 @@ CROSS JOIN gtot g CROSS JOIN tnorm t
 """
 
 
-@_register_r4("q_kmeans_inertia", _INERTIA_SQL)
+@register("q_kmeans_inertia", _INERTIA_SQL)
 def q_kmeans_inertia(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K-means-style inertia decomposition of the labeled embeddings, all
     from one-pass sufficient statistics in exact milli-unit integers:
@@ -10770,7 +10434,7 @@ GROUP BY k.k, tot.n_rows, tot.n_groups, lmin.min_l
 """
 
 
-@_register_r4("q_kanonymity_audit", _KANON_SQL)
+@register("q_kanonymity_audit", _KANON_SQL)
 def q_kanonymity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """k-anonymity / l-diversity audit (Sweeney 2002; Machanavajjhala
     2007) of the customer table under the quasi-identifier
@@ -10901,7 +10565,7 @@ FROM r2 WHERE pr = 1
 """
 
 
-@_register_r4("q_binary_segmentation", _BINSEG_SQL)
+@register("q_binary_segmentation", _BINSEG_SQL)
 def q_binary_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Depth-2 binary changepoint segmentation of the daily event volume
     (Scott-Knott / binary segmentation): level 1 localizes the global
@@ -11078,7 +10742,7 @@ CROSS JOIN (SELECT CAST(sum(CASE WHEN held THEN 1 ELSE 0 END) AS BIGINT)
 _GS_SQL = _gs_sql()
 
 
-@_register_r4("q_stable_matching", _GS_SQL)
+@register("q_stable_matching", _GS_SQL)
 def q_stable_matching(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch Gale-Shapley deferred acceptance (McVitie-Wilson parallel
     proposals) routing every 5th doc to the 20 source 'reviewers' under
@@ -11211,7 +10875,7 @@ FROM g GROUP BY depth
 """
 
 
-@_register_r4("q_prefix_cache", _PREFIX_CACHE_SQL)
+@register("q_prefix_cache", _PREFIX_CACHE_SQL)
 def q_prefix_cache(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Prefix-cache (KV-reuse) hit audit, the RadixAttention/vLLM
     automatic-prefix-caching ledger over the document corpus treated as a
@@ -11348,7 +11012,7 @@ GROUP BY 1, 4, 5, 6
     return body
 
 
-@_register_r4("q_merkle_diff", _merkle_sql())
+@register("q_merkle_diff", _merkle_sql())
 def q_merkle_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Merkle anti-entropy audit (Merkle 1987; the Dynamo/Cassandra
     repair protocol): two snapshots of the orders table — A as stored, B
@@ -11506,7 +11170,7 @@ FROM mv JOIN lb USING (scheme)
 """
 
 
-@_register_r4("q_rendezvous_hashing", _HRW_SQL)
+@register("q_rendezvous_hashing", _HRW_SQL)
 def q_rendezvous_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Rendezvous (highest-random-weight) hashing audit (Thaler &
     Ravishankar 1996), the ringless alternative to q_consistent_hashing:
@@ -11646,7 +11310,7 @@ FROM model
 """
 
 
-@_register_r4("q_encoding_size", _ENCODING_SIZE_SQL)
+@register("q_encoding_size", _ENCODING_SIZE_SQL)
 def q_encoding_size(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Columnar encoding advisor — the exact byte model a writer consults
     when choosing parquet column encodings: for five lineitem columns
@@ -11816,7 +11480,7 @@ FROM boxes GROUP BY layout
 """
 
 
-@_register_r4("q_hilbert_layout", _HILBERT_SQL)
+@register("q_hilbert_layout", _HILBERT_SQL)
 def q_hilbert_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Space-filling-curve file-layout advisor: orders are mapped onto a
     16x16 (customer-bucket, day-of-year-bucket) grid and bin-packed into
@@ -11950,7 +11614,7 @@ FROM chosen GROUP BY 1
 """
 
 
-@_register_r4("q_bitmap_index", _BITMAP_SQL)
+@register("q_bitmap_index", _BITMAP_SQL)
 def q_bitmap_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Roaring-bitmap container advisor (Chambi/Lemire 2016, scaled to
     4096-rid chunks): for each o_orderpriority posting list, every chunk
@@ -12068,7 +11732,7 @@ FROM med m JOIN meta t USING (event_type)
 """
 
 
-@_register_r4("q_theil_sen", _THEILSEN_SQL)
+@register("q_theil_sen", _THEILSEN_SQL)
 def q_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Theil-Sen robust trend estimator (Theil 1950 / Sen 1968) per event
     type — the slope companion to q_mann_kendall's monotonic-trend TEST:
@@ -12184,7 +11848,7 @@ FROM grp g CROSS JOIN tot t CROSS JOIN ties ti
 """
 
 
-@_register_r4("q_kruskal_wallis", _KRUSKAL_SQL)
+@register("q_kruskal_wallis", _KRUSKAL_SQL)
 def q_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Kruskal-Wallis k-group rank-sum ledger (1952) over document length
     by source — the k-group generalization of q_auc_ranksum's
@@ -12311,7 +11975,7 @@ WHERE w.lg > 0
 """
 
 
-@_register_r4("q_acf", _ACF_SQL)
+@register("q_acf", _ACF_SQL)
 def q_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Autocorrelation function at lags 1..5 of the zero-filled daily
     event volume, in EXACT integers: with S = sum(x) and n days, the
@@ -12432,7 +12096,7 @@ FROM calc
 """
 
 
-@_register_r4("q_power_analysis", _POWER_SQL)
+@register("q_power_analysis", _POWER_SQL)
 def q_power_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-proportion power analysis (the pre-experiment sample-size
     planner): per customer segment, the observed conversion p1 = share
@@ -12515,7 +12179,7 @@ FROM cum
 """
 
 
-@_register_r4("q_group_sequential", _GROUPSEQ_SQL)
+@register("q_group_sequential", _GROUPSEQ_SQL)
 def q_group_sequential(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O'Brien-Fleming group-sequential monitoring (1979) of a synthetic
     A/B stream: events split into 5 equal chronological looks (ntile over
@@ -12651,7 +12315,7 @@ FROM seg sg JOIN cliff cl USING (segment) CROSS JOIN tot t
 """
 
 
-@_register_r4("q_cohens_effects", _COHEN_SQL)
+@register("q_cohens_effects", _COHEN_SQL)
 def q_cohens_effects(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Effect-size ladder per customer segment vs the rest of the
     population over whole-dollar balances: Cohen's d with the pooled SD
@@ -12748,142 +12412,9 @@ def q_cohens_effects(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Round 4: graph/IR/audio trio — iterated independent-set graph coloring
-# (the Luby-peeling variant of Jones-Plassmann), an integer-weight WAND
-# pruning audit (Broder 2003 max-score document skipping), and real WAV
-# PCM16 decode with exact sample statistics (the audio twin of
-# q_media_decode).
+# Round 4: an integer-weight WAND pruning audit (Broder 2003 max-score
+# document skipping).
 # --------------------------------------------------------------------------
-
-
-def _coloring_sql() -> str:
-    blocks = []
-    prev = "unc0"
-    for r in range(1, 7):
-        blocks.append(
-            f"""
-cpr{r} AS (
-  SELECT node, md5('c{r}:' || node::VARCHAR) || '#'
-         || lpad(node::VARCHAR, 12, '0') AS k
-  FROM {prev}
-),
-cea{r} AS (
-  SELECT a.node AS u, pb.k AS kv
-  FROM adj
-  JOIN cpr{r} a ON a.node = adj.u
-  JOIN cpr{r} pb ON pb.node = adj.v
-),
-cmn{r} AS (SELECT u AS node, min(kv) AS min_nb FROM cea{r} GROUP BY 1),
-csel{r} AS (
-  SELECT p.node FROM cpr{r} p LEFT JOIN cmn{r} m ON m.node = p.node
-  WHERE m.min_nb IS NULL OR p.k < m.min_nb
-),
-unc{r} AS (
-  SELECT node FROM {prev}
-  WHERE node NOT IN (SELECT node FROM csel{r})
-)""".strip()
-        )
-        prev = f"unc{r}"
-    return ",\n".join(blocks)
-
-
-_COLORING_SQL = f"""
-WITH {SQL_DOCS_TOKS.strip()},
-{_DPG4.strip()},
-nodes AS (SELECT lo AS node FROM ge UNION SELECT hi FROM ge),
-adj AS (SELECT lo AS u, hi AS v FROM ge UNION ALL SELECT hi, lo FROM ge),
-deg AS (SELECT u AS node, CAST(count(*) AS BIGINT) AS degree
-        FROM adj GROUP BY 1),
-unc0 AS (SELECT node FROM nodes),
-{_coloring_sql()}
-SELECT n.node, d.degree,
-       CAST(CASE WHEN n.node IN (SELECT node FROM csel1) THEN 1
-                 WHEN n.node IN (SELECT node FROM csel2) THEN 2
-                 WHEN n.node IN (SELECT node FROM csel3) THEN 3
-                 WHEN n.node IN (SELECT node FROM csel4) THEN 4
-                 WHEN n.node IN (SELECT node FROM csel5) THEN 5
-                 WHEN n.node IN (SELECT node FROM csel6) THEN 6
-                 ELSE -1 END AS INT) AS color
-FROM nodes n JOIN deg d ON d.node = n.node
-"""
-
-
-@_register_r4("q_graph_coloring", _COLORING_SQL)
-def q_graph_coloring(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed graph coloring by iterated independent-set peeling —
-    the Luby-round variant of Jones-Plassmann (1993), the scheduling
-    primitive that turns a conflict graph into parallel execution waves:
-    in round r every UNCOLORED node draws the md5 priority
-    md5(cr:node)#node (strict total order) and takes color r iff it
-    beats every uncolored neighbor; winners leave, losers redraw. Each
-    color class is independent BY CONSTRUCTION (two adjacent winners in
-    one round are impossible), so any edge with equal colors is a bug —
-    the replica asserts propriety over every edge plus the wave-size
-    decay. Six rounds; the honest residue ships as color -1 with the
-    node's degree beside it (high-degree nodes are exactly the ones that
-    keep losing). Applied to dedup, the waves are batches of pairwise-
-    dissimilar docs safe to process concurrently.
-
-    Scale plan: per round one adjacency equi-join against the uncolored
-    frame, a min-per-node map-side combine, and an anti-join — the
-    Pregel coloring shape, rounds localCheckpoint-pinned; priorities are
-    stateless md5 projections any shard can regenerate."""
-    from cliner_spark.queries_r2 import _docpair_edges
-
-    ge = _docpair_edges(spark, sf_dir).select(
-        F.col("src").alias("lo"), F.col("dst").alias("hi")
-    )
-    nodes = (
-        ge.select(F.col("lo").alias("node"))
-        .union(ge.select(F.col("hi").alias("node")))
-        .distinct()
-        .localCheckpoint()
-    )
-    adj = ge.select(F.col("lo").alias("u"), F.col("hi").alias("v")).unionAll(
-        ge.select(F.col("hi").alias("u"), F.col("lo").alias("v"))
-    ).localCheckpoint()
-    deg = adj.groupBy(F.col("u").alias("node")).agg(
-        F.count(F.lit(1)).cast("long").alias("degree")
-    )
-
-    def key(r: int, col: str):
-        return F.concat(
-            F.md5(F.concat(F.lit(f"c{r}:"), F.col(col).cast("string"))),
-            F.lit("#"),
-            F.lpad(F.col(col).cast("string"), 12, "0"),
-        )
-
-    unc = nodes
-    colored = None
-    for r in range(1, 7):
-        pr = unc.select("node", key(r, "node").alias("k"))
-        ea = (
-            adj.join(pr.select(F.col("node").alias("u")), "u")
-            .join(
-                pr.select(F.col("node").alias("v"), F.col("k").alias("kv")),
-                "v",
-            )
-            .select("u", "kv")
-        )
-        mn = ea.groupBy(F.col("u").alias("node")).agg(F.min("kv").alias("min_nb"))
-        sel = (
-            pr.join(mn, "node", "left")
-            .filter(F.col("min_nb").isNull() | (F.col("k") < F.col("min_nb")))
-            .select("node")
-            .localCheckpoint()
-        )
-        unc = unc.join(sel, "node", "left_anti").localCheckpoint()
-        tagged = sel.withColumn("color", F.lit(r))
-        colored = tagged if colored is None else colored.unionAll(tagged)
-    return (
-        nodes.join(colored, "node", "left")
-        .join(deg, "node")
-        .select(
-            "node",
-            "degree",
-            F.coalesce(F.col("color"), F.lit(-1)).cast("int").alias("color"),
-        )
-    )
 
 
 _WAND_SQL = f"""
@@ -12957,7 +12488,7 @@ GROUP BY 1, 2, 3
 """
 
 
-@_register_r4("q_wand_pruning", _WAND_SQL)
+@register("q_wand_pruning", _WAND_SQL)
 def q_wand_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WAND max-score pruning audit (Broder et al. 2003), the
     document-skipping arithmetic behind every web-scale top-k retrieval
@@ -13065,83 +12596,6 @@ def q_wand_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_AUDIO_SQL = """
-WITH d AS (
-  SELECT doc_id, 64 + doc_id % 64 AS n, 8000 + 100 * (doc_id % 8) AS rate,
-         md5(coalesce(text, '')) AS hx
-  FROM documents
-),
-s AS (
-  SELECT doc_id, n, rate, CAST(t.i AS BIGINT) AS i,
-         (strpos('0123456789abcdef',
-                 substr(hx, CAST(((2 * t.i) % 16) * 2 + 1 AS INT), 1)) - 1) * 16
-         + (strpos('0123456789abcdef',
-                   substr(hx, CAST(((2 * t.i) % 16) * 2 + 2 AS INT), 1)) - 1)
-           AS b0,
-         (strpos('0123456789abcdef',
-                 substr(hx, CAST(((2 * t.i + 1) % 16) * 2 + 1 AS INT), 1)) - 1)
-           * 16
-         + (strpos('0123456789abcdef',
-                   substr(hx, CAST(((2 * t.i + 1) % 16) * 2 + 2 AS INT), 1)) - 1)
-           AS b1
-  FROM d, unnest(range(n)) AS t(i)
-),
-v AS (
-  SELECT doc_id, n, rate, i,
-         CASE WHEN b0 + 256 * b1 >= 32768 THEN b0 + 256 * b1 - 65536
-              ELSE b0 + 256 * b1 END AS smp
-  FROM s
-),
-z AS (
-  SELECT doc_id, n, rate, smp,
-         CASE WHEN lag(smp) OVER (PARTITION BY doc_id ORDER BY i) * smp < 0
-              THEN 1 ELSE 0 END AS zc
-  FROM v
-)
-SELECT CAST(doc_id AS BIGINT) AS media_id,
-       CAST(max(rate) AS BIGINT) AS sample_rate,
-       CAST(max(n) AS BIGINT) AS n_samples,
-       CAST(sum(smp) AS BIGINT) AS sum_s,
-       CAST(sum(smp * smp) AS BIGINT) AS sum_sq,
-       CAST(max(abs(smp)) AS BIGINT) AS peak,
-       CAST(sum(zc) AS BIGINT) AS zero_cross,
-       round(sqrt(CAST(sum(smp * smp) AS DOUBLE) / max(n)), 6) AS rms
-FROM z GROUP BY doc_id
-"""
-
-
-@_register_r4("q_audio_features", _AUDIO_SQL)
-def q_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Real WAV audio decode + exact feature extraction, the audio twin
-    of q_media_decode: every document becomes a genuine RIFF/PCM16 WAV
-    payload (stdlib wave writer, md5-stream samples, per-doc rate — any
-    external player opens them), then a SECOND stdlib wave reader parses
-    header + frames distributed in one mapInPandas pass and emits exact
-    integer stats: DC sum, energy sum, peak magnitude, strict zero
-    crossings, plus the one rounded RMS. The DuckDB oracle never touches
-    a codec — it recomputes every statistic analytically from the same
-    md5 byte stream, so a header-offset, endianness, or sign-extension
-    bug in EITHER direction breaks the hash. This is the multimodal
-    contract from the brief made real for audio: binary payloads through
-    Arrow, typed metadata, exact replay.
-
-    Scale plan: synth and decode are two zero-shuffle mapInPandas passes
-    (Arrow-batched, no per-row Python); stats are per-row, the output is
-    corpus-sized. A real fleet swaps _doc_samples for object-store reads
-    and keeps every other line."""
-    from cliner_spark.multimodal import decode_audio, synth_audio_table
-
-    docs = load_docs(spark, sf_dir)
-    feats = decode_audio(synth_audio_table(docs))
-    return feats.select(
-        "media_id", "sample_rate", "n_samples", "sum_s", "sum_sq", "peak",
-        "zero_cross",
-        F.round(
-            F.sqrt(F.col("sum_sq").cast("double") / F.col("n_samples")), 6
-        ).alias("rms"),
-    )
-
-
 # --------------------------------------------------------------------------
 # Round 4: bipartite-graph / LLM-serving / parametric-trend trio —
 # butterfly counting (the bipartite clustering census), a nucleus /
@@ -13186,7 +12640,7 @@ FROM wstat w CROSS JOIN bstat b
 """
 
 
-@_register_r4("q_butterfly_count", _BUTTERFLY_SQL)
+@register("q_butterfly_count", _BUTTERFLY_SQL)
 def q_butterfly_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Butterfly census of the bipartite doc-token graph (Sanei-Mehri et
     al. 2018) — the bipartite analog of q_triangles' clustering census:
@@ -13291,7 +12745,7 @@ FROM agg a JOIN nuc n USING (context)
 """
 
 
-@_register_r4("q_nucleus_audit", _NUCLEUS_SQL)
+@register("q_nucleus_audit", _NUCLEUS_SQL)
 def q_nucleus_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Nucleus / top-k sampling mass audit (Holtzman 2020's top-p over
     exact corpus bigram distributions) — the decoding-parameter ledger an
@@ -13448,7 +12902,7 @@ FROM coefs c JOIN ser s USING (event_type)
 """
 
 
-@_register_r4("q_ols_trend", _OLS_SQL)
+@register("q_ols_trend", _OLS_SQL)
 def q_ols_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-event-type OLS trend over the zero-filled daily series — the
     parametric baseline bracketed by q_theil_sen (robust slope) and
@@ -13608,7 +13062,7 @@ FROM ol GROUP BY 1
 """
 
 
-@_register_r4("q_interval_overlap", _INTERVAL_SQL)
+@register("q_interval_overlap", _INTERVAL_SQL)
 def q_interval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Interval-overlap range join via day bucketing — THE shape that
     keeps an interval join off the nested-loop path at scale: user
@@ -13747,7 +13201,7 @@ FROM xs CROSS JOIN f2t CROSS JOIN med
 """
 
 
-@_register_r4("q_ams_f2", _AMS_SQL)
+@register("q_ams_f2", _AMS_SQL)
 def q_ams_f2(spark: SparkSession, sf_dir: str) -> DataFrame:
     """AMS second-moment sketch (Alon-Matias-Szegedy 1996, the Godel-
     prize streaming estimator) over the bigram frequency vector, audited
@@ -13859,7 +13313,7 @@ FROM rk r CROSS JOIN tot t
 """
 
 
-@_register_r4("q_dow_seasonality", _DOW_SQL)
+@register("q_dow_seasonality", _DOW_SQL)
 def q_dow_seasonality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Day-of-week seasonality ledger over the zero-filled daily event
     volume — the weekly-profile companion to q_acf (which sees weekly
@@ -13969,7 +13423,7 @@ FROM last GROUP BY 1
 """
 
 
-@_register_r4("q_cdc_apply", _CDC_SQL)
+@register("q_cdc_apply", _CDC_SQL)
 def q_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CDC log apply — the Debezium-to-lakehouse merge in its exact
     form: every order key emits a deterministic change stream (insert at
@@ -14076,7 +13530,7 @@ FROM delivered GROUP BY 1
 """
 
 
-@_register_r4("q_delivery_audit", _DELIVERY_SQL)
+@register("q_delivery_audit", _DELIVERY_SQL)
 def q_delivery_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """At-least-once delivery audit — the Kafka-consumer ledger that
     separates 'we got everything' from 'we got everything once': events
@@ -14161,7 +13615,7 @@ GROUP BY 1, 2, 5
 """
 
 
-@_register_r4("q_crdt_gossip", _GOSSIP_SQL)
+@register("q_crdt_gossip", _GOSSIP_SQL)
 def q_crdt_gossip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """G-counter CRDT convergence under hypercube gossip (Shapiro 2011
     state-based CRDTs; the dimension-exchange schedule): 8 replicas each
@@ -14253,7 +13707,7 @@ FROM ro r JOIN grp g USING (pid)
 """
 
 
-@_register_r4("q_grpo_advantage", _GRPO_SQL)
+@register("q_grpo_advantage", _GRPO_SQL)
 def q_grpo_advantage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Group-relative advantage computation (the GRPO/RLOO whitening
     step of modern RLHF, Shao 2024): documents form 8-rollout groups per
@@ -14345,7 +13799,7 @@ GROUP BY 1, 6, 7
 """
 
 
-@_register_r4("q_moe_routing", _MOE_SQL)
+@register("q_moe_routing", _MOE_SQL)
 def q_moe_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mixture-of-experts routing audit (Shazeer 2017 top-k gating with
     the Switch/GShard capacity factor): every token picks its top-2 of 8
@@ -14448,7 +13902,7 @@ FROM per p CROSS JOIN tot t
 """
 
 
-@_register_r4("q_checkpoint_shards", _SHARD_SQL)
+@register("q_checkpoint_shards", _SHARD_SQL)
 def q_checkpoint_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Checkpoint parameter-sharding balance audit (the ZeRO/FSDP
     question: which of 8 shards gets which tensor): tensors (documents,
@@ -14556,7 +14010,7 @@ FROM m
 """
 
 
-@_register_r4("q_join_cardinality", _JOINCARD_SQL)
+@register("q_join_cardinality", _JOINCARD_SQL)
 def q_join_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """System-R cardinality estimation audit (Selinger 1979): for the
     three canonical TPC-H join edges, the uniformity-assumption estimate
@@ -14680,7 +14134,7 @@ FROM plans p CROSS JOIN best b CROSS JOIN pick pk
 """
 
 
-@_register_r4("q_join_order_cost", _JOINORDER_SQL)
+@register("q_join_order_cost", _JOINORDER_SQL)
 def q_join_order_cost(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Left-deep join-order mini-optimizer over customer-orders-lineitem
     (the Selinger enumeration in miniature): three valid left-deep plans
@@ -14780,7 +14234,7 @@ FROM per GROUP BY cand
 """
 
 
-@_register_r4("q_partition_advisor", _PARTADV_SQL)
+@register("q_partition_advisor", _PARTADV_SQL)
 def q_partition_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Partition-key layout advisor — the decision every lakehouse table
     makes once and lives with: four candidate partition schemes for the
@@ -14881,7 +14335,7 @@ FROM per_user GROUP BY 1
 """
 
 
-@_register_r4("q_rate_limit_audit", _RATELIMIT_SQL)
+@register("q_rate_limit_audit", _RATELIMIT_SQL)
 def q_rate_limit_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sliding-log rate-limit audit — the exact arithmetic of the
     limiter every API gateway runs, replayed over the event stream: an
@@ -14961,7 +14415,7 @@ FROM live GROUP BY 1
 """
 
 
-@_register_r4("q_gc_orphans", _GC_SQL)
+@register("q_gc_orphans", _GC_SQL)
 def q_gc_orphans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Orphan-file GC arithmetic — the Iceberg remove_orphan_files /
     Delta VACUUM ledger in its exact form: day-partition files exist in
@@ -15050,7 +14504,7 @@ JOIN tot tb ON tb.source = p.src_b
 """
 
 
-@_register_r4("q_histogram_intersection", _HISTKERNEL_SQL)
+@register("q_histogram_intersection", _HISTKERNEL_SQL)
 def q_histogram_intersection(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Histogram-intersection kernel matrix (Swain-Ballard 1991) across
     sources over token frequency histograms: K(a, b) = sum over the
@@ -15131,7 +14585,7 @@ WHERE (m.m_strict IS NULL OR m.m_strict < m.size) AND m.m_incl <= m.size
 """
 
 
-@_register_r4("q_skyline", _SKYLINE_SQL)
+@register("q_skyline", _SKYLINE_SQL)
 def q_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Skyline / Pareto-front operator (Borzsony-Kossmann-Stocker 2001)
     over parts, minimizing price and maximizing size — the
@@ -15231,7 +14685,7 @@ FROM fin f LEFT JOIN indeg i USING (task) CROSS JOIN mk m
 """
 
 
-@_register_r4("q_critical_path", _CPM_SQL)
+@register("q_critical_path", _CPM_SQL)
 def q_critical_path(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Critical-path method (CPM, Kelley-Walker 1959) over a layered
     64-task DAG (md5 durations 1..16; edges only cross adjacent 8-task
@@ -15370,7 +14824,7 @@ FROM (
 """
 
 
-@_register_r4("q_cramer_von_mises", _CVM_SQL)
+@register("q_cramer_von_mises", _CVM_SQL)
 def q_cramer_von_mises(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-sample Cramér-von Mises statistic in exact integers — the
     whole-distribution companion to q_ks_drift's max-gap: over English
@@ -15470,7 +14924,7 @@ FROM daily d CROSS JOIN tot t
 """
 
 
-@_register_r4("q_abtest_srm", _SRM_SQL)
+@register("q_abtest_srm", _SRM_SQL)
 def q_abtest_srm(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sample-ratio-mismatch guardrail (the #1 experiment-invalidity
     check, Fabijan 2019): the md5 arm assignment promises 50/50, so each
@@ -15559,7 +15013,7 @@ FROM rk CROSS JOIN fail f CROSS JOIN istar i
 )
 
 
-@_register_r4("q_multiple_testing", _MT_SQL)
+@register("q_multiple_testing", _MT_SQL)
 def q_multiple_testing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The multiple-testing procedure ladder on ONE p-value set —
     Bonferroni (p <= alpha/m), Holm step-down (reject while p_(i) <=
@@ -15659,7 +15113,7 @@ FROM picked GROUP BY delay_min
 """
 
 
-@_register_r4("q_stream_state_audit", _STREAMSTATE_SQL)
+@register("q_stream_state_audit", _STREAMSTATE_SQL)
 def q_stream_state_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming state-store sizing audit — the capacity question behind
     every stream-stream join and watermark setting: with watermark delay
@@ -15808,7 +15262,7 @@ FROM true_rk GROUP BY arm
 """
 
 
-@_register_r4("q_transe_eval", _TRANSE_SQL)
+@register("q_transe_eval", _TRANSE_SQL)
 def q_transe_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TransE link-prediction evaluation (Bordes 2013) in exact integer
     geometry, TWO-ARM (round-4 verdict item 5): the filtered-ranking
@@ -15972,7 +15426,7 @@ FROM agg a JOIN full_v f USING (status)
 """
 
 
-@_register_r4("q_ivm_audit", _IVM_SQL)
+@register("q_ivm_audit", _IVM_SQL)
 def q_ivm_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental view maintenance audit — the algebra that lets a
     materialized SUM/COUNT view absorb a CDC delta without rereading
@@ -16074,7 +15528,7 @@ FROM merged m JOIN direct d ON d.rk = m.rk
 """
 
 
-@_register_r4("q_bottomk_merge", _BOTTOMK_SQL)
+@register("q_bottomk_merge", _BOTTOMK_SQL)
 def q_bottomk_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bottom-k mergeability certificate (the property that makes KMV /
     bottom-k sketches distributed-sound, Cohen-Kaplan 2007): every shard
@@ -16180,7 +15634,7 @@ FROM cap CROSS JOIN theta t CROSS JOIN alloc a
 """
 
 
-@_register_r4("q_maxmin_fairshare", _FAIRSHARE_SQL)
+@register("q_maxmin_fairshare", _FAIRSHARE_SQL)
 def q_maxmin_fairshare(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Max-min fair-share allocation by water filling — the scheduler
     arithmetic behind YARN/Kubernetes fair queues: with capacity C =
@@ -16299,7 +15753,7 @@ FROM modes m CROSS JOIN nn
 """
 
 
-@_register_r4("q_hedged_requests", _HEDGED_SQL)
+@register("q_hedged_requests", _HEDGED_SQL)
 def q_hedged_requests(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hedged-request tail arithmetic (Dean & Barroso, 'The Tail at
     Scale' 2013): if a client fires the same request at two independent
@@ -16390,7 +15844,7 @@ FROM o GROUP BY 1
 """
 
 
-@_register_r4("q_retry_budget", _RETRY_SQL)
+@register("q_retry_budget", _RETRY_SQL)
 def q_retry_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Retry-budget amplification ledger — the SRE arithmetic that
     separates 'retries fix errors' from 'retries melt the backend':
@@ -16498,7 +15952,7 @@ FROM comp
 """
 
 
-@_register_r4("q_energy_distance", _ENERGY_SQL)
+@register("q_energy_distance", _ENERGY_SQL)
 def q_energy_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-sample energy distance (Székely-Rizzo 2004) in exact
     integers — the third classic two-sample metric after q_ks_drift's
@@ -16598,7 +16052,7 @@ GROUP BY 1, 2, 3, 4, 5
 """
 
 
-@_register_r4("q_median_ci", _MEDIANCI_SQL)
+@register("q_median_ci", _MEDIANCI_SQL)
 def q_median_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distribution-free median confidence interval per source — the
     order-statistic CI (binomial/normal-approximation ranks, the
@@ -16706,7 +16160,7 @@ FROM truth tr LEFT JOIN est e USING (event_type) CROSS JOIN tau t
 """
 
 
-@_register_r4("q_priority_sampling", _PRIOSAMPLE_SQL)
+@register("q_priority_sampling", _PRIOSAMPLE_SQL)
 def q_priority_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Priority sampling (Duffield-Lund-Thorup 2007) — the
     weight-sensitive sample that answers arbitrary subset-sum queries
@@ -16844,7 +16298,7 @@ FROM counts
 """
 
 
-@_register_r4("q_slo_burn_alert", _SLOBURN_SQL)
+@register("q_slo_burn_alert", _SLOBURN_SQL)
 def q_slo_burn_alert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multiwindow multi-burn-rate SLO alerting (the Google SRE workbook
     policy): against a 1% error budget (md5 error coin at 4/256 —
@@ -16951,7 +16405,7 @@ FROM traces GROUP BY 1
 """
 
 
-@_register_r4("q_trace_sampling", _TRACESAMPLE_SQL)
+@register("q_trace_sampling", _TRACESAMPLE_SQL)
 def q_trace_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tail-based trace sampling audit — the observability-pipeline
     rule that a trace is kept ALL-OR-NOTHING after seeing its last span
@@ -17059,7 +16513,7 @@ WHERE p.v_a > 0 AND p.v_b > 0
 """
 
 
-@_register_r4("q_mix_rate_decomposition", _MIXRATE_SQL)
+@register("q_mix_rate_decomposition", _MIXRATE_SQL)
 def q_mix_rate_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mix/rate (Oaxaca-Blinder-style) decomposition of the error-rate
     change between the two halves of the stream: the overall delta
@@ -17190,7 +16644,7 @@ GROUP BY s.thr
 """
 
 
-@_register_r4("q_ring_reliability", _RING_SQL)
+@register("q_ring_reliability", _RING_SQL)
 def q_ring_reliability(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ring-topology percolation (the SONET / chain-replication failure
     analysis): 256 nodes on a ring where link i (between node i and
@@ -17345,7 +16799,7 @@ FROM matched m GROUP BY m.rnd
 """
 
 
-@_register_r4("q_greedy_matching", _MATCHING_SQL)
+@register("q_greedy_matching", _MATCHING_SQL)
 def q_greedy_matching(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Distributed maximal matching by priority rounds (the Israeli-Itai
     shape: MIS on the line graph) over the doc-similarity graph — the
@@ -17469,7 +16923,7 @@ FROM flags GROUP BY 1
 """
 
 
-@_register_r4("q_load_shed_priority", _LOADSHED_SQL)
+@register("q_load_shed_priority", _LOADSHED_SQL)
 def q_load_shed_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Priority load-shedding fairness audit — what an overloaded
     ingestion tier actually does when a minute exceeds capacity: each
@@ -17552,7 +17006,7 @@ FROM routed GROUP BY 1
 """
 
 
-@_register_r4("q_router_cascade", _ROUTER_SQL)
+@register("q_router_cascade", _ROUTER_SQL)
 def q_router_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Model-router cascade economics — the threshold dial every
     LLM-serving stack tunes: requests carry an md5 confidence byte, the
@@ -17655,7 +17109,7 @@ GROUP BY 1
 """
 
 
-@_register_r4("q_lfu_hit_rate", _LFU_SQL)
+@register("q_lfu_hit_rate", _LFU_SQL)
 def q_lfu_hit_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Frequency-admission cache hit-rate replay (the LFU/TinyLFU policy
     under a TUMBLING refresh — the shape production caches actually run,
@@ -17750,7 +17204,7 @@ FROM masked m CROSS JOIN tot t
 """
 
 
-@_register_r4("q_secure_agg", _SECAGG_SQL)
+@register("q_secure_agg", _SECAGG_SQL)
 def q_secure_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Secure-aggregation mask-cancellation certificate (Bonawitz 2017,
     the federated-learning SecAgg core): 8 clients hold private per-
@@ -17856,7 +17310,7 @@ FROM v CROSS JOIN cs GROUP BY 1
 """
 
 
-@_register_r4("q_clip_bias", _CLIP_SQL)
+@register("q_clip_bias", _CLIP_SQL)
 def q_clip_bias(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gradient-clipping bias ledger (the DP-SGD pre-flight, Abadi
     2016's clip-then-noise step): clipping per-example magnitudes at C
@@ -17938,7 +17392,7 @@ FROM cells c CROSS JOIN wide w
 """
 
 
-@_register_r4("q_ab_interaction", _FACTORIAL_SQL)
+@register("q_ab_interaction", _FACTORIAL_SQL)
 def q_ab_interaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """2x2 factorial interaction contrast — the question a platform
     running two overlapping experiments must answer before shipping
@@ -18060,7 +17514,7 @@ FROM need n CROSS JOIN ing i
 """
 
 
-@_register_r4("q_lsm_cost_model", _LSM_SQL)
+@register("q_lsm_cost_model", _LSM_SQL)
 def q_lsm_cost_model(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSM-tree compaction cost model (O'Neil 1996; the RocksDB tuning
     table): with a 1 MiB memtable and the event stream's byte mass
@@ -18139,7 +17593,7 @@ GROUP BY 1, 7, 8
 """
 
 
-@_register_r4("q_occ_conflicts", _OCC_SQL)
+@register("q_occ_conflicts", _OCC_SQL)
 def q_occ_conflicts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Optimistic-concurrency conflict arithmetic (Kung-Robinson 1981
     under first-committer-wins): transactions are events writing key =
@@ -18229,7 +17683,7 @@ GROUP BY nn.mode, nn.n, nn.s
 """
 
 
-@_register_r4("q_quorum_latency", _QUORUM_SQL)
+@register("q_quorum_latency", _QUORUM_SQL)
 def q_quorum_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quorum-read latency order statistics (the Dynamo R=2-of-3
     arithmetic, the sibling of q_hedged_requests' duplicate-and-race):
@@ -18350,7 +17804,7 @@ FROM plan p CROSS JOIN mv m
 """
 
 
-@_register_r4("q_rebalance_plan", _REBALANCE_SQL)
+@register("q_rebalance_plan", _REBALANCE_SQL)
 def q_rebalance_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Minimal-move shard rebalance ledger — the question a resharding
     job answers before touching a byte: with 16 shards and a +/-10%
@@ -18482,7 +17936,7 @@ FROM fin f CROSS JOIN tot t
 """
 
 
-@_register_r4("q_cascade_failure", _CASCADE_SQL)
+@register("q_cascade_failure", _CASCADE_SQL)
 def q_cascade_failure(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dependency-cascade blast radius over q_critical_path's layered
     64-task DAG — the incident-model question 'if a quarter of the
@@ -18617,7 +18071,7 @@ FROM nn
 """
 
 
-@_register_r4("q_ttl_jitter", _TTLJITTER_SQL)
+@register("q_ttl_jitter", _TTLJITTER_SQL)
 def q_ttl_jitter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TTL-jitter stampede flattening — the thundering-herd fix
     quantified: cache entries born at the event stream's timestamps
@@ -18716,7 +18170,7 @@ GROUP BY 1
 """
 
 
-@_register_r4("q_read_your_writes", _RYW_SQL)
+@register("q_read_your_writes", _RYW_SQL)
 def q_read_your_writes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Read-your-writes staleness ledger — the session-guarantee
     arithmetic (Terry 1994) behind 'why did my update disappear': if a
@@ -18787,7 +18241,7 @@ FROM gaps GROUP BY 1
 """
 
 
-@_register_r4("q_heartbeat_flaps", _HEARTBEAT_SQL)
+@register("q_heartbeat_flaps", _HEARTBEAT_SQL)
 def q_heartbeat_flaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Heartbeat flap/outage ledger via the GAP TRICK — liveness
     accounting with no dense time grid: a node (user bucket) is up in
@@ -18843,7 +18297,7 @@ FROM loads GROUP BY 1
 """
 
 
-@_register_r4("q_jain_fairness", _JAIN_SQL)
+@register("q_jain_fairness", _JAIN_SQL)
 def q_jain_fairness(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Jain's fairness index (Jain-Chiu-Hawe 1984) of per-user load
     within each event type — THE allocation-fairness scalar networking
@@ -18923,7 +18377,7 @@ FROM det d CROSS JOIN conf c
 """
 
 
-@_register_r4("q_gray_failure", _GRAY_SQL)
+@register("q_gray_failure", _GRAY_SQL)
 def q_gray_failure(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gray-failure detection by differential observability (Huang
     2017's 'the Achilles heel of cloud-scale systems'): a gray node
@@ -19057,7 +18511,7 @@ FROM nodes n CROSS JOIN recip r
 """
 
 
-@_register_r4("q_reciprocity", _RECIP_SQL)
+@register("q_reciprocity", _RECIP_SQL)
 def q_reciprocity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Directed-graph reciprocity + dyad census (Holland-Leinhardt 1970s
     MAN census) over the interaction graph implied by the event stream —
@@ -19204,7 +18658,7 @@ FROM stat st JOIN pairs p USING (event_type)
 """
 
 
-@_register_r4("q_burstiness_memory", _BURSTMEM_SQL)
+@register("q_burstiness_memory", _BURSTMEM_SQL)
 def q_burstiness_memory(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Goh-Barabasi burstiness and memory of inter-event times (2008) —
     the two-coordinate fingerprint that separates bursty-correlated
@@ -19300,7 +18754,7 @@ FROM j GROUP BY 1
 """
 
 
-@_register_r4("q_group_commit", _GROUPCOMMIT_SQL)
+@register("q_group_commit", _GROUPCOMMIT_SQL)
 def q_group_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """WAL group-commit batching ladder — the fsync economics every
     durable log tunes (the DB-engine sibling of q_ttl_jitter's herd):
@@ -19344,8 +18798,3 @@ def q_group_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         F.max("wait_ms").cast("long").alias("max_wait_ms"),
     )
-
-
-# Round-5 registrations chain off this module's tail (same pattern as
-# queries_r3 -> queries_r4) so every import order stays cycle-safe.
-from cliner_spark import queries_r5  # noqa: E402,F401

@@ -104,24 +104,6 @@ def test_semdedup_keeps_one_per_cluster(spark):
     assert got[30]["keep"] and got[30]["cluster_id"] == 30
 
 
-def test_frame_dedup_cross_media_only(spark):
-    from cliner_spark.multimodal import attach_payload, frame_dedup
-
-    docs = spark.createDataFrame(
-        [
-            # same 64-byte prefix -> shared frame 0 across media 1 and 2
-            {"doc_id": 1, "text": "A" * 64 + "unique-tail-one!" * 4},
-            {"doc_id": 2, "text": "A" * 64 + "other-tail-here!" * 4},
-            {"doc_id": 3, "text": "B" * 64},
-        ]
-    )
-    got = frame_dedup(attach_payload(docs)).collect()
-    # frame 0 of media 1/2 is the 16-byte crop of 'A'*32 -> one dup row
-    assert len(got) == 1
-    r = got[0]
-    assert r["n_media"] == 2 and r["rep_media"] == 1 and r["rep_frame_idx"] == 0
-
-
 def test_partitioned_write_prunes_partitions(spark, tmp_path):
     """Hive-partitioned triple sink layout: a conv-bucket filter must reach
     the scan as a PartitionFilter (directory pruning), not a data filter —

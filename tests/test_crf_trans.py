@@ -182,7 +182,7 @@ def test_crf_learn_trans_fixture_span_pr():
     legal = crf.legal_transition_mask(prior)
     moved = np.abs(model.trans.astype(np.float64) - prior.astype(np.float64))
     assert moved[legal].max() > 0.1, "transitions were not learned"
-    assert np.all(model.trans[~legal] <= tagger.NEG / 2)
+    assert np.all(model.trans[~legal] == tagger.NEG)
 
     flat, turn_ids, lengths, pred = tagger.decode_texts(pd.Series(texts), model)
     g = np.concatenate([[tagger.LABEL_IDX[t] for t in ts] for ts in gold])

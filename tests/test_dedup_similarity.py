@@ -1,15 +1,14 @@
-"""Unit tests for dedup, similarity, textstats, multimodal operators."""
+"""Unit tests for dedup, similarity, textstats operators."""
 
 from __future__ import annotations
 
 import hashlib
-import math
 
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from cliner_spark import dedup, multimodal, similarity, textstats
+from cliner_spark import dedup, similarity, textstats
 
 
 def _docs(spark, texts):
@@ -206,39 +205,6 @@ def test_surface_form_counts_salt_invariant(spark):
     assert one == many and len(one) > 10
 
 
-def test_sample_frames_matches_python_slicing(spark):
-    """Frame sampling must equal byte-level slicing: 32-byte frames,
-    every 2nd frame, cropped to 16 bytes, hex-encoded."""
-    rows = [(1, "a" * 100), (2, ""), (3, "short")]
-    df = spark.createDataFrame(rows, "doc_id bigint, text string")
-    media = multimodal.attach_payload(df)
-    got = {
-        (r["media_id"], r["frame_idx"]): (r["n_bytes"], r["frame_hex"])
-        for r in multimodal.sample_frames(media).collect()
-    }
-    want = {}
-    for did, text in rows:
-        b = text.encode()
-        for i in range(0, (len(b) + 31) // 32, 2):
-            fr = b[i * 32 : i * 32 + 16]
-            want[(did, i)] = (len(fr), fr.hex())
-    assert got == want and (1, 2) in got and (2, 0) not in got
-
-
-def test_multimodal_plumbing(spark):
-    df = _docs(spark, ["hello", "world!"])
-    media = multimodal.attach_payload(df)
-    rows = {r["media_id"]: r for r in media.collect()}
-    assert bytes(rows[0]["payload"]) == b"hello"
-    assert rows[0]["meta"]["n_bytes"] == 5
-    assert rows[0]["meta"]["sha256"] == hashlib.sha256(b"hello").hexdigest()
-    feats = {r["media_id"]: r for r in multimodal.extract_features(media, feature_dim=4).collect()}
-    assert len(feats[0]["feature"]) == 4
-    assert math.isclose(sum(feats[0]["feature"]), 1.0, abs_tol=1e-5)
-    with pytest.raises(NotImplementedError):
-        multimodal.decode_stub(b"x")
-
-
 def test_quantize_int8_roundtrip_error_bound(spark):
     """Dequantized values must be within scale/2 of the originals (the
     round()'s half-step bound), and codes within [0, 255]."""
@@ -260,33 +226,6 @@ def test_quantize_int8_roundtrip_error_bound(spark):
         scale = (r["hi"] - r["lo"]) / 255.0
         assert r["max_abs_err"] <= scale / 2 + 1e-12
     assert out[99]["max_abs_err"] == 0.0  # constant vector reconstructs exactly
-
-
-def test_map_in_arrow_features_match_pandas_path(spark):
-    """extract_features_arrow (RecordBatch-level mapInArrow) must be
-    row-identical to extract_features (mapInPandas) on the same payloads —
-    incl. a NULL payload and a >1-batch input — so the two surfaces are
-    interchangeable per payload size."""
-    texts = [f"payload number {i} {'x' * (i % 7)}" for i in range(50)]
-    media = multimodal.attach_payload(_docs(spark, texts)).repartition(5)
-    null_row = (
-        media.limit(1)
-        .withColumn("media_id", F.lit(999).cast("long"))
-        .withColumn("payload", F.lit(None).cast("binary"))
-    )
-    media = media.unionByName(null_row)
-
-    def key(rows):
-        return {
-            r["media_id"]: (
-                r["n_bytes"], r["sha256"], list(r["feature"]), list(r["hist"])
-            )
-            for r in rows
-        }
-
-    a = key(multimodal.extract_features_arrow(media, feature_dim=4).collect())
-    p = key(multimodal.extract_features(media, feature_dim=4).collect())
-    assert a == p and len(a) == 51 and a[999][0] == 0
 
 
 def test_lsh_bucket_cut_drops_mega_buckets_only(spark):

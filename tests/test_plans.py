@@ -419,3 +419,25 @@ def test_plan_lint_global_window_detector():
     assert pl.count_global_windows(empty_over) == 1
     both = "\n".join([global_ordered, partitioned_ordered, empty_over])
     assert pl.count_global_windows(both) == 2
+
+
+def test_plan_lint_entries_name_registered_queries():
+    """Every plan-lint whitelist and frozen-count entry names a registered
+    query, and an entry for an unregistered one is reported as stale."""
+    import importlib
+    import json
+    import os
+    import sys
+
+    import __spark_entry__ as entry
+
+    sys.path.insert(
+        0,
+        os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"),
+    )
+    pl = importlib.import_module("plan_lint")
+    with open(pl.COUNTS_PATH) as f:
+        frozen = json.load(f)
+    qs = entry.queries()
+    assert pl.stale_entries(qs, frozen) == []
+    assert pl.stale_entries(qs, {**frozen, "q_gone": {"GlobalWindow": 1}}) == ["q_gone"]

@@ -1,11 +1,8 @@
-"""Independent-oracle replica tests for the graph/IR/audio batch
-(q_graph_coloring / q_wand_pruning / q_audio_features): coloring propriety
-over every edge, a from-scratch WAND replay incl. the safety invariant,
-and a wave-module round-trip on the exact md5 PCM stream."""
+"""Independent-oracle replica test for q_wand_pruning: a from-scratch WAND
+replay incl. the safety invariant."""
 
 from __future__ import annotations
 
-import hashlib
 import math
 from collections import Counter, defaultdict
 
@@ -14,76 +11,6 @@ import duckdb
 import __spark_entry__ as entry
 
 SF = "/root/testdata/sf0.001"
-
-
-def _md5(s: str) -> str:
-    return hashlib.md5(s.encode()).hexdigest()
-
-
-def _edges(spark):
-    rows = (
-        entry.queries()["q_dup_clusters"]
-        if False
-        else None
-    )
-    # independent edge source: rebuild the >=2-common-3-shingle doc pairs
-    docs = duckdb.sql(
-        f"SELECT doc_id, coalesce(text, '') FROM read_parquet('{SF}/documents.parquet')"
-    ).fetchall()
-    sh = {}
-    for did, text in docs:
-        toks = text.split()
-        sh[did] = {" ".join(toks[i : i + 3]) for i in range(len(toks) - 2)}
-    inv = defaultdict(list)
-    for did, ss in sh.items():
-        for g in ss:
-            inv[g].append(did)
-    common = Counter()
-    for g, ds in inv.items():
-        if len(ds) > 50:  # df_cut=50, mirror of dedup.jaccard_pairs
-            continue
-        ds.sort()
-        for i in range(len(ds)):
-            for j in range(i + 1, len(ds)):
-                common[(ds[i], ds[j])] += 1
-    return {p for p, c in common.items() if c >= 2}
-
-
-def test_graph_coloring_matches_replica(spark):
-    edges = _edges(spark)
-    nodes = sorted({n for e in edges for n in e})
-    adj = defaultdict(set)
-    for a, b in edges:
-        adj[a].add(b)
-        adj[b].add(a)
-
-    def key(r, n):
-        return _md5(f"c{r}:{n}") + "#" + str(n).zfill(12)
-
-    color = {}
-    unc = set(nodes)
-    for r in range(1, 7):
-        sel = {
-            n
-            for n in unc
-            if all(key(r, n) < key(r, m) for m in adj[n] if m in unc)
-        }
-        for n in sel:
-            color[n] = r
-        unc -= sel
-    got = {r["node"]: r for r in entry.queries()["q_graph_coloring"](spark, SF).collect()}
-    assert set(got) == set(nodes)
-    for n in nodes:
-        assert got[n]["color"] == color.get(n, -1), n
-        assert got[n]["degree"] == len(adj[n])
-    # propriety: no edge may connect two nodes of the same (real) color
-    for a, b in edges:
-        ca, cb = got[a]["color"], got[b]["color"]
-        assert not (ca == cb and ca != -1), (a, b, ca)
-    # waves exist and the first wave is the largest (peeling decay shape)
-    waves = Counter(r["color"] for r in got.values())
-    assert waves.get(1, 0) > 0
-    assert waves[1] == max(v for k, v in waves.items() if k != -1)
 
 
 def test_wand_pruning_matches_replica(spark):
@@ -127,47 +54,3 @@ def test_wand_pruning_matches_replica(spark):
         # the WAND safety property, replayed independently: score <= UB
         assert all(scores[did] <= ub[did] for did in scores)
         assert r["n_violations"] == 0
-
-
-def test_audio_features_matches_replica(spark):
-    docs = duckdb.sql(
-        f"SELECT doc_id, coalesce(text, '') FROM read_parquet('{SF}/documents.parquet')"
-    ).fetchall()
-    got = {r["media_id"]: r for r in entry.queries()["q_audio_features"](spark, SF).collect()}
-    assert set(got) == {d for d, _t in docs}
-    for did, text in docs:
-        n = 64 + did % 64
-        rate = 8000 + 100 * (did % 8)
-        digest = hashlib.md5(text.encode()).digest()
-        raw = bytes(digest[j % 16] for j in range(2 * n))
-        samples = []
-        for i in range(n):
-            v = raw[2 * i] + 256 * raw[2 * i + 1]
-            samples.append(v - 65536 if v >= 32768 else v)
-        zc = sum(1 for i in range(1, n) if samples[i - 1] * samples[i] < 0)
-        r = got[did]
-        assert (r["sample_rate"], r["n_samples"]) == (rate, n)
-        assert (r["sum_s"], r["sum_sq"]) == (sum(samples), sum(s * s for s in samples))
-        assert r["peak"] == max(abs(s) for s in samples)
-        assert r["zero_cross"] == zc
-        assert math.isclose(
-            r["rms"], round(math.sqrt(sum(s * s for s in samples) / n), 6),
-            abs_tol=1e-6,
-        )
-    # the payloads really are WAV: round-trip one through the wave module
-    import io
-    import wave
-
-    from cliner_spark.multimodal import _doc_samples, synth_audio_table
-
-    did, text = docs[0]
-    n, rate, raw = _doc_samples(did, text)
-    row = (
-        synth_audio_table(
-            spark.createDataFrame([(did, text)], "doc_id long, text string")
-        )
-        .collect()[0]
-    )
-    with wave.open(io.BytesIO(bytes(row["payload"])), "rb") as w:
-        assert (w.getnchannels(), w.getsampwidth(), w.getframerate()) == (1, 2, rate)
-        assert w.readframes(w.getnframes()) == raw

@@ -1,6 +1,6 @@
 """Independent-oracle property tests for the round-4o batch: straight-line
-Python replicas of bipartite HITS, the 4-truss peel, longest-common-token-run
-chaining, near-dup BLEU-2, and the Z-order layout audit."""
+Python replicas of bipartite HITS, longest-common-token-run chaining,
+near-dup BLEU-2, and the Z-order layout audit."""
 
 from __future__ import annotations
 
@@ -71,40 +71,6 @@ def test_hits_bipartite_matches_replica(spark):
     # the side-max rows carry share 1.0
     assert any(r["share"] == 1.0 for r in hubs.values())
     assert any(r["share"] == 1.0 for r in auths.values())
-
-
-def _truss_peel(edges):
-    es = set(edges)
-    for _ in range(3):
-        adj = defaultdict(set)
-        for lo, hi in es:
-            adj[lo].add(hi)
-            adj[hi].add(lo)
-        es = {
-            (lo, hi)
-            for lo, hi in es
-            if len(adj[lo] & adj[hi]) >= 2
-        }
-    return es
-
-
-def test_ktruss_matches_replica(spark):
-    edges = _doc_edges()
-    expect = _truss_peel(edges)
-    adj = defaultdict(set)
-    for lo, hi in expect:
-        adj[lo].add(hi)
-        adj[hi].add(lo)
-    got = {
-        (r["lo"], r["hi"]): r["support"]
-        for r in (x.asDict() for x in _q(spark, "q_ktruss_edges").collect())
-    }
-    assert set(got) == expect
-    for (lo, hi), sup in got.items():
-        assert sup == len(adj[lo] & adj[hi])
-    # the peel actually removed something on this fixture
-    assert len(expect) < len(edges)
-    assert len(expect) > 0
 
 
 def test_lcs_pairs_matches_replica(spark):

@@ -22,6 +22,9 @@ instances than frozen — so a whitelisted query cannot silently grow new
 flagged operators as it evolves. Regenerate with --update-counts after an
 intentional change (the diff of the JSON is the review surface).
 
+A full-registry run (no query arguments) also flags every whitelist or
+frozen-count entry whose query is not registered.
+
 Usage: python tools/plan_lint.py [query ...]       exit 1 if any unexplained
        python tools/plan_lint.py --update-counts   refreeze instance counts
 """
@@ -367,14 +370,7 @@ ALLOWED: dict[str, list[tuple[str, str]]] = {
     "q_knn_loo_eval": [
         ("BroadcastNestedLoopJoin",
          "all-pairs theta join (vec_id <>) — the brute-force exact "
-         "baseline BY DESIGN, same contract as q_embedding_topk; scale "
-         "path is q_knn_loo_ann (IVF candidates, cell equi-join)")
-    ],
-    "q_knn_loo_ann": [
-        ("BroadcastNestedLoopJoin",
-         "16-row broadcast centroid table x corpus for probe selection "
-         "(same shape as q_ivfpq_topk); candidate scoring itself is the "
-         "cell equi-join")
+         "baseline BY DESIGN, same contract as q_embedding_topk")
     ],
     "q_kmeans_inertia": [
         ("BroadcastNestedLoopJoin",
@@ -821,6 +817,13 @@ def pattern_counts(plan: str) -> dict[str, int]:
     return {k: v for k, v in out.items() if v}
 
 
+def stale_entries(registered, frozen: dict[str, dict[str, int]]) -> list[str]:
+    """Whitelist or frozen-count entries naming a query that is not
+    registered: dead entries that deleting a query must also delete."""
+    listed = set(ALLOWED) | set(ALLOWED_GLOBAL_WINDOW) | set(frozen)
+    return sorted(listed - set(registered))
+
+
 def main() -> int:
     from cliner_spark.session import get_spark
 
@@ -839,6 +842,10 @@ def main() -> int:
         with open(COUNTS_PATH) as f:
             frozen = json.load(f)
     bad = 0
+    if not args:
+        for name in stale_entries(qs, frozen):
+            print(f"{name}: NOT REGISTERED (stale whitelist/frozen entry)")
+            bad += 1
     observed_all: dict[str, dict[str, int]] = {}
     for name in wanted:
         try:
