@@ -150,8 +150,17 @@ def gazetteer_rows(entries: list[tuple[str, str, str, str, float]]) -> list[dict
 
 
 def gazetteer_df(spark: SparkSession, entries=None) -> DataFrame:
+    """The gazetteer as a JVM-side local relation (built from an Arrow
+    table): reading it starts no Python worker, unlike an RDD of pickled
+    rows, and every job of the canonical-map iteration reads it."""
+    import pyarrow as pa
+
     entries = entries if entries is not None else CLINICAL_GAZETTEER
-    return spark.createDataFrame(gazetteer_rows(entries), schema=schemas.GAZETTEER)
+    arrow_schema = pa.schema(
+        [(f, pa.float64() if f == "score" else pa.string()) for f in schemas.GAZETTEER.names]
+    )
+    table = pa.Table.from_pylist(gazetteer_rows(entries), schema=arrow_schema)
+    return spark.createDataFrame(table, schema=schemas.GAZETTEER)
 
 
 def gazetteer_values_sql(entries=None) -> str:

@@ -1,10 +1,13 @@
 """Entity linking (SURVEY.md J2/J5/W3; reference: umls_features.py gazetteer
 probe + interpret_umls.py longest-match/tie-break, approx/unverified §0).
 
-Tie-break rule (defined once, shared with SQL oracle + python test oracle):
-for a term with several gazetteer rows, keep the row with the highest score,
-breaking score ties by ascending cui (deterministic, no floats in keys
-downstream).
+Tie-break rule (mentions.py semantics 3; the SQL oracle, the python test
+oracle and mentions.build_lexicon are checked against it): for a term with
+several gazetteer rows, keep the row with the highest score, breaking score
+ties by ascending cui (deterministic, no floats in keys downstream).
+
+The pipeline's default scan links inside the scan (mentions.Lexicon); the
+join here serves external detectors (the tagger path) and the registry.
 
 Scale note: the tie-break runs on the *gazetteer* (dimension side, tiny)
 BEFORE the join, so the fact-side join is a plain broadcast hash join —

@@ -1,8 +1,9 @@
 """End-to-end KG construction pipeline (SURVEY.md §3.1 equivalent lifecycle):
 
-  transcripts -> drop blank turns -> mention scan (zero-shuffle) ->
-  entity link (broadcast) -> canonicalize (CC on the dim graph) ->
-  triples (unionByName of four projections) -> salted, sorted sink
+  transcripts -> drop blank turns -> mention scan + link + canonical cui
+  (one mapInPandas pass over a driver-built lexicon; the canonical map is
+  CC on the dim graph) -> triples (unionByName of four projections) ->
+  salted, sorted sink
 
 CLI (the reference's three verbs — cliner predict/evaluate/train):
   python -m cliner_spark.pipeline predict --input tx.parquet --output /tmp/triples
@@ -12,10 +13,13 @@ CLI (the reference's three verbs — cliner predict/evaluate/train):
   (bare --input/--output still means predict, back-compat)
 
 Shuffle audit (scale rationale, 10^12 turns):
-  - scan: 0 shuffles (per-turn array expressions / mapInPandas)
-  - link: 0 shuffles on the fact side (broadcast join; dim-side window is
-    dimension-sized)
+  - scan + link + canon_cui: 0 shuffles and 0 joins (one mapInPandas pass;
+    the lexicon — best row per term, canon_cui — is built on the driver
+    from the dimension-sized gazetteer and canonical map and broadcast once)
   - canonicalize: CC iterations shuffle only the cui graph (dim-sized)
+  - tagger scanner only: link is a broadcast join (0 shuffles on the fact
+    side; the dim-side window is dimension-sized) and canon_cui a second
+    broadcast join
   - triples: 2 aggregations (MENTIONS, SAME_AS dedup) + 1 distinct
     (ASSERTED_IN) over mention-grain data — orders of magnitude smaller than
     the turn stream; AQE coalesces
@@ -33,7 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from cliner_spark import fixtures
 from cliner_spark.canonicalize import canonical_concept_map
 from cliner_spark.link import link_mentions
-from cliner_spark.mentions import scan_mentions_udf
+from cliner_spark.mentions import pipeline_lexicon, scan_mentions_udf
 from cliner_spark.tokenization import drop_blank_turns
 from cliner_spark.triples import build_triples, hot_conversations, write_triples
 
@@ -49,9 +53,17 @@ def run_pipeline(
 ) -> dict[str, DataFrame]:
     """Returns dict with mentions, linked, canon_map, triples DataFrames.
 
+    gazetteer: None means fixtures.CLINICAL_GAZETTEER (the lexicon then
+    reads the Python rows, with no Spark job).
+
     canon_map: optionally pass the precomputed concept-canonicalization map
     (a gazetteer-version artifact — dimension-sized, independent of the turn
     stream; production computes it once per gazetteer release, not per batch).
+
+    The udf scanner links and canonicalizes inside the scan: one driver-side
+    lexicon per call (mentions.pipeline_lexicon: one collect of the canonical
+    map, plus one of the gazetteer when one is passed), so "mentions" and
+    "linked" are the same rows.
 
     assertions: classify each mention as negated/uncertain/affirmed (NegEx
     windowed triggers, assertion.py) and refine the per-turn concept edge to
@@ -66,7 +78,8 @@ def run_pipeline(
     {stage: Observation}; read obs.get AFTER the first action.
     """
     gaz = gazetteer if gazetteer is not None else fixtures.gazetteer_df(spark)
-    terms = [r["term"] for r in gaz.select("term").distinct().collect()]
+    if canon_map is None:
+        canon_map = canonical_concept_map(gaz)
 
     from cliner_spark.session import ensure_parallelism
 
@@ -85,7 +98,9 @@ def run_pipeline(
     turns = _observe(drop_blank_turns(ensure_parallelism(transcripts)), "turns")
     # "expr" is an older name for the same Arrow scan, kept for existing callers
     if scanner in ("udf", "expr"):
-        mentions = scan_mentions_udf(turns, terms)
+        mentions = linked = _observe(
+            scan_mentions_udf(turns, pipeline_lexicon(gazetteer, canon_map)), "mentions"
+        )
     elif scanner == "tagger":
         # Viterbi tagger path (SURVEY.md §7.1 step 3): features -> batched
         # Viterbi decode -> IOB chunking, distant-supervision model. Output
@@ -98,20 +113,20 @@ def run_pipeline(
             (r["term"], r["cui"], r["sem_type"], r["canonical"], r["score"])
             for r in gaz.collect()
         ]
-        mentions = tag_mentions(turns, make_distant_model(entries)).drop("concept_type")
+        mentions = _observe(
+            tag_mentions(turns, make_distant_model(entries)).drop("concept_type"),
+            "mentions",
+        )
+        linked = link_mentions(mentions, gaz)
     else:
         raise ValueError(f"unknown scanner {scanner!r}")
 
-    mentions = _observe(mentions, "mentions")
-    linked = link_mentions(mentions, gaz)
     if assertions:
         from cliner_spark.assertion import classify_assertions
         from cliner_spark.tokenization import tokenize
 
         turn_toks = tokenize(turns).select("conv_id", "turn_idx", "tokens")
         linked = classify_assertions(linked, turn_toks)
-    if canon_map is None:
-        canon_map = canonical_concept_map(gaz)
     triples = _observe(
         build_triples(linked, canon_map=canon_map, eager_checkpoint=with_metrics),
         "triples",

@@ -3,9 +3,9 @@ stream -> triple/metric sinks (SURVEY.md §2.9 notes this as the natural
 extension of the batch contract; the batch pipeline stays authoritative).
 
 Everything stateless (scan/link) runs unchanged in streaming mode — the same
-mapInPandas / broadcast-join operators are reused, so batch/stream parity is
-by construction. Stateful pieces (windowed mention counts) use event-time
-watermarks for late data.
+lexicon scan (one mapInPandas pass that links inside the scan) is reused, so
+batch/stream parity is by construction. Stateful pieces (windowed mention
+counts) use event-time watermarks for late data.
 
 At scale: readStream from the Iceberg/parquet landing zone, per-source-file
 micro-batches; the scan stage remains zero-shuffle, so throughput matches
@@ -18,8 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cliner_spark import schemas
-from cliner_spark.link import link_mentions
-from cliner_spark.mentions import scan_mentions_udf
+from cliner_spark.mentions import pipeline_lexicon, scan_mentions_udf
 from cliner_spark.tokenization import drop_blank_turns
 
 
@@ -32,11 +31,11 @@ def read_transcript_stream(spark: SparkSession, input_path: str, max_files: int 
 
 
 def streaming_mentions(stream: DataFrame, gazetteer: DataFrame) -> DataFrame:
-    """Stateless streaming mention scan + link; keeps event time `ts`."""
-    terms = [r["term"] for r in gazetteer.select("term").distinct().collect()]
-    turns = drop_blank_turns(stream)
-    scanned = scan_mentions_udf(turns, terms, carry_ts=True)
-    return link_mentions(scanned, gazetteer)
+    """Stateless streaming mention scan + link (the pipeline's lexicon scan,
+    one collect of the gazetteer); keeps event time `ts`."""
+    return scan_mentions_udf(
+        drop_blank_turns(stream), pipeline_lexicon(gazetteer), carry_ts=True
+    )
 
 
 def windowed_concept_counts(

@@ -7,10 +7,10 @@ whole path is one `mapInPandas` pass, fully vectorized per Arrow batch:
 
   text batch -> flat token array [N] (+ turn-id array)
              -> hashed feature indices (features.py, numpy fancy indexing)
-             -> gazetteer phrase flags (vectorized n-gram match + one K×K
-                dominance matrix per batch — same set-based longest/leftmost
-                rule as mentions.py, so tagger spans == scanner spans when the
-                model is the distant-supervision one)
+             -> gazetteer phrase flags (mentions.TermIndex.kept_spans, the
+                scanner's kernel: integer-keyed n-gram probe + shifted-window
+                longest/leftmost dominance, so tagger spans == scanner spans
+                when the model is the distant-supervision one)
              -> emissions [N, L] -> padded [B, T, L] -> batched Viterbi
              -> tags -> chunked spans (chunk.py) -> mention rows
 
@@ -23,7 +23,7 @@ Labels: the i2b2 7-tag IOB set (reference `code/documents.py` tagset).
 from __future__ import annotations
 
 from collections.abc import Iterator
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
 import numpy as np
 import pandas as pd
@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame
 
 from cliner_spark import features as FT
 from cliner_spark.chunk import chunk_flat_tags
+from cliner_spark.mentions import TermIndex, build_lexicon, flatten_batch
 
 CONCEPT_TYPES = ("problem", "test", "treatment")
 LABELS = ("O",) + tuple(
@@ -78,17 +79,23 @@ class TagModel:
     max_n: int = 4
     use_context: bool = True
     use_pos: bool = True
+    # derived from term_type (save_model does not write them): the
+    # gazetteer-flag kernel's index and the B-/I- label of each term id
+    index: TermIndex = field(init=False, repr=False, compare=False)
+    b_rows: np.ndarray = field(init=False, repr=False, compare=False)
+    i_rows: np.ndarray = field(init=False, repr=False, compare=False)
+
+    def __post_init__(self):
+        self.index = TermIndex(self.term_type, self.max_n)
+        types = [self.term_type[t] for t in self.index.terms]
+        self.b_rows = np.asarray([_B_OF[t] for t in types], dtype=np.int64)
+        self.i_rows = np.asarray([_I_OF[t] for t in types], dtype=np.int64)
 
 
 def best_term_type(entries: list[tuple]) -> dict[str, str]:
-    """term -> concept_type of its best gazetteer row (score desc, cui asc)."""
-    best: dict[str, tuple] = {}
-    for term, cui, sem_type, _canon, score in entries:
-        t = term.lower()
-        key = (-float(score), cui)
-        if t not in best or key < best[t][0]:
-            best[t] = (key, sem_type)
-    return {t: v[1] for t, v in best.items()}
+    """term -> concept_type of its best gazetteer row (mentions.build_lexicon's
+    tie-break: score desc, cui asc)."""
+    return {t: link.concept_type for t, link in build_lexicon(entries).best.items()}
 
 
 def make_distant_model(entries: list[tuple], **kw) -> TagModel:
@@ -112,130 +119,27 @@ def make_distant_model(entries: list[tuple], **kw) -> TagModel:
 # ---------------------------------------------------------------------------
 
 
-def flatten_batch(texts: pd.Series) -> tuple[pd.Series, np.ndarray, np.ndarray]:
-    """texts [B] -> (flat tokens [N], turn_ids [N], turn_lengths [B])."""
-    tok_lists = texts.fillna("").str.split()
-    lengths = tok_lists.str.len().to_numpy(dtype=np.int64)
-    flat = [t for lst in tok_lists for t in lst]
-    turn_ids = np.repeat(np.arange(len(lengths)), lengths)
-    return pd.Series(flat, dtype="object"), turn_ids, lengths
-
-
-def kept_ngram_spans(
-    low_s: pd.Series,
-    turn_ids: np.ndarray,
-    term_map: dict[str, object],
-    max_n: int,
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Dominance-kept n-gram gazetteer matches over a flat token array.
-
-    Vectorized n-gram matching (pandas shift+concat per n, masked at turn
-    boundaries), then a TURN-SEGMENTED dominance filter (set-based
-    longest-then-leftmost, same predicate as mentions.py): candidates are
-    padded per turn to [T_active, Kmax] and compared pairwise only within
-    their turn — O(T·Kmax²) with Kmax small, instead of a batch-wide K×K
-    which is quadratic in mention density.
-
-    Returns (starts, lens, values): flat-token start index, token length,
-    and term_map[matched term] per kept span. Shared by the tagger's
-    gazetteer feature family and the big-gazetteer mention scanner.
-    """
-    empty = (
-        np.zeros(0, dtype=np.int64),
-        np.zeros(0, dtype=np.int64),
-        np.zeros(0, dtype=object),
-    )
-    if len(low_s) == 0 or not term_map:
-        return empty
-    tid_s = pd.Series(turn_ids)
-
-    all_s, all_ln, all_ty = [], [], []
-    grams = low_s
-    for n in range(1, max_n + 1):
-        if n > 1:
-            grams = grams.str.cat(low_s.shift(-(n - 1)), sep=" ")
-        hits = grams.map(term_map)
-        valid = hits.notna()
-        if n > 1:
-            valid &= tid_s.shift(-(n - 1)).eq(tid_s)  # stay within the turn
-        idx = np.nonzero(valid.fillna(False).to_numpy(dtype=bool))[0]
-        if len(idx):
-            all_s.append(idx)
-            all_ln.append(np.full(len(idx), n, dtype=np.int64))
-            all_ty.append(hits.to_numpy(dtype=object)[idx])
-
-    if not all_s:
-        return empty
-
-    s = np.concatenate(all_s)
-    ln = np.concatenate(all_ln)
-    ty = np.concatenate(all_ty)
-    e = s + ln - 1
-    tid = turn_ids[s]
-
-    # segment by turn: pad to [T_active, Kmax]
-    order = np.lexsort((s, -ln, tid))
-    s, ln, e, ty, tid = s[order], ln[order], e[order], ty[order], tid[order]
-    uniq, seg_start, counts = np.unique(tid, return_index=True, return_counts=True)
-    kmax = int(counts.max())
-    t_active = len(uniq)
-    pos_in_seg = np.arange(len(s)) - np.repeat(seg_start, counts)
-
-    S = np.full((t_active, kmax), -1, dtype=np.int64)
-    E = np.full((t_active, kmax), -2, dtype=np.int64)
-    LN = np.zeros((t_active, kmax), dtype=np.int64)
-    seg_of = np.repeat(np.arange(t_active), counts)
-    S[seg_of, pos_in_seg] = s
-    E[seg_of, pos_in_seg] = e
-    LN[seg_of, pos_in_seg] = ln
-    real = S >= 0
-
-    # pairwise within turn: o dominates c iff overlap & (longer | same len,
-    # earlier start). padded slots have len 0 -> never dominate.
-    overlap = (S[:, :, None] <= E[:, None, :]) & (E[:, :, None] >= S[:, None, :])
-    better = (LN[:, :, None] > LN[:, None, :]) | (
-        (LN[:, :, None] == LN[:, None, :]) & (S[:, :, None] < S[:, None, :])
-    )
-    dominated = (overlap & better & real[:, :, None]).any(axis=1)
-    keep_mask = real & ~dominated
-
-    # ty was reordered together with s above; flatten the keep mask back to
-    # the sorted candidate order to index all three in lockstep:
-    flat_keep = keep_mask[seg_of, pos_in_seg]
-    return s[flat_keep], ln[flat_keep], ty[flat_keep]
-
-
-def gazetteer_flags(
-    low: np.ndarray,
-    turn_ids: np.ndarray,
-    term_type: dict[str, str],
-    max_n: int,
-) -> np.ndarray:
+def gazetteer_flags(low: np.ndarray, turn_ids: np.ndarray, model: TagModel) -> np.ndarray:
     """[N, L] emission bonus matrix from phrase-gazetteer membership
-    (kept_ngram_spans does the vectorized matching + dominance)."""
+    (mentions.TermIndex.kept_spans does the matching + dominance)."""
     n_tok = len(low)
     bonus = np.zeros((n_tok, L), dtype=np.float32)
-    if n_tok == 0 or not term_type:
+    if n_tok == 0 or not model.term_type:
         return bonus
 
-    ks, kln, kty = kept_ngram_spans(
-        pd.Series(low, dtype="object"), turn_ids, term_type, max_n
-    )
+    idx = model.index
+    ks, kln, kterm = idx.kept_spans(idx.word_ids(low), turn_ids)
     if len(ks) == 0:
         bonus[:, 0] = 1.0
         return bonus
 
-    b_rows = np.asarray([_B_OF[t] for t in kty], dtype=np.int64)
-    bonus[ks, b_rows] += 1.0
+    bonus[ks, model.b_rows[kterm]] += 1.0
     inner = kln > 1
     if inner.any():
         # I-flags: positions s+1..s+len-1 per kept multi-token span
         rep = (kln[inner] - 1).astype(np.int64)
         pos = np.repeat(ks[inner] + 1, rep) + _ranges(rep)
-        i_rows = np.repeat(
-            np.asarray([_I_OF[t] for t in kty[inner]], dtype=np.int64), rep
-        )
-        bonus[pos, i_rows] += 1.0
+        bonus[pos, np.repeat(model.i_rows[kterm[inner]], rep)] += 1.0
 
     flagged = bonus.any(axis=1)
     bonus[~flagged, 0] = 1.0
@@ -305,6 +209,7 @@ def tag_emissions(
 ) -> tuple[pd.Series, np.ndarray, np.ndarray, np.ndarray]:
     """texts -> (flat tokens, turn_ids, lengths, flat emissions [N, L])."""
     flat, turn_ids, lengths = flatten_batch(texts)
+    flat = pd.Series(flat, dtype="object")
     if len(flat) == 0:
         return flat, turn_ids, lengths, np.zeros((0, L), dtype=np.float32)
     fams = FT.feature_indices(flat)
@@ -314,7 +219,7 @@ def tag_emissions(
         fams += FT.pos_indices(flat)
     em = FT.emissions_from_indices(fams, model.W)
     low = flat.str.lower().to_numpy(dtype=object)
-    gflags = gazetteer_flags(low, turn_ids, model.term_type, model.max_n)
+    gflags = gazetteer_flags(low, turn_ids, model)
     em += model.gaz_weight * gflags
     em[:, 0] += np.float32(model.o_bias) * (gflags[:, 0] > 0)
     return flat, turn_ids, lengths, em

@@ -40,21 +40,26 @@ def build_triples(linked: DataFrame, gazetteer: DataFrame | None = None,
                   eager_checkpoint: bool = False) -> DataFrame:
     """linked mentions (+gazetteer for the concept graph) -> triples DF.
 
+    Rows that already carry canon_cui (the lexicon scan) are used as they
+    are; otherwise canon_cui is joined from canon_map (with_canonical).
+
     eager_checkpoint: materialize the mention-grain checkpoint NOW rather
     than on first action. Required when upstream carries df.observe
     metrics: a lazily-materialized checkpoint evaluates its child outside
     the tracked SQL execution, so observations below it report 0; eager
     checkpointing runs as its own execution and fires them correctly.
     """
-    if canon_map is None:
-        if gazetteer is None:
-            raise ValueError("need gazetteer or canon_map")
-        canon_map = canonical_concept_map(gazetteer)
+    if "canon_cui" not in linked.columns:
+        if canon_map is None:
+            if gazetteer is None:
+                raise ValueError("need gazetteer or canon_map")
+            canon_map = canonical_concept_map(gazetteer)
+        linked = with_canonical(linked, canon_map)
     # Materialize mention-grain rows ONCE: the four triple projections below
     # each trigger their own job, and without this the upstream scan UDF (the
     # expensive stage) would run four times. localCheckpoint = executor-local
     # materialization (at warehouse scale: a staging table / exchange reuse).
-    m = with_canonical(linked, canon_map).localCheckpoint(eager=eager_checkpoint)
+    m = linked.localCheckpoint(eager=eager_checkpoint)
 
     mentions_t = (
         m.groupBy("conv_id", "canon_cui")

@@ -2,8 +2,9 @@
 `str.isspace` character, gazetteer words and look-alike filler must tokenize
 like Python `str.split()` in Spark (tokens_col, tokenize_with_offsets) and
 DuckDB (sql_tokens), drop as blank exactly when it has no token, and give
-identical mention rows from the Arrow scan, the distant-model tagger, the
-plain-Python oracle and the DuckDB mention SQL."""
+identical mention rows from the Arrow scan (term-list and lexicon forms),
+the distant-model tagger, the plain-Python oracle and the DuckDB mention
+SQL — also for dense, overlapping multi-token hits at turn boundaries."""
 
 from __future__ import annotations
 
@@ -17,7 +18,7 @@ from pyspark.sql import functions as F
 
 from cliner_spark import fixtures, oracle_py
 from cliner_spark.entry_queries import DOC_TERMS, SQL_MENTION_SCAN
-from cliner_spark.mentions import scan_mentions_udf
+from cliner_spark.mentions import build_lexicon, scan_mentions_udf
 from cliner_spark.tagger import make_distant_model, tag_mentions
 from cliner_spark.tokenization import (
     WS_CLASS,
@@ -32,14 +33,20 @@ ALL_CHARS = "".join(chr(c) for c in range(0x110000) if not 0xD800 <= c <= 0xDFFF
 
 _WORDS = sorted({w for t in DOC_TERMS for w in t.split()})
 _FILLER = ["the", "of", "x", "Scan", "HASH", "\u200b", "\ufeff", "scan\u200b", "a-b"]
-_texts = st.lists(
-    st.lists(
-        st.one_of(st.sampled_from(ISSPACE), st.sampled_from(_WORDS + _FILLER)),
-        max_size=14,
-    ).map("".join),
+_sparse = st.lists(
+    st.one_of(st.sampled_from(ISSPACE), st.sampled_from(_WORDS + _FILLER)),
+    max_size=14,
+).map("".join)
+# back-to-back multi-token hits and the overlaps between them ("sort merge
+# join", "full table scan"), starting and ending on term words so that the
+# n-grams across two adjacent turns of a batch would match if the scan let
+# them
+_dense = st.lists(
+    st.sampled_from(DOC_TERMS + ["sort merge join", "Full Table Scan", "join", "sort"]),
     min_size=1,
-    max_size=40,
-)
+    max_size=10,
+).map(" ".join)
+_texts = st.lists(st.one_of(_sparse, _dense), min_size=1, max_size=40)
 
 
 def _as_python_regex(cls: str) -> str:
@@ -102,3 +109,9 @@ def test_one_tokenizer_one_scan(spark, texts):
         (str(d), s, e, m) for d, s, e, m in con.execute(SQL_MENTION_SCAN).fetchall()
     }
     assert udf == tagged == duck == want
+    # the lexicon form of the same scan links each span to its best row
+    links = oracle_py.best_links(fixtures.DOC_GAZETTEER)
+    linked = scan_mentions_udf(df, build_lexicon(fixtures.DOC_GAZETTEER))
+    assert {tuple(r) for r in linked.select(*key, "cui").collect()} == {
+        (*k, links[k[3].lower()][0]) for k in want
+    }

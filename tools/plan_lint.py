@@ -276,7 +276,9 @@ ALLOWED: dict[str, list[tuple[str, str]]] = {
     "q_isotonic_calibration": [
         ("BroadcastNestedLoopJoin",
          "PAV interval joins over the <=10-row bin frame (j<=k range "
-         "joins on a dimension, never the corpus)"),
+         "joins on a dimension, never the corpus); the bin x interval "
+         "join below is broadcast too when the planner sees the "
+         "gazetteer's real (local-relation) size"),
         ("CartesianProduct",
          "<=10-row bin frame x <=55-row interval frame (PAV max-min "
          "selection, both dimension-sized)"),
