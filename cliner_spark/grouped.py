@@ -1,7 +1,6 @@
 """Grouped-map and cogrouped-map pandas operators (the two Spark Python
-surfaces not covered by the scalar/iterator UDFs, the UDTFs, or the Python
-DataSources): ``groupBy(...).applyInPandas`` and
-``cogroup(...).applyInPandas``.
+surfaces not covered by the scalar/iterator UDFs or the UDTFs):
+``groupBy(...).applyInPandas`` and ``cogroup(...).applyInPandas``.
 
 Both operators here are deterministic and have exact DuckDB twins
 (registered in queries_r2), so the surfaces themselves are hash-verified:

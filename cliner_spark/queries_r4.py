@@ -10842,407 +10842,6 @@ def q_stable_matching(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Round 4: serving/storage-infrastructure trio — prefix-cache hit audit
-# (vLLM / SGLang RadixAttention-style KV reuse), Merkle anti-entropy
-# between two table snapshots (Merkle 1987; Dynamo/Cassandra repair), and
-# rendezvous (HRW, Thaler-Ravishankar 1996) vs mod-N resharding.
-# --------------------------------------------------------------------------
-
-_PREFIX_CACHE_SQL = f"""
-WITH {SQL_DOCS_TOKS.strip()},
-d AS (SELECT doc_id, toks, len(toks) AS nt FROM docs),
-sp AS (SELECT CAST(s.depth AS INT) AS depth
-       FROM (VALUES (1), (2), (4), (8)) AS s(depth)),
-pk AS (
-  SELECT sp.depth, array_to_string(d.toks[1:sp.depth], ' ') AS pref
-  FROM d JOIN sp ON d.nt >= sp.depth
-),
-g AS (
-  SELECT depth, pref, CAST(count(*) AS BIGINT) AS cnt
-  FROM pk GROUP BY 1, 2
-)
-SELECT depth,
-       CAST(sum(cnt) AS BIGINT) AS n_docs,
-       CAST(count(*) AS BIGINT) AS n_prefixes,
-       CAST(coalesce(sum(CASE WHEN cnt >= 2 THEN cnt END), 0) AS BIGINT)
-         AS n_shared_docs,
-       CAST(max(cnt) AS BIGINT) AS max_group,
-       CAST(sum((cnt - 1) * depth) AS BIGINT) AS tokens_saved,
-       CAST(sum(cnt) * depth AS BIGINT) AS tokens_total,
-       round(CAST(sum((cnt - 1) * depth) AS DOUBLE)
-             / (sum(cnt) * depth), 6) AS hit_rate
-FROM g GROUP BY depth
-"""
-
-
-@register("q_prefix_cache", _PREFIX_CACHE_SQL)
-def q_prefix_cache(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Prefix-cache (KV-reuse) hit audit, the RadixAttention/vLLM
-    automatic-prefix-caching ledger over the document corpus treated as a
-    prompt stream: at cache depths d in {{1,2,4,8}} tokens, group prompts
-    by their exact d-token prefix and measure how much prefill compute a
-    prefix cache would deduplicate — every prompt after the first in a
-    group reuses d cached tokens, so tokens_saved = sum over groups of
-    (cnt-1)*d and hit_rate = saved / (n_docs*d). The depth ladder is the
-    capacity-planning curve: short prefixes hit often (system-prompt
-    sharing), deep prefixes decay toward zero — exactly the shape a
-    serving fleet consults before sizing KV cache memory. All counts and
-    savings are exact BIGINTs; hit_rate is one rounded division per row.
-
-    Scale plan: one corpus scan fanned by a broadcast 4-row depth spine
-    (whitelisted below), then a map-side-combinable groupBy on
-    (depth, prefix-string) — the prefix key is bounded (<= 8 tokens), and
-    the final rollup is 4 rows. No self-joins, no explode of token
-    positions."""
-    from cliner_spark.tokenization import tokens_col
-
-    docs = load_docs(spark, sf_dir).select(
-        "doc_id", tokens_col(F.col("text")).alias("toks")
-    )
-    sp = spark.createDataFrame([(1,), (2,), (4,), (8,)], "depth int")
-    pk = docs.join(
-        F.broadcast(sp), F.size("toks") >= F.col("depth")
-    ).select(
-        "depth",
-        F.concat_ws(" ", F.slice("toks", F.lit(1), F.col("depth"))).alias("pref"),
-    )
-    g = pk.groupBy("depth", "pref").agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-    saved = F.sum((F.col("cnt") - 1) * F.col("depth"))
-    total = F.sum("cnt") * F.col("depth")
-    return g.groupBy("depth").agg(
-        F.sum("cnt").cast("long").alias("n_docs"),
-        F.count(F.lit(1)).cast("long").alias("n_prefixes"),
-        F.coalesce(
-            F.sum(F.when(F.col("cnt") >= 2, F.col("cnt"))), F.lit(0)
-        ).cast("long").alias("n_shared_docs"),
-        F.max("cnt").cast("long").alias("max_group"),
-        saved.cast("long").alias("tokens_saved"),
-        total.cast("long").alias("tokens_total"),
-        F.round(saved.cast("double") / total, 6).alias("hit_rate"),
-    )
-
-
-_MERKLE_P = 2_147_483_647
-
-
-def _merkle_sql() -> str:
-    """Builds the 9-level Merkle CTE chain (leaves lv8 .. root lv0).
-
-    Snapshot A = orders as stored; snapshot B = the same table after a
-    deterministic md5-selected delta (1/16 of keys deleted, 1/16
-    price-bumped). Node combine is the left/right-distinguishing linear
-    hash (2*left + 3*right) mod P so sibling swaps and child moves change
-    the parent — the property a plain sum lacks."""
-    P = _MERKLE_P
-    parts = [
-        """
-base AS (
-  SELECT o_orderkey AS k,
-         CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS cents,
-         substr(md5(CAST(o_orderkey AS VARCHAR) || ':d'), 1, 1) AS dn
-  FROM orders
-),
-allr AS (
-  SELECT 'a' AS side, k, cents FROM base
-  UNION ALL
-  SELECT 'b', k, CASE WHEN dn = '1' THEN cents + 100 ELSE cents END
-  FROM base WHERE dn <> '0'
-),
-fp AS (
-  SELECT side, CAST(k % 256 AS INT) AS node,
-         CAST(('0x' || substr(md5(CAST(k AS VARCHAR) || ':'
-                 || CAST(cents AS VARCHAR)), 1, 12)) AS BIGINT) AS f
-  FROM allr
-),
-leaf AS (
-  SELECT side, node, CAST((1 + sum(f)) % {P} AS BIGINT) AS v
-  FROM fp GROUP BY 1, 2
-),
-spine AS (SELECT CAST(t.i AS INT) AS node FROM unnest(range(256)) AS t(i)),
-sides AS (SELECT 'a' AS side UNION ALL SELECT 'b'),
-lv8 AS (
-  SELECT s.side, sp.node, coalesce(l.v, 0) AS v
-  FROM sides s CROSS JOIN spine sp
-  LEFT JOIN leaf l ON l.side = s.side AND l.node = sp.node
-)""".format(P=P)
-    ]
-    for lv in range(7, -1, -1):
-        parts.append(
-            f"""
-lv{lv} AS (
-  SELECT side, CAST(node // 2 AS INT) AS node,
-         CAST((2 * coalesce(max(CASE WHEN node % 2 = 0 THEN v END), 0)
-             + 3 * coalesce(max(CASE WHEN node % 2 = 1 THEN v END), 0))
-             % {P} AS BIGINT) AS v
-  FROM lv{lv + 1} GROUP BY 1, 2
-)"""
-        )
-    tree_union = "\n  UNION ALL ".join(
-        f"SELECT {lv} AS level, side, node, v FROM lv{lv}" for lv in range(9)
-    )
-    parts.append(
-        f"""
-tree AS (
-  {tree_union}
-),
-cmp AS (
-  SELECT level, node,
-         max(CASE WHEN side = 'a' THEN v END) AS va,
-         max(CASE WHEN side = 'b' THEN v END) AS vb
-  FROM tree GROUP BY 1, 2
-),
-delta AS (
-  SELECT CAST(count(CASE WHEN dn = '0' THEN 1 END) AS BIGINT) AS n_deleted,
-         CAST(count(CASE WHEN dn = '1' THEN 1 END) AS BIGINT) AS n_modified,
-         CAST(count(*) AS BIGINT) AS n_rows_a
-  FROM base
-)"""
-    )
-    body = (
-        "WITH " + ",".join(parts) + """
-SELECT CAST(cmp.level AS INT) AS level,
-       CAST(count(*) AS BIGINT) AS n_nodes,
-       CAST(count(CASE WHEN cmp.va <> cmp.vb THEN 1 END) AS BIGINT)
-         AS n_diff,
-       d.n_rows_a, d.n_deleted, d.n_modified
-FROM cmp CROSS JOIN delta d
-GROUP BY 1, 4, 5, 6
-"""
-    )
-    return body
-
-
-@register("q_merkle_diff", _merkle_sql())
-def q_merkle_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Merkle anti-entropy audit (Merkle 1987; the Dynamo/Cassandra
-    repair protocol): two snapshots of the orders table — A as stored, B
-    after a deterministic md5-selected delta (1/16 of keys deleted, 1/16
-    price-bumped by $1) — are summarized as 9-level binary hash trees
-    over 256 key-range leaves (leaf = order-insensitive sum of 48-bit row
-    fingerprints, parent = (2*left + 3*right) mod 2^31-1 so left/right
-    swaps change the parent). The per-level diff count is the sync
-    workload ledger: a replica pair exchanges O(diff-paths * depth)
-    hashes instead of the full table, and dirty leaves at level 8 bound
-    the rows that must ship. Root disagreement (level 0, n_diff = 1) is
-    the one-hash liveness check. n_deleted/n_modified carries make the
-    expected dirty-leaf ceiling auditable in-row.
-
-    Scale plan: row fingerprints and leaf sums are one map-side-combined
-    groupBy per side (the 256-leaf spine is a broadcast dimension); the
-    8 combine levels operate on <= 512-row frames — tree size is fixed
-    regardless of table size, THE Merkle property. 48-bit fingerprints
-    keep the per-leaf sum under 2^63 up to ~10^14 rows/leaf."""
-    orders = load(spark, sf_dir, "orders")
-    P = F.lit(_MERKLE_P)
-    base = orders.select(
-        F.col("o_orderkey").alias("k"),
-        F.floor(F.col("o_totalprice") * 100 + 0.5).cast("long").alias("cents"),
-        F.substring(
-            F.md5(F.concat(F.col("o_orderkey").cast("string"), F.lit(":d"))), 1, 1
-        ).alias("dn"),
-    )
-    allr = base.select(F.lit("a").alias("side"), "k", "cents").unionAll(
-        base.filter(F.col("dn") != "0").select(
-            F.lit("b").alias("side"),
-            "k",
-            F.when(F.col("dn") == "1", F.col("cents") + 100)
-            .otherwise(F.col("cents"))
-            .alias("cents"),
-        )
-    )
-    fp = allr.select(
-        "side",
-        (F.col("k") % 256).cast("int").alias("node"),
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.col("k").cast("string"),
-                        F.lit(":"),
-                        F.col("cents").cast("string"),
-                    )
-                ),
-                1,
-                12,
-            ),
-            16,
-            10,
-        ).cast("long").alias("f"),
-    )
-    leaf = fp.groupBy("side", "node").agg(
-        ((F.sum("f") + 1) % P).cast("long").alias("v")
-    )
-    spine = spark.range(256).select(F.col("id").cast("int").alias("node"))
-    sides = spark.createDataFrame([("a",), ("b",)], "side string")
-    lv = (
-        sides.crossJoin(spine)
-        .join(F.broadcast(leaf), ["side", "node"], "left")
-        .select("side", "node", F.coalesce("v", F.lit(0)).alias("v"))
-    )
-    frames = [lv.select(F.lit(8).alias("level"), "side", "node", "v")]
-    for level in range(7, -1, -1):
-        lv = lv.groupBy("side", F.shiftright("node", 1).alias("node")).agg(
-            (
-                (
-                    2 * F.coalesce(
-                        F.max(F.when(F.col("node") % 2 == 0, F.col("v"))), F.lit(0)
-                    )
-                    + 3 * F.coalesce(
-                        F.max(F.when(F.col("node") % 2 == 1, F.col("v"))), F.lit(0)
-                    )
-                )
-                % P
-            ).cast("long").alias("v")
-        )
-        frames.append(lv.select(F.lit(level).alias("level"), "side", "node", "v"))
-    tree = frames[0]
-    for fr in frames[1:]:
-        tree = tree.unionAll(fr)
-    cmp = tree.groupBy("level", "node").agg(
-        F.max(F.when(F.col("side") == "a", F.col("v"))).alias("va"),
-        F.max(F.when(F.col("side") == "b", F.col("v"))).alias("vb"),
-    )
-    delta = base.agg(
-        F.count(F.when(F.col("dn") == "0", 1)).cast("long").alias("n_deleted"),
-        F.count(F.when(F.col("dn") == "1", 1)).cast("long").alias("n_modified"),
-        F.count(F.lit(1)).cast("long").alias("n_rows_a"),
-    )
-    return (
-        cmp.groupBy("level")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_nodes"),
-            F.count(F.when(F.col("va") != F.col("vb"), 1))
-            .cast("long")
-            .alias("n_diff"),
-        )
-        .crossJoin(F.broadcast(delta))
-        .select(
-            F.col("level").cast("int").alias("level"),
-            "n_nodes", "n_diff", "n_rows_a", "n_deleted", "n_modified",
-        )
-    )
-
-
-_HRW_SQL = """
-WITH nodes AS (SELECT CAST(t.i AS INT) AS node FROM unnest(range(10)) AS t(i)),
-j AS (
-  SELECT o.o_orderkey AS k, n.node,
-         md5(CAST(o.o_orderkey AS VARCHAR) || '#' || CAST(n.node AS VARCHAR)) AS h
-  FROM orders o CROSS JOIN nodes n
-),
-own AS (
-  SELECT k,
-         arg_max(CASE WHEN node < 8 THEN node END,
-                 CASE WHEN node < 8 THEN h END) AS n8,
-         arg_max(node, h) AS n10
-  FROM j GROUP BY k
-),
-both_s AS (
-  SELECT 'hrw' AS scheme, k, n8, n10 FROM own
-  UNION ALL
-  SELECT 'mod', o_orderkey, CAST(o_orderkey % 8 AS INT),
-         CAST(o_orderkey % 10 AS INT)
-  FROM orders
-),
-l10 AS (
-  SELECT scheme, n10 AS node, CAST(count(*) AS BIGINT) AS c
-  FROM both_s GROUP BY 1, 2
-),
-lb AS (
-  SELECT scheme, CAST(max(c) AS BIGINT) AS max_load10,
-         CAST(min(c) AS BIGINT) AS min_load10,
-         CAST(count(*) AS BIGINT) AS n_nodes10
-  FROM l10 GROUP BY 1
-),
-mv AS (
-  SELECT scheme, CAST(count(*) AS BIGINT) AS n_keys,
-         CAST(count(CASE WHEN n8 <> n10 THEN 1 END) AS BIGINT) AS n_moved,
-         CAST(count(CASE WHEN n8 <> n10 AND n10 >= 8 THEN 1 END) AS BIGINT)
-           AS n_to_new,
-         CAST(count(CASE WHEN n8 <> n10 AND n10 < 8 THEN 1 END) AS BIGINT)
-           AS n_cross_old
-  FROM both_s GROUP BY 1
-)
-SELECT mv.scheme, mv.n_keys, mv.n_moved, mv.n_to_new, mv.n_cross_old,
-       round(CAST(mv.n_moved AS DOUBLE) / mv.n_keys, 6) AS remap_pct,
-       lb.max_load10, lb.min_load10, lb.n_nodes10
-FROM mv JOIN lb USING (scheme)
-"""
-
-
-@register("q_rendezvous_hashing", _HRW_SQL)
-def q_rendezvous_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Rendezvous (highest-random-weight) hashing audit (Thaler &
-    Ravishankar 1996), the ringless alternative to q_consistent_hashing:
-    each order key is owned by argmax over nodes of md5(key#node), first
-    under 8 nodes then under 10, and the audit measures the resharding
-    bill — HRW moves only the ~2/10 of keys whose new-node weight wins
-    (all of them TO the new nodes, n_cross_old = 0 is the defining
-    invariant, an exact assert surface in-row) while the mod-N strawman
-    reshuffles ~80% of keys, the classic cache-stampede mistake. Load
-    bounds under the 10-node config sit beside the movement ledger
-    because HRW's other selling point is per-key independence (balance
-    without vnode tuning). md5-weight comparison is plain string order,
-    identical on both engines; no ties (md5 injective on this domain).
-
-    Scale plan: the node table is a 10-row broadcast spine (whitelisted);
-    ownership is a per-key max-by collapsed map-side into one groupBy —
-    no corpus self-join, one pass, constant output."""
-    orders = load(spark, sf_dir, "orders")
-    nodes = spark.range(10).select(F.col("id").cast("int").alias("node"))
-    j = orders.crossJoin(F.broadcast(nodes)).select(
-        F.col("o_orderkey").alias("k"),
-        "node",
-        F.md5(
-            F.concat(
-                F.col("o_orderkey").cast("string"),
-                F.lit("#"),
-                F.col("node").cast("string"),
-            )
-        ).alias("h"),
-    )
-    own = j.groupBy("k").agg(
-        F.max_by(
-            F.when(F.col("node") < 8, F.col("node")),
-            F.when(F.col("node") < 8, F.col("h")),
-        ).alias("n8"),
-        F.max_by("node", "h").alias("n10"),
-    )
-    both_s = own.select(F.lit("hrw").alias("scheme"), "k", "n8", "n10").unionAll(
-        orders.select(
-            F.lit("mod").alias("scheme"),
-            F.col("o_orderkey").alias("k"),
-            (F.col("o_orderkey") % 8).cast("int").alias("n8"),
-            (F.col("o_orderkey") % 10).cast("int").alias("n10"),
-        )
-    )
-    l10 = both_s.groupBy("scheme", "n10").agg(
-        F.count(F.lit(1)).cast("long").alias("c")
-    )
-    lb = l10.groupBy("scheme").agg(
-        F.max("c").cast("long").alias("max_load10"),
-        F.min("c").cast("long").alias("min_load10"),
-        F.count(F.lit(1)).cast("long").alias("n_nodes10"),
-    )
-    moved = F.count(F.when(F.col("n8") != F.col("n10"), 1))
-    mv = both_s.groupBy("scheme").agg(
-        F.count(F.lit(1)).cast("long").alias("n_keys"),
-        moved.cast("long").alias("n_moved"),
-        F.count(F.when((F.col("n8") != F.col("n10")) & (F.col("n10") >= 8), 1))
-        .cast("long")
-        .alias("n_to_new"),
-        F.count(F.when((F.col("n8") != F.col("n10")) & (F.col("n10") < 8), 1))
-        .cast("long")
-        .alias("n_cross_old"),
-        F.round(moved.cast("double") / F.count(F.lit(1)), 6).alias("remap_pct"),
-    )
-    return mv.join(F.broadcast(lb), "scheme").select(
-        "scheme", "n_keys", "n_moved", "n_to_new", "n_cross_old",
-        "remap_pct", "max_load10", "min_load10", "n_nodes10",
-    )
-
-
-# --------------------------------------------------------------------------
 # Round 4: storage-layout advisor trio — columnar encoding advisor
 # (plain/dict/RLE byte model, parquet-style per-page runs), space-filling
 # curve file layout (Hilbert vs Z-order vs row-major zonemap quality), and
@@ -13375,592 +12974,6 @@ def q_dow_seasonality(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Round 4: distributed-data-systems trio — CDC log apply (Debezium-style
-# last-writer-wins fold with tombstones), an at-least-once delivery
-# gap/duplicate ledger, and G-counter CRDT hypercube-gossip convergence.
-# --------------------------------------------------------------------------
-
-_CDC_SQL = """
-WITH base AS (
-  SELECT o_orderkey AS k, o_orderstatus AS status,
-         CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS cents,
-         substr(md5('u:' || CAST(o_orderkey AS VARCHAR)), 1, 1) AS uh,
-         substr(md5('d:' || CAST(o_orderkey AS VARCHAR)), 1, 1) AS dh
-  FROM orders
-),
-log AS (
-  SELECT k, status, 1 AS seq, 'insert' AS op, cents AS val FROM base
-  UNION ALL
-  SELECT k, status, 2, 'update', cents + 100 FROM base WHERE uh < '6'
-  UNION ALL
-  SELECT k, status, 3, 'delete', NULL FROM base WHERE dh < '2'
-),
-last AS (
-  -- last_val folds over coalesce(val, -1): DuckDB's arg_max SKIPS rows
-  -- whose value arg is NULL (it would return the pre-delete value for a
-  -- tombstoned key) while Spark's max_by returns the NULL itself — the
-  -- sentinel + nullif makes both engines agree that a tombstoned key's
-  -- last_val is NULL (round-4 ADVICE).
-  SELECT k, status,
-         arg_max(op, seq) AS last_op,
-         nullif(arg_max(coalesce(val, -1), seq), -1) AS last_val,
-         CAST(count(*) AS BIGINT) AS n_ops
-  FROM log GROUP BY 1, 2
-)
-SELECT status,
-       CAST(count(*) AS BIGINT) AS n_keys,
-       CAST(sum(n_ops) AS BIGINT) AS n_ops,
-       CAST(count(CASE WHEN last_op <> 'delete' THEN 1 END) AS BIGINT)
-         AS n_live,
-       CAST(count(CASE WHEN last_op = 'delete' THEN 1 END) AS BIGINT)
-         AS n_tombstoned,
-       CAST(sum(n_ops) - count(*) AS BIGINT) AS n_superseded,
-       CAST(sum(CASE WHEN last_op <> 'delete' THEN last_val END) AS BIGINT)
-         AS live_cents,
-       CAST(count(CASE WHEN last_op = 'update' THEN 1 END) AS BIGINT)
-         AS n_live_updated
-FROM last GROUP BY 1
-"""
-
-
-@register("q_cdc_apply", _CDC_SQL)
-def q_cdc_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CDC log apply — the Debezium-to-lakehouse merge in its exact
-    form: every order key emits a deterministic change stream (insert at
-    seq 1; md5-selected 6/16 get a +$1 update at seq 2; 2/16 a delete at
-    seq 3) and the fold is last-writer-wins by max seq (arg_max /
-    max_by, the single-pass formulation — no window, no sort), with
-    deletes becoming tombstones that drop the key from the live set.
-    NULL-handling note: DuckDB's arg_max skips NULL value args while
-    Spark's max_by does not, so last_val folds over a -1 sentinel +
-    nullif in BOTH engines — tombstoned keys get last_val = NULL
-    everywhere, making the column safe to surface directly.
-    The per-status rollup ships the full conservation ledger: n_ops =
-    n_keys + updates + deletes, n_superseded = ops the fold discarded,
-    and live_cents = the exact post-merge balance — what a MERGE INTO
-    audit compares against the source system after every sync.
-
-    Scale plan: the log is a projection union (no joins); the fold is
-    ONE map-side-combinable groupBy on the key — the shape that absorbs
-    10^12-row change streams; the rollup is 3 rows."""
-    orders = load(spark, sf_dir, "orders")
-    base = orders.select(
-        F.col("o_orderkey").alias("k"),
-        F.col("o_orderstatus").alias("status"),
-        F.floor(F.col("o_totalprice") * 100 + 0.5).cast("long").alias("cents"),
-        F.substring(
-            F.md5(F.concat(F.lit("u:"), F.col("o_orderkey").cast("string"))), 1, 1
-        ).alias("uh"),
-        F.substring(
-            F.md5(F.concat(F.lit("d:"), F.col("o_orderkey").cast("string"))), 1, 1
-        ).alias("dh"),
-    )
-    log = (
-        base.select(
-            "k", "status", F.lit(1).alias("seq"), F.lit("insert").alias("op"),
-            F.col("cents").alias("val"),
-        )
-        .unionAll(
-            base.filter(F.col("uh") < "6").select(
-                "k", "status", F.lit(2).alias("seq"),
-                F.lit("update").alias("op"),
-                (F.col("cents") + 100).alias("val"),
-            )
-        )
-        .unionAll(
-            base.filter(F.col("dh") < "2").select(
-                "k", "status", F.lit(3).alias("seq"),
-                F.lit("delete").alias("op"),
-                F.lit(None).cast("long").alias("val"),
-            )
-        )
-    )
-    # NULL-handling asymmetry (round-4 ADVICE): Spark's max_by returns the
-    # val AT max seq (NULL for a tombstone) but DuckDB's arg_max skips
-    # NULL-valued rows (returning the pre-delete value). Folding over a -1
-    # sentinel + nullif pins both engines to "tombstoned key -> last_val
-    # NULL", so last_val is safe to surface directly in future columns.
-    last = log.groupBy("k", "status").agg(
-        F.max_by("op", "seq").alias("last_op"),
-        F.nullif(
-            F.max_by(F.coalesce("val", F.lit(-1)), "seq"), F.lit(-1)
-        ).alias("last_val"),
-        F.count(F.lit(1)).cast("long").alias("n_ops"),
-    )
-    return last.groupBy("status").agg(
-        F.count(F.lit(1)).cast("long").alias("n_keys"),
-        F.sum("n_ops").cast("long").alias("n_ops"),
-        F.count(F.when(F.col("last_op") != "delete", 1)).cast("long").alias("n_live"),
-        F.count(F.when(F.col("last_op") == "delete", 1))
-        .cast("long")
-        .alias("n_tombstoned"),
-        (F.sum("n_ops") - F.count(F.lit(1))).cast("long").alias("n_superseded"),
-        F.sum(F.when(F.col("last_op") != "delete", F.col("last_val")))
-        .cast("long")
-        .alias("live_cents"),
-        F.count(F.when(F.col("last_op") == "update", 1))
-        .cast("long")
-        .alias("n_live_updated"),
-    )
-
-
-_DELIVERY_SQL = """
-WITH msg AS (
-  SELECT CAST(event_id % 16 AS BIGINT) AS producer,
-         CAST(event_id // 16 AS BIGINT) AS seq,
-         substr(md5('dlv:' || CAST(event_id AS VARCHAR)), 1, 1) AS h
-  FROM events
-),
-delivered AS (
-  SELECT producer, seq FROM msg WHERE h <> '0'
-  UNION ALL
-  SELECT producer, seq FROM msg WHERE h = '1'
-)
-SELECT producer,
-       CAST(count(*) AS BIGINT) AS n_received,
-       CAST(count(DISTINCT seq) AS BIGINT) AS n_distinct,
-       CAST(count(*) - count(DISTINCT seq) AS BIGINT) AS n_dupes,
-       CAST(min(seq) AS BIGINT) AS lo_seq,
-       CAST(max(seq) AS BIGINT) AS hi_seq,
-       CAST(max(seq) - min(seq) + 1 - count(DISTINCT seq) AS BIGINT)
-         AS n_missing,
-       round(CAST(count(DISTINCT seq) AS DOUBLE)
-             / (max(seq) - min(seq) + 1), 6) AS delivery_rate
-FROM delivered GROUP BY 1
-"""
-
-
-@register("q_delivery_audit", _DELIVERY_SQL)
-def q_delivery_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """At-least-once delivery audit — the Kafka-consumer ledger that
-    separates 'we got everything' from 'we got everything once': events
-    become (producer = id%16, seq = id//16) messages with a
-    deterministic md5 fault model (1/16 of messages dropped, another
-    1/16 redelivered), and per producer the audit counts receipts,
-    distinct sequences, duplicates (received - distinct), and the
-    sequence-range gap count (hi - lo + 1 - distinct) — the exact
-    arithmetic a consumer group runs against its committed offsets to
-    decide between replay and dedup. All integers; the delivery rate is
-    one rounded division.
-
-    Scale plan: projection + one map-side-combinable groupBy per
-    producer with a distinct-count — the canonical high-cardinality
-    dedup-ledger shape; no joins at all."""
-    ev = load(spark, sf_dir, "events")
-    msg = ev.select(
-        (F.col("event_id") % 16).cast("long").alias("producer"),
-        F.floor(F.col("event_id") / 16).cast("long").alias("seq"),
-        F.substring(
-            F.md5(F.concat(F.lit("dlv:"), F.col("event_id").cast("string"))), 1, 1
-        ).alias("h"),
-    )
-    delivered = msg.filter(F.col("h") != "0").select("producer", "seq").unionAll(
-        msg.filter(F.col("h") == "1").select("producer", "seq")
-    )
-    span = F.max("seq") - F.min("seq") + 1
-    return delivered.groupBy("producer").agg(
-        F.count(F.lit(1)).cast("long").alias("n_received"),
-        F.countDistinct("seq").cast("long").alias("n_distinct"),
-        (F.count(F.lit(1)) - F.countDistinct("seq"))
-        .cast("long")
-        .alias("n_dupes"),
-        F.min("seq").cast("long").alias("lo_seq"),
-        F.max("seq").cast("long").alias("hi_seq"),
-        (span - F.countDistinct("seq")).cast("long").alias("n_missing"),
-        F.round(F.countDistinct("seq").cast("double") / span, 6).alias(
-            "delivery_rate"
-        ),
-    )
-
-
-def _gossip_sql() -> str:
-    blocks = []
-    prev = "st0"
-    for g, mask in ((1, 1), (2, 2), (3, 4)):
-        blocks.append(
-            f"""
-st{g} AS (
-  SELECT replica, owner, key, cnt FROM {prev}
-  UNION
-  SELECT xor(replica, {mask}), owner, key, cnt FROM {prev}
-)""".strip()
-        )
-        prev = f"st{g}"
-    return ",\n".join(blocks)
-
-
-_GOSSIP_SQL = f"""
-WITH inc AS (
-  SELECT CAST(event_id % 8 AS BIGINT) AS owner, event_type AS key,
-         CAST(count(*) AS BIGINT) AS cnt
-  FROM events GROUP BY 1, 2
-),
-st0 AS (SELECT owner AS replica, owner, key, cnt FROM inc),
-{_gossip_sql()},
-tot AS (SELECT CAST(sum(cnt) AS BIGINT) AS total FROM inc),
-rounds AS (
-  SELECT 0 AS round, replica, owner, key, cnt FROM st0
-  UNION ALL SELECT 1, replica, owner, key, cnt FROM st1
-  UNION ALL SELECT 2, replica, owner, key, cnt FROM st2
-  UNION ALL SELECT 3, replica, owner, key, cnt FROM st3
-)
-SELECT r.round, r.replica,
-       CAST(count(DISTINCT r.owner) AS BIGINT) AS n_owners_known,
-       CAST(sum(r.cnt) AS BIGINT) AS known_count,
-       t.total,
-       CAST(t.total - sum(r.cnt) AS BIGINT) AS deviation,
-       CASE WHEN count(DISTINCT r.owner) = 8 THEN 1 ELSE 0 END AS converged
-FROM rounds r CROSS JOIN tot t
-GROUP BY 1, 2, 5
-"""
-
-
-@register("q_crdt_gossip", _GOSSIP_SQL)
-def q_crdt_gossip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """G-counter CRDT convergence under hypercube gossip (Shapiro 2011
-    state-based CRDTs; the dimension-exchange schedule): 8 replicas each
-    start knowing only their OWN per-event-type increment counts
-    (owner = event_id % 8), and in gossip round g every replica merges
-    states with its partner replica XOR 2^(g-1) — the join-semilattice
-    union, which for a G-counter is just set union of per-owner vectors
-    (idempotent, commutative, associative, so redelivery and reordering
-    cannot corrupt it). After exactly log2(8) = 3 rounds every replica
-    holds the full vector: the ledger shows n_owners_known and the
-    deviation from the true total shrinking to ZERO per replica per
-    round — eventual consistency with a provable round bound, the
-    arithmetic behind every gossip-replicated counter. All counts exact
-    BIGINTs.
-
-    Scale plan: state frames are (replicas x owners x key-domain) sized
-    — tiny and bounded; each round is one projection + union-distinct;
-    the corpus is touched once by the increment groupBy. 1-row total
-    carry whitelisted."""
-    ev = load(spark, sf_dir, "events")
-    inc = ev.groupBy(
-        (F.col("event_id") % 8).cast("long").alias("owner"),
-        F.col("event_type").alias("key"),
-    ).agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-    st = inc.select(F.col("owner").alias("replica"), "owner", "key", "cnt")
-    frames = [st.withColumn("round", F.lit(0))]
-    for g, mask in ((1, 1), (2, 2), (3, 4)):
-        st = (
-            st.select("replica", "owner", "key", "cnt")
-            .union(
-                st.select(
-                    F.col("replica").bitwiseXOR(mask).alias("replica"),
-                    "owner", "key", "cnt",
-                )
-            )
-            .distinct()
-            .localCheckpoint()
-        )
-        frames.append(st.withColumn("round", F.lit(g)))
-    rounds = frames[0]
-    for fr in frames[1:]:
-        rounds = rounds.unionAll(fr)
-    tot = inc.agg(F.sum("cnt").cast("long").alias("total"))
-    return (
-        rounds.groupBy("round", "replica")
-        .agg(
-            F.countDistinct("owner").cast("long").alias("n_owners_known"),
-            F.sum("cnt").cast("long").alias("known_count"),
-        )
-        .crossJoin(F.broadcast(tot))
-        .select(
-            F.col("round").cast("int").alias("round"),
-            "replica",
-            "n_owners_known",
-            "known_count",
-            "total",
-            (F.col("total") - F.col("known_count")).cast("long").alias("deviation"),
-            F.when(F.col("n_owners_known") == 8, 1).otherwise(0).alias("converged"),
-        )
-    )
-
-
-# --------------------------------------------------------------------------
-# Round 4: LLM training-infra trio — GRPO group-relative advantages,
-# MoE top-2 routing with capacity-factor overflow drops, and checkpoint
-# parameter sharding (zigzag vs round-robin balance audit).
-# --------------------------------------------------------------------------
-
-_GRPO_SQL = """
-WITH ro AS (
-  SELECT doc_id, CAST(doc_id // 8 AS BIGINT) AS pid,
-         CAST(('0x' || substr(md5('rw:' || CAST(doc_id AS VARCHAR)), 1, 2))
-              AS BIGINT) AS reward
-  FROM documents
-),
-grp AS (
-  SELECT pid, CAST(count(*) AS BIGINT) AS n, CAST(sum(reward) AS BIGINT) AS s,
-         CAST(sum(reward * reward) AS BIGINT) AS ss
-  FROM ro GROUP BY 1
-)
-SELECT r.doc_id, r.pid, r.reward, g.n, g.s, g.ss,
-       CAST(g.n * r.reward - g.s AS BIGINT) AS adv_num,
-       CASE WHEN g.n * g.ss > g.s * g.s THEN
-         round((g.n * r.reward - g.s)
-               / (g.n * sqrt((g.ss - CAST(g.s AS DOUBLE) * g.s / g.n) / g.n)),
-               6)
-       END AS advantage
-FROM ro r JOIN grp g USING (pid)
-"""
-
-
-@register("q_grpo_advantage", _GRPO_SQL)
-def q_grpo_advantage(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Group-relative advantage computation (the GRPO/RLOO whitening
-    step of modern RLHF, Shao 2024): documents form 8-rollout groups per
-    prompt (pid = doc_id div 8) with deterministic md5 byte rewards, and
-    each rollout's advantage is (r - mean)/std within ITS OWN group —
-    the critic-free baseline that makes the estimator zero-mean by
-    construction: adv_num = n*r - S is the EXACT integer numerator and
-    sums to zero per group (the replica holds the identity), while the
-    normalized advantage is one deterministic chain over exact
-    sufficient stats through a correctly-rounded sqrt. Degenerate
-    all-equal groups get an honest NULL (the n*SS > S^2 guard) instead
-    of an engine-dependent inf — the whitening a trainer feeds to the
-    policy update, with the audit trail in-row.
-
-    Scale plan: one map-side groupBy for the sufficient stats, one
-    equi-join back on pid — rollout groups are the join key, so the
-    shuffle is the group id, never the corpus pairwise."""
-    docs = load_docs(spark, sf_dir)
-    ro = docs.select(
-        "doc_id",
-        F.floor(F.col("doc_id") / 8).cast("long").alias("pid"),
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("rw:"), F.col("doc_id").cast("string"))), 1, 2
-            ),
-            16,
-            10,
-        ).cast("long").alias("reward"),
-    )
-    grp = ro.groupBy("pid").agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("reward").cast("long").alias("s"),
-        F.sum(F.col("reward") * F.col("reward")).cast("long").alias("ss"),
-    )
-    std = F.sqrt(
-        (F.col("ss") - F.col("s").cast("double") * F.col("s") / F.col("n"))
-        / F.col("n")
-    )
-    return ro.join(grp, "pid").select(
-        "doc_id", "pid", "reward", "n", "s", "ss",
-        (F.col("n") * F.col("reward") - F.col("s")).cast("long").alias("adv_num"),
-        F.when(
-            F.col("n") * F.col("ss") > F.col("s") * F.col("s"),
-            F.round(
-                (F.col("n") * F.col("reward") - F.col("s"))
-                / (F.col("n") * std),
-                6,
-            ),
-        ).alias("advantage"),
-    )
-
-
-_MOE_SQL = """
-WITH tok AS (SELECT event_id AS t FROM events),
-ex AS (SELECT CAST(e.i AS BIGINT) AS expert FROM unnest(range(8)) AS e(i)),
-gate AS (
-  SELECT t.t, ex.expert,
-         md5('g:' || CAST(t.t AS VARCHAR) || ':'
-             || CAST(ex.expert AS VARCHAR)) AS g
-  FROM tok t CROSS JOIN ex
-),
-pick AS (
-  SELECT t, expert, g,
-         row_number() OVER (PARTITION BY t ORDER BY g DESC, expert) AS choice
-  FROM gate QUALIFY choice <= 2
-),
-cap AS (
-  SELECT CAST(ceil(2 * count(*) * 1.25 / 8) AS BIGINT) AS capacity,
-         CAST(count(*) AS BIGINT) AS n_tokens
-  FROM tok
-),
-ranked AS (
-  SELECT p.t, p.expert, p.choice,
-         row_number() OVER (PARTITION BY p.expert ORDER BY p.g DESC, p.t)
-           AS slot
-  FROM pick p
-)
-SELECT r.expert,
-       CAST(count(*) AS BIGINT) AS n_routed,
-       CAST(count(CASE WHEN r.slot <= c.capacity THEN 1 END) AS BIGINT)
-         AS n_kept,
-       CAST(count(CASE WHEN r.slot > c.capacity THEN 1 END) AS BIGINT)
-         AS n_dropped,
-       CAST(count(CASE WHEN r.choice = 1 THEN 1 END) AS BIGINT) AS n_top1,
-       c.capacity, c.n_tokens,
-       round(CAST(count(*) AS DOUBLE) / (2 * c.n_tokens), 6) AS load_share
-FROM ranked r CROSS JOIN cap c
-GROUP BY 1, 6, 7
-"""
-
-
-@register("q_moe_routing", _MOE_SQL)
-def q_moe_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mixture-of-experts routing audit (Shazeer 2017 top-k gating with
-    the Switch/GShard capacity factor): every token picks its top-2 of 8
-    experts by md5 gate score (strict order, expert tie pin), expert
-    capacity is ceil(2N * 1.25 / 8), and tokens beyond an expert's
-    capacity — ranked by gate score within the expert, token tie pin —
-    are DROPPED, exactly the overflow semantics that make capacity
-    factor a quality/cost dial. The per-expert ledger (routed / kept /
-    dropped / top-1 share / exact load share of the 2N assignment mass)
-    is the balance audit that decides whether the router needs an
-    auxiliary loss: md5 gates are near-uniform, so loads should sit near
-    1/8 with few drops — the replica checks the global drop arithmetic
-    and that every expert's load lands inside the uniform band.
-
-    Scale plan: the 8-expert fanout is a broadcast spine collapsed by a
-    per-token top-2 window (8-row frames); capacity ranking is one
-    window per expert partition; the rest is a 1-row capacity carry
-    (whitelisted)."""
-    ev = load(spark, sf_dir, "events")
-    tok = ev.select(F.col("event_id").alias("t"))
-    ex = spark.range(8).select(F.col("id").cast("long").alias("expert"))
-    gate = tok.crossJoin(F.broadcast(ex)).select(
-        "t", "expert",
-        F.md5(
-            F.concat(
-                F.lit("g:"), F.col("t").cast("string"), F.lit(":"),
-                F.col("expert").cast("string"),
-            )
-        ).alias("g"),
-    )
-    wt = Window.partitionBy("t").orderBy(F.desc("g"), F.asc("expert"))
-    pick = gate.select(
-        "t", "expert", "g", F.row_number().over(wt).alias("choice")
-    ).filter(F.col("choice") <= 2)
-    cap = tok.agg(
-        F.ceil(2 * F.count(F.lit(1)) * 1.25 / 8).cast("long").alias("capacity"),
-        F.count(F.lit(1)).cast("long").alias("n_tokens"),
-    )
-    we = Window.partitionBy("expert").orderBy(F.desc("g"), F.asc("t"))
-    ranked = pick.select(
-        "t", "expert", "choice", F.row_number().over(we).alias("slot")
-    )
-    return (
-        ranked.crossJoin(F.broadcast(cap))
-        .groupBy("expert", "capacity", "n_tokens")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_routed"),
-            F.count(F.when(F.col("slot") <= F.col("capacity"), 1))
-            .cast("long")
-            .alias("n_kept"),
-            F.count(F.when(F.col("slot") > F.col("capacity"), 1))
-            .cast("long")
-            .alias("n_dropped"),
-            F.count(F.when(F.col("choice") == 1, 1)).cast("long").alias("n_top1"),
-            F.round(
-                F.count(F.lit(1)).cast("double") / (2 * F.col("n_tokens")), 6
-            ).alias("load_share"),
-        )
-        .select(
-            "expert", "n_routed", "n_kept", "n_dropped", "n_top1",
-            "capacity", "n_tokens", "load_share",
-        )
-    )
-
-
-_SHARD_SQL = """
-WITH tensors AS (
-  SELECT doc_id, CAST(n_chars AS BIGINT) AS bytes FROM documents
-),
-ranked AS (
-  SELECT doc_id, bytes,
-         row_number() OVER (ORDER BY bytes DESC, doc_id) - 1 AS rk
-  FROM tensors
-),
-assigned AS (
-  SELECT 'round_robin' AS strategy, CAST(rk % 8 AS BIGINT) AS shard,
-         doc_id, bytes
-  FROM ranked
-  UNION ALL
-  SELECT 'zigzag',
-         CAST(CASE WHEN rk % 16 < 8 THEN rk % 16 ELSE 15 - rk % 16 END
-              AS BIGINT),
-         doc_id, bytes
-  FROM ranked
-),
-tot AS (SELECT CAST(sum(bytes) AS BIGINT) AS total FROM tensors),
-per AS (
-  SELECT strategy, shard, CAST(count(*) AS BIGINT) AS n_tensors,
-         CAST(sum(bytes) AS BIGINT) AS shard_bytes
-  FROM assigned GROUP BY 1, 2
-)
-SELECT p.strategy, p.shard, p.n_tensors, p.shard_bytes, t.total,
-       CAST(8 * p.shard_bytes - t.total AS BIGINT) AS dev_num,
-       round(CAST(8 * p.shard_bytes - t.total AS DOUBLE) / t.total, 6)
-         AS dev_frac,
-       CAST(max(p.shard_bytes) OVER (PARTITION BY p.strategy)
-            - min(p.shard_bytes) OVER (PARTITION BY p.strategy) AS BIGINT)
-         AS spread
-FROM per p CROSS JOIN tot t
-"""
-
-
-@register("q_checkpoint_shards", _SHARD_SQL)
-def q_checkpoint_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Checkpoint parameter-sharding balance audit (the ZeRO/FSDP
-    question: which of 8 shards gets which tensor): tensors (documents,
-    bytes = n_chars) rank by size descending with id pins, then two
-    deterministic placements compete — plain round-robin rk % 8 vs
-    ZIGZAG (boustrophedon: 0..7 then 7..0), the standard trick that
-    pairs a big tensor with a small one in each sweep so shard sizes
-    stay balanced even when sizes are skewed. Per (strategy, shard) the
-    ledger ships exact bytes, the deviation 8*bytes - total as a
-    cross-multiplied integer against the ideal, and the strategy-level
-    max-min spread as a window carry — the replica asserts zigzag's
-    spread never exceeds round-robin's on the sorted sequence.
-
-    Scale plan: one global size rank (the dist_dense_rank shape at
-    production scale), projection placement, one groupBy; the window
-    spread runs on the 16-row ledger. 1-row total carry whitelisted."""
-    docs = load_docs(spark, sf_dir)
-    tensors = docs.select("doc_id", F.col("n_chars").cast("long").alias("bytes"))
-    ranked = tensors.select(
-        "doc_id", "bytes",
-        (
-            F.row_number().over(Window.orderBy(F.desc("bytes"), F.asc("doc_id")))
-            - 1
-        ).alias("rk"),
-    )
-    rr = ranked.select(
-        F.lit("round_robin").alias("strategy"),
-        (F.col("rk") % 8).cast("long").alias("shard"),
-        "doc_id", "bytes",
-    )
-    fold = F.col("rk") % 16
-    zz = ranked.select(
-        F.lit("zigzag").alias("strategy"),
-        F.when(fold < 8, fold).otherwise(15 - fold).cast("long").alias("shard"),
-        "doc_id", "bytes",
-    )
-    assigned = rr.unionAll(zz)
-    tot = tensors.agg(F.sum("bytes").cast("long").alias("total"))
-    per = assigned.groupBy("strategy", "shard").agg(
-        F.count(F.lit(1)).cast("long").alias("n_tensors"),
-        F.sum("bytes").cast("long").alias("shard_bytes"),
-    )
-    ws = Window.partitionBy("strategy")
-    return per.crossJoin(F.broadcast(tot)).select(
-        "strategy", "shard", "n_tensors", "shard_bytes", "total",
-        (8 * F.col("shard_bytes") - F.col("total")).cast("long").alias("dev_num"),
-        F.round(
-            (8 * F.col("shard_bytes") - F.col("total")).cast("double")
-            / F.col("total"),
-            6,
-        ).alias("dev_frac"),
-        (F.max("shard_bytes").over(ws) - F.min("shard_bytes").over(ws))
-        .cast("long")
-        .alias("spread"),
-    )
-
-
-# --------------------------------------------------------------------------
 # Round 4: query-optimizer trio — System-R cardinality estimation audit
 # (q-error), left-deep join-order costing with actual-vs-estimated
 # regret, and a partition-key layout advisor.
@@ -14292,268 +13305,6 @@ def q_partition_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .otherwise(0)
         .alias("avg_in_band"),
-    )
-
-
-# --------------------------------------------------------------------------
-# Round 4: governance/infra trio — sliding-log rate-limit audit (RANGE
-# window frames), orphan-file GC arithmetic (the Iceberg
-# remove_orphan_files ledger), and the histogram-intersection kernel
-# matrix across sources.
-# --------------------------------------------------------------------------
-
-_RATELIMIT_SQL = """
-WITH ev AS (
-  SELECT user_id, event_id,
-         CAST(floor(epoch(ts)) AS BIGINT) AS sec
-  FROM events
-),
-win AS (
-  SELECT user_id, event_id, sec,
-         CAST(count(*) OVER (PARTITION BY user_id ORDER BY sec
-           RANGE BETWEEN 60 PRECEDING AND CURRENT ROW) AS BIGINT) AS n_60s
-  FROM ev
-),
-per_user AS (
-  SELECT user_id,
-         CAST(count(*) AS BIGINT) AS n_events,
-         CAST(count(CASE WHEN n_60s >= 5 THEN 1 END) AS BIGINT)
-           AS n_violations,
-         CAST(max(n_60s) AS BIGINT) AS peak_rate_60s
-  FROM win GROUP BY 1
-)
-SELECT CAST(user_id % 16 AS BIGINT) AS user_bucket,
-       CAST(count(*) AS BIGINT) AS n_users,
-       CAST(sum(n_events) AS BIGINT) AS n_events,
-       CAST(sum(n_violations) AS BIGINT) AS n_violations,
-       CAST(count(CASE WHEN n_violations > 0 THEN 1 END) AS BIGINT)
-         AS n_users_violating,
-       CAST(max(peak_rate_60s) AS BIGINT) AS peak_rate_60s,
-       round(CAST(sum(n_violations) AS DOUBLE) / sum(n_events), 6)
-         AS violation_rate
-FROM per_user GROUP BY 1
-"""
-
-
-@register("q_rate_limit_audit", _RATELIMIT_SQL)
-def q_rate_limit_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sliding-log rate-limit audit — the exact arithmetic of the
-    limiter every API gateway runs, replayed over the event stream: an
-    event violates the 5-per-60s policy iff the RANGE window frame
-    [ts-60s, ts] over its user's events (whole-second epochs; the
-    session pins UTC so frame offsets are timezone-free) holds >= 5
-    events including itself. RANGE frames — not ROWS — are the point:
-    the frame is defined by VALUE distance, so bursts and quiet gaps are
-    handled exactly, which a row-count frame cannot do. The per-bucket
-    rollup ships violation counts, violating-user counts, and the peak
-    observed 60s rate — what capacity planning reads to size the real
-    limiter before abuse finds it.
-
-    Scale plan: one RANGE window per user partition (the stream's
-    natural key), then two map-side-combinable rollups; no joins."""
-    ev = load(spark, sf_dir, "events").select(
-        "user_id", "event_id", F.unix_timestamp("ts").cast("long").alias("sec")
-    )
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("sec")
-        .rangeBetween(-60, 0)
-    )
-    win = ev.select(
-        "user_id", F.count(F.lit(1)).over(w).cast("long").alias("n_60s")
-    )
-    per_user = win.groupBy("user_id").agg(
-        F.count(F.lit(1)).cast("long").alias("n_events"),
-        F.count(F.when(F.col("n_60s") >= 5, 1)).cast("long").alias("n_violations"),
-        F.max("n_60s").cast("long").alias("peak_rate_60s"),
-    )
-    return per_user.groupBy(
-        (F.col("user_id") % 16).cast("long").alias("user_bucket")
-    ).agg(
-        F.count(F.lit(1)).cast("long").alias("n_users"),
-        F.sum("n_events").cast("long").alias("n_events"),
-        F.sum("n_violations").cast("long").alias("n_violations"),
-        F.count(F.when(F.col("n_violations") > 0, 1))
-        .cast("long")
-        .alias("n_users_violating"),
-        F.max("peak_rate_60s").cast("long").alias("peak_rate_60s"),
-        F.round(
-            F.sum("n_violations").cast("double") / F.sum("n_events"), 6
-        ).alias("violation_rate"),
-    )
-
-
-_GC_SQL = """
-WITH days AS (
-  SELECT CAST(ts AS DATE) AS day, CAST(count(*) AS BIGINT) AS n_rows
-  FROM events GROUP BY 1
-),
-files AS (
-  SELECT day, n_rows, 1 AS gen,
-         substr(md5('rw:' || CAST(day AS VARCHAR)), 1, 1) < '8' AS rewritten
-  FROM days
-  UNION ALL
-  SELECT day, n_rows, 2, TRUE
-  FROM days WHERE substr(md5('rw:' || CAST(day AS VARCHAR)), 1, 1) < '8'
-),
-live AS (
-  SELECT day, gen, n_rows,
-         CASE WHEN gen = 2 THEN 1
-              WHEN gen = 1 AND NOT rewritten THEN 1 ELSE 0 END AS is_live
-  FROM files
-)
-SELECT CAST(gen AS INT) AS gen,
-       CAST(count(*) AS BIGINT) AS n_files,
-       CAST(count(CASE WHEN is_live = 1 THEN 1 END) AS BIGINT) AS n_live,
-       CAST(count(CASE WHEN is_live = 0 THEN 1 END) AS BIGINT) AS n_orphans,
-       CAST(sum(n_rows) AS BIGINT) AS rows_total,
-       CAST(sum(CASE WHEN is_live = 0 THEN n_rows ELSE 0 END) AS BIGINT)
-         AS rows_reclaimable,
-       round(CAST(sum(CASE WHEN is_live = 0 THEN n_rows ELSE 0 END) AS DOUBLE)
-             / sum(n_rows), 6) AS reclaim_frac
-FROM live GROUP BY 1
-"""
-
-
-@register("q_gc_orphans", _GC_SQL)
-def q_gc_orphans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Orphan-file GC arithmetic — the Iceberg remove_orphan_files /
-    Delta VACUUM ledger in its exact form: day-partition files exist in
-    two generations (gen-1 originals for every day; a compaction pass
-    rewrote the md5-selected half of days into gen-2 files), snapshot
-    retention has expired everything before the compaction commit, so
-    the live manifest references gen-2 where it exists and gen-1
-    elsewhere — making the gen-1 files of rewritten days ORPHANS: on
-    disk, unreferenced, billable. The per-generation ledger counts
-    files, live references, orphans, and reclaimable row mass (the byte
-    proxy) — the number a storage bill argues about. The invariant the
-    replica holds: every orphan is a gen-1 rewritten day, gen-2 has
-    zero orphans, and live file count == day count (each day served by
-    exactly one live file).
-
-    Scale plan: one daily rollup, a projection union for the file
-    inventory, one groupBy — manifests are metadata-sized, never
-    corpus-sized."""
-    ev = load(spark, sf_dir, "events")
-    days = ev.groupBy(F.col("ts").cast("date").alias("day")).agg(
-        F.count(F.lit(1)).cast("long").alias("n_rows")
-    )
-    rewritten = (
-        F.substring(
-            F.md5(F.concat(F.lit("rw:"), F.col("day").cast("string"))), 1, 1
-        )
-        < "8"
-    )
-    files = days.select(
-        "day", "n_rows", F.lit(1).alias("gen"), rewritten.alias("rewritten")
-    ).unionAll(
-        days.filter(rewritten).select(
-            "day", "n_rows", F.lit(2).alias("gen"), F.lit(True).alias("rewritten")
-        )
-    )
-    live = files.select(
-        "gen", "n_rows",
-        F.when(F.col("gen") == 2, 1)
-        .when((F.col("gen") == 1) & (~F.col("rewritten")), 1)
-        .otherwise(0)
-        .alias("is_live"),
-    )
-    return live.groupBy(F.col("gen").cast("int").alias("gen")).agg(
-        F.count(F.lit(1)).cast("long").alias("n_files"),
-        F.count(F.when(F.col("is_live") == 1, 1)).cast("long").alias("n_live"),
-        F.count(F.when(F.col("is_live") == 0, 1)).cast("long").alias("n_orphans"),
-        F.sum("n_rows").cast("long").alias("rows_total"),
-        F.sum(F.when(F.col("is_live") == 0, F.col("n_rows")).otherwise(0))
-        .cast("long")
-        .alias("rows_reclaimable"),
-        F.round(
-            F.sum(F.when(F.col("is_live") == 0, F.col("n_rows")).otherwise(0))
-            .cast("double")
-            / F.sum("n_rows"),
-            6,
-        ).alias("reclaim_frac"),
-    )
-
-
-_HISTKERNEL_SQL = f"""
-WITH {SQL_DOCS_TOKS.strip()},
-tk AS (
-  SELECT d.doc_id, lower(t.tok) AS tok
-  FROM docs d, unnest(toks) AS t(tok)
-),
-src AS (
-  SELECT s.source, tk.tok, CAST(count(*) AS BIGINT) AS c
-  FROM tk JOIN (SELECT doc_id, source FROM documents) s USING (doc_id)
-  GROUP BY 1, 2
-),
-tot AS (
-  SELECT source, CAST(sum(c) AS BIGINT) AS n FROM src GROUP BY 1
-),
-pair AS (
-  SELECT a.source AS src_a, b.source AS src_b,
-         CAST(sum(least(a.c, b.c)) AS BIGINT) AS raw_overlap
-  FROM src a JOIN src b ON a.tok = b.tok AND a.source <= b.source
-  GROUP BY 1, 2
-)
-SELECT p.src_a, p.src_b, p.raw_overlap, ta.n AS n_a, tb.n AS n_b,
-       CAST(least(ta.n, tb.n) AS BIGINT) AS kernel_den,
-       round(CAST(p.raw_overlap AS DOUBLE) / least(ta.n, tb.n), 6)
-         AS intersection_sim
-FROM pair p JOIN tot ta ON ta.source = p.src_a
-JOIN tot tb ON tb.source = p.src_b
-"""
-
-
-@register("q_histogram_intersection", _HISTKERNEL_SQL)
-def q_histogram_intersection(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Histogram-intersection kernel matrix (Swain-Ballard 1991) across
-    sources over token frequency histograms: K(a, b) = sum over the
-    vocabulary of min(count_a, count_b), normalized by min(|a|, |b|) —
-    the raw overlap is an exact BIGINT because min of two integers needs
-    no division, which is what makes this kernel the exact-arithmetic
-    cousin of cosine similarity for comparing corpus slices before a
-    mixture decision (q_source_overlap counts shared TYPES; this weighs
-    shared MASS). The upper-triangle pair frame includes the diagonal,
-    where K(a,a)/|a| = 1 exactly — the replica's calibration check — and
-    symmetry is free by construction.
-
-    Scale plan: one inverted histogram per source (map-side combined),
-    a vocabulary equi-join of the 5-source histograms (fanout bounded by
-    sources^2, never docs^2), totals broadcast back."""
-    from cliner_spark.tokenization import tokens_col
-
-    docs = load_docs(spark, sf_dir)
-    tk = docs.select(
-        "source", F.explode(tokens_col(F.col("text"))).alias("t")
-    ).select("source", F.lower("t").alias("tok"))
-    src = tk.groupBy("source", "tok").agg(
-        F.count(F.lit(1)).cast("long").alias("c")
-    )
-    tot = src.groupBy("source").agg(F.sum("c").cast("long").alias("n"))
-    a = src.select(
-        F.col("source").alias("src_a"), "tok", F.col("c").alias("ca")
-    )
-    b = src.select(
-        F.col("source").alias("src_b"), F.col("tok").alias("tok_b"),
-        F.col("c").alias("cb"),
-    )
-    pair = (
-        a.join(b, (F.col("tok") == F.col("tok_b")) & (F.col("src_a") <= F.col("src_b")))
-        .groupBy("src_a", "src_b")
-        .agg(F.sum(F.least("ca", "cb")).cast("long").alias("raw_overlap"))
-    )
-    ta = tot.select(F.col("source").alias("src_a"), F.col("n").alias("n_a"))
-    tb = tot.select(F.col("source").alias("src_b"), F.col("n").alias("n_b"))
-    return (
-        pair.join(F.broadcast(ta), "src_a")
-        .join(F.broadcast(tb), "src_b")
-        .select(
-            "src_a", "src_b", "raw_overlap", "n_a", "n_b",
-            F.least("n_a", "n_b").cast("long").alias("kernel_den"),
-            F.round(
-                F.col("raw_overlap").cast("double") / F.least("n_a", "n_b"), 6
-            ).alias("intersection_sim"),
-        )
     )
 
 
@@ -15582,327 +14333,6 @@ def q_bottomk_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Round 4: SRE/capacity trio — max-min fair-share water filling, hedged-
-# request tail arithmetic (Dean-Barroso 2013), and the retry-budget
-# amplification ledger.
-# --------------------------------------------------------------------------
-
-_FAIRSHARE_SQL = """
-WITH dem AS (
-  SELECT user_id, CAST(count(*) AS BIGINT) AS d
-  FROM events GROUP BY 1
-),
-cap AS (
-  SELECT CAST(sum(d) // 2 AS BIGINT) AS c, CAST(count(*) AS BIGINT) AS n,
-         CAST(sum(d) AS BIGINT) AS total_demand
-  FROM dem
-),
-sorted AS (
-  SELECT d,
-         row_number() OVER (ORDER BY d, user_id) AS j,
-         CAST(coalesce(sum(d) OVER (ORDER BY d, user_id
-           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
-           AS p_prev
-  FROM dem
-),
-crossing AS (
-  SELECT min(s.j) AS j_star
-  FROM sorted s CROSS JOIN cap
-  WHERE s.d * (cap.n - s.j + 1) >= cap.c - s.p_prev
-),
-theta AS (
-  SELECT CAST(cap.c - s.p_prev AS BIGINT) AS t_num,
-         CAST(cap.n - s.j + 1 AS BIGINT) AS t_den
-  FROM sorted s JOIN crossing x ON s.j = x.j_star CROSS JOIN cap
-),
-alloc AS (
-  SELECT CAST(count(CASE WHEN d.d * t.t_den < t.t_num THEN 1 END) AS BIGINT)
-           AS n_full,
-         CAST(count(CASE WHEN d.d * t.t_den >= t.t_num THEN 1 END) AS BIGINT)
-           AS n_capped,
-         CAST(sum(CASE WHEN d.d * t.t_den < t.t_num THEN d.d ELSE 0 END)
-              AS BIGINT) AS full_mass
-  FROM dem d CROSS JOIN theta t
-)
-SELECT cap.n AS n_users, cap.total_demand, cap.c AS capacity,
-       t.t_num AS theta_num, t.t_den AS theta_den,
-       round(CAST(t.t_num AS DOUBLE) / t.t_den, 6) AS theta,
-       a.n_full, a.n_capped, a.full_mass,
-       CASE WHEN a.full_mass * t.t_den + a.n_capped * t.t_num
-                 = cap.c * t.t_den THEN 1 ELSE 0 END AS conserves_capacity
-FROM cap CROSS JOIN theta t CROSS JOIN alloc a
-"""
-
-
-@register("q_maxmin_fairshare", _FAIRSHARE_SQL)
-def q_maxmin_fairshare(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Max-min fair-share allocation by water filling — the scheduler
-    arithmetic behind YARN/Kubernetes fair queues: with capacity C =
-    half the total demand, users sorted by demand get min(d, theta)
-    where the water level theta = (C - P_{j*-1}) / (n - j* + 1) at the
-    FIRST sorted index whose demand reaches its own provisional level
-    (decided by the cross-multiplied integer test d_j*(n-j+1) >=
-    C - P_{j-1}) — small demands are fully satisfied, the rest split
-    the remainder EQUALLY, and no allocation beats theta, the max-min
-    optimality property. theta ships as an exact rational and the
-    conservation identity full_mass + n_capped * theta == C is an
-    in-row integer verdict (the replica re-derives theta by scanning
-    levels and checks the water never over- or under-fills).
-
-    Scale plan: one demand rollup, one sorted prefix-sum window (the
-    dist_cumsum shape at production scale), three 1-row carries
-    (whitelisted); no joins over the corpus."""
-    ev = load(spark, sf_dir, "events")
-    dem = ev.groupBy("user_id").agg(F.count(F.lit(1)).cast("long").alias("d"))
-    cap = dem.agg(
-        F.floor(F.sum("d") / 2).cast("long").alias("c"),
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("d").cast("long").alias("total_demand"),
-    )
-    ws = Window.orderBy("d", "user_id")
-    sorted_d = dem.select(
-        "d",
-        F.row_number().over(ws).alias("j"),
-        F.coalesce(
-            F.sum("d").over(ws.rowsBetween(Window.unboundedPreceding, -1)),
-            F.lit(0),
-        ).cast("long").alias("p_prev"),
-    )
-    sc = sorted_d.crossJoin(F.broadcast(cap))
-    crossing = sc.filter(
-        F.col("d") * (F.col("n") - F.col("j") + 1) >= F.col("c") - F.col("p_prev")
-    ).agg(F.min("j").alias("j_star"))
-    theta = (
-        sc.join(F.broadcast(crossing), F.col("j") == F.col("j_star"))
-        .select(
-            (F.col("c") - F.col("p_prev")).cast("long").alias("t_num"),
-            (F.col("n") - F.col("j") + 1).cast("long").alias("t_den"),
-        )
-    )
-    alloc = dem.crossJoin(F.broadcast(theta)).agg(
-        F.count(F.when(F.col("d") * F.col("t_den") < F.col("t_num"), 1))
-        .cast("long")
-        .alias("n_full"),
-        F.count(F.when(F.col("d") * F.col("t_den") >= F.col("t_num"), 1))
-        .cast("long")
-        .alias("n_capped"),
-        F.sum(
-            F.when(F.col("d") * F.col("t_den") < F.col("t_num"), F.col("d"))
-            .otherwise(0)
-        )
-        .cast("long")
-        .alias("full_mass"),
-    )
-    return (
-        cap.crossJoin(F.broadcast(theta))
-        .crossJoin(F.broadcast(alloc))
-        .select(
-            F.col("n").alias("n_users"), "total_demand",
-            F.col("c").alias("capacity"),
-            F.col("t_num").alias("theta_num"),
-            F.col("t_den").alias("theta_den"),
-            F.round(F.col("t_num").cast("double") / F.col("t_den"), 6).alias(
-                "theta"
-            ),
-            "n_full", "n_capped", "full_mass",
-            F.when(
-                F.col("full_mass") * F.col("t_den")
-                + F.col("n_capped") * F.col("t_num")
-                == F.col("c") * F.col("t_den"),
-                1,
-            )
-            .otherwise(0)
-            .alias("conserves_capacity"),
-        )
-    )
-
-
-_HEDGED_SQL = """
-WITH lat AS (
-  SELECT CAST(floor(abs(value) * 1000) AS BIGINT) AS ms FROM events
-),
-nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM lat),
-grid AS (
-  SELECT ms, CAST(count(*) AS BIGINT) AS c FROM lat GROUP BY 1
-),
-surv AS (
-  SELECT ms,
-         CAST(nn.n - sum(c) OVER (ORDER BY ms) AS BIGINT) AS s, nn.n
-  FROM grid CROSS JOIN nn
-),
-qs AS (SELECT CAST(q.q AS BIGINT) AS q FROM (VALUES (50), (90), (99)) AS q(q)),
-single AS (
-  SELECT 'single' AS mode, qs.q,
-         min(CASE WHEN 100 * surv.s <= (100 - qs.q) * surv.n
-                  THEN surv.ms END) AS latency_ms
-  FROM surv CROSS JOIN qs GROUP BY 2
-),
-hedged AS (
-  SELECT 'hedged' AS mode, qs.q,
-         min(CASE WHEN 100 * surv.s * surv.s <= (100 - qs.q) * surv.n * surv.n
-                  THEN surv.ms END) AS latency_ms
-  FROM surv CROSS JOIN qs GROUP BY 2
-),
-modes AS (SELECT * FROM single UNION ALL SELECT * FROM hedged)
-SELECT m.mode, m.q, CAST(m.latency_ms AS BIGINT) AS latency_ms,
-       (SELECT CAST(min(s) AS BIGINT) FROM surv
-        WHERE surv.ms <= m.latency_ms) AS survivors_at,
-       nn.n,
-       CASE WHEN m.mode = 'hedged' THEN 2.0 ELSE 1.0 END AS request_load
-FROM modes m CROSS JOIN nn
-"""
-
-
-@register("q_hedged_requests", _HEDGED_SQL)
-def q_hedged_requests(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hedged-request tail arithmetic (Dean & Barroso, 'The Tail at
-    Scale' 2013): if a client fires the same request at two independent
-    replicas and takes the first answer, the latency survival function
-    SQUARES — so the hedged p-quantiles come from the exact
-    cross-multiplied test 100*s^2 <= (100-q)*n^2 over the integer-ms
-    survival grid, beside the single-request 100*s <= (100-q)*n. The
-    ledger shows what every tail-latency meeting rediscovers: hedging
-    buys its p99 near the single p90 for 2x request load (the
-    request_load column prices it). Grid, survivors, and every decision
-    are exact integers; the replica recomputes both survival curves and
-    asserts hedged <= single at every quantile.
-
-    Scale plan: one value-domain groupBy, one cumulative window on the
-    distinct-ms frame, a 3-row quantile spine (whitelisted); the corpus
-    is scanned once."""
-    ev = load(spark, sf_dir, "events")
-    lat = ev.select(
-        F.floor(F.abs(F.col("value")) * 1000).cast("long").alias("ms")
-    )
-    nn = lat.agg(F.count(F.lit(1)).cast("long").alias("n"))
-    grid = lat.groupBy("ms").agg(F.count(F.lit(1)).cast("long").alias("c"))
-    wv = Window.orderBy("ms").rowsBetween(Window.unboundedPreceding, 0)
-    surv = grid.crossJoin(F.broadcast(nn)).select(
-        "ms", (F.col("n") - F.sum("c").over(wv)).cast("long").alias("s"), "n"
-    )
-    qs = spark.createDataFrame([(50,), (90,), (99,)], "q long")
-    sq = surv.crossJoin(F.broadcast(qs))
-    single = sq.filter(
-        100 * F.col("s") <= (100 - F.col("q")) * F.col("n")
-    ).groupBy("q").agg(F.min("ms").alias("latency_ms")).withColumn(
-        "mode", F.lit("single")
-    )
-    hedged = sq.filter(
-        100 * F.col("s") * F.col("s")
-        <= (100 - F.col("q")) * F.col("n") * F.col("n")
-    ).groupBy("q").agg(F.min("ms").alias("latency_ms")).withColumn(
-        "mode", F.lit("hedged")
-    )
-    modes = single.unionByName(hedged)
-    sat = surv.select(F.col("ms").alias("s_ms"), F.col("s"))
-    return (
-        modes.join(
-            F.broadcast(sat), F.col("s_ms") == F.col("latency_ms"), "left"
-        )
-        .crossJoin(F.broadcast(nn))
-        .select(
-            "mode", "q",
-            F.col("latency_ms").cast("long").alias("latency_ms"),
-            F.col("s").cast("long").alias("survivors_at"),
-            "n",
-            F.when(F.col("mode") == "hedged", 2.0).otherwise(1.0).alias(
-                "request_load"
-            ),
-        )
-    )
-
-
-_RETRY_SQL = """
-WITH t AS (
-  SELECT event_type, event_id,
-         substr(md5('try:' || CAST(event_id AS VARCHAR) || ':1'), 1, 1) < 'c'
-           AS a1,
-         substr(md5('try:' || CAST(event_id AS VARCHAR) || ':2'), 1, 1) < 'c'
-           AS a2,
-         substr(md5('try:' || CAST(event_id AS VARCHAR) || ':3'), 1, 1) < 'c'
-           AS a3
-  FROM events
-),
-o AS (
-  SELECT event_type,
-         CASE WHEN a1 THEN 1 WHEN a2 THEN 2 ELSE 3 END AS attempts,
-         CASE WHEN a1 OR a2 OR a3 THEN 1 ELSE 0 END AS ok,
-         CASE WHEN a1 THEN 1 ELSE 0 END AS ok1,
-         CASE WHEN a1 OR a2 THEN 1 ELSE 0 END AS ok2
-  FROM t
-)
-SELECT event_type,
-       CAST(count(*) AS BIGINT) AS n_requests,
-       CAST(sum(ok1) AS BIGINT) AS ok_by_1,
-       CAST(sum(ok2) AS BIGINT) AS ok_by_2,
-       CAST(sum(ok) AS BIGINT) AS ok_by_3,
-       CAST(count(*) - sum(ok) AS BIGINT) AS exhausted,
-       CAST(sum(attempts) AS BIGINT) AS total_attempts,
-       round(CAST(sum(attempts) AS DOUBLE) / count(*), 6) AS amplification,
-       round(1 - CAST(sum(ok) AS DOUBLE) / count(*), 6) AS failure_rate
-FROM o GROUP BY 1
-"""
-
-
-@register("q_retry_budget", _RETRY_SQL)
-def q_retry_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Retry-budget amplification ledger — the SRE arithmetic that
-    separates 'retries fix errors' from 'retries melt the backend':
-    each request gets up to 3 attempts with independent md5 success
-    coins at p = 12/16, stopping at the first success, and the per-type
-    rollup ships success-by-attempt counts, the exhausted residue
-    (p_fail^3 ~ 1.6%), total attempts, and the amplification factor
-    sum(attempts)/n — the load multiplier a retry policy silently
-    imposes (E[attempts] = (1-p^3)... = 1 + q + q^2 ~ 1.3125 at
-    q = 1/4, which the replica checks the observed ratio against).
-    Everything integer except two rounded divisions; stop-at-success
-    semantics mean attempt coins 2 and 3 are only CONSULTED when
-    earlier ones failed — but being stateless md5 draws they can be
-    computed unconditionally and masked, which is what makes the whole
-    simulation one projection.
-
-    Scale plan: pure projection + one map-side-combinable groupBy; no
-    joins, no windows."""
-    ev = load(spark, sf_dir, "events")
-
-    def coin(k):
-        return (
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit("try:"), F.col("event_id").cast("string"),
-                        F.lit(f":{k}"),
-                    )
-                ),
-                1, 1,
-            )
-            < "c"
-        )
-
-    o = ev.select(
-        "event_type",
-        F.when(coin(1), 1).when(coin(2), 2).otherwise(3).alias("attempts"),
-        F.when(coin(1) | coin(2) | coin(3), 1).otherwise(0).alias("ok"),
-        F.when(coin(1), 1).otherwise(0).alias("ok1"),
-        F.when(coin(1) | coin(2), 1).otherwise(0).alias("ok2"),
-    )
-    return o.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("long").alias("n_requests"),
-        F.sum("ok1").cast("long").alias("ok_by_1"),
-        F.sum("ok2").cast("long").alias("ok_by_2"),
-        F.sum("ok").cast("long").alias("ok_by_3"),
-        (F.count(F.lit(1)) - F.sum("ok")).cast("long").alias("exhausted"),
-        F.sum("attempts").cast("long").alias("total_attempts"),
-        F.round(
-            F.sum("attempts").cast("double") / F.count(F.lit(1)), 6
-        ).alias("amplification"),
-        F.round(
-            1 - F.sum("ok").cast("double") / F.count(F.lit(1)), 6
-        ).alias("failure_rate"),
-    )
-
-
-# --------------------------------------------------------------------------
 # Round 4: two-sample/CI/sampling trio — exact energy-distance
 # components, the distribution-free order-statistic median CI, and
 # Duffield-Lund-Thorup priority sampling with exact-rational subset-sum
@@ -16254,1037 +14684,6 @@ def q_priority_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Round 4: SRE-observability/analytics trio — multiwindow SLO burn-rate
-# alerts, tail-based trace-complete sampling audit, and the mix/rate
-# (Oaxaca-style) error decomposition between two periods.
-# --------------------------------------------------------------------------
-
-_SLOBURN_SQL = """
-WITH ev AS (
-  SELECT ts,
-         CASE WHEN substr(md5('ok:' || CAST(event_id AS VARCHAR)), 1, 2)
-                   < '04' THEN 1 ELSE 0 END AS err
-  FROM events
-),
-tend AS (SELECT max(ts) AS t1 FROM ev),
-win AS (
-  SELECT w.rule, w.long_h, w.short_h, CAST(w.thr_num AS BIGINT) AS thr_num
-  FROM (VALUES ('page', 1, 6, 144), ('ticket', 6, 72, 60),
-               ('trend', 72, 72, 10)) AS w(rule, long_h, short_h, thr_num)
-),
-counts AS (
-  SELECT w.rule, w.long_h, w.short_h, w.thr_num,
-         CAST(count(CASE WHEN ev.ts > tend.t1 - w.long_h
-                * INTERVAL 1 HOUR THEN 1 END) AS BIGINT) AS n_long,
-         CAST(sum(CASE WHEN ev.ts > tend.t1 - w.long_h
-                * INTERVAL 1 HOUR THEN ev.err ELSE 0 END) AS BIGINT)
-           AS e_long,
-         CAST(count(CASE WHEN ev.ts > tend.t1 - w.short_h
-                * INTERVAL 1 HOUR THEN 1 END) AS BIGINT) AS n_short,
-         CAST(sum(CASE WHEN ev.ts > tend.t1 - w.short_h
-                * INTERVAL 1 HOUR THEN ev.err ELSE 0 END) AS BIGINT)
-           AS e_short
-  FROM ev CROSS JOIN tend CROSS JOIN win w
-  GROUP BY 1, 2, 3, 4
-)
-SELECT rule, long_h, short_h, n_long, e_long, n_short, e_short,
-       round(10000.0 * e_long / n_long / 10, 6) AS burn_long,
-       round(10000.0 * e_short / n_short / 10, 6) AS burn_short,
-       CASE WHEN 100000 * e_long > thr_num * n_long
-             AND 100000 * e_short > thr_num * n_short
-            THEN 1 ELSE 0 END AS fired,
-       thr_num
-FROM counts
-"""
-
-
-@register("q_slo_burn_alert", _SLOBURN_SQL)
-def q_slo_burn_alert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Multiwindow multi-burn-rate SLO alerting (the Google SRE workbook
-    policy): against a 1% error budget (md5 error coin at 4/256 —
-    deliberately ~1.56%, i.e. burning ~1.56x budget so the slow rules
-    fire and the fast ones depend on recent noise), each rule compares
-    the burn rate = error_rate / budget over a LONG window (did we
-    really burn it) and a SHORT window (are we still burning) — page at
-    14.4x over (1h, 6h), ticket at 6x over (6h, 72h), trend at 1x over
-    72h — and fires only when BOTH cross, the and-gate that kills
-    flapping. Burn comparisons are exact cross-multiplied integers
-    (100000 * errors > thr_num * events encodes rate/0.01 > thr with
-    thr_num = 10*thr); windows anchor at the stream's max ts via
-    interval arithmetic (timezone-free).
-
-    Scale plan: one scan with a 3-row broadcast rule spine collapsed
-    map-side into 12 counters + a 1-row end-of-stream carry
-    (whitelisted)."""
-    ev = load(spark, sf_dir, "events").select(
-        "ts",
-        F.when(
-            F.substring(
-                F.md5(F.concat(F.lit("ok:"), F.col("event_id").cast("string"))),
-                1, 2,
-            )
-            < "04",
-            1,
-        )
-        .otherwise(0)
-        .alias("err"),
-    )
-    tend = ev.agg(F.max("ts").alias("t1"))
-    win = spark.createDataFrame(
-        [("page", 1, 6, 144), ("ticket", 6, 72, 60), ("trend", 72, 72, 10)],
-        "rule string, long_h int, short_h int, thr_num long",
-    )
-    j = ev.crossJoin(F.broadcast(tend)).crossJoin(F.broadcast(win))
-
-    def in_win(hours_col):
-        return F.col("ts") > F.col("t1") - F.expr(
-            "make_interval(0, 0, 0, 0, 1, 0, 0)"
-        ) * F.col(hours_col)
-
-    counts = j.groupBy("rule", "long_h", "short_h", "thr_num").agg(
-        F.count(F.when(in_win("long_h"), 1)).cast("long").alias("n_long"),
-        F.sum(F.when(in_win("long_h"), F.col("err")).otherwise(0))
-        .cast("long")
-        .alias("e_long"),
-        F.count(F.when(in_win("short_h"), 1)).cast("long").alias("n_short"),
-        F.sum(F.when(in_win("short_h"), F.col("err")).otherwise(0))
-        .cast("long")
-        .alias("e_short"),
-    )
-    return counts.select(
-        "rule", "long_h", "short_h", "n_long", "e_long", "n_short", "e_short",
-        F.round(10000.0 * F.col("e_long") / F.col("n_long") / 10, 6).alias(
-            "burn_long"
-        ),
-        F.round(10000.0 * F.col("e_short") / F.col("n_short") / 10, 6).alias(
-            "burn_short"
-        ),
-        F.when(
-            (100000 * F.col("e_long") > F.col("thr_num") * F.col("n_long"))
-            & (100000 * F.col("e_short") > F.col("thr_num") * F.col("n_short")),
-            1,
-        )
-        .otherwise(0)
-        .alias("fired"),
-        "thr_num",
-    )
-
-
-from cliner_spark.queries_r2 import SQL_TXR as _TXR4  # noqa: E402
-
-_TRACESAMPLE_SQL = f"""
-WITH {SQL_DOCS_TOKS.strip()},
-{_TXR4.strip()},
-spans AS (
-  SELECT conv_id, turn_idx, n_toks,
-         CASE WHEN substr(md5('err:' || conv_id || ':'
-                || CAST(turn_idx AS VARCHAR)), 1, 1) = '0' THEN 1 ELSE 0 END
-           AS is_err,
-         CASE WHEN n_toks > 90 THEN 1 ELSE 0 END AS is_slow
-  FROM txr
-),
-traces AS (
-  SELECT conv_id, CAST(count(*) AS BIGINT) AS n_spans,
-         CAST(max(is_err) AS BIGINT) AS has_err,
-         CAST(max(is_slow) AS BIGINT) AS has_slow
-  FROM spans GROUP BY 1
-)
-SELECT CASE WHEN has_err = 1 AND has_slow = 1 THEN 'both'
-            WHEN has_err = 1 THEN 'error_only'
-            WHEN has_slow = 1 THEN 'slow_only' ELSE 'none' END AS reason,
-       CAST(count(*) AS BIGINT) AS n_traces,
-       CAST(sum(n_spans) AS BIGINT) AS n_spans,
-       CAST(max(CASE WHEN has_err = 1 OR has_slow = 1 THEN 1 ELSE 0 END)
-            AS BIGINT) AS sampled,
-       CAST(sum(CASE WHEN has_err = 1 OR has_slow = 1 THEN n_spans ELSE 0 END)
-            AS BIGINT) AS spans_kept,
-       CAST(sum(CASE WHEN (has_err = 1 OR has_slow = 1)
-                      AND n_spans > 0 THEN 0 ELSE 0 END) AS BIGINT)
-         AS n_partial
-FROM traces GROUP BY 1
-"""
-
-
-@register("q_trace_sampling", _TRACESAMPLE_SQL)
-def q_trace_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tail-based trace sampling audit — the observability-pipeline
-    rule that a trace is kept ALL-OR-NOTHING after seeing its last span
-    (head sampling can never keep 'the slow ones' because the decision
-    predates the latency): transcript turns are spans, a trace samples
-    iff ANY span errored (md5 1/16) or ran slow (> 90 tokens, the
-    fixture's p90), and the
-    per-reason ledger (error_only / slow_only / both / none) counts
-    traces, their span mass, and spans_kept — which for a sampled class
-    equals its whole span mass and for 'none' is ZERO, the
-    trace-completeness invariant n_partial = 0 ships in-row by
-    construction and the replica re-verifies it per trace. This is the
-    same all-or-nothing semantics the repo's conv-level dedup uses,
-    applied to the telemetry path.
-
-    Scale plan: span flags are projections; the decision is one
-    map-side max per conv_id (the stream's partition key); the rollup
-    is 4 rows."""
-    from cliner_spark.queries_r2 import _txr
-
-    t = _txr(spark, sf_dir)
-    spans = t.select(
-        "conv_id", "n_toks",
-        F.when(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit("err:"), F.col("conv_id"), F.lit(":"),
-                        F.col("turn_idx").cast("string"),
-                    )
-                ),
-                1, 1,
-            )
-            == "0",
-            1,
-        )
-        .otherwise(0)
-        .alias("is_err"),
-        F.when(F.col("n_toks") > 90, 1).otherwise(0).alias("is_slow"),
-    )
-    traces = spans.groupBy("conv_id").agg(
-        F.count(F.lit(1)).cast("long").alias("n_spans"),
-        F.max("is_err").cast("long").alias("has_err"),
-        F.max("is_slow").cast("long").alias("has_slow"),
-    )
-    reason = (
-        F.when((F.col("has_err") == 1) & (F.col("has_slow") == 1), "both")
-        .when(F.col("has_err") == 1, "error_only")
-        .when(F.col("has_slow") == 1, "slow_only")
-        .otherwise("none")
-    )
-    keep = (F.col("has_err") == 1) | (F.col("has_slow") == 1)
-    return traces.groupBy(reason.alias("reason")).agg(
-        F.count(F.lit(1)).cast("long").alias("n_traces"),
-        F.sum("n_spans").cast("long").alias("n_spans"),
-        F.max(F.when(keep, 1).otherwise(0)).cast("long").alias("sampled"),
-        F.sum(F.when(keep, F.col("n_spans")).otherwise(0))
-        .cast("long")
-        .alias("spans_kept"),
-        F.lit(0).cast("long").alias("n_partial"),
-    )
-
-
-_MIXRATE_SQL = """
-WITH ev AS (
-  SELECT event_type, CAST(ts AS DATE) AS day,
-         CASE WHEN substr(md5('e2:' || CAST(event_id AS VARCHAR)), 1, 1)
-                   < '2' THEN 1 ELSE 0 END AS err
-  FROM events
-),
-mid AS (
-  SELECT min(day) + CAST((max(day) - min(day)) // 2 AS INT) AS m FROM ev
-),
-per AS (
-  SELECT event_type,
-         CAST(count(CASE WHEN day <= mid.m THEN 1 END) AS BIGINT) AS v_a,
-         CAST(sum(CASE WHEN day <= mid.m THEN err ELSE 0 END) AS BIGINT)
-           AS e_a,
-         CAST(count(CASE WHEN day > mid.m THEN 1 END) AS BIGINT) AS v_b,
-         CAST(sum(CASE WHEN day > mid.m THEN err ELSE 0 END) AS BIGINT)
-           AS e_b
-  FROM ev CROSS JOIN mid GROUP BY 1
-),
-tot AS (
-  SELECT CAST(sum(v_a) AS BIGINT) AS big_v_a,
-         CAST(sum(e_a) AS BIGINT) AS big_e_a,
-         CAST(sum(v_b) AS BIGINT) AS big_v_b,
-         CAST(sum(e_b) AS BIGINT) AS big_e_b
-  FROM per
-)
-SELECT p.event_type, p.v_a, p.e_a, p.v_b, p.e_b,
-       t.big_v_a, t.big_v_b,
-       CAST((p.v_b * t.big_v_a - p.v_a * t.big_v_b) * p.e_a AS BIGINT)
-         AS mix_num,
-       CAST(t.big_v_a * t.big_v_b * p.v_a AS BIGINT) AS mix_den,
-       CAST(p.e_b * p.v_a - p.e_a * p.v_b AS BIGINT) AS rate_core,
-       CAST(t.big_v_b * p.v_a AS BIGINT) AS rate_den,
-       round(CAST((p.v_b * t.big_v_a - p.v_a * t.big_v_b) * p.e_a AS DOUBLE)
-             / (CAST(t.big_v_a AS DOUBLE) * t.big_v_b * p.v_a), 8)
-         AS mix_effect,
-       round(CAST(p.e_b * p.v_a - p.e_a * p.v_b AS DOUBLE)
-             / (CAST(t.big_v_b AS DOUBLE) * p.v_a), 8) AS rate_effect
-FROM per p CROSS JOIN tot t
-WHERE p.v_a > 0 AND p.v_b > 0
-"""
-
-
-@register("q_mix_rate_decomposition", _MIXRATE_SQL)
-def q_mix_rate_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mix/rate (Oaxaca-Blinder-style) decomposition of the error-rate
-    change between the two halves of the stream: the overall delta
-    R_B - R_A splits per event type into a MIX effect (s_B - s_A) * r_A
-    — the type's traffic share moved — and a RATE effect s_B *
-    (r_B - r_A) — the type itself got better or worse — the
-    decomposition every incident review does by hand when 'the error
-    rate doubled' turns out to mean 'the cheap endpoint lost share'.
-    Both terms ship as EXACT integer rationals (mix = (vB*VA - vA*VB) *
-    eA / (VA*VB*vA), rate = (eB*vA - eA*vB) / (VB*vA)) and the replica
-    proves the exact identity sum of all terms == R_B - R_A in
-    Fractions — the property that makes the table an accounting, not an
-    approximation. Types absent from either half are excluded honestly
-    (their share term is the trivial remainder).
-
-    Scale plan: one scan into a per-type 2x2 ledger (map-side
-    combined), a 1-row totals carry (whitelisted); no windows."""
-    ev = load(spark, sf_dir, "events").select(
-        "event_type",
-        F.col("ts").cast("date").alias("day"),
-        F.when(
-            F.substring(
-                F.md5(F.concat(F.lit("e2:"), F.col("event_id").cast("string"))),
-                1, 1,
-            )
-            < "2",
-            1,
-        )
-        .otherwise(0)
-        .alias("err"),
-    )
-    mid = ev.agg(
-        F.date_add(
-            F.min("day"),
-            (F.datediff(F.max("day"), F.min("day")) / 2).cast("int"),
-        ).alias("m")
-    )
-    per = ev.crossJoin(F.broadcast(mid)).groupBy("event_type").agg(
-        F.count(F.when(F.col("day") <= F.col("m"), 1)).cast("long").alias("v_a"),
-        F.sum(F.when(F.col("day") <= F.col("m"), F.col("err")).otherwise(0))
-        .cast("long")
-        .alias("e_a"),
-        F.count(F.when(F.col("day") > F.col("m"), 1)).cast("long").alias("v_b"),
-        F.sum(F.when(F.col("day") > F.col("m"), F.col("err")).otherwise(0))
-        .cast("long")
-        .alias("e_b"),
-    )
-    tot = per.agg(
-        F.sum("v_a").cast("long").alias("big_v_a"),
-        F.sum("e_a").cast("long").alias("big_e_a"),
-        F.sum("v_b").cast("long").alias("big_v_b"),
-        F.sum("e_b").cast("long").alias("big_e_b"),
-    )
-    j = per.crossJoin(F.broadcast(tot)).filter(
-        (F.col("v_a") > 0) & (F.col("v_b") > 0)
-    )
-    mix_num = (
-        F.col("v_b") * F.col("big_v_a") - F.col("v_a") * F.col("big_v_b")
-    ) * F.col("e_a")
-    rate_core = F.col("e_b") * F.col("v_a") - F.col("e_a") * F.col("v_b")
-    return j.select(
-        "event_type", "v_a", "e_a", "v_b", "e_b", "big_v_a", "big_v_b",
-        mix_num.cast("long").alias("mix_num"),
-        (F.col("big_v_a") * F.col("big_v_b") * F.col("v_a"))
-        .cast("long")
-        .alias("mix_den"),
-        rate_core.cast("long").alias("rate_core"),
-        (F.col("big_v_b") * F.col("v_a")).cast("long").alias("rate_den"),
-        F.round(
-            mix_num.cast("double")
-            / (
-                F.col("big_v_a").cast("double")
-                * F.col("big_v_b")
-                * F.col("v_a")
-            ),
-            8,
-        ).alias("mix_effect"),
-        F.round(
-            rate_core.cast("double")
-            / (F.col("big_v_b").cast("double") * F.col("v_a")),
-            8,
-        ).alias("rate_effect"),
-    )
-
-
-# --------------------------------------------------------------------------
-# Round 4: reliability/assignment trio — ring-topology percolation with
-# closed-form arc components, distributed maximal matching by priority
-# rounds, and per-minute load-shedding fairness.
-# --------------------------------------------------------------------------
-
-_RING_SQL = """
-WITH nodes AS (SELECT CAST(t.i AS BIGINT) AS pos FROM unnest(range(256)) AS t(i)),
-rates AS (SELECT CAST(r.r AS BIGINT) AS thr FROM (VALUES (1), (2), (4), (8))
-          AS r(r)),
-links AS (
-  SELECT rt.thr, n.pos,
-         CASE WHEN ('0x' || substr(md5('lnk:' || CAST(rt.thr AS VARCHAR)
-                || ':' || CAST(n.pos AS VARCHAR)), 1, 1))::BIGINT < rt.thr
-              THEN 1 ELSE 0 END AS failed
-  FROM nodes n CROSS JOIN rates rt
-),
-fails AS (
-  SELECT thr, pos,
-         row_number() OVER (PARTITION BY thr ORDER BY pos) AS fk,
-         count(*) OVER (PARTITION BY thr) AS n_failed,
-         lead(pos) OVER (PARTITION BY thr ORDER BY pos) AS next_pos,
-         min(pos) OVER (PARTITION BY thr) AS first_pos
-  FROM links WHERE failed = 1
-),
-segs AS (
-  SELECT thr, n_failed,
-         CASE WHEN next_pos IS NOT NULL THEN next_pos - pos - 1
-              ELSE 256 - pos - 1 + first_pos END AS seg_len
-  FROM fails
-)
-SELECT s.thr,
-       round(CAST(s.thr AS DOUBLE) / 16, 4) AS fail_rate,
-       CAST(max(s.n_failed) AS BIGINT) AS n_failed_links,
-       CAST(count(*) AS BIGINT) AS n_segments,
-       CAST(max(s.seg_len) AS BIGINT) AS largest_segment,
-       CAST(count(CASE WHEN s.seg_len = 0 THEN 1 END) AS BIGINT)
-         AS n_isolated,
-       CAST(sum(s.seg_len) AS BIGINT) AS nodes_alive,
-       round(CAST(sum(s.seg_len) AS DOUBLE) / count(*), 6) AS mean_segment
-FROM segs s
-GROUP BY s.thr
-"""
-
-
-@register("q_ring_reliability", _RING_SQL)
-def q_ring_reliability(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ring-topology percolation (the SONET / chain-replication failure
-    analysis): 256 nodes on a ring where link i (between node i and
-    i+1 mod 256) fails independently at md5 rates 1/16 .. 8/16, and the
-    CLOSED FORM does all the work — k failed links cut the ring into
-    exactly k arcs, so components need NO iterative label propagation:
-    one lead() window over the failed positions gives every arc length
-    (the wrap-around arc closes via the circular first-failure carry),
-    the largest surviving segment is the availability headline,
-    zero-length arcs are nodes isolated by BOTH adjacent links failing,
-    and sum(seg_len) + n_failed = 256 conserves nodes (arcs here count
-    interior nodes strictly between failures). The rate ladder shows
-    the reliability curve collapse: mean segment ~ 16/rate - 1.
-
-    Scale plan: the whole computation is a per-rate window over the
-    FAILED positions only (rate x 256 frame); the 4-row rate spine is
-    broadcast (whitelisted). No graph iteration anywhere — topology
-    knowledge replaced O(diameter) rounds with one window."""
-    nodes = spark.range(256).select(F.col("id").cast("long").alias("pos"))
-    rates = spark.createDataFrame([(1,), (2,), (4,), (8,)], "thr long")
-    links = nodes.crossJoin(F.broadcast(rates)).select(
-        "thr", "pos",
-        F.when(
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(
-                            F.lit("lnk:"), F.col("thr").cast("string"),
-                            F.lit(":"), F.col("pos").cast("string"),
-                        )
-                    ),
-                    1, 1,
-                ),
-                16, 10,
-            ).cast("long")
-            < F.col("thr"),
-            1,
-        )
-        .otherwise(0)
-        .alias("failed"),
-    )
-    wp = Window.partitionBy("thr").orderBy("pos")
-    wa = Window.partitionBy("thr")
-    fails = links.filter(F.col("failed") == 1).select(
-        "thr", "pos",
-        F.count(F.lit(1)).over(wa).alias("n_failed"),
-        F.lead("pos").over(wp).alias("next_pos"),
-        F.min("pos").over(wa).alias("first_pos"),
-    )
-    segs = fails.select(
-        "thr", "n_failed",
-        F.when(
-            F.col("next_pos").isNotNull(), F.col("next_pos") - F.col("pos") - 1
-        )
-        .otherwise(256 - F.col("pos") - 1 + F.col("first_pos"))
-        .alias("seg_len"),
-    )
-    return segs.groupBy("thr").agg(
-        F.round(F.col("thr").cast("double") / 16, 4).alias("fail_rate"),
-        F.max("n_failed").cast("long").alias("n_failed_links"),
-        F.count(F.lit(1)).cast("long").alias("n_segments"),
-        F.max("seg_len").cast("long").alias("largest_segment"),
-        F.count(F.when(F.col("seg_len") == 0, 1)).cast("long").alias("n_isolated"),
-        F.sum("seg_len").cast("long").alias("nodes_alive"),
-        F.round(F.sum("seg_len").cast("double") / F.count(F.lit(1)), 6).alias(
-            "mean_segment"
-        ),
-    ).select(
-        "thr", "fail_rate", "n_failed_links", "n_segments", "largest_segment",
-        "n_isolated", "nodes_alive", "mean_segment",
-    )
-
-
-def _matching_sql() -> str:
-    blocks = []
-    prev_free = "free0"
-    prev_alive = "ealive0"
-    for r in (1, 2, 3):
-        blocks.append(
-            f"""
-ep{r} AS (
-  SELECT e.lo, e.hi,
-         md5('m{r}:' || CAST(e.lo AS VARCHAR) || '-' || CAST(e.hi AS VARCHAR))
-           || '#' || lpad(CAST(e.lo AS VARCHAR), 12, '0') AS k
-  FROM {prev_alive} e
-),
-ep{r}m AS MATERIALIZED (SELECT * FROM ep{r}),
-inc{r} AS MATERIALIZED (
-  SELECT lo AS node, lo, hi, k FROM ep{r}m
-  UNION ALL SELECT hi, lo, hi, k FROM ep{r}m
-),
-rk{r} AS (
-  SELECT node, k, row_number() OVER (PARTITION BY node ORDER BY k) AS nrk
-  FROM inc{r}
-),
-emin{r} AS MATERIALIZED (
-  SELECT node,
-         min(CASE WHEN nrk = 1 THEN k END) AS k1,
-         min(CASE WHEN nrk = 2 THEN k END) AS k2
-  FROM rk{r} GROUP BY node
-),
-othr{r} AS (
-  SELECT i.lo, i.hi, i.k,
-         CASE WHEN i.k = m.k1 THEN m.k2 ELSE m.k1 END AS min_other
-  FROM inc{r} i JOIN emin{r} m USING (node)
-),
-sel{r} AS MATERIALIZED (
-  SELECT lo, hi FROM othr{r}
-  GROUP BY lo, hi, k
-  HAVING min(coalesce(min_other, 'zz')) > k
-),
-free{r} AS MATERIALIZED (
-  SELECT node FROM {prev_free}
-  WHERE node NOT IN (SELECT lo FROM sel{r})
-    AND node NOT IN (SELECT hi FROM sel{r})
-),
-ealive{r} AS MATERIALIZED (
-  SELECT e.lo, e.hi FROM {prev_alive} e
-  WHERE e.lo IN (SELECT node FROM free{r})
-    AND e.hi IN (SELECT node FROM free{r})
-)""".strip()
-        )
-        prev_free = f"free{r}"
-        prev_alive = f"ealive{r}"
-    return ",\n".join(blocks)
-
-
-_MATCHING_SQL = f"""
-WITH {SQL_DOCS_TOKS.strip()},
-{_DPG4.strip()},
-nodes AS (SELECT lo AS node FROM ge UNION SELECT hi FROM ge),
-free0 AS (SELECT node FROM nodes),
-ealive0 AS (SELECT lo, hi FROM ge),
-{_matching_sql()},
-matched AS (
-  SELECT lo, hi, 1 AS rnd FROM sel1
-  UNION ALL SELECT lo, hi, 2 FROM sel2
-  UNION ALL SELECT lo, hi, 3 FROM sel3
-),
-stats AS (
-  SELECT CAST(count(*) AS BIGINT) AS n_matched_edges,
-         CAST(count(DISTINCT lo) + count(DISTINCT hi) AS BIGINT) AS _x
-  FROM matched
-)
-SELECT m.rnd,
-       CAST(count(*) AS BIGINT) AS n_edges_matched,
-       CAST((SELECT count(*) FROM nodes) AS BIGINT) AS n_nodes,
-       CAST((SELECT count(*) FROM ge) AS BIGINT) AS n_edges,
-       CAST((SELECT count(*) FROM free3) AS BIGINT) AS n_free_after,
-       CAST((SELECT count(*) FROM ealive3) AS BIGINT) AS n_edges_left
-FROM matched m GROUP BY m.rnd
-"""
-
-
-@register("q_greedy_matching", _MATCHING_SQL)
-def q_greedy_matching(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed maximal matching by priority rounds (the Israeli-Itai
-    shape: MIS on the line graph) over the doc-similarity graph — the
-    assignment primitive behind conflict-free pairwise work (A/B doc
-    comparisons, buddy review): each round every surviving edge draws a
-    strict md5 priority and joins the matching iff it beats every edge
-    sharing an endpoint; matched endpoints leave, edges touching them
-    die, three rounds run. Per-round matched-edge counts ship with the
-    residual frontier (free nodes, surviving edges) — a valid matching
-    BY CONSTRUCTION (two adjacent edges cannot both win a round, and
-    later rounds only see both-endpoints-free edges), which the replica
-    proves by replaying all rounds and checking no node is matched
-    twice plus the frontier-shrink shape.
-
-    Scale plan: the conflict test is an endpoint self-join of the ALIVE
-    edge frame (shrinks geometrically per round), min-combine map-side;
-    rounds are localCheckpoint-pinned — the Pregel matching shape."""
-    from cliner_spark.queries_r2 import _docpair_edges
-
-    ge = _docpair_edges(spark, sf_dir).select(
-        F.col("src").alias("lo"), F.col("dst").alias("hi")
-    ).localCheckpoint()
-    nodes = (
-        ge.select(F.col("lo").alias("node"))
-        .union(ge.select(F.col("hi").alias("node")))
-        .distinct()
-        .localCheckpoint()
-    )
-    n_nodes = nodes.count()
-    n_edges = ge.count()
-    alive = ge
-    free = nodes
-    matched_frames = []
-    for r in (1, 2, 3):
-        ep = alive.select(
-            "lo", "hi",
-            F.concat(
-                F.md5(
-                    F.concat(
-                        F.lit(f"m{r}:"), F.col("lo").cast("string"), F.lit("-"),
-                        F.col("hi").cast("string"),
-                    )
-                ),
-                F.lit("#"),
-                F.lpad(F.col("lo").cast("string"), 12, "0"),
-            ).alias("k"),
-        ).localCheckpoint()
-        inc = ep.select(F.col("lo").alias("node"), "lo", "hi", "k").unionAll(
-            ep.select(F.col("hi").alias("node"), "lo", "hi", "k")
-        )
-        wn = Window.partitionBy("node").orderBy("k")
-        rk = inc.select("node", "k", F.row_number().over(wn).alias("nrk"))
-        emin = rk.groupBy("node").agg(
-            F.min(F.when(F.col("nrk") == 1, F.col("k"))).alias("k1"),
-            F.min(F.when(F.col("nrk") == 2, F.col("k"))).alias("k2"),
-        )
-        othr = inc.join(emin, "node").select(
-            "lo", "hi", "k",
-            F.when(F.col("k") == F.col("k1"), F.col("k2"))
-            .otherwise(F.col("k1"))
-            .alias("min_other"),
-        )
-        sel = (
-            othr.groupBy("lo", "hi", "k")
-            .agg(F.min(F.coalesce("min_other", F.lit("zz"))).alias("mo"))
-            .filter(F.col("mo") > F.col("k"))
-            .select("lo", "hi")
-            .localCheckpoint()
-        )
-        matched_frames.append(sel.withColumn("rnd", F.lit(r)))
-        sel_nodes = sel.select(F.col("lo").alias("node")).union(
-            sel.select(F.col("hi").alias("node"))
-        )
-        free = free.join(sel_nodes, "node", "left_anti").localCheckpoint()
-        alive = (
-            alive.join(free.select(F.col("node").alias("lo")), "lo", "left_semi")
-            .join(free.select(F.col("node").alias("hi")), "hi", "left_semi")
-            .select("lo", "hi")
-            .localCheckpoint()
-        )
-    n_free_after = free.count()
-    n_edges_left = alive.count()
-    matched = matched_frames[0].unionAll(matched_frames[1]).unionAll(
-        matched_frames[2]
-    )
-    return matched.groupBy("rnd").agg(
-        F.count(F.lit(1)).cast("long").alias("n_edges_matched"),
-        F.lit(n_nodes).cast("long").alias("n_nodes"),
-        F.lit(n_edges).cast("long").alias("n_edges"),
-        F.lit(n_free_after).cast("long").alias("n_free_after"),
-        F.lit(n_edges_left).cast("long").alias("n_edges_left"),
-    )
-
-
-_LOADSHED_SQL = """
-WITH ev AS (
-  SELECT event_id, event_type,
-         CAST(floor(epoch(ts) / 60) AS BIGINT) AS m,
-         md5('pri:' || CAST(event_id AS VARCHAR)) AS pri
-  FROM events
-),
-ranked AS (
-  SELECT event_type, m,
-         row_number() OVER (PARTITION BY m ORDER BY pri DESC, event_id)
-           AS slot
-  FROM ev
-),
-flags AS (
-  SELECT event_type, m, CASE WHEN slot <= 32 THEN 0 ELSE 1 END AS shed
-  FROM ranked
-)
-SELECT event_type,
-       CAST(count(*) AS BIGINT) AS n_events,
-       CAST(sum(shed) AS BIGINT) AS n_shed,
-       round(CAST(sum(shed) AS DOUBLE) / count(*), 6) AS shed_rate,
-       CAST(count(DISTINCT CASE WHEN shed = 1 THEN m END) AS BIGINT)
-         AS n_minutes_shedding,
-       CAST(max(CASE WHEN shed = 1 THEN m END)
-            - min(CASE WHEN shed = 1 THEN m END) AS BIGINT) AS shed_span_min
-FROM flags GROUP BY 1
-"""
-
-
-@register("q_load_shed_priority", _LOADSHED_SQL)
-def q_load_shed_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Priority load-shedding fairness audit — what an overloaded
-    ingestion tier actually does when a minute exceeds capacity: each
-    minute keeps its top-32 events by md5 priority (event-id tie pins)
-    and sheds the rest, and the per-type ledger answers the fairness
-    question — with priorities INDEPENDENT of type, shed rates must be
-    near-equal across types (any skew means the priority channel leaks
-    the type, the bias every shedding postmortem hunts for), which the
-    replica asserts as a max/min shed-rate band. Shedding minutes and
-    their span locate the overload window in time. All counts exact;
-    whole-minute epochs under the session's pinned UTC.
-
-    Scale plan: one rank window per minute partition (the stream's
-    natural shard at ingestion), one map-side rollup per type; no
-    joins."""
-    ev = load(spark, sf_dir, "events").select(
-        "event_id", "event_type",
-        F.floor(F.unix_timestamp("ts") / 60).cast("long").alias("m"),
-        F.md5(F.concat(F.lit("pri:"), F.col("event_id").cast("string"))).alias(
-            "pri"
-        ),
-    )
-    w = Window.partitionBy("m").orderBy(F.desc("pri"), F.asc("event_id"))
-    flags = ev.select(
-        "event_type", "m",
-        F.when(F.row_number().over(w) <= 32, 0).otherwise(1).alias("shed"),
-    )
-    return flags.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("long").alias("n_events"),
-        F.sum("shed").cast("long").alias("n_shed"),
-        F.round(F.sum("shed").cast("double") / F.count(F.lit(1)), 6).alias(
-            "shed_rate"
-        ),
-        F.countDistinct(F.when(F.col("shed") == 1, F.col("m")))
-        .cast("long")
-        .alias("n_minutes_shedding"),
-        (
-            F.max(F.when(F.col("shed") == 1, F.col("m")))
-            - F.min(F.when(F.col("shed") == 1, F.col("m")))
-        )
-        .cast("long")
-        .alias("shed_span_min"),
-    )
-
-
-# --------------------------------------------------------------------------
-# Round 4: LLM-infra/caching/privacy trio — model-router cascade
-# economics, frequency-admission cache hit rates under tumbling refresh,
-# and the secure-aggregation mask-cancellation certificate.
-# --------------------------------------------------------------------------
-
-_ROUTER_SQL = """
-WITH req AS (
-  SELECT event_id,
-         CAST(('0x' || substr(md5('cf:' || CAST(event_id AS VARCHAR)), 1, 2))
-              AS BIGINT) AS conf,
-         CAST(('0x' || substr(md5('c:' || CAST(event_id AS VARCHAR)), 1, 2))
-              AS BIGINT) AS coin
-  FROM events
-),
-taus AS (SELECT CAST(t.t AS BIGINT) AS tau
-         FROM (VALUES (64), (128), (192)) AS t(t)),
-routed AS (
-  SELECT t.tau, r.event_id,
-         CASE WHEN r.conf < t.tau THEN 1 ELSE 0 END AS escalated,
-         CASE WHEN r.conf < t.tau THEN 1
-              WHEN r.coin < r.conf THEN 1 ELSE 0 END AS correct
-  FROM req r CROSS JOIN taus t
-)
-SELECT tau,
-       CAST(count(*) AS BIGINT) AS n_requests,
-       CAST(sum(escalated) AS BIGINT) AS n_escalated,
-       CAST(sum(correct) AS BIGINT) AS n_correct,
-       round(CAST(sum(escalated) AS DOUBLE) / count(*), 6) AS escalation_rate,
-       round(CAST(sum(correct) AS DOUBLE) / count(*), 6) AS accuracy,
-       CAST(count(*) + 9 * sum(escalated) AS BIGINT) AS cost_units,
-       round(CAST(sum(correct) AS DOUBLE)
-             / (count(*) + 9 * sum(escalated)), 6) AS accuracy_per_cost
-FROM routed GROUP BY 1
-"""
-
-
-@register("q_router_cascade", _ROUTER_SQL)
-def q_router_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Model-router cascade economics — the threshold dial every
-    LLM-serving stack tunes: requests carry an md5 confidence byte, the
-    small model answers when confidence >= tau (and is correct with
-    probability confidence/256 — the coin < conf test plants the REAL
-    calibration correlation a router exploits), below tau the request
-    escalates to the big model (always correct, 10x the cost: 1 unit
-    base + 9 on escalation). The tau ladder {64, 128, 192} ships exact
-    escalation counts, accuracy, total cost units, and accuracy-per-
-    cost — the frontier where raising tau buys accuracy linearly but
-    costs superlinearly once the escalated tail dominates. The replica
-    replays every routing decision and asserts accuracy rises
-    monotonically with tau while accuracy-per-cost falls — the shape
-    that makes the middle threshold the production pick.
-
-    Scale plan: one scan fanned by a 3-row broadcast tau spine
-    (whitelisted), collapsed map-side into 3 rows; everything integer
-    but the three rounded ratios."""
-    ev = load(spark, sf_dir, "events")
-    req = ev.select(
-        "event_id",
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("cf:"), F.col("event_id").cast("string"))),
-                1, 2,
-            ),
-            16, 10,
-        ).cast("long").alias("conf"),
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("c:"), F.col("event_id").cast("string"))),
-                1, 2,
-            ),
-            16, 10,
-        ).cast("long").alias("coin"),
-    )
-    taus = spark.createDataFrame([(64,), (128,), (192,)], "tau long")
-    routed = req.crossJoin(F.broadcast(taus)).select(
-        "tau",
-        F.when(F.col("conf") < F.col("tau"), 1).otherwise(0).alias("escalated"),
-        F.when(F.col("conf") < F.col("tau"), 1)
-        .when(F.col("coin") < F.col("conf"), 1)
-        .otherwise(0)
-        .alias("correct"),
-    )
-    return routed.groupBy("tau").agg(
-        F.count(F.lit(1)).cast("long").alias("n_requests"),
-        F.sum("escalated").cast("long").alias("n_escalated"),
-        F.sum("correct").cast("long").alias("n_correct"),
-        F.round(F.sum("escalated").cast("double") / F.count(F.lit(1)), 6).alias(
-            "escalation_rate"
-        ),
-        F.round(F.sum("correct").cast("double") / F.count(F.lit(1)), 6).alias(
-            "accuracy"
-        ),
-        (F.count(F.lit(1)) + 9 * F.sum("escalated"))
-        .cast("long")
-        .alias("cost_units"),
-        F.round(
-            F.sum("correct").cast("double")
-            / (F.count(F.lit(1)) + 9 * F.sum("escalated")),
-            6,
-        ).alias("accuracy_per_cost"),
-    )
-
-
-_LFU_SQL = """
-WITH acc AS (
-  SELECT user_id AS k, event_id,
-         CAST(floor(epoch(ts) / 3600) AS BIGINT) AS h
-  FROM events
-),
-per_hour AS (
-  SELECT h, k, CAST(count(*) AS BIGINT) AS c FROM acc GROUP BY 1, 2
-),
-ranked AS (
-  SELECT h, k,
-         row_number() OVER (PARTITION BY h ORDER BY c DESC, k) AS rk
-  FROM per_hour
-),
-cache AS (
-  SELECT h + 1 AS h_valid, k FROM ranked WHERE rk <= 32
-),
-hits AS (
-  SELECT a.h, a.k,
-         CASE WHEN c.k IS NOT NULL THEN 1 ELSE 0 END AS hit
-  FROM acc a LEFT JOIN cache c ON c.h_valid = a.h AND c.k = a.k
-),
-warm AS (SELECT min(h) AS h0 FROM acc)
-SELECT CAST(hits.k % 8 AS BIGINT) AS key_bucket,
-       CAST(count(*) AS BIGINT) AS n_accesses,
-       CAST(sum(CASE WHEN hits.h > w.h0 THEN hit ELSE 0 END) AS BIGINT)
-         AS n_hits,
-       CAST(count(CASE WHEN hits.h > w.h0 THEN 1 END) AS BIGINT)
-         AS n_eligible,
-       round(CAST(sum(CASE WHEN hits.h > w.h0 THEN hit ELSE 0 END) AS DOUBLE)
-             / count(CASE WHEN hits.h > w.h0 THEN 1 END), 6) AS hit_rate
-FROM hits CROSS JOIN warm w
-GROUP BY 1
-"""
-
-
-@register("q_lfu_hit_rate", _LFU_SQL)
-def q_lfu_hit_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Frequency-admission cache hit-rate replay (the LFU/TinyLFU policy
-    under a TUMBLING refresh — the shape production caches actually run,
-    because a per-access sliding top-k is unpayable): the cache valid
-    during hour h holds the 32 hottest keys of hour h-1 (exact counts,
-    key tie pins), an access hits iff its key is cached, and the
-    first (cold) hour is excluded from the denominator honestly. The
-    per-key-bucket ledger shows what frequency admission buys on this
-    access pattern — and the replica computes the hit rate the offline
-    way to confirm the refresh boundary (an hour-h access must never
-    see hour h's own counts: that is the look-ahead leak this audit
-    would catch in a buggy cache simulator).
-
-    Scale plan: per-hour counts are one map-side groupBy; ranking is
-    per-hour partitions; the hit join is equi on (hour, key). No dense
-    key x time grid anywhere — the tumbling refresh is what keeps the
-    state sparse."""
-    ev = load(spark, sf_dir, "events")
-    acc = ev.select(
-        F.col("user_id").alias("k"),
-        F.floor(F.unix_timestamp("ts") / 3600).cast("long").alias("h"),
-    )
-    per_hour = acc.groupBy("h", "k").agg(F.count(F.lit(1)).cast("long").alias("c"))
-    wr = Window.partitionBy("h").orderBy(F.desc("c"), F.asc("k"))
-    cache = (
-        per_hour.select("h", "k", F.row_number().over(wr).alias("rk"))
-        .filter(F.col("rk") <= 32)
-        .select((F.col("h") + 1).alias("h_valid"), F.col("k").alias("ck"))
-    )
-    hits = acc.join(
-        cache,
-        (F.col("h") == F.col("h_valid")) & (F.col("k") == F.col("ck")),
-        "left",
-    ).select(
-        "k", "h", F.when(F.col("ck").isNotNull(), 1).otherwise(0).alias("hit")
-    )
-    warm = acc.agg(F.min("h").alias("h0"))
-    elig = F.col("h") > F.col("h0")
-    return (
-        hits.crossJoin(F.broadcast(warm))
-        .groupBy((F.col("k") % 8).cast("long").alias("key_bucket"))
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_accesses"),
-            F.sum(F.when(elig, F.col("hit")).otherwise(0))
-            .cast("long")
-            .alias("n_hits"),
-            F.count(F.when(elig, 1)).cast("long").alias("n_eligible"),
-            F.round(
-                F.sum(F.when(elig, F.col("hit")).otherwise(0)).cast("double")
-                / F.count(F.when(elig, 1)),
-                6,
-            ).alias("hit_rate"),
-        )
-    )
-
-
-_SECAGG_SQL = """
-WITH clients AS (SELECT CAST(t.i AS BIGINT) AS cid FROM unnest(range(8)) AS t(i)),
-x AS (
-  SELECT CAST(user_id % 8 AS BIGINT) AS cid, CAST(count(*) AS BIGINT) AS xv
-  FROM events GROUP BY 1
-),
-pairs AS (
-  SELECT a.cid AS i, b.cid AS j,
-         CAST(('0x' || substr(md5('mask:' || CAST(least(a.cid, b.cid)
-                AS VARCHAR) || '-' || CAST(greatest(a.cid, b.cid)
-                AS VARCHAR)), 1, 7)) AS BIGINT) AS m
-  FROM clients a JOIN clients b ON a.cid <> b.cid
-),
-masked AS (
-  SELECT x.cid, x.xv,
-         CAST(x.xv + coalesce(sum(CASE WHEN p.i < p.j THEN p.m
-                                       ELSE -p.m END), 0) AS BIGINT) AS upload
-  FROM x LEFT JOIN pairs p ON p.i = x.cid
-  GROUP BY x.cid, x.xv
-),
-tot AS (
-  SELECT CAST(sum(xv) AS BIGINT) AS true_sum,
-         CAST(sum(upload) AS BIGINT) AS recovered_sum,
-         CAST(count(*) AS BIGINT) AS n_clients,
-         CAST(min(abs(upload - xv)) AS BIGINT) AS min_mask_offset
-  FROM masked
-)
-SELECT m.cid, m.xv AS private_value, m.upload,
-       CAST(abs(m.upload - m.xv) AS BIGINT) AS mask_magnitude,
-       t.true_sum, t.recovered_sum, t.n_clients,
-       CASE WHEN t.true_sum = t.recovered_sum THEN 1 ELSE 0 END
-         AS masks_cancel,
-       CASE WHEN abs(m.upload - m.xv) > 1000000 THEN 1 ELSE 0 END
-         AS value_hidden
-FROM masked m CROSS JOIN tot t
-"""
-
-
-@register("q_secure_agg", _SECAGG_SQL)
-def q_secure_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Secure-aggregation mask-cancellation certificate (Bonawitz 2017,
-    the federated-learning SecAgg core): 8 clients hold private per-
-    client event counts, every unordered pair shares an md5 28-bit mask,
-    client i uploads x_i + sum of +m_ij (for j > i) - m_ij (for j < i),
-    and the server's SUM of uploads equals the true sum EXACTLY because
-    every mask appears once positive and once negative — the
-    masks_cancel verdict ships in-row, while each individual upload
-    sits megaparsecs from its private value (value_hidden per client:
-    the server learns the aggregate, never the addend). The replica
-    re-derives all 28 pairwise masks, every upload, and the
-    cancellation — plus that no PROPER SUBSET of uploads reconstructs
-    its partial sum (the dropout-resilience boundary real SecAgg adds
-    recovery shares for).
-
-    Scale plan: 8 clients x 7 masks is a constant frame; the only
-    corpus touch is the per-client groupBy; exact BIGINT arithmetic
-    throughout (28-bit masks x 7 stay far under 2^63)."""
-    ev = load(spark, sf_dir, "events")
-    clients = spark.range(8).select(F.col("id").cast("long").alias("cid"))
-    x = ev.groupBy((F.col("user_id") % 8).cast("long").alias("cid")).agg(
-        F.count(F.lit(1)).cast("long").alias("xv")
-    )
-    a = clients.select(F.col("cid").alias("i"))
-    b = clients.select(F.col("cid").alias("j"))
-    pairs = a.crossJoin(b).filter(F.col("i") != F.col("j")).select(
-        "i", "j",
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit("mask:"),
-                        F.least("i", "j").cast("string"),
-                        F.lit("-"),
-                        F.greatest("i", "j").cast("string"),
-                    )
-                ),
-                1, 7,
-            ),
-            16, 10,
-        ).cast("long").alias("m"),
-    )
-    masked = (
-        x.join(pairs, x["cid"] == pairs["i"], "left")
-        .groupBy("cid", "xv")
-        .agg(
-            (
-                F.first("xv")
-                + F.coalesce(
-                    F.sum(
-                        F.when(F.col("i") < F.col("j"), F.col("m")).otherwise(
-                            -F.col("m")
-                        )
-                    ),
-                    F.lit(0),
-                )
-            ).cast("long").alias("upload")
-        )
-    )
-    tot = masked.agg(
-        F.sum("xv").cast("long").alias("true_sum"),
-        F.sum("upload").cast("long").alias("recovered_sum"),
-        F.count(F.lit(1)).cast("long").alias("n_clients"),
-    )
-    return masked.crossJoin(F.broadcast(tot)).select(
-        "cid",
-        F.col("xv").alias("private_value"),
-        "upload",
-        F.abs(F.col("upload") - F.col("xv")).cast("long").alias("mask_magnitude"),
-        "true_sum", "recovered_sum", "n_clients",
-        F.when(F.col("true_sum") == F.col("recovered_sum"), 1)
-        .otherwise(0)
-        .alias("masks_cancel"),
-        F.when(F.abs(F.col("upload") - F.col("xv")) > 1000000, 1)
-        .otherwise(0)
-        .alias("value_hidden"),
-    )
-
-
-# --------------------------------------------------------------------------
 # Round 4: training/experimentation/storage-cost trio — gradient-clipping
 # bias ledger, 2x2 factorial interaction contrast, and the LSM
 # leveled-vs-tiered compaction cost model.
@@ -17557,1244 +14956,4 @@ def q_lsm_cost_model(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("levels") * F.col("fanout")).cast("double") / F.col("levels"),
             4,
         ).alias("leveled_write_penalty"),
-    )
-
-
-# --------------------------------------------------------------------------
-# Round 4: distributed-consistency trio — optimistic-concurrency conflict
-# arithmetic, quorum-read latency order statistics, and the minimal-move
-# shard rebalance ledger.
-# --------------------------------------------------------------------------
-
-_OCC_SQL = """
-WITH txn AS (
-  SELECT CAST(floor(epoch(ts) / 300) AS BIGINT) AS epoch,
-         CAST(user_id % 64 AS BIGINT) AS key
-  FROM events
-),
-cell AS (
-  SELECT epoch, key, CAST(count(*) AS BIGINT) AS c
-  FROM txn GROUP BY 1, 2
-),
-tot AS (
-  SELECT CAST(sum(c) AS BIGINT) AS n_txn_all,
-         CAST(sum(c - 1) AS BIGINT) AS n_aborts_all
-  FROM cell
-)
-SELECT CAST(cell.key % 8 AS BIGINT) AS key_bucket,
-       CAST(sum(cell.c) AS BIGINT) AS n_txn,
-       CAST(sum(cell.c - 1) AS BIGINT) AS n_aborts,
-       CAST(max(cell.c) AS BIGINT) AS max_collision,
-       CAST(count(*) AS BIGINT) AS n_cells,
-       round(CAST(sum(cell.c - 1) AS DOUBLE) / sum(cell.c), 6) AS abort_rate,
-       t.n_txn_all, t.n_aborts_all
-FROM cell CROSS JOIN tot t
-GROUP BY 1, 7, 8
-"""
-
-
-@register("q_occ_conflicts", _OCC_SQL)
-def q_occ_conflicts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Optimistic-concurrency conflict arithmetic (Kung-Robinson 1981
-    under first-committer-wins): transactions are events writing key =
-    user % 64 within 5-minute validation epochs, and every (epoch, key)
-    cell with c writers commits exactly ONE — c-1 abort, the count that
-    decides OCC vs locking: abort_rate well under the retry budget
-    means validation beats lock overhead, a hot cell's max_collision
-    says how deep the retry storm goes. The per-key-bucket ledger with
-    global carries is exact end to end (aborts = sum(c-1) needs no
-    simulation — FCW's outcome is a pure count), which is what makes
-    this the capacity formula, not a Monte Carlo.
-
-    Scale plan: one (epoch, key) map-side-combined groupBy — the
-    natural shuffle key of a validation queue — then an 8-row rollup;
-    1-row totals carry (whitelisted)."""
-    ev = load(spark, sf_dir, "events")
-    txn = ev.select(
-        F.floor(F.unix_timestamp("ts") / 300).cast("long").alias("epoch"),
-        (F.col("user_id") % 64).cast("long").alias("key"),
-    )
-    cell = txn.groupBy("epoch", "key").agg(
-        F.count(F.lit(1)).cast("long").alias("c")
-    )
-    tot = cell.agg(
-        F.sum("c").cast("long").alias("n_txn_all"),
-        F.sum(F.col("c") - 1).cast("long").alias("n_aborts_all"),
-    )
-    return (
-        cell.crossJoin(F.broadcast(tot))
-        .groupBy(
-            (F.col("key") % 8).cast("long").alias("key_bucket"),
-            "n_txn_all", "n_aborts_all",
-        )
-        .agg(
-            F.sum("c").cast("long").alias("n_txn"),
-            F.sum(F.col("c") - 1).cast("long").alias("n_aborts"),
-            F.max("c").cast("long").alias("max_collision"),
-            F.count(F.lit(1)).cast("long").alias("n_cells"),
-            F.round(
-                F.sum(F.col("c") - 1).cast("double") / F.sum("c"), 6
-            ).alias("abort_rate"),
-        )
-        .select(
-            "key_bucket", "n_txn", "n_aborts", "max_collision", "n_cells",
-            "abort_rate", "n_txn_all", "n_aborts_all",
-        )
-    )
-
-
-_QUORUM_SQL = """
-WITH req AS (
-  SELECT event_id,
-         50 + CAST(('0x' || substr(md5('l:' || CAST(event_id AS VARCHAR)
-              || ':1'), 1, 3)) AS BIGINT) % 400 AS l1,
-         50 + CAST(('0x' || substr(md5('l:' || CAST(event_id AS VARCHAR)
-              || ':2'), 1, 3)) AS BIGINT) % 400 AS l2,
-         50 + CAST(('0x' || substr(md5('l:' || CAST(event_id AS VARCHAR)
-              || ':3'), 1, 3)) AS BIGINT) % 400 AS l3
-  FROM events
-),
-modes AS (
-  SELECT 'single' AS mode, l1 AS lat FROM req
-  UNION ALL
-  SELECT 'quorum2', l1 + l2 + l3 - greatest(l1, l2, l3)
-         - least(l1, l2, l3) FROM req
-  UNION ALL
-  SELECT 'all3', greatest(l1, l2, l3) FROM req
-),
-nn AS (SELECT mode, CAST(count(*) AS BIGINT) AS n, CAST(sum(lat) AS BIGINT)
-         AS s FROM modes GROUP BY 1),
-grid AS (
-  SELECT mode, lat, CAST(count(*) AS BIGINT) AS c FROM modes GROUP BY 1, 2
-),
-cum AS (
-  SELECT mode, lat,
-         CAST(sum(c) OVER (PARTITION BY mode ORDER BY lat) AS BIGINT) AS f
-  FROM grid
-)
-SELECT nn.mode, nn.n, nn.s,
-       round(CAST(nn.s AS DOUBLE) / nn.n, 6) AS mean_lat,
-       CAST(min(CASE WHEN 2 * cum.f >= nn.n THEN cum.lat END) AS BIGINT)
-         AS p50,
-       CAST(min(CASE WHEN 100 * cum.f >= 99 * nn.n THEN cum.lat END)
-            AS BIGINT) AS p99
-FROM cum JOIN nn USING (mode)
-GROUP BY nn.mode, nn.n, nn.s
-"""
-
-
-@register("q_quorum_latency", _QUORUM_SQL)
-def q_quorum_latency(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quorum-read latency order statistics (the Dynamo R=2-of-3
-    arithmetic, the sibling of q_hedged_requests' duplicate-and-race):
-    each request draws three independent md5 replica latencies in
-    [50, 450) ms, and the three service disciplines are pure order
-    statistics per request — single = replica 1, quorum2 = the MEDIAN
-    (sum minus max minus min, exact integers), all3 = the max — so the
-    mode ladder's mean and exact cross-multiplied p50/p99 (smallest
-    grid value with 100F >= 99n) show the quorum sweet spot: its tail
-    sits far below all3's because one straggler is free, while strong
-    reads (all3) pay the full max-order-statistic tax. The replica
-    recomputes all three curves and asserts the pointwise dominance
-    single-min <= quorum2 <= all3 on every percentile shipped.
-
-    Scale plan: latencies are projections; the mode fanout is a 3-way
-    union; quantiles come from one cumulative window per mode on the
-    value-domain grid (400 points). 1-row per-mode carries via the
-    grouped join."""
-    ev = load(spark, sf_dir, "events")
-
-    def lat(i):
-        return 50 + F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit("l:"), F.col("event_id").cast("string"),
-                        F.lit(f":{i}"),
-                    )
-                ),
-                1, 3,
-            ),
-            16, 10,
-        ).cast("long") % 400
-
-    req = ev.select(
-        lat(1).alias("l1"), lat(2).alias("l2"), lat(3).alias("l3")
-    )
-    modes = (
-        req.select(F.lit("single").alias("mode"), F.col("l1").alias("lat"))
-        .unionAll(
-            req.select(
-                F.lit("quorum2").alias("mode"),
-                (
-                    F.col("l1") + F.col("l2") + F.col("l3")
-                    - F.greatest("l1", "l2", "l3")
-                    - F.least("l1", "l2", "l3")
-                ).alias("lat"),
-            )
-        )
-        .unionAll(
-            req.select(
-                F.lit("all3").alias("mode"),
-                F.greatest("l1", "l2", "l3").alias("lat"),
-            )
-        )
-    )
-    nn = modes.groupBy("mode").agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("lat").cast("long").alias("s"),
-    )
-    grid = modes.groupBy("mode", "lat").agg(
-        F.count(F.lit(1)).cast("long").alias("c")
-    )
-    wm = Window.partitionBy("mode").orderBy("lat").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    cum = grid.select(
-        "mode", "lat", F.sum("c").over(wm).cast("long").alias("f")
-    )
-    return (
-        cum.join(nn, "mode")
-        .groupBy("mode", "n", "s")
-        .agg(
-            F.min(
-                F.when(2 * F.col("f") >= F.col("n"), F.col("lat"))
-            ).cast("long").alias("p50"),
-            F.min(
-                F.when(100 * F.col("f") >= 99 * F.col("n"), F.col("lat"))
-            ).cast("long").alias("p99"),
-        )
-        .select(
-            "mode", "n", "s",
-            F.round(F.col("s").cast("double") / F.col("n"), 6).alias("mean_lat"),
-            "p50", "p99",
-        )
-    )
-
-
-_REBALANCE_SQL = """
-WITH loads AS (
-  SELECT CAST(user_id % 16 AS BIGINT) AS shard,
-         CAST(count(*) AS BIGINT) AS load
-  FROM events GROUP BY 1
-),
-tot AS (SELECT CAST(sum(load) AS BIGINT) AS n FROM loads),
-banded AS (
-  SELECT l.shard, l.load, t.n,
-         CAST((9 * t.n) // 160 AS BIGINT) AS band_lo,
-         CAST((11 * t.n + 159) // 160 AS BIGINT) AS band_hi
-  FROM loads l CROSS JOIN tot t
-),
-plan AS (
-  SELECT shard, load, n, band_lo, band_hi,
-         CAST(greatest(load - band_hi, 0) AS BIGINT) AS surplus,
-         CAST(greatest(band_lo - load, 0) AS BIGINT) AS deficit,
-         CASE WHEN load BETWEEN band_lo AND band_hi THEN 1 ELSE 0 END
-           AS in_band
-  FROM banded
-),
-mv AS (
-  SELECT CAST(greatest(sum(surplus), sum(deficit)) AS BIGINT) AS moves_min
-  FROM plan
-)
-SELECT p.shard, p.load, p.band_lo, p.band_hi, p.surplus, p.deficit,
-       p.in_band, m.moves_min, p.n AS total_rows,
-       round(CAST(m.moves_min AS DOUBLE) / p.n, 6) AS move_frac
-FROM plan p CROSS JOIN mv m
-"""
-
-
-@register("q_rebalance_plan", _REBALANCE_SQL)
-def q_rebalance_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Minimal-move shard rebalance ledger — the question a resharding
-    job answers before touching a byte: with 16 shards and a +/-10%
-    tolerance band around the mean (exact integer band: lo = 9N div
-    160, hi = ceil(11N/160)), each shard's surplus above the ceiling
-    and deficit below the floor are exact BIGINTs, and the minimal rows
-    that must MOVE is max(sum surplus, sum deficit) — the matching
-    lower bound, achievable because any surplus can route to any
-    deficit. move_frac against the table size is the cost a rebalance
-    proposal quotes; in_band counts how many shards need no touch at
-    all. Contrast with q_rendezvous_hashing (which minimizes movement
-    under TOPOLOGY change): this is movement under LOAD change, the
-    other half of the resharding story.
-
-    Scale plan: one per-shard groupBy, 1-row total + moves carries
-    (whitelisted); the plan frame is 16 rows."""
-    ev = load(spark, sf_dir, "events")
-    loads = ev.groupBy((F.col("user_id") % 16).cast("long").alias("shard")).agg(
-        F.count(F.lit(1)).cast("long").alias("load")
-    )
-    tot = loads.agg(F.sum("load").cast("long").alias("n"))
-    banded = loads.crossJoin(F.broadcast(tot)).select(
-        "shard", "load", "n",
-        F.floor(9 * F.col("n") / 160).cast("long").alias("band_lo"),
-        F.floor((11 * F.col("n") + 159) / 160).cast("long").alias("band_hi"),
-    )
-    plan = banded.select(
-        "shard", "load", "n", "band_lo", "band_hi",
-        F.greatest(F.col("load") - F.col("band_hi"), F.lit(0))
-        .cast("long")
-        .alias("surplus"),
-        F.greatest(F.col("band_lo") - F.col("load"), F.lit(0))
-        .cast("long")
-        .alias("deficit"),
-        F.when(
-            F.col("load").between(F.col("band_lo"), F.col("band_hi")), 1
-        )
-        .otherwise(0)
-        .alias("in_band"),
-    )
-    mv = plan.agg(
-        F.greatest(F.sum("surplus"), F.sum("deficit"))
-        .cast("long")
-        .alias("moves_min")
-    )
-    return plan.crossJoin(F.broadcast(mv)).select(
-        "shard", "load", "band_lo", "band_hi", "surplus", "deficit",
-        "in_band", "moves_min",
-        F.col("n").alias("total_rows"),
-        F.round(F.col("moves_min").cast("double") / F.col("n"), 6).alias(
-            "move_frac"
-        ),
-    )
-
-
-# --------------------------------------------------------------------------
-# Round 4: failure-domain trio — dependency-cascade blast radius,
-# TTL-jitter stampede flattening, and the read-your-writes staleness
-# ledger.
-# --------------------------------------------------------------------------
-
-
-def _cascade_sql() -> str:
-    blocks = []
-    prev = "st0c"
-    for r in range(1, 8):
-        blocks.append(
-            f"""
-agg{r} AS MATERIALIZED (
-  SELECT e.dst AS task,
-         CAST(count(*) AS BIGINT) AS n_preds,
-         CAST(sum(CASE WHEN p.failed = 1 THEN 1 ELSE 0 END) AS BIGINT)
-           AS n_fp
-  FROM cedges e JOIN {prev} p ON p.task = e.src
-  GROUP BY 1
-),
-st{r}c AS MATERIALIZED (
-  SELECT s.task,
-         CAST(CASE WHEN s.failed = 1 THEN 1
-              WHEN coalesce(a.n_preds, 0) > 0
-                   AND 2 * coalesce(a.n_fp, 0) >= a.n_preds THEN 1
-              ELSE 0 END AS BIGINT) AS failed,
-         CASE WHEN s.failed = 1 THEN s.fail_round
-              WHEN coalesce(a.n_preds, 0) > 0
-                   AND 2 * coalesce(a.n_fp, 0) >= a.n_preds THEN {r}
-              ELSE NULL END AS fail_round
-  FROM {prev} s LEFT JOIN agg{r} a USING (task)
-)""".strip()
-        )
-        prev = f"st{r}c"
-    return ",\n".join(blocks)
-
-
-_CASCADE_SQL = f"""
-WITH ctasks AS (
-  SELECT CAST(t.i AS BIGINT) AS task FROM unnest(range(64)) AS t(i)
-),
-cedges AS MATERIALIZED (
-  SELECT a.task AS src, b.task AS dst
-  FROM ctasks a JOIN ctasks b ON b.task // 8 = a.task // 8 + 1
-  WHERE substr(md5('e:' || CAST(a.task AS VARCHAR) || '-'
-               || CAST(b.task AS VARCHAR)), 1, 1) < '6'
-),
-st0c AS (
-  SELECT task,
-         CAST(CASE WHEN task < 8 AND substr(md5('f0:'
-                || CAST(task AS VARCHAR)), 1, 1) < '4' THEN 1 ELSE 0 END
-              AS BIGINT) AS failed,
-         CASE WHEN task < 8 AND substr(md5('f0:'
-                || CAST(task AS VARCHAR)), 1, 1) < '4' THEN 0 END
-           AS fail_round
-  FROM ctasks
-),
-{_cascade_sql()},
-fin AS (
-  SELECT s.task, CAST(s.task // 8 AS BIGINT) AS layer, s.failed,
-         CAST(s.fail_round AS BIGINT) AS fail_round
-  FROM st7c s
-),
-tot AS (
-  SELECT CAST(sum(failed) AS BIGINT) AS n_failed,
-         CAST(count(*) AS BIGINT) AS n_tasks
-  FROM fin
-)
-SELECT f.task, f.layer, f.failed, f.fail_round,
-       t.n_failed, t.n_tasks,
-       round(CAST(t.n_failed AS DOUBLE) / t.n_tasks, 6) AS blast_radius
-FROM fin f CROSS JOIN tot t
-"""
-
-
-@register("q_cascade_failure", _CASCADE_SQL)
-def q_cascade_failure(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Dependency-cascade blast radius over q_critical_path's layered
-    64-task DAG — the incident-model question 'if a quarter of the
-    sources go down, how much of the pipeline follows': md5 seeds fail
-    25% of layer-0 tasks, and each propagation round a task fails iff a
-    MAJORITY of its predecessors have failed (2*failed_preds >= n_preds
-    — the threshold-cascade model of Watts 2002; strictly weaker than
-    any-pred failure, so survivors with one healthy majority input
-    firewall the cascade). Seven unrolled rounds reach the fixpoint by
-    the layer bound; each task ships its layer, final state, and FIRST
-    failure round (seeds at round 0, honest NULL for survivors), with
-    the blast-radius fraction carried in-row. The replica replays the
-    cascade and asserts monotonicity (failures only grow) and that the
-    round number equals the earliest majority round.
-
-    Scale plan: each round is one edge equi-join + majority groupBy on
-    a metadata-sized frame (the Pregel threshold-propagation shape);
-    DuckDB rounds AS MATERIALIZED against per-reference CTE
-    re-evaluation — the q_greedy_matching lesson applied up front."""
-    tasks = spark.range(64).select(F.col("id").cast("long").alias("task"))
-    a = tasks.select(F.col("task").alias("src"))
-    b = tasks.select(F.col("task").alias("dst"))
-    edges = (
-        a.crossJoin(b)
-        .filter(F.floor(F.col("dst") / 8) == F.floor(F.col("src") / 8) + 1)
-        .filter(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit("e:"), F.col("src").cast("string"), F.lit("-"),
-                        F.col("dst").cast("string"),
-                    )
-                ),
-                1, 1,
-            )
-            < "6"
-        )
-        .localCheckpoint()
-    )
-    seed = (F.col("task") < 8) & (
-        F.substring(
-            F.md5(F.concat(F.lit("f0:"), F.col("task").cast("string"))), 1, 1
-        )
-        < "4"
-    )
-    st = tasks.select(
-        "task",
-        F.when(seed, 1).otherwise(0).cast("long").alias("failed"),
-        F.when(seed, 0).cast("long").alias("fail_round"),
-    )
-    for r in range(1, 8):
-        agg = (
-            edges.join(
-                st.select(F.col("task").alias("src"), F.col("failed").alias("pf")),
-                "src",
-            )
-            .groupBy(F.col("dst").alias("task"))
-            .agg(
-                F.count(F.lit(1)).cast("long").alias("n_preds"),
-                F.sum("pf").cast("long").alias("n_fp"),
-            )
-        )
-        newly = (F.coalesce(F.col("n_preds"), F.lit(0)) > 0) & (
-            2 * F.coalesce(F.col("n_fp"), F.lit(0)) >= F.col("n_preds")
-        )
-        st = (
-            st.join(agg, "task", "left")
-            .select(
-                "task",
-                F.when(F.col("failed") == 1, 1)
-                .when(newly, 1)
-                .otherwise(0)
-                .cast("long")
-                .alias("failed"),
-                F.when(F.col("failed") == 1, F.col("fail_round"))
-                .when(newly, F.lit(r))
-                .cast("long")
-                .alias("fail_round"),
-            )
-            .localCheckpoint()
-        )
-    fin = st.select(
-        "task", F.floor(F.col("task") / 8).cast("long").alias("layer"),
-        "failed", "fail_round",
-    )
-    tot = fin.agg(
-        F.sum("failed").cast("long").alias("n_failed"),
-        F.count(F.lit(1)).cast("long").alias("n_tasks"),
-    )
-    return fin.crossJoin(F.broadcast(tot)).select(
-        "task", "layer", "failed", "fail_round", "n_failed", "n_tasks",
-        F.round(
-            F.col("n_failed").cast("double") / F.col("n_tasks"), 6
-        ).alias("blast_radius"),
-    )
-
-
-_TTLJITTER_SQL = """
-WITH ent AS (
-  SELECT event_id, CAST(floor(epoch(ts)) AS BIGINT) AS born,
-         CAST(('0x' || substr(md5('j:' || CAST(event_id AS VARCHAR)), 1, 3))
-              AS BIGINT) % 600 AS jit
-  FROM events
-),
-exp AS (
-  SELECT 'fixed' AS policy, CAST((born + 3600) // 60 AS BIGINT) AS exp_min
-  FROM ent
-  UNION ALL
-  SELECT 'jittered', CAST((born + 3600 + jit) // 60 AS BIGINT) FROM ent
-),
-hist AS (
-  SELECT policy, exp_min, CAST(count(*) AS BIGINT) AS c
-  FROM exp GROUP BY 1, 2
-),
-nn AS (SELECT policy, CAST(count(*) AS BIGINT) AS n_minutes,
-              CAST(sum(c) AS BIGINT) AS n_entries FROM hist GROUP BY 1),
-cum AS (
-  SELECT policy, c,
-         CAST(sum(cnt_c) OVER (PARTITION BY policy ORDER BY c) AS BIGINT)
-           AS f
-  FROM (SELECT policy, c, CAST(count(*) AS BIGINT) AS cnt_c
-        FROM hist GROUP BY 1, 2)
-)
-SELECT nn.policy, nn.n_entries, nn.n_minutes,
-       (SELECT CAST(max(c) AS BIGINT) FROM hist h
-        WHERE h.policy = nn.policy) AS max_per_min,
-       (SELECT CAST(min(cum.c) AS BIGINT) FROM cum
-        WHERE cum.policy = nn.policy
-          AND 100 * cum.f >= 99 * nn.n_minutes) AS p99_per_min,
-       round(CAST(nn.n_entries AS DOUBLE) / nn.n_minutes, 6) AS mean_per_min
-FROM nn
-"""
-
-
-@register("q_ttl_jitter", _TTLJITTER_SQL)
-def q_ttl_jitter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TTL-jitter stampede flattening — the thundering-herd fix
-    quantified: cache entries born at the event stream's timestamps
-    expire at a fixed 3600 s TTL (so the expiry histogram per minute
-    REPLAYS the insert burst an hour later — correlated expiries are
-    the stampede) versus a 0-600 s md5 jitter that spreads each burst
-    over ten minutes. Per policy the per-minute expiry histogram's max,
-    exact cross-multiplied p99 (over MINUTES: the smallest count whose
-    cumulative minute mass reaches 99%), and mean ship side by side —
-    jitter leaves the mean untouched (same entries, more minutes) while
-    pulling the max toward it, which is the whole argument. Whole-
-    second epochs under pinned UTC; every count exact.
-
-    Scale plan: one scan, a 2-way projection union, two map-side
-    groupBys and a count-of-counts window on the value domain."""
-    ev = load(spark, sf_dir, "events")
-    ent = ev.select(
-        F.floor(F.unix_timestamp("ts")).cast("long").alias("born"),
-        (
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(F.lit("j:"), F.col("event_id").cast("string"))),
-                    1, 3,
-                ),
-                16, 10,
-            ).cast("long")
-            % 600
-        ).alias("jit"),
-    )
-    exp = ent.select(
-        F.lit("fixed").alias("policy"),
-        F.floor((F.col("born") + 3600) / 60).cast("long").alias("exp_min"),
-    ).unionAll(
-        ent.select(
-            F.lit("jittered").alias("policy"),
-            F.floor((F.col("born") + 3600 + F.col("jit")) / 60)
-            .cast("long")
-            .alias("exp_min"),
-        )
-    )
-    hist = exp.groupBy("policy", "exp_min").agg(
-        F.count(F.lit(1)).cast("long").alias("c")
-    )
-    nn = hist.groupBy("policy").agg(
-        F.count(F.lit(1)).cast("long").alias("n_minutes"),
-        F.sum("c").cast("long").alias("n_entries"),
-        F.max("c").cast("long").alias("max_per_min"),
-    )
-    coc = hist.groupBy("policy", "c").agg(
-        F.count(F.lit(1)).cast("long").alias("cnt_c")
-    )
-    wv = Window.partitionBy("policy").orderBy("c").rowsBetween(
-        Window.unboundedPreceding, 0
-    )
-    cum = coc.select(
-        "policy", "c", F.sum("cnt_c").over(wv).cast("long").alias("f")
-    )
-    p99 = (
-        cum.join(nn.select("policy", "n_minutes"), "policy")
-        .filter(100 * F.col("f") >= 99 * F.col("n_minutes"))
-        .groupBy("policy")
-        .agg(F.min("c").cast("long").alias("p99_per_min"))
-    )
-    return nn.join(p99, "policy").select(
-        "policy", "n_entries", "n_minutes", "max_per_min", "p99_per_min",
-        F.round(
-            F.col("n_entries").cast("double") / F.col("n_minutes"), 6
-        ).alias("mean_per_min"),
-    )
-
-
-_RYW_SQL = """
-WITH ops AS (
-  SELECT user_id, CAST(floor(epoch(ts)) AS BIGINT) AS sec, event_id
-  FROM events
-),
-gaps AS (
-  SELECT user_id,
-         sec - lag(sec) OVER (PARTITION BY user_id ORDER BY sec, event_id)
-           AS gap_s
-  FROM ops
-),
-lags AS (SELECT CAST(l.l AS BIGINT) AS replica_lag_s
-         FROM (VALUES (1), (10), (60)) AS l(l))
-SELECT lg.replica_lag_s,
-       CAST(count(*) AS BIGINT) AS n_pairs,
-       CAST(count(CASE WHEN g.gap_s < lg.replica_lag_s THEN 1 END) AS BIGINT)
-         AS n_violations,
-       round(CAST(count(CASE WHEN g.gap_s < lg.replica_lag_s THEN 1 END)
-                  AS DOUBLE) / count(*), 6) AS violation_rate,
-       CAST(count(DISTINCT CASE WHEN g.gap_s < lg.replica_lag_s
-                           THEN g.user_id END) AS BIGINT) AS n_users_affected
-FROM gaps g CROSS JOIN lags lg
-WHERE g.gap_s IS NOT NULL
-GROUP BY 1
-"""
-
-
-@register("q_read_your_writes", _RYW_SQL)
-def q_read_your_writes(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Read-your-writes staleness ledger — the session-guarantee
-    arithmetic (Terry 1994) behind 'why did my update disappear': if a
-    user's next operation lands within gap seconds of the previous one
-    and the replica serving it lags more than that gap, the session
-    guarantee breaks — so per candidate replica lag {1, 10, 60} s the
-    audit counts exactly the consecutive same-user pairs with gap <
-    lag, the violation rate, and the distinct users who would hit it.
-    This is the table that decides between sticky routing (pin the
-    session to the write region) and bounded-staleness SLAs: at 1 s
-    almost nobody notices, at 60 s the rapid-fire users all do — the
-    replica replays every gap and holds the monotone-in-lag growth.
-
-    Scale plan: one lag window per user partition (the stream's key),
-    then a 3-row broadcast lag spine (whitelisted) collapsed to 3
-    rows; second-level epochs under pinned UTC, differences only."""
-    ev = load(spark, sf_dir, "events")
-    ops = ev.select(
-        "user_id",
-        F.floor(F.unix_timestamp("ts")).cast("long").alias("sec"),
-        "event_id",
-    )
-    w = Window.partitionBy("user_id").orderBy("sec", "event_id")
-    gaps = ops.select(
-        "user_id", (F.col("sec") - F.lag("sec").over(w)).alias("gap_s")
-    ).filter(F.col("gap_s").isNotNull())
-    lags = spark.createDataFrame([(1,), (10,), (60,)], "replica_lag_s long")
-    viol = F.col("gap_s") < F.col("replica_lag_s")
-    return gaps.crossJoin(F.broadcast(lags)).groupBy("replica_lag_s").agg(
-        F.count(F.lit(1)).cast("long").alias("n_pairs"),
-        F.count(F.when(viol, 1)).cast("long").alias("n_violations"),
-        F.round(
-            F.count(F.when(viol, 1)).cast("double") / F.count(F.lit(1)), 6
-        ).alias("violation_rate"),
-        F.countDistinct(F.when(viol, F.col("user_id")))
-        .cast("long")
-        .alias("n_users_affected"),
-    )
-
-
-# --------------------------------------------------------------------------
-# Round 4: operations-health trio — heartbeat flap/outage ledger via the
-# gap trick, Jain's fairness index in exact rationals, and gray-failure
-# detection with its own confusion matrix.
-# --------------------------------------------------------------------------
-
-_HEARTBEAT_SQL = """
-WITH hb AS (
-  SELECT DISTINCT CAST(user_id % 16 AS BIGINT) AS node,
-         CAST(floor(epoch(ts) / 60) AS BIGINT) AS m
-  FROM events
-),
-gaps AS (
-  SELECT node, m,
-         m - lag(m) OVER (PARTITION BY node ORDER BY m) AS gap
-  FROM hb
-)
-SELECT node,
-       CAST(count(*) AS BIGINT) AS up_minutes,
-       CAST(max(m) - min(m) + 1 AS BIGINT) AS span_minutes,
-       CAST(count(CASE WHEN gap > 1 THEN 1 END) AS BIGINT) AS n_outages,
-       CAST(max(CASE WHEN gap > 1 THEN gap - 1 END) AS BIGINT)
-         AS longest_outage_min,
-       CAST(max(m) - min(m) + 1 - count(*) AS BIGINT) AS down_minutes,
-       round(CAST(count(*) AS DOUBLE) / (max(m) - min(m) + 1), 6)
-         AS availability
-FROM gaps GROUP BY 1
-"""
-
-
-@register("q_heartbeat_flaps", _HEARTBEAT_SQL)
-def q_heartbeat_flaps(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Heartbeat flap/outage ledger via the GAP TRICK — liveness
-    accounting with no dense time grid: a node (user bucket) is up in
-    any minute it emitted an event, and every fact a status page needs
-    falls out of the lag() gaps between CONSECUTIVE up-minutes: an
-    outage is a gap > 1 (length gap-1), the outage count is the flap
-    count, down_minutes = span - up_minutes conserves the calendar, and
-    availability is one division of exact integers. The dense-grid
-    formulation (q_stream_state_audit's spine) costs O(nodes x minutes);
-    this costs O(heartbeats) — the difference between a metrics query
-    and a metrics bill at fleet scale. Honest NULL longest-outage for
-    never-down nodes.
-
-    Scale plan: one distinct projection, one lag window per node
-    partition, one rollup; no spines, no joins."""
-    ev = load(spark, sf_dir, "events")
-    hb = ev.select(
-        (F.col("user_id") % 16).cast("long").alias("node"),
-        F.floor(F.unix_timestamp("ts") / 60).cast("long").alias("m"),
-    ).distinct()
-    w = Window.partitionBy("node").orderBy("m")
-    gaps = hb.select("node", "m", (F.col("m") - F.lag("m").over(w)).alias("gap"))
-    return gaps.groupBy("node").agg(
-        F.count(F.lit(1)).cast("long").alias("up_minutes"),
-        (F.max("m") - F.min("m") + 1).cast("long").alias("span_minutes"),
-        F.count(F.when(F.col("gap") > 1, 1)).cast("long").alias("n_outages"),
-        F.max(F.when(F.col("gap") > 1, F.col("gap") - 1))
-        .cast("long")
-        .alias("longest_outage_min"),
-        (F.max("m") - F.min("m") + 1 - F.count(F.lit(1)))
-        .cast("long")
-        .alias("down_minutes"),
-        F.round(
-            F.count(F.lit(1)).cast("double") / (F.max("m") - F.min("m") + 1), 6
-        ).alias("availability"),
-    )
-
-
-_JAIN_SQL = """
-WITH loads AS (
-  SELECT event_type, user_id, CAST(count(*) AS BIGINT) AS x
-  FROM events GROUP BY 1, 2
-)
-SELECT event_type,
-       CAST(count(*) AS BIGINT) AS n_users,
-       CAST(sum(x) AS BIGINT) AS sum_x,
-       CAST(sum(x * x) AS BIGINT) AS sum_x2,
-       CAST(sum(x) * sum(x) AS BIGINT) AS jain_num,
-       CAST(count(*) * sum(x * x) AS BIGINT) AS jain_den,
-       round(CAST(sum(x) AS DOUBLE) * sum(x) / (count(*) * sum(x * x)), 6)
-         AS jain_index
-FROM loads GROUP BY 1
-"""
-
-
-@register("q_jain_fairness", _JAIN_SQL)
-def q_jain_fairness(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Jain's fairness index (Jain-Chiu-Hawe 1984) of per-user load
-    within each event type — THE allocation-fairness scalar networking
-    standardized on, in exact rationals: J = (sum x)^2 / (n * sum x^2)
-    lives in [1/n, 1] with 1 = perfectly even and 1/n = one user owns
-    everything, and both the numerator and denominator are BIGINTs (a
-    corpus of 10^5 events keeps (sum x)^2 at 10^10 — the envelope holds
-    to ~3*10^9 events per type). Where q_maxmin_fairshare PRESCRIBES an
-    allocation and q_key_skew flags the hot keys, Jain GRADES the
-    distribution in one comparable number per type — the k-anonymity of
-    load balancing dashboards. The replica recomputes J in Fractions
-    and holds the [1/n, 1] bounds plus the scale-invariance sanity
-    (doubling every load leaves J exactly unchanged).
-
-    Scale plan: one (type, user) map-side groupBy, one rollup; no
-    joins, no windows."""
-    ev = load(spark, sf_dir, "events")
-    loads = ev.groupBy("event_type", "user_id").agg(
-        F.count(F.lit(1)).cast("long").alias("x")
-    )
-    return loads.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("long").alias("n_users"),
-        F.sum("x").cast("long").alias("sum_x"),
-        F.sum(F.col("x") * F.col("x")).cast("long").alias("sum_x2"),
-        (F.sum("x") * F.sum("x")).cast("long").alias("jain_num"),
-        (F.count(F.lit(1)) * F.sum(F.col("x") * F.col("x")))
-        .cast("long")
-        .alias("jain_den"),
-        F.round(
-            F.sum("x").cast("double") * F.sum("x")
-            / (F.count(F.lit(1)) * F.sum(F.col("x") * F.col("x"))),
-            6,
-        ).alias("jain_index"),
-    )
-
-
-_GRAY_SQL = """
-WITH req AS (
-  SELECT CAST(user_id % 16 AS BIGINT) AS node, event_id,
-         substr(md5('gray:' || CAST(user_id % 16 AS VARCHAR)), 1, 1) < '4'
-           AS is_gray,
-         CAST(('0x' || substr(md5('sv:' || CAST(event_id AS VARCHAR)), 1, 2))
-              AS BIGINT) AS s_coin,
-         CAST(('0x' || substr(md5('cl:' || CAST(event_id AS VARCHAR)), 1, 2))
-              AS BIGINT) AS c_coin
-  FROM events
-),
-per AS (
-  SELECT node, CAST(max(CASE WHEN is_gray THEN 1 ELSE 0 END) AS BIGINT)
-           AS truth_gray,
-         CAST(count(*) AS BIGINT) AS n,
-         CAST(count(CASE WHEN s_coin < 248 THEN 1 END) AS BIGINT) AS s_ok,
-         CAST(count(CASE WHEN c_coin < (CASE WHEN is_gray THEN 200
-                                        ELSE 245 END) THEN 1 END) AS BIGINT)
-           AS c_ok
-  FROM req GROUP BY 1
-),
-det AS (
-  SELECT *, CASE WHEN 20 * (s_ok - c_ok) > n THEN 1 ELSE 0 END AS detected
-  FROM per
-),
-conf AS (
-  SELECT CAST(count(CASE WHEN detected = 1 AND truth_gray = 1 THEN 1 END)
-              AS BIGINT) AS tp,
-         CAST(count(CASE WHEN detected = 1 AND truth_gray = 0 THEN 1 END)
-              AS BIGINT) AS fp,
-         CAST(count(CASE WHEN detected = 0 AND truth_gray = 1 THEN 1 END)
-              AS BIGINT) AS fn,
-         CAST(count(CASE WHEN detected = 0 AND truth_gray = 0 THEN 1 END)
-              AS BIGINT) AS tn
-  FROM det
-)
-SELECT d.node, d.truth_gray, d.n, d.s_ok, d.c_ok, d.detected,
-       round(CAST(d.s_ok - d.c_ok AS DOUBLE) / d.n, 6) AS rate_gap,
-       c.tp, c.fp, c.fn, c.tn
-FROM det d CROSS JOIN conf c
-"""
-
-
-@register("q_gray_failure", _GRAY_SQL)
-def q_gray_failure(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gray-failure detection by differential observability (Huang
-    2017's 'the Achilles heel of cloud-scale systems'): a gray node
-    reports HEALTHY server-side (every node's server success sits at
-    248/256) while its CLIENTS quietly suffer (md5-planted client
-    success 200/256 on the 4/16 gray nodes vs 245/256 on healthy
-    ones) — so the detector is the cross-multiplied differential test
-    20*(s_ok - c_ok) > n, i.e. a >5pp server-minus-client gap, and
-    because the ground truth is planted the query ships ITS OWN
-    confusion matrix (tp/fp/fn/tn as in-row carries). The replica
-    replays every coin and asserts PERFECT RECALL at this effect size
-    (the planted 17.6pp gap dwarfs the 5pp threshold); false positives
-    are bounded but not zero at the smallest fixture, where a healthy
-    node's ~60 requests put ~4pp of sampling noise under a 5pp
-    threshold — exactly the n-dependent false-alarm rate a production
-    rollout would tune with this same table. The insight this
-    operator encodes: neither side's health alone detects gray; only
-    the DIFFERENCE does.
-
-    Scale plan: one scan into per-node conditional counts (map-side
-    combined), a 1-row confusion carry (whitelisted); 16 rows out."""
-    ev = load(spark, sf_dir, "events")
-    node = (F.col("user_id") % 16).cast("long")
-    is_gray = (
-        F.substring(
-            F.md5(F.concat(F.lit("gray:"), node.cast("string"))), 1, 1
-        )
-        < "4"
-    )
-    req = ev.select(
-        node.alias("node"),
-        is_gray.alias("is_gray"),
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("sv:"), F.col("event_id").cast("string"))),
-                1, 2,
-            ),
-            16, 10,
-        ).cast("long").alias("s_coin"),
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("cl:"), F.col("event_id").cast("string"))),
-                1, 2,
-            ),
-            16, 10,
-        ).cast("long").alias("c_coin"),
-    )
-    per = req.groupBy("node").agg(
-        F.max(F.when(F.col("is_gray"), 1).otherwise(0))
-        .cast("long")
-        .alias("truth_gray"),
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.count(F.when(F.col("s_coin") < 248, 1)).cast("long").alias("s_ok"),
-        F.count(
-            F.when(
-                F.col("c_coin")
-                < F.when(F.col("is_gray"), 200).otherwise(245),
-                1,
-            )
-        ).cast("long").alias("c_ok"),
-    )
-    det = per.select(
-        "*",
-        F.when(20 * (F.col("s_ok") - F.col("c_ok")) > F.col("n"), 1)
-        .otherwise(0)
-        .alias("detected"),
-    )
-    conf = det.agg(
-        F.count(F.when((F.col("detected") == 1) & (F.col("truth_gray") == 1), 1))
-        .cast("long")
-        .alias("tp"),
-        F.count(F.when((F.col("detected") == 1) & (F.col("truth_gray") == 0), 1))
-        .cast("long")
-        .alias("fp"),
-        F.count(F.when((F.col("detected") == 0) & (F.col("truth_gray") == 1), 1))
-        .cast("long")
-        .alias("fn"),
-        F.count(F.when((F.col("detected") == 0) & (F.col("truth_gray") == 0), 1))
-        .cast("long")
-        .alias("tn"),
-    )
-    return det.crossJoin(F.broadcast(conf)).select(
-        "node", "truth_gray", "n", "s_ok", "c_ok", "detected",
-        F.round(
-            (F.col("s_ok") - F.col("c_ok")).cast("double") / F.col("n"), 6
-        ).alias("rate_gap"),
-        "tp", "fp", "fn", "tn",
-    )
-
-
-# --------------------------------------------------------------------------
-# Round 4: interaction-dynamics trio — directed-graph dyad census /
-# reciprocity, Goh-Barabási burstiness + memory of inter-event times,
-# and the WAL group-commit batching ladder.
-# --------------------------------------------------------------------------
-
-_RECIP_SQL = """
-WITH seq AS (
-  SELECT user_id,
-         CAST(floor(epoch(ts)) AS BIGINT) AS sec,
-         lag(user_id) OVER (ORDER BY ts, event_id) AS prev_user,
-         CAST(floor(epoch(lag(ts) OVER (ORDER BY ts, event_id))) AS BIGINT)
-           AS prev_sec
-  FROM events
-),
-edges AS (
-  SELECT DISTINCT prev_user AS src, user_id AS dst
-  FROM seq
-  WHERE prev_user IS NOT NULL AND prev_user <> user_id
-    AND sec - prev_sec <= 60
-),
-nodes AS (
-  SELECT CAST(count(DISTINCT u) AS BIGINT) AS n FROM (
-    SELECT src AS u FROM edges UNION SELECT dst FROM edges
-  )
-),
-recip AS (
-  SELECT CAST(count(*) AS BIGINT) AS n_edges,
-         CAST(count(CASE WHEN r.src IS NOT NULL THEN 1 END) AS BIGINT)
-           AS n_recip_edges
-  FROM edges e
-  LEFT JOIN edges r ON r.src = e.dst AND r.dst = e.src
-)
-SELECT n.n AS n_nodes, r.n_edges, r.n_recip_edges,
-       CAST(r.n_recip_edges // 2 AS BIGINT) AS n_mutual_pairs,
-       CAST(r.n_edges - r.n_recip_edges AS BIGINT) AS n_asym_pairs,
-       CAST(n.n * (n.n - 1) // 2 - r.n_recip_edges // 2
-            - (r.n_edges - r.n_recip_edges) AS BIGINT) AS n_null_dyads,
-       round(CAST(r.n_recip_edges AS DOUBLE) / r.n_edges, 6) AS reciprocity
-FROM nodes n CROSS JOIN recip r
-"""
-
-
-@register("q_reciprocity", _RECIP_SQL)
-def q_reciprocity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Directed-graph reciprocity + dyad census (Holland-Leinhardt 1970s
-    MAN census) over the interaction graph implied by the event stream —
-    consecutive events by different users within 60 s become a directed
-    src -> dst edge: reciprocity = the fraction of directed edges whose
-    reverse also exists (the self-join on swapped endpoints), and the
-    census splits all C(n,2) dyads into Mutual (reciprocated pairs =
-    recip_edges/2), Asymmetric (one-way), and Null — the triple that
-    separates a conversational medium (high M) from a broadcast one
-    (high A) before anyone fits a model. All counts exact; the census
-    conservation M + A + N = C(n,2) is the replica's checksum.
-
-    Scale plan (restructured, round-4 ADVICE: the draft used ONE global
-    lag window = Exchange SinglePartition + a one-task sort over the
-    whole event stream): consecutive-pair extraction now buckets time
-    into 3600 s spans and runs the lag window PARTITIONED by bucket;
-    the only global-order pairs a bucketed lag misses are the
-    (last-of-bucket, first-of-next-bucket) seams, which are recovered
-    exactly by a per-bucket argmin/argmax rollup equi-joined on
-    bucket+1. Exact because the 60 s gap cap << the 3600 s bucket
-    width: any seam pair spanning a >=1-bucket hole has gap > 3600 s
-    and is filtered regardless, so only adjacent-bucket seams can
-    qualify. One partitioned window + one dimension-sized seam join
-    replaces the single-task sort; then a distinct edge projection,
-    one equi self-join on swapped endpoints (never a cross), two
-    1-row carries."""
-    ev = load(spark, sf_dir, "events")
-    sec = F.floor(F.unix_timestamp("ts")).cast("long")
-    base = ev.select(
-        "user_id", "event_id", "ts", sec.alias("sec"),
-        F.floor(sec / 3600).cast("long").alias("bucket"),
-    )
-    wb = Window.partitionBy("bucket").orderBy("ts", "event_id")
-    wb_desc = Window.partitionBy("bucket").orderBy(
-        F.desc("ts"), F.desc("event_id")
-    )
-    seq = base.select(
-        "user_id", "sec", "bucket",
-        F.lag("user_id").over(wb).alias("prev_user"),
-        F.lag("sec").over(wb).alias("prev_sec"),
-        F.row_number().over(wb).alias("rn_first"),
-        F.row_number().over(wb_desc).alias("rn_last"),
-    )
-    inner_pairs = seq.filter(F.col("prev_user").isNotNull()).select(
-        F.col("prev_user").alias("src"), F.col("user_id").alias("dst"),
-        (F.col("sec") - F.col("prev_sec")).alias("gap"),
-    )
-    # bucket seams: the globally-consecutive pair crossing each bucket
-    # boundary is (last event of b, first event of the next non-empty
-    # bucket); non-adjacent seams carry gap > 3600 - 60 and cannot pass
-    # the 60 s filter, so joining on bucket+1 is exact.
-    lasts = seq.filter(F.col("rn_last") == 1).select(
-        (F.col("bucket") + 1).alias("nbucket"),
-        F.col("user_id").alias("src"), F.col("sec").alias("last_sec"),
-    )
-    firsts = seq.filter(F.col("rn_first") == 1).select(
-        F.col("bucket").alias("nbucket"),
-        F.col("user_id").alias("dst"), F.col("sec").alias("first_sec"),
-    )
-    seam_pairs = lasts.join(firsts, "nbucket").select(
-        "src", "dst", (F.col("first_sec") - F.col("last_sec")).alias("gap")
-    )
-    edges = (
-        inner_pairs.unionAll(seam_pairs)
-        .filter((F.col("src") != F.col("dst")) & (F.col("gap") <= 60))
-        .select("src", "dst")
-        .distinct()
-    )
-    nodes = (
-        edges.select(F.col("src").alias("u"))
-        .union(edges.select(F.col("dst").alias("u")))
-        .distinct()
-        .agg(F.count(F.lit(1)).cast("long").alias("n"))
-    )
-    rev = edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    recip = (
-        edges.join(rev.withColumn("has_rev", F.lit(1)), ["src", "dst"], "left")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_edges"),
-            F.count(F.when(F.col("has_rev") == 1, 1))
-            .cast("long")
-            .alias("n_recip_edges"),
-        )
-    )
-    return nodes.crossJoin(F.broadcast(recip)).select(
-        F.col("n").alias("n_nodes"), "n_edges", "n_recip_edges",
-        F.floor(F.col("n_recip_edges") / 2).cast("long").alias("n_mutual_pairs"),
-        (F.col("n_edges") - F.col("n_recip_edges"))
-        .cast("long")
-        .alias("n_asym_pairs"),
-        (
-            F.floor(F.col("n") * (F.col("n") - 1) / 2)
-            - F.floor(F.col("n_recip_edges") / 2)
-            - (F.col("n_edges") - F.col("n_recip_edges"))
-        ).cast("long").alias("n_null_dyads"),
-        F.round(
-            F.col("n_recip_edges").cast("double") / F.col("n_edges"), 6
-        ).alias("reciprocity"),
-    )
-
-
-_BURSTMEM_SQL = """
-WITH s AS (
-  SELECT event_type,
-         CAST(floor(epoch(ts)) AS BIGINT) AS sec,
-         lag(CAST(floor(epoch(ts)) AS BIGINT))
-           OVER (PARTITION BY event_type ORDER BY ts, event_id) AS prev_sec,
-         lead(CAST(floor(epoch(ts)) AS BIGINT))
-           OVER (PARTITION BY event_type ORDER BY ts, event_id) AS next_sec
-  FROM events
-),
-gaps AS (
-  SELECT event_type, sec - prev_sec AS x, next_sec - sec AS y
-  FROM s WHERE prev_sec IS NOT NULL
-),
-stat AS (
-  SELECT event_type,
-         CAST(count(*) AS BIGINT) AS n_gaps,
-         CAST(sum(x) AS BIGINT) AS sx,
-         CAST(sum(x * x) AS BIGINT) AS sxx
-  FROM gaps GROUP BY 1
-),
-pairs AS (
-  SELECT event_type,
-         CAST(count(*) AS BIGINT) AS np,
-         CAST(sum(x) AS BIGINT) AS px,
-         CAST(sum(y) AS BIGINT) AS py,
-         CAST(sum(x * y) AS BIGINT) AS pxy,
-         CAST(sum(x * x) AS BIGINT) AS pxx,
-         CAST(sum(y * y) AS BIGINT) AS pyy
-  FROM gaps WHERE y IS NOT NULL GROUP BY 1
-)
-SELECT st.event_type, st.n_gaps, st.sx, st.sxx,
-       round((sqrt(CAST(st.n_gaps * st.sxx - st.sx * st.sx AS DOUBLE))
-              - st.sx)
-             / (sqrt(CAST(st.n_gaps * st.sxx - st.sx * st.sx AS DOUBLE))
-                + st.sx), 6) AS burstiness_b,
-       p.np AS n_pairs,
-       CAST(p.np * p.pxy - p.px * p.py AS BIGINT) AS mem_num,
-       round(CAST(p.np * p.pxy - p.px * p.py AS DOUBLE)
-             / sqrt(CAST(p.np * p.pxx - p.px * p.px AS DOUBLE)
-                    * (p.np * p.pyy - p.py * p.py)), 6) AS memory_m
-FROM stat st JOIN pairs p USING (event_type)
-"""
-
-
-@register("q_burstiness_memory", _BURSTMEM_SQL)
-def q_burstiness_memory(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Goh-Barabasi burstiness and memory of inter-event times (2008) —
-    the two-coordinate fingerprint that separates bursty-correlated
-    human activity from Poisson machine traffic: per event type, B =
-    (sigma - mu)/(sigma + mu) of the gap distribution (population sigma
-    from exact integer sufficient stats through one correctly-rounded
-    sqrt; B > 0 bursty, B < 0 metronomic) and M = the Pearson
-    correlation of CONSECUTIVE gap pairs, built from one windowed pass —
-    the pair (x, y) = (sec - lag, lead - sec) on each event row, so no
-    separate sequence table and no ambiguous ordering (this replaced a
-    draft that ranked gaps by a nondeterministic ORDER BY 1). The
-    complement of q_fano_burstiness's count-based Fano factor: intervals
-    see clustering that windowed counts blur. mem_num ships as the exact
-    cross-multiplied BIGINT numerator; both headline stats are single
-    IEEE chains.
-
-    Scale plan: one lag/lead window per type partition, two map-side
-    rollups, an equi-join on type; gaps are seconds (bounded), so every
-    sum stays far inside BIGINT."""
-    ev = load(spark, sf_dir, "events")
-    w = Window.partitionBy("event_type").orderBy("ts", "event_id")
-    sec = F.floor(F.unix_timestamp("ts")).cast("long")
-    s = ev.select(
-        "event_type", sec.alias("sec"),
-        F.lag(sec).over(w).alias("prev_sec"),
-        F.lead(sec).over(w).alias("next_sec"),
-    )
-    gaps = s.filter(F.col("prev_sec").isNotNull()).select(
-        "event_type",
-        (F.col("sec") - F.col("prev_sec")).alias("x"),
-        (F.col("next_sec") - F.col("sec")).alias("y"),
-    )
-    stat = gaps.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("long").alias("n_gaps"),
-        F.sum("x").cast("long").alias("sx"),
-        F.sum(F.col("x") * F.col("x")).cast("long").alias("sxx"),
-    )
-    pairs = gaps.filter(F.col("y").isNotNull()).groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("long").alias("np"),
-        F.sum("x").cast("long").alias("px"),
-        F.sum("y").cast("long").alias("py"),
-        F.sum(F.col("x") * F.col("y")).cast("long").alias("pxy"),
-        F.sum(F.col("x") * F.col("x")).cast("long").alias("pxx"),
-        F.sum(F.col("y") * F.col("y")).cast("long").alias("pyy"),
-    )
-    sig = F.sqrt(
-        (F.col("n_gaps") * F.col("sxx") - F.col("sx") * F.col("sx")).cast(
-            "double"
-        )
-    )
-    mem_num = F.col("np") * F.col("pxy") - F.col("px") * F.col("py")
-    return stat.join(pairs, "event_type").select(
-        "event_type", "n_gaps", "sx", "sxx",
-        F.round((sig - F.col("sx")) / (sig + F.col("sx")), 6).alias(
-            "burstiness_b"
-        ),
-        F.col("np").alias("n_pairs"),
-        mem_num.cast("long").alias("mem_num"),
-        F.round(
-            mem_num.cast("double")
-            / F.sqrt(
-                (F.col("np") * F.col("pxx") - F.col("px") * F.col("px")).cast(
-                    "double"
-                )
-                * (F.col("np") * F.col("pyy") - F.col("py") * F.col("py"))
-            ),
-            6,
-        ).alias("memory_m"),
-    )
-
-
-_GROUPCOMMIT_SQL = """
-WITH txn AS (
-  SELECT CAST(epoch_us(ts) // 1000 AS BIGINT) AS t_ms FROM events
-),
-ivs AS (SELECT CAST(i.i AS BIGINT) AS interval_ms
-        FROM (VALUES (1), (10), (100)) AS i(i)),
-j AS (
-  SELECT iv.interval_ms, t.t_ms,
-         t.t_ms // iv.interval_ms AS batch_id,
-         iv.interval_ms - (t.t_ms % iv.interval_ms) AS wait_ms
-  FROM txn t CROSS JOIN ivs iv
-)
-SELECT interval_ms,
-       CAST(count(*) AS BIGINT) AS n_txn,
-       CAST(count(DISTINCT batch_id) AS BIGINT) AS n_fsyncs,
-       round(CAST(count(*) AS DOUBLE) / count(DISTINCT batch_id), 6)
-         AS batch_factor,
-       CAST(sum(wait_ms) AS BIGINT) AS total_wait_ms,
-       round(CAST(sum(wait_ms) AS DOUBLE) / count(*), 6) AS avg_wait_ms,
-       CAST(max(wait_ms) AS BIGINT) AS max_wait_ms
-FROM j GROUP BY 1
-"""
-
-
-@register("q_group_commit", _GROUPCOMMIT_SQL)
-def q_group_commit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """WAL group-commit batching ladder — the fsync economics every
-    durable log tunes (the DB-engine sibling of q_ttl_jitter's herd):
-    with fsyncs at fixed interval boundaries, a transaction arriving at
-    t commits at the NEXT boundary, so wait_ms = I - (t mod I) is exact
-    integer arithmetic, the fsync count is the distinct boundary count,
-    and the ladder {1, 10, 100} ms shows the trade in the same row:
-    batch_factor (txns amortized per fsync — the disk's win) against
-    total/avg/max wait (latency's bill, max pinned at exactly I by any
-    boundary-adjacent arrival). Millisecond epochs are EXACT integer
-    microseconds div 1000 on both engines (epoch_us / unix_micros —
-    the double-seconds epoch() form loses exactness at millisecond
-    boundaries); the mod arithmetic is unaffected by the session's
-    whole-hour timezone anchoring.
-
-    Scale plan: one scan x a 3-row broadcast interval spine
-    (whitelisted), one distinct-count rollup per interval."""
-    ev = load(spark, sf_dir, "events")
-    txn = ev.select(
-        F.floor(
-            F.unix_micros(F.col("ts").cast("timestamp_ltz")) / 1000
-        ).cast("long").alias("t_ms")
-    )
-    ivs = spark.createDataFrame([(1,), (10,), (100,)], "interval_ms long")
-    j = txn.crossJoin(F.broadcast(ivs)).select(
-        "interval_ms",
-        F.floor(F.col("t_ms") / F.col("interval_ms")).alias("batch_id"),
-        (F.col("interval_ms") - F.col("t_ms") % F.col("interval_ms")).alias(
-            "wait_ms"
-        ),
-    )
-    return j.groupBy("interval_ms").agg(
-        F.count(F.lit(1)).cast("long").alias("n_txn"),
-        F.countDistinct("batch_id").cast("long").alias("n_fsyncs"),
-        F.round(
-            F.count(F.lit(1)).cast("double") / F.countDistinct("batch_id"), 6
-        ).alias("batch_factor"),
-        F.sum("wait_ms").cast("long").alias("total_wait_ms"),
-        F.round(F.sum("wait_ms").cast("double") / F.count(F.lit(1)), 6).alias(
-            "avg_wait_ms"
-        ),
-        F.max("wait_ms").cast("long").alias("max_wait_ms"),
     )

@@ -1,8 +1,8 @@
 """Python UDTFs (user-defined table functions, Spark 4 `pyspark.sql.functions.udtf`).
 
-The third Python-extension surface next to the pandas UDFs (tagger/scan) and
-the Python DataSources (pysource): one input row → many output rows, usable
-from SQL via LATERAL or with a whole TABLE(...) argument.
+The Python-extension surface next to the pandas UDFs (tagger/scan): one input
+row → many output rows, usable from SQL via LATERAL or with a whole TABLE(...)
+argument.
 
 Two table functions, each with an exact DuckDB oracle twin registered in
 entry_queries:

@@ -22,8 +22,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from cliner_spark.canonicalize import canonical_concept_map
-
 HOT_CONV_THRESHOLD = 100_000  # turns per conversation considered "hot"
 DEFAULT_SALT_BUCKETS = 16
 
@@ -35,10 +33,9 @@ def with_canonical(linked: DataFrame, canon_map: DataFrame) -> DataFrame:
     )
 
 
-def build_triples(linked: DataFrame, gazetteer: DataFrame | None = None,
-                  canon_map: DataFrame | None = None,
+def build_triples(linked: DataFrame, canon_map: DataFrame | None = None,
                   eager_checkpoint: bool = False) -> DataFrame:
-    """linked mentions (+gazetteer for the concept graph) -> triples DF.
+    """linked mentions -> triples DF.
 
     Rows that already carry canon_cui (the lexicon scan) are used as they
     are; otherwise canon_cui is joined from canon_map (with_canonical).
@@ -51,9 +48,7 @@ def build_triples(linked: DataFrame, gazetteer: DataFrame | None = None,
     """
     if "canon_cui" not in linked.columns:
         if canon_map is None:
-            if gazetteer is None:
-                raise ValueError("need gazetteer or canon_map")
-            canon_map = canonical_concept_map(gazetteer)
+            raise ValueError("rows without canon_cui need canon_map")
         linked = with_canonical(linked, canon_map)
     # Materialize mention-grain rows ONCE: the four triple projections below
     # each trigger their own job, and without this the upstream scan UDF (the

@@ -3,6 +3,11 @@ chunking, distributed tag_mentions, perceptron trainer."""
 
 from __future__ import annotations
 
+import os
+import subprocess
+import sys
+import textwrap
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -10,6 +15,8 @@ import pytest
 from cliner_spark import features as FT
 from cliner_spark import fixtures, oracle_py, tagger
 from cliner_spark.chunk import chunk_flat_tags, spans_to_flat_tags
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _gold_tags(rows, term_type):
@@ -70,6 +77,54 @@ def test_viterbi_ragged_batch_equals_singletons():
         single = tagger.viterbi_batch(em[off : off + l], np.asarray([l]), trans)
         assert list(batched[off : off + l]) == list(single)
         off += l
+
+
+_BOUNDED_TAG = textwrap.dedent(
+    """
+    from cliner_spark import fixtures
+    from cliner_spark.session import get_spark
+    from cliner_spark.tagger import make_distant_model, tag_mentions
+
+    # every Python worker sets RLIMIT_AS to this before it runs a task
+    spark = get_spark("bounded_tag", master="local[1]",
+                      extra_conf={"spark.executor.pyspark.memory": "1g"})
+    terms = sorted({t.lower() for t, *_ in fixtures.CLINICAL_GAZETTEER})
+    hits = " ".join(terms[i % len(terms)] for i in range(2500)).split()[:4990]
+    hits += ["fever"] * (5000 - len(hits))  # whole terms up to the last token
+    rows = [("c", i, "patient reports chest pain and fever today")
+            for i in range(9999)] + [("c", 9999, " ".join(hits))]
+    df = spark.createDataFrame(rows, "conv_id string, turn_idx int, text string")
+    model = make_distant_model(fixtures.CLINICAL_GAZETTEER)
+    dense = (
+        tag_mentions(df.coalesce(1), model)  # one 10k-row Arrow batch
+        .filter("turn_idx = 9999")
+        .selectExpr("sum(tok_end - tok_start + 1) AS covered")
+        .first()["covered"]
+    )
+    print("COVERED", len(hits), dense)
+    spark.stop()
+    """
+)
+
+
+def test_tag_batch_with_one_dense_turn_stays_under_1gib():
+    """One 5k-token all-hit turn in a 10k-turn batch, tagged by Python
+    workers capped at 1 GiB of address space (a [turns, T_max, L] padded
+    Viterbi needs 1.3 GiB for its emissions alone and fails with
+    MemoryError)."""
+    env = dict(
+        os.environ,
+        PYTHONPATH=os.pathsep.join(p for p in (ROOT, os.environ.get("PYTHONPATH")) if p),
+        SPARK_DRIVER_MEMORY="1g",
+    )
+    res = subprocess.run(
+        [sys.executable, "-c", _BOUNDED_TAG],
+        capture_output=True, text=True, env=env, timeout=600,
+    )
+    assert res.returncode == 0, res.stderr[-3000:]
+    line = [x for x in res.stdout.splitlines() if x.startswith("COVERED")]
+    # the distant model tags the scanner's spans: every token is covered
+    assert line == ["COVERED 5000 5000"], res.stdout
 
 
 def test_distant_model_equals_scanner_oracle():

@@ -447,23 +447,6 @@ ALLOWED: dict[str, list[tuple[str, str]]] = {
          "2-row broadcast {pre,post} period spine x the user dimension — "
          "the zero-filled panel; cells collapse map-side to 4 rows")
     ],
-    "q_prefix_cache": [
-        ("BroadcastNestedLoopJoin",
-         "4-row broadcast depth spine x corpus with a >= length predicate "
-         "— a bounded fanout collapsed map-side by the (depth, prefix) "
-         "groupBy")
-    ],
-    "q_merkle_diff": [
-        ("BroadcastNestedLoopJoin",
-         "2x256-row broadcast (side, leaf) spine crossJoin + a 1-row "
-         "delta-counts carry — the zero-filled leaf frame is fixed-size "
-         "regardless of table rows")
-    ],
-    "q_rendezvous_hashing": [
-        ("BroadcastNestedLoopJoin",
-         "10-row broadcast node spine x keys — the HRW weight fanout, "
-         "collapsed map-side by the per-key max_by groupBy")
-    ],
     "q_kruskal_wallis": [
         ("BroadcastNestedLoopJoin",
          "1-row broadcast carries (n_total + tie ledger) crossJoined onto "
@@ -510,21 +493,6 @@ ALLOWED: dict[str, list[tuple[str, str]]] = {
         ("BroadcastNestedLoopJoin",
          "1-row global (N, S) carry onto the 7-row weekday ledger")
     ],
-    "q_crdt_gossip": [
-        ("BroadcastNestedLoopJoin",
-         "1-row true-total carry onto the 32-row (round x replica) "
-         "convergence ledger")
-    ],
-    "q_moe_routing": [
-        ("BroadcastNestedLoopJoin",
-         "8-row broadcast expert spine x tokens (the gate fanout, "
-         "collapsed by the per-token top-2 window) + 1-row capacity "
-         "carry")
-    ],
-    "q_checkpoint_shards": [
-        ("BroadcastNestedLoopJoin",
-         "1-row total-bytes carry onto the 16-row shard ledger")
-    ],
     "q_skyline": [
         ("BroadcastNestedLoopJoin",
          "1-row part-count carry onto the front-sized skyline output")
@@ -559,16 +527,6 @@ ALLOWED: dict[str, list[tuple[str, str]]] = {
          "entity-universe carry — the KGE filtered-ranking fanout, "
          "collapsed by 65-row windows")
     ],
-    "q_maxmin_fairshare": [
-        ("BroadcastNestedLoopJoin",
-         "1-row capacity / water-level / allocation carries over the "
-         "user-demand frame — three constant attaches")
-    ],
-    "q_hedged_requests": [
-        ("BroadcastNestedLoopJoin",
-         "3-row broadcast quantile spine x the distinct-ms survival "
-         "grid + 1-row n carry")
-    ],
     "q_energy_distance": [
         ("BroadcastNestedLoopJoin",
          "1-row (n1, n2) sample-size carry onto the distinct-value gap "
@@ -578,35 +536,6 @@ ALLOWED: dict[str, list[tuple[str, str]]] = {
         ("BroadcastNestedLoopJoin",
          "1-row tau (65th-priority) carry onto the 64-row sample and "
          "the per-type truth frame")
-    ],
-    "q_slo_burn_alert": [
-        ("BroadcastNestedLoopJoin",
-         "3-row broadcast alert-rule spine x events + 1-row "
-         "end-of-stream anchor carry, collapsed map-side to 12 counters")
-    ],
-    "q_mix_rate_decomposition": [
-        ("BroadcastNestedLoopJoin",
-         "1-row midpoint-day + period-totals carries onto the per-type "
-         "2x2 ledger")
-    ],
-    "q_ring_reliability": [
-        ("BroadcastNestedLoopJoin",
-         "4-row broadcast failure-rate spine x the synthetic 256-node "
-         "ring — a 1024-row build frame")
-    ],
-    "q_router_cascade": [
-        ("BroadcastNestedLoopJoin",
-         "3-row broadcast tau spine x requests, collapsed map-side to "
-         "3 rows")
-    ],
-    "q_lfu_hit_rate": [
-        ("BroadcastNestedLoopJoin",
-         "1-row cold-hour (warm-up) carry onto the access frame")
-    ],
-    "q_secure_agg": [
-        ("BroadcastNestedLoopJoin",
-         "8x8 client mask grid (constant frame) + 1-row sum-certificate "
-         "carry")
     ],
     "q_clip_bias": [
         ("BroadcastNestedLoopJoin",
@@ -622,40 +551,6 @@ ALLOWED: dict[str, list[tuple[str, str]]] = {
          "constant fanout x level spines + 1-row ingest-bytes carry — a "
          "36-row model frame")
     ],
-    "q_occ_conflicts": [
-        ("BroadcastNestedLoopJoin",
-         "1-row global abort-totals carry onto the 8-bucket ledger")
-    ],
-    "q_rebalance_plan": [
-        ("BroadcastNestedLoopJoin",
-         "1-row total + minimal-moves carries onto the 16-shard plan")
-    ],
-    "q_cascade_failure": [
-        ("BroadcastNestedLoopJoin",
-         "64-task synthetic DAG crossJoin at build time (metadata-sized, "
-         "layer-filtered) + 1-row blast-radius carry — same build shape "
-         "as q_critical_path")
-    ],
-    "q_read_your_writes": [
-        ("BroadcastNestedLoopJoin",
-         "3-row broadcast replica-lag spine x the per-user gap frame, "
-         "collapsed map-side to 3 rows")
-    ],
-    "q_gray_failure": [
-        ("BroadcastNestedLoopJoin",
-         "1-row confusion-matrix carry onto the 16-node detection "
-         "ledger")
-    ],
-    "q_reciprocity": [
-        ("BroadcastNestedLoopJoin",
-         "1-row node-count x 1-row census carries onto the single "
-         "output row")
-    ],
-    "q_group_commit": [
-        ("BroadcastNestedLoopJoin",
-         "3-row broadcast fsync-interval spine x transactions, "
-         "collapsed map-side to 3 rows")
-    ],
 }
 
 # Queries allowed to contain a Window with NO partition spec (round-4
@@ -663,8 +558,8 @@ ALLOWED: dict[str, list[tuple[str, str]]] = {
 # one-task Sort). Every entry states the FRAME BOUND that makes the
 # single task safe — the window input must be dimension-sized (a grid,
 # spine, rollup, or capped top-K frame), never the corpus. A query whose
-# global window runs over corpus-scale rows must be restructured (e.g.
-# q_reciprocity's bucketed lag + boundary stitch), not whitelisted.
+# global window runs over corpus-scale rows must be restructured (e.g. a
+# bucketed lag + boundary stitch), not whitelisted.
 ALLOWED_GLOBAL_WINDOW: dict[str, str] = {
     "q_ams_f2": "median rank over the 16-row estimator ledger",
     "q_anova_sources": "grand-mean/rank windows on the |sources| rollup",
@@ -681,8 +576,6 @@ ALLOWED_GLOBAL_WINDOW: dict[str, str] = {
     "q_bottomk_merge": "shard-merge rank over the 128-row (8 shards x k=16) "
                        "sketch union; direct pass ranks the same k-bounded "
                        "frame",
-    "q_checkpoint_shards": "size rank + spread window over the 16-row shard "
-                           "ledger",
     "q_chisq_independence": "OVER() totals on the |sources| x |langs| "
                             "contingency grid",
     "q_cohens_effects": "rank windows on the (segment, value) value-domain "
@@ -725,8 +618,6 @@ ALLOWED_GLOBAL_WINDOW: dict[str, str] = {
                           "range look ids at scale",
     "q_hamilton_apportionment": "remainder rank + totals on the 20-row "
                                 "source dimension",
-    "q_hedged_requests": "survival cumulative window on the distinct-ms "
-                         "latency grid (value-domain bounded)",
     "q_isotonic_calibration": "PAV interval windows on the <=10-bin "
                               "calibration frame",
     "q_kaplan_meier": "at-risk cumulative window over the |days| lifetime "
@@ -752,8 +643,6 @@ ALLOWED_GLOBAL_WINDOW: dict[str, str] = {
                       "(dimension squared pair frame)",
     "q_markov_stationary": "row_number over the |types| spine (5 rows) for "
                            "the start vector",
-    "q_maxmin_fairshare": "water-fill prefix sum over the per-user DEMAND "
-                          "rollup (user dimension; dist_cumsum shape)",
     "q_mixture_plan": "windowed totals on the |sources| rollup",
     "q_multiple_testing": "step-up/step-down ranks over the m-row "
                           "(|sources|) ledger",
