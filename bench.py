@@ -167,17 +167,8 @@ def main() -> None:
         free_state(spark)
         return dt
 
-    # Demoted from the default sweep (round-4 verdict item 3): exact
-    # all-pairs gates too slow for it. Still fully oracle-checked in the
-    # correctness gate; reported here, never silent.
-    demoted = {
-        "q_knn_loo_eval": "brute-force all-pairs LOO gate (41.7 s at "
-                          "sf0.1)",
-    }
     fns = dict(ordered)
     for name, fn in ordered:
-        if name in demoted:
-            continue
         if time.time() - sweep_t0 > BENCH_BUDGET_SEC:
             skipped.append(name)
             continue
@@ -251,7 +242,6 @@ def main() -> None:
         "queries": qtimes,
         "protocol_min_of_2_epochs": sorted(min_of_2),
         "skipped_over_budget": skipped,
-        "demoted_from_sweep": demoted,
         "sf": guess_sf(SF_DIR),
         "turns_per_sec": round(turns_per_sec, 1),
         "n_turns": BENCH_TURNS,

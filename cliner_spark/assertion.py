@@ -115,28 +115,3 @@ def classify_assertions(
         .otherwise(F.lit("affirmed")),
     ).drop(tokens_col)
 
-
-def assertion_triples(linked_asserted: DataFrame) -> DataFrame:
-    """Linked+asserted mentions -> (concept, <assertion>_IN, turn) triples.
-
-    Refines build_triples' unconditional ASSERTED_IN edge (triples.py):
-    negated mentions emit NEGATED_IN, hedged ones HEDGED_IN, so a KG
-    consumer can exclude denied concepts without re-reading text.
-    """
-    pred = (
-        F.when(F.col("assertion") == "negated", F.lit(ASSERTION_PRED["negated"]))
-        .when(F.col("assertion") == "uncertain", F.lit(ASSERTION_PRED["uncertain"]))
-        .otherwise(F.lit(ASSERTION_PRED["affirmed"]))
-    )
-    return (
-        linked_asserted.select(
-            F.concat(F.lit("concept:"), F.col("cui")).alias("subj"),
-            pred.alias("pred"),
-            F.concat(
-                F.lit("turn:"), F.col("conv_id"), F.lit("#"), F.col("turn_idx")
-            ).alias("obj"),
-            F.col("conv_id"),
-            F.col("turn_idx").cast("int").alias("turn_idx"),
-        )
-        .distinct()
-    )

@@ -167,91 +167,6 @@ def connected_components(
     return labels
 
 
-def _large_star(e: DataFrame) -> DataFrame:
-    """Large-star round: every node u links its strictly-larger neighbors to
-    min(N(u) ∪ {u}). Emits (a, b) with a > b; strictly shrinks large-id
-    edges toward component minima."""
-    nbr = e.select(F.col("src").alias("u"), F.col("dst").alias("v")).unionByName(
-        e.select(F.col("dst").alias("u"), F.col("src").alias("v"))
-    )
-    mins = nbr.groupBy("u").agg(F.min("v").alias("mv"))
-    return (
-        nbr.join(mins, "u")
-        .filter(F.col("v") > F.col("u"))
-        .select(F.col("v").alias("src"), F.least("mv", F.col("u")).alias("dst"))
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-    )
-
-
-def _small_star(e: DataFrame) -> DataFrame:
-    """Small-star round: orient edges toward the larger endpoint; every node
-    u links its smaller neighbors (and itself) to min(N⁻(u))."""
-    o = e.select(
-        F.greatest("src", "dst").alias("u"), F.least("src", "dst").alias("v")
-    ).filter(F.col("u") != F.col("v"))
-    mins = o.groupBy("u").agg(F.min("v").alias("mv"))
-    out = (
-        o.join(mins, "u")
-        .select(F.col("v").alias("src"), F.col("mv").alias("dst"))
-        .unionByName(mins.select(F.col("u").alias("src"), F.col("mv").alias("dst")))
-    )
-    return out.filter(F.col("src") != F.col("dst")).distinct()
-
-
-def connected_components_twostar(
-    edges: DataFrame,
-    nodes: DataFrame | None = None,
-    node_col: str = "node",
-    max_rounds: int = 30,
-) -> DataFrame:
-    """Connected components via alternating large-star / small-star rounds
-    (Kiveris et al. 2014, "Connected Components in MapReduce and Beyond") —
-    the scheme with a PROVEN O(log n) round bound, unlike plain min-label
-    propagation whose frontier can advance one hop per round against the id
-    ordering. Same output contract as connected_components: (node, comp)
-    with comp = min node id of the component.
-
-    Convergence = the edge set reaches a fixpoint (star graphs rooted at
-    component minima: every surviving edge is (x, component_min)). The
-    fixpoint test is exact set equality (count + anti-join), not a
-    checksum. Scale shape per round: two groupBy shuffles on node id; edge
-    count never grows above 2x input (large-star emits one edge per
-    larger-neighbor pair, small-star one per smaller-neighbor + one per
-    oriented node)."""
-    e = (
-        edges.select("src", "dst")
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    endpoint_nodes = (
-        e.select(F.col("src").alias(node_col))
-        .unionByName(e.select(F.col("dst").alias(node_col)))
-        .distinct()
-    )
-    for _ in range(max_rounds):
-        nxt = _small_star(_large_star(e)).localCheckpoint(eager=True)
-        same_size = nxt.count() == e.count()
-        if same_size and nxt.join(e, ["src", "dst"], "left_anti").limit(1).count() == 0:
-            e = nxt
-            break
-        e = nxt
-    else:
-        raise RuntimeError(f"twostar CC: no fixpoint after {max_rounds} rounds")
-    # converged stars: src = non-min member, dst = component min
-    comp_edges = e.select(F.col("src").alias(node_col), F.col("dst").alias("comp"))
-    all_nodes = endpoint_nodes
-    if nodes is not None:
-        all_nodes = nodes.select(F.col(node_col)).unionByName(endpoint_nodes).distinct()
-    return (
-        all_nodes.join(comp_edges, node_col, "left")
-        .select(
-            F.col(node_col), F.coalesce(F.col("comp"), F.col(node_col)).alias("comp")
-        )
-    )
-
-
 def surface_form_counts(
     linked_with_canon: DataFrame, n_salt: int = 16
 ) -> DataFrame:

@@ -279,28 +279,6 @@ def q_canonical_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
     return canonical_concept_map(doc_gazetteer_df(spark))
 
 
-@register(
-    "q_canonical_cc_twostar",
-    f"""
-WITH RECURSIVE gazv AS (SELECT * FROM {GAZ_SQL}), {SQL_CANON}
-SELECT cui, canon_cui FROM canon
-""",
-)
-def q_canonical_cc_twostar(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same canonical map, computed by the alternating large-star/small-star
-    algorithm (canonicalize.connected_components_twostar — proven O(log n)
-    rounds, Kiveris et al. 2014) instead of min-label propagation. Shares
-    q_canonical_cc's oracle: both must produce the identical component-min
-    labelling."""
-    from cliner_spark.canonicalize import concept_edges, connected_components_twostar
-
-    gaz = doc_gazetteer_df(spark)
-    comps = connected_components_twostar(
-        concept_edges(gaz), nodes=gaz.select(F.col("cui").alias("node")).distinct()
-    )
-    return comps.select(F.col("node").alias("cui"), F.col("comp").alias("canon_cui"))
-
-
 SQL_TRIPLES = f"""
 WITH RECURSIVE {SQL_DOCS_TOKS}, {SQL_KEPT_MENTIONS}, {SQL_BEST_GAZ}, {SQL_CANON},
 tx AS (
@@ -2418,7 +2396,7 @@ def q_role_concepts(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "q_assertion_triples",
     f"""
-WITH {SQL_DOCS_TOKS}, {SQL_KEPT_MENTIONS}, {SQL_BEST_GAZ},
+WITH RECURSIVE {SQL_DOCS_TOKS}, {SQL_KEPT_MENTIONS}, {SQL_BEST_GAZ}, {SQL_CANON},
 asserted AS (
   SELECT m.doc_id, m.tok_start, m.tok_end, m.mention_text,
          CASE
@@ -2426,30 +2404,38 @@ asserted AS (
                                 x -> lower(x) IN ('slow'))) > 0
              OR len(list_filter(d.toks[m.tok_end + 2 : least(len(d.toks), m.tok_end + 5)],
                                 x -> lower(x) IN ('small'))) > 0
-           THEN 'negated'
+           THEN 2
            WHEN len(list_filter(d.toks[greatest(1, m.tok_start - 3) : m.tok_start],
                                 x -> lower(x) IN ('fast'))) > 0
              OR len(list_filter(d.toks[m.tok_end + 2 : least(len(d.toks), m.tok_end + 5)],
                                 x -> lower(x) IN ('fast'))) > 0
-           THEN 'uncertain'
-           ELSE 'affirmed'
-         END AS assertion
+           THEN 1
+           ELSE 0
+         END AS arank
   FROM mentions m JOIN docs d USING (doc_id)
+),
+ranked AS (
+  SELECT a.doc_id, c.canon_cui, max(a.arank) AS arank
+  FROM asserted a
+  JOIN best_gaz b ON lower(a.mention_text) = b.term
+  JOIN canon c ON b.cui = c.cui
+  GROUP BY a.doc_id, c.canon_cui
 )
-SELECT DISTINCT 'concept:' || b.cui AS subj,
-       CASE a.assertion WHEN 'negated' THEN 'NEGATED_IN'
-                        WHEN 'uncertain' THEN 'HEDGED_IN'
-                        ELSE 'ASSERTED_IN' END AS pred,
-       'turn:' || CAST(a.doc_id AS VARCHAR) || '#0' AS obj,
-       CAST(a.doc_id AS VARCHAR) AS conv_id, CAST(0 AS INTEGER) AS turn_idx
-FROM asserted a JOIN best_gaz b ON lower(a.mention_text) = b.term
+SELECT 'concept:' || canon_cui AS subj,
+       CASE arank WHEN 2 THEN 'NEGATED_IN'
+                  WHEN 1 THEN 'HEDGED_IN'
+                  ELSE 'ASSERTED_IN' END AS pred,
+       'turn:' || CAST(doc_id AS VARCHAR) || '#0' AS obj,
+       CAST(doc_id AS VARCHAR) AS conv_id, CAST(0 AS INTEGER) AS turn_idx
+FROM ranked
 """,
 )
 def q_assertion_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Assertion-refined (concept, NEGATED_IN/HEDGED_IN/ASSERTED_IN, turn)
-    edges (assertion.assertion_triples) — the KG output of the --assertions
-    pipeline stage, hash-checked end to end."""
-    from cliner_spark.assertion import assertion_triples, classify_assertions
+    edges as triples.build_triples emits them for the --assertions pipeline
+    stage (canonical concept, negation dominates within the turn),
+    hash-checked end to end."""
+    from cliner_spark.assertion import ASSERTION_PRED, classify_assertions
 
     m = _doc_mentions_spark(spark, sf_dir)
     toks = tokenize(load_docs(spark, sf_dir)).select("doc_id", "tokens")
@@ -2465,7 +2451,8 @@ def q_assertion_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         doc_gazetteer_df(spark),
     )
-    return assertion_triples(linked)
+    triples = build_triples(linked, canon_map=cached_canon_map(spark))
+    return triples.filter(F.col("pred").isin(*ASSERTION_PRED.values()))
 
 
 @register(

@@ -50,9 +50,10 @@ def best_links(gazetteer) -> dict[str, tuple[str, str, str, float]]:
     return out
 
 
-def canonical_map(gazetteer) -> dict[str, str]:
-    """cui -> min cui of its connected component (union-find)."""
-    parent: dict[str, str] = {}
+def components(edges, nodes=()) -> dict:
+    """node -> min node of its connected component (union-find); `nodes`
+    adds nodes that no edge touches."""
+    parent = {n: n for n in nodes}
 
     def find(x):
         parent.setdefault(x, x)
@@ -61,22 +62,26 @@ def canonical_map(gazetteer) -> dict[str, str]:
             x = parent[x]
         return x
 
-    def union(a, b):
+    for a, b in edges:
         ra, rb = find(a), find(b)
         if ra != rb:
             # keep min id as root for deterministic labels
             lo, hi = (ra, rb) if ra < rb else (rb, ra)
             parent[hi] = lo
+    return {n: find(n) for n in parent}
 
+
+def canonical_map(gazetteer) -> dict[str, str]:
+    """cui -> min cui of its connected component, where two cuis connect
+    when they share a term or canonical name."""
+    cuis = []
     by_string: dict[str, list[str]] = defaultdict(list)
     for (term, cui, _sem, canon, _score) in gazetteer:
-        parent.setdefault(cui, cui)
+        cuis.append(cui)
         by_string[term.lower()].append(cui)
         by_string[canon.lower()].append(cui)
-    for cuis in by_string.values():
-        for other in cuis[1:]:
-            union(cuis[0], other)
-    return {c: find(c) for c in parent}
+    edges = [(group[0], other) for group in by_string.values() for other in group[1:]]
+    return components(edges, cuis)
 
 
 def pipeline_triples(transcript_rows, gazetteer):

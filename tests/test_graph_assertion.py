@@ -7,7 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from cliner_spark import fixtures
-from cliner_spark.assertion import assertion_triples, classify_assertions
+from cliner_spark.assertion import ASSERTION_PRED, classify_assertions
 from cliner_spark.graph import (
     FP_SCALE,
     k_hop,
@@ -16,6 +16,7 @@ from cliner_spark.graph import (
     transition_edges,
 )
 from cliner_spark.tokenization import tokenize
+from cliner_spark.triples import build_triples
 
 
 def _mk_turns(spark, texts):
@@ -76,21 +77,28 @@ def test_assertion_window_clamps_at_turn_edges(spark):
 
 
 def test_assertion_triples_preds(spark):
+    """build_triples' assertion-refined edge: negation dominates within the
+    turn, hedges give HEDGED_IN, and the edge sits on the canonical concept."""
     la = spark.createDataFrame(
         [
-            {"conv_id": "c0", "turn_idx": 0, "cui": "C1", "assertion": "negated"},
-            {"conv_id": "c0", "turn_idx": 1, "cui": "C1", "assertion": "uncertain"},
-            {"conv_id": "c0", "turn_idx": 2, "cui": "C2", "assertion": "affirmed"},
-        ]
+            ("c0", 0, 0, "C1", "negated"),
+            ("c0", 0, 3, "C1", "affirmed"),
+            ("c0", 1, 0, "C1", "uncertain"),
+            ("c0", 2, 0, "C3", "affirmed"),
+        ],
+        "conv_id string, turn_idx int, tok_start int, cui string, assertion string",
     )
-    preds = {
-        (r["obj"], r["pred"]) for r in assertion_triples(la).collect()
-    }
-    assert preds == {
-        ("turn:c0#0", "NEGATED_IN"),
-        ("turn:c0#1", "HEDGED_IN"),
-        ("turn:c0#2", "ASSERTED_IN"),
-    }
+    canon = spark.createDataFrame([("C3", "C2")], "cui string, canon_cui string")
+    rows = sorted(
+        (r["subj"], r["pred"], r["obj"])
+        for r in build_triples(la, canon_map=canon).collect()
+        if r["pred"] in ASSERTION_PRED.values()
+    )
+    assert rows == [
+        ("concept:C1", "HEDGED_IN", "turn:c0#1"),
+        ("concept:C1", "NEGATED_IN", "turn:c0#0"),
+        ("concept:C2", "ASSERTED_IN", "turn:c0#2"),
+    ]
 
 
 def _edges(spark, pairs):

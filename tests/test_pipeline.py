@@ -113,15 +113,12 @@ def test_cc_fixed_budget_converges_on_adversarial_path(spark):
 
 
 def test_twostar_cc_equals_minlabel_on_random_graphs(spark):
-    """large-star/small-star CC must produce the identical component-min
-    labelling as min-label propagation — on the adversarial path, a seeded
-    random graph (incl. isolated nodes), and a graph of disjoint cliques."""
+    """Min-label CC must produce the same component-min labelling as the
+    Python union-find oracle — on the adversarial path, a seeded random
+    graph (incl. isolated nodes), and a graph of disjoint cliques."""
     import random
 
-    from cliner_spark.canonicalize import (
-        connected_components,
-        connected_components_twostar,
-    )
+    from cliner_spark.canonicalize import connected_components
 
     rng = random.Random(41)
     rand_edges = [
@@ -136,23 +133,18 @@ def test_twostar_cc_equals_minlabel_on_random_graphs(spark):
         ),
     ]
     for edge_rows, node_ids in cases:
-        edges = spark.createDataFrame(
-            [e for e in edge_rows if e[0] != e[1]], "src string, dst string"
-        )
+        edge_rows = [e for e in edge_rows if e[0] != e[1]]
+        edges = spark.createDataFrame(edge_rows, "src string, dst string")
         nodes = (
             spark.createDataFrame([(n,) for n in node_ids], "node string")
             if node_ids
             else None
         )
-        a = {
+        got = {
             r["node"]: r["comp"]
             for r in connected_components(edges, nodes=nodes).collect()
         }
-        b = {
-            r["node"]: r["comp"]
-            for r in connected_components_twostar(edges, nodes=nodes).collect()
-        }
-        assert a == b
+        assert got == oracle_py.components(edge_rows, node_ids or ())
 
 
 def test_triples_pr_against_oracle(spark):

@@ -183,20 +183,6 @@ def test_windowed_cooccurrence_is_equi_join_no_cartesian(spark):
     assert "BroadcastNestedLoopJoin" not in s, s
 
 
-def test_twostar_round_is_two_aggregations_no_cartesian(spark):
-    """One large-star+small-star round = groupBy-min aggregations feeding
-    equi-joins; no cross products anywhere in the round plan."""
-    from cliner_spark.canonicalize import _large_star, _small_star
-
-    edges = spark.createDataFrame(
-        [(f"n{i}", f"n{(i * 7 + 1) % 20}") for i in range(20)],
-        "src string, dst string",
-    )
-    s = plan(_small_star(_large_star(edges)))
-    assert "CartesianProduct" not in s, s
-    assert "BroadcastNestedLoopJoin" not in s, s
-
-
 def test_compaction_plan_partitioned_window_has_no_global_sort(spark):
     """With partition_col, the planner's window partitions by the table
     partition — the plan must hash-partition on it (parallel), not funnel

@@ -95,9 +95,6 @@ ALLOWED: dict[str, list[tuple[str, str]]] = {
         ("BroadcastNestedLoopJoin", "5-row broadcast budget spine x length scan")
     ],
     "q_lm_doc_score": [("BroadcastNestedLoopJoin", "1-row vocab-size carry")],
-    "q_kaplan_meier": [
-        ("BroadcastNestedLoopJoin", "1-row corpus-horizon max-day carry")
-    ],
     "q_dsir_weights": [("BroadcastNestedLoopJoin", "1-row vocab carries (x2)")],
     "q_gap_fill": [("BroadcastNestedLoopJoin", "hour-spine x group dim (both tiny)")],
     "q_mix_weights": [("BroadcastNestedLoopJoin", "1-row total carry")],
@@ -107,11 +104,6 @@ ALLOWED: dict[str, list[tuple[str, str]]] = {
          "16-row centroid probe + the exact-baseline broadcast query spine "
          "+ 1-row recall numerator/denominator carries (assert formulation)"),
         ("CartesianProduct", "1-row hits x 1-row denom scalar carry"),
-    ],
-    "q_poisson_bootstrap": [
-        ("BroadcastNestedLoopJoin",
-         "32-row broadcast resample spine x corpus — the Poisson-bootstrap "
-         "fanout (one pass, B counters), map-side combined to 32 rows")
     ],
     "q_value_hist": [("BroadcastNestedLoopJoin", "1-row min/max bounds carry")],
     "q_quality_filter": [("BroadcastNestedLoopJoin", "1-row percentile bounds carry")],
@@ -221,17 +213,6 @@ ALLOWED: dict[str, list[tuple[str, str]]] = {
          "same <=20-row query spine x 16-row broadcast centroid table as "
          "q_ivfpq_topk (probe selection); anchors join and candidate "
          "scoring are cell equi-joins)")
-    ],
-    "q_t_closeness": [
-        ("BroadcastNestedLoopJoin",
-         "1-row corpus-total N carry onto the equivalence-class x 5-value "
-         "spine (exact-TVD denominator)")
-    ],
-    "q_matryoshka_recall": [
-        ("BroadcastNestedLoopJoin",
-         "broadcast <=20-row query spine x corpus per truncation dim — the "
-         "exact brute-force gate shape by design (same as q_embedding_topk) "
-         "+ 1-row n_exact carry onto the 4-row dims spine")
     ],
     "q_between_scatter": [
         ("BroadcastNestedLoopJoin",
@@ -369,16 +350,6 @@ ALLOWED: dict[str, list[tuple[str, str]]] = {
          "paper) + 1-row n_held/n_papers carry; every round after is "
          "equi-joined")
     ],
-    "q_knn_loo_eval": [
-        ("BroadcastNestedLoopJoin",
-         "all-pairs theta join (vec_id <>) — the brute-force exact "
-         "baseline BY DESIGN, same contract as q_embedding_topk")
-    ],
-    "q_kmeans_inertia": [
-        ("BroadcastNestedLoopJoin",
-         "broadcast 1-row global carries (N/SS_tot and |T|^2) onto the "
-         "label-dimension stats")
-    ],
     "q_german_tank": [
         ("BroadcastNestedLoopJoin",
          "broadcast 4-row threshold spine theta-joined to the id sample "
@@ -406,41 +377,11 @@ ALLOWED: dict[str, list[tuple[str, str]]] = {
          "m-row source-dimension pairwise join (m^2 = 400 rows) + "
          "broadcast 1-row m carry — committee vote on the dimension only")
     ],
-    "q_cusum_page": [
-        ("BroadcastNestedLoopJoin",
-         "event-type x day dimension grid cross (5 x ~30) — the "
-         "zero-filled CUSUM spine; all windows partition by type")
-    ],
-    "q_ks_two_sample": [
-        ("BroadcastNestedLoopJoin",
-         "broadcast 1-row n1/n2 totals carry + 1-row KS-argmax carry "
-         "onto the domain-bounded per-value frame")
-    ],
-    "q_logrank_test": [
-        ("BroadcastNestedLoopJoin",
-         "2-row literal arm spine x the distinct-lifetime dimension — "
-         "the zero-filled at-risk grid")
-    ],
-    "q_histogram_quality": [
-        ("BroadcastNestedLoopJoin",
-         "broadcast 1-row min/max/count bounds carry onto the value scan "
-         "(x2: equi-width binning and the equi-depth rank divisor)")
-    ],
-    "q_systematic_pps": [
-        ("BroadcastNestedLoopJoin",
-         "broadcast 1-row total-char-mass carry onto the prefix-summed "
-         "scan — the PPS point-grid divisor")
-    ],
     "q_ipf_raking": [
         ("BroadcastNestedLoopJoin",
          "sources x langs dimension-grid cross (20 x 5) + broadcast "
          "1-row dims carry — the zero-filled raking grid; all sweeps "
          "run on that 100-row frame")
-    ],
-    "q_tandem_repeats": [
-        ("BroadcastNestedLoopJoin",
-         "5-row broadcast width spine x the doc-length dimension — the "
-         "zero-filled rate denominator, collapsed map-side to 5 rows")
     ],
     "q_did_estimator": [
         ("BroadcastNestedLoopJoin",
@@ -606,7 +547,6 @@ ALLOWED_GLOBAL_WINDOW: dict[str, str] = {
     "q_epoch_shuffle": "global row_number IS the demonstrated operator "
                        "(epoch shuffle): gate-SF demonstration by design; "
                        "docstring documents the sharded production loader",
-    "q_fs_linkage": "OVER() total on the <=8-row agreement-pattern grid",
     "q_funnel_conversion": "lag/max windows on the 3-row funnel-step frame",
     "q_gains_chart": "cumulative gain over the per-user rollup (user "
                      "dimension); documented production swap to broadcast "
@@ -620,8 +560,6 @@ ALLOWED_GLOBAL_WINDOW: dict[str, str] = {
                                 "source dimension",
     "q_isotonic_calibration": "PAV interval windows on the <=10-bin "
                               "calibration frame",
-    "q_kaplan_meier": "at-risk cumulative window over the |days| lifetime "
-                      "grid",
     "q_kendall_taub": "concordance windows on the |days| daily rollup "
                       "(pair frame |days|^2)",
     "q_key_skew": "rank over the top-k heavy-hitter table (k rows, "
