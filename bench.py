@@ -8,17 +8,15 @@ recorded as parsed:null):
 
   {"metric": "total_bench_sec", "value": <total_sec>, "unit": "sec",
    "queries": {"q_...": sec, ...(headline subset)}, "sf": 0.1,
-   "turns_per_sec": N, "n_turns": N, "n_queries": N, "n_skipped": N,
-   "detail": "BENCH_DETAIL.json"}
+   "n_queries": N, "n_skipped": N, "detail": "BENCH_DETAIL.json"}
 
 The FULL per-query map, skip list, and delta-vs-previous-round live in
 BENCH_DETAIL.json (written in-tree every run).
 
-Also measures flagship KG-pipeline throughput (turns/sec) over a
-seed-deterministic generated transcript table (fixtures.big_transcripts:
-pure JVM expressions, no driver loop), since the north rule's headline
-metric is turns/sec at scale. Scaling-efficiency (local[8] vs local[32])
-is measured by tools/scaling_bench.py and recorded in BENCH.md.
+The KG pipeline's throughput (turns/sec from transcripts through the
+salted sink) is measured by perfbench/run.py, not here. Scaling-efficiency
+(local[8] vs local[32]) is measured by tools/scaling_bench.py and recorded
+in BENCH.md.
 """
 
 from __future__ import annotations
@@ -32,8 +30,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
-BENCH_TURNS = int(os.environ.get("CLINER_BENCH_TURNS", "300000"))
-# Wall budget for the per-query sweep (the flagship still always runs).
+# Wall budget for the per-query sweep.
 # Far above any quiet-epoch total (~6 min); exists so a catastrophic
 # noisy-neighbor epoch (this sandbox shows up to 4x slowdowns) degrades to an
 # explicit "skipped" list in the JSON instead of a driver-side timeout with
@@ -196,44 +193,10 @@ def main() -> None:
         qtimes[name] = round(min(qtimes[name], second), 3)
     total = sum(qtimes.values())
 
-    # Flagship throughput: full KG pipeline over generated transcripts.
-    from cliner_spark import fixtures
-    from cliner_spark.pipeline import run_pipeline
-
-    tx = fixtures.big_transcripts(
-        spark, n_turns=BENCH_TURNS, n_convs=max(64, BENCH_TURNS // 200)
-    )
-    tx = tx.repartition(int(CPUS) * 2)
-    tx.write.mode("overwrite").parquet("/tmp/cliner_bench_tx")
-    tx = spark.read.parquet("/tmp/cliner_bench_tx")
-
-    # Concept-canonicalization map is a gazetteer-version artifact
-    # (independent of the turn stream): build it once OUTSIDE the timed
-    # region, exactly the protocol tools/scaling_bench.py documents —
-    # production recomputes it per gazetteer release, not per batch.
-    from cliner_spark.canonicalize import canonical_concept_map
-
-    canon = canonical_concept_map(fixtures.gazetteer_df(spark)).localCheckpoint(
-        eager=True
-    )
-
-    t0 = time.time()
-    out = run_pipeline(spark, tx, scanner="udf", canon_map=canon)
-    n_triples = out["triples"].count()
-    pipe_sec = time.time() - t0
-    turns_per_sec = BENCH_TURNS / pipe_sec if pipe_sec > 0 else 0.0
-    qtimes["flagship_pipeline"] = round(pipe_sec, 3)
-    total += pipe_sec
-    print(
-        f"# flagship: {n_triples} triples from {BENCH_TURNS} turns in "
-        f"{pipe_sec:.2f}s ({turns_per_sec:,.0f} turns/sec)",
-        file=sys.stderr,
-    )
-
     # Full detail -> in-tree file (the driver's tail-capture truncates long
     # stdout lines; VERDICT r2 item 1). Summary line stays compact: the
-    # headline `queries` subset is the flagship + the 10 most expensive, so
-    # a human reading BENCH_r{N}.json still sees where the time went.
+    # headline `queries` subset is the 10 most expensive, so a human
+    # reading BENCH_r{N}.json still sees where the time went.
     here = os.path.dirname(os.path.abspath(__file__))
     detail = {
         "metric": "total_bench_sec",
@@ -243,17 +206,11 @@ def main() -> None:
         "protocol_min_of_2_epochs": sorted(min_of_2),
         "skipped_over_budget": skipped,
         "sf": guess_sf(SF_DIR),
-        "turns_per_sec": round(turns_per_sec, 1),
-        "n_turns": BENCH_TURNS,
-        "n_triples": n_triples,
         "delta_vs_prev": delta_vs_prev(qtimes),
     }
     with open(os.path.join(here, "BENCH_DETAIL.json"), "w") as f:
         json.dump(detail, f, indent=1, sort_keys=True)
-    top = dict(
-        sorted(qtimes.items(), key=lambda kv: -kv[1])[:10],
-        flagship_pipeline=qtimes["flagship_pipeline"],
-    )
+    top = dict(sorted(qtimes.items(), key=lambda kv: -kv[1])[:10])
     print(
         json.dumps(
             {
@@ -262,9 +219,6 @@ def main() -> None:
                 "unit": "sec",
                 "queries": top,
                 "sf": guess_sf(SF_DIR),
-                "turns_per_sec": round(turns_per_sec, 1),
-                "n_turns": BENCH_TURNS,
-                "n_triples": n_triples,
                 "n_queries": len(qtimes),
                 "n_skipped": len(skipped),
                 "detail": "BENCH_DETAIL.json",

@@ -127,10 +127,7 @@ def run_pipeline(
 
         turn_toks = tokenize(turns).select("conv_id", "turn_idx", "tokens")
         linked = classify_assertions(linked, turn_toks)
-    triples = _observe(
-        build_triples(linked, canon_map=canon_map, eager_checkpoint=with_metrics),
-        "triples",
-    )
+    triples = _observe(build_triples(linked, canon_map=canon_map), "triples")
     out = {
         "mentions": mentions,
         "linked": linked,

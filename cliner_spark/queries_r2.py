@@ -924,25 +924,31 @@ def _kcore_sql(k: int, rounds: int) -> str:
     )
 
 
+# q_kcore's one peel budget: the oracle's unroll depth and Spark's max_rounds
+_KCORE_ROUNDS = 18
+
+
 @register(
     "q_kcore",
     f"""
 WITH {SQL_DOCS_TOKS}, {SQL_DOCPAIR_GRAPH.strip()},
-{_kcore_sql(4, 18)}
+{_kcore_sql(4, _KCORE_ROUNDS)}
 """,
 )
 def q_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     """4-core of the doc-similarity graph (graph.k_core): iterative peeling
     of nodes with degree < 4 until fixpoint — the dense-duplication
     backbone a curation pass inspects first. Data-dependent round count in
-    Spark (early exit at fixpoint) checked against a 10-round unrolled
-    oracle: once the peel converges, extra unrolled rounds are identity,
-    so the two agree whenever convergence happens within the unroll budget
-    (18 rounds; measured peel depths 12 at sf0.001, 7 at sf0.01 — depth is
-    structural, not monotone in data size)."""
+    Spark (early exit at fixpoint) checked against an 18-round
+    (_KCORE_ROUNDS) unrolled oracle: once the peel converges, extra
+    unrolled rounds are identity, so the two agree whenever the peel
+    converges within the budget (measured peel depths 12 at sf0.001, 7 at
+    sf0.01 — depth is structural, not monotone in data size). Spark runs
+    with max_rounds=_KCORE_ROUNDS, so a deeper peel raises RuntimeError
+    rather than returning a core the oracle cannot reproduce."""
     from cliner_spark.graph import k_core
 
-    return k_core(_docpair_edges(spark, sf_dir), k=4)
+    return k_core(_docpair_edges(spark, sf_dir), k=4, max_rounds=_KCORE_ROUNDS)
 
 
 @register(

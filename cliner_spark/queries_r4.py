@@ -14,7 +14,10 @@ from pyspark.sql import functions as F  # noqa: F401
 
 from cliner_spark.entry_queries import (  # noqa: F401
     REGISTRY,
+    SQL_BEST_GAZ,
     SQL_DOCS_TOKS,
+    SQL_KEPT_MENTIONS,
+    SQL_LINKED,
     load,
     load_docs,
     register,
@@ -175,515 +178,6 @@ def q_pq_residual_gain(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).select(F.lit(name).alias("encoding"), "distortion_micro", "n_vectors")
 
     return _tot(raw, "raw").unionAll(_tot(rcodes, "residual"))
-
-
-# --------------------------------------------------------------------------
-# Round 4n: product/monitoring analytics — ordered funnel conversion,
-# retention cohort matrix, chi-square/Cramér's-V independence audit,
-# Mann-Kendall trend + Theil-Sen slope, and an EWMA volume-anomaly ledger.
-# Exact-integer sufficient statistics throughout; floats only as rounded
-# convenience columns.
-# --------------------------------------------------------------------------
-
-_FUNNEL_SQL = """
-WITH s1 AS (
-  SELECT user_id, min(ts) AS t1 FROM events
-  WHERE event_type = 'signup' GROUP BY 1
-),
-s2 AS (
-  SELECT e.user_id, min(e.ts) AS t2
-  FROM events e JOIN s1 ON e.user_id = s1.user_id
-  WHERE e.event_type = 'click' AND e.ts > s1.t1
-  GROUP BY 1
-),
-s3 AS (
-  SELECT e.user_id, min(e.ts) AS t3
-  FROM events e JOIN s2 ON e.user_id = s2.user_id
-  WHERE e.event_type = 'purchase' AND e.ts > s2.t2
-  GROUP BY 1
-),
-f AS (
-  SELECT 1 AS step, 'signup' AS step_name, count(*) AS n FROM s1
-  UNION ALL SELECT 2, 'click', count(*) FROM s2
-  UNION ALL SELECT 3, 'purchase', count(*) FROM s3
-)
-SELECT CAST(step AS INT) AS step, step_name,
-       CAST(n AS BIGINT) AS n_users,
-       CAST(coalesce(lag(n) OVER (ORDER BY step), n) AS BIGINT) AS prev_users,
-       round(CAST(n AS DOUBLE)
-             / coalesce(lag(n) OVER (ORDER BY step), n), 6) AS conv_prev,
-       CAST(max(CASE WHEN step = 1 THEN n END) OVER () AS BIGINT)
-         AS first_users,
-       round(CAST(n AS DOUBLE)
-             / max(CASE WHEN step = 1 THEN n END) OVER (), 6) AS conv_first
-FROM f
-"""
-
-
-@register("q_funnel_conversion", _FUNNEL_SQL)
-def q_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ordered funnel conversion (signup -> click -> purchase) with the
-    STRICT temporal-order semantics real funnel engines use: a user counts
-    at step k only if their earliest step-k event happens strictly AFTER
-    their earliest qualifying step-(k-1) event (min-ts chaining, not mere
-    event presence — a purchase before first click does not convert).
-    Emits the 3-row step ledger with exact user counts and step-over-step
-    / from-first conversion rationals.
-
-    Scale plan: each step is one filtered scan + an equi-join on user_id
-    against the previous (already user-deduped, strictly smaller) step
-    frame — broadcastable in practice, hash-co-located otherwise; no
-    windows over the fact table, no all-event materialization per user.
-    The lag/max windows run on the 3-row step frame."""
-    ev = load(spark, sf_dir, "events")
-    s1 = (
-        ev.filter(F.col("event_type") == "signup")
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("t1"))
-    )
-    s2 = (
-        ev.filter(F.col("event_type") == "click")
-        .join(s1, "user_id")
-        .filter(F.col("ts") > F.col("t1"))
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("t2"))
-    )
-    s3 = (
-        ev.filter(F.col("event_type") == "purchase")
-        .join(s2, "user_id")
-        .filter(F.col("ts") > F.col("t2"))
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("t3"))
-    )
-    f = (
-        s1.agg(F.lit(1).alias("step"), F.lit("signup").alias("step_name"),
-               F.count(F.lit(1)).alias("n"))
-        .unionAll(
-            s2.agg(F.lit(2).alias("step"), F.lit("click").alias("step_name"),
-                   F.count(F.lit(1)).alias("n"))
-        )
-        .unionAll(
-            s3.agg(F.lit(3).alias("step"),
-                   F.lit("purchase").alias("step_name"),
-                   F.count(F.lit(1)).alias("n"))
-        )
-    )
-    w = Window.orderBy("step")
-    wall = Window.partitionBy()
-    prev = F.coalesce(F.lag("n").over(w), F.col("n"))
-    first = F.max(F.when(F.col("step") == 1, F.col("n"))).over(wall)
-    return f.select(
-        F.col("step").cast("int").alias("step"),
-        "step_name",
-        F.col("n").cast("bigint").alias("n_users"),
-        prev.cast("bigint").alias("prev_users"),
-        F.round(F.col("n").cast("double") / prev, 6).alias("conv_prev"),
-        first.cast("bigint").alias("first_users"),
-        F.round(F.col("n").cast("double") / first, 6).alias("conv_first"),
-    )
-
-
-_RETENTION_SQL = """
-WITH u AS (
-  SELECT user_id, min(CAST(ts AS DATE)) AS d0 FROM events GROUP BY 1
-),
-act AS (
-  SELECT DISTINCT e.user_id, u.d0,
-         CAST((date_diff('day', u.d0, CAST(e.ts AS DATE))
-               - (date_diff('day', u.d0, CAST(e.ts AS DATE)) % 7)) / 7
-              AS INT) AS wk
-  FROM events e JOIN u ON e.user_id = u.user_id
-),
-cs AS (SELECT d0, count(*) AS cohort_n FROM u GROUP BY 1),
-r AS (SELECT d0, wk, count(*) AS n_active FROM act GROUP BY 1, 2),
-mw AS (SELECT max(wk) AS m FROM act),
-spine AS (
-  SELECT cs.d0, cs.cohort_n, CAST(g.x AS INT) AS wk
-  FROM cs, mw, unnest(range(CAST(mw.m + 1 AS BIGINT))) AS g(x)
-)
-SELECT CAST(s.d0 AS VARCHAR) AS cohort_day, s.wk AS week_offset,
-       CAST(s.cohort_n AS BIGINT) AS cohort_users,
-       CAST(coalesce(r.n_active, 0) AS BIGINT) AS active_users,
-       round(CAST(coalesce(r.n_active, 0) AS DOUBLE) / s.cohort_n, 6)
-         AS retention
-FROM spine s LEFT JOIN r ON s.d0 = r.d0 AND s.wk = r.wk
-"""
-
-
-@register("q_retention_cohorts", _RETENTION_SQL)
-def q_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Classic retention cohort matrix: users cohorted by first-activity
-    day, activity bucketed into 7-day offsets from EACH USER'S OWN day-0
-    (not calendar weeks — the unbiased form that doesn't penalize users
-    who sign up late in a week), zero-filled over the full cohort x offset
-    grid so silent cohorts are visible rows, with exact active/cohort-size
-    rationals.
-
-    Scale plan: two map-side-combined groupBys over the fact table (user
-    day-0, then distinct user-week activity) and an equi-join on user_id;
-    the zero-fill spine is |cohorts| x |offsets| — dimension-sized, built
-    from two tiny frames. Day-0 per user is the only per-user state, no
-    windows over raw events."""
-    ev = load(spark, sf_dir, "events")
-    u = ev.groupBy("user_id").agg(F.min(F.col("ts").cast("date")).alias("d0"))
-    dd = F.datediff(F.col("ts").cast("date"), F.col("d0"))
-    act = (
-        ev.join(u, "user_id")
-        .select(
-            "user_id",
-            "d0",
-            ((dd - dd % 7) / 7).cast("int").alias("wk"),
-        )
-        .distinct()
-    )
-    cs = u.groupBy("d0").agg(F.count(F.lit(1)).alias("cohort_n"))
-    r = act.groupBy("d0", "wk").agg(F.count(F.lit(1)).alias("n_active"))
-    mw = act.agg(F.max("wk").alias("m"))
-    spine = cs.crossJoin(mw).select(
-        "d0",
-        "cohort_n",
-        F.explode(F.sequence(F.lit(0), F.col("m"))).alias("wk"),
-    )
-    out = spine.join(r, ["d0", "wk"], "left")
-    na = F.coalesce(F.col("n_active"), F.lit(0))
-    return out.select(
-        F.col("d0").cast("string").alias("cohort_day"),
-        F.col("wk").cast("int").alias("week_offset"),
-        F.col("cohort_n").cast("bigint").alias("cohort_users"),
-        na.cast("bigint").alias("active_users"),
-        F.round(na.cast("double") / F.col("cohort_n"), 6).alias("retention"),
-    )
-
-
-_CHISQ_SQL = """
-WITH o AS (
-  SELECT source, lang, count(*) AS n FROM documents GROUP BY 1, 2
-),
-srcs AS (SELECT source, sum(n) AS r FROM o GROUP BY 1),
-langs AS (SELECT lang, sum(n) AS c FROM o GROUP BY 1),
-tot AS (
-  SELECT (SELECT sum(n) FROM o) AS nn,
-         (SELECT count(*) FROM srcs) AS nr,
-         (SELECT count(*) FROM langs) AS nc
-),
-cell AS (
-  SELECT s.source, l.lang, s.r, l.c, coalesce(o.n, 0) AS obs
-  FROM srcs s CROSS JOIN langs l
-  LEFT JOIN o ON o.source = s.source AND o.lang = l.lang
-),
-t AS (
-  SELECT cell.*, tot.nn, tot.nr, tot.nc,
-         (nn * obs - r * c) * (nn * obs - r * c) AS num,
-         nn * r * c AS den
-  FROM cell, tot
-),
-w AS (
-  SELECT t.*, sum(CAST(num AS DOUBLE) / den) OVER () AS chi2 FROM t
-)
-SELECT source, lang, CAST(obs AS BIGINT) AS obs,
-       CAST(r AS BIGINT) AS row_total, CAST(c AS BIGINT) AS col_total,
-       CAST(num AS BIGINT) AS chisq_num, CAST(den AS BIGINT) AS chisq_den,
-       round(CAST(num AS DOUBLE) / den, 6) AS cell_term,
-       round(chi2, 6) AS chi2,
-       round(sqrt(chi2 / (nn * least(nr - 1, nc - 1))), 6) AS cramers_v
-FROM w
-"""
-
-
-@register("q_chisq_independence", _CHISQ_SQL)
-def q_chisq_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Chi-square independence audit of the source x lang contingency
-    table (is language mix independent of crawl source?) with Cramér's V
-    effect size. Per-cell sufficient statistics are EXACT BIGINTs via the
-    cross-multiplied identity (obs-exp)^2/exp = (N*obs - r*c)^2 / (N*r*c)
-    — no float expected-counts; the zero-filled full grid means empty
-    cells (a source missing a language entirely) contribute their full
-    r*c/N expectation to the statistic, exactly the signal a biased
-    crawl shows. chi2 / cramers_v are rounded conveniences (sums of ~100
-    exact rationals; value >> 6dp rounding noise).
-
-    Scale plan: one map-side-combined (source, lang) count; everything
-    downstream runs on dimension-sized frames (|sources| x |langs| grid).
-    The 1-row totals frame rides a broadcast scalar-carry crossJoin
-    (whitelisted)."""
-    docs = load_docs(spark, sf_dir)
-    o = docs.groupBy("source", "lang").agg(F.count(F.lit(1)).alias("n"))
-    srcs = o.groupBy("source").agg(F.sum("n").alias("r"))
-    langs = o.groupBy("lang").agg(F.sum("n").alias("c"))
-    tot = o.agg(
-        F.sum("n").alias("nn"),
-        F.countDistinct("source").alias("nr"),
-        F.countDistinct("lang").alias("nc"),
-    )
-    cell = (
-        srcs.crossJoin(langs)
-        .join(o, ["source", "lang"], "left")
-        .select(
-            "source", "lang", "r", "c",
-            F.coalesce(F.col("n"), F.lit(0)).alias("obs"),
-        )
-    )
-    t = cell.crossJoin(tot).select(
-        "*",
-        ((F.col("nn") * F.col("obs") - F.col("r") * F.col("c"))
-         * (F.col("nn") * F.col("obs") - F.col("r") * F.col("c"))).alias("num"),
-        (F.col("nn") * F.col("r") * F.col("c")).alias("den"),
-    )
-    chi2 = F.sum(F.col("num").cast("double") / F.col("den")).over(
-        Window.partitionBy()
-    )
-    w = t.withColumn("chi2", chi2)
-    return w.select(
-        "source",
-        "lang",
-        F.col("obs").cast("bigint").alias("obs"),
-        F.col("r").cast("bigint").alias("row_total"),
-        F.col("c").cast("bigint").alias("col_total"),
-        F.col("num").cast("bigint").alias("chisq_num"),
-        F.col("den").cast("bigint").alias("chisq_den"),
-        F.round(F.col("num").cast("double") / F.col("den"), 6).alias("cell_term"),
-        F.round(F.col("chi2"), 6).alias("chi2"),
-        F.round(
-            F.sqrt(
-                F.col("chi2")
-                / (F.col("nn") * F.least(F.col("nr") - 1, F.col("nc") - 1))
-            ),
-            6,
-        ).alias("cramers_v"),
-    )
-
-
-_MANN_KENDALL_SQL = """
-WITH daily AS (
-  SELECT CAST(ts AS DATE) AS day, CAST(count(*) AS BIGINT) AS x
-  FROM events GROUP BY 1
-),
-b AS (SELECT min(day) AS dmin, max(day) AS dmax FROM daily),
-spine AS (
-  SELECT CAST(g.gs AS DATE) AS day
-  FROM b, unnest(generate_series(b.dmin, b.dmax, INTERVAL 1 DAY)) AS g(gs)
-),
-dense AS (
-  SELECT row_number() OVER (ORDER BY s.day) AS k, coalesce(d.x, 0) AS x
-  FROM spine s LEFT JOIN daily d USING (day)
-),
-pairs AS (
-  SELECT a.k AS ka, b.k AS kb,
-         CASE WHEN b.x > a.x THEN 1 WHEN b.x < a.x THEN -1 ELSE 0 END AS sg,
-         (b.x - a.x) * 1000 AS snum, b.k - a.k AS sden
-  FROM dense a JOIN dense b ON a.k < b.k
-),
-sl AS (
-  SELECT sg,
-         CAST((snum - ((snum % sden) + sden) % sden) // sden AS BIGINT)
-           AS slope_milli,
-         ka, kb,
-         count(*) OVER () AS n_pairs,
-         sum(sg) OVER () AS s_stat,
-         row_number() OVER (ORDER BY
-           (snum - ((snum % sden) + sden) % sden) // sden, ka, kb) AS pr
-  FROM pairs
-),
-nd AS (SELECT count(*) AS n_days FROM dense),
-tie AS (
-  SELECT coalesce(sum(t * (t - 1) * (2 * t + 5)), 0) AS tie_term
-  FROM (SELECT count(*) AS t FROM dense GROUP BY x HAVING count(*) > 1)
-)
-SELECT CAST(nd.n_days AS BIGINT) AS n_days,
-       CAST(sl.n_pairs AS BIGINT) AS n_pairs,
-       CAST(sl.s_stat AS BIGINT) AS s_stat,
-       CAST(nd.n_days * (nd.n_days - 1) * (2 * nd.n_days + 5)
-            - tie.tie_term AS BIGINT) AS var18,
-       CAST(sl.slope_milli AS BIGINT) AS ts_slope_milli,
-       round(CAST(sl.slope_milli AS DOUBLE) / 1000, 6) AS ts_slope
-FROM sl, nd, tie
-WHERE sl.pr = (sl.n_pairs + 1) // 2
-"""
-
-
-@register("q_mann_kendall", _MANN_KENDALL_SQL)
-def q_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mann-Kendall trend test + Theil-Sen slope over the daily event
-    volume (zero-filled day grid): S = sum of pairwise signs (exact
-    integer), tie-corrected variance as the exact integer 18*Var(S) =
-    n(n-1)(2n+5) - sum t(t-1)(2t+5), and the Theil-Sen slope as the LOWER
-    MEDIAN of all pairwise slopes in exact milli-units per day — each
-    slope floor((xj-xi)*1000 / (kj-ki)) with the engine-stable
-    ((a%b)+b)%b floor-mod (Spark's and DuckDB's % both take the
-    dividend's sign), so the median is selected from an integer total
-    order with (ka, kb) tie pinning. The nonparametric trend primitive —
-    robust to outliers that wreck OLS on bursty volumes.
-
-    Scale plan: the pair join is over the DAY GRID (|days|^2 — a
-    dimension squared, ~10^5 rows for a year; never the corpus); the raw
-    fact table contributes one map-side-combined daily rollup. The 1-row
-    n_days / tie-term frames ride whitelisted scalar-carry crossJoins."""
-    ev = load(spark, sf_dir, "events")
-    daily = ev.groupBy(F.col("ts").cast("date").alias("day")).agg(
-        F.count(F.lit(1)).cast("bigint").alias("x")
-    )
-    b = daily.agg(F.min("day").alias("dmin"), F.max("day").alias("dmax"))
-    spine = b.select(
-        F.explode(F.sequence("dmin", "dmax", F.expr("interval 1 day"))).alias("day")
-    )
-    dense = (
-        spine.join(daily, "day", "left")
-        .select(
-            F.row_number().over(Window.orderBy("day")).alias("k"),
-            F.coalesce("x", F.lit(0)).cast("bigint").alias("x"),
-        )
-    )
-    a, c = dense.alias("a"), dense.alias("b")
-    pairs = a.join(c, F.col("a.k") < F.col("b.k")).select(
-        F.col("a.k").alias("ka"),
-        F.col("b.k").alias("kb"),
-        F.when(F.col("b.x") > F.col("a.x"), 1)
-        .when(F.col("b.x") < F.col("a.x"), -1)
-        .otherwise(0)
-        .alias("sg"),
-        ((F.col("b.x") - F.col("a.x")) * 1000).alias("snum"),
-        (F.col("b.k") - F.col("a.k")).alias("sden"),
-    )
-    fmod = ((F.col("snum") % F.col("sden")) + F.col("sden")) % F.col("sden")
-    slope = ((F.col("snum") - fmod) / F.col("sden")).cast("bigint")
-    wall = Window.partitionBy()
-    sl = pairs.select(
-        "sg",
-        slope.alias("slope_milli"),
-        "ka",
-        "kb",
-        F.count(F.lit(1)).over(wall).alias("n_pairs"),
-        F.sum("sg").over(wall).alias("s_stat"),
-        F.row_number()
-        .over(Window.orderBy(slope.asc(), F.asc("ka"), F.asc("kb")))
-        .alias("pr"),
-    )
-    nd = dense.agg(F.count(F.lit(1)).alias("n_days"))
-    tie = (
-        dense.groupBy("x")
-        .agg(F.count(F.lit(1)).alias("t"))
-        .filter(F.col("t") > 1)
-        .agg(
-            F.coalesce(
-                F.sum(F.col("t") * (F.col("t") - 1) * (2 * F.col("t") + 5)),
-                F.lit(0),
-            ).alias("tie_term")
-        )
-    )
-    med = sl.filter(
-        F.col("pr") == F.floor((F.col("n_pairs") + 1) / 2)
-    )
-    out = med.crossJoin(nd).crossJoin(tie)
-    return out.select(
-        F.col("n_days").cast("bigint").alias("n_days"),
-        F.col("n_pairs").cast("bigint").alias("n_pairs"),
-        F.col("s_stat").cast("bigint").alias("s_stat"),
-        (
-            F.col("n_days") * (F.col("n_days") - 1) * (2 * F.col("n_days") + 5)
-            - F.col("tie_term")
-        )
-        .cast("bigint")
-        .alias("var18"),
-        F.col("slope_milli").cast("bigint").alias("ts_slope_milli"),
-        F.round(F.col("slope_milli").cast("double") / 1000, 6).alias("ts_slope"),
-    )
-
-
-_EWMA_SQL = """
-WITH daily AS (
-  SELECT CAST(ts AS DATE) AS day, CAST(count(*) AS BIGINT) AS x
-  FROM events GROUP BY 1
-),
-b AS (SELECT min(day) AS dmin, max(day) AS dmax FROM daily),
-spine AS (
-  SELECT CAST(g.gs AS DATE) AS day
-  FROM b, unnest(generate_series(b.dmin, b.dmax, INTERVAL 1 DAY)) AS g(gs)
-),
-dense AS (
-  SELECT s.day, coalesce(d.x, 0) AS x
-  FROM spine s LEFT JOIN daily d USING (day)
-),
-off AS (SELECT CAST(t.i + 1 AS INT) AS o FROM unnest(range(16)) AS t(i)),
-j AS (
-  SELECT g.day, g.x,
-         (CAST(1 AS BIGINT) << (16 - off.o)) AS w, h.x AS hx
-  FROM dense g CROSS JOIN off
-  JOIN dense h ON h.day = g.day - off.o
-),
-agg AS (
-  SELECT day, x,
-         CAST(sum(w * hx) AS BIGINT) AS ewma_num,
-         CAST(sum(w) AS BIGINT) AS ewma_den
-  FROM j GROUP BY 1, 2
-)
-SELECT CAST(day AS VARCHAR) AS day, x,
-       ewma_num, ewma_den,
-       round(CAST(ewma_num AS DOUBLE) / ewma_den, 6) AS ewma,
-       (x * ewma_den > 2 * ewma_num) AS flag_high,
-       (2 * x * ewma_den < ewma_num) AS flag_low
-FROM agg
-"""
-
-
-@register("q_ewma_anomaly", _EWMA_SQL)
-def q_ewma_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EWMA volume-anomaly ledger over the daily event grid: each day's
-    baseline is the alpha=1/2 exponentially-weighted mean of the 16 PRIOR
-    days (weights 2^(16-o), an exact power-of-two ladder, so ewma_num /
-    ewma_den are exact BIGINTs — near the series start the denominator
-    self-normalizes over the available history). Anomaly flags are exact
-    cross-multiplied comparisons (x > 2*ewma / x < ewma/2) — zero float
-    surface in the decision; the rounded ewma column is convenience only.
-    The pointwise burst/outage detector complementing CUSUM (level shifts)
-    and KS (distribution drift).
-
-    Scale plan: the 16x fanout joins the DAY GRID against itself on an
-    equi-key (day - offset) — dimension-sized both sides; the fact table
-    contributes one map-side-combined rollup. First day emits no row (no
-    prior history, honest rather than a fabricated baseline). Production
-    partitions the same shape by tenant key."""
-    ev = load(spark, sf_dir, "events")
-    daily = ev.groupBy(F.col("ts").cast("date").alias("day")).agg(
-        F.count(F.lit(1)).cast("bigint").alias("x")
-    )
-    b = daily.agg(F.min("day").alias("dmin"), F.max("day").alias("dmax"))
-    spine = b.select(
-        F.explode(F.sequence("dmin", "dmax", F.expr("interval 1 day"))).alias("day")
-    )
-    dense = spine.join(daily, "day", "left").select(
-        "day", F.coalesce("x", F.lit(0)).cast("bigint").alias("x")
-    )
-    off = spark.range(16).select((F.col("id") + 1).cast("int").alias("o"))
-    g, h = dense.alias("g"), dense.alias("h")
-    j = (
-        g.crossJoin(off)
-        .join(h, F.col("h.day") == F.date_sub(F.col("g.day"), F.col("o")))
-        .select(
-            F.col("g.day").alias("day"),
-            F.col("g.x").alias("x"),
-            F.expr("shiftleft(CAST(1 AS BIGINT), 16 - o)").alias("w"),
-            F.col("h.x").alias("hx"),
-        )
-    )
-    agg = j.groupBy("day", "x").agg(
-        F.sum(F.col("w") * F.col("hx")).cast("bigint").alias("ewma_num"),
-        F.sum("w").cast("bigint").alias("ewma_den"),
-    )
-    return agg.select(
-        F.col("day").cast("string").alias("day"),
-        "x",
-        "ewma_num",
-        "ewma_den",
-        F.round(F.col("ewma_num").cast("double") / F.col("ewma_den"), 6).alias(
-            "ewma"
-        ),
-        (F.col("x") * F.col("ewma_den") > 2 * F.col("ewma_num")).alias(
-            "flag_high"
-        ),
-        (2 * F.col("x") * F.col("ewma_den") < F.col("ewma_num")).alias(
-            "flag_low"
-        ),
-    )
 
 
 # --------------------------------------------------------------------------
@@ -1128,795 +622,6 @@ def q_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.max("ub") - F.min("ub") + F.max("hb") - F.min("hb"))
         .cast("bigint")
         .alias("span_sum"),
-    )
-
-
-# --------------------------------------------------------------------------
-# Round 4p: calibration / rank-agreement / paired-eval statistics —
-# isotonic (PAV) recalibration of the quality classifier, Kendall tau-b
-# over the daily volume/revenue series, rank-biased overlap between two
-# top-k rankings, and a McNemar paired comparison of two document gates.
-# --------------------------------------------------------------------------
-
-from cliner_spark.entry_queries import (  # noqa: E402
-    SQL_BEST_GAZ,
-    SQL_KEPT_MENTIONS,
-    SQL_LINKED,
-)
-
-_ISO_SQL = f"""
-WITH {SQL_DOCS_TOKS}, {SQL_KEPT_MENTIONS}, {SQL_BEST_GAZ}, {SQL_LINKED},
-dl AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS n_toks FROM docs
-       WHERE len(toks) > 0),
-du AS (SELECT d.doc_id, CAST(count(DISTINCT lower(t.tok)) AS BIGINT) AS n_uniq
-       FROM docs d, unnest(d.toks) AS t(tok) GROUP BY 1),
-pred AS (SELECT dl.doc_id, (1000 * du.n_uniq) // dl.n_toks AS pred_milli
-         FROM dl JOIN du USING (doc_id)),
-lab AS (SELECT DISTINCT doc_id FROM linked),
-b AS (SELECT least(p.pred_milli // 100, 9) AS bin,
-             CASE WHEN l.doc_id IS NULL THEN 0 ELSE 1 END AS pos
-      FROM pred p LEFT JOIN lab l USING (doc_id)),
-bins AS (SELECT bin, count(*) AS n, sum(pos) AS p FROM b GROUP BY 1),
-ix AS (SELECT bin, row_number() OVER (ORDER BY bin) AS i, n, p FROM bins),
-iv AS (
-  SELECT j.i AS j, k.i AS k,
-         CAST(sum(t.p) AS BIGINT) AS pn, CAST(sum(t.n) AS BIGINT) AS nn
-  FROM ix j JOIN ix k ON j.i <= k.i
-  JOIN ix t ON t.i BETWEEN j.i AND k.i
-  GROUP BY 1, 2
-),
-mn AS (
-  SELECT x.i, v.j, v.pn, v.nn,
-         row_number() OVER (PARTITION BY x.i, v.j
-                            ORDER BY CAST(v.pn AS DOUBLE) / v.nn, v.k) AS rn
-  FROM ix x JOIN iv v ON v.j <= x.i AND v.k >= x.i
-),
-mx AS (
-  SELECT i, pn, nn,
-         row_number() OVER (PARTITION BY i
-                            ORDER BY CAST(pn AS DOUBLE) / nn DESC, j) AS rn2
-  FROM mn WHERE rn = 1
-)
-SELECT ix.bin, CAST(ix.n AS BIGINT) AS n, CAST(ix.p AS BIGINT) AS n_pos,
-       round(CAST(ix.p AS DOUBLE) / ix.n, 6) AS raw_rate,
-       mx.pn AS iso_num, mx.nn AS iso_den,
-       round(CAST(mx.pn AS DOUBLE) / mx.nn, 6) AS iso_rate
-FROM ix JOIN mx ON mx.i = ix.i AND mx.rn2 = 1
-"""
-
-
-@register("q_isotonic_calibration", _ISO_SQL)
-def q_isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Isotonic (PAV) recalibration of the q_calibration_bins classifier —
-    the standard fix when the reliability diagram says scores are
-    miscalibrated: fitted rate per score bin via the exact max-min
-    identity mu_i = max_{j<=i} min_{k>=i} (pos[j..k] / n[j..k]), which
-    equals pool-adjacent-violators on the bin sequence. Interval rates
-    stay exact integer pairs (pn, nn); argmin/argmax selection orders by
-    the IEEE-identical double quotient with (k, then j) tie pins — two
-    distinct bin-count rationals cannot collide in double at corpus
-    denominators, and equal-VALUE ties select the same fraction value
-    regardless of pin. Output is the monotone fitted curve beside the raw
-    per-bin rate, iso_num/iso_den exact.
-
-    Scale plan: the corpus contributes two partial-agg groupBys (the same
-    shape as q_calibration_bins); the PAV itself runs on the <=10-bin
-    frame — intervals are a <=10^2 dimension join, never data-sized."""
-    from cliner_spark.entry_queries import _doc_linked
-    from cliner_spark.tokenization import tokens_col
-
-    docs = load_docs(spark, sf_dir)
-    toks_c = tokens_col("text")
-    dl = docs.filter(F.size(toks_c) > 0).select(
-        "doc_id", F.size(toks_c).cast("long").alias("n_toks")
-    )
-    du = (
-        docs.select("doc_id", F.explode(toks_c).alias("tok"))
-        .select("doc_id", F.lower("tok").alias("tok"))
-        .groupBy("doc_id")
-        .agg(F.countDistinct("tok").alias("n_uniq"))
-    )
-    pred = dl.join(du, "doc_id").select(
-        "doc_id", F.expr("(1000 * n_uniq) div n_toks").alias("pred_milli")
-    )
-    lab = (
-        _doc_linked(spark, sf_dir)
-        .select(F.col("conv_id").alias("doc_id"))
-        .distinct()
-        .withColumn("pos", F.lit(1))
-    )
-    b = pred.join(F.broadcast(lab), "doc_id", "left").select(
-        F.least(F.expr("pred_milli div 100"), F.lit(9)).alias("bin"),
-        F.coalesce(F.col("pos"), F.lit(0)).alias("pos"),
-    )
-    bins = b.groupBy("bin").agg(
-        F.count(F.lit(1)).alias("n"), F.sum("pos").alias("p")
-    )
-    ix = bins.select(
-        "bin", F.row_number().over(Window.orderBy("bin")).alias("i"), "n", "p"
-    )
-    j, k, t = ix.alias("j"), ix.alias("k"), ix.alias("t")
-    iv = (
-        j.join(k, F.col("j.i") <= F.col("k.i"))
-        .join(t, (F.col("t.i") >= F.col("j.i")) & (F.col("t.i") <= F.col("k.i")))
-        .groupBy(F.col("j.i").alias("j"), F.col("k.i").alias("k"))
-        .agg(
-            F.sum("t.p").cast("bigint").alias("pn"),
-            F.sum("t.n").cast("bigint").alias("nn"),
-        )
-    )
-    x, v = ix.alias("x"), iv.alias("v")
-    mn = (
-        x.join(v, (F.col("v.j") <= F.col("x.i")) & (F.col("v.k") >= F.col("x.i")))
-        .select(
-            F.col("x.i").alias("i"),
-            F.col("v.j").alias("j"),
-            "v.pn",
-            "v.nn",
-            F.row_number()
-            .over(
-                Window.partitionBy(F.col("x.i"), F.col("v.j")).orderBy(
-                    (F.col("v.pn").cast("double") / F.col("v.nn")).asc(),
-                    F.col("v.k").asc(),
-                )
-            )
-            .alias("rn"),
-        )
-        .filter(F.col("rn") == 1)
-    )
-    mx = mn.select(
-        "i",
-        "pn",
-        "nn",
-        F.row_number()
-        .over(
-            Window.partitionBy("i").orderBy(
-                (F.col("pn").cast("double") / F.col("nn")).desc(), F.col("j").asc()
-            )
-        )
-        .alias("rn2"),
-    ).filter(F.col("rn2") == 1)
-    return (
-        ix.join(mx, "i")
-        .select(
-            "bin",
-            F.col("n").cast("bigint").alias("n"),
-            F.col("p").cast("bigint").alias("n_pos"),
-            F.round(F.col("p").cast("double") / F.col("n"), 6).alias("raw_rate"),
-            F.col("pn").alias("iso_num"),
-            F.col("nn").alias("iso_den"),
-            F.round(F.col("pn").cast("double") / F.col("nn"), 6).alias("iso_rate"),
-        )
-    )
-
-
-_KENDALL_SQL = """
-WITH daily AS (
-  SELECT CAST(ts AS DATE) AS day, CAST(count(*) AS BIGINT) AS x,
-         CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS y
-  FROM events GROUP BY 1
-),
-b AS (SELECT min(day) AS dmin, max(day) AS dmax FROM daily),
-spine AS (
-  SELECT CAST(g.gs AS DATE) AS day
-  FROM b, unnest(generate_series(b.dmin, b.dmax, INTERVAL 1 DAY)) AS g(gs)
-),
-dense AS (
-  SELECT row_number() OVER (ORDER BY s.day) AS k,
-         coalesce(d.x, 0) AS x, coalesce(d.y, 0) AS y
-  FROM spine s LEFT JOIN daily d USING (day)
-),
-p AS (
-  SELECT CASE WHEN (b.x - a.x) * (b.y - a.y) > 0 THEN 1 ELSE 0 END AS con,
-         CASE WHEN (b.x - a.x) * (b.y - a.y) < 0 THEN 1 ELSE 0 END AS dis,
-         CASE WHEN b.x = a.x AND b.y <> a.y THEN 1 ELSE 0 END AS tx,
-         CASE WHEN b.y = a.y AND b.x <> a.x THEN 1 ELSE 0 END AS ty,
-         CASE WHEN b.x = a.x AND b.y = a.y THEN 1 ELSE 0 END AS txy
-  FROM dense a JOIN dense b ON a.k < b.k
-)
-SELECT CAST(sum(con) AS BIGINT) AS n_con, CAST(sum(dis) AS BIGINT) AS n_dis,
-       CAST(sum(tx) AS BIGINT) AS ties_x, CAST(sum(ty) AS BIGINT) AS ties_y,
-       CAST(sum(txy) AS BIGINT) AS ties_xy,
-       CAST(sum(con) - sum(dis) AS BIGINT) AS tau_num,
-       CAST(sum(con) + sum(dis) + sum(tx) AS BIGINT) AS tau_den_x,
-       CAST(sum(con) + sum(dis) + sum(ty) AS BIGINT) AS tau_den_y,
-       round((sum(con) - sum(dis)) / sqrt(
-         CAST(sum(con) + sum(dis) + sum(tx) AS DOUBLE)
-         * (sum(con) + sum(dis) + sum(ty))), 6) AS tau_b
-FROM p
-"""
-
-
-@register("q_kendall_taub", _KENDALL_SQL)
-def q_kendall_taub(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Kendall tau-b between daily event VOLUME and daily REVENUE (exact
-    integer cents) over the zero-filled day grid: concordant/discordant/
-    tied pair counts are exact integers from the pairwise sign products,
-    and tau-b's tie correction uses the standard denominators
-    (C+D+Tx)(C+D+Ty). The complement to q_spearman_rank: Spearman needs a
-    pinned total order (tie-sensitive); tau-b is the statistic whose tie
-    treatment is canonical — worth its O(grid^2) cost exactly because the
-    DAY GRID is bounded by the calendar, not the corpus (the reason the
-    Spearman docstring calls corpus-scale Kendall infeasible).
-
-    Scale plan: one map-side-combined daily rollup (count + exact-cents
-    sum), then the pair join runs over |days|^2 — dimension squared. At a
-    year of data that is ~66k pairs; the corpus scan stays single-pass."""
-    ev = load(spark, sf_dir, "events")
-    daily = ev.groupBy(F.col("ts").cast("date").alias("day")).agg(
-        F.count(F.lit(1)).cast("bigint").alias("x"),
-        F.sum(F.round(F.col("value") * 100).cast("bigint"))
-        .cast("bigint")
-        .alias("y"),
-    )
-    bb = daily.agg(F.min("day").alias("dmin"), F.max("day").alias("dmax"))
-    spine = bb.select(
-        F.explode(F.sequence("dmin", "dmax", F.expr("interval 1 day"))).alias("day")
-    )
-    dense = spine.join(daily, "day", "left").select(
-        F.row_number().over(Window.orderBy("day")).alias("k"),
-        F.coalesce("x", F.lit(0)).cast("bigint").alias("x"),
-        F.coalesce("y", F.lit(0)).cast("bigint").alias("y"),
-    )
-    a, c = dense.alias("a"), dense.alias("b")
-    dx = F.col("b.x") - F.col("a.x")
-    dy = F.col("b.y") - F.col("a.y")
-    p = a.join(c, F.col("a.k") < F.col("b.k")).select(
-        F.when(dx * dy > 0, 1).otherwise(0).alias("con"),
-        F.when(dx * dy < 0, 1).otherwise(0).alias("dis"),
-        F.when((dx == 0) & (dy != 0), 1).otherwise(0).alias("tx"),
-        F.when((dy == 0) & (dx != 0), 1).otherwise(0).alias("ty"),
-        F.when((dx == 0) & (dy == 0), 1).otherwise(0).alias("txy"),
-    )
-    sc, sd = F.sum("con"), F.sum("dis")
-    stx, sty = F.sum("tx"), F.sum("ty")
-    return p.agg(
-        sc.cast("bigint").alias("n_con"),
-        sd.cast("bigint").alias("n_dis"),
-        stx.cast("bigint").alias("ties_x"),
-        sty.cast("bigint").alias("ties_y"),
-        F.sum("txy").cast("bigint").alias("ties_xy"),
-        (sc - sd).cast("bigint").alias("tau_num"),
-        (sc + sd + stx).cast("bigint").alias("tau_den_x"),
-        (sc + sd + sty).cast("bigint").alias("tau_den_y"),
-        F.round(
-            (sc - sd)
-            / F.sqrt((sc + sd + stx).cast("double") * (sc + sd + sty)),
-            6,
-        ).alias("tau_b"),
-    )
-
-
-_RBO_SQL = f"""
-WITH {SQL_DOCS_TOKS.strip()},
-r AS (
-  SELECT doc_id,
-         row_number() OVER (ORDER BY n_chars DESC, doc_id) AS ra,
-         row_number() OVER (ORDER BY len(toks) DESC, doc_id) AS rb
-  FROM docs JOIN documents USING (doc_id)
-),
-d AS (SELECT CAST(t.i + 1 AS INT) AS depth FROM unnest(range(20)) AS t(i)),
-rk AS (SELECT * FROM r WHERE ra <= 20 OR rb <= 20),
-o AS (
-  SELECT d.depth,
-         CAST(count(CASE WHEN rk.ra <= d.depth AND rk.rb <= d.depth
-                         THEN 1 END) AS BIGINT) AS overlap
-  FROM d CROSS JOIN rk GROUP BY 1
-),
-t AS (
-  SELECT depth, overlap,
-         CAST(overlap AS BIGINT) AS term_num,
-         CAST(depth AS BIGINT) * (CAST(1 AS BIGINT) << depth) AS term_den
-  FROM o
-)
-SELECT depth, overlap,
-       round(CAST(overlap AS DOUBLE) / depth, 6) AS agreement,
-       term_num, term_den,
-       round(CAST(term_num AS DOUBLE) / term_den, 6) AS term,
-       round(sum(CAST(term_num AS DOUBLE) / term_den)
-             OVER (ORDER BY depth ROWS UNBOUNDED PRECEDING), 6) AS rbo_min
-FROM t
-"""
-
-
-@register("q_rbo_topk", _RBO_SQL)
-def q_rbo_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Rank-biased overlap (Webber 2010) between the char-length and
-    token-count document rankings at p = 1/2, depths 1..20: per depth the
-    exact top-d intersection size, the agreement o_d/d, and the RBO
-    partial sum sum_d (1-p) p^(d-1) o_d/d whose terms are exact rationals
-    o_d / (d * 2^d) (power-of-two weights — the same trick as the EWMA
-    ladder). The TOP-WEIGHTED rank-agreement number Spearman/tau can't
-    give: disagreement at rank 2 costs more than at rank 20 — exactly how
-    a curation pipeline should compare two quality rankings that only act
-    on their heads.
-
-    Scale plan: two global top-k ranks (at scale: orderBy(...).limit(k)
-    per ranking, a tiny frame each — never a full sort); the depth x
-    top-k comparison is a 20 x k dimension product. The corpus is
-    scanned once per ranking key."""
-    from cliner_spark.tokenization import tokens_col
-
-    docs = load_docs(spark, sf_dir)
-    r = docs.select(
-        "doc_id",
-        F.row_number()
-        .over(Window.orderBy(F.desc("n_chars"), F.asc("doc_id")))
-        .alias("ra"),
-        F.row_number()
-        .over(
-            Window.orderBy(F.desc(F.size(tokens_col("text"))), F.asc("doc_id"))
-        )
-        .alias("rb"),
-    )
-    d = spark.range(20).select((F.col("id") + 1).cast("int").alias("depth"))
-    rk = r.filter((F.col("ra") <= 20) | (F.col("rb") <= 20))
-    o = (
-        d.crossJoin(rk)
-        .groupBy("depth")
-        .agg(
-            F.count(
-                F.when((F.col("ra") <= F.col("depth")) & (F.col("rb") <= F.col("depth")), 1)
-            )
-            .cast("bigint")
-            .alias("overlap")
-        )
-    )
-    t = o.select(
-        "depth",
-        "overlap",
-        F.col("overlap").cast("bigint").alias("term_num"),
-        (
-            F.col("depth").cast("bigint")
-            * F.expr("shiftleft(CAST(1 AS BIGINT), depth)")
-        ).alias("term_den"),
-    )
-    wcum = Window.orderBy("depth").rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    return t.select(
-        "depth",
-        "overlap",
-        F.round(F.col("overlap").cast("double") / F.col("depth"), 6).alias(
-            "agreement"
-        ),
-        "term_num",
-        "term_den",
-        F.round(F.col("term_num").cast("double") / F.col("term_den"), 6).alias(
-            "term"
-        ),
-        F.round(
-            F.sum(F.col("term_num").cast("double") / F.col("term_den")).over(wcum),
-            6,
-        ).alias("rbo_min"),
-    )
-
-
-_MCNEMAR_SQL = f"""
-WITH {SQL_DOCS_TOKS.strip()},
-f AS (
-  SELECT d.doc_id,
-         CASE WHEN (1000 * (SELECT count(DISTINCT lower(t.tok))
-                            FROM unnest(d.toks) AS t(tok)))
-                   // len(d.toks) >= 500
-              THEN 1 ELSE 0 END AS g1,
-         CASE WHEN dd.n_chars >= 200 THEN 1 ELSE 0 END AS g2
-  FROM docs d JOIN documents dd USING (doc_id)
-  WHERE len(d.toks) > 0
-)
-SELECT CAST(sum(g1 * g2) AS BIGINT) AS both_pass,
-       CAST(sum(g1 * (1 - g2)) AS BIGINT) AS only_g1,
-       CAST(sum((1 - g1) * g2) AS BIGINT) AS only_g2,
-       CAST(sum((1 - g1) * (1 - g2)) AS BIGINT) AS neither,
-       CAST((sum(g1 * (1 - g2)) - sum((1 - g1) * g2))
-            * (sum(g1 * (1 - g2)) - sum((1 - g1) * g2)) AS BIGINT)
-         AS mcnemar_num,
-       CAST(sum(g1 * (1 - g2)) + sum((1 - g1) * g2) AS BIGINT) AS mcnemar_den,
-       round(CAST((sum(g1 * (1 - g2)) - sum((1 - g1) * g2))
-                  * (sum(g1 * (1 - g2)) - sum((1 - g1) * g2)) AS DOUBLE)
-             / nullif(sum(g1 * (1 - g2)) + sum((1 - g1) * g2), 0), 6)
-         AS mcnemar_stat,
-       CAST(sum(g1 * g2) * sum((1 - g1) * (1 - g2)) AS BIGINT) AS odds_num,
-       CAST(sum(g1 * (1 - g2)) * sum((1 - g1) * g2) AS BIGINT) AS odds_den
-FROM f
-"""
-
-
-@register("q_mcnemar_gates", _MCNEMAR_SQL)
-def q_mcnemar_gates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """McNemar paired comparison of two document quality gates on the SAME
-    corpus (lexical-diversity >= 0.5 vs length >= 200 chars): the full
-    exact 2x2 agreement table, the McNemar statistic (b-c)^2/(b+c) over
-    the DISCORDANT cells only — the correct paired test when both gates
-    judge the same documents (an unpaired chi-square would overcount the
-    agreeing mass) — and the exact odds-ratio pair (ad, bc). This is how
-    a pipeline decides whether a cheaper gate can replace an expensive
-    one: a small McNemar statistic says their disagreements are symmetric
-    noise, not a systematic quality shift.
-
-    Scale plan: one pass over the corpus computing both gate bits, one
-    global aggregate — fully map-side combinable, no joins beyond the
-    per-doc token stats."""
-    from cliner_spark.tokenization import tokens_col
-
-    docs = load_docs(spark, sf_dir)
-    toks_c = tokens_col("text")
-    du = (
-        docs.select("doc_id", F.explode(toks_c).alias("tok"))
-        .select("doc_id", F.lower("tok").alias("tok"))
-        .groupBy("doc_id")
-        .agg(F.countDistinct("tok").alias("n_uniq"))
-    )
-    f = (
-        docs.filter(F.size(toks_c) > 0)
-        .select("doc_id", "n_chars", F.size(toks_c).cast("long").alias("n_toks"))
-        .join(du, "doc_id")
-        .select(
-            F.when(F.expr("(1000 * n_uniq) div n_toks") >= 500, 1)
-            .otherwise(0)
-            .alias("g1"),
-            F.when(F.col("n_chars") >= 200, 1).otherwise(0).alias("g2"),
-        )
-    )
-    b_ = F.sum(F.col("g1") * (1 - F.col("g2")))
-    c_ = F.sum((1 - F.col("g1")) * F.col("g2"))
-    a_ = F.sum(F.col("g1") * F.col("g2"))
-    d_ = F.sum((1 - F.col("g1")) * (1 - F.col("g2")))
-    return f.agg(
-        a_.cast("bigint").alias("both_pass"),
-        b_.cast("bigint").alias("only_g1"),
-        c_.cast("bigint").alias("only_g2"),
-        d_.cast("bigint").alias("neither"),
-        ((b_ - c_) * (b_ - c_)).cast("bigint").alias("mcnemar_num"),
-        (b_ + c_).cast("bigint").alias("mcnemar_den"),
-        F.round(
-            ((b_ - c_) * (b_ - c_)).cast("double")
-            / F.nullif((b_ + c_).cast("double"), F.lit(0.0)),
-            6,
-        ).alias("mcnemar_stat"),
-        (a_ * d_).cast("bigint").alias("odds_num"),
-        (b_ * c_).cast("bigint").alias("odds_den"),
-    )
-
-
-# --------------------------------------------------------------------------
-# Round 4q: experiment/eval statistics — one-way ANOVA across sources, a
-# seeded paired sign-flip permutation test, ordered 2-sequence support
-# mining, and a deterministic k-fold balance audit.
-# --------------------------------------------------------------------------
-
-_ANOVA_SQL = """
-WITH g AS (
-  SELECT source, CAST(count(*) AS BIGINT) AS n_g,
-         CAST(sum(n_chars) AS BIGINT) AS sum_g,
-         CAST(sum(n_chars * n_chars) AS BIGINT) AS sumsq_g
-  FROM documents GROUP BY 1
-),
-t AS (
-  SELECT g.*, sum(n_g) OVER () AS nn, sum(sum_g) OVER () AS tt,
-         sum(sumsq_g) OVER () AS ss, count(*) OVER () AS k
-  FROM g
-),
-w AS (
-  SELECT t.*,
-         sum(CAST(nn * sum_g - n_g * tt AS DOUBLE)
-             * (nn * sum_g - n_g * tt) / (CAST(nn AS DOUBLE) * nn * n_g))
-           OVER () AS ssb,
-         CAST(ss AS DOUBLE) - CAST(tt AS DOUBLE) * tt / nn AS sstot
-  FROM t
-)
-SELECT source, n_g, sum_g, sumsq_g,
-       CAST((nn * sum_g - n_g * tt) * (nn * sum_g - n_g * tt) AS BIGINT)
-         AS ssb_num,
-       CAST(nn * nn * n_g AS BIGINT) AS ssb_den,
-       round(ssb, 6) AS ss_between,
-       round(sstot - ssb, 6) AS ss_within,
-       round((ssb / (k - 1)) / ((sstot - ssb) / (nn - k)), 6) AS f_stat
-FROM w
-"""
-
-
-@register("q_anova_sources", _ANOVA_SQL)
-def q_anova_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One-way ANOVA of document length across crawl sources: per-source
-    sufficient statistics (n, sum, sum-of-squares — exact BIGINTs over the
-    integer n_chars) and the between/within decomposition via the
-    cross-multiplied identity SSB = sum_g (N*sum_g - n_g*T)^2 / (N^2 n_g),
-    with the F statistic as a rounded convenience. The is-my-corpus-
-    homogeneous gate before pooling sources into one training mix: a huge
-    F says per-source length norms differ enough that a single global
-    length filter is the wrong tool (use per-source thresholds).
-    ssb_num/ssb_den pin each source's contribution exactly.
-
-    Scale plan: one map-side-combined groupBy over the corpus; the
-    windowed rollups run on the |sources| frame. Identical shuffle shape
-    to the scatter/Gini ledgers."""
-    docs = load_docs(spark, sf_dir)
-    g = docs.groupBy("source").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_g"),
-        F.sum("n_chars").cast("bigint").alias("sum_g"),
-        F.sum(F.col("n_chars") * F.col("n_chars")).cast("bigint").alias("sumsq_g"),
-    )
-    wall = Window.partitionBy()
-    t = g.select(
-        "*",
-        F.sum("n_g").over(wall).alias("nn"),
-        F.sum("sum_g").over(wall).alias("tt"),
-        F.sum("sumsq_g").over(wall).alias("ss"),
-        F.count(F.lit(1)).over(wall).alias("k"),
-    )
-    dev = F.col("nn") * F.col("sum_g") - F.col("n_g") * F.col("tt")
-    ssb_term = (
-        dev.cast("double")
-        * dev
-        / (F.col("nn").cast("double") * F.col("nn") * F.col("n_g"))
-    )
-    w = t.select(
-        "*",
-        F.sum(ssb_term).over(wall).alias("ssb"),
-        (
-            F.col("ss").cast("double")
-            - F.col("tt").cast("double") * F.col("tt") / F.col("nn")
-        ).alias("sstot"),
-    )
-    return w.select(
-        "source",
-        "n_g",
-        "sum_g",
-        "sumsq_g",
-        (dev * dev).cast("bigint").alias("ssb_num"),
-        (F.col("nn") * F.col("nn") * F.col("n_g")).cast("bigint").alias("ssb_den"),
-        F.round(F.col("ssb"), 6).alias("ss_between"),
-        F.round(F.col("sstot") - F.col("ssb"), 6).alias("ss_within"),
-        F.round(
-            (F.col("ssb") / (F.col("k") - 1))
-            / ((F.col("sstot") - F.col("ssb")) / (F.col("nn") - F.col("k"))),
-            6,
-        ).alias("f_stat"),
-    )
-
-
-_PERM_B = 64
-
-_PERM_SQL = f"""
-WITH u AS (
-  SELECT user_id,
-         CAST(sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)
-              - sum(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END)
-              AS BIGINT) AS d
-  FROM events GROUP BY 1
-),
-obs AS (SELECT abs(sum(d)) AS t_obs FROM u),
-b AS (SELECT CAST(t.i AS INT) AS b FROM unnest(range({_PERM_B})) AS t(i)),
-fl AS (
-  SELECT b.b,
-         CASE WHEN (strpos('0123456789abcdef',
-                           substr(md5(b.b::VARCHAR || '#' || u.user_id::VARCHAR),
-                                  1, 1)) - 1) % 2 = 0
-              THEN u.d ELSE -u.d END AS sd
-  FROM u CROSS JOIN b
-),
-tb AS (SELECT b, CAST(abs(sum(sd)) AS BIGINT) AS t_b FROM fl GROUP BY 1)
-SELECT tb.b, tb.t_b, CAST(obs.t_obs AS BIGINT) AS t_obs,
-       (tb.t_b >= obs.t_obs) AS ge_obs,
-       CAST(1 + sum(CASE WHEN tb.t_b >= obs.t_obs THEN 1 ELSE 0 END)
-                OVER () AS BIGINT) AS p_num,
-       CAST({_PERM_B} + 1 AS BIGINT) AS p_den,
-       round(CAST(1 + sum(CASE WHEN tb.t_b >= obs.t_obs THEN 1 ELSE 0 END)
-                      OVER () AS DOUBLE) / ({_PERM_B} + 1), 6) AS p_value
-FROM tb, obs
-"""
-
-
-@register("q_permutation_test", _PERM_SQL)
-def q_permutation_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Paired sign-flip permutation test (the exact nonparametric paired
-    test, Fisher 1935) of H0 'users click as often as they view': per-user
-    paired difference d_u = clicks - views, {_PERM_B} seeded replicas flip
-    each user's sign by an md5(b#user) coin, T_b = |sum of flipped
-    diffs|, and the standard add-one permutation p-value
-    (1 + #{{T_b >= T_obs}}) / (B+1) — every quantity an exact integer, the
-    p-value a single rounded division. The deterministic-resample design
-    of q_poisson_bootstrap applied to hypothesis testing: any shard can
-    regenerate any replica's coins independently.
-
-    Scale plan: one map-side-combined per-user rollup, then a {_PERM_B}-row
-    broadcast fanout collapsed straight back to {_PERM_B} counters — one
-    corpus pass regardless of B; the windowed p-value runs on the
-    {_PERM_B}-row frame."""
-    ev = load(spark, sf_dir, "events")
-    u = ev.groupBy("user_id").agg(
-        (
-            F.sum(F.when(F.col("event_type") == "click", 1).otherwise(0))
-            - F.sum(F.when(F.col("event_type") == "view", 1).otherwise(0))
-        )
-        .cast("bigint")
-        .alias("d")
-    )
-    obs = u.agg(F.abs(F.sum("d")).alias("t_obs"))
-    b = spark.range(_PERM_B).select(F.col("id").cast("int").alias("b"))
-    coin = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.col("b").cast("string"),
-                        F.lit("#"),
-                        F.col("user_id").cast("string"),
-                    )
-                ),
-                1,
-                1,
-            ),
-            16,
-            10,
-        ).cast("int")
-        % 2
-    )
-    fl = u.crossJoin(F.broadcast(b)).select(
-        "b", F.when(coin == 0, F.col("d")).otherwise(-F.col("d")).alias("sd")
-    )
-    tb = fl.groupBy("b").agg(F.abs(F.sum("sd")).cast("bigint").alias("t_b"))
-    wall = Window.partitionBy()
-    out = tb.crossJoin(obs)
-    ge = F.sum(F.when(F.col("t_b") >= F.col("t_obs"), 1).otherwise(0)).over(wall)
-    return out.select(
-        "b",
-        "t_b",
-        F.col("t_obs").cast("bigint").alias("t_obs"),
-        (F.col("t_b") >= F.col("t_obs")).alias("ge_obs"),
-        (1 + ge).cast("bigint").alias("p_num"),
-        F.lit(_PERM_B + 1).cast("bigint").alias("p_den"),
-        F.round((1 + ge).cast("double") / (_PERM_B + 1), 6).alias("p_value"),
-    )
-
-
-_SEQ2_SQL = """
-WITH ut AS (
-  SELECT user_id, event_type AS t, min(ts) AS mn, max(ts) AS mx
-  FROM events GROUP BY 1, 2
-),
-tot AS (SELECT count(DISTINCT user_id) AS n_users FROM events),
-p AS (
-  SELECT a.t AS a, b.t AS b,
-         CAST(count(*) AS BIGINT) AS n_both,
-         CAST(sum(CASE WHEN a.mn < b.mx THEN 1 ELSE 0 END) AS BIGINT)
-           AS n_seq
-  FROM ut a JOIN ut b ON a.user_id = b.user_id AND a.t <> b.t
-  GROUP BY 1, 2
-),
-m AS (SELECT t, CAST(count(*) AS BIGINT) AS n_t FROM ut GROUP BY 1)
-SELECT p.a, p.b, p.n_both, p.n_seq,
-       ma.n_t AS n_a, mb.n_t AS n_b,
-       CAST(tot.n_users AS BIGINT) AS n_users,
-       round(CAST(p.n_seq AS DOUBLE) / tot.n_users, 6) AS support,
-       round(CAST(p.n_seq AS DOUBLE) / ma.n_t, 6) AS confidence,
-       round(CAST(p.n_seq AS DOUBLE) * tot.n_users
-             / (CAST(ma.n_t AS DOUBLE) * mb.n_t), 6) AS lift
-FROM p JOIN m ma ON ma.t = p.a JOIN m mb ON mb.t = p.b, tot
-"""
-
-
-@register("q_seq2_support", _SEQ2_SQL)
-def q_seq2_support(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ordered 2-sequence support mining (the GSP/PrefixSpan length-2
-    core): for every ordered event-type pair (a, b), the number of users
-    with SOME a-event strictly before SOME b-event — computed from
-    per-(user, type) min/max timestamps alone via the exists identity
-    min_ts(a) < max_ts(b), so the fact table is never self-joined at the
-    event level. Emits exact support / confidence / lift sufficient
-    statistics against the type marginals — the sequential complement to
-    q_assoc_rules (unordered co-occurrence) and q_funnel_conversion (one
-    fixed path).
-
-    Scale plan: one map-side-combined (user, type) rollup; the pair join
-    is per-user over the TYPE dimension (|types|^2 rows per user, types
-    ~5); marginals and the user total are dimension-sized broadcast
-    joins."""
-    ev = load(spark, sf_dir, "events")
-    ut = ev.groupBy("user_id", F.col("event_type").alias("t")).agg(
-        F.min("ts").alias("mn"), F.max("ts").alias("mx")
-    )
-    tot = ev.agg(F.countDistinct("user_id").alias("n_users"))
-    a, c = ut.alias("a"), ut.alias("b")
-    p = (
-        a.join(
-            c,
-            (F.col("a.user_id") == F.col("b.user_id"))
-            & (F.col("a.t") != F.col("b.t")),
-        )
-        .groupBy(F.col("a.t").alias("a"), F.col("b.t").alias("b"))
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_both"),
-            F.sum(F.when(F.col("a.mn") < F.col("b.mx"), 1).otherwise(0))
-            .cast("bigint")
-            .alias("n_seq"),
-        )
-    )
-    m = ut.groupBy("t").agg(F.count(F.lit(1)).cast("bigint").alias("n_t"))
-    ma = m.select(F.col("t").alias("a"), F.col("n_t").alias("n_a"))
-    mb = m.select(F.col("t").alias("b"), F.col("n_t").alias("n_b"))
-    out = p.join(ma, "a").join(mb, "b").crossJoin(tot)
-    return out.select(
-        "a",
-        "b",
-        "n_both",
-        "n_seq",
-        "n_a",
-        "n_b",
-        F.col("n_users").cast("bigint").alias("n_users"),
-        F.round(F.col("n_seq").cast("double") / F.col("n_users"), 6).alias(
-            "support"
-        ),
-        F.round(F.col("n_seq").cast("double") / F.col("n_a"), 6).alias(
-            "confidence"
-        ),
-        F.round(
-            F.col("n_seq").cast("double")
-            * F.col("n_users")
-            / (F.col("n_a").cast("double") * F.col("n_b")),
-            6,
-        ).alias("lift"),
-    )
-
-
-_KFOLD_SQL = """
-WITH f AS (
-  SELECT lang,
-         CAST((strpos('0123456789abcdef',
-                      substr(md5(doc_id::VARCHAR), 1, 1)) - 1) % 5 AS INT)
-           AS fold
-  FROM documents
-),
-lt AS (SELECT lang, CAST(count(*) AS BIGINT) AS n_lang FROM f GROUP BY 1),
-grid AS (
-  SELECT lt.lang, lt.n_lang, CAST(t.i AS INT) AS fold
-  FROM lt, unnest(range(5)) AS t(i)
-),
-c AS (SELECT lang, fold, CAST(count(*) AS BIGINT) AS n FROM f GROUP BY 1, 2)
-SELECT g.lang, g.fold, g.n_lang,
-       CAST(coalesce(c.n, 0) AS BIGINT) AS n,
-       CAST(abs(5 * coalesce(c.n, 0) - g.n_lang) AS BIGINT) AS dev_num,
-       round(CAST(coalesce(c.n, 0) AS DOUBLE) / g.n_lang, 6) AS frac
-FROM grid g LEFT JOIN c ON c.lang = g.lang AND c.fold = g.fold
-"""
-
-
-@register("q_kfold_assignment", _KFOLD_SQL)
-def q_kfold_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic 5-fold cross-validation assignment audit: folds come
-    from md5(doc_id) — reproducible on any shard with zero coordination,
-    the same RNG-free discipline as the sampling family — and the audit
-    reports the per-(lang, fold) cell count against its stratum share
-    with the exact cross-multiplied deviation |5n - n_lang| (zero-filled
-    grid, so an empty (lang, fold) cell is a visible row, not a missing
-    one). Hash folds are NOT stratified by construction; this table is
-    how a pipeline decides whether the imbalance is tolerable or a
-    per-stratum re-split is needed before eval numbers are trusted.
-
-    Scale plan: stateless per-row fold assignment + one map-side-combined
-    groupBy; the grid join runs on |langs| x 5 dimension frames."""
-    docs = load_docs(spark, sf_dir)
-    f = docs.select(
-        "lang",
-        (
-            F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 1), 16, 10)
-            .cast("int")
-            % 5
-        ).alias("fold"),
-    )
-    lt = f.groupBy("lang").agg(F.count(F.lit(1)).cast("bigint").alias("n_lang"))
-    grid = lt.crossJoin(
-        spark.range(5).select(F.col("id").cast("int").alias("fold"))
-    )
-    c = f.groupBy("lang", "fold").agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-    out = grid.join(c, ["lang", "fold"], "left")
-    n = F.coalesce(F.col("n"), F.lit(0))
-    return out.select(
-        "lang",
-        "fold",
-        "n_lang",
-        n.cast("bigint").alias("n"),
-        F.abs(5 * n - F.col("n_lang")).cast("bigint").alias("dev_num"),
-        F.round(n.cast("double") / F.col("n_lang"), 6).alias("frac"),
     )
 
 
@@ -4195,1554 +2900,6 @@ def q_graph_greedy_search(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Round 4t: forecast-quality + local-DP + campaign-eval ledgers. Brier's
-# Murphy decomposition is the proper-scoring-rule complement to the ECE
-# bins / isotonic PAV already shipped; randomized response is the Warner
-# 1965 local-DP collection primitive with its honest utility audit; the
-# gains chart is the decile capture table every targeting model ships
-# with.
-# --------------------------------------------------------------------------
-
-from cliner_spark.entry_queries import (  # noqa: E402
-    SQL_BEST_GAZ,
-    SQL_KEPT_MENTIONS,
-    SQL_LINKED,
-)
-
-_BRIER_SQL = f"""
-WITH {SQL_DOCS_TOKS.strip()}, {SQL_KEPT_MENTIONS.strip()}, {SQL_BEST_GAZ.strip()},
-{SQL_LINKED.strip()},
-dl AS (SELECT doc_id, CAST(len(toks) AS BIGINT) AS n_toks FROM docs
-       WHERE len(toks) > 0),
-du AS (SELECT d.doc_id, CAST(count(DISTINCT lower(t.tok)) AS BIGINT) AS n_uniq
-       FROM docs d, unnest(d.toks) AS t(tok) GROUP BY 1),
-pred AS (SELECT dl.doc_id, (1000 * du.n_uniq) // dl.n_toks AS p_milli
-         FROM dl JOIN du USING (doc_id)),
-lab AS (SELECT DISTINCT doc_id FROM linked),
-b AS (SELECT least(p.p_milli // 100, 9) AS bin, p.p_milli,
-             CASE WHEN l.doc_id IS NULL THEN 0 ELSE 1 END AS pos
-      FROM pred p LEFT JOIN lab l USING (doc_id)),
-tot AS (SELECT CAST(count(*) AS BIGINT) AS n_all,
-               CAST(sum(pos) AS BIGINT) AS p_all FROM b)
-SELECT CAST(bin AS INTEGER) AS bin,
-       CAST(count(*) AS BIGINT) AS n,
-       CAST(sum(pos) AS BIGINT) AS n_pos,
-       CAST(sum(p_milli) AS BIGINT) AS sum_p_milli,
-       CAST(sum((p_milli - 1000 * pos) * (p_milli - 1000 * pos)) AS BIGINT)
-         AS brier_num,
-       CAST((sum(p_milli) - 1000 * sum(pos))
-            * (sum(p_milli) - 1000 * sum(pos)) AS BIGINT) AS rel_num,
-       CAST(count(*) * 1000000 AS BIGINT) AS rel_den,
-       CAST((tot.n_all * sum(pos) - count(*) * tot.p_all)
-            * (tot.n_all * sum(pos) - count(*) * tot.p_all) AS BIGINT)
-         AS res_num,
-       CAST(count(*) * tot.n_all * tot.n_all AS BIGINT) AS res_den,
-       CAST(count(*) * sum(p_milli * p_milli)
-            - sum(p_milli) * sum(p_milli) AS BIGINT) AS wbv_num,
-       CAST(1000 * (count(*) * sum(p_milli * pos)
-                    - sum(p_milli) * sum(pos)) AS BIGINT) AS wbc_num,
-       round(CAST(sum((p_milli - 1000 * pos) * (p_milli - 1000 * pos))
-                  AS DOUBLE) / (count(*) * 1000000), 6) AS brier_bin,
-       round(CAST(tot.p_all AS DOUBLE) * (tot.n_all - tot.p_all)
-             / (tot.n_all * tot.n_all), 6) AS unc_global
-FROM b CROSS JOIN tot
-GROUP BY bin, tot.n_all, tot.p_all
-"""
-
-
-@register("q_brier_decomposition", _BRIER_SQL)
-def q_brier_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Murphy decomposition of the Brier score for the deterministic
-    quality classifier (same milli-unit forecast and gazetteer-linked
-    label as q_calibration_bins): per decile bin the exact per-bin Brier
-    numerator sum((p - 1000y)^2), the reliability term numerator
-    (sum_p - 1000*n_pos)^2 over den 10^6*n, and the resolution term
-    numerator (N*n_pos - n*P)^2 over den n*N^2, plus the within-bin
-    variance (n*sum_p2 - sum_p^2) and covariance 1000*(n*sum_py -
-    sum_p*n_pos) numerators — all BIGINT, so the GENERALIZED Murphy
-    identity for binned continuous forecasts, Brier = REL - RES + UNC
-    + WBV - 2*WBC (Stephenson et al. 2008), is checkable in exact
-    rational arithmetic by the replica test (UNC = P(N-P)/N^2 ships as
-    the rounded global convenience column). REL tells you to recalibrate
-    (feed q_isotonic_calibration); RES tells you whether the score ranks
-    at all; WBV/WBC tell you what the binning itself hides.
-
-    Scale plan: identical shape to the calibration bins — two partial
-    aggregations over the corpus, a broadcast label join, a 1-row N/P
-    carry onto the 10-row bin rollup. No windows, no pairs."""
-    from cliner_spark.entry_queries import _doc_linked
-    from cliner_spark.tokenization import tokens_col
-
-    docs = load_docs(spark, sf_dir)
-    toks = docs.select(
-        "doc_id", F.explode(tokens_col("text")).alias("tok")
-    ).select("doc_id", F.lower("tok").alias("tok"))
-    dl = docs.filter(F.size(tokens_col("text")) > 0).select(
-        "doc_id", F.size(tokens_col("text")).cast("long").alias("n_toks")
-    )
-    du = toks.groupBy("doc_id").agg(F.countDistinct("tok").alias("n_uniq"))
-    pred = dl.join(du, "doc_id").select(
-        "doc_id", F.expr("(1000 * n_uniq) div n_toks").alias("p_milli")
-    )
-    lab = (
-        _doc_linked(spark, sf_dir)
-        .select(F.col("conv_id").alias("doc_id"))
-        .distinct()
-        .withColumn("pos", F.lit(1))
-    )
-    b = pred.join(F.broadcast(lab), "doc_id", "left").select(
-        F.least(F.expr("p_milli div 100"), F.lit(9)).cast("int").alias("bin"),
-        "p_milli",
-        F.coalesce(F.col("pos"), F.lit(0)).alias("pos"),
-    )
-    tot = b.agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_all"),
-        F.sum("pos").cast("bigint").alias("p_all"),
-    )
-    n, npos, spm = F.count(F.lit(1)), F.sum("pos"), F.sum("p_milli")
-    sq = F.sum(
-        (F.col("p_milli") - 1000 * F.col("pos"))
-        * (F.col("p_milli") - 1000 * F.col("pos"))
-    )
-    rel_num = (spm - 1000 * npos) * (spm - 1000 * npos)
-    res_num = (F.first("n_all") * npos - n * F.first("p_all")) * (
-        F.first("n_all") * npos - n * F.first("p_all")
-    )
-    return (
-        b.crossJoin(F.broadcast(tot))
-        .groupBy("bin")
-        .agg(
-            n.cast("bigint").alias("n"),
-            npos.cast("bigint").alias("n_pos"),
-            spm.cast("bigint").alias("sum_p_milli"),
-            sq.cast("bigint").alias("brier_num"),
-            rel_num.cast("bigint").alias("rel_num"),
-            (n * 1000000).cast("bigint").alias("rel_den"),
-            res_num.cast("bigint").alias("res_num"),
-            (n * F.first("n_all") * F.first("n_all"))
-            .cast("bigint")
-            .alias("res_den"),
-            (
-                n * F.sum(F.col("p_milli") * F.col("p_milli"))
-                - spm * spm
-            )
-            .cast("bigint")
-            .alias("wbv_num"),
-            (
-                1000
-                * (
-                    n * F.sum(F.col("p_milli") * F.col("pos"))
-                    - spm * npos
-                )
-            )
-            .cast("bigint")
-            .alias("wbc_num"),
-            F.round(sq.cast("double") / (n * 1000000), 6).alias("brier_bin"),
-            F.round(
-                F.first("p_all").cast("double")
-                * (F.first("n_all") - F.first("p_all"))
-                / (F.first("n_all") * F.first("n_all")),
-                6,
-            ).alias("unc_global"),
-        )
-    )
-
-
-_RR_SQL = """
-WITH d AS (
-  SELECT doc_id, source,
-         CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS truth,
-         CASE WHEN (strpos('0123456789abcdef',
-                    substr(md5('rr1:' || doc_id::VARCHAR), 1, 1)) - 1) % 4 = 0
-              THEN 1 ELSE 0 END AS flip
-  FROM documents
-),
-r AS (
-  SELECT source, truth,
-         CASE WHEN flip = 1 THEN 1 - truth ELSE truth END AS reported
-  FROM d
-)
-SELECT source,
-       CAST(count(*) AS BIGINT) AS n,
-       CAST(sum(truth) AS BIGINT) AS true_pos,
-       CAST(sum(reported) AS BIGINT) AS n_reported,
-       CAST(4 * sum(reported) - count(*) AS BIGINT) AS est_num,
-       CAST(2 AS BIGINT) AS est_den,
-       CAST(abs(2 * sum(truth) - (4 * sum(reported) - count(*))) AS BIGINT)
-         AS abs_err_num,
-       round(CAST(4 * sum(reported) - count(*) AS DOUBLE) / (2 * count(*)), 6)
-         AS est_rate,
-       round(CAST(sum(truth) AS DOUBLE) / count(*), 6) AS true_rate
-FROM r GROUP BY 1
-"""
-
-
-@register("q_randomized_response", _RR_SQL)
-def q_randomized_response(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Warner-1965 randomized response, the local-DP collection primitive:
-    each document's sensitive bit (lang == 'en') is flipped with
-    probability 1/4 by a deterministic md5 coin before 'collection', and
-    the per-source unbiased estimator t_hat = (4*reports - n) / 2 is
-    reconstructed from the noisy tally (flip prob q: (reports - nq) /
-    (1 - 2q)). Because the corpus also carries the ground truth, the
-    ledger doubles as the utility audit — abs_err_num = |2*true - est_num|
-    over the common denominator 2 is the exact estimator error the privacy
-    budget bought. Complements q_dp_release (central geometric DP) with
-    the local model.
-
-    Scale plan: one projection-only scan, one map-side-combined rollup per
-    source. The md5 coin is regenerable per shard — no RNG state, same as
-    every seeded draw in the repo."""
-    docs = load_docs(spark, sf_dir)
-    truth = F.when(F.col("lang") == "en", 1).otherwise(0)
-    flip = F.when(
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("rr1:"), F.col("doc_id").cast("string"))),
-                1,
-                1,
-            ),
-            16,
-            10,
-        ).cast("int")
-        % 4
-        == 0,
-        1,
-    ).otherwise(0)
-    r = docs.select(
-        "source",
-        truth.alias("truth"),
-        F.when(flip == 1, 1 - truth).otherwise(truth).alias("reported"),
-    )
-    n, tp, rep = F.count(F.lit(1)), F.sum("truth"), F.sum("reported")
-    est_num = 4 * rep - n
-    return r.groupBy("source").agg(
-        n.cast("bigint").alias("n"),
-        tp.cast("bigint").alias("true_pos"),
-        rep.cast("bigint").alias("n_reported"),
-        est_num.cast("bigint").alias("est_num"),
-        F.lit(2).cast("bigint").alias("est_den"),
-        F.abs(2 * tp - est_num).cast("bigint").alias("abs_err_num"),
-        F.round(est_num.cast("double") / (2 * n), 6).alias("est_rate"),
-        F.round(tp.cast("double") / n, 6).alias("true_rate"),
-    )
-
-
-_GAINS_SQL = """
-WITH u AS (
-  SELECT user_id,
-         CAST(coalesce(sum(CASE WHEN event_type = 'click' THEN 1 END), 0)
-              AS BIGINT) AS score,
-         CAST(coalesce(sum(CASE WHEN event_type = 'purchase' THEN 1 END), 0)
-              AS BIGINT) AS outcome
-  FROM events GROUP BY 1
-),
-rk AS (
-  SELECT u.*,
-         row_number() OVER (ORDER BY score DESC, user_id ASC) AS rn,
-         CAST(count(*) OVER () AS BIGINT) AS n_u,
-         CAST(sum(outcome) OVER () AS BIGINT) AS out_all
-  FROM u
-),
-dec AS (
-  SELECT ((rn - 1) * 10) // n_u AS decile, n_u, out_all,
-         CAST(count(*) AS BIGINT) AS n_users,
-         CAST(sum(outcome) AS BIGINT) AS outcomes,
-         CAST(sum(score) AS BIGINT) AS score_sum
-  FROM rk GROUP BY 1, 2, 3
-),
-cum AS (
-  SELECT decile, n_users, outcomes, score_sum, n_u, out_all,
-         CAST(sum(n_users) OVER (ORDER BY decile) AS BIGINT) AS cum_users,
-         CAST(sum(outcomes) OVER (ORDER BY decile) AS BIGINT) AS cum_outcomes
-  FROM dec
-)
-SELECT CAST(decile AS INT) AS decile, n_users, outcomes, score_sum,
-       cum_users, cum_outcomes,
-       CAST(cum_outcomes * n_u - cum_users * out_all AS BIGINT) AS lift_num,
-       CAST(cum_users * out_all AS BIGINT) AS lift_den,
-       round(CAST(cum_outcomes AS DOUBLE) / out_all, 6) AS capture,
-       round(CAST(cum_outcomes AS DOUBLE) * n_u / (cum_users * out_all), 6)
-         AS lift
-FROM cum
-"""
-
-
-@register("q_gains_chart", _GAINS_SQL)
-def q_gains_chart(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cumulative gains / lift chart, the standard targeting-model eval:
-    users ranked by a deterministic model score (click count, ties pinned
-    by user_id), cut into deciles by the exact ((rank-1)*10) div n formula
-    (no ntile), and per decile the captured outcomes (purchases), the
-    running capture curve, and the exact cross-multiplied lift
-    (cum_outcomes * N vs cum_users * total_outcomes) — lift_num > 0 means
-    the decile beats random targeting, and the top-decile row is the
-    'how much better than spray-and-pray' number campaign planning runs
-    on.
-
-    Scale plan: one map-side-combined per-user rollup; ranking and the
-    cumulative window run over the USER frame, deciles collapse it to 10
-    rows before the cumulative sum. Same production swap as
-    q_rfm_segments: broadcast decile cutoffs replace the global rank
-    window at 10^8-user scale."""
-    ev = load(spark, sf_dir, "events")
-    u = ev.groupBy("user_id").agg(
-        F.coalesce(
-            F.sum(F.when(F.col("event_type") == "click", 1)), F.lit(0)
-        )
-        .cast("bigint")
-        .alias("score"),
-        F.coalesce(
-            F.sum(F.when(F.col("event_type") == "purchase", 1)), F.lit(0)
-        )
-        .cast("bigint")
-        .alias("outcome"),
-    )
-    w_all = Window.partitionBy(F.lit(1))
-    w_rn = Window.orderBy(F.desc("score"), F.asc("user_id"))
-    rk = u.select(
-        "user_id",
-        "score",
-        "outcome",
-        F.row_number().over(w_rn).alias("rn"),
-        F.count("*").over(w_all).cast("bigint").alias("n_u"),
-        F.sum("outcome").over(w_all).cast("bigint").alias("out_all"),
-    )
-    dec = (
-        rk.groupBy(
-            F.expr("((rn - 1) * 10) div n_u").alias("decile"), "n_u", "out_all"
-        )
-        .agg(
-            F.count("*").cast("bigint").alias("n_users"),
-            F.sum("outcome").cast("bigint").alias("outcomes"),
-            F.sum("score").cast("bigint").alias("score_sum"),
-        )
-    )
-    w_cum = Window.orderBy("decile").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    cum = dec.select(
-        "decile",
-        "n_users",
-        "outcomes",
-        "score_sum",
-        "n_u",
-        "out_all",
-        F.sum("n_users").over(w_cum).cast("bigint").alias("cum_users"),
-        F.sum("outcomes").over(w_cum).cast("bigint").alias("cum_outcomes"),
-    )
-    return cum.select(
-        F.col("decile").cast("int").alias("decile"),
-        "n_users",
-        "outcomes",
-        "score_sum",
-        "cum_users",
-        "cum_outcomes",
-        (F.col("cum_outcomes") * F.col("n_u") - F.col("cum_users") * F.col("out_all"))
-        .cast("bigint")
-        .alias("lift_num"),
-        (F.col("cum_users") * F.col("out_all")).cast("bigint").alias("lift_den"),
-        F.round(F.col("cum_outcomes").cast("double") / F.col("out_all"), 6).alias(
-            "capture"
-        ),
-        F.round(
-            F.col("cum_outcomes").cast("double")
-            * F.col("n_u")
-            / (F.col("cum_users") * F.col("out_all")),
-            6,
-        ).alias("lift"),
-    )
-
-
-# --------------------------------------------------------------------------
-# Round 4v: causal inference / experimentation trio over the event log —
-# stratified average treatment effect with positivity guards, 2x2
-# difference-in-differences, and CUPED variance reduction (Deng et al.
-# WSDM 2013). Treatment is an md5 user-bucket bit (the standard hash-based
-# assignment every experimentation platform uses), outcome is exact
-# purchase cents, strata come from the customer dimension. All effects
-# ship as cross-multiplied BIGINT rationals; floats only as round(.,6)
-# convenience columns derived from those integers.
-# --------------------------------------------------------------------------
-
-_CAUSAL_USERS_SQL = """
-users AS (
-  SELECT DISTINCT e.user_id, c.c_mktsegment AS seg,
-         (strpos('0123456789abcdef',
-                 substr(md5('trt:' || e.user_id::VARCHAR), 1, 1)) - 1) % 2
-           AS trt
-  FROM events e JOIN customer c ON c.c_custkey = e.user_id
-)"""
-
-_STRAT_ATE_SQL = f"""
-WITH {_CAUSAL_USERS_SQL.strip()},
-y AS (
-  SELECT user_id,
-         CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS cents
-  FROM events WHERE event_type = 'purchase' GROUP BY 1
-),
-cells AS (
-  SELECT u.seg,
-         CAST(count(*) AS BIGINT) AS n,
-         CAST(sum(u.trt) AS BIGINT) AS n_treat,
-         CAST(count(*) - sum(u.trt) AS BIGINT) AS n_ctrl,
-         CAST(sum(CASE WHEN u.trt = 1 THEN coalesce(y.cents, 0) ELSE 0 END)
-              AS BIGINT) AS y1_cents,
-         CAST(sum(CASE WHEN u.trt = 0 THEN coalesce(y.cents, 0) ELSE 0 END)
-              AS BIGINT) AS y0_cents
-  FROM users u LEFT JOIN y ON y.user_id = u.user_id
-  GROUP BY u.seg
-)
-SELECT seg, n, n_treat, n_ctrl, y1_cents, y0_cents,
-       CASE WHEN n_treat > 0 AND n_ctrl > 0
-            THEN y1_cents * n_ctrl - y0_cents * n_treat END AS eff_num,
-       CASE WHEN n_treat > 0 AND n_ctrl > 0
-            THEN n_treat * n_ctrl END AS eff_den,
-       CASE WHEN n_treat > 0 AND n_ctrl > 0
-            THEN n * (y1_cents * n_ctrl - y0_cents * n_treat) END
-         AS w_eff_num,
-       round(CAST(CASE WHEN n_treat > 0 AND n_ctrl > 0
-                  THEN y1_cents * n_ctrl - y0_cents * n_treat END AS DOUBLE)
-             / (n_treat * n_ctrl), 6) AS avg_effect_cents
-FROM cells
-"""
-
-
-@register("q_stratified_ate", _STRAT_ATE_SQL)
-def q_stratified_ate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stratified average treatment effect of an md5 user-bucket treatment
-    on lifetime purchase cents, one row per market-segment stratum. Within
-    a stratum the hash assignment is unconfounded, so the per-stratum
-    effect is the plain arm-mean difference, carried as the exact rational
-    (eff_num, eff_den) = (y1*n_ctrl - y0*n_treat, n_treat*n_ctrl);
-    w_eff_num = n * eff_num lets downstream assemble the population ATE
-    sum_s n_s/N * eff_s without re-scanning. Strata violating positivity
-    (an empty arm) emit NULL effects instead of dividing by zero — the
-    guard every real experimentation pipeline needs.
-
-    Scale plan: one dimension-side broadcast join (customer), one
-    purchase aggregation keyed by user, one segment-keyed agg — map-side
-    combine everywhere, output is dimension-sized (#segments)."""
-    ev = load(spark, sf_dir, "events")
-    cust = load(spark, sf_dir, "customer")
-    trt = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("trt:"), F.col("user_id").cast("string"))),
-                1,
-                1,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        % 2
-    )
-    users = (
-        ev.select("user_id")
-        .distinct()
-        .join(
-            F.broadcast(cust.select("c_custkey", "c_mktsegment")),
-            F.col("user_id") == F.col("c_custkey"),
-        )
-        .select("user_id", F.col("c_mktsegment").alias("seg"), trt.alias("trt"))
-    )
-    y = (
-        ev.filter(F.col("event_type") == "purchase")
-        .groupBy("user_id")
-        .agg(
-            F.sum(F.round(F.col("value") * 100).cast("bigint"))
-            .cast("bigint")
-            .alias("cents")
-        )
-    )
-    cells = (
-        users.join(y.withColumnRenamed("user_id", "y_user"),
-                   F.col("user_id") == F.col("y_user"), "left")
-        .groupBy("seg")
-        .agg(
-            F.count("*").cast("bigint").alias("n"),
-            F.sum("trt").cast("bigint").alias("n_treat"),
-            (F.count("*") - F.sum("trt")).cast("bigint").alias("n_ctrl"),
-            F.sum(
-                F.when(F.col("trt") == 1, F.coalesce(F.col("cents"), F.lit(0)))
-                .otherwise(0)
-            ).cast("bigint").alias("y1_cents"),
-            F.sum(
-                F.when(F.col("trt") == 0, F.coalesce(F.col("cents"), F.lit(0)))
-                .otherwise(0)
-            ).cast("bigint").alias("y0_cents"),
-        )
-    )
-    pos = (F.col("n_treat") > 0) & (F.col("n_ctrl") > 0)
-    eff_num = F.col("y1_cents") * F.col("n_ctrl") - F.col("y0_cents") * F.col("n_treat")
-    return cells.select(
-        "seg", "n", "n_treat", "n_ctrl", "y1_cents", "y0_cents",
-        F.when(pos, eff_num).alias("eff_num"),
-        F.when(pos, F.col("n_treat") * F.col("n_ctrl")).alias("eff_den"),
-        F.when(pos, F.col("n") * eff_num).alias("w_eff_num"),
-        F.round(
-            F.when(pos, eff_num).cast("double")
-            / (F.col("n_treat") * F.col("n_ctrl")),
-            6,
-        ).alias("avg_effect_cents"),
-    )
-
-
-_DID_SQL = f"""
-WITH {_CAUSAL_USERS_SQL.strip()},
-py AS (
-  SELECT user_id,
-         CASE WHEN day(ts) >= 16 THEN 1 ELSE 0 END AS post,
-         CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS cents
-  FROM events WHERE event_type = 'purchase' GROUP BY 1, 2
-),
-spine AS (
-  SELECT u.user_id, u.trt, p.post FROM users u
-  CROSS JOIN (VALUES (0), (1)) p(post)
-),
-cells AS (
-  SELECT s.trt, s.post,
-         CAST(count(*) AS BIGINT) AS n_users,
-         CAST(sum(coalesce(py.cents, 0)) AS BIGINT) AS sum_cents
-  FROM spine s LEFT JOIN py
-    ON py.user_id = s.user_id AND py.post = s.post
-  GROUP BY s.trt, s.post
-),
-w AS (
-  SELECT trt, post, n_users, sum_cents,
-         max(CASE WHEN trt = 1 AND post = 1 THEN sum_cents END) OVER () AS s11,
-         max(CASE WHEN trt = 1 AND post = 0 THEN sum_cents END) OVER () AS s10,
-         max(CASE WHEN trt = 0 AND post = 1 THEN sum_cents END) OVER () AS s01,
-         max(CASE WHEN trt = 0 AND post = 0 THEN sum_cents END) OVER () AS s00,
-         max(CASE WHEN trt = 1 THEN n_users END) OVER () AS nt,
-         max(CASE WHEN trt = 0 THEN n_users END) OVER () AS nc
-  FROM cells
-)
-SELECT CAST(trt AS BIGINT) AS trt, CAST(post AS BIGINT) AS post,
-       n_users, sum_cents,
-       round(CAST(sum_cents AS DOUBLE) / n_users, 6) AS mean_cents,
-       CAST((s11 - s10) * nc - (s01 - s00) * nt AS BIGINT) AS did_num,
-       CAST(nt * nc AS BIGINT) AS did_den,
-       round(CAST((s11 - s10) * nc - (s01 - s00) * nt AS DOUBLE)
-             / (nt * nc), 6) AS did_cents
-FROM w
-"""
-
-
-@register("q_did_estimator", _DID_SQL)
-def q_did_estimator(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """2x2 difference-in-differences: unit = user, periods split at
-    day-of-month 16 (wall-clock component, engine-stable per
-    [[engine-exactness-discipline]]), outcome = per-user per-period
-    purchase cents zero-filled over the full user x {pre,post} spine (a
-    user with no purchases in a period contributes 0, not a dropped row —
-    dropping them biases the panel). Emits the 4 cell rows plus the DiD
-    estimate as one exact rational replicated across the frame:
-    did_num/did_den = (S11-S10)/nt - (S01-S00)/nc cross-multiplied, the
-    parallel-trends counterfactual estimate of the treatment effect.
-
-    Scale plan: the 2-row period spine is a literal cross join (no
-    shuffle); cells collapse map-side to 4 rows; the window runs over the
-    4-row frame only. At petabyte logs this is one scan + one 4-row
-    window."""
-    ev = load(spark, sf_dir, "events")
-    cust = load(spark, sf_dir, "customer")
-    trt = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("trt:"), F.col("user_id").cast("string"))),
-                1,
-                1,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        % 2
-    )
-    users = (
-        ev.select("user_id")
-        .distinct()
-        .join(
-            F.broadcast(cust.select("c_custkey")),
-            F.col("user_id") == F.col("c_custkey"),
-        )
-        .select("user_id", trt.alias("trt"))
-    )
-    py = (
-        ev.filter(F.col("event_type") == "purchase")
-        .groupBy(
-            F.col("user_id").alias("p_user"),
-            F.when(F.dayofmonth("ts") >= 16, 1).otherwise(0).alias("p_post"),
-        )
-        .agg(
-            F.sum(F.round(F.col("value") * 100).cast("bigint"))
-            .cast("bigint")
-            .alias("cents")
-        )
-    )
-    periods = spark.createDataFrame([(0,), (1,)], "post int")
-    spine = users.crossJoin(F.broadcast(periods))
-    cells = (
-        spine.join(
-            py,
-            (F.col("user_id") == F.col("p_user"))
-            & (F.col("post") == F.col("p_post")),
-            "left",
-        )
-        .groupBy("trt", "post")
-        .agg(
-            F.count("*").cast("bigint").alias("n_users"),
-            F.sum(F.coalesce(F.col("cents"), F.lit(0)))
-            .cast("bigint")
-            .alias("sum_cents"),
-        )
-    )
-    w = Window.partitionBy()  # 4-row frame
-    pick = lambda cond: F.max(F.when(cond, F.col("sum_cents"))).over(w)  # noqa: E731
-    s11 = pick((F.col("trt") == 1) & (F.col("post") == 1))
-    s10 = pick((F.col("trt") == 1) & (F.col("post") == 0))
-    s01 = pick((F.col("trt") == 0) & (F.col("post") == 1))
-    s00 = pick((F.col("trt") == 0) & (F.col("post") == 0))
-    nt = F.max(F.when(F.col("trt") == 1, F.col("n_users"))).over(w)
-    nc = F.max(F.when(F.col("trt") == 0, F.col("n_users"))).over(w)
-    did_num = (s11 - s10) * nc - (s01 - s00) * nt
-    return cells.select(
-        F.col("trt").cast("bigint").alias("trt"),
-        F.col("post").cast("bigint").alias("post"),
-        "n_users",
-        "sum_cents",
-        F.round(F.col("sum_cents").cast("double") / F.col("n_users"), 6).alias(
-            "mean_cents"
-        ),
-        did_num.cast("bigint").alias("did_num"),
-        (nt * nc).cast("bigint").alias("did_den"),
-        F.round(did_num.cast("double") / (nt * nc), 6).alias("did_cents"),
-    )
-
-
-_CUPED_SQL = f"""
-WITH {_CAUSAL_USERS_SQL.strip()},
-py AS (
-  SELECT user_id,
-         CASE WHEN day(ts) >= 16 THEN 1 ELSE 0 END AS post,
-         CAST(sum(CAST(round(value * 100) AS BIGINT)) AS BIGINT) AS cents
-  FROM events WHERE event_type = 'purchase' GROUP BY 1, 2
-),
-xy AS (
-  SELECT u.seg, u.user_id,
-         coalesce(max(CASE WHEN py.post = 0 THEN py.cents END), 0) AS x,
-         coalesce(max(CASE WHEN py.post = 1 THEN py.cents END), 0) AS y
-  FROM users u LEFT JOIN py ON py.user_id = u.user_id
-  GROUP BY u.seg, u.user_id
-),
-s AS (
-  SELECT seg, CAST(count(*) AS BIGINT) AS n,
-         CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy,
-         CAST(sum(x * x) AS BIGINT) AS sxx,
-         CAST(sum(x * y) AS BIGINT) AS sxy,
-         CAST(sum(y * y) AS BIGINT) AS syy
-  FROM xy GROUP BY seg
-)
-SELECT seg, n, sx, sy, sxx, sxy, syy,
-       CAST(n * sxy - sx * sy AS BIGINT) AS theta_num,
-       CAST(n * sxx - sx * sx AS BIGINT) AS theta_den,
-       CAST(n * syy - sy * sy AS BIGINT) AS vary_num,
-       round(CAST(n * sxy - sx * sy AS DOUBLE)
-             / CAST(n * sxx - sx * sx AS DOUBLE), 6) AS theta,
-       CASE WHEN n * sxx - sx * sx > 0 AND n * syy - sy * sy > 0 THEN
-         round((CAST(n * sxy - sx * sy AS DOUBLE)
-                * CAST(n * sxy - sx * sy AS DOUBLE))
-               / (CAST(n * sxx - sx * sx AS DOUBLE)
-                  * CAST(n * syy - sy * sy AS DOUBLE)), 6) END AS rho2
-FROM s
-"""
-
-
-@register("q_cuped_adjustment", _CUPED_SQL)
-def q_cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CUPED variance reduction (Deng et al. WSDM 2013): per segment, the
-    pre-period purchase cents X is the control covariate for the
-    post-period metric Y; theta = cov(X,Y)/var(X) ships as the exact
-    integer rational (n*sxy - sx*sy) / (n*sxx - sx^2) and the achievable
-    variance-reduction fraction rho^2 = theta_num^2 / (theta_den *
-    vary_num) — the number that tells an experimenter how much smaller
-    their confidence intervals get for free. Degenerate segments (zero
-    pre- or post-variance) emit NULL rho2 rather than a division blow-up.
-    All six sufficient statistics (n, sx, sy, sxx, sxy, syy) ship in the
-    row so downstream can pool segments without re-scanning.
-
-    Scale plan: one purchase scan -> (user, period) partial agg ->
-    per-user pivot -> segment agg, all map-side-combinable; output is
-    dimension-sized. The convenience doubles derive from the same BIGINTs
-    via the same expression tree on both engines (IEEE-identical)."""
-    ev = load(spark, sf_dir, "events")
-    cust = load(spark, sf_dir, "customer")
-    trt_users = (
-        ev.select("user_id")
-        .distinct()
-        .join(
-            F.broadcast(cust.select("c_custkey", "c_mktsegment")),
-            F.col("user_id") == F.col("c_custkey"),
-        )
-        .select("user_id", F.col("c_mktsegment").alias("seg"))
-    )
-    py = (
-        ev.filter(F.col("event_type") == "purchase")
-        .groupBy(
-            F.col("user_id").alias("p_user"),
-            F.when(F.dayofmonth("ts") >= 16, 1).otherwise(0).alias("p_post"),
-        )
-        .agg(
-            F.sum(F.round(F.col("value") * 100).cast("bigint"))
-            .cast("bigint")
-            .alias("cents")
-        )
-    )
-    xy = (
-        trt_users.join(py, F.col("user_id") == F.col("p_user"), "left")
-        .groupBy("seg", "user_id")
-        .agg(
-            F.coalesce(
-                F.max(F.when(F.col("p_post") == 0, F.col("cents"))), F.lit(0)
-            ).alias("x"),
-            F.coalesce(
-                F.max(F.when(F.col("p_post") == 1, F.col("cents"))), F.lit(0)
-            ).alias("y"),
-        )
-    )
-    s = xy.groupBy("seg").agg(
-        F.count("*").cast("bigint").alias("n"),
-        F.sum("x").cast("bigint").alias("sx"),
-        F.sum("y").cast("bigint").alias("sy"),
-        F.sum(F.col("x") * F.col("x")).cast("bigint").alias("sxx"),
-        F.sum(F.col("x") * F.col("y")).cast("bigint").alias("sxy"),
-        F.sum(F.col("y") * F.col("y")).cast("bigint").alias("syy"),
-    )
-    tn = F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")
-    td = F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")
-    vn = F.col("n") * F.col("syy") - F.col("sy") * F.col("sy")
-    return s.select(
-        "seg", "n", "sx", "sy", "sxx", "sxy", "syy",
-        tn.cast("bigint").alias("theta_num"),
-        td.cast("bigint").alias("theta_den"),
-        vn.cast("bigint").alias("vary_num"),
-        F.round(tn.cast("double") / td.cast("double"), 6).alias("theta"),
-        F.when(
-            (td > 0) & (vn > 0),
-            F.round(
-                (tn.cast("double") * tn.cast("double"))
-                / (td.cast("double") * vn.cast("double")),
-                6,
-            ),
-        ).alias("rho2"),
-    )
-
-
-# --------------------------------------------------------------------------
-# Round 4x: survey-calibration / weighting trio — iterative proportional
-# fitting (raking) of the source x lang mix in shared fixed-point,
-# Horvitz-Thompson estimation under unequal-probability Poisson sampling,
-# and Hamilton largest-remainder apportionment of a sampling budget. These
-# are the corpus-rebalancing primitives: IPF answers 'what per-cell weights
-# make the mix match target marginals', HT answers 'what does a biased
-# cheap sample say about the full corpus, unbiasedly', Hamilton answers
-# 'how many sample slots does each source get, in integers'.
-# --------------------------------------------------------------------------
-
-_IPF_FP = 1 << 16  # 2^16 fixed point: floor at every step on both engines
-_IPF_SWEEPS = 3
-
-
-def _ipf_sql() -> str:
-    head = f"""
-WITH cnt AS (
-  SELECT source, lang, CAST(count(*) AS BIGINT) AS n
-  FROM documents GROUP BY 1, 2
-),
-dims AS (
-  SELECT CAST(count(*) AS BIGINT) AS n_total,
-         CAST(count(DISTINCT source) AS BIGINT) AS n_src,
-         CAST(count(DISTINCT lang) AS BIGINT) AS n_lang
-  FROM documents
-),
-grid AS (
-  SELECT s.source, l.lang, coalesce(c.n, 0) AS n,
-         d.n_total, d.n_src, d.n_lang,
-         CAST({_IPF_FP} AS BIGINT) AS w
-  FROM (SELECT DISTINCT source FROM documents) s
-  CROSS JOIN (SELECT DISTINCT lang FROM documents) l
-  CROSS JOIN dims d
-  LEFT JOIN cnt c ON c.source = s.source AND c.lang = l.lang
-)"""
-    prev = "grid"
-    steps = []
-    for i in range(1, _IPF_SWEEPS + 1):
-        steps.append(
-            f""",
-s{i} AS (
-  SELECT source, lang, n, n_total, n_src, n_lang,
-         (w * n_total * {_IPF_FP})
-           // (n_src * sum(n * w) OVER (PARTITION BY source)) AS w
-  FROM {prev}
-),
-l{i} AS (
-  SELECT source, lang, n, n_total, n_src, n_lang,
-         (w * n_total * {_IPF_FP})
-           // (n_lang * sum(n * w) OVER (PARTITION BY lang)) AS w
-  FROM s{i}
-)"""
-        )
-        prev = f"l{i}"
-    return (
-        head
-        + "".join(steps)
-        + f"""
-SELECT source, lang, n, CAST(w AS BIGINT) AS w_fp,
-       CAST(n * w AS BIGINT) AS weighted_fp,
-       CAST(sum(n * w) OVER (PARTITION BY source) AS BIGINT) AS row_sum_fp,
-       CAST(sum(n * w) OVER (PARTITION BY lang) AS BIGINT) AS col_sum_fp,
-       round(CAST(w AS DOUBLE) / {_IPF_FP}, 6) AS weight
-FROM {prev}
-"""
-    )
-
-
-_IPF_SQL = _ipf_sql()
-
-
-@register("q_ipf_raking", _IPF_SQL)
-def q_ipf_raking(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Iterative proportional fitting (raking, Deming-Stephan 1940) of the
-    source x lang document mix toward UNIFORM target marginals — the
-    operation a data curator runs to rebalance a crawl before sampling.
-    Three full sweeps; each half-sweep rescales every cell weight by
-    target/current for its row (then column) margin in shared 2^16
-    fixed-point with floor division at every step, so both engines walk
-    bit-identical integer trajectories ([[engine-exactness-discipline]];
-    same trick as the Markov power iteration). The zero-filled grid ships
-    with final per-cell weights, weighted masses, and both achieved
-    margins — row margins drift after the column sweep, which is exactly
-    the IPF story the replica test checks against an independent python
-    run.
-
-    Scale plan: counts are one map-side-combined agg; the grid is
-    dimension x dimension (sources x langs) with a broadcast 1-row dims
-    carry; every sweep is a partitioned window over the tiny grid. Corpus
-    scans never repeat — IPF iterates on sufficient statistics only."""
-    docs = load_docs(spark, sf_dir)
-    cnt = docs.groupBy("source", "lang").agg(F.count("*").cast("bigint").alias("n"))
-    dims = docs.agg(
-        F.count("*").cast("bigint").alias("n_total"),
-        F.countDistinct("source").cast("bigint").alias("n_src"),
-        F.countDistinct("lang").cast("bigint").alias("n_lang"),
-    )
-    grid = (
-        docs.select("source").distinct()
-        .crossJoin(docs.select("lang").distinct())
-        .crossJoin(F.broadcast(dims))
-        .join(
-            cnt.select(
-                F.col("source").alias("cs"), F.col("lang").alias("cl"), "n"
-            ),
-            (F.col("source") == F.col("cs")) & (F.col("lang") == F.col("cl")),
-            "left",
-        )
-        .select(
-            "source", "lang",
-            F.coalesce(F.col("n"), F.lit(0)).cast("bigint").alias("n"),
-            "n_total", "n_src", "n_lang",
-            F.lit(_IPF_FP).cast("bigint").alias("w"),
-        )
-    )
-    g = grid
-    for _ in range(_IPF_SWEEPS):
-        for margin, dim in (("source", "n_src"), ("lang", "n_lang")):
-            cur = F.sum(F.col("n") * F.col("w")).over(Window.partitionBy(margin))
-            g = g.select(
-                "source", "lang", "n", "n_total", "n_src", "n_lang",
-                F.expr(
-                    f"(w * n_total * {_IPF_FP}) div ({dim} * "
-                    f"sum(n * w) OVER (PARTITION BY {margin}))"
-                ).alias("w"),
-            )
-            _ = cur  # margin window inlined in the expr above
-    return g.select(
-        "source", "lang", "n",
-        F.col("w").cast("bigint").alias("w_fp"),
-        (F.col("n") * F.col("w")).cast("bigint").alias("weighted_fp"),
-        F.sum(F.col("n") * F.col("w"))
-        .over(Window.partitionBy("source"))
-        .cast("bigint")
-        .alias("row_sum_fp"),
-        F.sum(F.col("n") * F.col("w"))
-        .over(Window.partitionBy("lang"))
-        .cast("bigint")
-        .alias("col_sum_fp"),
-        F.round(F.col("w").cast("double") / _IPF_FP, 6).alias("weight"),
-    )
-
-
-_HT_SQL = """
-WITH d AS (
-  SELECT doc_id, source, n_chars,
-         CASE WHEN n_chars < 200 THEN 0
-              WHEN n_chars < 400 THEN 1 ELSE 2 END AS cls,
-         (strpos('0123456789abcdef',
-                 substr(md5('ht:' || doc_id::VARCHAR), 1, 1)) - 1) AS nib
-  FROM documents
-),
-s AS (
-  SELECT doc_id, source, n_chars, cls,
-         CASE WHEN nib < 4 * (cls + 1) THEN 1 ELSE 0 END AS sampled,
-         CASE cls WHEN 0 THEN 12 WHEN 1 THEN 6 ELSE 4 END AS m3,
-         CASE cls WHEN 0 THEN 108 WHEN 1 THEN 18 ELSE 4 END AS v9
-  FROM d
-)
-SELECT source,
-       CAST(count(*) AS BIGINT) AS n_pop,
-       CAST(sum(sampled) AS BIGINT) AS n_sampled,
-       CAST(sum(n_chars) AS BIGINT) AS true_chars,
-       CAST(sum(CASE WHEN sampled = 1 THEN n_chars * m3 ELSE 0 END)
-            AS BIGINT) AS ht_num,
-       CAST(3 AS BIGINT) AS ht_den,
-       CAST(abs(3 * sum(n_chars)
-                - sum(CASE WHEN sampled = 1 THEN n_chars * m3 ELSE 0 END))
-            AS BIGINT) AS abs_err_num,
-       CAST(sum(CASE WHEN sampled = 1 THEN n_chars * n_chars * v9 ELSE 0 END)
-            AS BIGINT) AS var_num,
-       CAST(9 AS BIGINT) AS var_den,
-       round(CAST(sum(CASE WHEN sampled = 1 THEN n_chars * m3 ELSE 0 END)
-                  AS DOUBLE) / 3, 6) AS ht_estimate
-FROM s GROUP BY source
-"""
-
-
-@register("q_horvitz_thompson", _HT_SQL)
-def q_horvitz_thompson(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Horvitz-Thompson estimation under unequal-probability Poisson
-    sampling: docs are included with pi = (cls+1)/4 by length class
-    (longer docs sampled more — the PPS shape real corpus QA uses, since
-    long docs carry more tokens per lookup), inclusion decided by an md5
-    nibble. The HT total sum(y_i/pi_i) over sampled docs is exact on the
-    common denominator 3 (1/pi in {4, 2, 4/3} -> m3 in {12, 6, 4}), the
-    Poisson-design variance estimator sum(y_i^2 (1-pi)/pi^2) on
-    denominator 9 (v9 in {108, 18, 4}), and the row carries the true
-    total so abs_err_num = |3*true - ht_num| audits the draw. Per-source
-    rows: the estimator a pipeline would publish instead of scanning
-    everything.
-
-    Scale plan: single scan, map-side-combined per-source agg; no joins,
-    no windows, no shuffle wider than the source key."""
-    docs = load_docs(spark, sf_dir)
-    cls = (
-        F.when(F.col("n_chars") < 200, 0)
-        .when(F.col("n_chars") < 400, 1)
-        .otherwise(2)
-    )
-    nib = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("ht:"), F.col("doc_id").cast("string"))), 1, 1
-            ),
-            16,
-            10,
-        ).cast("bigint")
-    )
-    s = docs.select(
-        "source",
-        "n_chars",
-        cls.alias("cls"),
-        F.when(nib < 4 * (cls + 1), 1).otherwise(0).alias("sampled"),
-        F.when(cls == 0, 12).when(cls == 1, 6).otherwise(4).alias("m3"),
-        F.when(cls == 0, 108).when(cls == 1, 18).otherwise(4).alias("v9"),
-    )
-    samp_chars = F.when(F.col("sampled") == 1, F.col("n_chars") * F.col("m3")).otherwise(0)
-    return s.groupBy("source").agg(
-        F.count("*").cast("bigint").alias("n_pop"),
-        F.sum("sampled").cast("bigint").alias("n_sampled"),
-        F.sum("n_chars").cast("bigint").alias("true_chars"),
-        F.sum(samp_chars).cast("bigint").alias("ht_num"),
-        F.lit(3).cast("bigint").alias("ht_den"),
-        F.abs(3 * F.sum("n_chars") - F.sum(samp_chars))
-        .cast("bigint")
-        .alias("abs_err_num"),
-        F.sum(
-            F.when(
-                F.col("sampled") == 1,
-                F.col("n_chars") * F.col("n_chars") * F.col("v9"),
-            ).otherwise(0)
-        )
-        .cast("bigint")
-        .alias("var_num"),
-        F.lit(9).cast("bigint").alias("var_den"),
-        F.round(F.sum(samp_chars).cast("double") / 3, 6).alias("ht_estimate"),
-    )
-
-
-_HAMILTON_B = 997  # prime budget so remainders actually exercise the ranking
-
-_HAMILTON_SQL = f"""
-WITH y AS (
-  SELECT source, CAST(sum(n_chars) AS BIGINT) AS y_chars
-  FROM documents GROUP BY 1
-),
-q AS (
-  SELECT source, y_chars,
-         CAST(sum(y_chars) OVER () AS BIGINT) AS n_total,
-         {_HAMILTON_B} * y_chars AS quota_num,
-         ({_HAMILTON_B} * y_chars) // sum(y_chars) OVER () AS base,
-         ({_HAMILTON_B} * y_chars) % (sum(y_chars) OVER ()) AS rem
-  FROM y
-),
-r AS (
-  SELECT q.*,
-         CAST(row_number() OVER (ORDER BY rem DESC, source) AS BIGINT) AS rk,
-         CAST({_HAMILTON_B} - sum(base) OVER () AS BIGINT) AS k_extra
-  FROM q
-)
-SELECT source, y_chars, CAST(quota_num AS BIGINT) AS quota_num,
-       n_total AS quota_den,
-       CAST(base AS BIGINT) AS base, CAST(rem AS BIGINT) AS rem, rk,
-       CAST(CASE WHEN rk <= k_extra THEN 1 ELSE 0 END AS BIGINT) AS extra,
-       CAST(base + CASE WHEN rk <= k_extra THEN 1 ELSE 0 END AS BIGINT)
-         AS alloc
-FROM r
-"""
-
-
-@register("q_hamilton_apportionment", _HAMILTON_SQL)
-def q_hamilton_apportionment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hamilton largest-remainder apportionment of a 997-slot sampling
-    budget across sources, proportional to total chars: integer quota
-    floor(B*y/N) per source, then the B - sum(base) leftover slots go to
-    the largest remainders (B*y mod N), ties pinned by source name. The
-    result satisfies the quota property (every alloc within +/-1 of its
-    exact quota) — the replica test proves it and that allocations sum to
-    exactly B. This is how a pipeline turns fractional PPS shares into an
-    integer per-source sample plan without systematic bias.
-
-    Scale plan: one per-source agg; everything after runs on the
-    dimension-sized 20-row frame (the partition-less windows span only
-    that frame, never the corpus)."""
-    docs = load_docs(spark, sf_dir)
-    y = docs.groupBy("source").agg(F.sum("n_chars").cast("bigint").alias("y_chars"))
-    w = Window.partitionBy()  # 20-row source frame
-    q = y.select(
-        "source",
-        "y_chars",
-        F.sum("y_chars").over(w).cast("bigint").alias("n_total"),
-        (F.lit(_HAMILTON_B) * F.col("y_chars")).alias("quota_num"),
-        F.expr(f"({_HAMILTON_B} * y_chars) div (sum(y_chars) OVER ())").alias("base"),
-        (F.lit(_HAMILTON_B) * F.col("y_chars") % F.sum("y_chars").over(w)).alias("rem"),
-    )
-    r = q.select(
-        "*",
-        F.row_number()
-        .over(Window.orderBy(F.col("rem").desc(), "source"))
-        .cast("bigint")
-        .alias("rk"),
-        (F.lit(_HAMILTON_B) - F.sum("base").over(w)).cast("bigint").alias("k_extra"),
-    )
-    extra = F.when(F.col("rk") <= F.col("k_extra"), 1).otherwise(0)
-    return r.select(
-        "source",
-        "y_chars",
-        F.col("quota_num").cast("bigint").alias("quota_num"),
-        F.col("n_total").alias("quota_den"),
-        F.col("base").cast("bigint").alias("base"),
-        F.col("rem").cast("bigint").alias("rem"),
-        "rk",
-        extra.cast("bigint").alias("extra"),
-        (F.col("base") + extra).cast("bigint").alias("alloc"),
-    )
-
-
-# --------------------------------------------------------------------------
-# Round 4aa: eval-governance trio — Benjamini-Hochberg FDR over per-source
-# Monte-Carlo p-values (the multiple-testing gate every drift dashboard
-# needs), split-conformal calibration with finite-sample coverage audit
-# (Vovk; Angelopoulos-Bates 2021), and Borda/Condorcet rank aggregation of
-# five REAL per-source quality criteria (the committee-vote answer to
-# 'which source is best overall').
-# --------------------------------------------------------------------------
-
-_BH_B = 64
-_BH_ALPHA_NUM, _BH_ALPHA_DEN = 1, 10  # alpha = 0.1
-
-_BH_SQL = f"""
-WITH d AS (
-  SELECT doc_id, source, CASE WHEN lang = 'en' THEN 1 ELSE 0 END AS en
-  FROM documents
-),
-tot AS (
-  SELECT CAST(count(*) AS BIGINT) AS n_all, CAST(sum(en) AS BIGINT) AS en_all
-  FROM d
-),
-obs AS (
-  SELECT source, CAST(count(*) AS BIGINT) AS n_s, CAST(sum(en) AS BIGINT)
-           AS en_s
-  FROM d GROUP BY 1
-),
-m AS (SELECT CAST(count(*) AS BIGINT) AS m FROM obs),
-b AS (SELECT CAST(t.i AS INT) AS b FROM unnest(range({_BH_B})) AS t(i)),
-coins AS (
-  SELECT b.b, d.source,
-         CASE WHEN (
-           (strpos('0123456789abcdef',
-                   substr(md5(b.b::VARCHAR || '#' || d.doc_id::VARCHAR),
-                          1, 1)) - 1) * 256
-           + (strpos('0123456789abcdef',
-                     substr(md5(b.b::VARCHAR || '#' || d.doc_id::VARCHAR),
-                            2, 1)) - 1) * 16
-           + (strpos('0123456789abcdef',
-                     substr(md5(b.b::VARCHAR || '#' || d.doc_id::VARCHAR),
-                            3, 1)) - 1)
-         ) * tot.n_all < 4096 * tot.en_all THEN 1 ELSE 0 END AS en
-  FROM d CROSS JOIN b CROSS JOIN tot
-),
-rep AS (
-  SELECT source, b, CAST(sum(en) AS BIGINT) AS en_b
-  FROM coins GROUP BY 1, 2
-),
-pv AS (
-  SELECT o.source, o.n_s, o.en_s,
-         CAST(abs(t.n_all * o.en_s - o.n_s * t.en_all) AS BIGINT) AS t_obs,
-         CAST(1 + sum(CASE WHEN abs(t.n_all * r.en_b - o.n_s * t.en_all)
-                            >= abs(t.n_all * o.en_s - o.n_s * t.en_all)
-                      THEN 1 ELSE 0 END) AS BIGINT) AS p_num,
-         CAST({_BH_B} + 1 AS BIGINT) AS p_den
-  FROM obs o
-  JOIN rep r ON r.source = o.source
-  CROSS JOIN tot t
-  GROUP BY o.source, o.n_s, o.en_s, t.n_all, t.en_all
-),
-rk AS (
-  SELECT pv.*, m.m,
-         CAST(row_number() OVER (ORDER BY p_num, source) AS BIGINT) AS bh_rank
-  FROM pv CROSS JOIN m
-),
-istar AS (
-  SELECT rk.*,
-         CAST(coalesce(max(CASE WHEN p_num * m * {_BH_ALPHA_DEN}
-                                 <= bh_rank * p_den * {_BH_ALPHA_NUM}
-                           THEN bh_rank END) OVER (), 0) AS BIGINT) AS i_star
-  FROM rk
-)
-SELECT source, n_s AS n_docs, en_s AS en_obs, t_obs, p_num, p_den,
-       round(CAST(p_num AS DOUBLE) / p_den, 6) AS p_value,
-       bh_rank, i_star, bh_rank <= i_star AS rejected
-FROM istar
-"""
-
-
-@register("q_bh_fdr", _BH_SQL)
-def q_bh_fdr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Benjamini-Hochberg step-up FDR control (1995) over one hypothesis
-    per source — H0_s: 'source s has the corpus-wide English share'. The
-    per-source statistic is the cross-multiplied deviation
-    |N*en_s - n_s*EN|; its null distribution comes from 64 deterministic
-    md5 replicas that re-draw each doc's language from the pooled share
-    (12-bit coin v*N < 4096*EN — exact, no float probability), giving
-    add-one Monte-Carlo p-values k/65. BH then ranks the m p-values and
-    rejects through the largest rank with p <= rank*alpha/m, all
-    cross-multiplied (p_num*m*10 <= rank*65): no float ever decides a
-    rejection. The dashboard gate for 'which sources drifted, at 10% FDR'.
-
-    Scale plan: one corpus scan fans out over the broadcast 64-row
-    replica spine and collapses map-side to 20x64 cells; the BH step-up
-    runs on the m-row frame."""
-    docs = load_docs(spark, sf_dir)
-    d = docs.select(
-        "doc_id", "source", F.when(F.col("lang") == "en", 1).otherwise(0).alias("en")
-    )
-    tot = d.agg(
-        F.count("*").cast("bigint").alias("n_all"),
-        F.sum("en").cast("bigint").alias("en_all"),
-    )
-    obs = d.groupBy("source").agg(
-        F.count("*").cast("bigint").alias("n_s"),
-        F.sum("en").cast("bigint").alias("en_s"),
-    )
-    bsp = spark.range(_BH_B).select(F.col("id").cast("int").alias("b"))
-    h3 = F.conv(
-        F.substring(
-            F.md5(F.concat(F.col("b").cast("string"), F.lit("#"),
-                           F.col("doc_id").cast("string"))),
-            1,
-            3,
-        ),
-        16,
-        10,
-    ).cast("bigint")
-    coins = (
-        d.crossJoin(F.broadcast(bsp))
-        .crossJoin(F.broadcast(tot))
-        .select(
-            "b", "source",
-            F.when(h3 * F.col("n_all") < 4096 * F.col("en_all"), 1)
-            .otherwise(0)
-            .alias("en"),
-        )
-    )
-    rep = coins.groupBy(F.col("source").alias("rs"), "b").agg(
-        F.sum("en").cast("bigint").alias("en_b")
-    )
-    pv = (
-        obs.join(rep, F.col("rs") == F.col("source"))
-        .crossJoin(F.broadcast(tot))
-        .groupBy("source", "n_s", "en_s", "n_all", "en_all")
-        .agg(
-            F.sum(
-                F.when(
-                    F.abs(F.col("n_all") * F.col("en_b") - F.col("n_s") * F.col("en_all"))
-                    >= F.abs(
-                        F.col("n_all") * F.col("en_s") - F.col("n_s") * F.col("en_all")
-                    ),
-                    1,
-                ).otherwise(0)
-            )
-            .alias("ge"),
-        )
-        .select(
-            "source", "n_s", "en_s",
-            F.abs(F.col("n_all") * F.col("en_s") - F.col("n_s") * F.col("en_all"))
-            .cast("bigint")
-            .alias("t_obs"),
-            (1 + F.col("ge")).cast("bigint").alias("p_num"),
-            F.lit(_BH_B + 1).cast("bigint").alias("p_den"),
-        )
-    )
-    m = pv.agg(F.count("*").cast("bigint").alias("m"))
-    rk = pv.crossJoin(F.broadcast(m)).select(
-        "*",
-        F.row_number()
-        .over(Window.orderBy("p_num", "source"))
-        .cast("bigint")
-        .alias("bh_rank"),
-    )
-    w = Window.partitionBy()  # m-row frame
-    istar = rk.select(
-        "*",
-        F.coalesce(
-            F.max(
-                F.when(
-                    F.col("p_num") * F.col("m") * _BH_ALPHA_DEN
-                    <= F.col("bh_rank") * F.col("p_den") * _BH_ALPHA_NUM,
-                    F.col("bh_rank"),
-                )
-            ).over(w),
-            F.lit(0),
-        )
-        .cast("bigint")
-        .alias("i_star"),
-    )
-    return istar.select(
-        "source",
-        F.col("n_s").alias("n_docs"),
-        F.col("en_s").alias("en_obs"),
-        "t_obs", "p_num", "p_den",
-        F.round(F.col("p_num").cast("double") / F.col("p_den"), 6).alias("p_value"),
-        "bh_rank", "i_star",
-        (F.col("bh_rank") <= F.col("i_star")).alias("rejected"),
-    )
-
-
-_CONF_SQL = f"""
-WITH {SQL_DOCS_TOKS.strip()},
-dl AS (
-  SELECT d.doc_id, CAST(len(d.toks) AS BIGINT) AS n_toks,
-         (SELECT count(DISTINCT lower(t.tok))
-          FROM unnest(d.toks) AS t(tok)) AS n_uniq
-  FROM docs d WHERE len(d.toks) > 0
-),
-pred AS (
-  SELECT dd.doc_id, dd.source,
-         CASE WHEN dd.lang = 'en' THEN 1 ELSE 0 END AS y,
-         (1000 * dl.n_uniq) // dl.n_toks AS s_milli,
-         (strpos('0123456789abcdef',
-                 substr(md5('cal:' || dd.doc_id::VARCHAR), 1, 1)) - 1) % 2
-           AS is_cal
-  FROM documents dd JOIN dl ON dl.doc_id = dd.doc_id
-),
-cal AS (
-  SELECT 1000 - s_milli AS a, doc_id FROM pred WHERE is_cal = 0 AND y = 1
-),
-kc AS (
-  SELECT CAST(count(*) AS BIGINT) AS n_cal,
-         (9 * (count(*) + 1) + 9) // 10 AS k
-  FROM cal
-),
-qh AS (
-  SELECT coalesce(max(CASE WHEN rn = kc.k THEN a END), 1001) AS qhat,
-         max(kc.n_cal) AS n_cal, max(kc.k) AS k
-  FROM (SELECT a, row_number() OVER (ORDER BY a, doc_id) AS rn FROM cal) r
-  CROSS JOIN kc
-)
-SELECT p.source,
-       CAST(count(*) AS BIGINT) AS n_test_pos,
-       CAST(sum(CASE WHEN 1000 - p.s_milli <= q.qhat THEN 1 ELSE 0 END)
-            AS BIGINT) AS n_covered,
-       CAST(q.n_cal AS BIGINT) AS n_cal, CAST(q.k AS BIGINT) AS k,
-       CAST(q.qhat AS BIGINT) AS qhat,
-       round(CAST(sum(CASE WHEN 1000 - p.s_milli <= q.qhat THEN 1 ELSE 0 END)
-                  AS DOUBLE) / count(*), 6) AS coverage
-FROM pred p CROSS JOIN qh q
-WHERE p.is_cal = 1 AND p.y = 1
-GROUP BY p.source, q.n_cal, q.k, q.qhat
-"""
-
-
-@register("q_conformal_calibration", _CONF_SQL)
-def q_conformal_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Split-conformal calibration audit (Vovk's inductive conformal;
-    Angelopoulos-Bates 2021) for the lexical-diversity 'English-ness'
-    score: calibration docs (md5 split, true-en only) contribute
-    nonconformity a = 1000 - s_milli; the conformal quantile is the k-th
-    smallest a with k = ceil(0.9*(n_cal+1)) — pure rank arithmetic,
-    doc_id tie-pinned, k = (9*(n_cal+1)+9) div 10 exact. Per source the
-    test-split true-en docs report how many landed inside the 90%
-    prediction set (1000 - s <= qhat): marginal coverage is guaranteed
-    >= 90% by exchangeability, and the per-source breakdown shows where
-    conditional coverage sags — the audit conformal papers tell you to
-    run. An empty calibration set degrades safely to qhat = 1001
-    (cover everything).
-
-    Scale plan: the quantile is one rank on the calibration subset (at
-    corpus scale dist_dense_rank replaces the window — same algebra);
-    everything else is a broadcast 1-row qhat carry over one scan."""
-    from cliner_spark.tokenization import tokens_col
-
-    docs = load_docs(spark, sf_dir)
-    toks = docs.select(
-        "doc_id", "source", "lang", F.explode(tokens_col("text")).alias("tok")
-    )
-    dl = toks.groupBy(F.col("doc_id").alias("td")).agg(
-        F.count("*").cast("bigint").alias("n_toks"),
-        F.countDistinct(F.lower("tok")).cast("bigint").alias("n_uniq"),
-    )
-    pred = docs.join(dl, F.col("td") == F.col("doc_id")).select(
-        "doc_id", "source",
-        F.when(F.col("lang") == "en", 1).otherwise(0).alias("y"),
-        F.expr("(1000 * n_uniq) div n_toks").alias("s_milli"),
-        (
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(F.lit("cal:"), F.col("doc_id").cast("string"))),
-                    1,
-                    1,
-                ),
-                16,
-                10,
-            ).cast("bigint")
-            % 2
-        ).alias("is_cal"),
-    )
-    cal = pred.filter((F.col("is_cal") == 0) & (F.col("y") == 1)).select(
-        (1000 - F.col("s_milli")).alias("a"), "doc_id"
-    )
-    kc = cal.agg(
-        F.count("*").cast("bigint").alias("n_cal"),
-        F.expr("(9 * (count(*) + 1) + 9) div 10").cast("bigint").alias("k"),
-    )
-    ranked = cal.select(
-        "a", F.row_number().over(Window.orderBy("a", "doc_id")).alias("rn")
-    )
-    qh = (
-        ranked.crossJoin(F.broadcast(kc))
-        .agg(
-            F.coalesce(
-                F.max(F.when(F.col("rn") == F.col("k"), F.col("a"))), F.lit(1001)
-            )
-            .cast("bigint")
-            .alias("qhat"),
-            F.max("n_cal").cast("bigint").alias("n_cal"),
-            F.max("k").cast("bigint").alias("k"),
-        )
-    )
-    test = pred.filter((F.col("is_cal") == 1) & (F.col("y") == 1))
-    return (
-        test.crossJoin(F.broadcast(qh))
-        .groupBy("source", "n_cal", "k", "qhat")
-        .agg(
-            F.count("*").cast("bigint").alias("n_test_pos"),
-            F.sum(
-                F.when(1000 - F.col("s_milli") <= F.col("qhat"), 1).otherwise(0)
-            )
-            .cast("bigint")
-            .alias("n_covered"),
-        )
-        .select(
-            "source", "n_test_pos", "n_covered", "n_cal", "k", "qhat",
-            F.round(
-                F.col("n_covered").cast("double") / F.col("n_test_pos"), 6
-            ).alias("coverage"),
-        )
-    )
-
-
-_BORDA_SQL = f"""
-WITH {SQL_DOCS_TOKS.strip()},
-per_src AS (
-  SELECT d.source,
-         CAST(count(*) AS BIGINT) AS n_docs,
-         CAST(sum(d.n_chars) AS BIGINT) AS tot_chars,
-         CAST(sum(CASE WHEN d.lang = 'en' THEN 1 ELSE 0 END) AS BIGINT)
-           AS en_docs
-  FROM documents d GROUP BY 1
-),
-vocab AS (
-  SELECT dd.source, CAST(count(DISTINCT lower(t.tok)) AS BIGINT) AS n_vocab
-  FROM docs d
-  JOIN documents dd ON dd.doc_id = d.doc_id
-  CROSS JOIN unnest(d.toks) AS t(tok)
-  GROUP BY 1
-),
-met AS (
-  SELECT p.source, p.n_docs, p.tot_chars, p.en_docs, v.n_vocab,
-         CAST(row_number() OVER (ORDER BY p.tot_chars DESC, p.source)
-              AS BIGINT) AS r_chars,
-         CAST(row_number() OVER (ORDER BY p.n_docs DESC, p.source)
-              AS BIGINT) AS r_docs,
-         CAST(row_number() OVER (
-                ORDER BY CAST(p.en_docs AS DOUBLE) / p.n_docs DESC, p.source)
-              AS BIGINT) AS r_en,
-         CAST(row_number() OVER (ORDER BY v.n_vocab DESC, p.source)
-              AS BIGINT) AS r_vocab,
-         CAST(row_number() OVER (
-                ORDER BY CAST(p.tot_chars AS DOUBLE) / p.n_docs DESC, p.source)
-              AS BIGINT) AS r_avglen
-  FROM per_src p JOIN vocab v ON v.source = p.source
-),
-mm AS (SELECT CAST(count(*) AS BIGINT) AS m FROM met),
-pair AS (
-  SELECT a.source,
-         CAST(sum(CASE WHEN
-             (CASE WHEN a.r_chars < b.r_chars THEN 1 ELSE 0 END)
-           + (CASE WHEN a.r_docs < b.r_docs THEN 1 ELSE 0 END)
-           + (CASE WHEN a.r_en < b.r_en THEN 1 ELSE 0 END)
-           + (CASE WHEN a.r_vocab < b.r_vocab THEN 1 ELSE 0 END)
-           + (CASE WHEN a.r_avglen < b.r_avglen THEN 1 ELSE 0 END) >= 3
-           THEN 1 ELSE 0 END) AS BIGINT) AS pair_wins
-  FROM met a JOIN met b ON b.source <> a.source
-  GROUP BY a.source
-)
-SELECT met.source, met.n_docs, met.tot_chars, met.en_docs, met.n_vocab,
-       met.r_chars, met.r_docs, met.r_en, met.r_vocab, met.r_avglen,
-       CAST(5 * mm.m - (met.r_chars + met.r_docs + met.r_en + met.r_vocab
-                        + met.r_avglen) AS BIGINT) AS borda,
-       p.pair_wins,
-       p.pair_wins = mm.m - 1 AS is_condorcet_winner,
-       CAST(5 * mm.m - (met.r_chars + met.r_docs + met.r_en + met.r_vocab
-                        + met.r_avglen) AS BIGINT)
-         = max(CAST(5 * mm.m - (met.r_chars + met.r_docs + met.r_en
-                                + met.r_vocab + met.r_avglen) AS BIGINT))
-           OVER () AS is_borda_winner
-FROM met JOIN pair p ON p.source = met.source CROSS JOIN mm
-"""
-
-
-@register("q_borda_condorcet", _BORDA_SQL)
-def q_borda_condorcet(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Borda + Condorcet rank aggregation of five REAL per-source quality
-    criteria — total chars, doc count, English share, vocabulary size,
-    average doc length — each a full ranking of the sources (strict
-    row_number order, double-quotient criteria engine-stable with source
-    tie pins). Borda score = sum of (m - rank) points; a source is the
-    Condorcet winner iff it beats every other source on a strict
-    majority (>=3) of criteria. The committee-vote answer to 'which
-    source is best overall', with the full rank profile in-row so
-    disagreements between the two aggregation rules are visible (they
-    famously need not agree).
-
-    Scale plan: five map-side-combined per-source aggs; every window and
-    the pairwise join run on the m-row source dimension (m^2 = 400
-    pairs), never the corpus."""
-    from cliner_spark.tokenization import tokens_col
-
-    docs = load_docs(spark, sf_dir)
-    per_src = docs.groupBy("source").agg(
-        F.count("*").cast("bigint").alias("n_docs"),
-        F.sum("n_chars").cast("bigint").alias("tot_chars"),
-        F.sum(F.when(F.col("lang") == "en", 1).otherwise(0))
-        .cast("bigint")
-        .alias("en_docs"),
-    )
-    vocab = (
-        docs.select("source", F.explode(tokens_col("text")).alias("tok"))
-        .groupBy(F.col("source").alias("vs"))
-        .agg(F.countDistinct(F.lower("tok")).cast("bigint").alias("n_vocab"))
-    )
-    met = per_src.join(vocab, F.col("vs") == F.col("source")).select(
-        "source", "n_docs", "tot_chars", "en_docs", "n_vocab",
-        F.row_number()
-        .over(Window.orderBy(F.col("tot_chars").desc(), "source"))
-        .cast("bigint")
-        .alias("r_chars"),
-        F.row_number()
-        .over(Window.orderBy(F.col("n_docs").desc(), "source"))
-        .cast("bigint")
-        .alias("r_docs"),
-        F.row_number()
-        .over(
-            Window.orderBy(
-                (F.col("en_docs").cast("double") / F.col("n_docs")).desc(), "source"
-            )
-        )
-        .cast("bigint")
-        .alias("r_en"),
-        F.row_number()
-        .over(Window.orderBy(F.col("n_vocab").desc(), "source"))
-        .cast("bigint")
-        .alias("r_vocab"),
-        F.row_number()
-        .over(
-            Window.orderBy(
-                (F.col("tot_chars").cast("double") / F.col("n_docs")).desc(),
-                "source",
-            )
-        )
-        .cast("bigint")
-        .alias("r_avglen"),
-    )
-    mm = met.agg(F.count("*").cast("bigint").alias("m"))
-    b = met.select(*[F.col(c).alias(f"b_{c}") for c in met.columns])
-    maj = (
-        F.when(F.col("r_chars") < F.col("b_r_chars"), 1).otherwise(0)
-        + F.when(F.col("r_docs") < F.col("b_r_docs"), 1).otherwise(0)
-        + F.when(F.col("r_en") < F.col("b_r_en"), 1).otherwise(0)
-        + F.when(F.col("r_vocab") < F.col("b_r_vocab"), 1).otherwise(0)
-        + F.when(F.col("r_avglen") < F.col("b_r_avglen"), 1).otherwise(0)
-    )
-    pair = (
-        met.join(b, F.col("b_source") != F.col("source"))
-        .groupBy(F.col("source").alias("ps"))
-        .agg(F.sum(F.when(maj >= 3, 1).otherwise(0)).cast("bigint").alias("pair_wins"))
-    )
-    borda = (
-        5 * F.col("m")
-        - (
-            F.col("r_chars") + F.col("r_docs") + F.col("r_en")
-            + F.col("r_vocab") + F.col("r_avglen")
-        )
-    )
-    w = Window.partitionBy()  # m-row frame
-    return (
-        met.join(pair, F.col("ps") == F.col("source"))
-        .crossJoin(F.broadcast(mm))
-        .select(
-            "source", "n_docs", "tot_chars", "en_docs", "n_vocab",
-            "r_chars", "r_docs", "r_en", "r_vocab", "r_avglen",
-            borda.cast("bigint").alias("borda"),
-            "pair_wins",
-            (F.col("pair_wins") == F.col("m") - 1).alias("is_condorcet_winner"),
-            (borda.cast("bigint") == F.max(borda.cast("bigint")).over(w)).alias(
-                "is_borda_winner"
-            ),
-        )
-    )
-
-
-# --------------------------------------------------------------------------
 # Round 4ab: robust statistics + weighted-mass location + weighted SSSP —
 # exact order statistics (p50/p90/p99, MAD) per source via partitioned
 # ranks, the char-mass weighted median with the Hoover (Robin Hood)
@@ -6050,638 +3207,6 @@ def q_bellman_ford_hubs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("first_round"),
         F.col("n4").isNotNull().alias("reached"),
-    )
-
-
-# --------------------------------------------------------------------------
-# Round 4ac: analysis-governance trio — Simpson's-paradox detector over the
-# stratified treatment table (sign reversal between aggregate and strata,
-# all cross-multiplied), trimmed/winsorized means (the robust location
-# estimates between mean and median), and the Wald-Wolfowitz runs test of
-# serial randomness over daily event volumes.
-# --------------------------------------------------------------------------
-
-_SIMPSON_SQL = f"""
-WITH {_CAUSAL_USERS_SQL.strip()},
-conv AS (
-  SELECT user_id, CAST(1 AS BIGINT) AS pos
-  FROM events
-  WHERE event_type = 'purchase' AND round(value * 100) >= 15000
-  GROUP BY user_id
-),
-cells AS (
-  SELECT u.seg,
-         CAST(sum(u.trt) AS BIGINT) AS t_n,
-         CAST(count(*) - sum(u.trt) AS BIGINT) AS c_n,
-         CAST(sum(CASE WHEN u.trt = 1 THEN coalesce(c.pos, 0) ELSE 0 END)
-              AS BIGINT) AS t_pos,
-         CAST(sum(CASE WHEN u.trt = 0 THEN coalesce(c.pos, 0) ELSE 0 END)
-              AS BIGINT) AS c_pos
-  FROM users u LEFT JOIN conv c ON c.user_id = u.user_id
-  GROUP BY u.seg
-),
-s AS (
-  SELECT seg, t_n, c_n, t_pos, c_pos,
-         CAST(sign(t_pos * c_n - c_pos * t_n) AS BIGINT) AS stratum_sign,
-         CAST(sum(t_pos) OVER () AS BIGINT) AS agg_t_pos,
-         CAST(sum(c_pos) OVER () AS BIGINT) AS agg_c_pos,
-         CAST(sum(t_n) OVER () AS BIGINT) AS agg_t_n,
-         CAST(sum(c_n) OVER () AS BIGINT) AS agg_c_n
-  FROM cells
-)
-SELECT seg, t_n, c_n, t_pos, c_pos, stratum_sign,
-       agg_t_pos, agg_c_pos, agg_t_n, agg_c_n,
-       CAST(sign(agg_t_pos * agg_c_n - agg_c_pos * agg_t_n) AS BIGINT)
-         AS agg_sign,
-       (sign(agg_t_pos * agg_c_n - agg_c_pos * agg_t_n) <> 0
-        AND max(CASE WHEN stratum_sign <> 0 THEN
-                  stratum_sign * sign(agg_t_pos * agg_c_n - agg_c_pos * agg_t_n)
-                END) OVER () = -1
-        AND min(CASE WHEN stratum_sign <> 0 THEN
-                  stratum_sign * sign(agg_t_pos * agg_c_n - agg_c_pos * agg_t_n)
-                END) OVER () = -1) AS simpson_flag
-FROM s
-"""
-
-
-@register("q_simpson_paradox", _SIMPSON_SQL)
-def q_simpson_paradox(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Simpson's-paradox detector over the stratified conversion table
-    (md5 treatment, conversion = any purchase >= $150, market-segment
-    strata): every association sign is the cross-multiplied
-    sign(t_pos*c_n - c_pos*t_n) — never a float rate — and simpson_flag
-    fires iff the aggregate association is nonzero while EVERY stratum
-    with a nonzero sign points the OPPOSITE way (the full reversal that
-    makes pooled dashboards lie; window min=max=-1 over the products).
-    Per-stratum cells and the aggregate carries ship in-row so the
-    reversal is auditable, not just flagged.
-
-    Scale plan: one user-keyed conversion rollup, one segment agg; the
-    sign algebra runs on the segment-dimension frame."""
-    ev = load(spark, sf_dir, "events")
-    cust = load(spark, sf_dir, "customer")
-    trt = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("trt:"), F.col("user_id").cast("string"))), 1, 1
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        % 2
-    )
-    users = (
-        ev.select("user_id").distinct()
-        .join(
-            F.broadcast(cust.select("c_custkey", "c_mktsegment")),
-            F.col("user_id") == F.col("c_custkey"),
-        )
-        .select("user_id", F.col("c_mktsegment").alias("seg"), trt.alias("trt"))
-    )
-    conv = (
-        ev.filter(
-            (F.col("event_type") == "purchase")
-            & (F.round(F.col("value") * 100) >= 15000)
-        )
-        .groupBy(F.col("user_id").alias("cu"))
-        .agg(F.lit(1).cast("bigint").alias("pos"))
-    )
-    cells = (
-        users.join(conv, F.col("cu") == F.col("user_id"), "left")
-        .groupBy("seg")
-        .agg(
-            F.sum("trt").cast("bigint").alias("t_n"),
-            (F.count("*") - F.sum("trt")).cast("bigint").alias("c_n"),
-            F.sum(F.when(F.col("trt") == 1, F.coalesce(F.col("pos"), F.lit(0))).otherwise(0))
-            .cast("bigint")
-            .alias("t_pos"),
-            F.sum(F.when(F.col("trt") == 0, F.coalesce(F.col("pos"), F.lit(0))).otherwise(0))
-            .cast("bigint")
-            .alias("c_pos"),
-        )
-    )
-    w = Window.partitionBy()  # segment frame
-    s = cells.select(
-        "*",
-        F.signum(
-            (F.col("t_pos") * F.col("c_n") - F.col("c_pos") * F.col("t_n")).cast("double")
-        )
-        .cast("bigint")
-        .alias("stratum_sign"),
-        F.sum("t_pos").over(w).cast("bigint").alias("agg_t_pos"),
-        F.sum("c_pos").over(w).cast("bigint").alias("agg_c_pos"),
-        F.sum("t_n").over(w).cast("bigint").alias("agg_t_n"),
-        F.sum("c_n").over(w).cast("bigint").alias("agg_c_n"),
-    )
-    agg_sign = F.signum(
-        (
-            F.col("agg_t_pos") * F.col("agg_c_n")
-            - F.col("agg_c_pos") * F.col("agg_t_n")
-        ).cast("double")
-    ).cast("bigint")
-    prod = F.when(
-        F.col("stratum_sign") != 0, F.col("stratum_sign") * agg_sign
-    )
-    return s.select(
-        "seg", "t_n", "c_n", "t_pos", "c_pos", "stratum_sign",
-        "agg_t_pos", "agg_c_pos", "agg_t_n", "agg_c_n",
-        agg_sign.alias("agg_sign"),
-        (
-            (agg_sign != 0)
-            & (F.max(prod).over(w) == -1)
-            & (F.min(prod).over(w) == -1)
-        ).alias("simpson_flag"),
-    )
-
-
-_TRIM_SQL = """
-WITH v AS (
-  SELECT source, doc_id, CAST(n_chars AS BIGINT) AS x FROM documents
-),
-r AS (
-  SELECT source, x,
-         CAST(row_number() OVER (PARTITION BY source ORDER BY x, doc_id)
-              AS BIGINT) AS rn,
-         CAST(count(*) OVER (PARTITION BY source) AS BIGINT) AS n
-  FROM v
-)
-SELECT source, CAST(max(n) AS BIGINT) AS n,
-       CAST(max(n) // 20 AS BIGINT) AS k,
-       CAST(sum(x) AS BIGINT) AS sum_all,
-       CAST(sum(CASE WHEN rn > n // 20 AND rn <= n - n // 20 THEN x ELSE 0 END)
-            AS BIGINT) AS trimmed_num,
-       CAST(max(n) - 2 * (max(n) // 20) AS BIGINT) AS trimmed_den,
-       CAST(sum(CASE WHEN rn > n // 20 AND rn <= n - n // 20 THEN x ELSE 0 END)
-            + (max(n) // 20) * max(CASE WHEN rn = n // 20 + 1 THEN x END)
-            + (max(n) // 20) * max(CASE WHEN rn = n - n // 20 THEN x END)
-            AS BIGINT) AS winsor_num,
-       CAST(max(n) AS BIGINT) AS winsor_den,
-       round(CAST(sum(x) AS DOUBLE) / max(n), 6) AS mean_x,
-       round(CAST(sum(CASE WHEN rn > n // 20 AND rn <= n - n // 20
-                      THEN x ELSE 0 END) AS DOUBLE)
-             / (max(n) - 2 * (max(n) // 20)), 6) AS trimmed_mean
-FROM r GROUP BY source
-"""
-
-
-@register("q_trimmed_mean", _TRIM_SQL)
-def q_trimmed_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """5%-trimmed and winsorized means per source, exactly: with
-    k = n div 20, the trimmed sum drops the k smallest and k largest
-    ranked values (doc_id tie pins), and the winsorized sum clamps them
-    to the (k+1)-th and (n-k)-th order statistics instead — both shipped
-    as integer num/den rationals beside the plain mean, the estimator
-    ladder (mean -> winsorized -> trimmed -> median) every robust
-    pipeline walks when outliers poison averages.
-
-    Scale plan: one ranked pass partitioned by source, one agg; the
-    boundary order statistics come from the same window, no second
-    scan."""
-    docs = load_docs(spark, sf_dir)
-    v = docs.select("source", "doc_id", F.col("n_chars").cast("bigint").alias("x"))
-    wp = Window.partitionBy("source")
-    r = v.select(
-        "source", "x",
-        F.row_number().over(wp.orderBy("x", "doc_id")).cast("bigint").alias("rn"),
-        F.count("*").over(wp).cast("bigint").alias("n"),
-    )
-    core = F.when(
-        (F.col("rn") > F.expr("n div 20")) & (F.col("rn") <= F.col("n") - F.expr("n div 20")),
-        F.col("x"),
-    ).otherwise(0)
-    lo = F.max(F.when(F.col("rn") == F.expr("n div 20 + 1"), F.col("x")))
-    hi = F.max(F.when(F.col("rn") == F.col("n") - F.expr("n div 20"), F.col("x")))
-    k = F.expr("max(n) div 20")
-    return r.groupBy("source").agg(
-        F.max("n").cast("bigint").alias("n"),
-        k.cast("bigint").alias("k"),
-        F.sum("x").cast("bigint").alias("sum_all"),
-        F.sum(core).cast("bigint").alias("trimmed_num"),
-        (F.max("n") - 2 * k).cast("bigint").alias("trimmed_den"),
-        (F.sum(core) + k * lo + k * hi).cast("bigint").alias("winsor_num"),
-        F.max("n").cast("bigint").alias("winsor_den"),
-        F.round(F.sum("x").cast("double") / F.max("n"), 6).alias("mean_x"),
-        F.round(F.sum(core).cast("double") / (F.max("n") - 2 * k), 6).alias(
-            "trimmed_mean"
-        ),
-    )
-
-
-_RUNS_SQL = """
-WITH daily AS (
-  SELECT event_type, CAST(ts AS DATE) AS d, CAST(count(*) AS BIGINT) AS x
-  FROM events GROUP BY 1, 2
-),
-med AS (
-  SELECT event_type, x, d,
-         CAST(row_number() OVER (PARTITION BY event_type ORDER BY x, d)
-              AS BIGINT) AS rn,
-         CAST(count(*) OVER (PARTITION BY event_type) AS BIGINT) AS n
-  FROM daily
-),
-m AS (
-  SELECT event_type,
-         max(CASE WHEN rn = (n + 1) // 2 THEN x END) AS median_x
-  FROM med GROUP BY event_type
-),
-s AS (
-  SELECT d.event_type, d.d,
-         CASE WHEN d.x > m.median_x THEN 1 ELSE 0 END AS sgn
-  FROM daily d JOIN m ON m.event_type = d.event_type
-  WHERE d.x <> m.median_x
-),
-runs AS (
-  SELECT event_type, d, sgn,
-         CASE WHEN lag(sgn) OVER (PARTITION BY event_type ORDER BY d) IS NULL
-                OR lag(sgn) OVER (PARTITION BY event_type ORDER BY d) <> sgn
-              THEN 1 ELSE 0 END AS new_run
-  FROM s
-)
-SELECT event_type,
-       CAST(sum(sgn) AS BIGINT) AS n_above,
-       CAST(count(*) - sum(sgn) AS BIGINT) AS n_below,
-       CAST(sum(new_run) AS BIGINT) AS n_runs,
-       CAST(count(*) + 2 * sum(sgn) * (count(*) - sum(sgn)) AS BIGINT)
-         AS exp_runs_num,
-       CAST(count(*) AS BIGINT) AS exp_runs_den,
-       CAST(2 * sum(sgn) * (count(*) - sum(sgn))
-            * (2 * sum(sgn) * (count(*) - sum(sgn)) - count(*)) AS BIGINT)
-         AS var_runs_num,
-       CASE WHEN count(*) > 1
-            THEN CAST(count(*) * count(*) * (count(*) - 1) AS BIGINT) END
-         AS var_runs_den,
-       round(CAST(count(*) + 2 * sum(sgn) * (count(*) - sum(sgn)) AS DOUBLE)
-             / count(*), 6) AS exp_runs
-FROM runs GROUP BY event_type
-"""
-
-
-@register("q_runs_test", _RUNS_SQL)
-def q_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Wald-Wolfowitz runs test of serial randomness per event type: daily
-    volumes dichotomize against the exact lower median (ties to the
-    median excluded, the standard treatment), observed runs count via a
-    lag-transition sum, and the null moments ship as exact rationals —
-    E[R] = (n + 2*n1*n2)/n and Var[R] = 2n1n2(2n1n2 - n)/(n^2(n-1)).
-    Too FEW runs means the series trends/clusters (drifting volume), too
-    MANY means oscillation (retry storms) — the one-query sanity check
-    between q_mann_kendall (monotone trend) and q_cusum_page (level
-    shifts).
-
-    Scale plan: daily rollup is map-side combined; the median rank, the
-    sign sequence, and the lag window all partition by event_type."""
-    ev = load(spark, sf_dir, "events")
-    daily = ev.groupBy("event_type", F.col("ts").cast("date").alias("d")).agg(
-        F.count("*").cast("bigint").alias("x")
-    )
-    wp = Window.partitionBy("event_type")
-    med = daily.select(
-        "event_type", "x", "d",
-        F.row_number().over(wp.orderBy("x", "d")).cast("bigint").alias("rn"),
-        F.count("*").over(wp).cast("bigint").alias("n"),
-    )
-    m = med.groupBy(F.col("event_type").alias("me")).agg(
-        F.max(F.when(F.col("rn") == F.expr("(n + 1) div 2"), F.col("x"))).alias(
-            "median_x"
-        )
-    )
-    s = (
-        daily.join(m, F.col("me") == F.col("event_type"))
-        .filter(F.col("x") != F.col("median_x"))
-        .select(
-            "event_type", "d",
-            F.when(F.col("x") > F.col("median_x"), 1).otherwise(0).alias("sgn"),
-        )
-    )
-    lag = F.lag("sgn").over(wp.orderBy("d"))
-    runs = s.select(
-        "event_type", "sgn",
-        F.when(lag.isNull() | (lag != F.col("sgn")), 1).otherwise(0).alias("new_run"),
-    )
-    n = F.count("*")
-    n1 = F.sum("sgn")
-    n2 = n - n1
-    return runs.groupBy("event_type").agg(
-        n1.cast("bigint").alias("n_above"),
-        n2.cast("bigint").alias("n_below"),
-        F.sum("new_run").cast("bigint").alias("n_runs"),
-        (n + 2 * n1 * n2).cast("bigint").alias("exp_runs_num"),
-        n.cast("bigint").alias("exp_runs_den"),
-        (2 * n1 * n2 * (2 * n1 * n2 - n)).cast("bigint").alias("var_runs_num"),
-        F.when(n > 1, (n * n * (n - 1)).cast("bigint")).alias("var_runs_den"),
-        F.round((n + 2 * n1 * n2).cast("double") / n, 6).alias("exp_runs"),
-    )
-
-
-# --------------------------------------------------------------------------
-# Round 4ad: estimation + coverage trio — German-tank population estimation
-# from md5 samples at four sampling rates, Good-Turing
-# frequency-of-frequencies smoothing (the unseen-mass estimator), and
-# 6-round distributed greedy set cover of the vocabulary by documents (the
-# representative-subset primitive behind corpus summarization / seed-doc
-# selection).
-# --------------------------------------------------------------------------
-
-_GT_SQL = """
-WITH d AS (
-  SELECT doc_id,
-         (strpos('0123456789abcdef',
-                 substr(md5('gt:' || doc_id::VARCHAR), 1, 1)) - 1) AS nib
-  FROM documents
-),
-tot AS (SELECT CAST(count(*) AS BIGINT) AS n_true FROM documents),
-s AS (
-  SELECT t.thr, CAST(count(*) AS BIGINT) AS k,
-         CAST(max(d.doc_id) + 1 AS BIGINT) AS m1
-  FROM (VALUES (1), (2), (4), (8)) t(thr)
-  JOIN d ON d.nib < t.thr
-  GROUP BY t.thr
-)
-SELECT CAST(s.thr AS BIGINT) AS thr_nibbles, s.k, s.m1, tot.n_true,
-       CAST(s.m1 * (s.k + 1) - s.k AS BIGINT) AS est_num,
-       s.k AS est_den,
-       CAST(abs(tot.n_true * s.k - (s.m1 * (s.k + 1) - s.k)) AS BIGINT)
-         AS abs_err_num,
-       round(CAST(s.m1 * (s.k + 1) - s.k AS DOUBLE) / s.k, 6) AS est_n
-FROM s CROSS JOIN tot
-"""
-
-
-@register("q_german_tank", _GT_SQL)
-def q_german_tank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """German-tank (serial-number) population estimation: at four md5
-    sampling rates (1/16 .. 8/16) the minimum-variance unbiased estimator
-    N-hat = m(k+1)/k - 1 over the sampled maximum serial (doc_id+1)
-    ships as the exact rational (m1*(k+1) - k)/k beside the true count
-    and the cross-multiplied absolute error — the estimator a pipeline
-    uses to size an un-countable upstream table from a cheap id sample,
-    with the four-rate spine showing convergence as the sample grows.
-
-    Scale plan: one scan, four map-side-combined (count, max) pairs via
-    the broadcast 4-row threshold spine; a 1-row true-count carry closes
-    the audit."""
-    docs = load_docs(spark, sf_dir)
-    d = docs.select(
-        "doc_id",
-        F.conv(
-            F.substring(F.md5(F.concat(F.lit("gt:"), F.col("doc_id").cast("string"))), 1, 1),
-            16,
-            10,
-        )
-        .cast("bigint")
-        .alias("nib"),
-    )
-    tot = docs.agg(F.count("*").cast("bigint").alias("n_true"))
-    thr = spark.createDataFrame([(1,), (2,), (4,), (8,)], "thr int")
-    s = (
-        F.broadcast(thr)
-        .join(d, F.col("nib") < F.col("thr"))
-        .groupBy("thr")
-        .agg(
-            F.count("*").cast("bigint").alias("k"),
-            (F.max("doc_id") + 1).cast("bigint").alias("m1"),
-        )
-    )
-    est = F.col("m1") * (F.col("k") + 1) - F.col("k")
-    return s.crossJoin(F.broadcast(tot)).select(
-        F.col("thr").cast("bigint").alias("thr_nibbles"),
-        "k", "m1", "n_true",
-        est.cast("bigint").alias("est_num"),
-        F.col("k").alias("est_den"),
-        F.abs(F.col("n_true") * F.col("k") - est).cast("bigint").alias("abs_err_num"),
-        F.round(est.cast("double") / F.col("k"), 6).alias("est_n"),
-    )
-
-
-_GOODTURING_SQL = f"""
-WITH {SQL_DOCS_TOKS.strip()},
-tc AS (
-  SELECT lower(t.tok) AS tok, CAST(count(*) AS BIGINT) AS r
-  FROM docs, unnest(toks) AS t(tok) GROUP BY 1
-),
-nr AS (
-  SELECT r, CAST(count(*) AS BIGINT) AS n_r FROM tc GROUP BY r
-),
-tot AS (SELECT CAST(sum(r * n_r) AS BIGINT) AS n_tokens FROM nr),
-sel AS (
-  SELECT r, n_r FROM (
-    SELECT r, n_r, row_number() OVER (ORDER BY r) AS rk FROM nr
-  ) x WHERE rk <= 10
-),
-grid AS (
-  SELECT CAST(0 AS BIGINT) AS r, CAST(0 AS BIGINT) AS n_r
-  UNION ALL
-  SELECT CAST(r AS BIGINT), n_r FROM sel
-),
-nxt AS (
-  SELECT g.r, g.n_r, coalesce(nr.n_r, 0) AS next_n_r
-  FROM grid g LEFT JOIN nr ON nr.r = g.r + 1
-)
-SELECT nxt.r, nxt.n_r, nxt.next_n_r,
-       CAST(nxt.r * nxt.n_r AS BIGINT) AS mass_r,
-       CASE WHEN nxt.n_r > 0
-            THEN CAST((nxt.r + 1) * nxt.next_n_r AS BIGINT) END AS r_star_num,
-       CASE WHEN nxt.n_r > 0 THEN nxt.n_r END AS r_star_den,
-       tot.n_tokens,
-       CASE WHEN nxt.r = 0
-            THEN round(CAST(coalesce((SELECT n_r FROM nr WHERE r = 1), 0)
-                            AS DOUBLE) / tot.n_tokens, 6) END AS p_unseen
-FROM nxt CROSS JOIN tot
-"""
-
-
-@register("q_good_turing", _GOODTURING_SQL)
-def q_good_turing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Good-Turing frequency-of-frequencies ledger: N_r = number of token
-    types seen exactly r times, the smoothed count r* = (r+1)N_{r+1}/N_r
-    as an exact rational (NULL when the bucket is empty — honest, not
-    interpolated), bucket mass r*N_r, and the headline p_unseen = N_1/N
-    on the r=0 row — the probability the NEXT token is a brand-new type,
-    the estimator that prices vocabulary growth for an LM tokenizer
-    (complementing the Kneser-Ney discounts in q_kn_bigram). The spine is
-    the r = 0 unseen row plus the TEN SMALLEST OCCUPIED counts — the low
-    end of the spectrum wherever it starts (this fixture's vocabulary has
-    no hapax legomena at all, so a literal 1..10 spine would be all
-    zeros), so every emitted bucket is real.
-
-    Scale plan: token counts and the N_r rollup are two
-    map-side-combined aggs; the spine rank runs on the
-    frequency-of-frequencies table (rows = distinct count values,
-    domain-bounded, not corpus-bounded) and totals ride broadcast 1-row
-    carries."""
-    from cliner_spark.tokenization import tokens_col
-
-    docs = load_docs(spark, sf_dir)
-    tc = (
-        docs.select(F.explode(tokens_col("text")).alias("tok"))
-        .groupBy(F.lower("tok").alias("tok"))
-        .agg(F.count("*").cast("bigint").alias("r"))
-    )
-    nr = tc.groupBy("r").agg(F.count("*").cast("bigint").alias("n_r"))
-    tot = nr.agg(F.sum(F.col("r") * F.col("n_r")).cast("bigint").alias("n_tokens"))
-    # singleton count as a total-safe 1-row carry: N_1 may be ZERO (the
-    # small-fixture vocab has no hapax legomena) and a filter->crossJoin
-    # would annihilate the grid
-    n1 = nr.agg(
-        F.sum(F.when(F.col("r") == 1, F.col("n_r")).otherwise(0))
-        .cast("bigint")
-        .alias("n_1")
-    )
-    sel = (
-        nr.select(
-            "r", "n_r",
-            F.row_number().over(Window.orderBy("r")).alias("rk"),
-        )
-        .filter(F.col("rk") <= 10)
-        .select(F.col("r").cast("long"), F.col("n_r").cast("bigint"))
-    )
-    g = spark.createDataFrame([(0, 0)], "r long, n_r bigint").unionAll(sel)
-    nxt = g.join(
-        nr.select(F.col("r").alias("xr"), F.col("n_r").alias("next_n_r")),
-        F.col("xr") == F.col("r") + 1,
-        "left",
-    ).select("r", "n_r", F.coalesce(F.col("next_n_r"), F.lit(0)).cast("bigint").alias("next_n_r"))
-    return (
-        nxt.crossJoin(F.broadcast(tot))
-        .crossJoin(F.broadcast(n1))
-        .select(
-            "r", "n_r", "next_n_r",
-            (F.col("r") * F.col("n_r")).cast("bigint").alias("mass_r"),
-            F.when(F.col("n_r") > 0, ((F.col("r") + 1) * F.col("next_n_r")).cast("bigint")).alias(
-                "r_star_num"
-            ),
-            F.when(F.col("n_r") > 0, F.col("n_r")).alias("r_star_den"),
-            "n_tokens",
-            F.when(
-                F.col("r") == 0,
-                F.round(F.col("n_1").cast("double") / F.col("n_tokens"), 6),
-            ).alias("p_unseen"),
-        )
-    )
-
-
-_SETCOVER_ROUNDS = 6
-_SC_PACK = 1 << 33
-
-
-def _setcover_sql() -> str:
-    head = f"""
-WITH {SQL_DOCS_TOKS.strip()},
-post AS (
-  SELECT DISTINCT doc_id,
-         lower(toks[CAST(t.i AS INT) + 1]) || ' '
-           || lower(toks[CAST(t.i AS INT) + 2]) AS tok
-  FROM docs, unnest(range(len(toks) - 1)) AS t(i)
-),
-vocab AS (SELECT CAST(count(DISTINCT tok) AS BIGINT) AS n_vocab FROM post),
-cov0(tok) AS (SELECT NULL::VARCHAR WHERE FALSE)"""
-    steps = []
-    for k in range(1, _SETCOVER_ROUNDS + 1):
-        steps.append(
-            f""",
-gain{k} AS (
-  SELECT p.doc_id, CAST(count(*) AS BIGINT) AS gain
-  FROM post p LEFT JOIN cov{k - 1} c ON c.tok = p.tok
-  WHERE c.tok IS NULL GROUP BY p.doc_id
-),
-pick{k} AS (
-  SELECT CAST(max(gain * {_SC_PACK} + ({_SC_PACK} - 1 - doc_id))
-              // {_SC_PACK} AS BIGINT) AS gain,
-         CAST({_SC_PACK} - 1
-              - max(gain * {_SC_PACK} + ({_SC_PACK} - 1 - doc_id))
-                % {_SC_PACK} AS BIGINT) AS doc_id
-  FROM gain{k}
-),
-cov{k}(tok) AS (
-  SELECT tok FROM cov{k - 1}
-  UNION
-  SELECT p.tok FROM post p JOIN pick{k} pk ON pk.doc_id = p.doc_id
-)"""
-        )
-    rows = "\nUNION ALL\n".join(
-        f"""SELECT CAST({k} AS BIGINT) AS round, pk.doc_id, pk.gain,
-       (SELECT CAST(count(*) AS BIGINT) FROM cov{k}) AS cum_covered,
-       vocab.n_vocab
-FROM pick{k} pk CROSS JOIN vocab"""
-        for k in range(1, _SETCOVER_ROUNDS + 1)
-    )
-    return head + "".join(steps) + "\n" + rows
-
-
-_SETCOVER_SQL = _setcover_sql()
-
-
-@register("q_set_cover_greedy", _SETCOVER_SQL)
-def q_set_cover_greedy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed greedy set cover of the corpus BIGRAM vocabulary by
-    documents (916 distinct bigrams on this fixture vs only 31 unigrams —
-    the unigram universe is covered by a single doc, which would make the
-    trajectory vacuous): six rounds, each picking the doc covering the
-    most still-uncovered bigram types — ties to the smallest doc_id via
-    the packed key
-    gain*2^33 + (2^33-1-doc_id), whose integer max IS the lexicographic
-    (gain, -doc_id) max — then folding its tokens into the covered set.
-    Greedy is the canonical (1 - 1/e)-approximation (Chvátal 1979); the
-    emitted (round, doc, gain, cum_covered) trajectory is the
-    representative-subset ledger behind seed-doc selection and corpus
-    summarization (gains are non-increasing — a replica invariant).
-
-    Scale plan: each round is one anti-join (uncovered postings) + one
-    map-side-combined per-doc count + a 1-row argmax; the covered set
-    grows by union and is localCheckpoint-pinned per round like the
-    BFS/Luby/BF loops."""
-    from cliner_spark.tokenization import tokens_col
-
-    docs = load_docs(spark, sf_dir)
-    post = (
-        docs.select("doc_id", tokens_col("text").alias("toks"))
-        .filter(F.size("toks") >= 2)
-        .select(
-            "doc_id",
-            F.explode(
-                F.expr(
-                    "transform(sequence(0, size(toks) - 2), "
-                    "i -> concat(lower(toks[i]), ' ', lower(toks[i + 1])))"
-                )
-            ).alias("tok"),
-        )
-        .distinct()
-        .localCheckpoint()
-    )
-    n_vocab = post.select("tok").distinct().count()
-    covered = post.select("tok").filter(F.lit(False)).localCheckpoint()
-    out_rows = []
-    for k in range(1, _SETCOVER_ROUNDS + 1):
-        gain = (
-            post.join(
-                covered.select(F.col("tok").alias("ctok")),
-                F.col("ctok") == F.col("tok"),
-                "left",
-            )
-            .filter(F.col("ctok").isNull())
-            .groupBy("doc_id")
-            .agg(F.count("*").cast("bigint").alias("gain"))
-        )
-        pick = gain.agg(
-            F.max(
-                F.col("gain") * _SC_PACK + (_SC_PACK - 1 - F.col("doc_id"))
-            ).alias("pk")
-        ).select(
-            F.expr(f"pk div {_SC_PACK}").cast("bigint").alias("gain"),
-            (F.lit(_SC_PACK - 1) - F.col("pk") % _SC_PACK).cast("bigint").alias("doc_id"),
-        )
-        prow = pick.collect()[0]
-        covered = (
-            covered.unionAll(
-                post.filter(F.col("doc_id") == prow["doc_id"]).select("tok")
-            )
-            .distinct()
-            .localCheckpoint()
-        )
-        out_rows.append((k, prow["doc_id"], prow["gain"], covered.count(), n_vocab))
-    return spark.createDataFrame(
-        out_rows,
-        "round long, doc_id long, gain long, cum_covered long, n_vocab long",
     )
 
 
@@ -7569,738 +4094,6 @@ def q_bitmap_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(
             F.sum("b_chosen").cast("double") / (F.sum("n") * 8), 6
         ).alias("compression_ratio"),
-    )
-
-
-# --------------------------------------------------------------------------
-# Round 4: nonparametric trend/rank trio — Theil-Sen robust slope (the
-# estimator to q_mann_kendall's test), Kruskal-Wallis k-group rank-sum
-# ledger with tie correction, and the exact-rational autocorrelation
-# function with PACF(2) — the serial-structure probe after q_runs_test.
-# --------------------------------------------------------------------------
-
-_THEILSEN_SQL = """
-WITH days AS (
-  SELECT event_type,
-         CAST(datediff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS BIGINT)
-           AS d,
-         CAST(count(*) AS BIGINT) AS c
-  FROM events GROUP BY 1, 2
-),
-pairs AS (
-  SELECT a.event_type, a.d AS d1, b.d AS d2,
-         b.c - a.c AS num, b.d - a.d AS den
-  FROM days a JOIN days b
-    ON a.event_type = b.event_type AND a.d < b.d
-),
-ranked AS (
-  SELECT event_type, num, den,
-         row_number() OVER (
-           PARTITION BY event_type
-           ORDER BY CAST(num AS DOUBLE) / den, num, den, d1, d2
-         ) AS rn,
-         count(*) OVER (PARTITION BY event_type) AS m
-  FROM pairs
-),
-meta AS (
-  SELECT event_type, CAST(count(*) AS BIGINT) AS n_days
-  FROM days GROUP BY 1
-),
-med AS (
-  SELECT event_type, CAST(max(m) AS BIGINT) AS n_pairs,
-         max(CASE WHEN rn = (m + 1) // 2 THEN num END) AS lo_num,
-         max(CASE WHEN rn = (m + 1) // 2 THEN den END) AS lo_den,
-         max(CASE WHEN rn = m // 2 + 1 THEN num END) AS hi_num,
-         max(CASE WHEN rn = m // 2 + 1 THEN den END) AS hi_den
-  FROM ranked GROUP BY event_type
-)
-SELECT m.event_type, t.n_days, m.n_pairs,
-       CAST(m.lo_num AS BIGINT) AS slope_lo_num,
-       CAST(m.lo_den AS BIGINT) AS slope_lo_den,
-       CAST(m.hi_num AS BIGINT) AS slope_hi_num,
-       CAST(m.hi_den AS BIGINT) AS slope_hi_den,
-       round((CAST(m.lo_num AS DOUBLE) / m.lo_den
-              + CAST(m.hi_num AS DOUBLE) / m.hi_den) / 2, 6) AS slope
-FROM med m JOIN meta t USING (event_type)
-"""
-
-
-@register("q_theil_sen", _THEILSEN_SQL)
-def q_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Theil-Sen robust trend estimator (Theil 1950 / Sen 1968) per event
-    type — the slope companion to q_mann_kendall's monotonic-trend TEST:
-    over the observed (day, daily-count) series, every day pair
-    contributes slope (c2-c1)/(d2-d1) and the estimate is the median,
-    29%-breakdown-robust where OLS folds to one outlier day. Pair order
-    is the IEEE double of the ratio (identical in both engines) with the
-    exact (num, den, d1, d2) pin breaking equal-value ties, so the lower
-    and upper medians ship as EXACT rationals beside the rounded
-    midpoint; even pair counts keep both medians visible instead of
-    hiding an average.
-
-    Scale plan: the daily rollup is one map-side-combined groupBy; the
-    pair join is an equi-join on event_type whose per-key frame is
-    day-domain bounded (one row per day — quadratic in DAYS, not rows,
-    the standard Theil-Sen envelope); one ranked window per type
-    partition, then a 1-row-per-type rollup."""
-    ev = load(spark, sf_dir, "events")
-    days = ev.groupBy(
-        "event_type",
-        F.datediff(F.col("ts").cast("date"), F.lit("1970-01-01"))
-        .cast("long")
-        .alias("d"),
-    ).agg(F.count(F.lit(1)).cast("long").alias("c"))
-    a = days.select(
-        "event_type", F.col("d").alias("d1"), F.col("c").alias("c1")
-    )
-    b = days.select(
-        F.col("event_type").alias("et2"), F.col("d").alias("d2"),
-        F.col("c").alias("c2"),
-    )
-    pairs = a.join(
-        b, (F.col("event_type") == F.col("et2")) & (F.col("d1") < F.col("d2"))
-    ).select(
-        "event_type", "d1", "d2",
-        (F.col("c2") - F.col("c1")).alias("num"),
-        (F.col("d2") - F.col("d1")).alias("den"),
-    )
-    w = Window.partitionBy("event_type").orderBy(
-        F.col("num").cast("double") / F.col("den"), "num", "den", "d1", "d2"
-    )
-    wp = Window.partitionBy("event_type")
-    ranked = pairs.select(
-        "event_type", "num", "den",
-        F.row_number().over(w).alias("rn"),
-        F.count(F.lit(1)).over(wp).alias("m"),
-    )
-    med = ranked.groupBy("event_type").agg(
-        F.max("m").cast("long").alias("n_pairs"),
-        F.max(
-            F.when(F.col("rn") == F.floor((F.col("m") + 1) / 2), F.col("num"))
-        ).cast("long").alias("slope_lo_num"),
-        F.max(
-            F.when(F.col("rn") == F.floor((F.col("m") + 1) / 2), F.col("den"))
-        ).cast("long").alias("slope_lo_den"),
-        F.max(
-            F.when(F.col("rn") == F.floor(F.col("m") / 2) + 1, F.col("num"))
-        ).cast("long").alias("slope_hi_num"),
-        F.max(
-            F.when(F.col("rn") == F.floor(F.col("m") / 2) + 1, F.col("den"))
-        ).cast("long").alias("slope_hi_den"),
-    )
-    meta = days.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("long").alias("n_days")
-    )
-    return med.join(meta, "event_type").select(
-        "event_type", "n_days", "n_pairs",
-        "slope_lo_num", "slope_lo_den", "slope_hi_num", "slope_hi_den",
-        F.round(
-            (
-                F.col("slope_lo_num").cast("double") / F.col("slope_lo_den")
-                + F.col("slope_hi_num").cast("double") / F.col("slope_hi_den")
-            )
-            / 2,
-            6,
-        ).alias("slope"),
-    )
-
-
-_KRUSKAL_SQL = """
-WITH d AS (
-  SELECT source, n_chars FROM documents
-),
-ranked AS (
-  SELECT source, n_chars,
-         2 * rank() OVER (ORDER BY n_chars)
-           + count(*) OVER (PARTITION BY n_chars) - 1 AS r2
-  FROM d
-),
-ties AS (
-  SELECT CAST(sum(t * t * t - t) AS BIGINT) AS tie_sum
-  FROM (SELECT CAST(count(*) AS BIGINT) AS t FROM d GROUP BY n_chars)
-),
-tot AS (
-  SELECT CAST(count(*) AS BIGINT) AS n_total FROM d
-),
-grp AS (
-  SELECT source, CAST(count(*) AS BIGINT) AS n_g,
-         CAST(sum(r2) AS BIGINT) AS r2_sum
-  FROM ranked GROUP BY 1
-)
-SELECT g.source, g.n_g, g.r2_sum,
-       round(CAST(g.r2_sum AS DOUBLE) / (2 * g.n_g), 6) AS mean_rank,
-       CAST(g.r2_sum - g.n_g * (t.n_total + 1) AS BIGINT) AS dev_num,
-       CAST(2 * g.n_g AS BIGINT) AS dev_den,
-       round(3.0 * g.r2_sum * g.r2_sum
-             / (CAST(t.n_total AS DOUBLE) * (t.n_total + 1) * g.n_g), 6)
-         AS h_contrib,
-       t.n_total, ti.tie_sum,
-       CAST(t.n_total * t.n_total * t.n_total - t.n_total AS BIGINT)
-         AS n3_minus_n
-FROM grp g CROSS JOIN tot t CROSS JOIN ties ti
-"""
-
-
-@register("q_kruskal_wallis", _KRUSKAL_SQL)
-def q_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Kruskal-Wallis k-group rank-sum ledger (1952) over document length
-    by source — the k-group generalization of q_auc_ranksum's
-    Mann-Whitney: mid-rank sums per source in EXACT half-integer units
-    (r2 = 2*rank + tiecount - 1, so the doubled rank is a BIGINT and the
-    classic identity sum(r2) = N(N+1) is an integer assert surface), the
-    per-group deviation from the null mean rank (N+1)/2 as an exact
-    rational (r2_sum - n(N+1)) / 2n, and the per-group H contribution
-    3*R2^2/(N(N+1)n) as one double division per row — H itself is the
-    sum of contributions minus 3(N+1), left to the replica because a
-    cross-group double sum has engine-ordered rounding while every
-    in-row value here is exact or a single division. The tie ledger
-    sum(t^3 - t) and N^3 - N carry the correction factor's exact parts.
-
-    Scale plan: one global rank window (the order-statistics pattern the
-    repo already uses for q_order_stats — at production scale this
-    window becomes the dist_dense_rank primitive), one tie groupBy on the
-    value domain, one group rollup; 1-row carries are broadcast."""
-    docs = load_docs(spark, sf_dir).select("source", "n_chars")
-    wv = Window.partitionBy("n_chars")
-    ranked = docs.select(
-        "source",
-        (
-            2 * F.rank().over(Window.orderBy("n_chars"))
-            + F.count(F.lit(1)).over(wv)
-            - 1
-        ).cast("long").alias("r2"),
-    )
-    ties = (
-        docs.groupBy("n_chars")
-        .agg(F.count(F.lit(1)).cast("long").alias("t"))
-        .agg(
-            F.sum(F.col("t") * F.col("t") * F.col("t") - F.col("t"))
-            .cast("long")
-            .alias("tie_sum")
-        )
-    )
-    tot = docs.agg(F.count(F.lit(1)).cast("long").alias("n_total"))
-    grp = ranked.groupBy("source").agg(
-        F.count(F.lit(1)).cast("long").alias("n_g"),
-        F.sum("r2").cast("long").alias("r2_sum"),
-    )
-    return (
-        grp.crossJoin(F.broadcast(tot))
-        .crossJoin(F.broadcast(ties))
-        .select(
-            "source", "n_g", "r2_sum",
-            F.round(F.col("r2_sum").cast("double") / (2 * F.col("n_g")), 6)
-            .alias("mean_rank"),
-            (F.col("r2_sum") - F.col("n_g") * (F.col("n_total") + 1))
-            .cast("long")
-            .alias("dev_num"),
-            (2 * F.col("n_g")).cast("long").alias("dev_den"),
-            F.round(
-                3.0 * F.col("r2_sum") * F.col("r2_sum")
-                / (
-                    F.col("n_total").cast("double")
-                    * (F.col("n_total") + 1)
-                    * F.col("n_g")
-                ),
-                6,
-            ).alias("h_contrib"),
-            "n_total",
-            "tie_sum",
-            (
-                F.col("n_total") * F.col("n_total") * F.col("n_total")
-                - F.col("n_total")
-            ).cast("long").alias("n3_minus_n"),
-        )
-    )
-
-
-_ACF_SQL = """
-WITH daily AS (
-  SELECT CAST(datediff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS BIGINT)
-           AS d,
-         CAST(count(*) AS BIGINT) AS c
-  FROM events GROUP BY 1
-),
-bounds AS (
-  SELECT min(d) AS d0, max(d) AS d1 FROM daily
-),
-spine AS (
-  SELECT CAST(b.d0 + t.i AS BIGINT) AS d
-  FROM bounds b, unnest(range(CAST(b.d1 - b.d0 + 1 AS BIGINT))) AS t(i)
-),
-series AS (
-  SELECT s.d - (SELECT d0 FROM bounds) AS t, coalesce(dy.c, 0) AS x
-  FROM spine s LEFT JOIN daily dy ON dy.d = s.d
-),
-stats AS (
-  SELECT CAST(count(*) AS BIGINT) AS n, CAST(sum(x) AS BIGINT) AS s
-  FROM series
-),
-lags AS (SELECT CAST(t.i AS BIGINT) AS lg FROM unnest(range(6)) AS t(i)),
-terms AS (
-  SELECT l.lg,
-         CAST(sum((st.n * a.x - st.s) * (st.n * b.x - st.s)) AS BIGINT) AS acov
-  FROM lags l
-  JOIN series a ON true
-  JOIN series b ON b.t = a.t + l.lg
-  CROSS JOIN stats st
-  GROUP BY l.lg
-),
-wide AS (
-  SELECT t.lg, t.acov,
-         (SELECT acov FROM terms WHERE lg = 0) AS a0,
-         (SELECT acov FROM terms WHERE lg = 1) AS a1
-  FROM terms t
-)
-SELECT w.lg AS lag, st.n AS n_days, w.acov AS acf_num, w.a0 AS acf_den,
-       round(CAST(w.acov AS DOUBLE) / w.a0, 6) AS acf,
-       CASE WHEN w.lg = 2 THEN
-         round((CAST(w.acov AS DOUBLE) / w.a0
-                - (CAST(w.a1 AS DOUBLE) / w.a0) * (CAST(w.a1 AS DOUBLE) / w.a0))
-               / (1 - (CAST(w.a1 AS DOUBLE) / w.a0)
-                      * (CAST(w.a1 AS DOUBLE) / w.a0)), 6)
-       END AS pacf2,
-       round(CAST(st.n AS DOUBLE) * (st.n + 2)
-             * (CAST(w.acov AS DOUBLE) / w.a0) * (CAST(w.acov AS DOUBLE) / w.a0)
-             / (st.n - w.lg), 6) AS ljung_box_term
-FROM wide w CROSS JOIN stats st
-WHERE w.lg > 0
-"""
-
-
-@register("q_acf", _ACF_SQL)
-def q_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Autocorrelation function at lags 1..5 of the zero-filled daily
-    event volume, in EXACT integers: with S = sum(x) and n days, the
-    lag-k autocovariance scaled by n^2 is A_k = sum (n*x_t - S)
-    (n*x_{t+k} - S), a BIGINT, so acf_k = A_k / A_0 ships as an exact
-    rational beside the rounded double. PACF(2) = (r2 - r1^2)/(1 - r1^2)
-    and the per-lag Ljung-Box term n(n+2) r_k^2 / (n-k) are single
-    deterministic double expressions over those exact ratios (identical
-    IEEE evaluation on both engines — no cross-row double sums
-    anywhere). This is the serial-structure probe between q_runs_test
-    (randomness) and q_leadlag_xcorr (cross-series): it tells a forecast
-    pipeline how much yesterday explains today, with the lag-k decay
-    curve as the fingerprint.
-
-    Scale plan: the series is value-domain bounded (one row per day), so
-    the spine join and the 6-lag fanout are checkpoint-frame sized; the
-    corpus touch is one map-side-combined daily groupBy. 1-row carries
-    broadcast (whitelisted)."""
-    ev = load(spark, sf_dir, "events")
-    daily = ev.groupBy(
-        F.datediff(F.col("ts").cast("date"), F.lit("1970-01-01"))
-        .cast("long")
-        .alias("d")
-    ).agg(F.count(F.lit(1)).cast("long").alias("c"))
-    bounds = daily.agg(F.min("d").alias("d0"), F.max("d").alias("d1"))
-    spine = bounds.select(
-        F.explode(F.sequence(F.col("d0"), F.col("d1"))).alias("d"),
-        F.col("d0"),
-    )
-    series = (
-        spine.join(F.broadcast(daily), "d", "left")
-        .select(
-            (F.col("d") - F.col("d0")).alias("t"),
-            F.coalesce("c", F.lit(0)).cast("long").alias("x"),
-        )
-    )
-    stats = series.agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("x").cast("long").alias("s"),
-    )
-    lags = spark.range(6).select(F.col("id").cast("long").alias("lg"))
-    a = series.select(F.col("t").alias("ta"), F.col("x").alias("xa"))
-    b = series.select(F.col("t").alias("tb"), F.col("x").alias("xb"))
-    terms = (
-        F.broadcast(lags)
-        .join(a, F.lit(True))
-        .join(b, F.col("tb") == F.col("ta") + F.col("lg"))
-        .crossJoin(F.broadcast(stats))
-        .groupBy("lg")
-        .agg(
-            F.sum(
-                (F.col("n") * F.col("xa") - F.col("s"))
-                * (F.col("n") * F.col("xb") - F.col("s"))
-            ).cast("long").alias("acov")
-        )
-    )
-    a0 = terms.filter(F.col("lg") == 0).select(F.col("acov").alias("a0"))
-    a1 = terms.filter(F.col("lg") == 1).select(F.col("acov").alias("a1"))
-    r_k = F.col("acov").cast("double") / F.col("a0")
-    r_1 = F.col("a1").cast("double") / F.col("a0")
-    return (
-        terms.filter(F.col("lg") > 0)
-        .crossJoin(F.broadcast(a0))
-        .crossJoin(F.broadcast(a1))
-        .crossJoin(F.broadcast(stats))
-        .select(
-            F.col("lg").alias("lag"),
-            F.col("n").alias("n_days"),
-            F.col("acov").alias("acf_num"),
-            F.col("a0").alias("acf_den"),
-            F.round(r_k, 6).alias("acf"),
-            F.when(
-                F.col("lg") == 2,
-                F.round((r_k - r_1 * r_1) / (F.lit(1) - r_1 * r_1), 6),
-            ).alias("pacf2"),
-            F.round(
-                F.col("n").cast("double") * (F.col("n") + 2) * r_k * r_k
-                / (F.col("n") - F.col("lg")),
-                6,
-            ).alias("ljung_box_term"),
-        )
-    )
-
-
-# --------------------------------------------------------------------------
-# Round 4: experiment-design trio — two-proportion power/sample-size
-# planning, O'Brien-Fleming group-sequential monitoring, and an
-# effect-size ladder (Cohen's d / Hedges' g / EXACT Cliff's delta via the
-# cdf trick, no pair join).
-# --------------------------------------------------------------------------
-
-_POWER_SQL = """
-WITH seg AS (
-  SELECT c_mktsegment AS segment,
-         CAST(count(CASE WHEN c_acctbal >= 0 THEN 1 END) AS BIGINT) AS k,
-         CAST(count(*) AS BIGINT) AS n
-  FROM customer GROUP BY 1
-),
-mde AS (SELECT CAST(m.d AS DOUBLE) AS delta
-       FROM (VALUES (0.01), (0.02), (0.05)) AS m(d)),
-calc AS (
-  SELECT s.segment, s.k, s.n, m.delta,
-         CAST(s.k AS DOUBLE) / s.n AS p1,
-         CAST(s.k AS DOUBLE) / s.n + m.delta AS p2
-  FROM seg s CROSS JOIN mde m
-)
-SELECT segment, k, n AS n_avail, delta,
-       round(p1, 6) AS p1,
-       CAST(ceil((1.959964 + 0.841621) * (1.959964 + 0.841621)
-                 * (p1 * (1 - p1) + p2 * (1 - p2))
-                 / (delta * delta)) AS BIGINT) AS n_per_arm,
-       CASE WHEN n >= 2 * CAST(ceil((1.959964 + 0.841621)
-                 * (1.959964 + 0.841621)
-                 * (p1 * (1 - p1) + p2 * (1 - p2))
-                 / (delta * delta)) AS BIGINT)
-            THEN 1 ELSE 0 END AS feasible
-FROM calc
-"""
-
-
-@register("q_power_analysis", _POWER_SQL)
-def q_power_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-proportion power analysis (the pre-experiment sample-size
-    planner): per customer segment, the observed conversion p1 = share
-    with non-negative balance (exact k/n BIGINTs shipped in-row) and for
-    minimum-detectable-effects delta in {0.01, 0.02, 0.05} the per-arm n
-    from the classic normal-approximation formula (z_a/2 + z_b)^2 *
-    (p1 q1 + p2 q2) / delta^2 at alpha = 0.05 two-sided, power 0.8 — the
-    z constants 1.959964 / 0.841621 are hardcoded planning constants, so
-    the whole expression is one deterministic IEEE chain over exact
-    integers (identical on both engines), and feasible says whether the
-    segment's own population could even host the experiment. The
-    delta-ladder is the dashboard a growth team reads before burning two
-    weeks on an underpowered test.
-
-    Scale plan: one map-side-combined groupBy to 5 rows, a 3-row
-    broadcast MDE spine (whitelisted), projection arithmetic after."""
-    cust = load(spark, sf_dir, "customer")
-    seg = cust.groupBy(F.col("c_mktsegment").alias("segment")).agg(
-        F.count(F.when(F.col("c_acctbal") >= 0, 1)).cast("long").alias("k"),
-        F.count(F.lit(1)).cast("long").alias("n"),
-    )
-    mde = spark.createDataFrame([(0.01,), (0.02,), (0.05,)], "delta double")
-    p1 = F.col("k").cast("double") / F.col("n")
-    p2 = p1 + F.col("delta")
-    zsum = F.lit(1.959964) + F.lit(0.841621)
-    n_req = F.ceil(
-        zsum * zsum * (p1 * (1 - p1) + p2 * (1 - p2))
-        / (F.col("delta") * F.col("delta"))
-    ).cast("long")
-    return seg.crossJoin(F.broadcast(mde)).select(
-        "segment", "k", F.col("n").alias("n_avail"), "delta",
-        F.round(p1, 6).alias("p1"),
-        n_req.alias("n_per_arm"),
-        F.when(F.col("n") >= 2 * n_req, 1).otherwise(0).alias("feasible"),
-    )
-
-
-# O'Brien-Fleming two-sided z bounds for K=5 equally-spaced looks at
-# overall alpha = 0.05 (classic table values, hardcoded design constants).
-_OBF_BOUNDS = [(1, 4.562), (2, 3.226), (3, 2.634), (4, 2.281), (5, 2.040)]
-
-_GROUPSEQ_SQL = f"""
-WITH ev AS (
-  SELECT event_id,
-         CASE WHEN substr(md5('arm:' || CAST(event_id AS VARCHAR)), 1, 1)
-                   < '8' THEN 1 ELSE 0 END AS trt,
-         CASE WHEN substr(md5('s:' || CAST(event_id AS VARCHAR)), 1, 1)
-                   < CASE WHEN substr(md5('arm:' || CAST(event_id AS VARCHAR)),
-                                      1, 1) < '8'
-                          THEN 'a' ELSE '8' END THEN 1 ELSE 0 END AS succ,
-         ntile(5) OVER (ORDER BY ts, event_id) AS seg5,
-         ts
-  FROM events
-),
-looks AS (SELECT b.k AS look, CAST(b.z AS DOUBLE) AS obf_z
-          FROM (VALUES {", ".join(f"({k}, {z})" for k, z in _OBF_BOUNDS)})
-               AS b(k, z)),
-cum AS (
-  SELECT l.look, l.obf_z,
-         CAST(sum(e.trt) AS BIGINT) AS nt,
-         CAST(sum(e.trt * e.succ) AS BIGINT) AS st,
-         CAST(sum(1 - e.trt) AS BIGINT) AS nc,
-         CAST(sum((1 - e.trt) * e.succ) AS BIGINT) AS sc
-  FROM looks l JOIN ev e ON e.seg5 <= l.look
-  GROUP BY 1, 2
-)
-SELECT look, nt, st, nc, sc,
-       CAST(st * nc - sc * nt AS BIGINT) AS diff_num,
-       round(CAST(st * nc - sc * nt AS DOUBLE)
-             * (st * nc - sc * nt) * (nt + nc)
-             / (CAST(nt AS DOUBLE) * nc * (st + sc)
-                * (nt + nc - st - sc)), 6) AS z2,
-       obf_z,
-       CASE WHEN CAST(st * nc - sc * nt AS DOUBLE)
-                 * (st * nc - sc * nt) * (nt + nc)
-                 / (CAST(nt AS DOUBLE) * nc * (st + sc)
-                    * (nt + nc - st - sc)) > obf_z * obf_z
-            THEN 1 ELSE 0 END AS reject
-FROM cum
-"""
-
-
-@register("q_group_sequential", _GROUPSEQ_SQL)
-def q_group_sequential(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """O'Brien-Fleming group-sequential monitoring (1979) of a synthetic
-    A/B stream: events split into 5 equal chronological looks (ntile over
-    the total (ts, event_id) order), arm and outcome drawn from md5 bits
-    with a REAL planted effect (success nibble 10/16 in treatment vs
-    8/16 in control — big enough to cross even at the smallest fixture), and at each look the pooled two-proportion z^2 =
-    diff^2 * N / (nt * nc * S * (N - S)) is compared to the classic OBF
-    bound ladder 4.562 .. 2.040 (hardcoded design constants) — the
-    spend-alpha-late shape that lets a pipeline peek 5 times without
-    blowing the 0.05 budget. Counts and the cross-multiplied diff_num
-    are exact BIGINTs; z^2 is one deterministic IEEE expression over
-    them. With the planted 2/16 lift the late looks must reject — the
-    replica asserts the crossing.
-
-    Scale plan: arm/outcome/look are projections (the ntile is one total
-    order — at production scale the look id would come from event-time
-    ranges instead, same semantics); the cumulative-look fanout is a
-    5-row broadcast spine (whitelisted) collapsed map-side."""
-    ev = load(spark, sf_dir, "events")
-    arm_hex = F.substring(
-        F.md5(F.concat(F.lit("arm:"), F.col("event_id").cast("string"))), 1, 1
-    )
-    suc_hex = F.substring(
-        F.md5(F.concat(F.lit("s:"), F.col("event_id").cast("string"))), 1, 1
-    )
-    base = ev.select(
-        F.when(arm_hex < "8", 1).otherwise(0).alias("trt"),
-        F.when(
-            suc_hex < F.when(arm_hex < "8", F.lit("a")).otherwise(F.lit("8")), 1
-        )
-        .otherwise(0)
-        .alias("succ"),
-        F.ntile(5).over(Window.orderBy("ts", "event_id")).alias("seg5"),
-    )
-    looks = spark.createDataFrame(_OBF_BOUNDS, "look int, obf_z double")
-    cum = (
-        F.broadcast(looks)
-        .join(base, F.col("seg5") <= F.col("look"))
-        .groupBy("look", "obf_z")
-        .agg(
-            F.sum("trt").cast("long").alias("nt"),
-            F.sum(F.col("trt") * F.col("succ")).cast("long").alias("st"),
-            F.sum(1 - F.col("trt")).cast("long").alias("nc"),
-            F.sum((1 - F.col("trt")) * F.col("succ")).cast("long").alias("sc"),
-        )
-    )
-    diff = F.col("st") * F.col("nc") - F.col("sc") * F.col("nt")
-    n_all = F.col("nt") + F.col("nc")
-    s_all = F.col("st") + F.col("sc")
-    z2 = (
-        diff.cast("double") * diff * n_all
-        / (
-            F.col("nt").cast("double") * F.col("nc") * s_all * (n_all - s_all)
-        )
-    )
-    return cum.select(
-        "look", "nt", "st", "nc", "sc",
-        diff.cast("long").alias("diff_num"),
-        F.round(z2, 6).alias("z2"),
-        "obf_z",
-        F.when(z2 > F.col("obf_z") * F.col("obf_z"), 1).otherwise(0).alias("reject"),
-    )
-
-
-_COHEN_SQL = """
-WITH c AS (
-  SELECT c_mktsegment AS segment,
-         CAST(floor(c_acctbal) AS BIGINT) AS v
-  FROM customer
-),
-vals AS (
-  SELECT segment, v, CAST(count(*) AS BIGINT) AS cnt FROM c GROUP BY 1, 2
-),
-gv AS (
-  SELECT v, CAST(sum(cnt) AS BIGINT) AS gcnt FROM vals GROUP BY 1
-),
-gcum AS (
-  SELECT v, gcnt,
-         CAST(coalesce(sum(gcnt) OVER (ORDER BY v
-           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
-           AS g_below
-  FROM gv
-),
-scum AS (
-  SELECT segment, v, cnt,
-         CAST(coalesce(sum(cnt) OVER (PARTITION BY segment ORDER BY v
-           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS BIGINT)
-           AS a_below
-  FROM vals
-),
-tot AS (
-  SELECT CAST(count(*) AS BIGINT) AS n_all,
-         CAST(sum(v) AS BIGINT) AS s_all,
-         CAST(sum(v * v) AS BIGINT) AS ss_all
-  FROM c
-),
-seg AS (
-  SELECT segment, CAST(count(*) AS BIGINT) AS n_g,
-         CAST(sum(v) AS BIGINT) AS s_g,
-         CAST(sum(v * v) AS BIGINT) AS ss_g
-  FROM c GROUP BY 1
-),
-cliff AS (
-  SELECT s.segment,
-         CAST(sum(s.cnt * (g.g_below - s.a_below)) AS BIGINT) AS n_gt,
-         CAST(sum(s.cnt * (g.gcnt - s.cnt)) AS BIGINT) AS n_eq
-  FROM scum s JOIN gcum g USING (v)
-  GROUP BY 1
-)
-SELECT sg.segment, sg.n_g, sg.s_g,
-       round(CAST(sg.s_g AS DOUBLE) / sg.n_g, 6) AS mean_dollars,
-       round((CAST(sg.s_g AS DOUBLE) / sg.n_g
-              - CAST(t.s_all - sg.s_g AS DOUBLE) / (t.n_all - sg.n_g))
-             / sqrt(((sg.ss_g - CAST(sg.s_g AS DOUBLE) * sg.s_g / sg.n_g)
-                     + ((t.ss_all - sg.ss_g)
-                        - CAST(t.s_all - sg.s_g AS DOUBLE)
-                          * (t.s_all - sg.s_g) / (t.n_all - sg.n_g)))
-                    / (t.n_all - 2)), 6) AS cohens_d,
-       round((1 - 3.0 / (4 * (t.n_all - 2) - 1))
-             * (CAST(sg.s_g AS DOUBLE) / sg.n_g
-                - CAST(t.s_all - sg.s_g AS DOUBLE) / (t.n_all - sg.n_g))
-             / sqrt(((sg.ss_g - CAST(sg.s_g AS DOUBLE) * sg.s_g / sg.n_g)
-                     + ((t.ss_all - sg.ss_g)
-                        - CAST(t.s_all - sg.s_g AS DOUBLE)
-                          * (t.s_all - sg.s_g) / (t.n_all - sg.n_g)))
-                    / (t.n_all - 2)), 6) AS hedges_g,
-       CAST(2 * cl.n_gt + cl.n_eq - sg.n_g * (t.n_all - sg.n_g) AS BIGINT)
-         AS cliff_num,
-       CAST(sg.n_g * (t.n_all - sg.n_g) AS BIGINT) AS cliff_den,
-       round(CAST(2 * cl.n_gt + cl.n_eq - sg.n_g * (t.n_all - sg.n_g)
-                  AS DOUBLE) / (sg.n_g * (t.n_all - sg.n_g)), 6) AS cliffs_delta
-FROM seg sg JOIN cliff cl USING (segment) CROSS JOIN tot t
-"""
-
-
-@register("q_cohens_effects", _COHEN_SQL)
-def q_cohens_effects(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Effect-size ladder per customer segment vs the rest of the
-    population over whole-dollar balances: Cohen's d with the pooled SD
-    (one deterministic IEEE chain over exact BIGINT sufficient stats —
-    sqrt is correctly-rounded, so both engines agree bit-for-bit),
-    Hedges' small-sample correction g = d * (1 - 3/(4*df - 1)), and
-    Cliff's delta computed EXACTLY with no pair join: #(a > b) =
-    sum over segment values of cnt_A(v) * (#all below v - #A below v)
-    via two cumulative windows on the value domain, giving delta =
-    (2*gt + eq - n_A n_B) / (n_A n_B) as an exact integer ratio (the
-    gt - lt identity with ties counted once). d says how big in SD
-    units; Cliff's delta says how often one side wins — the pair every
-    honest A/B readout ships together.
-
-    Scale plan: sufficient stats are map-side-combined groupBys; the
-    Cliff windows run on the (segment, value) and value frames — value-
-    domain bounded, never row-quadratic; one 1-row global carry
-    (whitelisted)."""
-    cust = load(spark, sf_dir, "customer")
-    c = cust.select(
-        F.col("c_mktsegment").alias("segment"),
-        F.floor("c_acctbal").cast("long").alias("v"),
-    )
-    vals = c.groupBy("segment", "v").agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-    gv = vals.groupBy("v").agg(F.sum("cnt").cast("long").alias("gcnt"))
-    wg = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, -1)
-    gcum = gv.select(
-        "v", "gcnt",
-        F.coalesce(F.sum("gcnt").over(wg), F.lit(0)).cast("long").alias("g_below"),
-    )
-    ws = (
-        Window.partitionBy("segment")
-        .orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    scum = vals.select(
-        "segment", "v", "cnt",
-        F.coalesce(F.sum("cnt").over(ws), F.lit(0)).cast("long").alias("a_below"),
-    )
-    tot = c.agg(
-        F.count(F.lit(1)).cast("long").alias("n_all"),
-        F.sum("v").cast("long").alias("s_all"),
-        F.sum(F.col("v") * F.col("v")).cast("long").alias("ss_all"),
-    )
-    seg = c.groupBy("segment").agg(
-        F.count(F.lit(1)).cast("long").alias("n_g"),
-        F.sum("v").cast("long").alias("s_g"),
-        F.sum(F.col("v") * F.col("v")).cast("long").alias("ss_g"),
-    )
-    cliff = (
-        scum.join(gcum, "v")
-        .groupBy("segment")
-        .agg(
-            F.sum(F.col("cnt") * (F.col("g_below") - F.col("a_below")))
-            .cast("long")
-            .alias("n_gt"),
-            F.sum(F.col("cnt") * (F.col("gcnt") - F.col("cnt")))
-            .cast("long")
-            .alias("n_eq"),
-        )
-    )
-    n_b = F.col("n_all") - F.col("n_g")
-    mean_a = F.col("s_g").cast("double") / F.col("n_g")
-    mean_b = (F.col("s_all") - F.col("s_g")).cast("double") / n_b
-    ss_within = (
-        F.col("ss_g") - F.col("s_g").cast("double") * F.col("s_g") / F.col("n_g")
-    ) + (
-        (F.col("ss_all") - F.col("ss_g"))
-        - (F.col("s_all") - F.col("s_g")).cast("double")
-        * (F.col("s_all") - F.col("s_g"))
-        / n_b
-    )
-    d = (mean_a - mean_b) / F.sqrt(ss_within / (F.col("n_all") - 2))
-    cliff_num = (
-        2 * F.col("n_gt") + F.col("n_eq") - F.col("n_g") * n_b
-    )
-    return (
-        seg.join(cliff, "segment")
-        .crossJoin(F.broadcast(tot))
-        .select(
-            "segment", "n_g", "s_g",
-            F.round(mean_a, 6).alias("mean_dollars"),
-            F.round(d, 6).alias("cohens_d"),
-            F.round(
-                (1 - 3.0 / (4 * (F.col("n_all") - 2) - 1)) * d, 6
-            ).alias("hedges_g"),
-            cliff_num.cast("long").alias("cliff_num"),
-            (F.col("n_g") * n_b).cast("long").alias("cliff_den"),
-            F.round(
-                cliff_num.cast("double") / (F.col("n_g") * n_b), 6
-            ).alias("cliffs_delta"),
-        )
     )
 
 
@@ -9934,294 +5727,6 @@ def q_cramer_von_mises(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Round 4: experiment/streaming governance trio — sample-ratio-mismatch
-# guardrail, the Bonferroni/Holm/BH multiple-testing nesting ledger
-# (sharing q_bh_fdr's Monte-Carlo p-value CTEs verbatim), and streaming
-# state-store sizing over the zero-filled minute grid.
-# --------------------------------------------------------------------------
-
-_SRM_SQL = """
-WITH ev AS (
-  SELECT CAST(ts AS DATE) AS day,
-         CASE WHEN substr(md5('arm:' || CAST(event_id AS VARCHAR)), 1, 1)
-                   < '8' THEN 1 ELSE 0 END AS trt
-  FROM events
-),
-daily AS (
-  SELECT day, CAST(sum(trt) AS BIGINT) AS nt,
-         CAST(sum(1 - trt) AS BIGINT) AS nc
-  FROM ev GROUP BY 1
-),
-tot AS (
-  SELECT CAST(sum(nt) AS BIGINT) AS t_nt, CAST(sum(nc) AS BIGINT) AS t_nc
-  FROM daily
-)
-SELECT CAST(d.day AS VARCHAR) AS day, d.nt, d.nc,
-       CAST(d.nt - d.nc AS BIGINT) AS diff,
-       round(CAST((d.nt - d.nc) * (d.nt - d.nc) AS DOUBLE) / (d.nt + d.nc),
-             6) AS chi2,
-       CASE WHEN 1000 * (d.nt - d.nc) * (d.nt - d.nc)
-                 > 3841 * (d.nt + d.nc) THEN 1 ELSE 0 END AS srm_flag,
-       t.t_nt, t.t_nc,
-       CASE WHEN 1000 * (t.t_nt - t.t_nc) * (t.t_nt - t.t_nc)
-                 > 3841 * (t.t_nt + t.t_nc) THEN 1 ELSE 0 END AS overall_flag
-FROM daily d CROSS JOIN tot t
-"""
-
-
-@register("q_abtest_srm", _SRM_SQL)
-def q_abtest_srm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sample-ratio-mismatch guardrail (the #1 experiment-invalidity
-    check, Fabijan 2019): the md5 arm assignment promises 50/50, so each
-    day's chi-square (nt-nc)^2/(nt+nc) against the chi2_1 0.05 critical
-    value 3.841 is decided by the EXACT cross-multiplied integer test
-    1000*(nt-nc)^2 > 3841*(nt+nc) — no division near the verdict. A
-    firing day means the assignment channel itself broke (bot filtering,
-    logging loss, redirect bias) and every downstream metric that day is
-    garbage; the overall row catches slow drifts the daily slices
-    dilute. Exact counts in-row; chi2 is one rounded division for the
-    dashboard.
-
-    Scale plan: one daily map-side-combined groupBy over the projection,
-    a 1-row overall carry (whitelisted)."""
-    ev = load(spark, sf_dir, "events").select(
-        F.col("ts").cast("date").alias("day"),
-        F.when(
-            F.substring(
-                F.md5(F.concat(F.lit("arm:"), F.col("event_id").cast("string"))),
-                1, 1,
-            )
-            < "8",
-            1,
-        )
-        .otherwise(0)
-        .alias("trt"),
-    )
-    daily = ev.groupBy("day").agg(
-        F.sum("trt").cast("long").alias("nt"),
-        F.sum(1 - F.col("trt")).cast("long").alias("nc"),
-    )
-    tot = daily.agg(
-        F.sum("nt").cast("long").alias("t_nt"),
-        F.sum("nc").cast("long").alias("t_nc"),
-    )
-    diff = F.col("nt") - F.col("nc")
-    tdiff = F.col("t_nt") - F.col("t_nc")
-    return daily.crossJoin(F.broadcast(tot)).select(
-        F.col("day").cast("string").alias("day"), "nt", "nc",
-        diff.cast("long").alias("diff"),
-        F.round(
-            (diff * diff).cast("double") / (F.col("nt") + F.col("nc")), 6
-        ).alias("chi2"),
-        F.when(
-            1000 * diff * diff > 3841 * (F.col("nt") + F.col("nc")), 1
-        )
-        .otherwise(0)
-        .alias("srm_flag"),
-        "t_nt", "t_nc",
-        F.when(
-            1000 * tdiff * tdiff > 3841 * (F.col("t_nt") + F.col("t_nc")), 1
-        )
-        .otherwise(0)
-        .alias("overall_flag"),
-    )
-
-
-# Reuse q_bh_fdr's Monte-Carlo p-value pipeline verbatim: everything up to
-# the rk CTE (p_num/p_den per source + the p-ordered rank + m).
-_MT_PREFIX = _BH_SQL.split(",\nistar AS")[0]
-
-_MT_SQL = (
-    _MT_PREFIX
-    + f""",
-fail AS (
-  SELECT coalesce(min(CASE WHEN {_BH_ALPHA_DEN} * (m - bh_rank + 1) * p_num
-                             > p_den * {_BH_ALPHA_NUM} THEN bh_rank END),
-                  9223372036854775807) AS first_fail
-  FROM rk
-),
-istar AS (
-  SELECT CAST(coalesce(max(CASE WHEN p_num * m * {_BH_ALPHA_DEN}
-                                 <= bh_rank * p_den * {_BH_ALPHA_NUM}
-                           THEN bh_rank END), 0) AS BIGINT) AS i_star
-  FROM rk
-)
-SELECT rk.source, rk.p_num, rk.p_den,
-       round(CAST(rk.p_num AS DOUBLE) / rk.p_den, 6) AS p_value,
-       rk.bh_rank AS p_rank, rk.m,
-       CASE WHEN {_BH_ALPHA_DEN} * rk.m * rk.p_num <= rk.p_den
-                 * {_BH_ALPHA_NUM} THEN 1 ELSE 0 END AS bonf_rejected,
-       CASE WHEN rk.bh_rank < f.first_fail THEN 1 ELSE 0 END AS holm_rejected,
-       CASE WHEN rk.bh_rank <= i.i_star THEN 1 ELSE 0 END AS bh_rejected
-FROM rk CROSS JOIN fail f CROSS JOIN istar i
-"""
-)
-
-
-@register("q_multiple_testing", _MT_SQL)
-def q_multiple_testing(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The multiple-testing procedure ladder on ONE p-value set —
-    Bonferroni (p <= alpha/m), Holm step-down (reject while p_(i) <=
-    alpha/(m-i+1); stop at the first failure), and Benjamini-Hochberg
-    step-up (ranks <= i*) — sharing q_bh_fdr's Monte-Carlo p-value CTEs
-    verbatim so the three verdicts are about PROCEDURE, not data. Every
-    decision is a cross-multiplied integer comparison (add-one p-values
-    have exact rational form k/65), and the textbook nesting Bonferroni
-    subset-of Holm subset-of BH is a structural invariant the replica
-    proves — the table a metrics platform shows when someone asks why
-    their alert fired under FDR but not FWER.
-
-    Scale plan: identical to q_bh_fdr (64 broadcast replicas folded
-    map-side into per-source counters) plus two 1-row threshold carries;
-    the ledger is m rows."""
-    bh = REGISTRY["q_bh_fdr"].spark_fn(spark, sf_dir).select(
-        "source", "p_num", "p_den", "bh_rank", "i_star"
-    )
-    m_df = bh.agg(F.max("bh_rank").cast("long").alias("m"))
-    j = bh.crossJoin(F.broadcast(m_df))
-    fail = j.agg(
-        F.coalesce(
-            F.min(
-                F.when(
-                    10 * (F.col("m") - F.col("bh_rank") + 1) * F.col("p_num")
-                    > F.col("p_den"),
-                    F.col("bh_rank"),
-                )
-            ),
-            F.lit(2**63 - 1),
-        ).alias("first_fail")
-    )
-    return (
-        j.crossJoin(F.broadcast(fail))
-        .select(
-            "source", "p_num", "p_den",
-            F.round(F.col("p_num").cast("double") / F.col("p_den"), 6).alias(
-                "p_value"
-            ),
-            F.col("bh_rank").alias("p_rank"),
-            "m",
-            F.when(
-                10 * F.col("m") * F.col("p_num") <= F.col("p_den"), 1
-            )
-            .otherwise(0)
-            .alias("bonf_rejected"),
-            F.when(F.col("bh_rank") < F.col("first_fail"), 1)
-            .otherwise(0)
-            .alias("holm_rejected"),
-            F.when(F.col("bh_rank") <= F.col("i_star"), 1)
-            .otherwise(0)
-            .alias("bh_rejected"),
-        )
-    )
-
-
-_STREAMSTATE_SQL = """
-WITH ev AS (
-  SELECT CAST(floor(epoch(ts) / 60) AS BIGINT) AS m FROM events
-),
-bounds AS (SELECT min(m) AS m0, max(m) AS m1 FROM ev),
-grid AS (
-  SELECT CAST(b.m0 + t.i AS BIGINT) AS m
-  FROM bounds b, unnest(range(CAST(b.m1 - b.m0 + 1 AS BIGINT))) AS t(i)
-),
-cnt AS (SELECT m, CAST(count(*) AS BIGINT) AS c FROM ev GROUP BY 1),
-series AS (
-  SELECT g.m, coalesce(c.c, 0) AS c FROM grid g LEFT JOIN cnt c USING (m)
-),
-delays AS (SELECT CAST(d.d AS BIGINT) AS delay_min
-           FROM (VALUES (60), (360), (1440)) AS d(d)),
-state AS (
-  SELECT d.delay_min, s.m,
-         CAST(sum(s.c) OVER (PARTITION BY d.delay_min ORDER BY s.m
-           RANGE BETWEEN 59 PRECEDING AND CURRENT ROW) AS BIGINT) AS st60,
-         CAST(sum(s.c) OVER (PARTITION BY d.delay_min ORDER BY s.m
-           RANGE BETWEEN 359 PRECEDING AND CURRENT ROW) AS BIGINT) AS st360,
-         CAST(sum(s.c) OVER (PARTITION BY d.delay_min ORDER BY s.m
-           RANGE BETWEEN 1439 PRECEDING AND CURRENT ROW) AS BIGINT) AS st1440
-  FROM series s CROSS JOIN delays d
-),
-picked AS (
-  SELECT delay_min, m,
-         CASE delay_min WHEN 60 THEN st60 WHEN 360 THEN st360
-              ELSE st1440 END AS st
-  FROM state
-)
-SELECT delay_min,
-       CAST(count(*) AS BIGINT) AS n_minutes,
-       CAST(max(st) AS BIGINT) AS peak_state,
-       CAST(min(CASE WHEN st = (SELECT max(st) FROM picked p2
-                                WHERE p2.delay_min = picked.delay_min)
-                     THEN m END) AS BIGINT) AS peak_minute,
-       CAST(sum(st) AS BIGINT) AS state_row_minutes,
-       round(CAST(sum(st) AS DOUBLE) / count(*), 6) AS avg_state
-FROM picked GROUP BY delay_min
-"""
-
-
-@register("q_stream_state_audit", _STREAMSTATE_SQL)
-def q_stream_state_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming state-store sizing audit — the capacity question behind
-    every stream-stream join and watermark setting: with watermark delay
-    d, the state store holds exactly the events of the last d minutes,
-    so over the ZERO-FILLED minute grid the sliding RANGE sum gives the
-    exact state-row count at every minute, and the ledger per delay in
-    {1h, 6h, 24h} ships peak state (with the earliest peak minute as an
-    exact tie-pinned locator), total state-row-minutes (the integral a
-    memory bill is proportional to), and the average. Tripling the
-    delay should roughly triple average state but moves the peak by the
-    burstiness, not the mean — exactly the curve that decides whether a
-    24h watermark fits in executor memory. Epochs are whole minutes
-    under the session's pinned UTC; frames are value-distance RANGE so
-    quiet gaps decay state exactly.
-
-    Scale plan: one minute-level map-side rollup, a day-domain-bounded
-    spine, three RANGE windows over the grid partitioned per delay; the
-    corpus is touched once. Broadcast delay spine whitelisted."""
-    ev = load(spark, sf_dir, "events").select(
-        F.floor(F.unix_timestamp("ts") / 60).cast("long").alias("m")
-    )
-    bounds = ev.agg(F.min("m").alias("m0"), F.max("m").alias("m1"))
-    grid = bounds.select(
-        F.explode(F.sequence(F.col("m0"), F.col("m1"))).alias("m")
-    )
-    cnt = ev.groupBy("m").agg(F.count(F.lit(1)).cast("long").alias("c"))
-    series = grid.join(F.broadcast(cnt), "m", "left").select(
-        "m", F.coalesce("c", F.lit(0)).cast("long").alias("c")
-    )
-    delays = spark.createDataFrame([(60,), (360,), (1440,)], "delay_min long")
-    st = series.crossJoin(F.broadcast(delays))
-    out = []
-    for d in (60, 360, 1440):
-        w = (
-            Window.partitionBy("delay_min")
-            .orderBy("m")
-            .rangeBetween(-(d - 1), 0)
-        )
-        out.append(
-            st.filter(F.col("delay_min") == d).select(
-                "delay_min", "m", F.sum("c").over(w).cast("long").alias("st")
-            )
-        )
-    picked = out[0].unionAll(out[1]).unionAll(out[2])
-    peaks = picked.groupBy("delay_min").agg(F.max("st").alias("mx"))
-    return (
-        picked.join(F.broadcast(peaks), "delay_min")
-        .groupBy("delay_min")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_minutes"),
-            F.max("st").cast("long").alias("peak_state"),
-            F.min(F.when(F.col("st") == F.col("mx"), F.col("m")))
-            .cast("long")
-            .alias("peak_minute"),
-            F.sum("st").cast("long").alias("state_row_minutes"),
-            F.round(F.sum("st").cast("double") / F.count(F.lit(1)), 6).alias(
-                "avg_state"
-            ),
-        )
-    )
-
-
-# --------------------------------------------------------------------------
 # Round 4: KG-eval / IVM / mergeable-sampling trio — TransE link
 # prediction ranking in exact integer L1 geometry, incremental view
 # maintenance audited against full recompute, and the bottom-k
@@ -10623,357 +6128,6 @@ def q_bottomk_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .otherwise(0)
         .alias("match"),
-    )
-
-
-# --------------------------------------------------------------------------
-# Round 4: two-sample/CI/sampling trio — exact energy-distance
-# components, the distribution-free order-statistic median CI, and
-# Duffield-Lund-Thorup priority sampling with exact-rational subset-sum
-# estimation.
-# --------------------------------------------------------------------------
-
-_ENERGY_SQL = """
-WITH s AS (
-  SELECT n_chars AS x, CASE WHEN lang = 'en' THEN 'a' ELSE 'b' END AS grp
-  FROM documents
-),
-nn AS (
-  SELECT CAST(count(CASE WHEN grp = 'a' THEN 1 END) AS BIGINT) AS n1,
-         CAST(count(CASE WHEN grp = 'b' THEN 1 END) AS BIGINT) AS n2
-  FROM s
-),
-vals AS (
-  SELECT x,
-         CAST(count(CASE WHEN grp = 'a' THEN 1 END) AS BIGINT) AS c1,
-         CAST(count(CASE WHEN grp = 'b' THEN 1 END) AS BIGINT) AS c2
-  FROM s GROUP BY 1
-),
-cum AS (
-  SELECT x, c1, c2,
-         CAST(sum(c1) OVER (ORDER BY x) AS BIGINT) AS f1,
-         CAST(sum(c2) OVER (ORDER BY x) AS BIGINT) AS f2,
-         lead(x) OVER (ORDER BY x) AS x_next
-  FROM vals
-),
-gaps AS (
-  SELECT (x_next - x) AS w, f1, f2 FROM cum WHERE x_next IS NOT NULL
-),
-comp AS (
-  SELECT nn.n1, nn.n2,
-         CAST(sum(g.w * (g.f1 * (nn.n2 - g.f2) + g.f2 * (nn.n1 - g.f1)))
-              AS BIGINT) AS a_xy,
-         CAST(sum(g.w * g.f1 * (nn.n1 - g.f1)) AS BIGINT) AS b_xx,
-         CAST(sum(g.w * g.f2 * (nn.n2 - g.f2)) AS BIGINT) AS c_yy
-  FROM gaps g CROSS JOIN nn
-  GROUP BY 1, 2
-)
-SELECT n1, n2, a_xy, b_xx, c_yy,
-       round(2.0 * a_xy / (CAST(n1 AS DOUBLE) * n2)
-             - 2.0 * b_xx / (CAST(n1 AS DOUBLE) * n1)
-             - 2.0 * c_yy / (CAST(n2 AS DOUBLE) * n2), 6) AS energy_distance
-FROM comp
-"""
-
-
-@register("q_energy_distance", _ENERGY_SQL)
-def q_energy_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-sample energy distance (Székely-Rizzo 2004) in exact
-    integers — the third classic two-sample metric after q_ks_drift's
-    max gap and q_cramer_von_mises' curve integral: E = 2E|X-Y| -
-    E|X-X'| - E|Y-Y'| >= 0 with equality iff the distributions match,
-    and every pairwise-L1 expectation collapses to the gap identity
-    sum_pairs |x - y| = sum over consecutive grid gaps of width *
-    (F1 * (n2 - F2) + F2 * (n1 - F1)) — cumulative counts, never a pair
-    join, so the three components ship as exact BIGINTs (a_xy, b_xx,
-    c_yy with denominators n1n2, n1^2, n2^2) and the headline distance
-    is one deterministic double chain over them. The within-sample terms
-    use sum |x-x'| = 2 * the same gap sum, which the 2.0 factors carry.
-
-    Scale plan: one value-domain groupBy, one cumulative + lead window
-    on the distinct-value frame, a 1-row rollup; BIGINT envelope
-    width * F * n <= range * n^2 — safe far past this fixture."""
-    docs = load_docs(spark, sf_dir)
-    s = docs.select(
-        F.col("n_chars").alias("x"),
-        F.when(F.col("lang") == "en", "a").otherwise("b").alias("grp"),
-    )
-    nn = s.agg(
-        F.count(F.when(F.col("grp") == "a", 1)).cast("long").alias("n1"),
-        F.count(F.when(F.col("grp") == "b", 1)).cast("long").alias("n2"),
-    )
-    vals = s.groupBy("x").agg(
-        F.count(F.when(F.col("grp") == "a", 1)).cast("long").alias("c1"),
-        F.count(F.when(F.col("grp") == "b", 1)).cast("long").alias("c2"),
-    )
-    wv = Window.orderBy("x")
-    cum = vals.select(
-        "x",
-        F.sum("c1").over(wv.rowsBetween(Window.unboundedPreceding, 0))
-        .cast("long")
-        .alias("f1"),
-        F.sum("c2").over(wv.rowsBetween(Window.unboundedPreceding, 0))
-        .cast("long")
-        .alias("f2"),
-        F.lead("x").over(wv).alias("x_next"),
-    )
-    gaps = cum.filter(F.col("x_next").isNotNull()).select(
-        (F.col("x_next") - F.col("x")).alias("w"), "f1", "f2"
-    )
-    comp = gaps.crossJoin(F.broadcast(nn)).groupBy("n1", "n2").agg(
-        F.sum(
-            F.col("w")
-            * (
-                F.col("f1") * (F.col("n2") - F.col("f2"))
-                + F.col("f2") * (F.col("n1") - F.col("f1"))
-            )
-        )
-        .cast("long")
-        .alias("a_xy"),
-        F.sum(F.col("w") * F.col("f1") * (F.col("n1") - F.col("f1")))
-        .cast("long")
-        .alias("b_xx"),
-        F.sum(F.col("w") * F.col("f2") * (F.col("n2") - F.col("f2")))
-        .cast("long")
-        .alias("c_yy"),
-    )
-    return comp.select(
-        "n1", "n2", "a_xy", "b_xx", "c_yy",
-        F.round(
-            2.0 * F.col("a_xy") / (F.col("n1").cast("double") * F.col("n2"))
-            - 2.0 * F.col("b_xx") / (F.col("n1").cast("double") * F.col("n1"))
-            - 2.0 * F.col("c_yy") / (F.col("n2").cast("double") * F.col("n2")),
-            6,
-        ).alias("energy_distance"),
-    )
-
-
-_MEDIANCI_SQL = """
-WITH s AS (
-  SELECT source, n_chars AS x FROM documents
-),
-grp AS (SELECT source, CAST(count(*) AS BIGINT) AS n FROM s GROUP BY 1),
-ranked AS (
-  SELECT source, x,
-         row_number() OVER (PARTITION BY source ORDER BY x) AS rk
-  FROM s
-),
-bounds AS (
-  SELECT source, n,
-         CAST(floor((n - 1.959964 * sqrt(CAST(n AS DOUBLE))) / 2) AS BIGINT)
-           AS lo_rank,
-         CAST(ceil(1 + (n + 1.959964 * sqrt(CAST(n AS DOUBLE))) / 2)
-              AS BIGINT) AS hi_rank,
-         CAST((n + 1) // 2 AS BIGINT) AS med_rank
-  FROM grp
-)
-SELECT b.source, b.n, b.lo_rank, b.med_rank, b.hi_rank,
-       max(CASE WHEN r.rk = greatest(b.lo_rank, 1) THEN r.x END) AS ci_lo,
-       max(CASE WHEN r.rk = b.med_rank THEN r.x END) AS median,
-       max(CASE WHEN r.rk = least(b.hi_rank, b.n) THEN r.x END) AS ci_hi
-FROM bounds b JOIN ranked r USING (source)
-GROUP BY 1, 2, 3, 4, 5
-"""
-
-
-@register("q_median_ci", _MEDIANCI_SQL)
-def q_median_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distribution-free median confidence interval per source — the
-    order-statistic CI (binomial/normal-approximation ranks, the
-    textbook nonparametric interval): the 95% CI for the median is
-    [x_(lo), x_(hi)] with lo = floor((n - z sqrt(n))/2) and hi =
-    ceil(1 + (n + z sqrt(n))/2), z = 1.959964 hardcoded — NO
-    distributional assumption on document lengths, just binomial
-    symmetry of signs around the median, which is why this interval is
-    the one a dashboard should draw around a median latency. Ranks are
-    exact integers from one per-source window (doc ties resolved by
-    value order — equal values give equal quantiles); the rank formulas
-    are deterministic IEEE chains over n, clamped honestly to [1, n].
-
-    Scale plan: one per-source rank window (source is the partition
-    key), a 5-row bounds frame joined back, conditional-max collapse;
-    no corpus self-joins."""
-    docs = load_docs(spark, sf_dir)
-    s = docs.select("source", F.col("n_chars").alias("x"))
-    grp = s.groupBy("source").agg(F.count(F.lit(1)).cast("long").alias("n"))
-    wr = Window.partitionBy("source").orderBy("x")
-    ranked = s.select("source", "x", F.row_number().over(wr).alias("rk"))
-    z = F.lit(1.959964)
-    bounds = grp.select(
-        "source", "n",
-        F.floor((F.col("n") - z * F.sqrt(F.col("n").cast("double"))) / 2)
-        .cast("long")
-        .alias("lo_rank"),
-        F.ceil(1 + (F.col("n") + z * F.sqrt(F.col("n").cast("double"))) / 2)
-        .cast("long")
-        .alias("hi_rank"),
-        F.floor((F.col("n") + 1) / 2).cast("long").alias("med_rank"),
-    )
-    return (
-        F.broadcast(bounds)
-        .join(ranked, "source")
-        .groupBy("source", "n", "lo_rank", "med_rank", "hi_rank")
-        .agg(
-            F.max(
-                F.when(F.col("rk") == F.greatest("lo_rank", F.lit(1).cast("long")), F.col("x"))
-            ).alias("ci_lo"),
-            F.max(F.when(F.col("rk") == F.col("med_rank"), F.col("x"))).alias(
-                "median"
-            ),
-            F.max(
-                F.when(F.col("rk") == F.least("hi_rank", "n"), F.col("x"))
-            ).alias("ci_hi"),
-        )
-    )
-
-
-_PRIOSAMPLE_SQL = """
-WITH w AS (
-  SELECT user_id AS k, event_type,
-         CAST(count(*) AS BIGINT) AS wt
-  FROM events GROUP BY 1, 2
-),
-keyed AS (
-  SELECT k, event_type, wt,
-         CAST(('0x' || substr(md5('ps:' || CAST(k AS VARCHAR) || ':'
-               || event_type), 1, 12)) AS BIGINT) AS h
-  FROM w
-),
-ranked AS (
-  SELECT k, event_type, wt, h,
-         row_number() OVER (
-           ORDER BY CAST(wt AS DOUBLE) * 281474976710656 / h DESC, wt DESC,
-                    h, k
-         ) AS prk,
-         count(*) OVER () AS n_items
-  FROM keyed
-),
-tau AS (
-  SELECT CAST(wt AS BIGINT) AS tau_w, CAST(h AS BIGINT) AS tau_h
-  FROM ranked WHERE prk = 65
-),
-sampled AS (
-  SELECT r.event_type, r.wt, r.prk
-  FROM ranked r WHERE r.prk <= 64
-),
-est AS (
-  SELECT s.event_type,
-         CAST(count(*) AS BIGINT) AS n_sampled,
-         CAST(sum(CASE WHEN s.wt * t.tau_h >= t.tau_w * 281474976710656
-                       THEN s.wt ELSE 0 END) AS BIGINT) AS big_mass,
-         CAST(count(CASE WHEN s.wt * t.tau_h < t.tau_w * 281474976710656
-                         THEN 1 END) AS BIGINT) AS n_small
-  FROM sampled s CROSS JOIN tau t
-  GROUP BY 1
-),
-truth AS (
-  SELECT event_type, CAST(sum(wt) AS BIGINT) AS true_mass FROM w GROUP BY 1
-)
-SELECT tr.event_type, tr.true_mass,
-       coalesce(e.n_sampled, 0) AS n_sampled,
-       coalesce(e.big_mass, 0) AS big_mass,
-       coalesce(e.n_small, 0) AS n_small,
-       t.tau_w, t.tau_h,
-       round(coalesce(e.big_mass, 0)
-             + coalesce(e.n_small, 0) * CAST(t.tau_w AS DOUBLE)
-               * 281474976710656 / t.tau_h, 4) AS est_mass,
-       round((coalesce(e.big_mass, 0)
-              + coalesce(e.n_small, 0) * CAST(t.tau_w AS DOUBLE)
-                * 281474976710656 / t.tau_h) / tr.true_mass, 6) AS est_ratio
-FROM truth tr LEFT JOIN est e USING (event_type) CROSS JOIN tau t
-"""
-
-
-@register("q_priority_sampling", _PRIOSAMPLE_SQL)
-def q_priority_sampling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Priority sampling (Duffield-Lund-Thorup 2007) — the
-    weight-sensitive sample that answers arbitrary subset-sum queries
-    with near-optimal variance from k items: each (user, event_type)
-    weight draws priority w/u with u = 48-bit md5 uniform (ordered by
-    the IEEE double of w * 2^48 / h with exact (wt, h, k) tie pins),
-    the top-64 survive, tau is the 65th priority, and the DLT estimator
-    gives every sampled item weight max(w, tau) — decided here by the
-    EXACT cross-multiplied test w * tau_h >= tau_w * 2^48, so big_mass
-    and n_small are BIGINTs and only the final tau multiplication is a
-    deterministic double. Per event type the estimate rides next to the
-    true subset sum with its ratio — the accuracy a flow-monitoring
-    system gets from 64 counters instead of the full key table.
-
-    Scale plan: weights are one groupBy; the top-65 selection is a
-    global priority rank (TakeOrdered shape at production scale);
-    estimation touches only the 64-row sample plus a 1-row tau carry
-    (whitelisted)."""
-    ev = load(spark, sf_dir, "events")
-    w = ev.groupBy(F.col("user_id").alias("k"), "event_type").agg(
-        F.count(F.lit(1)).cast("long").alias("wt")
-    )
-    keyed = w.select(
-        "k", "event_type", "wt",
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.lit("ps:"), F.col("k").cast("string"), F.lit(":"),
-                        F.col("event_type"),
-                    )
-                ),
-                1, 12,
-            ),
-            16, 10,
-        ).cast("long").alias("h"),
-    )
-    two48 = F.lit(281474976710656).cast("long")
-    pr = F.col("wt").cast("double") * 281474976710656.0 / F.col("h")
-    ranked = keyed.select(
-        "k", "event_type", "wt", "h",
-        F.row_number()
-        .over(Window.orderBy(F.desc(pr), F.desc("wt"), F.asc("h"), F.asc("k")))
-        .alias("prk"),
-    )
-    tau = ranked.filter(F.col("prk") == 65).select(
-        F.col("wt").alias("tau_w"), F.col("h").alias("tau_h")
-    )
-    sampled = ranked.filter(F.col("prk") <= 64)
-    est = (
-        sampled.crossJoin(F.broadcast(tau))
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_sampled"),
-            F.sum(
-                F.when(
-                    F.col("wt") * F.col("tau_h") >= F.col("tau_w") * two48,
-                    F.col("wt"),
-                ).otherwise(0)
-            )
-            .cast("long")
-            .alias("big_mass"),
-            F.count(
-                F.when(F.col("wt") * F.col("tau_h") < F.col("tau_w") * two48, 1)
-            )
-            .cast("long")
-            .alias("n_small"),
-        )
-    )
-    truth = w.groupBy("event_type").agg(F.sum("wt").cast("long").alias("true_mass"))
-    est_mass = (
-        F.coalesce(F.col("big_mass"), F.lit(0))
-        + F.coalesce(F.col("n_small"), F.lit(0))
-        * F.col("tau_w").cast("double")
-        * 281474976710656.0
-        / F.col("tau_h")
-    )
-    return (
-        truth.join(est, "event_type", "left")
-        .crossJoin(F.broadcast(tau))
-        .select(
-            "event_type", "true_mass",
-            F.coalesce("n_sampled", F.lit(0)).cast("long").alias("n_sampled"),
-            F.coalesce("big_mass", F.lit(0)).cast("long").alias("big_mass"),
-            F.coalesce("n_small", F.lit(0)).cast("long").alias("n_small"),
-            "tau_w", "tau_h",
-            F.round(est_mass, 4).alias("est_mass"),
-            F.round(est_mass / F.col("true_mass"), 6).alias("est_ratio"),
-        )
     )
 
 

@@ -33,18 +33,11 @@ def with_canonical(linked: DataFrame, canon_map: DataFrame) -> DataFrame:
     )
 
 
-def build_triples(linked: DataFrame, canon_map: DataFrame | None = None,
-                  eager_checkpoint: bool = False) -> DataFrame:
+def build_triples(linked: DataFrame, canon_map: DataFrame | None = None) -> DataFrame:
     """linked mentions -> triples DF.
 
     Rows that already carry canon_cui (the lexicon scan) are used as they
     are; otherwise canon_cui is joined from canon_map (with_canonical).
-
-    eager_checkpoint: materialize the mention-grain checkpoint NOW rather
-    than on first action. Required when upstream carries df.observe
-    metrics: a lazily-materialized checkpoint evaluates its child outside
-    the tracked SQL execution, so observations below it report 0; eager
-    checkpointing runs as its own execution and fires them correctly.
     """
     if "canon_cui" not in linked.columns:
         if canon_map is None:
@@ -54,7 +47,10 @@ def build_triples(linked: DataFrame, canon_map: DataFrame | None = None,
     # each trigger their own job, and without this the upstream scan UDF (the
     # expensive stage) would run four times. localCheckpoint = executor-local
     # materialization (at warehouse scale: a staging table / exchange reuse).
-    m = linked.localCheckpoint(eager=eager_checkpoint)
+    # Eager, because a lazily-materialized checkpoint evaluates its child
+    # outside the tracked SQL execution, so df.observe metrics below it
+    # would read 0; the eager one runs as its own execution at no extra scan.
+    m = linked.localCheckpoint(eager=True)
 
     mentions_t = (
         m.groupBy("conv_id", "canon_cui")

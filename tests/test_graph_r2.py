@@ -6,6 +6,8 @@ from __future__ import annotations
 
 import random
 
+import pytest
+
 from cliner_spark.graph import bellman_ford_sssp, clustering_coefficient, k_core
 
 
@@ -48,9 +50,16 @@ def test_kcore_peels_cascade(spark):
     # 4-clique (a,b,c,d) + pendant chain d-e-f: 2-core = the clique + nothing
     # of the chain (e,f peel in cascade), every survivor degree 3
     clique = [("a", "b"), ("a", "c"), ("a", "d"), ("b", "c"), ("b", "d"), ("c", "d")]
-    got = {r["node"]: r["degree"] for r in
-           k_core(_edges(spark, clique + [("d", "e"), ("e", "f")]), k=2).collect()}
+    edges = _edges(spark, clique + [("d", "e"), ("e", "f")])
+    got = {r["node"]: r["degree"] for r in k_core(edges, k=2).collect()}
     assert got == {"a": 3, "b": 3, "c": 3, "d": 3}
+    # the peel converges at round index 2 (f drops, then e, then none), so a
+    # 3-round budget returns the same core and a 2-round budget raises —
+    # q_kcore's fixed-unroll oracle budget relies on this
+    got3 = {r["node"]: r["degree"] for r in k_core(edges, k=2, max_rounds=3).collect()}
+    assert got3 == got
+    with pytest.raises(RuntimeError, match="no fixpoint after 2"):
+        k_core(edges, k=2, max_rounds=2)
 
 
 def test_kcore_matches_python_on_random_graph(spark):

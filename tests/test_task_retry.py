@@ -8,8 +8,12 @@ master (local[4,2]) cannot be obtained from the already-running fixture JVM
 
 from __future__ import annotations
 
+import os
 import subprocess
 import sys
+
+# the checkout under test; the subprocess runs there, not in a fixed path
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 SCRIPT = r"""
 import pandas as pd
@@ -49,6 +53,6 @@ spark.stop()
 def test_arrow_stage_survives_transient_task_failure():
     p = subprocess.run(
         [sys.executable, "-c", SCRIPT],
-        capture_output=True, text=True, timeout=240, cwd="/root/repo",
+        capture_output=True, text=True, timeout=240, cwd=ROOT,
     )
     assert "RETRY_OK 1000" in p.stdout, (p.stdout[-2000:], p.stderr[-2000:])

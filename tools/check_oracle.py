@@ -23,6 +23,9 @@ import sys
 import duckdb
 import pandas as pd
 
+# the checkout this script lives in, so a second checkout checks its own code
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
 ).split()
@@ -68,7 +71,11 @@ def main() -> int:
     if not os.path.isdir(sf_dir):
         print(f"--sf-dir not a directory: {sf_dir}")
         return 2
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, ROOT)
+    # the Python workers must import the same checkout as the driver
+    os.environ["PYTHONPATH"] = os.pathsep.join(
+        p for p in (ROOT, os.environ.get("PYTHONPATH")) if p
+    )
     import __spark_entry__ as entry
     from cliner_spark.session import get_spark
 

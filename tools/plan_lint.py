@@ -234,60 +234,6 @@ ALLOWED: dict[str, list[tuple[str, str]]] = {
          "DESIGN — candidates are scored from codes, never raw vectors; "
          "at scale the candidate set is IVF-cell-pruned first")
     ],
-    "q_retention_cohorts": [
-        ("BroadcastNestedLoopJoin",
-         "1-row max-week-offset carry building the |cohorts| x |offsets| "
-         "zero-fill spine (dimension-sized)")
-    ],
-    "q_chisq_independence": [
-        ("BroadcastNestedLoopJoin",
-         "|sources| x |langs| contingency grid (dimension x dimension) + "
-         "1-row N/R/C totals carry")
-    ],
-    "q_mann_kendall": [
-        ("BroadcastNestedLoopJoin",
-         "day-grid^2 pairwise sign/slope join (dimension squared, never "
-         "the corpus) + 1-row n_days / tie-term scalar carries")
-    ],
-    "q_ewma_anomaly": [
-        ("BroadcastNestedLoopJoin",
-         "16-row offset spine x day grid (dimension-sized EWMA fanout; "
-         "the prior-day lookup itself is an equi-join)")
-    ],
-    "q_isotonic_calibration": [
-        ("BroadcastNestedLoopJoin",
-         "PAV interval joins over the <=10-row bin frame (j<=k range "
-         "joins on a dimension, never the corpus); the bin x interval "
-         "join below is broadcast too when the planner sees the "
-         "gazetteer's real (local-relation) size"),
-        ("CartesianProduct",
-         "<=10-row bin frame x <=55-row interval frame (PAV max-min "
-         "selection, both dimension-sized)"),
-    ],
-    "q_kendall_taub": [
-        ("BroadcastNestedLoopJoin",
-         "day-grid^2 concordance pair join (dimension squared, same shape "
-         "as q_mann_kendall)")
-    ],
-    "q_rbo_topk": [
-        ("BroadcastNestedLoopJoin",
-         "20-row depth spine x top-20-filtered rank frame (both bounded "
-         "by k, not the corpus)")
-    ],
-    "q_permutation_test": [
-        ("BroadcastNestedLoopJoin",
-         "64-row broadcast replica spine x per-user diffs (one-pass "
-         "sign-flip fanout, map-side combined to 64 counters — the "
-         "poisson-bootstrap shape) + 1-row t_obs carry")
-    ],
-    "q_seq2_support": [
-        ("BroadcastNestedLoopJoin",
-         "1-row n_users total carry onto the |types|^2 pair table")
-    ],
-    "q_kfold_assignment": [
-        ("BroadcastNestedLoopJoin",
-         "5-row fold spine x |langs| stratum frame (zero-fill grid)")
-    ],
     "q_consistent_hashing": [
         ("BroadcastNestedLoopJoin",
          "32/36-row broadcast vnode ring x corpus ownership fanout "
@@ -311,11 +257,6 @@ ALLOWED: dict[str, list[tuple[str, str]]] = {
         ("BroadcastNestedLoopJoin",
          "1-row global-rate carry onto the per-user rollup (exact "
          "cross-multiplied above_global bit)")
-    ],
-    "q_brier_decomposition": [
-        ("BroadcastNestedLoopJoin",
-         "1-row N/P global-total carry onto the 10-row bin rollup "
-         "(resolution-term cross-multiplication)")
     ],
     "q_markov_stationary": [
         ("BroadcastNestedLoopJoin",
@@ -349,70 +290,6 @@ ALLOWED: dict[str, list[tuple[str, str]]] = {
          "papers x reviewer-DIMENSION preference grid (20 columns per "
          "paper) + 1-row n_held/n_papers carry; every round after is "
          "equi-joined")
-    ],
-    "q_german_tank": [
-        ("BroadcastNestedLoopJoin",
-         "broadcast 4-row threshold spine theta-joined to the id sample "
-         "(nib < thr) + 1-row true-count carry — map-side combined to 4 "
-         "rows")
-    ],
-    "q_good_turing": [
-        ("BroadcastNestedLoopJoin",
-         "11-row literal r spine + broadcast 1-row total/singleton "
-         "carries over the frequency-of-frequencies rollup")
-    ],
-    "q_bh_fdr": [
-        ("BroadcastNestedLoopJoin",
-         "broadcast 64-row replica spine x one corpus scan (the "
-         "Monte-Carlo null, map-side combined to sources x 64 cells) + "
-         "1-row N/EN and m carries")
-    ],
-    "q_conformal_calibration": [
-        ("BroadcastNestedLoopJoin",
-         "broadcast 1-row carries (n_cal/k and the conformal qhat "
-         "quantile) onto the calibration rank and the test scan")
-    ],
-    "q_borda_condorcet": [
-        ("BroadcastNestedLoopJoin",
-         "m-row source-dimension pairwise join (m^2 = 400 rows) + "
-         "broadcast 1-row m carry — committee vote on the dimension only")
-    ],
-    "q_ipf_raking": [
-        ("BroadcastNestedLoopJoin",
-         "sources x langs dimension-grid cross (20 x 5) + broadcast "
-         "1-row dims carry — the zero-filled raking grid; all sweeps "
-         "run on that 100-row frame")
-    ],
-    "q_did_estimator": [
-        ("BroadcastNestedLoopJoin",
-         "2-row broadcast {pre,post} period spine x the user dimension — "
-         "the zero-filled panel; cells collapse map-side to 4 rows")
-    ],
-    "q_kruskal_wallis": [
-        ("BroadcastNestedLoopJoin",
-         "1-row broadcast carries (n_total + tie ledger) crossJoined onto "
-         "the per-source rollup — constant attaches, not products")
-    ],
-    "q_acf": [
-        ("BroadcastNestedLoopJoin",
-         "6-row broadcast lag spine x the day-domain-bounded series plus "
-         "1-row n/S and A0/A1 carries — checkpoint-frame sized by "
-         "construction")
-    ],
-    "q_power_analysis": [
-        ("BroadcastNestedLoopJoin",
-         "3-row broadcast MDE spine x the 5-row segment rollup — a "
-         "15-cell planning grid")
-    ],
-    "q_group_sequential": [
-        ("BroadcastNestedLoopJoin",
-         "5-row broadcast look spine x events with a <= predicate — the "
-         "cumulative-look fanout, collapsed map-side to 5 rows")
-    ],
-    "q_cohens_effects": [
-        ("BroadcastNestedLoopJoin",
-         "1-row global sufficient-stats carry onto the 5-row segment "
-         "ledger")
     ],
     "q_wand_pruning": [
         ("BroadcastNestedLoopJoin",
@@ -448,35 +325,11 @@ ALLOWED: dict[str, list[tuple[str, str]]] = {
          "1-row (n1, n2) sample-size carry onto the distinct-value ECDF "
          "frame")
     ],
-    "q_abtest_srm": [
-        ("BroadcastNestedLoopJoin",
-         "1-row overall-count carry onto the daily SRM ledger")
-    ],
-    "q_multiple_testing": [
-        ("BroadcastNestedLoopJoin",
-         "q_bh_fdr's audited replica-spine carries + 1-row m and "
-         "first-fail threshold carries onto the m-row ledger")
-    ],
-    "q_stream_state_audit": [
-        ("BroadcastNestedLoopJoin",
-         "3-row broadcast delay spine x the minute grid (day-domain "
-         "bounded) + 1-row per-delay peak carry")
-    ],
     "q_transe_eval": [
         ("BroadcastNestedLoopJoin",
          "65-row broadcast candidate spine x the edge frame + 1-row "
          "entity-universe carry — the KGE filtered-ranking fanout, "
          "collapsed by 65-row windows")
-    ],
-    "q_energy_distance": [
-        ("BroadcastNestedLoopJoin",
-         "1-row (n1, n2) sample-size carry onto the distinct-value gap "
-         "frame")
-    ],
-    "q_priority_sampling": [
-        ("BroadcastNestedLoopJoin",
-         "1-row tau (65th-priority) carry onto the 64-row sample and "
-         "the per-type truth frame")
     ],
     "q_clip_bias": [
         ("BroadcastNestedLoopJoin",
@@ -503,32 +356,20 @@ ALLOWED: dict[str, list[tuple[str, str]]] = {
 # bucketed lag + boundary stitch), not whitelisted.
 ALLOWED_GLOBAL_WINDOW: dict[str, str] = {
     "q_ams_f2": "median rank over the 16-row estimator ledger",
-    "q_anova_sources": "grand-mean/rank windows on the |sources| rollup",
     "q_benford_audit": "OVER() total on the 9-row leading-digit ledger",
-    "q_bh_fdr": "BH step-up rank + running max over the m-row (|sources|) "
-                "p-value ledger",
     "q_binary_segmentation": "all windows run on the |days| daily-rollup "
                              "frame or its two halves",
     "q_bm25_search": "top-10 rank over the per-query scored match set — the "
                      "global top-k (TakeOrdered) shape; WAND pruning "
                      "(q_wand_pruning) is the index-side scale path",
-    "q_borda_condorcet": "all ranks/totals on the m=20-row source dimension "
-                         "(pairwise frame m^2=400)",
     "q_bottomk_merge": "shard-merge rank over the 128-row (8 shards x k=16) "
                        "sketch union; direct pass ranks the same k-bounded "
                        "frame",
-    "q_chisq_independence": "OVER() totals on the |sources| x |langs| "
-                            "contingency grid",
-    "q_cohens_effects": "rank windows on the (segment, value) value-domain "
-                        "frame",
     "q_compaction_plan": "cumulative-sum packing over the FILE LISTING "
                          "(metadata-sized: one row per data file, the "
                          "planner's own input)",
     "q_concurrency_peak": "sweep-line cumsum over the 2x|users| "
                           "boundary-event frame (dimension-sized)",
-    "q_conformal_calibration": "quantile rank over the calibration SAMPLE "
-                               "(fixed-size held-out set; dist_dense_rank "
-                               "at corpus scale)",
     "q_consistent_hashing": "ring-position rank over the 32/36-row vnode "
                             "ring",
     "q_cramer_von_mises": "ECDF cumulative window over the distinct-value "
@@ -538,30 +379,12 @@ ALLOWED_GLOBAL_WINDOW: dict[str, str] = {
     "q_cusum_changepoint": "CUSUM/rank windows on the |days| daily rollup",
     "q_degree_ccdf": "CCDF cumulative window over the |distinct degrees| "
                      "spectrum",
-    "q_did_estimator": "window over the 4-row (group x period) panel",
     "q_dow_seasonality": "rank over the 7-row weekday ledger",
     "q_dup_discovery": "rank/cum windows over the <=12-row checkpoint "
                        "spine",
-    "q_energy_distance": "cumulative + lead window on the distinct-value "
-                         "gap frame (value-domain bounded)",
     "q_epoch_shuffle": "global row_number IS the demonstrated operator "
                        "(epoch shuffle): gate-SF demonstration by design; "
                        "docstring documents the sharded production loader",
-    "q_funnel_conversion": "lag/max windows on the 3-row funnel-step frame",
-    "q_gains_chart": "cumulative gain over the per-user rollup (user "
-                     "dimension); documented production swap to broadcast "
-                     "decile cutoffs",
-    "q_good_turing": "rank over the frequency-of-frequencies table "
-                     "(count-domain bounded)",
-    "q_group_sequential": "ntile over events per arm — gate-SF "
-                          "demonstration; docstring documents event-time "
-                          "range look ids at scale",
-    "q_hamilton_apportionment": "remainder rank + totals on the 20-row "
-                                "source dimension",
-    "q_isotonic_calibration": "PAV interval windows on the <=10-bin "
-                              "calibration frame",
-    "q_kendall_taub": "concordance windows on the |days| daily rollup "
-                      "(pair frame |days|^2)",
     "q_key_skew": "rank over the top-k heavy-hitter table (k rows, "
                   "TakeOrdered upstream)",
     "q_kg_negative_samples": "row_number over the OBJECT VOCABULARY "
@@ -569,32 +392,20 @@ ALLOWED_GLOBAL_WINDOW: dict[str, str] = {
                              "afterwards)",
     "q_kg_negatives": "same vocabulary index rank (graph.kg_negative_"
                       "samples): dimension-sized",
-    "q_kruskal_wallis": "ONE global value rank — the order-statistics "
-                        "primitive; docstring documents the "
-                        "dist_dense_rank swap at scale",
     "q_ks_drift": "ECDF cumulative window over |distinct lengths| "
                   "(bounded value domain)",
     "q_length_deciles": "exact ntile over (n_chars, doc_id) scalars BY "
                         "DESIGN — the auditable variant; approx quantiles "
                         "documented as the 100 TB path",
-    "q_mann_kendall": "sign/slope rank windows on the |days| grid "
-                      "(dimension squared pair frame)",
     "q_markov_stationary": "row_number over the |types| spine (5 rows) for "
                            "the start vector",
     "q_mixture_plan": "windowed totals on the |sources| rollup",
-    "q_multiple_testing": "step-up/step-down ranks over the m-row "
-                          "(|sources|) ledger",
     "q_nucleus_audit": "global bigram-vocab rank feeding the 8-row "
                        "context spine (vocabulary-bounded)",
-    "q_permutation_test": "p-value rank on the 64-row replica ledger",
     "q_perplexity_buckets": "tertile bounds rank over the distinct-score "
                             "grid (domain-bounded)",
     "q_pps_sample": "ONE cumsum in md5 order — documented distributed "
                     "prefix-sum sharding at scale",
-    "q_priority_sampling": "top-65 priority rank (TakeOrdered shape); "
-                           "estimation windows on the 64-row sample",
-    "q_rbo_topk": "two top-k ranks (k=20, TakeOrdered shape) + depth "
-                  "windows on the 20 x k frame",
     "q_rfm_segments": "three quintile ranks over the per-user rollup (user "
                       "dimension); documented broadcast-cutoff swap at "
                       "scale",
@@ -606,7 +417,6 @@ ALLOWED_GLOBAL_WINDOW: dict[str, str] = {
                          "(shuffle-quality audit) — gate-SF demonstration; "
                          "docstring documents the per-shard production "
                          "form",
-    "q_simpson_paradox": "sign windows on the segment-dimension ledger",
     "q_skyline": "ONE dominance sort window (dist_dense_rank shape); "
                  "output front-sized",
     "q_successive_halving": "elimination ranks on the 16-row config frame",
