@@ -181,6 +181,515 @@ def q_pq_residual_gain(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
+# Round 4n: product/monitoring analytics — ordered funnel conversion,
+# retention cohort matrix, chi-square/Cramér's-V independence audit,
+# Mann-Kendall trend + Theil-Sen slope, and an EWMA volume-anomaly ledger.
+# Exact-integer sufficient statistics throughout; floats only as rounded
+# convenience columns.
+# --------------------------------------------------------------------------
+
+_FUNNEL_SQL = """
+WITH s1 AS (
+  SELECT user_id, min(ts) AS t1 FROM events
+  WHERE event_type = 'signup' GROUP BY 1
+),
+s2 AS (
+  SELECT e.user_id, min(e.ts) AS t2
+  FROM events e JOIN s1 ON e.user_id = s1.user_id
+  WHERE e.event_type = 'click' AND e.ts > s1.t1
+  GROUP BY 1
+),
+s3 AS (
+  SELECT e.user_id, min(e.ts) AS t3
+  FROM events e JOIN s2 ON e.user_id = s2.user_id
+  WHERE e.event_type = 'purchase' AND e.ts > s2.t2
+  GROUP BY 1
+),
+f AS (
+  SELECT 1 AS step, 'signup' AS step_name, count(*) AS n FROM s1
+  UNION ALL SELECT 2, 'click', count(*) FROM s2
+  UNION ALL SELECT 3, 'purchase', count(*) FROM s3
+)
+SELECT CAST(step AS INT) AS step, step_name,
+       CAST(n AS BIGINT) AS n_users,
+       CAST(coalesce(lag(n) OVER (ORDER BY step), n) AS BIGINT) AS prev_users,
+       round(CAST(n AS DOUBLE)
+             / coalesce(lag(n) OVER (ORDER BY step), n), 6) AS conv_prev,
+       CAST(max(CASE WHEN step = 1 THEN n END) OVER () AS BIGINT)
+         AS first_users,
+       round(CAST(n AS DOUBLE)
+             / max(CASE WHEN step = 1 THEN n END) OVER (), 6) AS conv_first
+FROM f
+"""
+
+
+@register("q_funnel_conversion", _FUNNEL_SQL)
+def q_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Ordered funnel conversion (signup -> click -> purchase) with the
+    STRICT temporal-order semantics real funnel engines use: a user counts
+    at step k only if their earliest step-k event happens strictly AFTER
+    their earliest qualifying step-(k-1) event (min-ts chaining, not mere
+    event presence — a purchase before first click does not convert).
+    Emits the 3-row step ledger with exact user counts and step-over-step
+    / from-first conversion rationals.
+
+    Scale plan: each step is one filtered scan + an equi-join on user_id
+    against the previous (already user-deduped, strictly smaller) step
+    frame — broadcastable in practice, hash-co-located otherwise; no
+    windows over the fact table, no all-event materialization per user.
+    The lag/max windows run on the 3-row step frame."""
+    ev = load(spark, sf_dir, "events")
+    s1 = (
+        ev.filter(F.col("event_type") == "signup")
+        .groupBy("user_id")
+        .agg(F.min("ts").alias("t1"))
+    )
+    s2 = (
+        ev.filter(F.col("event_type") == "click")
+        .join(s1, "user_id")
+        .filter(F.col("ts") > F.col("t1"))
+        .groupBy("user_id")
+        .agg(F.min("ts").alias("t2"))
+    )
+    s3 = (
+        ev.filter(F.col("event_type") == "purchase")
+        .join(s2, "user_id")
+        .filter(F.col("ts") > F.col("t2"))
+        .groupBy("user_id")
+        .agg(F.min("ts").alias("t3"))
+    )
+    f = (
+        s1.agg(F.lit(1).alias("step"), F.lit("signup").alias("step_name"),
+               F.count(F.lit(1)).alias("n"))
+        .unionAll(
+            s2.agg(F.lit(2).alias("step"), F.lit("click").alias("step_name"),
+                   F.count(F.lit(1)).alias("n"))
+        )
+        .unionAll(
+            s3.agg(F.lit(3).alias("step"),
+                   F.lit("purchase").alias("step_name"),
+                   F.count(F.lit(1)).alias("n"))
+        )
+    )
+    w = Window.orderBy("step")
+    wall = Window.partitionBy()
+    prev = F.coalesce(F.lag("n").over(w), F.col("n"))
+    first = F.max(F.when(F.col("step") == 1, F.col("n"))).over(wall)
+    return f.select(
+        F.col("step").cast("int").alias("step"),
+        "step_name",
+        F.col("n").cast("bigint").alias("n_users"),
+        prev.cast("bigint").alias("prev_users"),
+        F.round(F.col("n").cast("double") / prev, 6).alias("conv_prev"),
+        first.cast("bigint").alias("first_users"),
+        F.round(F.col("n").cast("double") / first, 6).alias("conv_first"),
+    )
+
+
+_RETENTION_SQL = """
+WITH u AS (
+  SELECT user_id, min(CAST(ts AS DATE)) AS d0 FROM events GROUP BY 1
+),
+act AS (
+  SELECT DISTINCT e.user_id, u.d0,
+         CAST((date_diff('day', u.d0, CAST(e.ts AS DATE))
+               - (date_diff('day', u.d0, CAST(e.ts AS DATE)) % 7)) / 7
+              AS INT) AS wk
+  FROM events e JOIN u ON e.user_id = u.user_id
+),
+cs AS (SELECT d0, count(*) AS cohort_n FROM u GROUP BY 1),
+r AS (SELECT d0, wk, count(*) AS n_active FROM act GROUP BY 1, 2),
+mw AS (SELECT max(wk) AS m FROM act),
+spine AS (
+  SELECT cs.d0, cs.cohort_n, CAST(g.x AS INT) AS wk
+  FROM cs, mw, unnest(range(CAST(mw.m + 1 AS BIGINT))) AS g(x)
+)
+SELECT CAST(s.d0 AS VARCHAR) AS cohort_day, s.wk AS week_offset,
+       CAST(s.cohort_n AS BIGINT) AS cohort_users,
+       CAST(coalesce(r.n_active, 0) AS BIGINT) AS active_users,
+       round(CAST(coalesce(r.n_active, 0) AS DOUBLE) / s.cohort_n, 6)
+         AS retention
+FROM spine s LEFT JOIN r ON s.d0 = r.d0 AND s.wk = r.wk
+"""
+
+
+@register("q_retention_cohorts", _RETENTION_SQL)
+def q_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Classic retention cohort matrix: users cohorted by first-activity
+    day, activity bucketed into 7-day offsets from EACH USER'S OWN day-0
+    (not calendar weeks — the unbiased form that doesn't penalize users
+    who sign up late in a week), zero-filled over the full cohort x offset
+    grid so silent cohorts are visible rows, with exact active/cohort-size
+    rationals.
+
+    Scale plan: two map-side-combined groupBys over the fact table (user
+    day-0, then distinct user-week activity) and an equi-join on user_id;
+    the zero-fill spine is |cohorts| x |offsets| — dimension-sized, built
+    from two tiny frames. Day-0 per user is the only per-user state, no
+    windows over raw events."""
+    ev = load(spark, sf_dir, "events")
+    u = ev.groupBy("user_id").agg(F.min(F.col("ts").cast("date")).alias("d0"))
+    dd = F.datediff(F.col("ts").cast("date"), F.col("d0"))
+    act = (
+        ev.join(u, "user_id")
+        .select(
+            "user_id",
+            "d0",
+            ((dd - dd % 7) / 7).cast("int").alias("wk"),
+        )
+        .distinct()
+    )
+    cs = u.groupBy("d0").agg(F.count(F.lit(1)).alias("cohort_n"))
+    r = act.groupBy("d0", "wk").agg(F.count(F.lit(1)).alias("n_active"))
+    mw = act.agg(F.max("wk").alias("m"))
+    spine = cs.crossJoin(mw).select(
+        "d0",
+        "cohort_n",
+        F.explode(F.sequence(F.lit(0), F.col("m"))).alias("wk"),
+    )
+    out = spine.join(r, ["d0", "wk"], "left")
+    na = F.coalesce(F.col("n_active"), F.lit(0))
+    return out.select(
+        F.col("d0").cast("string").alias("cohort_day"),
+        F.col("wk").cast("int").alias("week_offset"),
+        F.col("cohort_n").cast("bigint").alias("cohort_users"),
+        na.cast("bigint").alias("active_users"),
+        F.round(na.cast("double") / F.col("cohort_n"), 6).alias("retention"),
+    )
+
+
+_CHISQ_SQL = """
+WITH o AS (
+  SELECT source, lang, count(*) AS n FROM documents GROUP BY 1, 2
+),
+srcs AS (SELECT source, sum(n) AS r FROM o GROUP BY 1),
+langs AS (SELECT lang, sum(n) AS c FROM o GROUP BY 1),
+tot AS (
+  SELECT (SELECT sum(n) FROM o) AS nn,
+         (SELECT count(*) FROM srcs) AS nr,
+         (SELECT count(*) FROM langs) AS nc
+),
+cell AS (
+  SELECT s.source, l.lang, s.r, l.c, coalesce(o.n, 0) AS obs
+  FROM srcs s CROSS JOIN langs l
+  LEFT JOIN o ON o.source = s.source AND o.lang = l.lang
+),
+t AS (
+  SELECT cell.*, tot.nn, tot.nr, tot.nc,
+         (nn * obs - r * c) * (nn * obs - r * c) AS num,
+         nn * r * c AS den
+  FROM cell, tot
+),
+w AS (
+  SELECT t.*, sum(CAST(num AS DOUBLE) / den) OVER () AS chi2 FROM t
+)
+SELECT source, lang, CAST(obs AS BIGINT) AS obs,
+       CAST(r AS BIGINT) AS row_total, CAST(c AS BIGINT) AS col_total,
+       CAST(num AS BIGINT) AS chisq_num, CAST(den AS BIGINT) AS chisq_den,
+       round(CAST(num AS DOUBLE) / den, 6) AS cell_term,
+       round(chi2, 6) AS chi2,
+       round(sqrt(chi2 / (nn * least(nr - 1, nc - 1))), 6) AS cramers_v
+FROM w
+"""
+
+
+@register("q_chisq_independence", _CHISQ_SQL)
+def q_chisq_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Chi-square independence audit of the source x lang contingency
+    table (is language mix independent of crawl source?) with Cramér's V
+    effect size. Per-cell sufficient statistics are EXACT BIGINTs via the
+    cross-multiplied identity (obs-exp)^2/exp = (N*obs - r*c)^2 / (N*r*c)
+    — no float expected-counts; the zero-filled full grid means empty
+    cells (a source missing a language entirely) contribute their full
+    r*c/N expectation to the statistic, exactly the signal a biased
+    crawl shows. chi2 / cramers_v are rounded conveniences (sums of ~100
+    exact rationals; value >> 6dp rounding noise).
+
+    Scale plan: one map-side-combined (source, lang) count; everything
+    downstream runs on dimension-sized frames (|sources| x |langs| grid).
+    The 1-row totals frame rides a broadcast scalar-carry crossJoin
+    (whitelisted)."""
+    docs = load_docs(spark, sf_dir)
+    o = docs.groupBy("source", "lang").agg(F.count(F.lit(1)).alias("n"))
+    srcs = o.groupBy("source").agg(F.sum("n").alias("r"))
+    langs = o.groupBy("lang").agg(F.sum("n").alias("c"))
+    tot = o.agg(
+        F.sum("n").alias("nn"),
+        F.countDistinct("source").alias("nr"),
+        F.countDistinct("lang").alias("nc"),
+    )
+    cell = (
+        srcs.crossJoin(langs)
+        .join(o, ["source", "lang"], "left")
+        .select(
+            "source", "lang", "r", "c",
+            F.coalesce(F.col("n"), F.lit(0)).alias("obs"),
+        )
+    )
+    t = cell.crossJoin(tot).select(
+        "*",
+        ((F.col("nn") * F.col("obs") - F.col("r") * F.col("c"))
+         * (F.col("nn") * F.col("obs") - F.col("r") * F.col("c"))).alias("num"),
+        (F.col("nn") * F.col("r") * F.col("c")).alias("den"),
+    )
+    chi2 = F.sum(F.col("num").cast("double") / F.col("den")).over(
+        Window.partitionBy()
+    )
+    w = t.withColumn("chi2", chi2)
+    return w.select(
+        "source",
+        "lang",
+        F.col("obs").cast("bigint").alias("obs"),
+        F.col("r").cast("bigint").alias("row_total"),
+        F.col("c").cast("bigint").alias("col_total"),
+        F.col("num").cast("bigint").alias("chisq_num"),
+        F.col("den").cast("bigint").alias("chisq_den"),
+        F.round(F.col("num").cast("double") / F.col("den"), 6).alias("cell_term"),
+        F.round(F.col("chi2"), 6).alias("chi2"),
+        F.round(
+            F.sqrt(
+                F.col("chi2")
+                / (F.col("nn") * F.least(F.col("nr") - 1, F.col("nc") - 1))
+            ),
+            6,
+        ).alias("cramers_v"),
+    )
+
+
+_MANN_KENDALL_SQL = """
+WITH daily AS (
+  SELECT CAST(ts AS DATE) AS day, CAST(count(*) AS BIGINT) AS x
+  FROM events GROUP BY 1
+),
+b AS (SELECT min(day) AS dmin, max(day) AS dmax FROM daily),
+spine AS (
+  SELECT CAST(g.gs AS DATE) AS day
+  FROM b, unnest(generate_series(b.dmin, b.dmax, INTERVAL 1 DAY)) AS g(gs)
+),
+dense AS (
+  SELECT row_number() OVER (ORDER BY s.day) AS k, coalesce(d.x, 0) AS x
+  FROM spine s LEFT JOIN daily d USING (day)
+),
+pairs AS (
+  SELECT a.k AS ka, b.k AS kb,
+         CASE WHEN b.x > a.x THEN 1 WHEN b.x < a.x THEN -1 ELSE 0 END AS sg,
+         (b.x - a.x) * 1000 AS snum, b.k - a.k AS sden
+  FROM dense a JOIN dense b ON a.k < b.k
+),
+sl AS (
+  SELECT sg,
+         CAST((snum - ((snum % sden) + sden) % sden) // sden AS BIGINT)
+           AS slope_milli,
+         ka, kb,
+         count(*) OVER () AS n_pairs,
+         sum(sg) OVER () AS s_stat,
+         row_number() OVER (ORDER BY
+           (snum - ((snum % sden) + sden) % sden) // sden, ka, kb) AS pr
+  FROM pairs
+),
+nd AS (SELECT count(*) AS n_days FROM dense),
+tie AS (
+  SELECT coalesce(sum(t * (t - 1) * (2 * t + 5)), 0) AS tie_term
+  FROM (SELECT count(*) AS t FROM dense GROUP BY x HAVING count(*) > 1)
+)
+SELECT CAST(nd.n_days AS BIGINT) AS n_days,
+       CAST(sl.n_pairs AS BIGINT) AS n_pairs,
+       CAST(sl.s_stat AS BIGINT) AS s_stat,
+       CAST(nd.n_days * (nd.n_days - 1) * (2 * nd.n_days + 5)
+            - tie.tie_term AS BIGINT) AS var18,
+       CAST(sl.slope_milli AS BIGINT) AS ts_slope_milli,
+       round(CAST(sl.slope_milli AS DOUBLE) / 1000, 6) AS ts_slope
+FROM sl, nd, tie
+WHERE sl.pr = (sl.n_pairs + 1) // 2
+"""
+
+
+@register("q_mann_kendall", _MANN_KENDALL_SQL)
+def q_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Mann-Kendall trend test + Theil-Sen slope over the daily event
+    volume (zero-filled day grid): S = sum of pairwise signs (exact
+    integer), tie-corrected variance as the exact integer 18*Var(S) =
+    n(n-1)(2n+5) - sum t(t-1)(2t+5), and the Theil-Sen slope as the LOWER
+    MEDIAN of all pairwise slopes in exact milli-units per day — each
+    slope floor((xj-xi)*1000 / (kj-ki)) with the engine-stable
+    ((a%b)+b)%b floor-mod (Spark's and DuckDB's % both take the
+    dividend's sign), so the median is selected from an integer total
+    order with (ka, kb) tie pinning. The nonparametric trend primitive —
+    robust to outliers that wreck OLS on bursty volumes.
+
+    Scale plan: the pair join is over the DAY GRID (|days|^2 — a
+    dimension squared, ~10^5 rows for a year; never the corpus); the raw
+    fact table contributes one map-side-combined daily rollup. The 1-row
+    n_days / tie-term frames ride whitelisted scalar-carry crossJoins."""
+    ev = load(spark, sf_dir, "events")
+    daily = ev.groupBy(F.col("ts").cast("date").alias("day")).agg(
+        F.count(F.lit(1)).cast("bigint").alias("x")
+    )
+    b = daily.agg(F.min("day").alias("dmin"), F.max("day").alias("dmax"))
+    spine = b.select(
+        F.explode(F.sequence("dmin", "dmax", F.expr("interval 1 day"))).alias("day")
+    )
+    dense = (
+        spine.join(daily, "day", "left")
+        .select(
+            F.row_number().over(Window.orderBy("day")).alias("k"),
+            F.coalesce("x", F.lit(0)).cast("bigint").alias("x"),
+        )
+    )
+    a, c = dense.alias("a"), dense.alias("b")
+    pairs = a.join(c, F.col("a.k") < F.col("b.k")).select(
+        F.col("a.k").alias("ka"),
+        F.col("b.k").alias("kb"),
+        F.when(F.col("b.x") > F.col("a.x"), 1)
+        .when(F.col("b.x") < F.col("a.x"), -1)
+        .otherwise(0)
+        .alias("sg"),
+        ((F.col("b.x") - F.col("a.x")) * 1000).alias("snum"),
+        (F.col("b.k") - F.col("a.k")).alias("sden"),
+    )
+    fmod = ((F.col("snum") % F.col("sden")) + F.col("sden")) % F.col("sden")
+    slope = ((F.col("snum") - fmod) / F.col("sden")).cast("bigint")
+    wall = Window.partitionBy()
+    sl = pairs.select(
+        "sg",
+        slope.alias("slope_milli"),
+        "ka",
+        "kb",
+        F.count(F.lit(1)).over(wall).alias("n_pairs"),
+        F.sum("sg").over(wall).alias("s_stat"),
+        F.row_number()
+        .over(Window.orderBy(slope.asc(), F.asc("ka"), F.asc("kb")))
+        .alias("pr"),
+    )
+    nd = dense.agg(F.count(F.lit(1)).alias("n_days"))
+    tie = (
+        dense.groupBy("x")
+        .agg(F.count(F.lit(1)).alias("t"))
+        .filter(F.col("t") > 1)
+        .agg(
+            F.coalesce(
+                F.sum(F.col("t") * (F.col("t") - 1) * (2 * F.col("t") + 5)),
+                F.lit(0),
+            ).alias("tie_term")
+        )
+    )
+    med = sl.filter(
+        F.col("pr") == F.floor((F.col("n_pairs") + 1) / 2)
+    )
+    out = med.crossJoin(nd).crossJoin(tie)
+    return out.select(
+        F.col("n_days").cast("bigint").alias("n_days"),
+        F.col("n_pairs").cast("bigint").alias("n_pairs"),
+        F.col("s_stat").cast("bigint").alias("s_stat"),
+        (
+            F.col("n_days") * (F.col("n_days") - 1) * (2 * F.col("n_days") + 5)
+            - F.col("tie_term")
+        )
+        .cast("bigint")
+        .alias("var18"),
+        F.col("slope_milli").cast("bigint").alias("ts_slope_milli"),
+        F.round(F.col("slope_milli").cast("double") / 1000, 6).alias("ts_slope"),
+    )
+
+
+_EWMA_SQL = """
+WITH daily AS (
+  SELECT CAST(ts AS DATE) AS day, CAST(count(*) AS BIGINT) AS x
+  FROM events GROUP BY 1
+),
+b AS (SELECT min(day) AS dmin, max(day) AS dmax FROM daily),
+spine AS (
+  SELECT CAST(g.gs AS DATE) AS day
+  FROM b, unnest(generate_series(b.dmin, b.dmax, INTERVAL 1 DAY)) AS g(gs)
+),
+dense AS (
+  SELECT s.day, coalesce(d.x, 0) AS x
+  FROM spine s LEFT JOIN daily d USING (day)
+),
+off AS (SELECT CAST(t.i + 1 AS INT) AS o FROM unnest(range(16)) AS t(i)),
+j AS (
+  SELECT g.day, g.x,
+         (CAST(1 AS BIGINT) << (16 - off.o)) AS w, h.x AS hx
+  FROM dense g CROSS JOIN off
+  JOIN dense h ON h.day = g.day - off.o
+),
+agg AS (
+  SELECT day, x,
+         CAST(sum(w * hx) AS BIGINT) AS ewma_num,
+         CAST(sum(w) AS BIGINT) AS ewma_den
+  FROM j GROUP BY 1, 2
+)
+SELECT CAST(day AS VARCHAR) AS day, x,
+       ewma_num, ewma_den,
+       round(CAST(ewma_num AS DOUBLE) / ewma_den, 6) AS ewma,
+       (x * ewma_den > 2 * ewma_num) AS flag_high,
+       (2 * x * ewma_den < ewma_num) AS flag_low
+FROM agg
+"""
+
+
+@register("q_ewma_anomaly", _EWMA_SQL)
+def q_ewma_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """EWMA volume-anomaly ledger over the daily event grid: each day's
+    baseline is the alpha=1/2 exponentially-weighted mean of the 16 PRIOR
+    days (weights 2^(16-o), an exact power-of-two ladder, so ewma_num /
+    ewma_den are exact BIGINTs — near the series start the denominator
+    self-normalizes over the available history). Anomaly flags are exact
+    cross-multiplied comparisons (x > 2*ewma / x < ewma/2) — zero float
+    surface in the decision; the rounded ewma column is convenience only.
+    The pointwise burst/outage detector complementing CUSUM (level shifts)
+    and KS (distribution drift).
+
+    Scale plan: the 16x fanout joins the DAY GRID against itself on an
+    equi-key (day - offset) — dimension-sized both sides; the fact table
+    contributes one map-side-combined rollup. First day emits no row (no
+    prior history, honest rather than a fabricated baseline). Production
+    partitions the same shape by tenant key."""
+    ev = load(spark, sf_dir, "events")
+    daily = ev.groupBy(F.col("ts").cast("date").alias("day")).agg(
+        F.count(F.lit(1)).cast("bigint").alias("x")
+    )
+    b = daily.agg(F.min("day").alias("dmin"), F.max("day").alias("dmax"))
+    spine = b.select(
+        F.explode(F.sequence("dmin", "dmax", F.expr("interval 1 day"))).alias("day")
+    )
+    dense = spine.join(daily, "day", "left").select(
+        "day", F.coalesce("x", F.lit(0)).cast("bigint").alias("x")
+    )
+    off = spark.range(16).select((F.col("id") + 1).cast("int").alias("o"))
+    g, h = dense.alias("g"), dense.alias("h")
+    j = (
+        g.crossJoin(off)
+        .join(h, F.col("h.day") == F.date_sub(F.col("g.day"), F.col("o")))
+        .select(
+            F.col("g.day").alias("day"),
+            F.col("g.x").alias("x"),
+            F.expr("shiftleft(CAST(1 AS BIGINT), 16 - o)").alias("w"),
+            F.col("h.x").alias("hx"),
+        )
+    )
+    agg = j.groupBy("day", "x").agg(
+        F.sum(F.col("w") * F.col("hx")).cast("bigint").alias("ewma_num"),
+        F.sum("w").cast("bigint").alias("ewma_den"),
+    )
+    return agg.select(
+        F.col("day").cast("string").alias("day"),
+        "x",
+        "ewma_num",
+        "ewma_den",
+        F.round(F.col("ewma_num").cast("double") / F.col("ewma_den"), 6).alias(
+            "ewma"
+        ),
+        (F.col("x") * F.col("ewma_den") > 2 * F.col("ewma_num")).alias(
+            "flag_high"
+        ),
+        (2 * F.col("x") * F.col("ewma_den") < F.col("ewma_num")).alias(
+            "flag_low"
+        ),
+    )
+
+
+# --------------------------------------------------------------------------
 # Round 4o: graph / text / layout — bipartite HITS, k-truss peel, longest
 # common token run over near-dup pairs, corpus BLEU between near-dup pairs,
 # and a Z-order vs linear file-layout pruning audit.
@@ -622,6 +1131,349 @@ def q_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.max("ub") - F.min("ub") + F.max("hb") - F.min("hb"))
         .cast("bigint")
         .alias("span_sum"),
+    )
+
+
+# --------------------------------------------------------------------------
+# Round 4q: experiment/eval statistics — one-way ANOVA across sources, a
+# seeded paired sign-flip permutation test, ordered 2-sequence support
+# mining, and a deterministic k-fold balance audit.
+# --------------------------------------------------------------------------
+
+_ANOVA_SQL = """
+WITH g AS (
+  SELECT source, CAST(count(*) AS BIGINT) AS n_g,
+         CAST(sum(n_chars) AS BIGINT) AS sum_g,
+         CAST(sum(n_chars * n_chars) AS BIGINT) AS sumsq_g
+  FROM documents GROUP BY 1
+),
+t AS (
+  SELECT g.*, sum(n_g) OVER () AS nn, sum(sum_g) OVER () AS tt,
+         sum(sumsq_g) OVER () AS ss, count(*) OVER () AS k
+  FROM g
+),
+w AS (
+  SELECT t.*,
+         sum(CAST(nn * sum_g - n_g * tt AS DOUBLE)
+             * (nn * sum_g - n_g * tt) / (CAST(nn AS DOUBLE) * nn * n_g))
+           OVER () AS ssb,
+         CAST(ss AS DOUBLE) - CAST(tt AS DOUBLE) * tt / nn AS sstot
+  FROM t
+)
+SELECT source, n_g, sum_g, sumsq_g,
+       CAST((nn * sum_g - n_g * tt) * (nn * sum_g - n_g * tt) AS BIGINT)
+         AS ssb_num,
+       CAST(nn * nn * n_g AS BIGINT) AS ssb_den,
+       round(ssb, 6) AS ss_between,
+       round(sstot - ssb, 6) AS ss_within,
+       round((ssb / (k - 1)) / ((sstot - ssb) / (nn - k)), 6) AS f_stat
+FROM w
+"""
+
+
+@register("q_anova_sources", _ANOVA_SQL)
+def q_anova_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """One-way ANOVA of document length across crawl sources: per-source
+    sufficient statistics (n, sum, sum-of-squares — exact BIGINTs over the
+    integer n_chars) and the between/within decomposition via the
+    cross-multiplied identity SSB = sum_g (N*sum_g - n_g*T)^2 / (N^2 n_g),
+    with the F statistic as a rounded convenience. The is-my-corpus-
+    homogeneous gate before pooling sources into one training mix: a huge
+    F says per-source length norms differ enough that a single global
+    length filter is the wrong tool (use per-source thresholds).
+    ssb_num/ssb_den pin each source's contribution exactly.
+
+    Scale plan: one map-side-combined groupBy over the corpus; the
+    windowed rollups run on the |sources| frame. Identical shuffle shape
+    to the scatter/Gini ledgers."""
+    docs = load_docs(spark, sf_dir)
+    g = docs.groupBy("source").agg(
+        F.count(F.lit(1)).cast("bigint").alias("n_g"),
+        F.sum("n_chars").cast("bigint").alias("sum_g"),
+        F.sum(F.col("n_chars") * F.col("n_chars")).cast("bigint").alias("sumsq_g"),
+    )
+    wall = Window.partitionBy()
+    t = g.select(
+        "*",
+        F.sum("n_g").over(wall).alias("nn"),
+        F.sum("sum_g").over(wall).alias("tt"),
+        F.sum("sumsq_g").over(wall).alias("ss"),
+        F.count(F.lit(1)).over(wall).alias("k"),
+    )
+    dev = F.col("nn") * F.col("sum_g") - F.col("n_g") * F.col("tt")
+    ssb_term = (
+        dev.cast("double")
+        * dev
+        / (F.col("nn").cast("double") * F.col("nn") * F.col("n_g"))
+    )
+    w = t.select(
+        "*",
+        F.sum(ssb_term).over(wall).alias("ssb"),
+        (
+            F.col("ss").cast("double")
+            - F.col("tt").cast("double") * F.col("tt") / F.col("nn")
+        ).alias("sstot"),
+    )
+    return w.select(
+        "source",
+        "n_g",
+        "sum_g",
+        "sumsq_g",
+        (dev * dev).cast("bigint").alias("ssb_num"),
+        (F.col("nn") * F.col("nn") * F.col("n_g")).cast("bigint").alias("ssb_den"),
+        F.round(F.col("ssb"), 6).alias("ss_between"),
+        F.round(F.col("sstot") - F.col("ssb"), 6).alias("ss_within"),
+        F.round(
+            (F.col("ssb") / (F.col("k") - 1))
+            / ((F.col("sstot") - F.col("ssb")) / (F.col("nn") - F.col("k"))),
+            6,
+        ).alias("f_stat"),
+    )
+
+
+_PERM_B = 64
+
+_PERM_SQL = f"""
+WITH u AS (
+  SELECT user_id,
+         CAST(sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)
+              - sum(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END)
+              AS BIGINT) AS d
+  FROM events GROUP BY 1
+),
+obs AS (SELECT abs(sum(d)) AS t_obs FROM u),
+b AS (SELECT CAST(t.i AS INT) AS b FROM unnest(range({_PERM_B})) AS t(i)),
+fl AS (
+  SELECT b.b,
+         CASE WHEN (strpos('0123456789abcdef',
+                           substr(md5(b.b::VARCHAR || '#' || u.user_id::VARCHAR),
+                                  1, 1)) - 1) % 2 = 0
+              THEN u.d ELSE -u.d END AS sd
+  FROM u CROSS JOIN b
+),
+tb AS (SELECT b, CAST(abs(sum(sd)) AS BIGINT) AS t_b FROM fl GROUP BY 1)
+SELECT tb.b, tb.t_b, CAST(obs.t_obs AS BIGINT) AS t_obs,
+       (tb.t_b >= obs.t_obs) AS ge_obs,
+       CAST(1 + sum(CASE WHEN tb.t_b >= obs.t_obs THEN 1 ELSE 0 END)
+                OVER () AS BIGINT) AS p_num,
+       CAST({_PERM_B} + 1 AS BIGINT) AS p_den,
+       round(CAST(1 + sum(CASE WHEN tb.t_b >= obs.t_obs THEN 1 ELSE 0 END)
+                      OVER () AS DOUBLE) / ({_PERM_B} + 1), 6) AS p_value
+FROM tb, obs
+"""
+
+
+@register("q_permutation_test", _PERM_SQL)
+def q_permutation_test(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Paired sign-flip permutation test (the exact nonparametric paired
+    test, Fisher 1935) of H0 'users click as often as they view': per-user
+    paired difference d_u = clicks - views, {_PERM_B} seeded replicas flip
+    each user's sign by an md5(b#user) coin, T_b = |sum of flipped
+    diffs|, and the standard add-one permutation p-value
+    (1 + #{{T_b >= T_obs}}) / (B+1) — every quantity an exact integer, the
+    p-value a single rounded division. The deterministic-resample design
+    of q_poisson_bootstrap applied to hypothesis testing: any shard can
+    regenerate any replica's coins independently.
+
+    Scale plan: one map-side-combined per-user rollup, then a {_PERM_B}-row
+    broadcast fanout collapsed straight back to {_PERM_B} counters — one
+    corpus pass regardless of B; the windowed p-value runs on the
+    {_PERM_B}-row frame."""
+    ev = load(spark, sf_dir, "events")
+    u = ev.groupBy("user_id").agg(
+        (
+            F.sum(F.when(F.col("event_type") == "click", 1).otherwise(0))
+            - F.sum(F.when(F.col("event_type") == "view", 1).otherwise(0))
+        )
+        .cast("bigint")
+        .alias("d")
+    )
+    obs = u.agg(F.abs(F.sum("d")).alias("t_obs"))
+    b = spark.range(_PERM_B).select(F.col("id").cast("int").alias("b"))
+    coin = (
+        F.conv(
+            F.substring(
+                F.md5(
+                    F.concat(
+                        F.col("b").cast("string"),
+                        F.lit("#"),
+                        F.col("user_id").cast("string"),
+                    )
+                ),
+                1,
+                1,
+            ),
+            16,
+            10,
+        ).cast("int")
+        % 2
+    )
+    fl = u.crossJoin(F.broadcast(b)).select(
+        "b", F.when(coin == 0, F.col("d")).otherwise(-F.col("d")).alias("sd")
+    )
+    tb = fl.groupBy("b").agg(F.abs(F.sum("sd")).cast("bigint").alias("t_b"))
+    wall = Window.partitionBy()
+    out = tb.crossJoin(obs)
+    ge = F.sum(F.when(F.col("t_b") >= F.col("t_obs"), 1).otherwise(0)).over(wall)
+    return out.select(
+        "b",
+        "t_b",
+        F.col("t_obs").cast("bigint").alias("t_obs"),
+        (F.col("t_b") >= F.col("t_obs")).alias("ge_obs"),
+        (1 + ge).cast("bigint").alias("p_num"),
+        F.lit(_PERM_B + 1).cast("bigint").alias("p_den"),
+        F.round((1 + ge).cast("double") / (_PERM_B + 1), 6).alias("p_value"),
+    )
+
+
+_SEQ2_SQL = """
+WITH ut AS (
+  SELECT user_id, event_type AS t, min(ts) AS mn, max(ts) AS mx
+  FROM events GROUP BY 1, 2
+),
+tot AS (SELECT count(DISTINCT user_id) AS n_users FROM events),
+p AS (
+  SELECT a.t AS a, b.t AS b,
+         CAST(count(*) AS BIGINT) AS n_both,
+         CAST(sum(CASE WHEN a.mn < b.mx THEN 1 ELSE 0 END) AS BIGINT)
+           AS n_seq
+  FROM ut a JOIN ut b ON a.user_id = b.user_id AND a.t <> b.t
+  GROUP BY 1, 2
+),
+m AS (SELECT t, CAST(count(*) AS BIGINT) AS n_t FROM ut GROUP BY 1)
+SELECT p.a, p.b, p.n_both, p.n_seq,
+       ma.n_t AS n_a, mb.n_t AS n_b,
+       CAST(tot.n_users AS BIGINT) AS n_users,
+       round(CAST(p.n_seq AS DOUBLE) / tot.n_users, 6) AS support,
+       round(CAST(p.n_seq AS DOUBLE) / ma.n_t, 6) AS confidence,
+       round(CAST(p.n_seq AS DOUBLE) * tot.n_users
+             / (CAST(ma.n_t AS DOUBLE) * mb.n_t), 6) AS lift
+FROM p JOIN m ma ON ma.t = p.a JOIN m mb ON mb.t = p.b, tot
+"""
+
+
+@register("q_seq2_support", _SEQ2_SQL)
+def q_seq2_support(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Ordered 2-sequence support mining (the GSP/PrefixSpan length-2
+    core): for every ordered event-type pair (a, b), the number of users
+    with SOME a-event strictly before SOME b-event — computed from
+    per-(user, type) min/max timestamps alone via the exists identity
+    min_ts(a) < max_ts(b), so the fact table is never self-joined at the
+    event level. Emits exact support / confidence / lift sufficient
+    statistics against the type marginals — the sequential complement to
+    q_assoc_rules (unordered co-occurrence) and q_funnel_conversion (one
+    fixed path).
+
+    Scale plan: one map-side-combined (user, type) rollup; the pair join
+    is per-user over the TYPE dimension (|types|^2 rows per user, types
+    ~5); marginals and the user total are dimension-sized broadcast
+    joins."""
+    ev = load(spark, sf_dir, "events")
+    ut = ev.groupBy("user_id", F.col("event_type").alias("t")).agg(
+        F.min("ts").alias("mn"), F.max("ts").alias("mx")
+    )
+    tot = ev.agg(F.countDistinct("user_id").alias("n_users"))
+    a, c = ut.alias("a"), ut.alias("b")
+    p = (
+        a.join(
+            c,
+            (F.col("a.user_id") == F.col("b.user_id"))
+            & (F.col("a.t") != F.col("b.t")),
+        )
+        .groupBy(F.col("a.t").alias("a"), F.col("b.t").alias("b"))
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_both"),
+            F.sum(F.when(F.col("a.mn") < F.col("b.mx"), 1).otherwise(0))
+            .cast("bigint")
+            .alias("n_seq"),
+        )
+    )
+    m = ut.groupBy("t").agg(F.count(F.lit(1)).cast("bigint").alias("n_t"))
+    ma = m.select(F.col("t").alias("a"), F.col("n_t").alias("n_a"))
+    mb = m.select(F.col("t").alias("b"), F.col("n_t").alias("n_b"))
+    out = p.join(ma, "a").join(mb, "b").crossJoin(tot)
+    return out.select(
+        "a",
+        "b",
+        "n_both",
+        "n_seq",
+        "n_a",
+        "n_b",
+        F.col("n_users").cast("bigint").alias("n_users"),
+        F.round(F.col("n_seq").cast("double") / F.col("n_users"), 6).alias(
+            "support"
+        ),
+        F.round(F.col("n_seq").cast("double") / F.col("n_a"), 6).alias(
+            "confidence"
+        ),
+        F.round(
+            F.col("n_seq").cast("double")
+            * F.col("n_users")
+            / (F.col("n_a").cast("double") * F.col("n_b")),
+            6,
+        ).alias("lift"),
+    )
+
+
+_KFOLD_SQL = """
+WITH f AS (
+  SELECT lang,
+         CAST((strpos('0123456789abcdef',
+                      substr(md5(doc_id::VARCHAR), 1, 1)) - 1) % 5 AS INT)
+           AS fold
+  FROM documents
+),
+lt AS (SELECT lang, CAST(count(*) AS BIGINT) AS n_lang FROM f GROUP BY 1),
+grid AS (
+  SELECT lt.lang, lt.n_lang, CAST(t.i AS INT) AS fold
+  FROM lt, unnest(range(5)) AS t(i)
+),
+c AS (SELECT lang, fold, CAST(count(*) AS BIGINT) AS n FROM f GROUP BY 1, 2)
+SELECT g.lang, g.fold, g.n_lang,
+       CAST(coalesce(c.n, 0) AS BIGINT) AS n,
+       CAST(abs(5 * coalesce(c.n, 0) - g.n_lang) AS BIGINT) AS dev_num,
+       round(CAST(coalesce(c.n, 0) AS DOUBLE) / g.n_lang, 6) AS frac
+FROM grid g LEFT JOIN c ON c.lang = g.lang AND c.fold = g.fold
+"""
+
+
+@register("q_kfold_assignment", _KFOLD_SQL)
+def q_kfold_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Deterministic 5-fold cross-validation assignment audit: folds come
+    from md5(doc_id) — reproducible on any shard with zero coordination,
+    the same RNG-free discipline as the sampling family — and the audit
+    reports the per-(lang, fold) cell count against its stratum share
+    with the exact cross-multiplied deviation |5n - n_lang| (zero-filled
+    grid, so an empty (lang, fold) cell is a visible row, not a missing
+    one). Hash folds are NOT stratified by construction; this table is
+    how a pipeline decides whether the imbalance is tolerable or a
+    per-stratum re-split is needed before eval numbers are trusted.
+
+    Scale plan: stateless per-row fold assignment + one map-side-combined
+    groupBy; the grid join runs on |langs| x 5 dimension frames."""
+    docs = load_docs(spark, sf_dir)
+    f = docs.select(
+        "lang",
+        (
+            F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 1), 16, 10)
+            .cast("int")
+            % 5
+        ).alias("fold"),
+    )
+    lt = f.groupBy("lang").agg(F.count(F.lit(1)).cast("bigint").alias("n_lang"))
+    grid = lt.crossJoin(
+        spark.range(5).select(F.col("id").cast("int").alias("fold"))
+    )
+    c = f.groupBy("lang", "fold").agg(F.count(F.lit(1)).cast("bigint").alias("n"))
+    out = grid.join(c, ["lang", "fold"], "left")
+    n = F.coalesce(F.col("n"), F.lit(0))
+    return out.select(
+        "lang",
+        "fold",
+        "n_lang",
+        n.cast("bigint").alias("n"),
+        F.abs(5 * n - F.col("n_lang")).cast("bigint").alias("dev_num"),
+        F.round(n.cast("double") / F.col("n_lang"), 6).alias("frac"),
     )
 
 

@@ -234,6 +234,40 @@ ALLOWED: dict[str, list[tuple[str, str]]] = {
          "DESIGN — candidates are scored from codes, never raw vectors; "
          "at scale the candidate set is IVF-cell-pruned first")
     ],
+    "q_retention_cohorts": [
+        ("BroadcastNestedLoopJoin",
+         "1-row max-week-offset carry building the |cohorts| x |offsets| "
+         "zero-fill spine (dimension-sized)")
+    ],
+    "q_chisq_independence": [
+        ("BroadcastNestedLoopJoin",
+         "|sources| x |langs| contingency grid (dimension x dimension) + "
+         "1-row N/R/C totals carry")
+    ],
+    "q_mann_kendall": [
+        ("BroadcastNestedLoopJoin",
+         "day-grid^2 pairwise sign/slope join (dimension squared, never "
+         "the corpus) + 1-row n_days / tie-term scalar carries")
+    ],
+    "q_ewma_anomaly": [
+        ("BroadcastNestedLoopJoin",
+         "16-row offset spine x day grid (dimension-sized EWMA fanout; "
+         "the prior-day lookup itself is an equi-join)")
+    ],
+    "q_permutation_test": [
+        ("BroadcastNestedLoopJoin",
+         "64-row broadcast replica spine x per-user diffs (one-pass "
+         "sign-flip fanout, map-side combined to 64 counters — the "
+         "poisson-bootstrap shape) + 1-row t_obs carry")
+    ],
+    "q_seq2_support": [
+        ("BroadcastNestedLoopJoin",
+         "1-row n_users total carry onto the |types|^2 pair table")
+    ],
+    "q_kfold_assignment": [
+        ("BroadcastNestedLoopJoin",
+         "5-row fold spine x |langs| stratum frame (zero-fill grid)")
+    ],
     "q_consistent_hashing": [
         ("BroadcastNestedLoopJoin",
          "32/36-row broadcast vnode ring x corpus ownership fanout "
@@ -356,6 +390,7 @@ ALLOWED: dict[str, list[tuple[str, str]]] = {
 # bucketed lag + boundary stitch), not whitelisted.
 ALLOWED_GLOBAL_WINDOW: dict[str, str] = {
     "q_ams_f2": "median rank over the 16-row estimator ledger",
+    "q_anova_sources": "grand-mean/rank windows on the |sources| rollup",
     "q_benford_audit": "OVER() total on the 9-row leading-digit ledger",
     "q_binary_segmentation": "all windows run on the |days| daily-rollup "
                              "frame or its two halves",
@@ -365,6 +400,8 @@ ALLOWED_GLOBAL_WINDOW: dict[str, str] = {
     "q_bottomk_merge": "shard-merge rank over the 128-row (8 shards x k=16) "
                        "sketch union; direct pass ranks the same k-bounded "
                        "frame",
+    "q_chisq_independence": "OVER() totals on the |sources| x |langs| "
+                            "contingency grid",
     "q_compaction_plan": "cumulative-sum packing over the FILE LISTING "
                          "(metadata-sized: one row per data file, the "
                          "planner's own input)",
@@ -385,6 +422,7 @@ ALLOWED_GLOBAL_WINDOW: dict[str, str] = {
     "q_epoch_shuffle": "global row_number IS the demonstrated operator "
                        "(epoch shuffle): gate-SF demonstration by design; "
                        "docstring documents the sharded production loader",
+    "q_funnel_conversion": "lag/max windows on the 3-row funnel-step frame",
     "q_key_skew": "rank over the top-k heavy-hitter table (k rows, "
                   "TakeOrdered upstream)",
     "q_kg_negative_samples": "row_number over the OBJECT VOCABULARY "
@@ -397,11 +435,14 @@ ALLOWED_GLOBAL_WINDOW: dict[str, str] = {
     "q_length_deciles": "exact ntile over (n_chars, doc_id) scalars BY "
                         "DESIGN — the auditable variant; approx quantiles "
                         "documented as the 100 TB path",
+    "q_mann_kendall": "sign/slope rank windows on the |days| grid "
+                      "(dimension squared pair frame)",
     "q_markov_stationary": "row_number over the |types| spine (5 rows) for "
                            "the start vector",
     "q_mixture_plan": "windowed totals on the |sources| rollup",
     "q_nucleus_audit": "global bigram-vocab rank feeding the 8-row "
                        "context spine (vocabulary-bounded)",
+    "q_permutation_test": "p-value rank on the 64-row replica ledger",
     "q_perplexity_buckets": "tertile bounds rank over the distinct-score "
                             "grid (domain-bounded)",
     "q_pps_sample": "ONE cumsum in md5 order — documented distributed "
