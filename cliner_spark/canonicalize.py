@@ -39,12 +39,7 @@ def concept_edges(gazetteer: DataFrame) -> DataFrame:
 
 
 def connected_components(
-    edges: DataFrame,
-    nodes: DataFrame | None = None,
-    node_col: str = "node",
-    max_iterations: int = MAX_ITERATIONS,
-    num_partitions: int | None = None,
-    fixed_iterations: int | None = None,
+    edges: DataFrame, nodes: DataFrame | None = None
 ) -> DataFrame:
     """Min-label propagation to fixpoint.
 
@@ -52,58 +47,48 @@ def connected_components(
     nodes: optional (node) — isolated nodes to include; defaults to edge
     endpoints. Returns (node, comp) where comp = min node id reachable.
 
-    num_partitions optionally pre-partitions the edge list by join key (use
-    for web-scale graphs to co-locate the per-iteration joins); leave None
-    for dimension-sized graphs — AQE's runtime coalescing already sizes the
-    tiny shuffles, and explicit coalescing measurably fights it.
-
-    fixed_iterations: run that many rounds with NO per-round convergence
-    action, then VERIFY the fixpoint (one join + limit-1 count) and keep
-    iterating until it holds. The budget is a floor, not a guarantee:
-    pointer jumping does not always double the distance the component-min
-    label has travelled when it must propagate against the id ordering
-    (e.g. the path 1-6-5-4-3-2 advances the '1' frontier by one hop per
-    round), so returning after ceil(log2 n)+1 rounds unverified can emit
-    silently split components. Callers that know n cheaply (dimension
-    graphs) still save the per-round convergence actions in the common
-    case — the verify usually passes on the first check. When None, a
-    changed-rows check runs each round (data-dependent early exit).
+    Runs CHECKPOINT_EVERY rounds with no per-round convergence action,
+    checkpoints eagerly, then VERIFIES the fixpoint (one join + limit-1
+    count) and repeats until it holds. Pointer jumping does not always
+    double the distance the component-min label has travelled when it must
+    propagate against the id ordering (e.g. the path 1-6-5-4-3-2 advances
+    the '1' frontier by one hop per round), so no round count is trusted
+    unverified. Raises RuntimeError if the fixpoint does not hold after
+    MAX_ITERATIONS rounds.
     """
     und = edges.select(F.col("src").alias("u"), F.col("dst").alias("v")).unionByName(
         edges.select(F.col("dst").alias("u"), F.col("src").alias("v"))
     )
-    if num_partitions:
-        und = und.repartition(num_partitions, "u")
-    endpoint_nodes = und.select(F.col("u").alias(node_col)).distinct()
+    endpoint_nodes = und.select(F.col("u").alias("node")).distinct()
     if nodes is not None:
-        all_nodes = nodes.select(F.col(node_col)).unionByName(endpoint_nodes).distinct()
+        all_nodes = nodes.select("node").unionByName(endpoint_nodes).distinct()
     else:
         all_nodes = endpoint_nodes
-    labels = all_nodes.withColumn("comp", F.col(node_col))
+    labels = all_nodes.withColumn("comp", F.col("node"))
     und = und.localCheckpoint(eager=True)
     labels = labels.localCheckpoint(eager=True)
 
     def one_round(labels: DataFrame) -> DataFrame:
         # candidate label for each node = min(own, min over neighbors' labels)
         nbr = (
-            und.join(labels, und["v"] == labels[node_col])
-            .select(und["u"].alias(node_col), F.col("comp"))
+            und.join(labels, und["v"] == labels["node"])
+            .select(und["u"].alias("node"), F.col("comp"))
         )
         new_labels = (
             labels.unionByName(nbr)
-            .groupBy(node_col)
+            .groupBy("node")
             .agg(F.min("comp").alias("comp"))
         )
         # pointer jumping (comp <- comp[comp]): collapses long chains —
         # same fixpoint, since a node's label is always another node of its
         # component and labels only decrease toward the component min.
         roots = new_labels.select(
-            F.col(node_col).alias("_r"), F.col("comp").alias("_rc")
+            F.col("node").alias("_r"), F.col("comp").alias("_rc")
         )
         return (
             new_labels.join(roots, new_labels["comp"] == F.col("_r"), "left")
             .select(
-                F.col(node_col),
+                F.col("node"),
                 F.coalesce(F.col("_rc"), F.col("comp")).alias("comp"),
             )
         )
@@ -113,8 +98,8 @@ def connected_components(
         # equally-labelled endpoints: labels are always node ids of the same
         # component and only decrease, the component-min node keeps labelling
         # itself, so edge-agreement forces every node's label to be that min.
-        lu = labels.select(F.col(node_col).alias("_lu_n"), F.col("comp").alias("_lu"))
-        lv = labels.select(F.col(node_col).alias("_lv_n"), F.col("comp").alias("_lv"))
+        lu = labels.select(F.col("node").alias("_lu_n"), F.col("comp").alias("_lu"))
+        lv = labels.select(F.col("node").alias("_lv_n"), F.col("comp").alias("_lv"))
         disagree = (
             und.join(lu, und["u"] == F.col("_lu_n"))
             .join(lv, und["v"] == F.col("_lv_n"))
@@ -124,47 +109,18 @@ def connected_components(
         )
         return disagree == 0
 
-    if fixed_iterations is not None:
-        # round budget with no per-round convergence action; but the
-        # pointer-jump SELF-join doubles the logical plan per round, so
-        # lineage must be cut eagerly on a cadence or analysis cost grows
+    rounds = 0
+    while rounds < MAX_ITERATIONS:
+        # the pointer-jump SELF-join doubles the logical plan per round, so
+        # lineage is cut eagerly on this cadence or analysis cost grows
         # 2^rounds
-        for it in range(fixed_iterations):
+        for _ in range(CHECKPOINT_EVERY):
             labels = one_round(labels)
-            if (it + 1) % CHECKPOINT_EVERY == 0 and it != fixed_iterations - 1:
-                labels = labels.localCheckpoint(eager=True)
+        rounds += CHECKPOINT_EVERY
         labels = labels.localCheckpoint(eager=True)
-        # the budget is a floor, not a proof — verify and top up to fixpoint
-        extra = 0
-        while not at_fixpoint(labels):
-            if extra >= max_iterations:
-                raise RuntimeError(
-                    f"connected_components: no fixpoint after {fixed_iterations}"
-                    f" budgeted + {extra} extra rounds"
-                )
-            labels = one_round(labels).localCheckpoint(eager=True)
-            extra += 1
-        return labels
-
-    for it in range(max_iterations):
-        new_labels = one_round(labels)
-        # the convergence check below is an action anyway; eager-checkpointing
-        # here both cuts lineage and avoids recomputing the join twice
-        if (it + 1) % CHECKPOINT_EVERY == 0:
-            new_labels = new_labels.localCheckpoint(eager=True)
-        else:
-            new_labels = new_labels.cache()
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), node_col)
-            .filter(F.col("n.comp") != F.col("o.comp"))
-            .limit(1)
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            break
-    return labels
+        if at_fixpoint(labels):
+            return labels
+    raise RuntimeError(f"connected_components: no fixpoint after {rounds} rounds")
 
 
 def surface_form_counts(
@@ -198,14 +154,5 @@ def canonical_concept_map(gazetteer: DataFrame) -> DataFrame:
     """(cui, canon_cui): every cui -> min cui of its connected component."""
     edges = concept_edges(gazetteer)
     nodes = gazetteer.select(F.col("cui").alias("node")).distinct()
-    # Since connected_components VERIFIES the fixpoint after the budget and
-    # tops up, the budget is purely a cost knob: each round costs 2-3 Spark
-    # jobs, a verify costs 1, and gazetteer shared-string chains are shallow
-    # (2-3 hops; pointer jumping covers depth 2^rounds). A flat budget of 3
-    # + verify beats the former ceil(log2 n)+1 rounds — which, without the
-    # verify, was also not sufficient for adversarial id orderings — and
-    # needs no up-front count() job just to size the budget.
-    comps = connected_components(
-        edges, nodes=nodes, node_col="node", fixed_iterations=3,
-    )
+    comps = connected_components(edges, nodes=nodes)
     return comps.select(F.col("node").alias("cui"), F.col("comp").alias("canon_cui"))

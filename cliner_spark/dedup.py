@@ -198,9 +198,7 @@ def dup_clusters(
     pairs = jaccard_pairs(df, n=n, df_cut=df_cut, min_jaccard=min_jaccard,
                           id_col=id_col, text_col=text_col)
     edges = pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-    comps = connected_components(edges, node_col="node").withColumnRenamed(
-        "node", id_col
-    )
+    comps = connected_components(edges).withColumnRenamed("node", id_col)
     return (
         df.select(F.col(id_col))
         .join(comps, id_col, "left")
@@ -411,9 +409,7 @@ def semdedup_keep(
         id_col=id_col, vec_col=vec_col,
     )
     edges = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-    comps = connected_components(edges, node_col="node").withColumnRenamed(
-        "node", id_col
-    )
+    comps = connected_components(edges).withColumnRenamed("node", id_col)
     return (
         emb.select(F.col(id_col))
         .join(comps, id_col, "left")

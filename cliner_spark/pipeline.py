@@ -29,7 +29,6 @@ Shuffle audit (scale rationale, 10^12 turns):
 from __future__ import annotations
 
 import argparse
-import os
 import time
 
 from pyspark.sql import DataFrame, SparkSession
@@ -199,9 +198,8 @@ def cmd_evaluate(args) -> None:
 
 # Above this many transcript turns, `cliner train` auto-selects the
 # distributed parameter-mixing trainer: collecting the corpus to the driver
-# is a fixture-scale convenience only (r2 verdict item 5). Overridable for
-# tests via CLINER_TRAIN_COLLECT_MAX.
-TRAIN_COLLECT_MAX = int(os.environ.get("CLINER_TRAIN_COLLECT_MAX", "50000"))
+# is a fixture-scale convenience only (r2 verdict item 5).
+TRAIN_COLLECT_MAX = 50_000
 
 
 def cmd_train(args) -> None:

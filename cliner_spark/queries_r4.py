@@ -181,515 +181,6 @@ def q_pq_residual_gain(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Round 4n: product/monitoring analytics — ordered funnel conversion,
-# retention cohort matrix, chi-square/Cramér's-V independence audit,
-# Mann-Kendall trend + Theil-Sen slope, and an EWMA volume-anomaly ledger.
-# Exact-integer sufficient statistics throughout; floats only as rounded
-# convenience columns.
-# --------------------------------------------------------------------------
-
-_FUNNEL_SQL = """
-WITH s1 AS (
-  SELECT user_id, min(ts) AS t1 FROM events
-  WHERE event_type = 'signup' GROUP BY 1
-),
-s2 AS (
-  SELECT e.user_id, min(e.ts) AS t2
-  FROM events e JOIN s1 ON e.user_id = s1.user_id
-  WHERE e.event_type = 'click' AND e.ts > s1.t1
-  GROUP BY 1
-),
-s3 AS (
-  SELECT e.user_id, min(e.ts) AS t3
-  FROM events e JOIN s2 ON e.user_id = s2.user_id
-  WHERE e.event_type = 'purchase' AND e.ts > s2.t2
-  GROUP BY 1
-),
-f AS (
-  SELECT 1 AS step, 'signup' AS step_name, count(*) AS n FROM s1
-  UNION ALL SELECT 2, 'click', count(*) FROM s2
-  UNION ALL SELECT 3, 'purchase', count(*) FROM s3
-)
-SELECT CAST(step AS INT) AS step, step_name,
-       CAST(n AS BIGINT) AS n_users,
-       CAST(coalesce(lag(n) OVER (ORDER BY step), n) AS BIGINT) AS prev_users,
-       round(CAST(n AS DOUBLE)
-             / coalesce(lag(n) OVER (ORDER BY step), n), 6) AS conv_prev,
-       CAST(max(CASE WHEN step = 1 THEN n END) OVER () AS BIGINT)
-         AS first_users,
-       round(CAST(n AS DOUBLE)
-             / max(CASE WHEN step = 1 THEN n END) OVER (), 6) AS conv_first
-FROM f
-"""
-
-
-@register("q_funnel_conversion", _FUNNEL_SQL)
-def q_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ordered funnel conversion (signup -> click -> purchase) with the
-    STRICT temporal-order semantics real funnel engines use: a user counts
-    at step k only if their earliest step-k event happens strictly AFTER
-    their earliest qualifying step-(k-1) event (min-ts chaining, not mere
-    event presence — a purchase before first click does not convert).
-    Emits the 3-row step ledger with exact user counts and step-over-step
-    / from-first conversion rationals.
-
-    Scale plan: each step is one filtered scan + an equi-join on user_id
-    against the previous (already user-deduped, strictly smaller) step
-    frame — broadcastable in practice, hash-co-located otherwise; no
-    windows over the fact table, no all-event materialization per user.
-    The lag/max windows run on the 3-row step frame."""
-    ev = load(spark, sf_dir, "events")
-    s1 = (
-        ev.filter(F.col("event_type") == "signup")
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("t1"))
-    )
-    s2 = (
-        ev.filter(F.col("event_type") == "click")
-        .join(s1, "user_id")
-        .filter(F.col("ts") > F.col("t1"))
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("t2"))
-    )
-    s3 = (
-        ev.filter(F.col("event_type") == "purchase")
-        .join(s2, "user_id")
-        .filter(F.col("ts") > F.col("t2"))
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("t3"))
-    )
-    f = (
-        s1.agg(F.lit(1).alias("step"), F.lit("signup").alias("step_name"),
-               F.count(F.lit(1)).alias("n"))
-        .unionAll(
-            s2.agg(F.lit(2).alias("step"), F.lit("click").alias("step_name"),
-                   F.count(F.lit(1)).alias("n"))
-        )
-        .unionAll(
-            s3.agg(F.lit(3).alias("step"),
-                   F.lit("purchase").alias("step_name"),
-                   F.count(F.lit(1)).alias("n"))
-        )
-    )
-    w = Window.orderBy("step")
-    wall = Window.partitionBy()
-    prev = F.coalesce(F.lag("n").over(w), F.col("n"))
-    first = F.max(F.when(F.col("step") == 1, F.col("n"))).over(wall)
-    return f.select(
-        F.col("step").cast("int").alias("step"),
-        "step_name",
-        F.col("n").cast("bigint").alias("n_users"),
-        prev.cast("bigint").alias("prev_users"),
-        F.round(F.col("n").cast("double") / prev, 6).alias("conv_prev"),
-        first.cast("bigint").alias("first_users"),
-        F.round(F.col("n").cast("double") / first, 6).alias("conv_first"),
-    )
-
-
-_RETENTION_SQL = """
-WITH u AS (
-  SELECT user_id, min(CAST(ts AS DATE)) AS d0 FROM events GROUP BY 1
-),
-act AS (
-  SELECT DISTINCT e.user_id, u.d0,
-         CAST((date_diff('day', u.d0, CAST(e.ts AS DATE))
-               - (date_diff('day', u.d0, CAST(e.ts AS DATE)) % 7)) / 7
-              AS INT) AS wk
-  FROM events e JOIN u ON e.user_id = u.user_id
-),
-cs AS (SELECT d0, count(*) AS cohort_n FROM u GROUP BY 1),
-r AS (SELECT d0, wk, count(*) AS n_active FROM act GROUP BY 1, 2),
-mw AS (SELECT max(wk) AS m FROM act),
-spine AS (
-  SELECT cs.d0, cs.cohort_n, CAST(g.x AS INT) AS wk
-  FROM cs, mw, unnest(range(CAST(mw.m + 1 AS BIGINT))) AS g(x)
-)
-SELECT CAST(s.d0 AS VARCHAR) AS cohort_day, s.wk AS week_offset,
-       CAST(s.cohort_n AS BIGINT) AS cohort_users,
-       CAST(coalesce(r.n_active, 0) AS BIGINT) AS active_users,
-       round(CAST(coalesce(r.n_active, 0) AS DOUBLE) / s.cohort_n, 6)
-         AS retention
-FROM spine s LEFT JOIN r ON s.d0 = r.d0 AND s.wk = r.wk
-"""
-
-
-@register("q_retention_cohorts", _RETENTION_SQL)
-def q_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Classic retention cohort matrix: users cohorted by first-activity
-    day, activity bucketed into 7-day offsets from EACH USER'S OWN day-0
-    (not calendar weeks — the unbiased form that doesn't penalize users
-    who sign up late in a week), zero-filled over the full cohort x offset
-    grid so silent cohorts are visible rows, with exact active/cohort-size
-    rationals.
-
-    Scale plan: two map-side-combined groupBys over the fact table (user
-    day-0, then distinct user-week activity) and an equi-join on user_id;
-    the zero-fill spine is |cohorts| x |offsets| — dimension-sized, built
-    from two tiny frames. Day-0 per user is the only per-user state, no
-    windows over raw events."""
-    ev = load(spark, sf_dir, "events")
-    u = ev.groupBy("user_id").agg(F.min(F.col("ts").cast("date")).alias("d0"))
-    dd = F.datediff(F.col("ts").cast("date"), F.col("d0"))
-    act = (
-        ev.join(u, "user_id")
-        .select(
-            "user_id",
-            "d0",
-            ((dd - dd % 7) / 7).cast("int").alias("wk"),
-        )
-        .distinct()
-    )
-    cs = u.groupBy("d0").agg(F.count(F.lit(1)).alias("cohort_n"))
-    r = act.groupBy("d0", "wk").agg(F.count(F.lit(1)).alias("n_active"))
-    mw = act.agg(F.max("wk").alias("m"))
-    spine = cs.crossJoin(mw).select(
-        "d0",
-        "cohort_n",
-        F.explode(F.sequence(F.lit(0), F.col("m"))).alias("wk"),
-    )
-    out = spine.join(r, ["d0", "wk"], "left")
-    na = F.coalesce(F.col("n_active"), F.lit(0))
-    return out.select(
-        F.col("d0").cast("string").alias("cohort_day"),
-        F.col("wk").cast("int").alias("week_offset"),
-        F.col("cohort_n").cast("bigint").alias("cohort_users"),
-        na.cast("bigint").alias("active_users"),
-        F.round(na.cast("double") / F.col("cohort_n"), 6).alias("retention"),
-    )
-
-
-_CHISQ_SQL = """
-WITH o AS (
-  SELECT source, lang, count(*) AS n FROM documents GROUP BY 1, 2
-),
-srcs AS (SELECT source, sum(n) AS r FROM o GROUP BY 1),
-langs AS (SELECT lang, sum(n) AS c FROM o GROUP BY 1),
-tot AS (
-  SELECT (SELECT sum(n) FROM o) AS nn,
-         (SELECT count(*) FROM srcs) AS nr,
-         (SELECT count(*) FROM langs) AS nc
-),
-cell AS (
-  SELECT s.source, l.lang, s.r, l.c, coalesce(o.n, 0) AS obs
-  FROM srcs s CROSS JOIN langs l
-  LEFT JOIN o ON o.source = s.source AND o.lang = l.lang
-),
-t AS (
-  SELECT cell.*, tot.nn, tot.nr, tot.nc,
-         (nn * obs - r * c) * (nn * obs - r * c) AS num,
-         nn * r * c AS den
-  FROM cell, tot
-),
-w AS (
-  SELECT t.*, sum(CAST(num AS DOUBLE) / den) OVER () AS chi2 FROM t
-)
-SELECT source, lang, CAST(obs AS BIGINT) AS obs,
-       CAST(r AS BIGINT) AS row_total, CAST(c AS BIGINT) AS col_total,
-       CAST(num AS BIGINT) AS chisq_num, CAST(den AS BIGINT) AS chisq_den,
-       round(CAST(num AS DOUBLE) / den, 6) AS cell_term,
-       round(chi2, 6) AS chi2,
-       round(sqrt(chi2 / (nn * least(nr - 1, nc - 1))), 6) AS cramers_v
-FROM w
-"""
-
-
-@register("q_chisq_independence", _CHISQ_SQL)
-def q_chisq_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Chi-square independence audit of the source x lang contingency
-    table (is language mix independent of crawl source?) with Cramér's V
-    effect size. Per-cell sufficient statistics are EXACT BIGINTs via the
-    cross-multiplied identity (obs-exp)^2/exp = (N*obs - r*c)^2 / (N*r*c)
-    — no float expected-counts; the zero-filled full grid means empty
-    cells (a source missing a language entirely) contribute their full
-    r*c/N expectation to the statistic, exactly the signal a biased
-    crawl shows. chi2 / cramers_v are rounded conveniences (sums of ~100
-    exact rationals; value >> 6dp rounding noise).
-
-    Scale plan: one map-side-combined (source, lang) count; everything
-    downstream runs on dimension-sized frames (|sources| x |langs| grid).
-    The 1-row totals frame rides a broadcast scalar-carry crossJoin
-    (whitelisted)."""
-    docs = load_docs(spark, sf_dir)
-    o = docs.groupBy("source", "lang").agg(F.count(F.lit(1)).alias("n"))
-    srcs = o.groupBy("source").agg(F.sum("n").alias("r"))
-    langs = o.groupBy("lang").agg(F.sum("n").alias("c"))
-    tot = o.agg(
-        F.sum("n").alias("nn"),
-        F.countDistinct("source").alias("nr"),
-        F.countDistinct("lang").alias("nc"),
-    )
-    cell = (
-        srcs.crossJoin(langs)
-        .join(o, ["source", "lang"], "left")
-        .select(
-            "source", "lang", "r", "c",
-            F.coalesce(F.col("n"), F.lit(0)).alias("obs"),
-        )
-    )
-    t = cell.crossJoin(tot).select(
-        "*",
-        ((F.col("nn") * F.col("obs") - F.col("r") * F.col("c"))
-         * (F.col("nn") * F.col("obs") - F.col("r") * F.col("c"))).alias("num"),
-        (F.col("nn") * F.col("r") * F.col("c")).alias("den"),
-    )
-    chi2 = F.sum(F.col("num").cast("double") / F.col("den")).over(
-        Window.partitionBy()
-    )
-    w = t.withColumn("chi2", chi2)
-    return w.select(
-        "source",
-        "lang",
-        F.col("obs").cast("bigint").alias("obs"),
-        F.col("r").cast("bigint").alias("row_total"),
-        F.col("c").cast("bigint").alias("col_total"),
-        F.col("num").cast("bigint").alias("chisq_num"),
-        F.col("den").cast("bigint").alias("chisq_den"),
-        F.round(F.col("num").cast("double") / F.col("den"), 6).alias("cell_term"),
-        F.round(F.col("chi2"), 6).alias("chi2"),
-        F.round(
-            F.sqrt(
-                F.col("chi2")
-                / (F.col("nn") * F.least(F.col("nr") - 1, F.col("nc") - 1))
-            ),
-            6,
-        ).alias("cramers_v"),
-    )
-
-
-_MANN_KENDALL_SQL = """
-WITH daily AS (
-  SELECT CAST(ts AS DATE) AS day, CAST(count(*) AS BIGINT) AS x
-  FROM events GROUP BY 1
-),
-b AS (SELECT min(day) AS dmin, max(day) AS dmax FROM daily),
-spine AS (
-  SELECT CAST(g.gs AS DATE) AS day
-  FROM b, unnest(generate_series(b.dmin, b.dmax, INTERVAL 1 DAY)) AS g(gs)
-),
-dense AS (
-  SELECT row_number() OVER (ORDER BY s.day) AS k, coalesce(d.x, 0) AS x
-  FROM spine s LEFT JOIN daily d USING (day)
-),
-pairs AS (
-  SELECT a.k AS ka, b.k AS kb,
-         CASE WHEN b.x > a.x THEN 1 WHEN b.x < a.x THEN -1 ELSE 0 END AS sg,
-         (b.x - a.x) * 1000 AS snum, b.k - a.k AS sden
-  FROM dense a JOIN dense b ON a.k < b.k
-),
-sl AS (
-  SELECT sg,
-         CAST((snum - ((snum % sden) + sden) % sden) // sden AS BIGINT)
-           AS slope_milli,
-         ka, kb,
-         count(*) OVER () AS n_pairs,
-         sum(sg) OVER () AS s_stat,
-         row_number() OVER (ORDER BY
-           (snum - ((snum % sden) + sden) % sden) // sden, ka, kb) AS pr
-  FROM pairs
-),
-nd AS (SELECT count(*) AS n_days FROM dense),
-tie AS (
-  SELECT coalesce(sum(t * (t - 1) * (2 * t + 5)), 0) AS tie_term
-  FROM (SELECT count(*) AS t FROM dense GROUP BY x HAVING count(*) > 1)
-)
-SELECT CAST(nd.n_days AS BIGINT) AS n_days,
-       CAST(sl.n_pairs AS BIGINT) AS n_pairs,
-       CAST(sl.s_stat AS BIGINT) AS s_stat,
-       CAST(nd.n_days * (nd.n_days - 1) * (2 * nd.n_days + 5)
-            - tie.tie_term AS BIGINT) AS var18,
-       CAST(sl.slope_milli AS BIGINT) AS ts_slope_milli,
-       round(CAST(sl.slope_milli AS DOUBLE) / 1000, 6) AS ts_slope
-FROM sl, nd, tie
-WHERE sl.pr = (sl.n_pairs + 1) // 2
-"""
-
-
-@register("q_mann_kendall", _MANN_KENDALL_SQL)
-def q_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mann-Kendall trend test + Theil-Sen slope over the daily event
-    volume (zero-filled day grid): S = sum of pairwise signs (exact
-    integer), tie-corrected variance as the exact integer 18*Var(S) =
-    n(n-1)(2n+5) - sum t(t-1)(2t+5), and the Theil-Sen slope as the LOWER
-    MEDIAN of all pairwise slopes in exact milli-units per day — each
-    slope floor((xj-xi)*1000 / (kj-ki)) with the engine-stable
-    ((a%b)+b)%b floor-mod (Spark's and DuckDB's % both take the
-    dividend's sign), so the median is selected from an integer total
-    order with (ka, kb) tie pinning. The nonparametric trend primitive —
-    robust to outliers that wreck OLS on bursty volumes.
-
-    Scale plan: the pair join is over the DAY GRID (|days|^2 — a
-    dimension squared, ~10^5 rows for a year; never the corpus); the raw
-    fact table contributes one map-side-combined daily rollup. The 1-row
-    n_days / tie-term frames ride whitelisted scalar-carry crossJoins."""
-    ev = load(spark, sf_dir, "events")
-    daily = ev.groupBy(F.col("ts").cast("date").alias("day")).agg(
-        F.count(F.lit(1)).cast("bigint").alias("x")
-    )
-    b = daily.agg(F.min("day").alias("dmin"), F.max("day").alias("dmax"))
-    spine = b.select(
-        F.explode(F.sequence("dmin", "dmax", F.expr("interval 1 day"))).alias("day")
-    )
-    dense = (
-        spine.join(daily, "day", "left")
-        .select(
-            F.row_number().over(Window.orderBy("day")).alias("k"),
-            F.coalesce("x", F.lit(0)).cast("bigint").alias("x"),
-        )
-    )
-    a, c = dense.alias("a"), dense.alias("b")
-    pairs = a.join(c, F.col("a.k") < F.col("b.k")).select(
-        F.col("a.k").alias("ka"),
-        F.col("b.k").alias("kb"),
-        F.when(F.col("b.x") > F.col("a.x"), 1)
-        .when(F.col("b.x") < F.col("a.x"), -1)
-        .otherwise(0)
-        .alias("sg"),
-        ((F.col("b.x") - F.col("a.x")) * 1000).alias("snum"),
-        (F.col("b.k") - F.col("a.k")).alias("sden"),
-    )
-    fmod = ((F.col("snum") % F.col("sden")) + F.col("sden")) % F.col("sden")
-    slope = ((F.col("snum") - fmod) / F.col("sden")).cast("bigint")
-    wall = Window.partitionBy()
-    sl = pairs.select(
-        "sg",
-        slope.alias("slope_milli"),
-        "ka",
-        "kb",
-        F.count(F.lit(1)).over(wall).alias("n_pairs"),
-        F.sum("sg").over(wall).alias("s_stat"),
-        F.row_number()
-        .over(Window.orderBy(slope.asc(), F.asc("ka"), F.asc("kb")))
-        .alias("pr"),
-    )
-    nd = dense.agg(F.count(F.lit(1)).alias("n_days"))
-    tie = (
-        dense.groupBy("x")
-        .agg(F.count(F.lit(1)).alias("t"))
-        .filter(F.col("t") > 1)
-        .agg(
-            F.coalesce(
-                F.sum(F.col("t") * (F.col("t") - 1) * (2 * F.col("t") + 5)),
-                F.lit(0),
-            ).alias("tie_term")
-        )
-    )
-    med = sl.filter(
-        F.col("pr") == F.floor((F.col("n_pairs") + 1) / 2)
-    )
-    out = med.crossJoin(nd).crossJoin(tie)
-    return out.select(
-        F.col("n_days").cast("bigint").alias("n_days"),
-        F.col("n_pairs").cast("bigint").alias("n_pairs"),
-        F.col("s_stat").cast("bigint").alias("s_stat"),
-        (
-            F.col("n_days") * (F.col("n_days") - 1) * (2 * F.col("n_days") + 5)
-            - F.col("tie_term")
-        )
-        .cast("bigint")
-        .alias("var18"),
-        F.col("slope_milli").cast("bigint").alias("ts_slope_milli"),
-        F.round(F.col("slope_milli").cast("double") / 1000, 6).alias("ts_slope"),
-    )
-
-
-_EWMA_SQL = """
-WITH daily AS (
-  SELECT CAST(ts AS DATE) AS day, CAST(count(*) AS BIGINT) AS x
-  FROM events GROUP BY 1
-),
-b AS (SELECT min(day) AS dmin, max(day) AS dmax FROM daily),
-spine AS (
-  SELECT CAST(g.gs AS DATE) AS day
-  FROM b, unnest(generate_series(b.dmin, b.dmax, INTERVAL 1 DAY)) AS g(gs)
-),
-dense AS (
-  SELECT s.day, coalesce(d.x, 0) AS x
-  FROM spine s LEFT JOIN daily d USING (day)
-),
-off AS (SELECT CAST(t.i + 1 AS INT) AS o FROM unnest(range(16)) AS t(i)),
-j AS (
-  SELECT g.day, g.x,
-         (CAST(1 AS BIGINT) << (16 - off.o)) AS w, h.x AS hx
-  FROM dense g CROSS JOIN off
-  JOIN dense h ON h.day = g.day - off.o
-),
-agg AS (
-  SELECT day, x,
-         CAST(sum(w * hx) AS BIGINT) AS ewma_num,
-         CAST(sum(w) AS BIGINT) AS ewma_den
-  FROM j GROUP BY 1, 2
-)
-SELECT CAST(day AS VARCHAR) AS day, x,
-       ewma_num, ewma_den,
-       round(CAST(ewma_num AS DOUBLE) / ewma_den, 6) AS ewma,
-       (x * ewma_den > 2 * ewma_num) AS flag_high,
-       (2 * x * ewma_den < ewma_num) AS flag_low
-FROM agg
-"""
-
-
-@register("q_ewma_anomaly", _EWMA_SQL)
-def q_ewma_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EWMA volume-anomaly ledger over the daily event grid: each day's
-    baseline is the alpha=1/2 exponentially-weighted mean of the 16 PRIOR
-    days (weights 2^(16-o), an exact power-of-two ladder, so ewma_num /
-    ewma_den are exact BIGINTs — near the series start the denominator
-    self-normalizes over the available history). Anomaly flags are exact
-    cross-multiplied comparisons (x > 2*ewma / x < ewma/2) — zero float
-    surface in the decision; the rounded ewma column is convenience only.
-    The pointwise burst/outage detector complementing CUSUM (level shifts)
-    and KS (distribution drift).
-
-    Scale plan: the 16x fanout joins the DAY GRID against itself on an
-    equi-key (day - offset) — dimension-sized both sides; the fact table
-    contributes one map-side-combined rollup. First day emits no row (no
-    prior history, honest rather than a fabricated baseline). Production
-    partitions the same shape by tenant key."""
-    ev = load(spark, sf_dir, "events")
-    daily = ev.groupBy(F.col("ts").cast("date").alias("day")).agg(
-        F.count(F.lit(1)).cast("bigint").alias("x")
-    )
-    b = daily.agg(F.min("day").alias("dmin"), F.max("day").alias("dmax"))
-    spine = b.select(
-        F.explode(F.sequence("dmin", "dmax", F.expr("interval 1 day"))).alias("day")
-    )
-    dense = spine.join(daily, "day", "left").select(
-        "day", F.coalesce("x", F.lit(0)).cast("bigint").alias("x")
-    )
-    off = spark.range(16).select((F.col("id") + 1).cast("int").alias("o"))
-    g, h = dense.alias("g"), dense.alias("h")
-    j = (
-        g.crossJoin(off)
-        .join(h, F.col("h.day") == F.date_sub(F.col("g.day"), F.col("o")))
-        .select(
-            F.col("g.day").alias("day"),
-            F.col("g.x").alias("x"),
-            F.expr("shiftleft(CAST(1 AS BIGINT), 16 - o)").alias("w"),
-            F.col("h.x").alias("hx"),
-        )
-    )
-    agg = j.groupBy("day", "x").agg(
-        F.sum(F.col("w") * F.col("hx")).cast("bigint").alias("ewma_num"),
-        F.sum("w").cast("bigint").alias("ewma_den"),
-    )
-    return agg.select(
-        F.col("day").cast("string").alias("day"),
-        "x",
-        "ewma_num",
-        "ewma_den",
-        F.round(F.col("ewma_num").cast("double") / F.col("ewma_den"), 6).alias(
-            "ewma"
-        ),
-        (F.col("x") * F.col("ewma_den") > 2 * F.col("ewma_num")).alias(
-            "flag_high"
-        ),
-        (2 * F.col("x") * F.col("ewma_den") < F.col("ewma_num")).alias(
-            "flag_low"
-        ),
-    )
-
-
-# --------------------------------------------------------------------------
 # Round 4o: graph / text / layout — bipartite HITS, k-truss peel, longest
 # common token run over near-dup pairs, corpus BLEU between near-dup pairs,
 # and a Z-order vs linear file-layout pruning audit.
@@ -1131,349 +622,6 @@ def q_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.max("ub") - F.min("ub") + F.max("hb") - F.min("hb"))
         .cast("bigint")
         .alias("span_sum"),
-    )
-
-
-# --------------------------------------------------------------------------
-# Round 4q: experiment/eval statistics — one-way ANOVA across sources, a
-# seeded paired sign-flip permutation test, ordered 2-sequence support
-# mining, and a deterministic k-fold balance audit.
-# --------------------------------------------------------------------------
-
-_ANOVA_SQL = """
-WITH g AS (
-  SELECT source, CAST(count(*) AS BIGINT) AS n_g,
-         CAST(sum(n_chars) AS BIGINT) AS sum_g,
-         CAST(sum(n_chars * n_chars) AS BIGINT) AS sumsq_g
-  FROM documents GROUP BY 1
-),
-t AS (
-  SELECT g.*, sum(n_g) OVER () AS nn, sum(sum_g) OVER () AS tt,
-         sum(sumsq_g) OVER () AS ss, count(*) OVER () AS k
-  FROM g
-),
-w AS (
-  SELECT t.*,
-         sum(CAST(nn * sum_g - n_g * tt AS DOUBLE)
-             * (nn * sum_g - n_g * tt) / (CAST(nn AS DOUBLE) * nn * n_g))
-           OVER () AS ssb,
-         CAST(ss AS DOUBLE) - CAST(tt AS DOUBLE) * tt / nn AS sstot
-  FROM t
-)
-SELECT source, n_g, sum_g, sumsq_g,
-       CAST((nn * sum_g - n_g * tt) * (nn * sum_g - n_g * tt) AS BIGINT)
-         AS ssb_num,
-       CAST(nn * nn * n_g AS BIGINT) AS ssb_den,
-       round(ssb, 6) AS ss_between,
-       round(sstot - ssb, 6) AS ss_within,
-       round((ssb / (k - 1)) / ((sstot - ssb) / (nn - k)), 6) AS f_stat
-FROM w
-"""
-
-
-@register("q_anova_sources", _ANOVA_SQL)
-def q_anova_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One-way ANOVA of document length across crawl sources: per-source
-    sufficient statistics (n, sum, sum-of-squares — exact BIGINTs over the
-    integer n_chars) and the between/within decomposition via the
-    cross-multiplied identity SSB = sum_g (N*sum_g - n_g*T)^2 / (N^2 n_g),
-    with the F statistic as a rounded convenience. The is-my-corpus-
-    homogeneous gate before pooling sources into one training mix: a huge
-    F says per-source length norms differ enough that a single global
-    length filter is the wrong tool (use per-source thresholds).
-    ssb_num/ssb_den pin each source's contribution exactly.
-
-    Scale plan: one map-side-combined groupBy over the corpus; the
-    windowed rollups run on the |sources| frame. Identical shuffle shape
-    to the scatter/Gini ledgers."""
-    docs = load_docs(spark, sf_dir)
-    g = docs.groupBy("source").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_g"),
-        F.sum("n_chars").cast("bigint").alias("sum_g"),
-        F.sum(F.col("n_chars") * F.col("n_chars")).cast("bigint").alias("sumsq_g"),
-    )
-    wall = Window.partitionBy()
-    t = g.select(
-        "*",
-        F.sum("n_g").over(wall).alias("nn"),
-        F.sum("sum_g").over(wall).alias("tt"),
-        F.sum("sumsq_g").over(wall).alias("ss"),
-        F.count(F.lit(1)).over(wall).alias("k"),
-    )
-    dev = F.col("nn") * F.col("sum_g") - F.col("n_g") * F.col("tt")
-    ssb_term = (
-        dev.cast("double")
-        * dev
-        / (F.col("nn").cast("double") * F.col("nn") * F.col("n_g"))
-    )
-    w = t.select(
-        "*",
-        F.sum(ssb_term).over(wall).alias("ssb"),
-        (
-            F.col("ss").cast("double")
-            - F.col("tt").cast("double") * F.col("tt") / F.col("nn")
-        ).alias("sstot"),
-    )
-    return w.select(
-        "source",
-        "n_g",
-        "sum_g",
-        "sumsq_g",
-        (dev * dev).cast("bigint").alias("ssb_num"),
-        (F.col("nn") * F.col("nn") * F.col("n_g")).cast("bigint").alias("ssb_den"),
-        F.round(F.col("ssb"), 6).alias("ss_between"),
-        F.round(F.col("sstot") - F.col("ssb"), 6).alias("ss_within"),
-        F.round(
-            (F.col("ssb") / (F.col("k") - 1))
-            / ((F.col("sstot") - F.col("ssb")) / (F.col("nn") - F.col("k"))),
-            6,
-        ).alias("f_stat"),
-    )
-
-
-_PERM_B = 64
-
-_PERM_SQL = f"""
-WITH u AS (
-  SELECT user_id,
-         CAST(sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)
-              - sum(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END)
-              AS BIGINT) AS d
-  FROM events GROUP BY 1
-),
-obs AS (SELECT abs(sum(d)) AS t_obs FROM u),
-b AS (SELECT CAST(t.i AS INT) AS b FROM unnest(range({_PERM_B})) AS t(i)),
-fl AS (
-  SELECT b.b,
-         CASE WHEN (strpos('0123456789abcdef',
-                           substr(md5(b.b::VARCHAR || '#' || u.user_id::VARCHAR),
-                                  1, 1)) - 1) % 2 = 0
-              THEN u.d ELSE -u.d END AS sd
-  FROM u CROSS JOIN b
-),
-tb AS (SELECT b, CAST(abs(sum(sd)) AS BIGINT) AS t_b FROM fl GROUP BY 1)
-SELECT tb.b, tb.t_b, CAST(obs.t_obs AS BIGINT) AS t_obs,
-       (tb.t_b >= obs.t_obs) AS ge_obs,
-       CAST(1 + sum(CASE WHEN tb.t_b >= obs.t_obs THEN 1 ELSE 0 END)
-                OVER () AS BIGINT) AS p_num,
-       CAST({_PERM_B} + 1 AS BIGINT) AS p_den,
-       round(CAST(1 + sum(CASE WHEN tb.t_b >= obs.t_obs THEN 1 ELSE 0 END)
-                      OVER () AS DOUBLE) / ({_PERM_B} + 1), 6) AS p_value
-FROM tb, obs
-"""
-
-
-@register("q_permutation_test", _PERM_SQL)
-def q_permutation_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Paired sign-flip permutation test (the exact nonparametric paired
-    test, Fisher 1935) of H0 'users click as often as they view': per-user
-    paired difference d_u = clicks - views, {_PERM_B} seeded replicas flip
-    each user's sign by an md5(b#user) coin, T_b = |sum of flipped
-    diffs|, and the standard add-one permutation p-value
-    (1 + #{{T_b >= T_obs}}) / (B+1) — every quantity an exact integer, the
-    p-value a single rounded division. The deterministic-resample design
-    of q_poisson_bootstrap applied to hypothesis testing: any shard can
-    regenerate any replica's coins independently.
-
-    Scale plan: one map-side-combined per-user rollup, then a {_PERM_B}-row
-    broadcast fanout collapsed straight back to {_PERM_B} counters — one
-    corpus pass regardless of B; the windowed p-value runs on the
-    {_PERM_B}-row frame."""
-    ev = load(spark, sf_dir, "events")
-    u = ev.groupBy("user_id").agg(
-        (
-            F.sum(F.when(F.col("event_type") == "click", 1).otherwise(0))
-            - F.sum(F.when(F.col("event_type") == "view", 1).otherwise(0))
-        )
-        .cast("bigint")
-        .alias("d")
-    )
-    obs = u.agg(F.abs(F.sum("d")).alias("t_obs"))
-    b = spark.range(_PERM_B).select(F.col("id").cast("int").alias("b"))
-    coin = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.col("b").cast("string"),
-                        F.lit("#"),
-                        F.col("user_id").cast("string"),
-                    )
-                ),
-                1,
-                1,
-            ),
-            16,
-            10,
-        ).cast("int")
-        % 2
-    )
-    fl = u.crossJoin(F.broadcast(b)).select(
-        "b", F.when(coin == 0, F.col("d")).otherwise(-F.col("d")).alias("sd")
-    )
-    tb = fl.groupBy("b").agg(F.abs(F.sum("sd")).cast("bigint").alias("t_b"))
-    wall = Window.partitionBy()
-    out = tb.crossJoin(obs)
-    ge = F.sum(F.when(F.col("t_b") >= F.col("t_obs"), 1).otherwise(0)).over(wall)
-    return out.select(
-        "b",
-        "t_b",
-        F.col("t_obs").cast("bigint").alias("t_obs"),
-        (F.col("t_b") >= F.col("t_obs")).alias("ge_obs"),
-        (1 + ge).cast("bigint").alias("p_num"),
-        F.lit(_PERM_B + 1).cast("bigint").alias("p_den"),
-        F.round((1 + ge).cast("double") / (_PERM_B + 1), 6).alias("p_value"),
-    )
-
-
-_SEQ2_SQL = """
-WITH ut AS (
-  SELECT user_id, event_type AS t, min(ts) AS mn, max(ts) AS mx
-  FROM events GROUP BY 1, 2
-),
-tot AS (SELECT count(DISTINCT user_id) AS n_users FROM events),
-p AS (
-  SELECT a.t AS a, b.t AS b,
-         CAST(count(*) AS BIGINT) AS n_both,
-         CAST(sum(CASE WHEN a.mn < b.mx THEN 1 ELSE 0 END) AS BIGINT)
-           AS n_seq
-  FROM ut a JOIN ut b ON a.user_id = b.user_id AND a.t <> b.t
-  GROUP BY 1, 2
-),
-m AS (SELECT t, CAST(count(*) AS BIGINT) AS n_t FROM ut GROUP BY 1)
-SELECT p.a, p.b, p.n_both, p.n_seq,
-       ma.n_t AS n_a, mb.n_t AS n_b,
-       CAST(tot.n_users AS BIGINT) AS n_users,
-       round(CAST(p.n_seq AS DOUBLE) / tot.n_users, 6) AS support,
-       round(CAST(p.n_seq AS DOUBLE) / ma.n_t, 6) AS confidence,
-       round(CAST(p.n_seq AS DOUBLE) * tot.n_users
-             / (CAST(ma.n_t AS DOUBLE) * mb.n_t), 6) AS lift
-FROM p JOIN m ma ON ma.t = p.a JOIN m mb ON mb.t = p.b, tot
-"""
-
-
-@register("q_seq2_support", _SEQ2_SQL)
-def q_seq2_support(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ordered 2-sequence support mining (the GSP/PrefixSpan length-2
-    core): for every ordered event-type pair (a, b), the number of users
-    with SOME a-event strictly before SOME b-event — computed from
-    per-(user, type) min/max timestamps alone via the exists identity
-    min_ts(a) < max_ts(b), so the fact table is never self-joined at the
-    event level. Emits exact support / confidence / lift sufficient
-    statistics against the type marginals — the sequential complement to
-    q_assoc_rules (unordered co-occurrence) and q_funnel_conversion (one
-    fixed path).
-
-    Scale plan: one map-side-combined (user, type) rollup; the pair join
-    is per-user over the TYPE dimension (|types|^2 rows per user, types
-    ~5); marginals and the user total are dimension-sized broadcast
-    joins."""
-    ev = load(spark, sf_dir, "events")
-    ut = ev.groupBy("user_id", F.col("event_type").alias("t")).agg(
-        F.min("ts").alias("mn"), F.max("ts").alias("mx")
-    )
-    tot = ev.agg(F.countDistinct("user_id").alias("n_users"))
-    a, c = ut.alias("a"), ut.alias("b")
-    p = (
-        a.join(
-            c,
-            (F.col("a.user_id") == F.col("b.user_id"))
-            & (F.col("a.t") != F.col("b.t")),
-        )
-        .groupBy(F.col("a.t").alias("a"), F.col("b.t").alias("b"))
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n_both"),
-            F.sum(F.when(F.col("a.mn") < F.col("b.mx"), 1).otherwise(0))
-            .cast("bigint")
-            .alias("n_seq"),
-        )
-    )
-    m = ut.groupBy("t").agg(F.count(F.lit(1)).cast("bigint").alias("n_t"))
-    ma = m.select(F.col("t").alias("a"), F.col("n_t").alias("n_a"))
-    mb = m.select(F.col("t").alias("b"), F.col("n_t").alias("n_b"))
-    out = p.join(ma, "a").join(mb, "b").crossJoin(tot)
-    return out.select(
-        "a",
-        "b",
-        "n_both",
-        "n_seq",
-        "n_a",
-        "n_b",
-        F.col("n_users").cast("bigint").alias("n_users"),
-        F.round(F.col("n_seq").cast("double") / F.col("n_users"), 6).alias(
-            "support"
-        ),
-        F.round(F.col("n_seq").cast("double") / F.col("n_a"), 6).alias(
-            "confidence"
-        ),
-        F.round(
-            F.col("n_seq").cast("double")
-            * F.col("n_users")
-            / (F.col("n_a").cast("double") * F.col("n_b")),
-            6,
-        ).alias("lift"),
-    )
-
-
-_KFOLD_SQL = """
-WITH f AS (
-  SELECT lang,
-         CAST((strpos('0123456789abcdef',
-                      substr(md5(doc_id::VARCHAR), 1, 1)) - 1) % 5 AS INT)
-           AS fold
-  FROM documents
-),
-lt AS (SELECT lang, CAST(count(*) AS BIGINT) AS n_lang FROM f GROUP BY 1),
-grid AS (
-  SELECT lt.lang, lt.n_lang, CAST(t.i AS INT) AS fold
-  FROM lt, unnest(range(5)) AS t(i)
-),
-c AS (SELECT lang, fold, CAST(count(*) AS BIGINT) AS n FROM f GROUP BY 1, 2)
-SELECT g.lang, g.fold, g.n_lang,
-       CAST(coalesce(c.n, 0) AS BIGINT) AS n,
-       CAST(abs(5 * coalesce(c.n, 0) - g.n_lang) AS BIGINT) AS dev_num,
-       round(CAST(coalesce(c.n, 0) AS DOUBLE) / g.n_lang, 6) AS frac
-FROM grid g LEFT JOIN c ON c.lang = g.lang AND c.fold = g.fold
-"""
-
-
-@register("q_kfold_assignment", _KFOLD_SQL)
-def q_kfold_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic 5-fold cross-validation assignment audit: folds come
-    from md5(doc_id) — reproducible on any shard with zero coordination,
-    the same RNG-free discipline as the sampling family — and the audit
-    reports the per-(lang, fold) cell count against its stratum share
-    with the exact cross-multiplied deviation |5n - n_lang| (zero-filled
-    grid, so an empty (lang, fold) cell is a visible row, not a missing
-    one). Hash folds are NOT stratified by construction; this table is
-    how a pipeline decides whether the imbalance is tolerable or a
-    per-stratum re-split is needed before eval numbers are trusted.
-
-    Scale plan: stateless per-row fold assignment + one map-side-combined
-    groupBy; the grid join runs on |langs| x 5 dimension frames."""
-    docs = load_docs(spark, sf_dir)
-    f = docs.select(
-        "lang",
-        (
-            F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 1), 16, 10)
-            .cast("int")
-            % 5
-        ).alias("fold"),
-    )
-    lt = f.groupBy("lang").agg(F.count(F.lit(1)).cast("bigint").alias("n_lang"))
-    grid = lt.crossJoin(
-        spark.range(5).select(F.col("id").cast("int").alias("fold"))
-    )
-    c = f.groupBy("lang", "fold").agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-    out = grid.join(c, ["lang", "fold"], "left")
-    n = F.coalesce(F.col("n"), F.lit(0))
-    return out.select(
-        "lang",
-        "fold",
-        "n_lang",
-        n.cast("bigint").alias("n"),
-        F.abs(5 * n - F.col("n_lang")).cast("bigint").alias("dev_num"),
-        F.round(n.cast("double") / F.col("n_lang"), 6).alias("frac"),
     )
 
 
@@ -2465,1293 +1613,6 @@ def q_best_of_n(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Round 4p: marketing-attribution trio — the revenue-credit ledgers every
-# product-analytics stack runs over its event stream. Three credit models
-# over the same (purchase x preceding-touch) frame: positional (first/last
-# touch), game-theoretic (exact 3-player Shapley over coalition conversion
-# counts), and the per-user RFM segmentation that feeds campaign targeting.
-# --------------------------------------------------------------------------
-
-_TOUCH_ATTR_SQL = """
-WITH p AS (
-  SELECT event_id AS p_id, user_id, ts AS p_ts,
-         CAST(round(value * 100) AS BIGINT) AS p_cents
-  FROM events WHERE event_type = 'purchase'
-),
-t AS (
-  SELECT user_id, ts AS t_ts, event_id AS t_id, event_type AS t_ch
-  FROM events WHERE event_type IN ('click', 'view', 'signup')
-),
-pt AS (
-  SELECT p.p_id, p.p_cents, t.t_ts, t.t_id, t.t_ch
-  FROM p LEFT JOIN t
-    ON p.user_id = t.user_id AND t.t_ts < p.p_ts
-   AND t.t_ts >= p.p_ts - INTERVAL 7 DAY
-),
-rn AS (
-  SELECT p_id, p_cents, t_ch,
-         row_number() OVER (PARTITION BY p_id
-                            ORDER BY t_ts DESC, t_id DESC) AS rn_l,
-         row_number() OVER (PARTITION BY p_id
-                            ORDER BY t_ts ASC, t_id ASC) AS rn_f
-  FROM pt
-),
-lastt AS (
-  SELECT coalesce(t_ch, 'direct') AS channel,
-         CAST(count(*) AS BIGINT) AS n_last,
-         CAST(sum(p_cents) AS BIGINT) AS cents_last
-  FROM rn WHERE rn_l = 1 GROUP BY 1
-),
-firstt AS (
-  SELECT coalesce(t_ch, 'direct') AS channel,
-         CAST(count(*) AS BIGINT) AS n_first,
-         CAST(sum(p_cents) AS BIGINT) AS cents_first
-  FROM rn WHERE rn_f = 1 GROUP BY 1
-)
-SELECT coalesce(l.channel, f.channel) AS channel,
-       CAST(coalesce(l.n_last, 0) AS BIGINT) AS n_last,
-       CAST(coalesce(l.cents_last, 0) AS BIGINT) AS cents_last,
-       CAST(coalesce(f.n_first, 0) AS BIGINT) AS n_first,
-       CAST(coalesce(f.cents_first, 0) AS BIGINT) AS cents_first,
-       round(CAST(coalesce(l.cents_last, 0) AS DOUBLE)
-             / sum(coalesce(l.cents_last, 0)) OVER (), 6) AS share_last
-FROM lastt l FULL OUTER JOIN firstt f ON l.channel = f.channel
-"""
-
-
-@register("q_touch_attribution", _TOUCH_ATTR_SQL)
-def q_touch_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """First-touch / last-touch revenue attribution: every purchase is
-    credited to the latest (and, in the twin column set, the earliest)
-    click/view/signup by the same user inside a 7-day lookback window;
-    purchases with no preceding touch fall to the 'direct' channel. Pure
-    timestamp comparisons (no epoch extraction), exact integer cents, ties
-    pinned by event_id — the positional-credit half of the attribution
-    trio (q_shapley_attribution is the game-theoretic half).
-
-    Scale plan: purchases x touches is a per-user equi-join (the 7-day
-    band is a post-join filter Spark pushes into the join condition);
-    fan-in is bounded by per-user activity, the classic user-partitioned
-    shape — salt hot users via the q_skew_audit factor if the stream has
-    bot traffic. Both picks come from one window pass over the pair frame;
-    the final 4-row channel ledger is a map-side-combined rollup."""
-    ev = load(spark, sf_dir, "events")
-    cents = F.round(F.col("value") * 100).cast("bigint")
-    p = ev.filter(F.col("event_type") == "purchase").select(
-        F.col("event_id").alias("p_id"),
-        F.col("user_id").alias("p_user"),
-        F.col("ts").alias("p_ts"),
-        cents.alias("p_cents"),
-    )
-    t = ev.filter(F.col("event_type").isin("click", "view", "signup")).select(
-        F.col("user_id").alias("t_user"),
-        F.col("ts").alias("t_ts"),
-        F.col("event_id").alias("t_id"),
-        F.col("event_type").alias("t_ch"),
-    )
-    pt = p.join(
-        t,
-        (p["p_user"] == t["t_user"])
-        & (t["t_ts"] < p["p_ts"])
-        & (t["t_ts"] >= p["p_ts"] - F.expr("INTERVAL 7 DAYS")),
-        "left",
-    )
-    w_l = Window.partitionBy("p_id").orderBy(F.desc("t_ts"), F.desc("t_id"))
-    w_f = Window.partitionBy("p_id").orderBy(F.asc("t_ts"), F.asc("t_id"))
-    rn = pt.select(
-        "p_id",
-        "p_cents",
-        "t_ch",
-        F.row_number().over(w_l).alias("rn_l"),
-        F.row_number().over(w_f).alias("rn_f"),
-    )
-    lastt = (
-        rn.filter(F.col("rn_l") == 1)
-        .groupBy(F.coalesce("t_ch", F.lit("direct")).alias("channel"))
-        .agg(
-            F.count("*").cast("bigint").alias("n_last"),
-            F.sum("p_cents").cast("bigint").alias("cents_last"),
-        )
-    )
-    firstt = (
-        rn.filter(F.col("rn_f") == 1)
-        .groupBy(F.coalesce("t_ch", F.lit("direct")).alias("channel"))
-        .agg(
-            F.count("*").cast("bigint").alias("n_first"),
-            F.sum("p_cents").cast("bigint").alias("cents_first"),
-        )
-    )
-    both = lastt.join(firstt, "channel", "full_outer").select(
-        "channel",
-        F.coalesce("n_last", F.lit(0)).cast("bigint").alias("n_last"),
-        F.coalesce("cents_last", F.lit(0)).cast("bigint").alias("cents_last"),
-        F.coalesce("n_first", F.lit(0)).cast("bigint").alias("n_first"),
-        F.coalesce("cents_first", F.lit(0))
-        .cast("bigint")
-        .alias("cents_first"),
-    )
-    w_all = Window.partitionBy(F.lit(1))
-    return both.withColumn(
-        "share_last",
-        F.round(
-            F.col("cents_last")
-            / F.sum("cents_last").over(w_all).cast("double"),
-            6,
-        ),
-    )
-
-
-_SHAPLEY_SQL = """
-WITH p AS (
-  SELECT event_id AS p_id, user_id, ts AS p_ts FROM events
-  WHERE event_type = 'purchase'
-),
-t AS (
-  SELECT user_id, ts AS t_ts, event_type AS t_ch FROM events
-  WHERE event_type IN ('click', 'view', 'signup')
-),
-masks AS (
-  SELECT p.p_id,
-         coalesce(max(CASE WHEN t.t_ch = 'click' THEN 1 END), 0)
-         + coalesce(max(CASE WHEN t.t_ch = 'view' THEN 2 END), 0)
-         + coalesce(max(CASE WHEN t.t_ch = 'signup' THEN 4 END), 0) AS mask
-  FROM p LEFT JOIN t
-    ON p.user_id = t.user_id AND t.t_ts < p.p_ts
-   AND t.t_ts >= p.p_ts - INTERVAL 7 DAY
-  GROUP BY 1
-),
-mh AS (SELECT mask, CAST(count(*) AS BIGINT) AS n_conv FROM masks GROUP BY 1),
-coal AS (
-  SELECT s.s, CAST(coalesce(sum(mh.n_conv), 0) AS BIGINT) AS v
-  FROM (VALUES (0),(1),(2),(3),(4),(5),(6),(7)) s(s)
-  LEFT JOIN mh ON (mh.mask | s.s) = s.s
-  GROUP BY 1
-),
-vw AS (
-  SELECT max(CASE WHEN s = 0 THEN v END) AS v0,
-         max(CASE WHEN s = 1 THEN v END) AS v1,
-         max(CASE WHEN s = 2 THEN v END) AS v2,
-         max(CASE WHEN s = 3 THEN v END) AS v3,
-         max(CASE WHEN s = 4 THEN v END) AS v4,
-         max(CASE WHEN s = 5 THEN v END) AS v5,
-         max(CASE WHEN s = 6 THEN v END) AS v6,
-         max(CASE WHEN s = 7 THEN v END) AS v7
-  FROM coal
-)
-SELECT c.channel,
-       CAST(CASE c.bit
-         WHEN 1 THEN 2*(v1 - v0) + (v3 - v2) + (v5 - v4) + 2*(v7 - v6)
-         WHEN 2 THEN 2*(v2 - v0) + (v3 - v1) + (v6 - v4) + 2*(v7 - v5)
-         ELSE        2*(v4 - v0) + (v5 - v1) + (v6 - v2) + 2*(v7 - v3)
-       END AS BIGINT) AS shap6_num,
-       CAST(CASE c.bit WHEN 1 THEN v1 WHEN 2 THEN v2 ELSE v4 END
-            AS BIGINT) AS v_solo,
-       CAST(v0 AS BIGINT) AS v_none,
-       CAST(v7 AS BIGINT) AS v_grand,
-       CAST(6 * (v7 - v0) AS BIGINT) AS eff_den,
-       round(CAST(CASE c.bit
-         WHEN 1 THEN 2*(v1 - v0) + (v3 - v2) + (v5 - v4) + 2*(v7 - v6)
-         WHEN 2 THEN 2*(v2 - v0) + (v3 - v1) + (v6 - v4) + 2*(v7 - v5)
-         ELSE        2*(v4 - v0) + (v5 - v1) + (v6 - v2) + 2*(v7 - v3)
-       END AS DOUBLE) / (6 * (v7 - v0)), 6) AS shap_share
-FROM (VALUES ('click', 1), ('view', 2), ('signup', 4)) c(channel, bit)
-CROSS JOIN vw
-"""
-
-
-@register("q_shapley_attribution", _SHAPLEY_SQL)
-def q_shapley_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact 3-player Shapley-value attribution (the data-driven MTA model
-    of Zhao et al. 2018, "Shapley value methods for attribution modeling"):
-    each purchase contributes its touched-channel set as a 3-bit mask, the
-    coalition game is v(S) = number of conversions reachable using only
-    channels in S (mask subset-of S — monotone by construction, v(empty) =
-    no-touch conversions), and each channel's Shapley value is the exact
-    permutation-weighted marginal sum. With 3 players the 3! weights clear
-    to integers at x6: shap6 = 2*(v(i)-v(0)) + sum_j (v(ij)-v(j)) +
-    2*(v(N)-v(N\\i)). Efficiency — sum(shap6) == 6*(v(N)-v(empty)) — is a
-    replica-test invariant; eff_den ships in the row so the check is
-    hash-visible.
-
-    Scale plan: the corpus-sized work is one user-partitioned purchase x
-    touch join collapsed to a per-purchase bit-or (map-side combinable);
-    everything after operates on the <=8-row mask histogram x 8-row
-    coalition spine — driver-scale by construction, same dimension-spine
-    shape as q_fs_linkage's agreement patterns."""
-    ev = load(spark, sf_dir, "events")
-    p = ev.filter(F.col("event_type") == "purchase").select(
-        F.col("event_id").alias("p_id"),
-        F.col("user_id").alias("p_user"),
-        F.col("ts").alias("p_ts"),
-    )
-    t = ev.filter(F.col("event_type").isin("click", "view", "signup")).select(
-        F.col("user_id").alias("t_user"),
-        F.col("ts").alias("t_ts"),
-        F.col("event_type").alias("t_ch"),
-    )
-    masks = (
-        p.join(
-            t,
-            (p["p_user"] == t["t_user"])
-            & (t["t_ts"] < p["p_ts"])
-            & (t["t_ts"] >= p["p_ts"] - F.expr("INTERVAL 7 DAYS")),
-            "left",
-        )
-        .groupBy("p_id")
-        .agg(
-            (
-                F.coalesce(
-                    F.max(F.when(F.col("t_ch") == "click", 1)), F.lit(0)
-                )
-                + F.coalesce(
-                    F.max(F.when(F.col("t_ch") == "view", 2)), F.lit(0)
-                )
-                + F.coalesce(
-                    F.max(F.when(F.col("t_ch") == "signup", 4)), F.lit(0)
-                )
-            ).alias("mask")
-        )
-    )
-    mh = masks.groupBy("mask").agg(F.count("*").cast("bigint").alias("n_conv"))
-    spine = spark.range(8).select(F.col("id").cast("int").alias("s"))
-    coal = (
-        spine.join(
-            mh, F.expr("(mask | s) = s"), "left"
-        )
-        .groupBy("s")
-        .agg(F.coalesce(F.sum("n_conv"), F.lit(0)).cast("bigint").alias("v"))
-    )
-    vw = coal.agg(
-        *[
-            F.max(F.when(F.col("s") == k, F.col("v"))).alias(f"v{k}")
-            for k in range(8)
-        ]
-    )
-    ch = spark.createDataFrame(
-        [("click", 1), ("view", 2), ("signup", 4)], "channel string, bit int"
-    )
-    shap6 = (
-        F.when(
-            F.col("bit") == 1,
-            2 * (F.col("v1") - F.col("v0"))
-            + (F.col("v3") - F.col("v2"))
-            + (F.col("v5") - F.col("v4"))
-            + 2 * (F.col("v7") - F.col("v6")),
-        )
-        .when(
-            F.col("bit") == 2,
-            2 * (F.col("v2") - F.col("v0"))
-            + (F.col("v3") - F.col("v1"))
-            + (F.col("v6") - F.col("v4"))
-            + 2 * (F.col("v7") - F.col("v5")),
-        )
-        .otherwise(
-            2 * (F.col("v4") - F.col("v0"))
-            + (F.col("v5") - F.col("v1"))
-            + (F.col("v6") - F.col("v2"))
-            + 2 * (F.col("v7") - F.col("v3")),
-        )
-    )
-    v_solo = (
-        F.when(F.col("bit") == 1, F.col("v1"))
-        .when(F.col("bit") == 2, F.col("v2"))
-        .otherwise(F.col("v4"))
-    )
-    return ch.crossJoin(F.broadcast(vw)).select(
-        "channel",
-        shap6.cast("bigint").alias("shap6_num"),
-        v_solo.cast("bigint").alias("v_solo"),
-        F.col("v0").cast("bigint").alias("v_none"),
-        F.col("v7").cast("bigint").alias("v_grand"),
-        (6 * (F.col("v7") - F.col("v0"))).cast("bigint").alias("eff_den"),
-        F.round(
-            shap6.cast("double") / (6 * (F.col("v7") - F.col("v0"))), 6
-        ).alias("shap_share"),
-    )
-
-
-_RFM_SQL = """
-WITH pur AS (
-  SELECT user_id, ts, CAST(round(value * 100) AS BIGINT) AS cents
-  FROM events WHERE event_type = 'purchase'
-),
-u AS (
-  SELECT user_id,
-         CAST(max(date_trunc('day', ts)) AS DATE) AS last_d,
-         CAST(count(*) AS BIGINT) AS frequency,
-         CAST(sum(cents) AS BIGINT) AS monetary_cents
-  FROM pur GROUP BY 1
-),
-anch AS (
-  SELECT u.*, max(last_d) OVER () AS anchor_d,
-         CAST(count(*) OVER () AS BIGINT) AS n_u
-  FROM u
-),
-r AS (
-  SELECT user_id, frequency, monetary_cents, n_u,
-         CAST(date_diff('day', last_d, anchor_d) AS BIGINT) AS recency_days
-  FROM anch
-),
-s AS (
-  SELECT user_id, recency_days, frequency, monetary_cents,
-         5 - ((row_number() OVER (ORDER BY recency_days ASC, user_id ASC)
-               - 1) * 5) // n_u AS r_score,
-         5 - ((row_number() OVER (ORDER BY frequency DESC, user_id ASC)
-               - 1) * 5) // n_u AS f_score,
-         5 - ((row_number() OVER (ORDER BY monetary_cents DESC, user_id ASC)
-               - 1) * 5) // n_u AS m_score
-  FROM r
-)
-SELECT CAST(user_id AS BIGINT) AS user_id, recency_days, frequency,
-       monetary_cents,
-       CAST(r_score AS INT) AS r_score, CAST(f_score AS INT) AS f_score,
-       CAST(m_score AS INT) AS m_score,
-       CAST(r_score AS VARCHAR) || CAST(f_score AS VARCHAR)
-         || CAST(m_score AS VARCHAR) AS segment
-FROM s
-"""
-
-
-@register("q_rfm_segments", _RFM_SQL)
-def q_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RFM segmentation (recency / frequency / monetary), the classic
-    campaign-targeting ledger: per purchasing user, exact days since last
-    purchase (day-truncated dates — engine-stable, no epoch math), purchase
-    count, and lifetime cents; each axis scored 1..5 by the exact rank
-    formula 5 - ((rank-1)*5) div n (most-recent / highest gets 5), ties
-    pinned by user_id, concatenated into the '555'-style segment label.
-    The rank formula replaces ntile() so bucket edges are pure integer
-    arithmetic on both engines rather than engine tie-semantics.
-
-    Scale plan: one map-side-combined per-user rollup; the three global
-    rankings run over the USER frame, not events (10^8 rows at 10^12
-    events). At that scale the rank windows become 3 single-key sorts —
-    the documented production swap is 5 broadcast quantile cutoffs per
-    axis (computed once from the same exact frame) with bucket-by-cutoff,
-    which this formula reproduces exactly on unique-value axes."""
-    ev = load(spark, sf_dir, "events")
-    pur = ev.filter(F.col("event_type") == "purchase").select(
-        "user_id",
-        "ts",
-        F.round(F.col("value") * 100).cast("bigint").alias("cents"),
-    )
-    u = pur.groupBy("user_id").agg(
-        F.max(F.date_trunc("day", F.col("ts"))).cast("date").alias("last_d"),
-        F.count("*").cast("bigint").alias("frequency"),
-        F.sum("cents").cast("bigint").alias("monetary_cents"),
-    )
-    w_all = Window.partitionBy(F.lit(1))
-    r = u.select(
-        "user_id",
-        "frequency",
-        "monetary_cents",
-        F.count("*").over(w_all).cast("bigint").alias("n_u"),
-        F.datediff(F.max("last_d").over(w_all), F.col("last_d"))
-        .cast("bigint")
-        .alias("recency_days"),
-    )
-    w_r = Window.orderBy(F.asc("recency_days"), F.asc("user_id"))
-    w_f = Window.orderBy(F.desc("frequency"), F.asc("user_id"))
-    w_m = Window.orderBy(F.desc("monetary_cents"), F.asc("user_id"))
-    s = r.select(
-        "user_id",
-        "recency_days",
-        "frequency",
-        "monetary_cents",
-        (
-            5
-            - F.expr(
-                "CAST((row_number() OVER (ORDER BY recency_days ASC, "
-                "user_id ASC) - 1) * 5 AS BIGINT) div n_u"
-            )
-        ).cast("int").alias("r_score"),
-        (
-            5
-            - F.expr(
-                "CAST((row_number() OVER (ORDER BY frequency DESC, "
-                "user_id ASC) - 1) * 5 AS BIGINT) div n_u"
-            )
-        ).cast("int").alias("f_score"),
-        (
-            5
-            - F.expr(
-                "CAST((row_number() OVER (ORDER BY monetary_cents DESC, "
-                "user_id ASC) - 1) * 5 AS BIGINT) div n_u"
-            )
-        ).cast("int").alias("m_score"),
-    )
-    return s.select(
-        F.col("user_id").cast("bigint").alias("user_id"),
-        "recency_days",
-        "frequency",
-        "monetary_cents",
-        "r_score",
-        "f_score",
-        "m_score",
-        F.concat(
-            F.col("r_score").cast("string"),
-            F.col("f_score").cast("string"),
-            F.col("m_score").cast("string"),
-        ).alias("segment"),
-    )
-
-
-# --------------------------------------------------------------------------
-# Round 4q: LLM-eval / search-loop primitives — self-consistency majority
-# voting (Wang et al. 2022), successive halving (Jamieson & Talwalkar
-# 2016, the Hyperband inner loop), and offline policy evaluation by replay
-# matching (Li et al. WSDM 2011). All three are the deterministic-ledger
-# halves of loops a training stack runs constantly: sample-k-vote, tune-
-# under-budget, and evaluate-a-policy-from-logs-without-deploying-it.
-# --------------------------------------------------------------------------
-
-_MAJVOTE_SQL = """
-WITH d AS (
-  SELECT doc_id, source, CAST(n_chars % 4 AS INT) AS answer,
-         (row_number() OVER (PARTITION BY source
-                             ORDER BY md5(doc_id::VARCHAR), doc_id) - 1) // 5
-           AS grp
-  FROM documents
-),
-full_g AS (SELECT source, grp FROM d GROUP BY 1, 2 HAVING count(*) = 5),
-votes AS (
-  SELECT d.source, d.grp, d.answer, CAST(count(*) AS BIGINT) AS n_votes
-  FROM d JOIN full_g USING (source, grp)
-  GROUP BY 1, 2, 3
-),
-winner AS (
-  SELECT source, grp, answer, n_votes,
-         row_number() OVER (PARTITION BY source, grp
-                            ORDER BY n_votes DESC, answer ASC) AS rn
-  FROM votes
-)
-SELECT source, CAST(answer AS INT) AS answer,
-       CAST(count(*) AS BIGINT) AS n_wins,
-       CAST(sum(n_votes) AS BIGINT) AS winner_votes,
-       CAST(sum(CASE WHEN n_votes = 5 THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_unanimous,
-       CAST(sum(2 * n_votes - 5) AS BIGINT) AS margin_sum
-FROM winner WHERE rn = 1 GROUP BY 1, 2
-"""
-
-
-@register("q_majority_vote", _MAJVOTE_SQL)
-def q_majority_vote(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Self-consistency majority voting (Wang et al. 2022): docs are
-    md5-grouped into complete groups of 5 per source (the "k samples of
-    one prompt"), each sample's answer class is the deterministic
-    n_chars % 4, and the group's decision is the plurality answer with
-    ties pinned to the smallest class. The ledger per (source, winning
-    answer) reports wins, the winner's pooled vote count, unanimous
-    groups, and the exact aggregate margin sum(2*votes - k) — the
-    agreement signal self-consistency uses to gate low-confidence
-    answers. Complements q_best_of_n: argmax-by-reward there, plurality
-    here.
-
-    Scale plan: one corpus scan, one per-source window for md5 grouping,
-    then strictly (source, grp, answer)-keyed aggregations — map-side
-    combinable throughout; no pair joins, the vote never leaves its
-    group key."""
-    docs = load_docs(spark, sf_dir)
-    w = Window.partitionBy("source").orderBy(
-        F.md5(F.col("doc_id").cast("string")), F.col("doc_id")
-    )
-    d = docs.select(
-        "doc_id",
-        "source",
-        (F.col("n_chars") % 4).cast("int").alias("answer"),
-        ((F.row_number().over(w) - 1) / 5).cast("bigint").alias("grp"),
-    )
-    full_g = (
-        d.groupBy("source", "grp").count().filter(F.col("count") == 5)
-        .drop("count")
-    )
-    votes = (
-        d.join(full_g, ["source", "grp"])
-        .groupBy("source", "grp", "answer")
-        .agg(F.count("*").cast("bigint").alias("n_votes"))
-    )
-    w_win = Window.partitionBy("source", "grp").orderBy(
-        F.desc("n_votes"), F.asc("answer")
-    )
-    winner = votes.withColumn("rn", F.row_number().over(w_win)).filter(
-        F.col("rn") == 1
-    )
-    return winner.groupBy("source", "answer").agg(
-        F.count("*").cast("bigint").alias("n_wins"),
-        F.sum("n_votes").cast("bigint").alias("winner_votes"),
-        F.sum(F.when(F.col("n_votes") == 5, 1).otherwise(0))
-        .cast("bigint")
-        .alias("n_unanimous"),
-        F.sum(2 * F.col("n_votes") - 5).cast("bigint").alias("margin_sum"),
-    )
-
-
-_SH_SQL = """
-WITH d AS (
-  SELECT doc_id, CAST(n_chars AS BIGINT) AS score,
-         CAST(strpos('0123456789abcdef',
-                     substr(md5('cfg:' || doc_id::VARCHAR), 1, 1)) - 1
-              AS INT) AS config,
-         CAST((strpos('0123456789abcdef',
-                      substr(md5('rung:' || doc_id::VARCHAR), 1, 1)) - 1) % 4
-              AS INT) AS shard
-  FROM documents
-),
-cells AS (
-  SELECT config, shard, CAST(sum(score) AS BIGINT) AS s,
-         CAST(count(*) AS BIGINT) AS n
-  FROM d GROUP BY 1, 2
-),
-cfg AS (
-  SELECT config,
-         CAST(coalesce(sum(CASE WHEN shard < 1 THEN s END), 0) AS BIGINT)
-           AS r1_reward,
-         CAST(coalesce(sum(CASE WHEN shard < 2 THEN s END), 0) AS BIGINT)
-           AS r2_reward,
-         CAST(sum(s) AS BIGINT) AS r3_reward,
-         CAST(sum(n) AS BIGINT) AS n_docs
-  FROM cells GROUP BY 1
-),
-k1 AS (
-  SELECT cfg.*,
-         row_number() OVER (ORDER BY r1_reward DESC, config ASC) AS rk1
-  FROM cfg
-),
-k2 AS (
-  SELECT k1.*,
-         CASE WHEN rk1 <= 8 THEN
-           row_number() OVER (PARTITION BY CASE WHEN rk1 <= 8 THEN 1 END
-                              ORDER BY CASE WHEN rk1 <= 8 THEN r2_reward END
-                                       DESC, config ASC)
-         END AS rk2
-  FROM k1
-),
-k3 AS (
-  SELECT k2.*,
-         CASE WHEN rk2 <= 4 THEN
-           row_number() OVER (PARTITION BY CASE WHEN rk2 <= 4 THEN 1 END
-                              ORDER BY CASE WHEN rk2 <= 4 THEN r3_reward END
-                                       DESC, config ASC)
-         END AS rk3
-  FROM k2
-)
-SELECT CAST(config AS INT) AS config, n_docs, r1_reward,
-       rk1 <= 8 AS alive2,
-       CAST(CASE WHEN rk1 <= 8 THEN r2_reward ELSE -1 END AS BIGINT)
-         AS r2_seen,
-       coalesce(rk2 <= 4, FALSE) AS alive3,
-       CAST(CASE WHEN coalesce(rk2 <= 4, FALSE) THEN r3_reward ELSE -1 END
-            AS BIGINT) AS r3_seen,
-       CAST(coalesce(CASE WHEN coalesce(rk2 <= 4, FALSE) THEN rk3 END, 0)
-            AS INT) AS final_rank
-FROM k3
-"""
-
-
-@register("q_successive_halving", _SH_SQL)
-def q_successive_halving(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Successive halving (Jamieson & Talwalkar AISTATS 2016 — the
-    Hyperband inner loop): 16 md5-assigned configs are evaluated on
-    nested budget rungs (shard<1, shard<2, all 4 md5 shards of each
-    config's docs), the bottom half is eliminated at each rung by exact
-    reward (ties pinned to the smaller config id), and survivors re-rank
-    on the next rung. Eliminated configs honestly report -1 for unseen
-    rungs — the ledger records exactly what the tuner would have
-    observed, per rung, including the final top-4 ranking.
-
-    Scale plan: the corpus is touched ONCE to build the 64-cell
-    (config x shard) sufficient-statistics table (map-side combined);
-    all three elimination rounds are windows over the 16-row config
-    frame — the whole 'tuning loop' costs one scan regardless of rung
-    count, which is the point of evaluating on nested md5 shards."""
-    docs = load_docs(spark, sf_dir)
-    hex_pos = "0123456789abcdef"
-    d = docs.select(
-        F.col("n_chars").cast("bigint").alias("score"),
-        (
-            F.conv(
-                F.substring(
-                    F.md5(F.concat(F.lit("cfg:"), F.col("doc_id").cast("string"))),
-                    1,
-                    1,
-                ),
-                16,
-                10,
-            ).cast("int")
-        ).alias("config"),
-        (
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat(F.lit("rung:"), F.col("doc_id").cast("string"))
-                    ),
-                    1,
-                    1,
-                ),
-                16,
-                10,
-            ).cast("int")
-            % 4
-        ).alias("shard"),
-    )
-    assert hex_pos  # doc parity note: strpos(hex)-1 == conv(hex,16,10)
-    cells = d.groupBy("config", "shard").agg(
-        F.sum("score").cast("bigint").alias("s"),
-        F.count("*").cast("bigint").alias("n"),
-    )
-    cfg = cells.groupBy("config").agg(
-        F.coalesce(F.sum(F.when(F.col("shard") < 1, F.col("s"))), F.lit(0))
-        .cast("bigint")
-        .alias("r1_reward"),
-        F.coalesce(F.sum(F.when(F.col("shard") < 2, F.col("s"))), F.lit(0))
-        .cast("bigint")
-        .alias("r2_reward"),
-        F.sum("s").cast("bigint").alias("r3_reward"),
-        F.sum("n").cast("bigint").alias("n_docs"),
-    )
-    w1 = Window.orderBy(F.desc("r1_reward"), F.asc("config"))
-    k1 = cfg.withColumn("rk1", F.row_number().over(w1))
-    w2 = Window.partitionBy(
-        F.when(F.col("rk1") <= 8, 1)
-    ).orderBy(F.desc(F.when(F.col("rk1") <= 8, F.col("r2_reward"))), F.asc("config"))
-    k2 = k1.withColumn(
-        "rk2", F.when(F.col("rk1") <= 8, F.row_number().over(w2))
-    )
-    w3 = Window.partitionBy(
-        F.when(F.col("rk2") <= 4, 1)
-    ).orderBy(F.desc(F.when(F.col("rk2") <= 4, F.col("r3_reward"))), F.asc("config"))
-    k3 = k2.withColumn(
-        "rk3",
-        F.when(
-            F.coalesce(F.col("rk2") <= 4, F.lit(False)),
-            F.row_number().over(w3),
-        ),
-    )
-    return k3.select(
-        F.col("config").cast("int").alias("config"),
-        "n_docs",
-        "r1_reward",
-        (F.col("rk1") <= 8).alias("alive2"),
-        F.when(F.col("rk1") <= 8, F.col("r2_reward"))
-        .otherwise(F.lit(-1))
-        .cast("bigint")
-        .alias("r2_seen"),
-        F.coalesce(F.col("rk2") <= 4, F.lit(False)).alias("alive3"),
-        F.when(
-            F.coalesce(F.col("rk2") <= 4, F.lit(False)), F.col("r3_reward")
-        )
-        .otherwise(F.lit(-1))
-        .cast("bigint")
-        .alias("r3_seen"),
-        F.coalesce(
-            F.when(
-                F.coalesce(F.col("rk2") <= 4, F.lit(False)), F.col("rk3")
-            ),
-            F.lit(0),
-        )
-        .cast("int")
-        .alias("final_rank"),
-    )
-
-
-_REPLAY_SQL = """
-WITH logged AS (
-  SELECT event_id, user_id, event_type AS action,
-         CAST(round(value * 100) AS BIGINT) AS reward_cents
-  FROM events WHERE event_type IN ('click', 'view')
-),
-pol AS (
-  SELECT p.policy, l.event_id, l.reward_cents,
-         CASE p.policy
-           WHEN 'always_click' THEN 'click'
-           WHEN 'always_view' THEN 'view'
-           ELSE CASE WHEN (strpos('0123456789abcdef',
-                           substr(md5('pol:' || l.user_id::VARCHAR), 1, 1))
-                           - 1) % 2 = 0
-                     THEN 'click' ELSE 'view' END
-         END AS chosen,
-         l.action
-  FROM (VALUES ('always_click'), ('always_view'), ('md5_personalized'))
-       p(policy)
-  CROSS JOIN logged l
-)
-SELECT policy,
-       CAST(count(*) AS BIGINT) AS n_logged,
-       CAST(sum(CASE WHEN chosen = action THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_matched,
-       CAST(sum(CASE WHEN chosen = action THEN reward_cents ELSE 0 END)
-            AS BIGINT) AS matched_cents,
-       CAST(sum(CASE WHEN chosen = action
-                THEN reward_cents * reward_cents ELSE 0 END) AS BIGINT)
-         AS matched_cents_sq,
-       round(CAST(sum(CASE WHEN chosen = action THEN reward_cents ELSE 0 END)
-                  AS DOUBLE)
-             / sum(CASE WHEN chosen = action THEN 1 ELSE 0 END), 6)
-         AS replay_value
-FROM pol GROUP BY 1
-"""
-
-
-@register("q_replay_policy_eval", _REPLAY_SQL)
-def q_replay_policy_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Offline policy evaluation by replay matching (Li et al. WSDM 2011):
-    three candidate policies — two constant arms and an md5-personalized
-    per-user rule — are scored against the logged click/view stream by
-    keeping exactly the events where the policy's choice equals the logged
-    action and averaging their rewards (unbiased when logging is uniform
-    over arms, which the synthetic stream is by construction). Exact
-    matched-count / matched-cents / matched-cents² sufficient statistics
-    ship in the row, so both the replay value and its variance are
-    reproducible downstream without re-scanning logs.
-
-    Scale plan: the 3-row policy spine fans out over one log scan
-    (broadcast side is the 3 literals) and collapses map-side to 3 rows —
-    no shuffle wider than the policy key; at 10^12 events this is the
-    cheapest possible counterfactual evaluation shape (one pass, no
-    per-event state)."""
-    ev = load(spark, sf_dir, "events")
-    logged = ev.filter(F.col("event_type").isin("click", "view")).select(
-        "event_id",
-        "user_id",
-        F.col("event_type").alias("action"),
-        F.round(F.col("value") * 100).cast("bigint").alias("reward_cents"),
-    )
-    pol = spark.createDataFrame(
-        [("always_click",), ("always_view",), ("md5_personalized",)],
-        "policy string",
-    )
-    user_arm = F.when(
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("pol:"), F.col("user_id").cast("string"))),
-                1,
-                1,
-            ),
-            16,
-            10,
-        ).cast("int")
-        % 2
-        == 0,
-        F.lit("click"),
-    ).otherwise(F.lit("view"))
-    chosen = (
-        F.when(F.col("policy") == "always_click", F.lit("click"))
-        .when(F.col("policy") == "always_view", F.lit("view"))
-        .otherwise(user_arm)
-    )
-    matched = F.when(chosen == F.col("action"), 1).otherwise(0)
-    return (
-        F.broadcast(pol)
-        .crossJoin(logged)
-        .groupBy("policy")
-        .agg(
-            F.count("*").cast("bigint").alias("n_logged"),
-            F.sum(matched).cast("bigint").alias("n_matched"),
-            F.sum(
-                F.when(chosen == F.col("action"), F.col("reward_cents"))
-                .otherwise(0)
-            )
-            .cast("bigint")
-            .alias("matched_cents"),
-            F.sum(
-                F.when(
-                    chosen == F.col("action"),
-                    F.col("reward_cents") * F.col("reward_cents"),
-                ).otherwise(0)
-            )
-            .cast("bigint")
-            .alias("matched_cents_sq"),
-        )
-        .withColumn(
-            "replay_value",
-            F.round(
-                F.col("matched_cents") / F.col("n_matched").cast("double"), 6
-            ),
-        )
-    )
-
-
-# --------------------------------------------------------------------------
-# Round 4r: random-projection geometry + chain analytics. The JL audit is
-# the go/no-go table for running ANN on cheaper projected vectors; the
-# Markov stationary distribution is the long-run event-mix forecast used
-# for capacity planning — both kept engine-exact (literal md5 sign matrix,
-# fixed-point 2^20 arithmetic with floor at every step).
-# --------------------------------------------------------------------------
-
-import hashlib as _hl  # noqa: E402
-
-
-def _jl_signs(k: int = 16, d: int = 64) -> list[list[int]]:
-    """Deterministic ±1 Achlioptas-style sign matrix: parity of the first
-    hex nibble of md5('jl:<j>:<i>'). Computed once at import; embedded as a
-    literal in BOTH the Spark plan and the DuckDB oracle, so the projection
-    is engine-identical by construction."""
-    return [
-        [
-            1 if int(_hl.md5(f"jl:{j}:{i}".encode()).hexdigest()[0], 16) % 2 == 0
-            else -1
-            for i in range(d)
-        ]
-        for j in range(k)
-    ]
-
-
-_JL_S = _jl_signs()
-_JL_S_SQL = (
-    "[" + ", ".join("[" + ", ".join(str(v) for v in row) + "]" for row in _JL_S) + "]"
-)
-
-_JL_SQL = f"""
-WITH e AS (
-  SELECT vec_id,
-         list_transform(embedding::DOUBLE[],
-                        x -> CAST(round(x * 1e6) AS BIGINT)) AS mv
-  FROM embeddings
-),
-signs AS (SELECT {_JL_S_SQL} AS s),
-proj AS (
-  SELECT vec_id, mv,
-         list_transform(range(16), j ->
-           CAST(list_sum(list_transform(range(64),
-                i -> mv[CAST(i AS INT) + 1]
-                     * s[CAST(j AS INT) + 1][CAST(i AS INT) + 1]))
-                AS BIGINT)) AS pv
-  FROM e CROSS JOIN signs
-),
-pairs AS (
-  SELECT a.vec_id AS pair_id,
-         CAST(list_sum(list_transform(range(64),
-              i -> (a.mv[CAST(i AS INT) + 1] - b.mv[CAST(i AS INT) + 1])
-                   * (a.mv[CAST(i AS INT) + 1] - b.mv[CAST(i AS INT) + 1])))
-              AS BIGINT) AS d2_orig,
-         CAST(list_sum(list_transform(range(16),
-              j -> (a.pv[CAST(j AS INT) + 1] - b.pv[CAST(j AS INT) + 1])
-                   * (a.pv[CAST(j AS INT) + 1] - b.pv[CAST(j AS INT) + 1])))
-              AS BIGINT) AS d2_proj
-  FROM proj a JOIN proj b ON b.vec_id = a.vec_id + 1
-  WHERE a.vec_id % 2 = 0
-)
-SELECT CAST(pair_id AS BIGINT) AS pair_id, d2_orig, d2_proj,
-       CAST(16 * d2_orig AS BIGINT) AS expect_den,
-       round(CAST(d2_proj AS DOUBLE) / (16 * d2_orig), 6) AS distortion
-FROM pairs
-"""
-
-
-@register("q_jl_distortion", _JL_SQL)
-def q_jl_distortion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Johnson-Lindenstrauss projection distortion audit: every embedding
-    is projected 64 -> 16 dims through a literal ±1 md5 sign matrix
-    (Achlioptas 2001 database-friendly JL), and consecutive-id pairs
-    compare exact squared distances in both spaces as BIGINT micro-unit
-    integers. E[d2_proj] = 16 * d2_orig for ±1 signs, so
-    distortion = d2_proj / (16 * d2_orig) should concentrate around 1 —
-    the one-table answer to "can ANN run on 4x-cheaper vectors here?".
-    Zero explode: the projection is aggregate/zip_with over packed arrays
-    (whole-stage codegen), the sign matrix a plan literal.
-
-    Scale plan: projection is a projection-only map over the corpus (no
-    shuffle); the pair frame is an equi-join on vec_id+1 — at 10^12 rows
-    swap in any bounded candidate pair set (the df-cut edge list) without
-    touching the distortion algebra."""
-    e = load(spark, sf_dir, "embeddings").select(
-        "vec_id",
-        F.expr(
-            "transform(embedding, x -> CAST(round(x * 1e6) AS BIGINT))"
-        ).alias("mv"),
-    )
-    sign_sql = (
-        "array("
-        + ", ".join(
-            "array(" + ", ".join(f"CAST({v} AS BIGINT)" for v in row) + ")"
-            for row in _JL_S
-        )
-        + ")"
-    )
-    proj = e.withColumn(
-        "pv",
-        F.expr(
-            f"transform(sequence(0, 15), j -> aggregate("
-            f"zip_with(mv, {sign_sql}[j], (x, s) -> x * s), "
-            f"CAST(0 AS BIGINT), (acc, v) -> acc + v))"
-        ),
-    )
-    a = proj.filter(F.col("vec_id") % 2 == 0).select(
-        F.col("vec_id").alias("pair_id"),
-        F.col("mv").alias("ma"),
-        F.col("pv").alias("pa"),
-    )
-    b = proj.select(
-        (F.col("vec_id") - 1).alias("pair_id"),
-        F.col("mv").alias("mb"),
-        F.col("pv").alias("pb"),
-    )
-    d2 = "aggregate(zip_with({0}, {1}, (x, y) -> (x - y) * (x - y)), CAST(0 AS BIGINT), (acc, v) -> acc + v)"
-    pairs = a.join(b, "pair_id").select(
-        F.col("pair_id").cast("bigint").alias("pair_id"),
-        F.expr(d2.format("ma", "mb")).cast("bigint").alias("d2_orig"),
-        F.expr(d2.format("pa", "pb")).cast("bigint").alias("d2_proj"),
-    )
-    return pairs.select(
-        "pair_id",
-        "d2_orig",
-        "d2_proj",
-        (16 * F.col("d2_orig")).cast("bigint").alias("expect_den"),
-        F.round(
-            F.col("d2_proj").cast("double") / (16 * F.col("d2_orig")), 6
-        ).alias("distortion"),
-    )
-
-
-_MARKOV_SQL = """
-WITH ordered AS (
-  SELECT user_id, event_type, ts, event_id,
-         lag(event_type) OVER (PARTITION BY user_id
-                               ORDER BY ts, event_id) AS prev_type
-  FROM events
-),
-trans AS (
-  SELECT prev_type AS a, event_type AS b, CAST(count(*) AS BIGINT) AS n_ab
-  FROM ordered WHERE prev_type IS NOT NULL GROUP BY 1, 2
-),
-rowsum AS (SELECT a, CAST(sum(n_ab) AS BIGINT) AS r_a FROM trans GROUP BY 1),
-p AS (
-  SELECT t.a, t.b, (t.n_ab * 1048576) // rs.r_a AS p_fp
-  FROM trans t JOIN rowsum rs USING (a)
-),
-types AS (SELECT DISTINCT event_type AS ty FROM events),
-nt AS (SELECT CAST(count(*) AS BIGINT) AS n_types FROM types),
-v0 AS (SELECT ty, 1048576 // nt.n_types AS m FROM types CROSS JOIN nt),
-v1 AS (
-  SELECT p.b AS ty, CAST(sum(v0.m * p.p_fp) // 1048576 AS BIGINT) AS m
-  FROM v0 JOIN p ON p.a = v0.ty GROUP BY 1
-),
-v2 AS (
-  SELECT p.b AS ty, CAST(sum(v1.m * p.p_fp) // 1048576 AS BIGINT) AS m
-  FROM v1 JOIN p ON p.a = v1.ty GROUP BY 1
-),
-v3 AS (
-  SELECT p.b AS ty, CAST(sum(v2.m * p.p_fp) // 1048576 AS BIGINT) AS m
-  FROM v2 JOIN p ON p.a = v2.ty GROUP BY 1
-)
-SELECT t.ty AS event_type,
-       CAST(coalesce(v1.m, 0) AS BIGINT) AS p1_fp,
-       CAST(coalesce(v2.m, 0) AS BIGINT) AS p2_fp,
-       CAST(coalesce(v3.m, 0) AS BIGINT) AS p3_fp,
-       round(CAST(coalesce(v3.m, 0) AS DOUBLE) / 1048576, 6) AS p3,
-       CAST(row_number() OVER (ORDER BY coalesce(v3.m, 0) DESC, t.ty ASC)
-            AS INT) AS rnk
-FROM types t LEFT JOIN v1 ON v1.ty = t.ty
-             LEFT JOIN v2 ON v2.ty = t.ty
-             LEFT JOIN v3 ON v3.ty = t.ty
-"""
-
-
-@register("q_markov_stationary", _MARKOV_SQL)
-def q_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Long-run event-mix forecast: the user-event chain's empirical
-    transition matrix, iterated three power steps from uniform in exact
-    2^20 fixed-point arithmetic — P_fp[a][b] = (n_ab << 20) div r_a and
-    v' [b] = (sum_a v[a] * P_fp[a][b]) div 2^20, floored at every step so
-    both engines compute bit-identical masses (the same fixed-point trick
-    as the resource-allocation link score; no float matrix powers). Emits
-    the mass after each step — convergence is visible as p2 ≈ p3 — plus
-    the final ranking, the table a capacity planner reads for "what does
-    the steady-state request mix look like".
-
-    Scale plan: one lag window per user (the only corpus-sized shuffle)
-    collapses to a |types|² transition frame; the three iterations are
-    joins over that 25-row frame — chain length never multiplies corpus
-    cost, which is why the unrolled form is safe at any event volume."""
-    ev = load(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    ordered = ev.select(
-        "user_id",
-        "event_type",
-        F.lag("event_type").over(w).alias("prev_type"),
-    )
-    trans = (
-        ordered.filter(F.col("prev_type").isNotNull())
-        .groupBy(F.col("prev_type").alias("a"), F.col("event_type").alias("b"))
-        .agg(F.count("*").cast("bigint").alias("n_ab"))
-    )
-    rowsum = trans.groupBy("a").agg(F.sum("n_ab").cast("bigint").alias("r_a"))
-    p = trans.join(rowsum, "a").select(
-        "a", "b", F.expr("(n_ab * 1048576) div r_a").alias("p_fp")
-    )
-    types = ev.select(F.col("event_type").alias("ty")).distinct()
-    nt = types.agg(F.count("*").cast("bigint").alias("n_types"))
-    v = types.crossJoin(F.broadcast(nt)).select(
-        "ty", F.expr("1048576 div n_types").alias("m")
-    )
-    vs = []
-    for _step in range(3):
-        v = (
-            v.join(p, v["ty"] == p["a"])
-            .groupBy(F.col("b").alias("ty2"))
-            .agg(
-                F.expr("CAST(sum(m * p_fp) div 1048576 AS BIGINT)").alias("m")
-            )
-            .withColumnRenamed("ty2", "ty")
-        )
-        vs.append(v)
-    out = types
-    for k, vk in enumerate(vs, start=1):
-        out = out.join(
-            vk.withColumnRenamed("m", f"p{k}_fp"), "ty", "left"
-        )
-    out = out.select(
-        F.col("ty").alias("event_type"),
-        *[
-            F.coalesce(F.col(f"p{k}_fp"), F.lit(0))
-            .cast("bigint")
-            .alias(f"p{k}_fp")
-            for k in (1, 2, 3)
-        ],
-    )
-    return out.select(
-        "*",
-        F.round(F.col("p3_fp").cast("double") / 1048576, 6).alias("p3"),
-        F.row_number()
-        .over(Window.orderBy(F.desc("p3_fp"), F.asc("event_type")))
-        .cast("int")
-        .alias("rnk"),
-    )
-
-
-# --------------------------------------------------------------------------
-# Round 4s: greedy best-first routing over a navigable small-world-style
-# graph — the HNSW/NSW layer-0 search primitive (Malkov & Yashunin 2016),
-# run as a bounded unrolled descent so the whole approximate search is
-# engine-exact and hash-checkable. The graph: a global vec_id ring (the
-# connectivity backbone) plus per-LSH-bucket chains (the long-range
-# shortcut links a bucketed index gives for free).
-# --------------------------------------------------------------------------
-
-
-def _sql_d2(a: str, b: str) -> str:
-    """Exact BIGINT micro-unit squared L2 between two BIGINT lists."""
-    return (
-        f"CAST(list_sum(list_transform(range(64), i -> "
-        f"({a}[CAST(i AS INT) + 1] - {b}[CAST(i AS INT) + 1]) * "
-        f"({a}[CAST(i AS INT) + 1] - {b}[CAST(i AS INT) + 1]))) AS BIGINT)"
-    )
-
-
-def _greedy_sql(hops: int = 6) -> str:
-    from cliner_spark.entry_queries import SQL_EMB, _sql_lsh_buckets
-
-    parts = [
-        f"WITH {SQL_EMB}, {_sql_lsh_buckets(4).strip()},",
-        """
-m AS (
-  SELECT vec_id,
-         list_transform(v, x -> CAST(round(x * 1e6) AS BIGINT)) AS mv
-  FROM e
-),
-chain AS (
-  SELECT lag(vec_id) OVER (PARTITION BY bucket ORDER BY vec_id) AS a,
-         vec_id AS b
-  FROM bk QUALIFY a IS NOT NULL
-),
-ring AS (
-  SELECT a.vec_id AS a, b.vec_id AS b
-  FROM e a JOIN e b ON b.vec_id = a.vec_id + 1
-),
-edges AS (SELECT a, b FROM chain UNION SELECT a, b FROM ring),
-adj AS (SELECT a AS src, b AS dst FROM edges
-        UNION SELECT b AS src, a AS dst FROM edges),
-entry AS (SELECT min(vec_id) AS ev FROM e),
-qs AS (
-  SELECT vec_id AS query_id, mv AS qmv
-  FROM m CROSS JOIN entry WHERE vec_id <> entry.ev
-  ORDER BY md5('gq:' || vec_id::VARCHAR), vec_id LIMIT 12
-),
-f0 AS (
-  SELECT q.query_id, q.qmv, entry.ev AS cur,
-         """
-        + _sql_d2("m.mv", "q.qmv")
-        + """ AS d2,
-         CAST(0 AS INT) AS moves, CAST(1 AS INT) AS last_move
-  FROM qs q CROSS JOIN entry JOIN m ON m.vec_id = entry.ev
-)""",
-    ]
-    prev = "f0"
-    for k in range(1, hops + 1):
-        nd2 = _sql_d2("nb.mv", "f.qmv")
-        parts.append(
-            f""",
-c{k} AS (
-  SELECT f.query_id, f.qmv, f.cur, f.d2, f.moves, adj.dst AS nb_id,
-         {nd2} AS nd2,
-         row_number() OVER (PARTITION BY f.query_id
-                            ORDER BY {nd2} ASC, adj.dst ASC) AS rn
-  FROM {prev} f JOIN adj ON adj.src = f.cur
-  JOIN m nb ON nb.vec_id = adj.dst
-),
-f{k} AS (
-  SELECT query_id, qmv,
-         CASE WHEN nd2 < d2 THEN nb_id ELSE cur END AS cur,
-         CASE WHEN nd2 < d2 THEN nd2 ELSE d2 END AS d2,
-         moves + CASE WHEN nd2 < d2 THEN 1 ELSE 0 END AS moves,
-         CASE WHEN nd2 < d2 THEN 1 ELSE 0 END AS last_move
-  FROM c{k} WHERE rn = 1
-)"""
-        )
-        prev = f"f{k}"
-    parts.append(
-        f"""
-SELECT f.query_id, s.d2 AS start_d2, f.cur AS final_node, f.d2 AS final_d2,
-       CAST(f.moves AS INT) AS n_moves, f.last_move = 0 AS converged,
-       CASE WHEN s.d2 > 0
-            THEN round(CAST(f.d2 AS DOUBLE) / s.d2, 6) ELSE 0.0 END
-         AS dist_ratio
-FROM {prev} f JOIN f0 s USING (query_id)"""
-    )
-    return "\n".join(parts)
-
-
-_GREEDY_HOPS = 6
-_GREEDY_SQL = _greedy_sql(_GREEDY_HOPS)
-
-_SPARK_D2 = (
-    "CAST(aggregate(zip_with({0}, {1}, (x, y) -> (x - y) * (x - y)), "
-    "CAST(0 AS BIGINT), (acc, v) -> acc + v) AS BIGINT)"
-)
-
-
-@register("q_graph_greedy_search", _GREEDY_SQL)
-def q_graph_greedy_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Greedy best-first vector search over a navigable graph — the NSW /
-    HNSW layer-0 primitive (Malkov & Yashunin 2016): from a fixed entry
-    node (min vec_id), each of 12 md5-chosen query vectors repeatedly
-    hops to its current node's best neighbor (exact BIGINT micro-unit
-    squared L2, ties to the smaller id) while that improves, for 6
-    unrolled supersteps. The graph is the vec_id ring (connectivity
-    backbone) ∪ per-LSH-bucket chains (4 md5 hyperplanes — the shortcut
-    links a bucketed index already has). The ledger reports start/final
-    exact distances, hop count, convergence, and the distance ratio —
-    the searchability audit of the index graph itself.
-
-    Scale plan: bucket chains come from one window per bucket; the ring
-    is an equi-self-join; each superstep is frontier(12) x adjacency
-    equi-joins with broadcast frontiers and a per-query window —
-    never corpus x corpus. localCheckpoint pins the graph and each
-    12-row frontier exactly like the BFS/diameter family."""
-    from cliner_spark.similarity import lsh_buckets
-
-    emb = load(spark, sf_dir, "embeddings")
-    m = emb.select(
-        "vec_id",
-        F.expr(
-            "transform(embedding, x -> CAST(round(x * 1e6) AS BIGINT))"
-        ).alias("mv"),
-    ).localCheckpoint()
-    bk = lsh_buckets(emb, n_planes=4)
-    w_b = Window.partitionBy("bucket").orderBy("vec_id")
-    chain = (
-        bk.select(
-            F.lag("vec_id").over(w_b).alias("a"), F.col("vec_id").alias("b")
-        )
-        .filter(F.col("a").isNotNull())
-    )
-    ring = (
-        m.select(F.col("vec_id").alias("a"))
-        .join(
-            m.select((F.col("vec_id") - 1).alias("a"), F.col("vec_id").alias("b")),
-            "a",
-        )
-        .select("a", "b")
-    )
-    edges = chain.union(ring).distinct()
-    adj = (
-        edges.select(F.col("a").alias("src"), F.col("b").alias("dst"))
-        .union(edges.select(F.col("b").alias("src"), F.col("a").alias("dst")))
-        .distinct()
-        .localCheckpoint()
-    )
-    entry = m.agg(F.min("vec_id").alias("ev"))
-    qs = (
-        m.crossJoin(F.broadcast(entry))
-        .filter(F.col("vec_id") != F.col("ev"))
-        .orderBy(
-            F.md5(F.concat(F.lit("gq:"), F.col("vec_id").cast("string"))),
-            "vec_id",
-        )
-        .limit(12)
-        .select(F.col("vec_id").alias("query_id"), F.col("mv").alias("qmv"))
-    )
-    f = (
-        qs.crossJoin(F.broadcast(entry))
-        .join(m.select(F.col("vec_id").alias("ev"), F.col("mv").alias("emv")), "ev")
-        .select(
-            "query_id",
-            "qmv",
-            F.col("ev").alias("cur"),
-            F.expr(_SPARK_D2.format("emv", "qmv")).alias("d2"),
-            F.lit(0).cast("int").alias("moves"),
-            F.lit(1).cast("int").alias("last_move"),
-        )
-        .localCheckpoint()
-    )
-    f0 = f
-    for _k in range(_GREEDY_HOPS):
-        nbm = m.select(
-            F.col("vec_id").alias("nb_id"), F.col("mv").alias("nb_mv")
-        )
-        cand = (
-            f.join(adj, f["cur"] == adj["src"])
-            .join(nbm, F.col("dst") == F.col("nb_id"))
-            .withColumn("nd2", F.expr(_SPARK_D2.format("nb_mv", "qmv")))
-        )
-        w_q = Window.partitionBy("query_id").orderBy(
-            F.asc("nd2"), F.asc("nb_id")
-        )
-        best = cand.withColumn("rn", F.row_number().over(w_q)).filter(
-            F.col("rn") == 1
-        )
-        f = best.select(
-            "query_id",
-            "qmv",
-            F.when(F.col("nd2") < F.col("d2"), F.col("nb_id"))
-            .otherwise(F.col("cur"))
-            .alias("cur"),
-            F.when(F.col("nd2") < F.col("d2"), F.col("nd2"))
-            .otherwise(F.col("d2"))
-            .alias("d2"),
-            (
-                F.col("moves")
-                + F.when(F.col("nd2") < F.col("d2"), 1).otherwise(0)
-            ).cast("int").alias("moves"),
-            F.when(F.col("nd2") < F.col("d2"), 1)
-            .otherwise(0)
-            .cast("int")
-            .alias("last_move"),
-        ).localCheckpoint()
-    return (
-        f.join(
-            f0.select("query_id", F.col("d2").alias("start_d2")), "query_id"
-        )
-        .select(
-            "query_id",
-            "start_d2",
-            F.col("cur").alias("final_node"),
-            F.col("d2").alias("final_d2"),
-            F.col("moves").cast("int").alias("n_moves"),
-            (F.col("last_move") == 0).alias("converged"),
-            F.when(
-                F.col("start_d2") > 0,
-                F.round(F.col("d2").cast("double") / F.col("start_d2"), 6),
-            )
-            .otherwise(F.lit(0.0))
-            .alias("dist_ratio"),
-        )
-    )
-
-
-# --------------------------------------------------------------------------
 # Round 4ab: robust statistics + weighted-mass location + weighted SSSP —
 # exact order statistics (p50/p90/p99, MAD) per source via partitioned
 # ranks, the char-mass weighted median with the Hoover (Robin Hood)
@@ -4059,1856 +1920,6 @@ def q_bellman_ford_hubs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("bigint")
         .alias("first_round"),
         F.col("n4").isNotNull().alias("reached"),
-    )
-
-
-# --------------------------------------------------------------------------
-# Round 4af: allocation + privacy + segmentation — k-anonymity / l-diversity
-# audit of the customer quasi-identifiers, depth-2 binary changepoint
-# segmentation (recursing the round-3 CUSUM localization once), and
-# 6-round batch Gale-Shapley deferred acceptance routing docs to source
-# reviewers under capacity (McVitie-Wilson parallel proposals — the
-# task-to-annotator assignment primitive).
-# --------------------------------------------------------------------------
-
-_KANON_SQL = """
-WITH q AS (
-  SELECT c_mktsegment AS seg, c_nationkey AS nat,
-         CAST(c_acctbal >= 0 AS INT) AS sens
-  FROM customer
-),
-grp AS (
-  SELECT seg, nat, CAST(count(*) AS BIGINT) AS n,
-         CAST(count(DISTINCT sens) AS BIGINT) AS l_div
-  FROM q GROUP BY 1, 2
-),
-tot AS (
-  SELECT CAST(count(*) AS BIGINT) AS n_rows,
-         CAST(count(DISTINCT seg || '|' || nat::VARCHAR) AS BIGINT)
-           AS n_groups,
-         CAST(min(0) AS BIGINT) AS zero
-  FROM q
-),
-lmin AS (SELECT CAST(min(l_div) AS BIGINT) AS min_l FROM grp)
-SELECT CAST(k.k AS BIGINT) AS k,
-       tot.n_rows, tot.n_groups,
-       CAST(sum(CASE WHEN g.n < k.k THEN 1 ELSE 0 END) AS BIGINT)
-         AS groups_below_k,
-       CAST(sum(CASE WHEN g.n < k.k THEN g.n ELSE 0 END) AS BIGINT)
-         AS rows_below_k,
-       lmin.min_l,
-       round(CAST(sum(CASE WHEN g.n < k.k THEN g.n ELSE 0 END) AS DOUBLE)
-             / tot.n_rows, 6) AS frac_reidentifiable
-FROM (VALUES (2), (5), (10)) k(k)
-CROSS JOIN grp g CROSS JOIN tot CROSS JOIN lmin
-GROUP BY k.k, tot.n_rows, tot.n_groups, lmin.min_l
-"""
-
-
-@register("q_kanonymity_audit", _KANON_SQL)
-def q_kanonymity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """k-anonymity / l-diversity audit (Sweeney 2002; Machanavajjhala
-    2007) of the customer table under the quasi-identifier
-    (market segment, nation): for k in {2,5,10} the share of rows living
-    in groups smaller than k is the re-identification exposure a release
-    reviewer signs off on, and min_l (distinct sensitive values — account
-    solvency — in the worst group) is the homogeneity-attack floor
-    (min_l = 1 means some group leaks its members' attribute outright).
-    Complements the DP family (q_dp_release / q_randomized_response):
-    this audits what the RAW release leaks before noise is even
-    considered.
-
-    Scale plan: one group-by over the quasi-identifier (map-side
-    combined), a 3-row k spine, 1-row total/min carries."""
-    cust = load(spark, sf_dir, "customer")
-    q = cust.select(
-        F.col("c_mktsegment").alias("seg"),
-        F.col("c_nationkey").alias("nat"),
-        (F.col("c_acctbal") >= 0).cast("int").alias("sens"),
-    )
-    grp = q.groupBy("seg", "nat").agg(
-        F.count("*").cast("bigint").alias("n"),
-        F.countDistinct("sens").cast("bigint").alias("l_div"),
-    )
-    tot = q.agg(
-        F.count("*").cast("bigint").alias("n_rows"),
-        F.countDistinct(F.concat_ws("|", "seg", "nat")).cast("bigint").alias("n_groups"),
-    )
-    lmin = grp.agg(F.min("l_div").cast("bigint").alias("min_l"))
-    ks = spark.createDataFrame([(2,), (5,), (10,)], "k int")
-    return (
-        F.broadcast(ks)
-        .crossJoin(grp)
-        .crossJoin(F.broadcast(tot))
-        .crossJoin(F.broadcast(lmin))
-        .groupBy("k", "n_rows", "n_groups", "min_l")
-        .agg(
-            F.sum(F.when(F.col("n") < F.col("k"), 1).otherwise(0))
-            .cast("bigint")
-            .alias("groups_below_k"),
-            F.sum(F.when(F.col("n") < F.col("k"), F.col("n")).otherwise(0))
-            .cast("bigint")
-            .alias("rows_below_k"),
-        )
-        .select(
-            F.col("k").cast("bigint").alias("k"),
-            "n_rows", "n_groups", "groups_below_k", "rows_below_k", "min_l",
-            F.round(
-                F.col("rows_below_k").cast("double") / F.col("n_rows"), 6
-            ).alias("frac_reidentifiable"),
-        )
-    )
-
-
-_BINSEG_SQL = """
-WITH daily AS (
-  SELECT CAST(ts AS DATE) AS day, CAST(count(*) AS BIGINT) AS x
-  FROM events GROUP BY 1
-),
-b AS (SELECT min(day) AS dmin, max(day) AS dmax FROM daily),
-spine AS (
-  SELECT CAST(g.gs AS DATE) AS day
-  FROM b, unnest(generate_series(b.dmin, b.dmax, INTERVAL 1 DAY)) AS g(gs)
-),
-dense AS (
-  SELECT s.day, coalesce(d.x, 0) AS x,
-         CAST(row_number() OVER (ORDER BY s.day) AS BIGINT) AS k
-  FROM spine s LEFT JOIN daily d USING (day)
-),
-c AS (
-  SELECT day, x, k,
-         CAST(sum(x) OVER (ORDER BY k ROWS UNBOUNDED PRECEDING) AS BIGINT)
-           AS s_k,
-         CAST(count(*) OVER () AS BIGINT) AS n,
-         CAST(sum(x) OVER () AS BIGINT) AS t
-  FROM dense
-),
-r1 AS (
-  SELECT c.*,
-         row_number() OVER (ORDER BY abs(n * s_k - k * t) DESC, day ASC)
-           AS pr
-  FROM c
-),
-lvl1 AS (
-  SELECT day AS split_day, k AS split_k, n, t, n * s_k - k * t AS cusum_num
-  FROM r1 WHERE pr = 1
-),
-seg AS (
-  SELECT c.day, c.x, c.k, c.s_k,
-         CASE WHEN c.k <= l.split_k THEN 'left' ELSE 'right' END AS side
-  FROM c CROSS JOIN lvl1 l
-),
-segw AS (
-  SELECT side, day, x, k, s_k,
-         CAST(count(*) OVER (PARTITION BY side) AS BIGINT) AS sn,
-         CAST(sum(x) OVER (PARTITION BY side) AS BIGINT) AS st,
-         CAST(min(k) OVER (PARTITION BY side) AS BIGINT) AS firstk
-  FROM seg
-),
-seg0 AS (
-  SELECT segw.*,
-         CAST(max(CASE WHEN k = firstk THEN s_k - x END)
-                OVER (PARTITION BY side) AS BIGINT) AS s0
-  FROM segw
-),
-loc AS (
-  SELECT side, day, sn, st,
-         k - (firstk - 1) AS local_k, s_k - s0 AS local_s
-  FROM seg0
-),
-r2 AS (
-  SELECT side, day, sn, st, local_k,
-         sn * local_s - local_k * st AS cusum_num,
-         row_number() OVER (PARTITION BY side
-                            ORDER BY abs(sn * local_s - local_k * st) DESC,
-                                     day ASC) AS pr
-  FROM loc
-)
-SELECT CAST(1 AS BIGINT) AS level, 'all' AS segment,
-       CAST(split_day AS VARCHAR) AS split_day,
-       CAST(split_k AS BIGINT) AS split_k,
-       CAST(cusum_num AS BIGINT) AS cusum_num, n AS seg_n, t AS seg_total
-FROM lvl1
-UNION ALL
-SELECT CAST(2 AS BIGINT), side, CAST(day AS VARCHAR),
-       CAST(local_k AS BIGINT), CAST(cusum_num AS BIGINT), sn, st
-FROM r2 WHERE pr = 1
-"""
-
-
-@register("q_binary_segmentation", _BINSEG_SQL)
-def q_binary_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Depth-2 binary changepoint segmentation of the daily event volume
-    (Scott-Knott / binary segmentation): level 1 localizes the global
-    changepoint by the integer CUSUM argmax |n*S_k - k*T| (earliest-day
-    tie pins, q_cusum_changepoint's statistic), then each side recurses
-    ONCE with segment-local prefix sums (local_s = S_k - S_{k0},
-    local_k = k - k0 — pure integer re-anchoring, no rescan). Three rows:
-    the split tree a monitoring pipeline turns into regime annotations.
-    Bounded depth is honest recursion, like the bounded BFS/BF loops.
-
-    Scale plan: one daily rollup; every window runs on the |days| frame
-    or its two halves (dimension, not corpus)."""
-    ev = load(spark, sf_dir, "events")
-    daily = ev.groupBy(F.col("ts").cast("date").alias("day")).agg(
-        F.count("*").cast("bigint").alias("x")
-    )
-    b = daily.agg(F.min("day").alias("dmin"), F.max("day").alias("dmax"))
-    spine = b.select(
-        F.explode(F.sequence("dmin", "dmax", F.expr("interval 1 day"))).alias("day")
-    )
-    dense = spine.join(daily, "day", "left").select(
-        "day", F.coalesce("x", F.lit(0)).cast("bigint").alias("x")
-    ).withColumn("k", F.row_number().over(Window.orderBy("day")).cast("bigint"))
-    wall = Window.partitionBy()
-    wcum = Window.orderBy("k").rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    c = dense.select(
-        "day", "x", "k", F.sum("x").over(wcum).cast("bigint").alias("s_k")
-    ).withColumn("n", F.count("*").over(wall).cast("bigint")).withColumn(
-        "t", F.sum("x").over(wall).cast("bigint")
-    )
-    lvl1 = (
-        c.withColumn(
-            "pr",
-            F.row_number().over(
-                Window.orderBy(
-                    F.abs(F.col("n") * F.col("s_k") - F.col("k") * F.col("t")).desc(),
-                    F.col("day").asc(),
-                )
-            ),
-        )
-        .filter(F.col("pr") == 1)
-        .select(
-            F.col("day").alias("split_day"), F.col("k").alias("split_k"),
-            "n", "t",
-            (F.col("n") * F.col("s_k") - F.col("k") * F.col("t")).alias("cusum_num"),
-        )
-    )
-    seg = c.crossJoin(F.broadcast(lvl1.select(F.col("split_k").alias("sk")))).select(
-        "day", "x", "k", "s_k",
-        F.when(F.col("k") <= F.col("sk"), "left").otherwise("right").alias("side"),
-    )
-    ws = Window.partitionBy("side")
-    segcur = (
-        seg.withColumn("sn", F.count("*").over(ws).cast("bigint"))
-        .withColumn("st", F.sum("x").over(ws).cast("bigint"))
-        .withColumn("firstk", F.min("k").over(ws).cast("bigint"))
-        # re-anchor with the segment's FIRST row (s0 = s_k - x there): the
-        # previous k0-based lookup pointed OUTSIDE the right partition
-        .withColumn(
-            "s0",
-            F.max(
-                F.when(F.col("k") == F.col("firstk"), F.col("s_k") - F.col("x"))
-            )
-            .over(ws)
-            .cast("bigint"),
-        )
-        .select(
-            "side", "day",
-            (F.col("k") - (F.col("firstk") - 1)).alias("local_k"),
-            (F.col("s_k") - F.col("s0")).alias("local_s"),
-            "sn", "st",
-        )
-    )
-    lvl2 = (
-        segcur.withColumn(
-            "cusum_num",
-            F.col("sn") * F.col("local_s") - F.col("local_k") * F.col("st"),
-        )
-        .withColumn(
-            "pr",
-            F.row_number().over(
-                Window.partitionBy("side").orderBy(
-                    F.abs(F.col("cusum_num")).desc(), F.col("day").asc()
-                )
-            ),
-        )
-        .filter(F.col("pr") == 1)
-    )
-    out1 = lvl1.select(
-        F.lit(1).cast("bigint").alias("level"),
-        F.lit("all").alias("segment"),
-        F.col("split_day").cast("string").alias("split_day"),
-        F.col("split_k").cast("bigint").alias("split_k"),
-        F.col("cusum_num").cast("bigint").alias("cusum_num"),
-        F.col("n").alias("seg_n"),
-        F.col("t").alias("seg_total"),
-    )
-    out2 = lvl2.select(
-        F.lit(2).cast("bigint").alias("level"),
-        F.col("side").alias("segment"),
-        F.col("day").cast("string").alias("split_day"),
-        F.col("local_k").cast("bigint").alias("split_k"),
-        F.col("cusum_num").cast("bigint").alias("cusum_num"),
-        F.col("sn").alias("seg_n"),
-        F.col("st").alias("seg_total"),
-    )
-    return out1.unionAll(out2)
-
-
-_GS_ROUNDS = 6
-_GS_CAP = 5
-
-
-def _gs_sql() -> str:
-    head = f"""
-WITH papers AS (
-  SELECT doc_id FROM documents WHERE doc_id % 5 = 0
-),
-reviewers AS (SELECT DISTINCT source FROM documents),
-grid AS (
-  SELECT p.doc_id, r.source,
-         md5('ps:' || p.doc_id::VARCHAR || ':' || r.source) AS pscore,
-         md5('rs:' || r.source || ':' || p.doc_id::VARCHAR) AS rscore,
-         CAST(row_number() OVER (
-                PARTITION BY p.doc_id
-                ORDER BY md5('ps:' || p.doc_id::VARCHAR || ':' || r.source),
-                         r.source) AS BIGINT) AS prank
-  FROM papers p CROSS JOIN reviewers r
-),
-nrev AS (SELECT CAST(count(*) AS BIGINT) AS m FROM reviewers),
-s0 AS (
-  SELECT doc_id, CAST(0 AS BIGINT) AS ptr, FALSE AS held FROM papers
-)"""
-    steps = []
-    for k in range(1, _GS_ROUNDS + 1):
-        steps.append(
-            f""",
-p{k} AS (
-  SELECT s.doc_id, s.ptr, g.source, g.rscore
-  FROM s{k - 1} s
-  JOIN grid g ON g.doc_id = s.doc_id AND g.prank = s.ptr + 1
-  CROSS JOIN nrev
-  WHERE s.ptr < nrev.m
-),
-k{k} AS (
-  SELECT doc_id, ptr, source,
-         row_number() OVER (PARTITION BY source ORDER BY rscore, doc_id)
-           <= {_GS_CAP} AS kept
-  FROM p{k}
-),
-s{k} AS (
-  SELECT doc_id, CASE WHEN kept THEN ptr ELSE ptr + 1 END AS ptr,
-         kept AS held
-  FROM k{k}
-  UNION ALL
-  SELECT s.doc_id, s.ptr, FALSE
-  FROM s{k - 1} s CROSS JOIN nrev WHERE s.ptr >= nrev.m
-)"""
-        )
-    tail = f"""
-SELECT s.doc_id, CAST(s.ptr AS BIGINT) AS n_rejections, s.held,
-       CASE WHEN s.held THEN g.source END AS reviewer,
-       tot.n_held, tot.n_papers
-FROM s{_GS_ROUNDS} s
-LEFT JOIN grid g ON g.doc_id = s.doc_id AND g.prank = s.ptr + 1
-CROSS JOIN (SELECT CAST(sum(CASE WHEN held THEN 1 ELSE 0 END) AS BIGINT)
-                     AS n_held,
-                   CAST(count(*) AS BIGINT) AS n_papers
-            FROM s{_GS_ROUNDS}) tot
-"""
-    return head + "".join(steps) + tail
-
-
-_GS_SQL = _gs_sql()
-
-
-@register("q_stable_matching", _GS_SQL)
-def q_stable_matching(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch Gale-Shapley deferred acceptance (McVitie-Wilson parallel
-    proposals) routing every 5th doc to the 20 source 'reviewers' under
-    capacity 5 — the task-to-annotator assignment primitive. The whole
-    per-paper state is (pointer, held): a held paper SITS at preference
-    position `pointer`, so pool = everyone at pref[pointer] and one
-    reviewer-side rank (md5 score, doc tie pins, top-5 kept) updates the
-    round — bumped papers advance their pointer exactly like fresh
-    rejections, which is what makes the parallel variant converge to the
-    proposer-optimal stable matching at fixpoint. Six rounds, honest
-    partial state (held flag, rejection counts, NULL reviewer when
-    unplaced), n_held/n_papers carries; the replica replays all six
-    rounds exactly AND proves no blocking pair exists among held pairs
-    when the round-6 state is a fixpoint.
-
-    Scale plan: each round is one equi-join into the preference grid plus
-    one reviewer-partitioned rank — no global windows; the grid is
-    papers x reviewer-dimension."""
-    docs = load_docs(spark, sf_dir)
-    papers = docs.filter(F.col("doc_id") % 5 == 0).select("doc_id")
-    reviewers = docs.select("source").distinct()
-    grid = (
-        papers.crossJoin(reviewers)
-        .select(
-            "doc_id", "source",
-            F.md5(
-                F.concat(F.lit("ps:"), F.col("doc_id").cast("string"), F.lit(":"), F.col("source"))
-            ).alias("pscore"),
-            F.md5(
-                F.concat(F.lit("rs:"), F.col("source"), F.lit(":"), F.col("doc_id").cast("string"))
-            ).alias("rscore"),
-        )
-        .withColumn(
-            "prank",
-            F.row_number()
-            .over(Window.partitionBy("doc_id").orderBy("pscore", "source"))
-            .cast("bigint"),
-        )
-        .localCheckpoint()
-    )
-    m = reviewers.count()
-    s = papers.select(
-        "doc_id", F.lit(0).cast("bigint").alias("ptr"), F.lit(False).alias("held")
-    ).localCheckpoint()
-    for _ in range(_GS_ROUNDS):
-        pool = (
-            s.filter(F.col("ptr") < m)
-            .join(
-                grid.select(
-                    F.col("doc_id").alias("gd"), "source", "rscore",
-                    F.col("prank").alias("gp"),
-                ),
-                (F.col("gd") == F.col("doc_id")) & (F.col("gp") == F.col("ptr") + 1),
-            )
-            .select("doc_id", "ptr", "source", "rscore")
-        )
-        kept = pool.withColumn(
-            "kept",
-            F.row_number().over(Window.partitionBy("source").orderBy("rscore", "doc_id"))
-            <= _GS_CAP,
-        )
-        s = (
-            kept.select(
-                "doc_id",
-                F.when(F.col("kept"), F.col("ptr")).otherwise(F.col("ptr") + 1).alias("ptr"),
-                F.col("kept").alias("held"),
-            )
-            .unionAll(
-                s.filter(F.col("ptr") >= m).select(
-                    "doc_id", "ptr", F.lit(False).alias("held")
-                )
-            )
-            .localCheckpoint()
-        )
-    tot = s.agg(
-        F.sum(F.when(F.col("held"), 1).otherwise(0)).cast("bigint").alias("n_held"),
-        F.count("*").cast("bigint").alias("n_papers"),
-    )
-    return (
-        s.join(
-            grid.select(
-                F.col("doc_id").alias("gd"), F.col("source").alias("rsrc"),
-                F.col("prank").alias("gp"),
-            ),
-            (F.col("gd") == F.col("doc_id")) & (F.col("gp") == F.col("ptr") + 1),
-            "left",
-        )
-        .crossJoin(F.broadcast(tot))
-        .select(
-            "doc_id",
-            F.col("ptr").cast("bigint").alias("n_rejections"),
-            "held",
-            F.when(F.col("held"), F.col("rsrc")).alias("reviewer"),
-            "n_held", "n_papers",
-        )
-    )
-
-
-# --------------------------------------------------------------------------
-# Round 4: storage-layout advisor trio — columnar encoding advisor
-# (plain/dict/RLE byte model, parquet-style per-page runs), space-filling
-# curve file layout (Hilbert vs Z-order vs row-major zonemap quality), and
-# a roaring-bitmap container advisor (array/bitmap/run per 4096-rid chunk).
-# --------------------------------------------------------------------------
-
-_ENC_COLS = [
-    ("l_returnflag", "l_returnflag"),
-    ("l_linestatus", "l_linestatus"),
-    ("l_quantity", "CAST(CAST(l_quantity AS BIGINT) AS VARCHAR)"),
-    ("l_shipdate", "CAST(CAST(l_shipdate AS DATE) AS VARCHAR)"),
-    ("l_suppkey", "CAST(l_suppkey AS VARCHAR)"),
-]
-
-_ENC_UNION = "\n  UNION ALL ".join(
-    f"SELECT '{n}' AS colname, {e} AS val, l_orderkey, l_linenumber,"
-    f" CAST(l_orderkey // 2048 AS BIGINT) AS page FROM lineitem"
-    for n, e in _ENC_COLS
-)
-
-_ENCODING_SIZE_SQL = f"""
-WITH cols AS (
-  {_ENC_UNION}
-),
-runs AS (
-  SELECT colname, val,
-         CASE WHEN lag(val) OVER (PARTITION BY colname, page
-                ORDER BY l_orderkey, l_linenumber, val) IS DISTINCT FROM val
-              THEN 1 ELSE 0 END AS is_run_start
-  FROM cols
-),
-dict AS (
-  SELECT colname, CAST(count(*) AS BIGINT) AS card,
-         CAST(sum(len(val) + 4) AS BIGINT) AS dict_table_bytes
-  FROM (SELECT DISTINCT colname, val FROM cols) GROUP BY 1
-),
-agg AS (
-  SELECT colname, CAST(count(*) AS BIGINT) AS n_rows,
-         CAST(sum(len(val) + 4) AS BIGINT) AS plain_bytes,
-         CAST(sum(is_run_start) AS BIGINT) AS n_runs
-  FROM runs GROUP BY 1
-),
-sized AS (
-  SELECT a.colname, a.n_rows, d.card, a.n_runs, a.plain_bytes,
-         CASE WHEN d.card <= 256 THEN 1
-              WHEN d.card <= 65536 THEN 2 ELSE 4 END AS code_bytes,
-         d.dict_table_bytes
-  FROM agg a JOIN dict d USING (colname)
-),
-model AS (
-  SELECT colname, n_rows, card, n_runs, plain_bytes,
-         CAST(dict_table_bytes + n_rows * code_bytes AS BIGINT) AS dict_bytes,
-         CAST(dict_table_bytes + n_runs * (code_bytes + 4) AS BIGINT)
-           AS rle_bytes
-  FROM sized
-)
-SELECT colname, n_rows, card, n_runs, plain_bytes, dict_bytes, rle_bytes,
-       CASE WHEN plain_bytes <= dict_bytes AND plain_bytes <= rle_bytes
-            THEN 'plain'
-            WHEN dict_bytes <= rle_bytes THEN 'dict' ELSE 'rle'
-       END AS best_encoding,
-       round(CAST(least(plain_bytes, dict_bytes, rle_bytes) AS DOUBLE)
-             / plain_bytes, 6) AS best_ratio
-FROM model
-"""
-
-
-@register("q_encoding_size", _ENCODING_SIZE_SQL)
-def q_encoding_size(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Columnar encoding advisor — the exact byte model a writer consults
-    when choosing parquet column encodings: for five lineitem columns
-    rendered as strings, plain = sum(len+4), dictionary = dict table +
-    n * byte-aligned code width (1/2/4 bytes by cardinality), and RLE =
-    dict table + runs * (code + 4-byte length), with runs counted
-    PER 2048-key page in the (l_orderkey, l_linenumber) layout order —
-    parquet RLE resets per page, which is also what keeps the run count
-    embarrassingly parallel. The layout order carries a trailing val
-    tiebreak because (l_orderkey, l_linenumber) is NOT unique in this
-    fixture — residual ties then hold equal values, which cannot move a
-    run boundary, so the count is total-order invariant. best_encoding
-    uses the deterministic tie order plain < dict < rle. Low-cardinality flags should pick dict/rle
-    and the near-unique suppkey should stay plain — the advisor's sanity
-    shape, asserted by the replica.
-
-    Scale plan: the 5-column fanout is a projection-side explode (no
-    spine join); runs come from one lag window per (column, page)
-    partition — page-local, so no global sort and no single-partition
-    window; everything else is map-side-combined groupBys."""
-    li = load(spark, sf_dir, "lineitem")
-    pairs = [
-        ("l_returnflag", F.col("l_returnflag")),
-        ("l_linestatus", F.col("l_linestatus")),
-        ("l_quantity", F.col("l_quantity").cast("long").cast("string")),
-        ("l_shipdate", F.col("l_shipdate").cast("date").cast("string")),
-        ("l_suppkey", F.col("l_suppkey").cast("string")),
-    ]
-    cols = li.select(
-        "l_orderkey",
-        "l_linenumber",
-        (F.col("l_orderkey") / 2048).cast("long").alias("page"),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(n).alias("colname"), e.alias("val"))
-                    for n, e in pairs
-                ]
-            )
-        ).alias("cv"),
-    ).select("l_orderkey", "l_linenumber", "page", "cv.colname", "cv.val")
-    w = Window.partitionBy("colname", "page").orderBy(
-        "l_orderkey", "l_linenumber", "val"
-    )
-    runs = cols.select(
-        "colname",
-        "val",
-        F.when(
-            ~F.lag("val").over(w).eqNullSafe(F.col("val")), 1
-        ).otherwise(0).alias("is_run_start"),
-    )
-    dict_t = (
-        cols.select("colname", "val")
-        .distinct()
-        .groupBy("colname")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("card"),
-            F.sum(F.length("val") + 4).cast("long").alias("dict_table_bytes"),
-        )
-    )
-    agg = runs.groupBy("colname").agg(
-        F.count(F.lit(1)).cast("long").alias("n_rows"),
-        F.sum(F.length("val") + 4).cast("long").alias("plain_bytes"),
-        F.sum("is_run_start").cast("long").alias("n_runs"),
-    )
-    code_bytes = (
-        F.when(F.col("card") <= 256, 1)
-        .when(F.col("card") <= 65536, 2)
-        .otherwise(4)
-    )
-    m = agg.join(F.broadcast(dict_t), "colname").select(
-        "colname", "n_rows", "card", "n_runs", "plain_bytes",
-        (F.col("dict_table_bytes") + F.col("n_rows") * code_bytes)
-        .cast("long")
-        .alias("dict_bytes"),
-        (F.col("dict_table_bytes") + F.col("n_runs") * (code_bytes + 4))
-        .cast("long")
-        .alias("rle_bytes"),
-    )
-    return m.select(
-        "colname", "n_rows", "card", "n_runs", "plain_bytes", "dict_bytes",
-        "rle_bytes",
-        F.when(
-            (F.col("plain_bytes") <= F.col("dict_bytes"))
-            & (F.col("plain_bytes") <= F.col("rle_bytes")),
-            "plain",
-        )
-        .when(F.col("dict_bytes") <= F.col("rle_bytes"), "dict")
-        .otherwise("rle")
-        .alias("best_encoding"),
-        F.round(
-            F.least("plain_bytes", "dict_bytes", "rle_bytes").cast("double")
-            / F.col("plain_bytes"),
-            6,
-        ).alias("best_ratio"),
-    )
-
-
-def _hilbert_sql_steps() -> str:
-    """Chained CTEs h3..h0 applying the order-4 Hilbert xy2d recursion
-    (s = 8,4,2,1) to columns (x, y, d). Pure integer arithmetic; the
-    rotation cases mirror the classic rot() exactly."""
-    out = []
-    prev = "cells"
-    for i, s in enumerate((8, 4, 2, 1)):
-        out.append(
-            f"""
-h{i} AS (
-  SELECT o_orderkey, x0, y0,
-         CASE WHEN (y // {s}) % 2 = 1 THEN x
-              WHEN (x // {s}) % 2 = 1 THEN 15 - y ELSE y END AS x,
-         CASE WHEN (y // {s}) % 2 = 1 THEN y
-              WHEN (x // {s}) % 2 = 1 THEN 15 - x ELSE x END AS y,
-         d + {s * s} * (CASE WHEN (x // {s}) % 2 = 1
-                             THEN 3 - (y // {s}) % 2
-                             ELSE (y // {s}) % 2 END) AS d
-  FROM {prev}
-)"""
-        )
-        prev = f"h{i}"
-    return ",".join(out)
-
-
-_HILBERT_SQL = f"""
-WITH cells AS (
-  SELECT o_orderkey,
-         CAST(o_custkey % 16 AS BIGINT) AS x0,
-         CAST((dayofyear(o_orderdate) - 1) // 23 AS BIGINT) AS y0,
-         CAST(o_custkey % 16 AS BIGINT) AS x,
-         CAST((dayofyear(o_orderdate) - 1) // 23 AS BIGINT) AS y,
-         CAST(0 AS BIGINT) AS d
-  FROM orders
-),{_hilbert_sql_steps()},
-keyed AS (
-  SELECT x0 AS x, y0 AS y, d,
-         CAST((x0 % 2) + 2 * (y0 % 2) + 4 * ((x0 // 2) % 2)
-              + 8 * ((y0 // 2) % 2) + 16 * ((x0 // 4) % 2)
-              + 32 * ((y0 // 4) % 2) + 64 * ((x0 // 8) % 2)
-              + 128 * ((y0 // 8) % 2) AS BIGINT) AS z
-  FROM h3
-),
-assign AS (
-  SELECT 'rowmajor' AS layout, CAST(y AS BIGINT) AS file, x, y FROM keyed
-  UNION ALL
-  SELECT 'zorder', CAST(z // 16 AS BIGINT), x, y FROM keyed
-  UNION ALL
-  SELECT 'hilbert', CAST(d // 16 AS BIGINT), x, y FROM keyed
-),
-boxes AS (
-  SELECT layout, file,
-         min(x) AS min_x, max(x) AS max_x, min(y) AS min_y, max(y) AS max_y,
-         CAST(count(*) AS BIGINT) AS n_rows
-  FROM assign GROUP BY 1, 2
-)
-SELECT layout,
-       CAST(count(*) AS BIGINT) AS n_files,
-       CAST(sum(n_rows) AS BIGINT) AS n_rows,
-       CAST(sum((max_x - min_x + 1) * (max_y - min_y + 1)) AS BIGINT)
-         AS sum_bbox_area,
-       CAST(max((max_x - min_x + 1) * (max_y - min_y + 1)) AS BIGINT)
-         AS max_bbox_area,
-       CAST(count(CASE WHEN max_x >= 4 AND min_x <= 7 THEN 1 END) AS BIGINT)
-         AS files_hit_x47,
-       CAST(count(CASE WHEN max_y >= 4 AND min_y <= 7 THEN 1 END) AS BIGINT)
-         AS files_hit_y47
-FROM boxes GROUP BY layout
-"""
-
-
-@register("q_hilbert_layout", _HILBERT_SQL)
-def q_hilbert_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Space-filling-curve file-layout advisor: orders are mapped onto a
-    16x16 (customer-bucket, day-of-year-bucket) grid and bin-packed into
-    16 files under three layouts — row-major (sort by y), bit-interleaved
-    Z-order, and an order-4 Hilbert curve (the exact xy2d recursion,
-    s = 8,4,2,1 with the n-bound rotation 15-x so coordinates never go
-    negative — integer division/modulo sign semantics differ between
-    engines below zero — unrolled into integer CASE arithmetic; verified
-    a true bijection with unit steps by the replica). Per file the (x, y)
-    bounding box is the zonemap a reader prunes with, so sum/max bbox
-    area and the file-hit counts for the range predicates x in [4,7] and
-    y in [4,7] rank the layouts: row-major prunes only y, the curves
-    prune BOTH dimensions with Hilbert's boxes tighter than Z-order's —
-    the multi-dimensional clustering argument for Hilbert compaction at
-    100 TB, in exact integers.
-
-    Scale plan: curve indices are pure per-row projections (whole-stage
-    codegen, no joins); the layout fanout is a 3-way projection union;
-    zonemaps come from one map-side-combinable groupBy per (layout, file)
-    and a 48-row rollup."""
-    orders = load(spark, sf_dir, "orders")
-    x0 = (F.col("o_custkey") % 16).cast("long")
-    y0 = ((F.dayofyear("o_orderdate") - 1) / 23).cast("long")
-    cells = orders.select(
-        x0.alias("x0"), y0.alias("y0"),
-        x0.alias("x"), y0.alias("y"), F.lit(0).cast("long").alias("d"),
-    )
-    for s in (8, 4, 2, 1):
-        rx = ((F.col("x") / s).cast("long") % 2)
-        ry = ((F.col("y") / s).cast("long") % 2)
-        cells = cells.select(
-            "x0",
-            "y0",
-            F.when(ry == 1, F.col("x"))
-            .when(rx == 1, 15 - F.col("y"))
-            .otherwise(F.col("y"))
-            .alias("x"),
-            F.when(ry == 1, F.col("y"))
-            .when(rx == 1, 15 - F.col("x"))
-            .otherwise(F.col("x"))
-            .alias("y"),
-            (
-                F.col("d")
-                + s * s * F.when(rx == 1, 3 - ry).otherwise(ry)
-            ).alias("d"),
-        )
-    zbits = None
-    for i in range(4):
-        xb = ((F.col("x0") / (2**i)).cast("long") % 2) * (4**i)
-        yb = ((F.col("y0") / (2**i)).cast("long") % 2) * (2 * 4**i)
-        zbits = xb + yb if zbits is None else zbits + xb + yb
-    keyed = cells.select(
-        F.col("x0").alias("x"), F.col("y0").alias("y"), "d",
-        zbits.cast("long").alias("z"),
-    )
-    assign = (
-        keyed.select(F.lit("rowmajor").alias("layout"),
-                     F.col("y").cast("long").alias("file"), "x", "y")
-        .unionAll(
-            keyed.select(F.lit("zorder").alias("layout"),
-                         (F.col("z") / 16).cast("long").alias("file"), "x", "y")
-        )
-        .unionAll(
-            keyed.select(F.lit("hilbert").alias("layout"),
-                         (F.col("d") / 16).cast("long").alias("file"), "x", "y")
-        )
-    )
-    boxes = assign.groupBy("layout", "file").agg(
-        F.min("x").alias("min_x"), F.max("x").alias("max_x"),
-        F.min("y").alias("min_y"), F.max("y").alias("max_y"),
-        F.count(F.lit(1)).cast("long").alias("n_rows"),
-    )
-    area = (F.col("max_x") - F.col("min_x") + 1) * (
-        F.col("max_y") - F.col("min_y") + 1
-    )
-    return boxes.groupBy("layout").agg(
-        F.count(F.lit(1)).cast("long").alias("n_files"),
-        F.sum("n_rows").cast("long").alias("n_rows"),
-        F.sum(area).cast("long").alias("sum_bbox_area"),
-        F.max(area).cast("long").alias("max_bbox_area"),
-        F.count(F.when((F.col("max_x") >= 4) & (F.col("min_x") <= 7), 1))
-        .cast("long")
-        .alias("files_hit_x47"),
-        F.count(F.when((F.col("max_y") >= 4) & (F.col("min_y") <= 7), 1))
-        .cast("long")
-        .alias("files_hit_y47"),
-    )
-
-
-_BITMAP_SQL = """
-WITH rids AS (
-  SELECT o_orderpriority AS val, o_orderkey AS rid,
-         CAST(o_orderkey // 4096 AS BIGINT) AS chunk
-  FROM orders
-),
-runs AS (
-  SELECT val, chunk, rid,
-         CASE WHEN lag(rid) OVER (PARTITION BY val, chunk ORDER BY rid)
-                   = rid - 1 THEN 0 ELSE 1 END AS is_run_start
-  FROM rids
-),
-per_chunk AS (
-  SELECT val, chunk, CAST(count(*) AS BIGINT) AS n,
-         CAST(sum(is_run_start) AS BIGINT) AS n_runs
-  FROM runs GROUP BY 1, 2
-),
-sized AS (
-  SELECT val, chunk, n, n_runs,
-         2 + 2 * n AS b_array, CAST(512 AS BIGINT) AS b_bitmap,
-         2 + 4 * n_runs AS b_run
-  FROM per_chunk
-),
-chosen AS (
-  SELECT val, chunk, n, n_runs, b_array, b_bitmap, b_run,
-         CASE WHEN b_array <= b_bitmap AND b_array <= b_run THEN 'array'
-              WHEN b_bitmap <= b_run THEN 'bitmap' ELSE 'run' END AS cont,
-         least(b_array, b_bitmap, b_run) AS b_chosen
-  FROM sized
-)
-SELECT val AS value,
-       CAST(sum(n) AS BIGINT) AS n_rids,
-       CAST(count(*) AS BIGINT) AS n_chunks,
-       CAST(count(CASE WHEN cont = 'array' THEN 1 END) AS BIGINT) AS n_array,
-       CAST(count(CASE WHEN cont = 'bitmap' THEN 1 END) AS BIGINT) AS n_bitmap,
-       CAST(count(CASE WHEN cont = 'run' THEN 1 END) AS BIGINT) AS n_run,
-       CAST(sum(b_chosen) AS BIGINT) AS bytes_chosen,
-       CAST(sum(n) * 8 AS BIGINT) AS bytes_plain,
-       round(CAST(sum(b_chosen) AS DOUBLE) / (sum(n) * 8), 6)
-         AS compression_ratio
-FROM chosen GROUP BY 1
-"""
-
-
-@register("q_bitmap_index", _BITMAP_SQL)
-def q_bitmap_index(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Roaring-bitmap container advisor (Chambi/Lemire 2016, scaled to
-    4096-rid chunks): for each o_orderpriority posting list, every chunk
-    picks the cheapest of the three roaring containers — sorted array
-    (2 + 2n bytes), fixed bitmap (512 bytes), run container
-    (2 + 4*runs) — with the deterministic tie order array < bitmap <
-    run; runs are maximal consecutive-rid intervals within the chunk.
-    The per-value rollup (container mix, chosen bytes vs the 8-byte/rid
-    plain list) is the index-sizing ledger a 100 TB store consults before
-    materializing a secondary index: 1/5-selectivity postings should land
-    mostly in array containers well under the plain size.
-
-    Scale plan: run detection is one lag window per (value, chunk)
-    partition — chunk-local, parallel by construction; container choice
-    is pure projection; two map-side-combinable groupBys end in 5 rows."""
-    orders = load(spark, sf_dir, "orders")
-    rids = orders.select(
-        F.col("o_orderpriority").alias("val"),
-        F.col("o_orderkey").alias("rid"),
-        (F.col("o_orderkey") / 4096).cast("long").alias("chunk"),
-    )
-    w = Window.partitionBy("val", "chunk").orderBy("rid")
-    runs = rids.select(
-        "val", "chunk", "rid",
-        F.when(F.lag("rid").over(w) == F.col("rid") - 1, 0)
-        .otherwise(1)
-        .alias("is_run_start"),
-    )
-    per_chunk = runs.groupBy("val", "chunk").agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("is_run_start").cast("long").alias("n_runs"),
-    )
-    sized = per_chunk.select(
-        "val", "n", "n_runs",
-        (2 + 2 * F.col("n")).alias("b_array"),
-        F.lit(512).cast("long").alias("b_bitmap"),
-        (2 + 4 * F.col("n_runs")).alias("b_run"),
-    )
-    chosen = sized.select(
-        "val", "n",
-        F.when(
-            (F.col("b_array") <= F.col("b_bitmap"))
-            & (F.col("b_array") <= F.col("b_run")),
-            "array",
-        )
-        .when(F.col("b_bitmap") <= F.col("b_run"), "bitmap")
-        .otherwise("run")
-        .alias("cont"),
-        F.least("b_array", "b_bitmap", "b_run").alias("b_chosen"),
-    )
-    return chosen.groupBy(F.col("val").alias("value")).agg(
-        F.sum("n").cast("long").alias("n_rids"),
-        F.count(F.lit(1)).cast("long").alias("n_chunks"),
-        F.count(F.when(F.col("cont") == "array", 1)).cast("long").alias("n_array"),
-        F.count(F.when(F.col("cont") == "bitmap", 1)).cast("long").alias("n_bitmap"),
-        F.count(F.when(F.col("cont") == "run", 1)).cast("long").alias("n_run"),
-        F.sum("b_chosen").cast("long").alias("bytes_chosen"),
-        (F.sum("n") * 8).cast("long").alias("bytes_plain"),
-        F.round(
-            F.sum("b_chosen").cast("double") / (F.sum("n") * 8), 6
-        ).alias("compression_ratio"),
-    )
-
-
-# --------------------------------------------------------------------------
-# Round 4: an integer-weight WAND pruning audit (Broder 2003 max-score
-# document skipping).
-# --------------------------------------------------------------------------
-
-
-_WAND_SQL = f"""
-WITH {SQL_DOCS_TOKS.strip()},
-ti AS (
-  SELECT d.doc_id, lower(t.tok) AS tok, CAST(count(*) AS BIGINT) AS tf
-  FROM docs d, unnest(toks) AS t(tok) GROUP BY 1, 2
-),
-nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM documents),
-dft AS (
-  SELECT tok, CAST(count(*) AS BIGINT) AS df,
-         CAST(sum(tf) AS BIGINT) AS cf
-  FROM ti GROUP BY 1
-),
-wt AS (
-  SELECT d.tok, d.df, CAST(nn.n // d.df AS BIGINT) AS w
-  FROM dft d CROSS JOIN nn
-),
-qt AS (
-  SELECT tok, w,
-         CAST((row_number() OVER (ORDER BY cf DESC, tok) - 1) // 2 + 1
-              AS BIGINT) AS qid,
-         row_number() OVER (ORDER BY cf DESC, tok) AS rn
-  FROM dft JOIN wt USING (tok)
-  QUALIFY rn <= 10
-),
-cand AS (
-  SELECT q.qid, t.doc_id, q.tok, t.tf * q.w AS part
-  FROM qt q JOIN ti t USING (tok)
-),
-scores AS (
-  SELECT qid, doc_id, CAST(sum(part) AS BIGINT) AS score
-  FROM cand GROUP BY 1, 2
-),
-theta AS (
-  SELECT qid, score AS th FROM (
-    SELECT qid, score,
-           row_number() OVER (PARTITION BY qid
-                              ORDER BY score DESC, doc_id) AS rk
-    FROM scores
-  ) WHERE rk = 3
-),
-ubt AS (
-  SELECT c.qid, c.tok, CAST(max(c.part) AS BIGINT) AS u
-  FROM cand c GROUP BY 1, 2
-),
-ubd AS (
-  SELECT c.qid, c.doc_id, CAST(sum(u.u) AS BIGINT) AS ub
-  FROM (SELECT DISTINCT qid, doc_id, tok FROM cand) c
-  JOIN ubt u ON u.qid = c.qid AND u.tok = c.tok
-  GROUP BY 1, 2
-),
-j AS (
-  SELECT s.qid, s.doc_id, s.score, u.ub, t.th
-  FROM scores s JOIN ubd u USING (qid, doc_id) JOIN theta t USING (qid)
-),
-terms AS (
-  SELECT qid, min(tok) AS term_a, max(tok) AS term_b FROM qt GROUP BY 1
-)
-SELECT j.qid, tm.term_a, tm.term_b,
-       CAST(count(*) AS BIGINT) AS n_candidates,
-       CAST(max(j.th) AS BIGINT) AS theta,
-       CAST(count(CASE WHEN j.ub < j.th THEN 1 END) AS BIGINT) AS n_prunable,
-       round(CAST(count(CASE WHEN j.ub < j.th THEN 1 END) AS DOUBLE)
-             / count(*), 6) AS prune_rate,
-       CAST(max(j.ub) AS BIGINT) AS max_ub,
-       CAST(count(CASE WHEN j.ub < j.th AND j.score >= j.th THEN 1 END)
-            AS BIGINT) AS n_violations
-FROM j JOIN terms tm USING (qid)
-GROUP BY 1, 2, 3
-"""
-
-
-@register("q_wand_pruning", _WAND_SQL)
-def q_wand_pruning(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """WAND max-score pruning audit (Broder et al. 2003), the
-    document-skipping arithmetic behind every web-scale top-k retrieval
-    engine, in exact integers: term weights are the integer idf
-    surrogate w = N div df (the WAND MECHANICS under audit, not BM25
-    calibration — the repo's float BM25 lives in q_bm25_search), five
-    2-term queries are drawn from the collection-frequency top-10, and
-    for each query theta = the 3rd-best full score, U_t = the max
-    single-document contribution of term t, and a candidate is prunable
-    iff its upper bound sum U_t < theta — i.e. the engine could skip
-    scoring it entirely. n_violations counts prunable docs whose true
-    score still reached theta: ZERO by the score <= UB invariant, and
-    shipped in-row so the audit proves its own safety. prune_rate is the
-    fraction of postings traversal WAND saves at k=3.
-
-    Scale plan: one inverted-index build (map-side-combined), broadcast
-    10-row query spine, per-query theta via a bounded window; no
-    corpus self-joins. 1-row N carry whitelisted."""
-    from cliner_spark.tokenization import tokens_col
-
-    docs = load_docs(spark, sf_dir)
-    ti = (
-        docs.select(
-            "doc_id", F.explode(tokens_col(F.col("text"))).alias("t")
-        )
-        .select("doc_id", F.lower("t").alias("tok"))
-        .groupBy("doc_id", "tok")
-        .agg(F.count(F.lit(1)).cast("long").alias("tf"))
-    )
-    nn = docs.agg(F.count(F.lit(1)).cast("long").alias("n"))
-    dft = ti.groupBy("tok").agg(
-        F.count(F.lit(1)).cast("long").alias("df"),
-        F.sum("tf").cast("long").alias("cf"),
-    )
-    wt = dft.crossJoin(F.broadcast(nn)).select(
-        "tok", "df", "cf", F.floor(F.col("n") / F.col("df")).cast("long").alias("w")
-    )
-    rn = F.row_number().over(Window.orderBy(F.desc("cf"), F.asc("tok")))
-    qt = (
-        wt.select("tok", "w", rn.alias("rn"))
-        .filter(F.col("rn") <= 10)
-        .select(
-            "tok", "w",
-            (F.floor((F.col("rn") - 1) / 2) + 1).cast("long").alias("qid"),
-        )
-    )
-    cand = F.broadcast(qt).join(ti, "tok").select(
-        "qid", "doc_id", "tok", (F.col("tf") * F.col("w")).alias("part")
-    )
-    scores = cand.groupBy("qid", "doc_id").agg(
-        F.sum("part").cast("long").alias("score")
-    )
-    theta = (
-        scores.select(
-            "qid", "score",
-            F.row_number()
-            .over(
-                Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("doc_id"))
-            )
-            .alias("rk"),
-        )
-        .filter(F.col("rk") == 3)
-        .select("qid", F.col("score").alias("th"))
-    )
-    ubt = cand.groupBy("qid", "tok").agg(F.max("part").cast("long").alias("u"))
-    ubd = (
-        cand.select("qid", "doc_id", "tok")
-        .distinct()
-        .join(F.broadcast(ubt), ["qid", "tok"])
-        .groupBy("qid", "doc_id")
-        .agg(F.sum("u").cast("long").alias("ub"))
-    )
-    j = scores.join(ubd, ["qid", "doc_id"]).join(F.broadcast(theta), "qid")
-    terms = qt.groupBy("qid").agg(
-        F.min("tok").alias("term_a"), F.max("tok").alias("term_b")
-    )
-    return (
-        j.groupBy("qid")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_candidates"),
-            F.max("th").cast("long").alias("theta"),
-            F.count(F.when(F.col("ub") < F.col("th"), 1))
-            .cast("long")
-            .alias("n_prunable"),
-            F.round(
-                F.count(F.when(F.col("ub") < F.col("th"), 1)).cast("double")
-                / F.count(F.lit(1)),
-                6,
-            ).alias("prune_rate"),
-            F.max("ub").cast("long").alias("max_ub"),
-            F.count(
-                F.when(
-                    (F.col("ub") < F.col("th")) & (F.col("score") >= F.col("th")),
-                    1,
-                )
-            )
-            .cast("long")
-            .alias("n_violations"),
-        )
-        .join(F.broadcast(terms), "qid")
-        .select(
-            "qid", "term_a", "term_b", "n_candidates", "theta", "n_prunable",
-            "prune_rate", "max_ub", "n_violations",
-        )
-    )
-
-
-# --------------------------------------------------------------------------
-# Round 4: bipartite-graph / LLM-serving / parametric-trend trio —
-# butterfly counting (the bipartite clustering census), a nucleus /
-# top-k sampling mass audit over exact bigram successor distributions,
-# and OLS with exact rational coefficients + an integer residual-sign
-# serial-correlation diagnostic.
-# --------------------------------------------------------------------------
-
-_BUTTERFLY_SQL = f"""
-WITH {SQL_DOCS_TOKS.strip()},
-bt AS (
-  SELECT DISTINCT d.doc_id, lower(t.tok) AS tok
-  FROM docs d, unnest(toks) AS t(tok)
-),
-dfk AS (
-  SELECT tok, CAST(count(*) AS BIGINT) AS df FROM bt GROUP BY 1
-),
-kept AS (
-  SELECT b.doc_id, b.tok FROM bt b JOIN dfk USING (tok) WHERE dfk.df <= 50
-),
-pairs AS (
-  SELECT a.doc_id AS u, b.doc_id AS v, CAST(count(*) AS BIGINT) AS c
-  FROM kept a JOIN kept b ON a.tok = b.tok AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-),
-wstat AS (
-  SELECT CAST(sum((df * (df - 1)) // 2) AS BIGINT) AS wedges,
-         CAST(count(*) AS BIGINT) AS n_tokens_used,
-         CAST(sum(df) AS BIGINT) AS n_edges
-  FROM dfk WHERE df <= 50
-),
-bstat AS (
-  SELECT CAST(coalesce(sum((c * (c - 1)) // 2), 0) AS BIGINT) AS butterflies,
-         CAST(count(*) AS BIGINT) AS n_doc_pairs,
-         CAST(coalesce(max(c), 0) AS BIGINT) AS max_common
-  FROM pairs
-)
-SELECT w.n_edges, w.n_tokens_used, w.wedges, b.n_doc_pairs, b.max_common,
-       b.butterflies,
-       round(CAST(b.butterflies AS DOUBLE) / w.wedges, 6) AS butterfly_density
-FROM wstat w CROSS JOIN bstat b
-"""
-
-
-@register("q_butterfly_count", _BUTTERFLY_SQL)
-def q_butterfly_count(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Butterfly census of the bipartite doc-token graph (Sanei-Mehri et
-    al. 2018) — the bipartite analog of q_triangles' clustering census:
-    a butterfly is a (2 docs x 2 shared tokens) 4-cycle, counted exactly
-    as sum over doc pairs of C(common, 2) from the inverted-index pair
-    frame, beside the wedge count sum over tokens of C(df, 2) (two docs
-    through one token) — their ratio is the bipartite clustering density
-    that says how often co-occurrence REPEATS, the cohesion signal dense
-    template corpora light up. Tokens with df > 50 are excluded (the
-    same df-cut contract as jaccard_pairs: stopword-grade tokens create
-    quadratic wedge mass and butterflies among them measure the
-    vocabulary, not the corpus; production uses degree-ordered counting
-    with the identical cut).
-
-    Scale plan: one inverted-index self-join bounded by the df-cut (per-
-    token fanout <= C(50,2)), map-side-combined pair counts, two
-    constant-size stat frames crossJoined (1-row carries,
-    whitelisted)."""
-    from cliner_spark.tokenization import tokens_col
-
-    docs = load_docs(spark, sf_dir)
-    bt = (
-        docs.select("doc_id", F.explode(tokens_col(F.col("text"))).alias("t"))
-        .select("doc_id", F.lower("t").alias("tok"))
-        .distinct()
-    )
-    dfk = bt.groupBy("tok").agg(F.count(F.lit(1)).cast("long").alias("df"))
-    kept = bt.join(dfk.filter(F.col("df") <= 50), "tok").select("doc_id", "tok")
-    a = kept.select(F.col("tok"), F.col("doc_id").alias("u"))
-    b = kept.select(F.col("tok"), F.col("doc_id").alias("v"))
-    pairs = (
-        a.join(b, "tok")
-        .filter(F.col("u") < F.col("v"))
-        .groupBy("u", "v")
-        .agg(F.count(F.lit(1)).cast("long").alias("c"))
-    )
-    wstat = dfk.filter(F.col("df") <= 50).agg(
-        F.sum(((F.col("df") * (F.col("df") - 1)) / 2).cast("long")).alias("wedges"),
-        F.count(F.lit(1)).cast("long").alias("n_tokens_used"),
-        F.sum("df").cast("long").alias("n_edges"),
-    )
-    bstat = pairs.agg(
-        F.coalesce(F.sum(((F.col("c") * (F.col("c") - 1)) / 2).cast("long")), F.lit(0))
-        .cast("long")
-        .alias("butterflies"),
-        F.count(F.lit(1)).cast("long").alias("n_doc_pairs"),
-        F.coalesce(F.max("c"), F.lit(0)).cast("long").alias("max_common"),
-    )
-    return wstat.crossJoin(F.broadcast(bstat)).select(
-        "n_edges", "n_tokens_used", "wedges", "n_doc_pairs", "max_common",
-        "butterflies",
-        F.round(
-            F.col("butterflies").cast("double") / F.col("wedges"), 6
-        ).alias("butterfly_density"),
-    )
-
-
-_NUCLEUS_SQL = f"""
-WITH {SQL_DOCS_TOKS.strip()},
-tk AS (
-  SELECT d.doc_id, CAST(t.i AS BIGINT) AS pos, lower(d.toks[t.i + 1]) AS tok
-  FROM docs d, unnest(range(len(d.toks))) AS t(i)
-),
-uni AS (SELECT tok, CAST(count(*) AS BIGINT) AS n FROM tk GROUP BY 1),
-ctx AS (
-  SELECT tok AS context, n,
-         row_number() OVER (ORDER BY n DESC, tok) AS rn
-  FROM uni QUALIFY rn <= 8
-),
-big AS (
-  SELECT a.tok AS context, b.tok AS nxt, CAST(count(*) AS BIGINT) AS c
-  FROM tk a JOIN tk b ON a.doc_id = b.doc_id AND b.pos = a.pos + 1
-  WHERE a.tok IN (SELECT context FROM ctx)
-  GROUP BY 1, 2
-),
-ranked AS (
-  SELECT context, nxt, c,
-         row_number() OVER (PARTITION BY context ORDER BY c DESC, nxt) AS rk,
-         sum(c) OVER (PARTITION BY context ORDER BY c DESC, nxt
-                      ROWS UNBOUNDED PRECEDING) AS cum,
-         sum(c) OVER (PARTITION BY context) AS tot
-  FROM big
-),
-nuc AS (
-  SELECT context, CAST(min(rk) AS BIGINT) AS nucleus_size_p90
-  FROM ranked WHERE 10 * cum >= 9 * tot GROUP BY 1
-),
-agg AS (
-  SELECT context, CAST(max(tot) AS BIGINT) AS total,
-         CAST(count(*) AS BIGINT) AS n_successors,
-         CAST(max(CASE WHEN rk = 1 THEN c END) AS BIGINT) AS greedy_count,
-         max(CASE WHEN rk = 1 THEN nxt END) AS greedy_token,
-         CAST(coalesce(sum(CASE WHEN rk <= 5 THEN c END), 0) AS BIGINT)
-           AS top5_mass
-  FROM ranked GROUP BY 1
-)
-SELECT a.context, a.n_successors, a.total, a.greedy_token, a.greedy_count,
-       n.nucleus_size_p90, a.top5_mass,
-       round(CAST(a.top5_mass AS DOUBLE) / a.total, 6) AS top5_rate,
-       round(CAST(a.greedy_count AS DOUBLE) / a.total, 6) AS greedy_rate
-FROM agg a JOIN nuc n USING (context)
-"""
-
-
-@register("q_nucleus_audit", _NUCLEUS_SQL)
-def q_nucleus_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Nucleus / top-k sampling mass audit (Holtzman 2020's top-p over
-    exact corpus bigram distributions) — the decoding-parameter ledger an
-    inference fleet consults before fixing top_p/top_k defaults: for the
-    8 most frequent context tokens, successors rank by exact bigram
-    count (token tie pins), and nucleus_size_p90 is the SMALLEST prefix
-    whose cumulative mass reaches 90%, decided by the cross-multiplied
-    integer test 10*cum >= 9*total — no division anywhere near the
-    decision. top5_mass (the top-k=5 truncation mass) and the greedy
-    argmax token sit beside it: a flat distribution (large nucleus, low
-    greedy rate) needs temperature; a peaked one saturates at k=5. All
-    counts exact BIGINTs; the two rates are single rounded divisions.
-
-    Scale plan: bigrams come from one positional self-join per doc
-    (adjacent positions, equi on doc_id), pre-filtered to the 8-row
-    broadcast context set; ranking windows run per-context on
-    vocabulary-bounded frames."""
-    from cliner_spark.tokenization import tokens_col
-
-    docs = load_docs(spark, sf_dir)
-    tk = docs.select(
-        "doc_id",
-        F.posexplode(tokens_col(F.col("text"))).alias("pos", "t"),
-    ).select("doc_id", "pos", F.lower("t").alias("tok"))
-    uni = tk.groupBy("tok").agg(F.count(F.lit(1)).cast("long").alias("n"))
-    ctx = (
-        uni.select(
-            F.col("tok").alias("context"),
-            F.row_number().over(Window.orderBy(F.desc("n"), F.asc("tok"))).alias("rn"),
-        )
-        .filter(F.col("rn") <= 8)
-        .select("context")
-    )
-    a = tk.select("doc_id", "pos", F.col("tok").alias("context")).join(
-        F.broadcast(ctx), "context"
-    )
-    b = tk.select(
-        F.col("doc_id").alias("doc_b"), F.col("pos").alias("pos_b"),
-        F.col("tok").alias("nxt"),
-    )
-    big = (
-        a.join(
-            b,
-            (F.col("doc_id") == F.col("doc_b"))
-            & (F.col("pos_b") == F.col("pos") + 1),
-        )
-        .groupBy("context", "nxt")
-        .agg(F.count(F.lit(1)).cast("long").alias("c"))
-    )
-    wo = Window.partitionBy("context").orderBy(F.desc("c"), F.asc("nxt"))
-    wp = Window.partitionBy("context")
-    ranked = big.select(
-        "context", "nxt", "c",
-        F.row_number().over(wo).alias("rk"),
-        F.sum("c").over(wo.rowsBetween(Window.unboundedPreceding, 0)).alias("cum"),
-        F.sum("c").over(wp).alias("tot"),
-    )
-    nuc = (
-        ranked.filter(10 * F.col("cum") >= 9 * F.col("tot"))
-        .groupBy("context")
-        .agg(F.min("rk").cast("long").alias("nucleus_size_p90"))
-    )
-    agg = ranked.groupBy("context").agg(
-        F.max("tot").cast("long").alias("total"),
-        F.count(F.lit(1)).cast("long").alias("n_successors"),
-        F.max(F.when(F.col("rk") == 1, F.col("c"))).cast("long").alias("greedy_count"),
-        F.max(F.when(F.col("rk") == 1, F.col("nxt"))).alias("greedy_token"),
-        F.coalesce(F.sum(F.when(F.col("rk") <= 5, F.col("c"))), F.lit(0))
-        .cast("long")
-        .alias("top5_mass"),
-    )
-    return agg.join(nuc, "context").select(
-        "context", "n_successors", "total", "greedy_token", "greedy_count",
-        "nucleus_size_p90", "top5_mass",
-        F.round(F.col("top5_mass").cast("double") / F.col("total"), 6).alias(
-            "top5_rate"
-        ),
-        F.round(F.col("greedy_count").cast("double") / F.col("total"), 6).alias(
-            "greedy_rate"
-        ),
-    )
-
-
-_OLS_SQL = """
-WITH daily AS (
-  SELECT event_type,
-         CAST(datediff('day', DATE '1970-01-01', CAST(ts AS DATE)) AS BIGINT)
-           AS d,
-         CAST(count(*) AS BIGINT) AS c
-  FROM events GROUP BY 1, 2
-),
-bounds AS (
-  SELECT event_type, min(d) AS d0, max(d) AS d1 FROM daily GROUP BY 1
-),
-spine AS (
-  SELECT b.event_type, CAST(t.i AS BIGINT) AS t, b.d0 + t.i AS d
-  FROM bounds b, unnest(range(CAST(b.d1 - b.d0 + 1 AS BIGINT))) AS t(i)
-),
-series AS (
-  SELECT s.event_type, s.t, coalesce(dy.c, 0) AS x
-  FROM spine s LEFT JOIN daily dy
-    ON dy.event_type = s.event_type AND dy.d = s.d
-),
-suff AS (
-  SELECT event_type, CAST(count(*) AS BIGINT) AS n,
-         CAST(sum(t) AS BIGINT) AS st, CAST(sum(x) AS BIGINT) AS sx,
-         CAST(sum(t * t) AS BIGINT) AS stt,
-         CAST(sum(t * x) AS BIGINT) AS stx,
-         CAST(sum(x * x) AS BIGINT) AS sxx
-  FROM series GROUP BY 1
-),
-coefs AS (
-  SELECT event_type, n, st, sx, stt, stx, sxx,
-         CAST(n * stx - st * sx AS BIGINT) AS b_num,
-         CAST(n * stt - st * st AS BIGINT) AS b_den
-  FROM suff
-),
-resid AS (
-  SELECT s.event_type,
-         s.t,
-         c.b_den * s.x * c.n - (c.sx * c.b_den - c.b_num * c.st)
-           - c.n * c.b_num * s.t AS r_scaled
-  FROM series s JOIN coefs c USING (event_type)
-),
-signs AS (
-  SELECT event_type,
-         CASE WHEN r_scaled > 0 THEN 1 WHEN r_scaled < 0 THEN -1 ELSE 0 END
-           AS sg,
-         lag(CASE WHEN r_scaled > 0 THEN 1 WHEN r_scaled < 0 THEN -1
-                  ELSE 0 END)
-           OVER (PARTITION BY event_type ORDER BY t) AS sg_prev
-  FROM resid
-),
-ser AS (
-  SELECT event_type,
-         CAST(count(CASE WHEN sg * sg_prev = 1 THEN 1 END) AS BIGINT)
-           AS n_same_sign,
-         CAST(count(CASE WHEN sg * sg_prev = -1 THEN 1 END) AS BIGINT)
-           AS n_flip_sign
-  FROM signs WHERE sg_prev IS NOT NULL GROUP BY 1
-)
-SELECT c.event_type, c.n AS n_days, c.b_num AS slope_num,
-       c.b_den AS slope_den,
-       CAST(c.sx * c.b_den - c.b_num * c.st AS BIGINT) AS icept_num,
-       CAST(c.n * c.b_den AS BIGINT) AS icept_den,
-       round(CAST(c.b_num AS DOUBLE) / c.b_den, 6) AS slope,
-       round(CAST(c.sx * c.b_den - c.b_num * c.st AS DOUBLE)
-             / (c.n * c.b_den), 6) AS intercept,
-       round(CAST(c.b_num AS DOUBLE) * c.b_num
-             / (CAST(c.b_den AS DOUBLE)
-                * (c.n * c.sxx - c.sx * c.sx)), 6) AS r2,
-       s.n_same_sign, s.n_flip_sign
-FROM coefs c JOIN ser s USING (event_type)
-"""
-
-
-@register("q_ols_trend", _OLS_SQL)
-def q_ols_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-event-type OLS trend over the zero-filled daily series — the
-    parametric baseline bracketed by q_theil_sen (robust slope) and
-    q_mann_kendall (distribution-free test): slope and intercept ship as
-    EXACT rationals from integer sufficient statistics (b = (nStx -
-    StSx)/(nStt - St^2), a = (Sx*b_den - b_num*St)/(n*b_den)), R^2 as
-    one deterministic double chain over them. Serial correlation of the
-    residuals — what Durbin-Watson measures, whose exact square sums
-    overflow BIGINT — is audited instead through the INTEGER residual
-    sign sequence: r_scaled = n*b_den*x_t - (icept-scale) - n*b_num*t is
-    an exact integer with the same sign as the true residual, and
-    n_same_sign vs n_flip_sign of adjacent days is the runs-style
-    positive/negative autocorrelation verdict (same >> flip = sticky
-    residuals = understated OLS standard errors).
-
-    Scale plan: one daily rollup, per-type spine explode (no NLJ), one
-    sufficient-stats groupBy, one equi-join back for residual signs with
-    a per-type lag window on day-domain-bounded frames."""
-    ev = load(spark, sf_dir, "events")
-    daily = ev.groupBy(
-        "event_type",
-        F.datediff(F.col("ts").cast("date"), F.lit("1970-01-01"))
-        .cast("long")
-        .alias("d"),
-    ).agg(F.count(F.lit(1)).cast("long").alias("c"))
-    bounds = daily.groupBy("event_type").agg(
-        F.min("d").alias("d0"), F.max("d").alias("d1")
-    )
-    spine = bounds.select(
-        "event_type",
-        F.posexplode(
-            F.sequence(F.col("d0"), F.col("d1"))
-        ).alias("t", "d"),
-    ).select("event_type", F.col("t").cast("long").alias("t"), "d")
-    series = spine.join(daily, ["event_type", "d"], "left").select(
-        "event_type", "t", F.coalesce("c", F.lit(0)).cast("long").alias("x")
-    )
-    suff = series.groupBy("event_type").agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.sum("t").cast("long").alias("st"),
-        F.sum("x").cast("long").alias("sx"),
-        F.sum(F.col("t") * F.col("t")).cast("long").alias("stt"),
-        F.sum(F.col("t") * F.col("x")).cast("long").alias("stx"),
-        F.sum(F.col("x") * F.col("x")).cast("long").alias("sxx"),
-    )
-    coefs = suff.select(
-        "*",
-        (F.col("n") * F.col("stx") - F.col("st") * F.col("sx"))
-        .cast("long")
-        .alias("b_num"),
-        (F.col("n") * F.col("stt") - F.col("st") * F.col("st"))
-        .cast("long")
-        .alias("b_den"),
-    )
-    resid = series.join(F.broadcast(coefs), "event_type").select(
-        "event_type", "t",
-        (
-            F.col("b_den") * F.col("x") * F.col("n")
-            - (F.col("sx") * F.col("b_den") - F.col("b_num") * F.col("st"))
-            - F.col("n") * F.col("b_num") * F.col("t")
-        ).alias("r_scaled"),
-    )
-    sg = (
-        F.when(F.col("r_scaled") > 0, 1)
-        .when(F.col("r_scaled") < 0, -1)
-        .otherwise(0)
-    )
-    wt = Window.partitionBy("event_type").orderBy("t")
-    signs = resid.select(
-        "event_type", sg.alias("sg"), F.lag(sg).over(wt).alias("sg_prev")
-    ).filter(F.col("sg_prev").isNotNull())
-    ser = signs.groupBy("event_type").agg(
-        F.count(F.when(F.col("sg") * F.col("sg_prev") == 1, 1))
-        .cast("long")
-        .alias("n_same_sign"),
-        F.count(F.when(F.col("sg") * F.col("sg_prev") == -1, 1))
-        .cast("long")
-        .alias("n_flip_sign"),
-    )
-    icept_num = F.col("sx") * F.col("b_den") - F.col("b_num") * F.col("st")
-    return coefs.join(ser, "event_type").select(
-        "event_type",
-        F.col("n").alias("n_days"),
-        F.col("b_num").alias("slope_num"),
-        F.col("b_den").alias("slope_den"),
-        icept_num.cast("long").alias("icept_num"),
-        (F.col("n") * F.col("b_den")).cast("long").alias("icept_den"),
-        F.round(F.col("b_num").cast("double") / F.col("b_den"), 6).alias("slope"),
-        F.round(
-            icept_num.cast("double") / (F.col("n") * F.col("b_den")), 6
-        ).alias("intercept"),
-        F.round(
-            F.col("b_num").cast("double") * F.col("b_num")
-            / (
-                F.col("b_den").cast("double")
-                * (F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx"))
-            ),
-            6,
-        ).alias("r2"),
-        "n_same_sign",
-        "n_flip_sign",
-    )
-
-
-# --------------------------------------------------------------------------
-# Round 4: interval/sketch/seasonality trio — range join via day
-# bucketing (the scalable interval-overlap shape), the AMS +/-1
-# second-moment sketch audited against exact F2, and the day-of-week
-# seasonality ledger.
-# --------------------------------------------------------------------------
-
-_INTERVAL_SQL = """
-WITH iv AS (
-  SELECT user_id, CAST(ts AS DATE) AS day,
-         min(ts) AS a_start, max(ts) AS a_end
-  FROM events GROUP BY 1, 2
-),
-bounds AS (
-  SELECT CAST(min(CAST(ts AS DATE)) AS TIMESTAMP) AS t0,
-         datediff('day', min(CAST(ts AS DATE)), max(CAST(ts AS DATE))) AS nd
-  FROM events
-),
-wins AS (
-  SELECT CAST(t.i AS BIGINT) AS win_id,
-         b.t0 + INTERVAL 12 HOUR + t.i * (INTERVAL 7 DAY) AS w_start,
-         b.t0 + INTERVAL 48 HOUR + t.i * (INTERVAL 7 DAY) AS w_end
-  FROM bounds b, unnest(range(CAST(b.nd // 7 + 1 AS BIGINT))) AS t(i)
-),
-wdays AS (
-  SELECT w.win_id, w.w_start, w.w_end, CAST(d.d AS DATE) AS day
-  FROM wins w, unnest(generate_series(CAST(w.w_start AS DATE),
-                                      CAST(w.w_end AS DATE),
-                                      INTERVAL 1 DAY)) AS d(d)
-),
-cand AS (
-  SELECT DISTINCT wd.win_id, wd.w_start, wd.w_end,
-         iv.user_id, iv.day, iv.a_start, iv.a_end
-  FROM wdays wd JOIN iv ON iv.day = wd.day
-),
-ol AS (
-  SELECT win_id, w_start, w_end, user_id,
-         CASE WHEN a_start <= w_end AND w_start <= a_end
-              THEN greatest(0, datediff('second',
-                     greatest(a_start, w_start), least(a_end, w_end)))
-              ELSE 0 END AS ov_s,
-         CASE WHEN a_start >= w_start AND a_end <= w_end THEN 1 ELSE 0 END
-           AS contained
-  FROM cand
-)
-SELECT win_id,
-       CAST(count(*) AS BIGINT) AS n_candidates,
-       CAST(count(CASE WHEN ov_s > 0 THEN 1 END) AS BIGINT) AS n_overlapping,
-       CAST(sum(ov_s) AS BIGINT) AS overlap_seconds,
-       CAST(sum(contained) AS BIGINT) AS n_contained,
-       CAST(max(ov_s) AS BIGINT) AS max_overlap_s
-FROM ol GROUP BY 1
-"""
-
-
-@register("q_interval_overlap", _INTERVAL_SQL)
-def q_interval_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Interval-overlap range join via day bucketing — THE shape that
-    keeps an interval join off the nested-loop path at scale: user
-    activity intervals (per user-day [first_ts, last_ts]) meet a weekly
-    36-hour maintenance-window calendar (noon + 36h every 7 days,
-    derived from the corpus time origin) by exploding each window into
-    its covered DAY buckets and equi-joining on day — candidates are
-    bucket-local, then the exact predicate a_start <= w_end AND w_start
-    <= a_end filters, so no pair is ever formed outside a shared bucket.
-    Overlap durations are exact integer SECONDS via timestamp
-    differences (differences are timezone-free on both engines — never
-    raw epochs), with the containment count and the candidate count
-    beside them so the join's bucket selectivity is itself audited.
-    This is the outage-impact question — which user sessions does the
-    window touch, for how long — in the formulation that survives 10^12
-    rows.
-
-    Scale plan: intervals and windows are groupBy/sequence frames; the
-    only join is equi on day with bucket-bounded fanout; dedup before
-    the predicate keeps multi-day windows from double counting.
-    1-row bounds carry whitelisted."""
-    ev = load(spark, sf_dir, "events")
-    iv = ev.groupBy(
-        "user_id", F.col("ts").cast("date").alias("day")
-    ).agg(F.min("ts").alias("a_start"), F.max("ts").alias("a_end"))
-    bounds = ev.agg(
-        F.min(F.col("ts").cast("date")).alias("dmin"),
-        F.max(F.col("ts").cast("date")).alias("dmax"),
-    ).select(
-        F.col("dmin").cast("timestamp").alias("t0"),
-        F.datediff("dmax", "dmin").alias("nd"),
-    )
-    wins = (
-        bounds.select(
-            F.explode(F.sequence(F.lit(0), (F.col("nd") / 7).cast("long"))).alias(
-                "win_id"
-            ),
-            "t0",
-        )
-        .select(
-            "win_id",
-            (
-                F.date_add(
-                    F.col("t0").cast("date"), (F.col("win_id") * 7).cast("int")
-                ).cast("timestamp")
-                + F.expr("INTERVAL 12 HOURS")
-            ).alias("w_start"),
-            (
-                F.date_add(
-                    F.col("t0").cast("date"), (F.col("win_id") * 7).cast("int")
-                ).cast("timestamp")
-                + F.expr("INTERVAL 48 HOURS")
-            ).alias("w_end"),
-        )
-    )
-    wdays = wins.select(
-        "win_id", "w_start", "w_end",
-        F.explode(
-            F.sequence(
-                F.col("w_start").cast("date"), F.col("w_end").cast("date")
-            )
-        ).alias("day"),
-    )
-    cand = (
-        F.broadcast(wdays)
-        .join(iv, "day")
-        .select(
-            "win_id", "w_start", "w_end", "user_id",
-            F.col("day"), "a_start", "a_end",
-        )
-        .distinct()
-    )
-    sec = F.unix_timestamp(
-        F.least("a_end", "w_end")
-    ) - F.unix_timestamp(F.greatest("a_start", "w_start"))
-    ov = cand.select(
-        "win_id",
-        F.when(
-            (F.col("a_start") <= F.col("w_end"))
-            & (F.col("w_start") <= F.col("a_end")),
-            F.greatest(F.lit(0).cast("long"), sec),
-        )
-        .otherwise(0)
-        .alias("ov_s"),
-        F.when(
-            (F.col("a_start") >= F.col("w_start"))
-            & (F.col("a_end") <= F.col("w_end")),
-            1,
-        )
-        .otherwise(0)
-        .alias("contained"),
-    )
-    return ov.groupBy("win_id").agg(
-        F.count(F.lit(1)).cast("long").alias("n_candidates"),
-        F.count(F.when(F.col("ov_s") > 0, 1)).cast("long").alias("n_overlapping"),
-        F.sum("ov_s").cast("long").alias("overlap_seconds"),
-        F.sum("contained").cast("long").alias("n_contained"),
-        F.max("ov_s").cast("long").alias("max_overlap_s"),
-    )
-
-
-_AMS_SQL = f"""
-WITH {SQL_DOCS_TOKS.strip()},
-tk AS (
-  SELECT d.doc_id, CAST(t.i AS BIGINT) AS pos, lower(d.toks[t.i + 1]) AS tok
-  FROM docs d, unnest(range(len(d.toks))) AS t(i)
-),
-bg AS (
-  SELECT a.tok || ' ' || b.tok AS gram, CAST(count(*) AS BIGINT) AS f
-  FROM tk a JOIN tk b ON a.doc_id = b.doc_id AND b.pos = a.pos + 1
-  GROUP BY 1
-),
-f2t AS (SELECT CAST(sum(f * f) AS BIGINT) AS f2 FROM bg),
-est AS (SELECT CAST(t.i + 1 AS BIGINT) AS j FROM unnest(range(16)) AS t(i)),
-sk AS (
-  SELECT e.j,
-         CAST(sum(CASE WHEN strpos('0123456789abcdef',
-                    substr(md5(CAST(e.j AS VARCHAR) || '#' || b.gram), 1, 1))
-                    <= 8 THEN b.f ELSE -b.f END) AS BIGINT) AS y
-  FROM est e CROSS JOIN bg b
-  GROUP BY 1
-),
-xs AS (
-  SELECT j, y, CAST(y * y AS BIGINT) AS x,
-         row_number() OVER (ORDER BY y * y, j) AS rk
-  FROM sk
-),
-med AS (SELECT CAST(x AS BIGINT) AS med_x FROM xs WHERE rk = 8)
-SELECT xs.j, xs.y, xs.x, f2t.f2,
-       CAST(abs(xs.x - f2t.f2) AS BIGINT) AS abs_err,
-       round(CAST(abs(xs.x - f2t.f2) AS DOUBLE) / f2t.f2, 6) AS rel_err,
-       med.med_x,
-       round(CAST(abs(med.med_x - f2t.f2) AS DOUBLE) / f2t.f2, 6)
-         AS med_rel_err
-FROM xs CROSS JOIN f2t CROSS JOIN med
-"""
-
-
-@register("q_ams_f2", _AMS_SQL)
-def q_ams_f2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """AMS second-moment sketch (Alon-Matias-Szegedy 1996, the Godel-
-    prize streaming estimator) over the bigram frequency vector, audited
-    against EXACT F2 = sum f^2 (the corpus self-join size / repeat-mass
-    statistic that drives skew planning): 16 independent estimators each
-    fold the whole vector through a +/-1 md5 sign (nibble <= 8) into one
-    BIGINT counter y_j, and y_j^2 is an unbiased F2 estimate; the lower
-    median of the 16 (rank 8, (x, j) pin) is the variance-tamed headline
-    beside per-estimator exact absolute errors. Everything is integer
-    except the two rounded relative errors — the sketch's whole state is
-    16 numbers regardless of corpus size, THE point.
-
-    Scale plan: bigram counts are one positional equi-join + groupBy;
-    the 16-way fanout is a broadcast estimator spine folded map-side
-    into 16 counters; median on a 16-row frame. 1-row F2/median carries
-    whitelisted."""
-    from cliner_spark.tokenization import tokens_col
-
-    docs = load_docs(spark, sf_dir)
-    tk = docs.select(
-        "doc_id", F.posexplode(tokens_col(F.col("text"))).alias("pos", "t")
-    ).select("doc_id", "pos", F.lower("t").alias("tok"))
-    b = tk.select(
-        F.col("doc_id").alias("doc_b"), F.col("pos").alias("pos_b"),
-        F.col("tok").alias("tok_b"),
-    )
-    bg = (
-        tk.join(
-            b,
-            (F.col("doc_id") == F.col("doc_b"))
-            & (F.col("pos_b") == F.col("pos") + 1),
-        )
-        .select(F.concat_ws(" ", "tok", "tok_b").alias("gram"))
-        .groupBy("gram")
-        .agg(F.count(F.lit(1)).cast("long").alias("f"))
-    )
-    f2t = bg.agg(F.sum(F.col("f") * F.col("f")).cast("long").alias("f2"))
-    est = spark.range(1, 17).select(F.col("id").cast("long").alias("j"))
-    sign_pos = F.substring(
-        F.md5(F.concat(F.col("j").cast("string"), F.lit("#"), F.col("gram"))), 1, 1
-    ) < "8"
-    sk = (
-        F.broadcast(est)
-        .crossJoin(bg)
-        .groupBy("j")
-        .agg(
-            F.sum(F.when(sign_pos, F.col("f")).otherwise(-F.col("f")))
-            .cast("long")
-            .alias("y")
-        )
-    )
-    xs = sk.select(
-        "j", "y", (F.col("y") * F.col("y")).cast("long").alias("x")
-    ).withColumn("rk", F.row_number().over(Window.orderBy("x", "j")))
-    med = xs.filter(F.col("rk") == 8).select(F.col("x").alias("med_x"))
-    return (
-        xs.crossJoin(F.broadcast(f2t))
-        .crossJoin(F.broadcast(med))
-        .select(
-            "j", "y", "x", "f2",
-            F.abs(F.col("x") - F.col("f2")).cast("long").alias("abs_err"),
-            F.round(
-                F.abs(F.col("x") - F.col("f2")).cast("double") / F.col("f2"), 6
-            ).alias("rel_err"),
-            "med_x",
-            F.round(
-                F.abs(F.col("med_x") - F.col("f2")).cast("double") / F.col("f2"),
-                6,
-            ).alias("med_rel_err"),
-        )
-    )
-
-
-_DOW_SQL = """
-WITH daily AS (
-  SELECT CAST(ts AS DATE) AS day, CAST(count(*) AS BIGINT) AS c
-  FROM events GROUP BY 1
-),
-bounds AS (SELECT min(day) AS d0, max(day) AS d1 FROM daily),
-spine AS (
-  SELECT CAST(d.d AS DATE) AS day
-  FROM bounds b, unnest(generate_series(b.d0, b.d1, INTERVAL 1 DAY)) AS d(d)
-),
-series AS (
-  SELECT s.day, dayofweek(s.day) + 1 AS dow, coalesce(dy.c, 0) AS x
-  FROM spine s LEFT JOIN daily dy USING (day)
-),
-tot AS (
-  SELECT CAST(count(*) AS BIGINT) AS n_all, CAST(sum(x) AS BIGINT) AS s_all
-  FROM series
-),
-grp AS (
-  SELECT dow, CAST(count(*) AS BIGINT) AS n_d, CAST(sum(x) AS BIGINT) AS s_d
-  FROM series GROUP BY 1
-),
-rk AS (
-  SELECT dow, n_d, s_d,
-         row_number() OVER (ORDER BY CAST(s_d AS DOUBLE) / n_d DESC, dow)
-           AS peak_rank
-  FROM grp
-)
-SELECT CAST(r.dow AS INT) AS dow, r.n_d, r.s_d,
-       round(CAST(r.s_d AS DOUBLE) / r.n_d, 6) AS mean_count,
-       CAST(r.s_d * t.n_all - t.s_all * r.n_d AS BIGINT) AS dev_num,
-       CAST(r.n_d * t.n_all AS BIGINT) AS dev_den,
-       CAST(r.peak_rank AS BIGINT) AS peak_rank,
-       t.n_all, t.s_all
-FROM rk r CROSS JOIN tot t
-"""
-
-
-@register("q_dow_seasonality", _DOW_SQL)
-def q_dow_seasonality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Day-of-week seasonality ledger over the zero-filled daily event
-    volume — the weekly-profile companion to q_acf (which sees weekly
-    structure as a lag-7 echo; this names the days): per weekday the
-    exact (n_days, sum) sufficient pair, the mean as one rounded
-    division, the deviation from the global mean as the EXACT
-    cross-multiplied rational (s_d * N - S * n_d) / (n_d * N), and the
-    peak_rank ordering weekdays by exact-fraction means (double order
-    with dow pin — equal fractions give equal doubles). Global carries
-    ship in-row so the replica can rebuild the full between/within
-    variance decomposition; the between-share itself stays out of the
-    query because it is a cross-group double sum (the repo's standing
-    rule). The zero-filled spine matters: missing Mondays count as
-    zero-volume Mondays, not absent ones.
-
-    Scale plan: one daily rollup, a date-sequence spine join, a 7-row
-    groupBy; 1-row global carry (whitelisted)."""
-    ev = load(spark, sf_dir, "events")
-    daily = ev.groupBy(F.col("ts").cast("date").alias("day")).agg(
-        F.count(F.lit(1)).cast("long").alias("c")
-    )
-    bounds = daily.agg(F.min("day").alias("d0"), F.max("day").alias("d1"))
-    spine = bounds.select(
-        F.explode(F.sequence(F.col("d0"), F.col("d1"))).alias("day")
-    )
-    series = spine.join(F.broadcast(daily), "day", "left").select(
-        F.dayofweek("day").alias("dow"),
-        F.coalesce("c", F.lit(0)).cast("long").alias("x"),
-    )
-    tot = series.agg(
-        F.count(F.lit(1)).cast("long").alias("n_all"),
-        F.sum("x").cast("long").alias("s_all"),
-    )
-    grp = series.groupBy("dow").agg(
-        F.count(F.lit(1)).cast("long").alias("n_d"),
-        F.sum("x").cast("long").alias("s_d"),
-    )
-    rk = grp.select(
-        "*",
-        F.row_number()
-        .over(
-            Window.orderBy(
-                F.desc(F.col("s_d").cast("double") / F.col("n_d")), F.asc("dow")
-            )
-        )
-        .alias("peak_rank"),
-    )
-    return rk.crossJoin(F.broadcast(tot)).select(
-        F.col("dow").cast("int").alias("dow"),
-        "n_d", "s_d",
-        F.round(F.col("s_d").cast("double") / F.col("n_d"), 6).alias("mean_count"),
-        (F.col("s_d") * F.col("n_all") - F.col("s_all") * F.col("n_d"))
-        .cast("long")
-        .alias("dev_num"),
-        (F.col("n_d") * F.col("n_all")).cast("long").alias("dev_den"),
-        F.col("peak_rank").cast("long").alias("peak_rank"),
-        "n_all", "s_all",
     )
 
 

@@ -4,6 +4,7 @@ BASELINE.json P/R >= 0.95 contract."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from cliner_spark import fixtures, oracle_py
@@ -92,24 +93,25 @@ def test_canonical_map_matches_union_find(spark):
     assert got["C0102"] == got["C0101"]
 
 
-def test_cc_fixed_budget_converges_on_adversarial_path(spark):
+def test_cc_fixed_budget_converges_on_adversarial_path(spark, monkeypatch):
     """Regression: on the path 1-6-5-4-3-2 the '1' label propagates against
-    the id ordering one hop per round, so a ceil(log2 n)+1 budget alone is
-    NOT enough; the post-budget fixpoint verify must top up the rounds."""
-    import math
-
+    the id ordering one hop per round, so the first CHECKPOINT_EVERY rounds
+    are NOT enough; the fixpoint verify must top up the rounds, and a round
+    budget too small for the path must raise instead of returning split
+    components."""
+    from cliner_spark import canonicalize
     from cliner_spark.canonicalize import connected_components
 
     path = ["1", "6", "5", "4", "3", "2"]
     edges = spark.createDataFrame(
         [(a, b) for a, b in zip(path, path[1:])], "src string, dst string"
     )
-    budget = int(math.ceil(math.log2(len(path)))) + 1  # 4 rounds: too few
-    labels = {
-        r["node"]: r["comp"]
-        for r in connected_components(edges, fixed_iterations=budget).collect()
-    }
+    labels = {r["node"]: r["comp"] for r in connected_components(edges).collect()}
     assert labels == {n: "1" for n in path}
+
+    monkeypatch.setattr(canonicalize, "MAX_ITERATIONS", canonicalize.CHECKPOINT_EVERY)
+    with pytest.raises(RuntimeError, match="no fixpoint"):
+        connected_components(edges)
 
 
 def test_twostar_cc_equals_minlabel_on_random_graphs(spark):

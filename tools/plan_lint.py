@@ -234,40 +234,6 @@ ALLOWED: dict[str, list[tuple[str, str]]] = {
          "DESIGN — candidates are scored from codes, never raw vectors; "
          "at scale the candidate set is IVF-cell-pruned first")
     ],
-    "q_retention_cohorts": [
-        ("BroadcastNestedLoopJoin",
-         "1-row max-week-offset carry building the |cohorts| x |offsets| "
-         "zero-fill spine (dimension-sized)")
-    ],
-    "q_chisq_independence": [
-        ("BroadcastNestedLoopJoin",
-         "|sources| x |langs| contingency grid (dimension x dimension) + "
-         "1-row N/R/C totals carry")
-    ],
-    "q_mann_kendall": [
-        ("BroadcastNestedLoopJoin",
-         "day-grid^2 pairwise sign/slope join (dimension squared, never "
-         "the corpus) + 1-row n_days / tie-term scalar carries")
-    ],
-    "q_ewma_anomaly": [
-        ("BroadcastNestedLoopJoin",
-         "16-row offset spine x day grid (dimension-sized EWMA fanout; "
-         "the prior-day lookup itself is an equi-join)")
-    ],
-    "q_permutation_test": [
-        ("BroadcastNestedLoopJoin",
-         "64-row broadcast replica spine x per-user diffs (one-pass "
-         "sign-flip fanout, map-side combined to 64 counters — the "
-         "poisson-bootstrap shape) + 1-row t_obs carry")
-    ],
-    "q_seq2_support": [
-        ("BroadcastNestedLoopJoin",
-         "1-row n_users total carry onto the |types|^2 pair table")
-    ],
-    "q_kfold_assignment": [
-        ("BroadcastNestedLoopJoin",
-         "5-row fold spine x |langs| stratum frame (zero-fill grid)")
-    ],
     "q_consistent_hashing": [
         ("BroadcastNestedLoopJoin",
          "32/36-row broadcast vnode ring x corpus ownership fanout "
@@ -291,59 +257,6 @@ ALLOWED: dict[str, list[tuple[str, str]]] = {
         ("BroadcastNestedLoopJoin",
          "1-row global-rate carry onto the per-user rollup (exact "
          "cross-multiplied above_global bit)")
-    ],
-    "q_markov_stationary": [
-        ("BroadcastNestedLoopJoin",
-         "1-row n_types carry onto the |types| spine for the uniform "
-         "fixed-point start vector")
-    ],
-    "q_replay_policy_eval": [
-        ("BroadcastNestedLoopJoin",
-         "3-row broadcast policy spine x one log scan — the replay "
-         "fanout, map-side combined back to 3 rows (same shape as the "
-         "Poisson-bootstrap resample spine)")
-    ],
-    "q_shapley_attribution": [
-        ("BroadcastNestedLoopJoin",
-         "8-row coalition spine x <=8-row mask histogram (subset theta "
-         "join) + 1-row coalition-value wide carry onto the 3-row "
-         "channel spine — all dimension-scale by construction")
-    ],
-    "q_kanonymity_audit": [
-        ("BroadcastNestedLoopJoin",
-         "3-row k spine x the quasi-identifier group dimension + 1-row "
-         "total/min-l carries — audit collapses map-side to 3 rows")
-    ],
-    "q_binary_segmentation": [
-        ("BroadcastNestedLoopJoin",
-         "1-row level-1 split carry onto the |days| frame — the "
-         "segment assignment for the recursion")
-    ],
-    "q_stable_matching": [
-        ("BroadcastNestedLoopJoin",
-         "papers x reviewer-DIMENSION preference grid (20 columns per "
-         "paper) + 1-row n_held/n_papers carry; every round after is "
-         "equi-joined")
-    ],
-    "q_wand_pruning": [
-        ("BroadcastNestedLoopJoin",
-         "1-row corpus-count N carry into the integer idf weight "
-         "N div df")
-    ],
-    "q_butterfly_count": [
-        ("BroadcastNestedLoopJoin",
-         "1-row wedge-stats x 1-row butterfly-stats carry — two constant "
-         "frames attached")
-    ],
-    "q_ams_f2": [
-        ("BroadcastNestedLoopJoin",
-         "16-row broadcast estimator spine x the bigram vector (folded "
-         "map-side to 16 counters — the sketch fanout) + 1-row F2/median "
-         "carries")
-    ],
-    "q_dow_seasonality": [
-        ("BroadcastNestedLoopJoin",
-         "1-row global (N, S) carry onto the 7-row weekday ledger")
     ],
     "q_skyline": [
         ("BroadcastNestedLoopJoin",
@@ -389,19 +302,12 @@ ALLOWED: dict[str, list[tuple[str, str]]] = {
 # global window runs over corpus-scale rows must be restructured (e.g. a
 # bucketed lag + boundary stitch), not whitelisted.
 ALLOWED_GLOBAL_WINDOW: dict[str, str] = {
-    "q_ams_f2": "median rank over the 16-row estimator ledger",
-    "q_anova_sources": "grand-mean/rank windows on the |sources| rollup",
     "q_benford_audit": "OVER() total on the 9-row leading-digit ledger",
-    "q_binary_segmentation": "all windows run on the |days| daily-rollup "
-                             "frame or its two halves",
     "q_bm25_search": "top-10 rank over the per-query scored match set — the "
-                     "global top-k (TakeOrdered) shape; WAND pruning "
-                     "(q_wand_pruning) is the index-side scale path",
+                     "global top-k (TakeOrdered) shape",
     "q_bottomk_merge": "shard-merge rank over the 128-row (8 shards x k=16) "
                        "sketch union; direct pass ranks the same k-bounded "
                        "frame",
-    "q_chisq_independence": "OVER() totals on the |sources| x |langs| "
-                            "contingency grid",
     "q_compaction_plan": "cumulative-sum packing over the FILE LISTING "
                          "(metadata-sized: one row per data file, the "
                          "planner's own input)",
@@ -416,13 +322,11 @@ ALLOWED_GLOBAL_WINDOW: dict[str, str] = {
     "q_cusum_changepoint": "CUSUM/rank windows on the |days| daily rollup",
     "q_degree_ccdf": "CCDF cumulative window over the |distinct degrees| "
                      "spectrum",
-    "q_dow_seasonality": "rank over the 7-row weekday ledger",
     "q_dup_discovery": "rank/cum windows over the <=12-row checkpoint "
                        "spine",
     "q_epoch_shuffle": "global row_number IS the demonstrated operator "
                        "(epoch shuffle): gate-SF demonstration by design; "
                        "docstring documents the sharded production loader",
-    "q_funnel_conversion": "lag/max windows on the 3-row funnel-step frame",
     "q_key_skew": "rank over the top-k heavy-hitter table (k rows, "
                   "TakeOrdered upstream)",
     "q_kg_negative_samples": "row_number over the OBJECT VOCABULARY "
@@ -435,21 +339,11 @@ ALLOWED_GLOBAL_WINDOW: dict[str, str] = {
     "q_length_deciles": "exact ntile over (n_chars, doc_id) scalars BY "
                         "DESIGN — the auditable variant; approx quantiles "
                         "documented as the 100 TB path",
-    "q_mann_kendall": "sign/slope rank windows on the |days| grid "
-                      "(dimension squared pair frame)",
-    "q_markov_stationary": "row_number over the |types| spine (5 rows) for "
-                           "the start vector",
     "q_mixture_plan": "windowed totals on the |sources| rollup",
-    "q_nucleus_audit": "global bigram-vocab rank feeding the 8-row "
-                       "context spine (vocabulary-bounded)",
-    "q_permutation_test": "p-value rank on the 64-row replica ledger",
     "q_perplexity_buckets": "tertile bounds rank over the distinct-score "
                             "grid (domain-bounded)",
     "q_pps_sample": "ONE cumsum in md5 order — documented distributed "
                     "prefix-sum sharding at scale",
-    "q_rfm_segments": "three quintile ranks over the per-user rollup (user "
-                      "dimension); documented broadcast-cutoff swap at "
-                      "scale",
     "q_rocchio_prf": "two BM25 top-k ranks (same TakeOrdered shape as "
                      "q_bm25_search)",
     "q_rrf_fusion": "fused-score rank over the 40-row union of two top-20 "
@@ -460,8 +354,6 @@ ALLOWED_GLOBAL_WINDOW: dict[str, str] = {
                          "form",
     "q_skyline": "ONE dominance sort window (dist_dense_rank shape); "
                  "output front-sized",
-    "q_successive_halving": "elimination ranks on the 16-row config frame",
-    "q_touch_attribution": "final rank on the 4-row channel ledger",
     "q_vocab_coverage": "row_number over the VOCAB table (dimension-sized; "
                         "two-pass threshold trick documented for real "
                         "vocabularies)",
@@ -469,9 +361,6 @@ ALLOWED_GLOBAL_WINDOW: dict[str, str] = {
                       "documents per-shard growth-curve merge at scale",
     "q_vocab_ids": "contiguous id assignment over the aggregated vocab "
                    "table (dimension-sized BY DESIGN)",
-    "q_wand_pruning": "impact-ordered ranks over the query-term posting "
-                      "summaries (10-term query spine; term-bounded "
-                      "frames)",
     "q_wasserstein_lengths": "CDF windows over the merged distinct-value "
                              "grid (value-domain bounded)",
     "q_watermark_lateness": "running event-time max — the audited "
