@@ -542,297 +542,8 @@ def q_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ===========================================================================
-# Window / ordering family (SURVEY.md W1–W3, O1; common OLAP patterns)
+# Fuzzy link: edit-distance fallback for mentions outside the gazetteer
 # ===========================================================================
-
-
-@register(
-    "q_topk_events",
-    """
-SELECT user_id, event_id, value, rn FROM (
-  SELECT user_id, event_id, value,
-         CAST(row_number() OVER (PARTITION BY user_id
-              ORDER BY value DESC, event_id ASC) AS INTEGER) AS rn
-  FROM events
-) WHERE rn <= 3
-""",
-)
-def q_topk_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy(F.desc("value"), F.asc("event_id"))
-    return (
-        ev.withColumn("rn", F.row_number().over(w).cast("int"))
-        .filter(F.col("rn") <= 3)
-        .select("user_id", "event_id", "value", "rn")
-    )
-
-
-@register(
-    "q_lag_delta",
-    """
-SELECT event_id, user_id, value,
-       lag(value) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_value,
-       value - lag(value) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS delta
-FROM events
-""",
-)
-def q_lag_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    return ev.select(
-        "event_id",
-        "user_id",
-        "value",
-        F.lag("value").over(w).alias("prev_value"),
-        (F.col("value") - F.lag("value").over(w)).alias("delta"),
-    )
-
-
-@register(
-    "q_sessionize",
-    """
-WITH flagged AS (
-  SELECT user_id, event_id,
-         CASE WHEN lag(ts) OVER w IS NULL
-                OR epoch(ts) - epoch(lag(ts) OVER w) > 1800 THEN 1 ELSE 0 END AS new_s
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-),
-sess AS (
-  SELECT user_id, event_id,
-         sum(new_s) OVER (PARTITION BY user_id ORDER BY event_id
-                          ROWS UNBOUNDED PRECEDING) AS session_id
-  FROM (SELECT * FROM flagged) _
-),
-per_session AS (
-  SELECT user_id, session_id, count(*) AS n_events
-  FROM sess GROUP BY user_id, session_id
-)
-SELECT user_id, CAST(count(*) AS BIGINT) AS n_sessions,
-       CAST(max(n_events) AS BIGINT) AS max_session_len
-FROM per_session GROUP BY user_id
-""",
-)
-def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # NOTE: events are ordered by (ts, event_id) for gap detection; the
-    # running session counter uses event_id ordering (event_id is unique and
-    # correlates with ts) so both engines cumsum identically.
-    ev = load(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    flagged = ev.select(
-        "user_id",
-        "event_id",
-        F.when(
-            F.lag("ts").over(w).isNull()
-            | (F.unix_timestamp("ts") - F.unix_timestamp(F.lag("ts").over(w)) > 1800),
-            F.lit(1),
-        )
-        .otherwise(F.lit(0))
-        .alias("new_s"),
-    )
-    w2 = Window.partitionBy("user_id").orderBy("event_id").rowsBetween(Window.unboundedPreceding, 0)
-    sess = flagged.withColumn("session_id", F.sum("new_s").over(w2))
-    per_session = sess.groupBy("user_id", "session_id").agg(F.count(F.lit(1)).alias("n_events"))
-    return per_session.groupBy("user_id").agg(
-        F.count(F.lit(1)).alias("n_sessions"),
-        F.max("n_events").alias("max_session_len"),
-    )
-
-
-@register(
-    "q_asof_join",
-    """
-SELECT event_id, user_id, o_orderkey FROM (
-  SELECT e.event_id, e.user_id, o.o_orderkey,
-         row_number() OVER (PARTITION BY e.event_id
-             ORDER BY o.o_orderdate DESC NULLS LAST, o.o_orderkey DESC NULLS LAST) AS rn
-  FROM events e LEFT JOIN orders o
-    ON o.o_custkey = e.user_id AND o.o_orderdate <= e.ts
-) WHERE rn = 1
-""",
-)
-def q_asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """As-of join (Spark lacks a native one): equi key + range predicate,
-    then rank-1 per event. The orders side is broadcast (dimension-sized
-    relative to the event stream at scale)."""
-    ev = load(spark, sf_dir, "events")
-    orders = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey", "o_orderdate")
-    j = ev.join(
-        F.broadcast(orders),
-        (F.col("o_custkey") == F.col("user_id")) & (F.col("o_orderdate") <= F.col("ts")),
-        "left",
-    )
-    w = Window.partitionBy("event_id").orderBy(
-        F.desc_nulls_last("o_orderdate"), F.desc_nulls_last("o_orderkey")
-    )
-    return (
-        j.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("event_id", "user_id", "o_orderkey")
-    )
-
-
-# ===========================================================================
-# Relational family over the TPC-H-ish tables (A1–A3 analogs, joins, rollup)
-# Float sums go through DECIMAL(38,4) per-row casts so both engines are exact.
-# ===========================================================================
-
-
-@register(
-    "q_tpch_q1",
-    """
-SELECT l_returnflag, l_linestatus,
-       CAST(sum(CAST(l_quantity AS DECIMAL(38,4))) AS DOUBLE) AS sum_qty,
-       CAST(sum(CAST(l_extendedprice AS DECIMAL(38,4))) AS DOUBLE) AS sum_base_price,
-       CAST(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(38,4))) AS DOUBLE) AS sum_disc_price,
-       CAST(count(*) AS BIGINT) AS count_order
-FROM lineitem
-WHERE l_shipdate <= TIMESTAMP '1998-09-02 00:00:00'
-GROUP BY l_returnflag, l_linestatus
-""",
-)
-def q_tpch_q1(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load(spark, sf_dir, "lineitem")
-    return (
-        li.filter(F.col("l_shipdate") <= F.lit("1998-09-02 00:00:00").cast("timestamp"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.sum(F.col("l_quantity").cast("decimal(38,4)")).cast("double").alias("sum_qty"),
-            F.sum(F.col("l_extendedprice").cast("decimal(38,4)")).cast("double").alias("sum_base_price"),
-            F.sum((F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast("decimal(38,4)"))
-            .cast("double")
-            .alias("sum_disc_price"),
-            F.count(F.lit(1)).alias("count_order"),
-        )
-    )
-
-
-@register(
-    "q_revenue_by_nation",
-    """
-SELECT n.n_name,
-       CAST(sum(CAST(l.l_extendedprice * (1 - l.l_discount) AS DECIMAL(38,4))) AS DOUBLE) AS revenue,
-       CAST(count(DISTINCT o.o_orderkey) AS BIGINT) AS n_orders
-FROM customer c
-JOIN orders o ON c.c_custkey = o.o_custkey
-JOIN lineitem l ON o.o_orderkey = l.l_orderkey
-JOIN nation n ON c.c_nationkey = n.n_nationkey
-WHERE o.o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-GROUP BY n.n_name
-""",
-)
-def q_revenue_by_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = load(spark, sf_dir, "customer")
-    o = load(spark, sf_dir, "orders").filter(
-        F.col("o_orderdate") >= F.lit("1996-01-01 00:00:00").cast("timestamp")
-    )
-    li = load(spark, sf_dir, "lineitem")
-    n = load(spark, sf_dir, "nation")
-    return (
-        c.join(o, c.c_custkey == o.o_custkey)
-        .join(li, o.o_orderkey == li.l_orderkey)
-        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .groupBy("n_name")
-        .agg(
-            F.sum((F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast("decimal(38,4)"))
-            .cast("double")
-            .alias("revenue"),
-            F.countDistinct("o_orderkey").alias("n_orders"),
-        )
-    )
-
-
-@register(
-    "q_cust_no_orders",
-    """
-SELECT n.n_name, CAST(count(*) AS BIGINT) AS n_customers
-FROM customer c JOIN nation n ON c.c_nationkey = n.n_nationkey
-WHERE NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey)
-GROUP BY n.n_name
-""",
-)
-def q_cust_no_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = load(spark, sf_dir, "customer")
-    o = load(spark, sf_dir, "orders")
-    n = load(spark, sf_dir, "nation")
-    return (
-        c.join(o, c.c_custkey == o.o_custkey, "left_anti")
-        .join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
-        .groupBy("n_name")
-        .agg(F.count(F.lit(1)).alias("n_customers"))
-    )
-
-
-@register(
-    "q_rollup_sales",
-    """
-SELECT coalesce(l_returnflag, 'ALL') AS l_returnflag,
-       coalesce(l_linestatus, 'ALL') AS l_linestatus,
-       CAST(count(*) AS BIGINT) AS n,
-       CAST(sum(CAST(l_quantity AS DECIMAL(38,4))) AS DOUBLE) AS sum_qty
-FROM lineitem
-GROUP BY ROLLUP (l_returnflag, l_linestatus)
-""",
-)
-def q_rollup_sales(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load(spark, sf_dir, "lineitem")
-    return (
-        li.rollup("l_returnflag", "l_linestatus")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("l_quantity").cast("decimal(38,4)")).cast("double").alias("sum_qty"),
-        )
-        .withColumn("l_returnflag", F.coalesce(F.col("l_returnflag"), F.lit("ALL")))
-        .withColumn("l_linestatus", F.coalesce(F.col("l_linestatus"), F.lit("ALL")))
-    )
-
-
-@register(
-    "q_cube_events",
-    """
-SELECT coalesce(event_type, 'ALL') AS event_type,
-       coalesce(CAST(user_id % 10 AS VARCHAR), 'ALL') AS user_bucket,
-       CAST(count(*) AS BIGINT) AS n,
-       CAST(sum(CAST(value AS DECIMAL(38,4))) AS DOUBLE) AS sum_value
-FROM events
-GROUP BY CUBE (event_type, CAST(user_id % 10 AS VARCHAR))
-""",
-)
-def q_cube_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load(spark, sf_dir, "events")
-    return (
-        ev.withColumn("user_bucket", (F.col("user_id") % 10).cast("string"))
-        .cube("event_type", "user_bucket")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("value").cast("decimal(38,4)")).cast("double").alias("sum_value"),
-        )
-        .withColumn("event_type", F.coalesce(F.col("event_type"), F.lit("ALL")))
-        .withColumn("user_bucket", F.coalesce(F.col("user_bucket"), F.lit("ALL")))
-    )
-
-
-@register(
-    "q_percentiles",
-    """
-SELECT event_type,
-       round(quantile_cont(value, 0.5), 6) AS p50,
-       round(quantile_cont(value, 0.9), 6) AS p90,
-       round(quantile_cont(value, 0.99), 6) AS p99
-FROM events GROUP BY event_type
-""",
-)
-def q_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact continuous percentiles — Spark `percentile` and DuckDB
-    `quantile_cont` share linear-interpolation semantics. (At 100 TB you'd
-    use approx_percentile/t-digest; the exact op is the oracle-checkable
-    form and the semantics anchor.)"""
-    ev = load(spark, sf_dir, "events")
-    return ev.groupBy("event_type").agg(
-        F.round(F.expr("percentile(value, 0.5)"), 6).alias("p50"),
-        F.round(F.expr("percentile(value, 0.9)"), 6).alias("p90"),
-        F.round(F.expr("percentile(value, 0.99)"), 6).alias("p99"),
-    )
 
 
 @register(
@@ -877,29 +588,6 @@ def q_fuzzy_link(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     )
     return link_fuzzy(oov, doc_gazetteer_df(spark), max_dist=2)
-
-
-@register(
-    "q_events_hourly",
-    """
-SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS hour,
-       event_type, CAST(count(*) AS BIGINT) AS n,
-       CAST(sum(CAST(value AS DECIMAL(38,4))) AS DOUBLE) AS sum_value
-FROM events GROUP BY 1, 2
-""",
-)
-def q_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load(spark, sf_dir, "events")
-    return (
-        ev.groupBy(
-            F.date_format(F.date_trunc("hour", "ts"), "yyyy-MM-dd HH:mm:ss").alias("hour"),
-            "event_type",
-        )
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("value").cast("decimal(38,4)")).cast("double").alias("sum_value"),
-        )
-    )
 
 
 # ===========================================================================
@@ -1955,27 +1643,6 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     return pagerank_fixed_point(edges, iters=3).select("node", "rank_fp")
 
 
-@register(
-    "q_event_transitions",
-    """
-WITH t AS (
-  SELECT event_type,
-         lag(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev
-  FROM events
-)
-SELECT prev AS src, event_type AS dst, CAST(count(*) AS BIGINT) AS n
-FROM t WHERE prev IS NOT NULL GROUP BY prev, event_type
-""",
-)
-def q_event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """First-order transition counts per user (graph.transition_edges) —
-    the same operator backs tool-flow FOLLOWED_BY edges on transcripts."""
-    from cliner_spark.graph import transition_edges
-
-    ev = load(spark, sf_dir, "events")
-    return transition_edges(ev, "user_id", ["ts", "event_id"], "event_type")
-
-
 # ===========================================================================
 # Corpus-curation family (sampling.py): deterministic sampling, splits,
 # decontamination, domain mixing
@@ -2210,77 +1877,9 @@ def q_tool_flow(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ===========================================================================
-# Scrubbing + profiling family (scrub.py, profile.py)
+# Dedup keep-list, quality filter, role concepts, assertion triples,
+# embedding quantization
 # ===========================================================================
-
-
-@register(
-    "q_scrub",
-    """
-SELECT event_id,
-       regexp_replace(props, '\\d+', '<NUM>', 'g') AS scrubbed,
-       CAST(len(regexp_extract_all(props, '\\d+')) AS BIGINT) AS n_redactions
-FROM events
-""",
-)
-def q_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Regex redaction pass (scrub.scrub) — digit rule here because the
-    synthetic tables contain no emails/URLs; the clinical default rule
-    chain (URL/EMAIL/PHONE/ID) is pytest-verified on planted strings."""
-    from cliner_spark.scrub import scrub
-
-    ev = load(spark, sf_dir, "events").withColumnRenamed("props", "text")
-    return scrub(ev, rules=[(r"\d+", "<NUM>")]).select(
-        "event_id", "scrubbed", "n_redactions"
-    )
-
-
-@register(
-    "q_profile_events",
-    """
-SELECT 'event_id' AS col_name, CAST(count(*) AS BIGINT) AS n_rows,
-       CAST(sum(CASE WHEN event_id IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_nulls,
-       CAST(count(DISTINCT event_id) AS BIGINT) AS n_distinct,
-       CAST(min(event_id) AS VARCHAR) AS min_val, CAST(max(event_id) AS VARCHAR) AS max_val
-FROM events
-UNION ALL
-SELECT 'user_id', CAST(count(*) AS BIGINT),
-       CAST(sum(CASE WHEN user_id IS NULL THEN 1 ELSE 0 END) AS BIGINT),
-       CAST(count(DISTINCT user_id) AS BIGINT),
-       CAST(min(user_id) AS VARCHAR), CAST(max(user_id) AS VARCHAR)
-FROM events
-UNION ALL
-SELECT 'event_type', CAST(count(*) AS BIGINT),
-       CAST(sum(CASE WHEN event_type IS NULL THEN 1 ELSE 0 END) AS BIGINT),
-       CAST(count(DISTINCT event_type) AS BIGINT),
-       CAST(min(event_type) AS VARCHAR), CAST(max(event_type) AS VARCHAR)
-FROM events
-""",
-)
-def q_profile_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One-pass per-column profiler (profiling.profile_table)."""
-    from cliner_spark.profiling import profile_table
-
-    return profile_table(
-        load(spark, sf_dir, "events"), ["event_id", "user_id", "event_type"]
-    )
-
-
-@register(
-    "q_value_hist",
-    """
-SELECT CAST(floor((value - 0.0) / 5.0) AS BIGINT) AS bucket,
-       CAST(floor((value - 0.0) / 5.0) AS BIGINT) * 5.0 + 0.0 AS lo,
-       CAST(count(*) AS BIGINT) AS n
-FROM events WHERE value IS NOT NULL
-GROUP BY 1, 2
-""",
-)
-def q_value_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fixed-width histogram over events.value (profiling.histogram)."""
-    from cliner_spark.profiling import histogram
-
-    return histogram(load(spark, sf_dir, "events"), "value", 5.0)
 
 
 # near-dup cluster CTE chain (identical to q_dup_clusters' oracle)
@@ -2489,7 +2088,7 @@ def q_embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ===========================================================================
-# Graph analytics round 2b: triangles; skew profiling; approx aggregates
+# Graph analytics round 2b: triangles
 # ===========================================================================
 
 
@@ -2516,213 +2115,10 @@ def q_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     return triangle_count(edges)
 
 
-@register(
-    "q_key_skew",
-    """
-WITH counts AS (
-  SELECT CAST(user_id AS VARCHAR) AS key, CAST(count(*) AS BIGINT) AS n
-  FROM events GROUP BY user_id
-),
-tot AS (SELECT sum(n) AS t, avg(n) AS m FROM counts),
-ranked AS (
-  SELECT key, n, row_number() OVER (ORDER BY n DESC, key ASC) AS rank
-  FROM counts
-)
-SELECT r.key, r.n, round(r.n / t.t, 6) AS share, round(r.n / t.m, 4) AS skew,
-       CAST(r.rank AS INTEGER) AS rank
-FROM ranked r CROSS JOIN tot t WHERE r.rank <= 20
-""",
-)
-def q_key_skew(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Heavy-hitter skew profile of events.user_id (profiling.key_skew):
-    the pre-pass that decides whether a shuffle key needs salting. Top-k via
-    distributed TakeOrdered, totals broadcast — no global window over the
-    (potentially key-cardinality-sized) count table."""
-    from cliner_spark.profiling import key_skew
-
-    return key_skew(load(spark, sf_dir, "events"), "user_id", top_k=20)
-
-
-@register(
-    "q_approx_distinct",
-    """
-SELECT event_type, CAST(count(DISTINCT user_id) AS BIGINT) AS n_exact,
-       TRUE AS within_bound
-FROM events GROUP BY event_type
-""",
-)
-def q_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HLL distinct-count with a verified error bound: the Spark side
-    REALLY computes approx_count_distinct (rsd=2%) next to the exact count
-    and asserts |approx - exact| <= 5% * exact into `within_bound`; the
-    oracle pins the exact count and expects the bound to hold (TRUE). The
-    sketch itself is engine-specific so its raw value can't be hash-matched
-    — the bound can. At 100 TB the exact column is dropped and the sketch
-    is the answer; partial HLL buffers merge map-side."""
-    ev = load(spark, sf_dir, "events")
-    return ev.groupBy("event_type").agg(
-        F.countDistinct("user_id").cast("bigint").alias("n_exact"),
-        F.approx_count_distinct("user_id", rsd=0.02).alias("_approx"),
-    ).select(
-        "event_type",
-        "n_exact",
-        (F.abs(F.col("_approx") - F.col("n_exact"))
-         <= 0.05 * F.col("n_exact")).alias("within_bound"),
-    )
-
-
-@register(
-    "q_approx_quantile",
-    """
-SELECT event_type,
-       round(quantile_cont(value, 0.5), 6) AS p50_exact,
-       TRUE AS within_bound
-FROM events GROUP BY event_type
-""",
-)
-def q_approx_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """approx_percentile with a verified sandwich bound: approx p50
-    (accuracy=10000) must lie within the exact [p49, p51] band; the exact
-    interpolated median is the hash-checked column. At scale the exact
-    percentile (full sort per group) is dropped and the KLL/GK sketch is
-    the answer."""
-    ev = load(spark, sf_dir, "events")
-    return ev.groupBy("event_type").agg(
-        F.round(F.expr("percentile(value, 0.5)"), 6).alias("p50_exact"),
-        F.expr("approx_percentile(value, 0.5, 10000)").alias("_ap"),
-        F.expr("percentile(value, 0.49)").alias("_lo"),
-        F.expr("percentile(value, 0.51)").alias("_hi"),
-    ).select(
-        "event_type",
-        "p50_exact",
-        ((F.col("_ap") >= F.col("_lo")) & (F.col("_ap") <= F.col("_hi"))).alias("within_bound"),
-    )
-
-
 # ===========================================================================
-# Relational round 2b: TPC-H q3/q6/q10 (adapted to the testdata columns)
+# Round 2b: conversation KG summary, mention contexts, KG negatives, BPE
+# pairs, compaction, windowed co-occurrence, concept lifespans, relinking
 # ===========================================================================
-
-
-@register(
-    "q_tpch_q6",
-    """
-SELECT CAST(sum(CAST(l_extendedprice * l_discount AS DECIMAL(38,4))) AS DOUBLE) AS revenue,
-       CAST(count(*) AS BIGINT) AS n_rows
-FROM lineitem
-WHERE l_shipdate >= TIMESTAMP '1996-01-01' AND l_shipdate < TIMESTAMP '1997-01-01'
-  AND l_discount BETWEEN 0.05 AND 0.07 AND l_quantity < 24
-""",
-)
-def q_tpch_q6(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q6 forecast-revenue: pure scan + filter + 1-row aggregate; the
-    plan check is that every predicate reaches PushedFilters and the scan
-    reads only 4 columns."""
-    li = load(spark, sf_dir, "lineitem")
-    return (
-        li.filter(
-            (F.col("l_shipdate") >= "1996-01-01")
-            & (F.col("l_shipdate") < "1997-01-01")
-            & (F.col("l_discount").between(0.05, 0.07))
-            & (F.col("l_quantity") < 24)
-        )
-        .agg(
-            F.sum((F.col("l_extendedprice") * F.col("l_discount")).cast("decimal(38,4)"))
-            .cast("double")
-            .alias("revenue"),
-            F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-        )
-    )
-
-
-@register(
-    "q_tpch_q3",
-    """
-SELECT l_orderkey,
-       CAST(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(38,4))) AS DOUBLE) AS revenue,
-       o_orderdate, o_orderpriority
-FROM customer
-JOIN orders ON c_custkey = o_custkey
-JOIN lineitem ON l_orderkey = o_orderkey
-WHERE c_mktsegment = 'BUILDING'
-  AND o_orderdate < TIMESTAMP '1998-06-01' AND l_shipdate > TIMESTAMP '1998-06-01'
-GROUP BY l_orderkey, o_orderdate, o_orderpriority
-ORDER BY sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(38,4))) DESC, l_orderkey ASC
-LIMIT 10
-""",
-)
-def q_tpch_q3(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q3 shipping-priority (o_orderpriority stands in for the
-    missing o_shippriority): dimension filter broadcast into the fact join,
-    DECIMAL revenue so the top-10 ordering is reduction-order-exact."""
-    cust = load(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
-    orders = load(spark, sf_dir, "orders").filter(F.col("o_orderdate") < "1998-06-01")
-    li = load(spark, sf_dir, "lineitem").filter(F.col("l_shipdate") > "1998-06-01")
-    rev = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast("decimal(38,4)")
-    joined = li.join(
-        orders.join(
-            F.broadcast(cust.select("c_custkey")), F.col("o_custkey") == F.col("c_custkey")
-        ).select("o_orderkey", "o_orderdate", "o_orderpriority"),
-        F.col("l_orderkey") == F.col("o_orderkey"),
-    )
-    agg = joined.groupBy("l_orderkey", "o_orderdate", "o_orderpriority").agg(
-        F.sum(rev).alias("_rev")
-    )
-    return (
-        agg.orderBy(F.col("_rev").desc(), F.col("l_orderkey").asc())
-        .limit(10)
-        .select(
-            "l_orderkey",
-            F.col("_rev").cast("double").alias("revenue"),
-            "o_orderdate",
-            "o_orderpriority",
-        )
-    )
-
-
-@register(
-    "q_tpch_q10",
-    """
-SELECT c_custkey, c_name,
-       CAST(sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(38,4))) AS DOUBLE) AS revenue,
-       c_acctbal, n_name
-FROM customer
-JOIN orders ON c_custkey = o_custkey
-JOIN lineitem ON l_orderkey = o_orderkey
-JOIN nation ON c_nationkey = n_nationkey
-WHERE o_orderdate >= TIMESTAMP '1997-01-01' AND o_orderdate < TIMESTAMP '1997-04-01'
-  AND l_returnflag = 'R'
-GROUP BY c_custkey, c_name, c_acctbal, n_name
-ORDER BY sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(38,4))) DESC, c_custkey ASC
-LIMIT 20
-""",
-)
-def q_tpch_q10(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q10 returned-item reporting: quarter-filtered orders join the
-    returned lineitems, customer + nation dims broadcast; DECIMAL revenue
-    keeps the top-20 ordering exact."""
-    orders = load(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= "1997-01-01") & (F.col("o_orderdate") < "1997-04-01")
-    )
-    li = load(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
-    cust = load(spark, sf_dir, "customer")
-    nat = load(spark, sf_dir, "nation")
-    rev = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast("decimal(38,4)")
-    joined = (
-        li.join(orders.select("o_orderkey", "o_custkey"),
-                F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(F.broadcast(cust), F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(nat), F.col("c_nationkey") == F.col("n_nationkey"))
-    )
-    agg = joined.groupBy("c_custkey", "c_name", "c_acctbal", "n_name").agg(
-        F.sum(rev).alias("_rev")
-    )
-    return (
-        agg.orderBy(F.col("_rev").desc(), F.col("c_custkey").asc())
-        .limit(20)
-        .select("c_custkey", "c_name", F.col("_rev").cast("double").alias("revenue"),
-                "c_acctbal", "n_name")
-    )
 
 
 @register(
@@ -3036,35 +2432,6 @@ def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "q_gap_fill",
-    """
-WITH bounds AS (
-  SELECT min(date_trunc('hour', ts)) AS lo, max(date_trunc('hour', ts)) AS hi
-  FROM events
-),
-hours AS (
-  SELECT unnest(generate_series(lo, hi, INTERVAL 1 HOUR)) AS hour FROM bounds
-),
-grps AS (SELECT DISTINCT event_type FROM events),
-counts AS (
-  SELECT event_type, date_trunc('hour', ts) AS hour, CAST(count(*) AS BIGINT) AS n
-  FROM events GROUP BY 1, 2
-)
-SELECT g.event_type, h.hour, coalesce(c.n, 0) AS n
-FROM hours h CROSS JOIN grps g
-LEFT JOIN counts c ON c.event_type = g.event_type AND c.hour = h.hour
-""",
-)
-def q_gap_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Dense hourly spine with zero-filled gaps (timeseries.gap_fill_hours):
-    sequence()-generated hours x broadcast group dim, left-joined counts —
-    the spine is dimension-sized, never fact-sized."""
-    from cliner_spark.timeseries import gap_fill_hours
-
-    return gap_fill_hours(load(spark, sf_dir, "events"))
-
-
-@register(
     "q_gazetteer_diff",
     f"""
 WITH gazv AS (SELECT * FROM {GAZ_SQL}),
@@ -3288,126 +2655,8 @@ def q_ngram_dup_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ===========================================================================
-# Round-2 batch 2: TPC-H q5/q18, banded range join, DSIR selection weights
+# Round-2 batch 2: DSIR selection weights, Adamic-Adar, SemDeDup
 # ===========================================================================
-
-
-@register(
-    "q_tpch_q5",
-    """
-SELECT n.n_name,
-       CAST(sum(CAST(l.l_extendedprice * (1 - l.l_discount) AS DECIMAL(38,4))) AS DOUBLE) AS revenue
-FROM customer c
-JOIN orders o ON c.c_custkey = o.o_custkey
-JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-JOIN supplier s ON l.l_suppkey = s.s_suppkey AND c.c_nationkey = s.s_nationkey
-JOIN nation n ON s.s_nationkey = n.n_nationkey
-JOIN region r ON n.n_regionkey = r.r_regionkey
-WHERE r.r_name = 'ASIA'
-  AND o.o_orderdate >= TIMESTAMP '1996-01-01 00:00:00'
-  AND o.o_orderdate < TIMESTAMP '1997-01-01 00:00:00'
-GROUP BY n.n_name
-""",
-)
-def q_tpch_q5(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q5 (local supplier volume): the join-order showcase. Fact
-    tables (orders, lineitem) join on shuffled keys with the date filter
-    pushed below the join; every dimension (customer is dimension-sized
-    relative to lineitem, supplier, nation, region) is explicitly broadcast
-    so the only shuffles are the two fact-side exchanges; the
-    c_nationkey = s_nationkey equality rides the broadcast joins as a
-    post-join filter, never a join explosion."""
-    c = load(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    o = load(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= F.lit("1996-01-01 00:00:00").cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit("1997-01-01 00:00:00").cast("timestamp"))
-    ).select("o_orderkey", "o_custkey")
-    li = load(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey", "l_extendedprice", "l_discount"
-    )
-    s = load(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    n = load(spark, sf_dir, "nation")
-    r = load(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
-    rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    return (
-        li.join(o, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(F.broadcast(c), F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(s), F.col("l_suppkey") == F.col("s_suppkey"))
-        .filter(F.col("c_nationkey") == F.col("s_nationkey"))
-        .join(F.broadcast(n), F.col("s_nationkey") == F.col("n_nationkey"))
-        .join(F.broadcast(r), F.col("n_regionkey") == F.col("r_regionkey"))
-        .groupBy("n_name")
-        .agg(
-            F.sum(rev.cast("decimal(38,4)")).cast("double").alias("revenue")
-        )
-    )
-
-
-@register(
-    "q_tpch_q18",
-    """
-WITH big AS (
-  SELECT l_orderkey FROM lineitem GROUP BY l_orderkey
-  HAVING sum(l_quantity) > 150
-)
-SELECT c.c_name, c.c_custkey, o.o_orderkey, o.o_orderdate, o.o_totalprice,
-       CAST(sum(CAST(l.l_quantity AS DECIMAL(38,4))) AS DOUBLE) AS sum_qty
-FROM orders o
-JOIN big ON o.o_orderkey = big.l_orderkey
-JOIN customer c ON c.c_custkey = o.o_custkey
-JOIN lineitem l ON l.l_orderkey = o.o_orderkey
-GROUP BY c.c_name, c.c_custkey, o.o_orderkey, o.o_orderdate, o.o_totalprice
-""",
-)
-def q_tpch_q18(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q18 (large-volume customer): self-semi-join of the fact table
-    against its own HAVING aggregate. The `big` order-key set is an
-    aggregation output (tiny after the predicate) and is broadcast into
-    BOTH fact scans, so lineitem is never shuffled against orders — the
-    classic pre-aggregated semi-join reduction."""
-    li = load(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
-    big = (
-        li.groupBy("l_orderkey")
-        .agg(F.sum("l_quantity").alias("q"))
-        .filter(F.col("q") > 150)
-        .select("l_orderkey")
-    )
-    o = load(spark, sf_dir, "orders")
-    c = load(spark, sf_dir, "customer").select("c_custkey", "c_name")
-    return (
-        li.join(F.broadcast(big), "l_orderkey")
-        .join(
-            o.join(F.broadcast(big), F.col("o_orderkey") == big["l_orderkey"]).select(
-                "o_orderkey", "o_custkey", "o_orderdate", "o_totalprice"
-            ),
-            F.col("l_orderkey") == F.col("o_orderkey"),
-        )
-        .join(F.broadcast(c), F.col("c_custkey") == F.col("o_custkey"))
-        .groupBy("c_name", "c_custkey", "o_orderkey", "o_orderdate", "o_totalprice")
-        .agg(F.sum(F.col("l_quantity").cast("decimal(38,4)")).cast("double").alias("sum_qty"))
-    )
-
-
-@register(
-    "q_error_after_click",
-    """
-WITH l AS (SELECT user_id, event_id, ts FROM events WHERE event_type = 'click'),
-r AS (SELECT user_id, event_id, ts FROM events WHERE event_type = 'error')
-SELECT r.user_id, l.event_id AS left_id, r.event_id AS right_id,
-       CAST(floor(epoch(r.ts)) AS BIGINT) - CAST(floor(epoch(l.ts)) AS BIGINT) AS lag_sec
-FROM r JOIN l ON l.user_id = r.user_id
- AND l.ts <= r.ts AND l.ts >= r.ts - INTERVAL 600 SECONDS
-""",
-)
-def q_error_after_click(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Temporal band self-join (timeseries.banded_interval_join): every
-    error event paired with same-user clicks in the preceding 10 minutes.
-    The oracle is the naive theta join; the Spark plan is the bucketed
-    two-equi-join decomposition that survives hot users at scale."""
-    from cliner_spark.timeseries import banded_interval_join
-
-    ev = load(spark, sf_dir, "events")
-    return banded_interval_join(ev, "click", "error", band_minutes=10)
 
 
 @register(
@@ -3451,59 +2700,6 @@ def q_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_docs(spark, sf_dir)
     return importance_weights(docs, docs.filter(F.col("doc_id") % 3 == 0))
-
-
-@register(
-    "q_sliding_counts",
-    """
-WITH k AS (SELECT unnest(range(3)) AS k)
-SELECT e.event_type,
-       time_bucket(INTERVAL 10 MINUTES, e.ts) - k.k * INTERVAL 10 MINUTES AS win_start,
-       time_bucket(INTERVAL 10 MINUTES, e.ts) - k.k * INTERVAL 10 MINUTES + INTERVAL 30 MINUTES AS win_end,
-       CAST(count(*) AS BIGINT) AS n
-FROM events e CROSS JOIN k
-GROUP BY 1, 2, 3
-""",
-)
-def q_sliding_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sliding-window (30 min window / 10 min slide) event counts per type
-    (timeseries.sliding_window_counts; F.window fan-out-then-aggregate)."""
-    from cliner_spark.timeseries import sliding_window_counts
-
-    return sliding_window_counts(load(spark, sf_dir, "events"), 30, 10)
-
-
-@register(
-    "q_funnel",
-    """
-WITH u AS (SELECT DISTINCT user_id FROM events),
-s1 AS (SELECT user_id, min(ts) AS t FROM events WHERE event_type = 'view' GROUP BY 1),
-s2 AS (
-  SELECT e.user_id, min(e.ts) AS t FROM events e JOIN s1 ON e.user_id = s1.user_id
-  WHERE e.event_type = 'click' AND e.ts > s1.t GROUP BY 1
-),
-s3 AS (
-  SELECT e.user_id, min(e.ts) AS t FROM events e JOIN s2 ON e.user_id = s2.user_id
-  WHERE e.event_type = 'purchase' AND e.ts > s2.t GROUP BY 1
-)
-SELECT u.user_id,
-       CAST(CASE WHEN s3.user_id IS NOT NULL THEN 3
-                 WHEN s2.user_id IS NOT NULL THEN 2
-                 WHEN s1.user_id IS NOT NULL THEN 1
-                 ELSE 0 END AS INTEGER) AS depth
-FROM u
-LEFT JOIN s1 ON u.user_id = s1.user_id
-LEFT JOIN s2 ON u.user_id = s2.user_id
-LEFT JOIN s3 ON u.user_id = s3.user_id
-""",
-)
-def q_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """First-touch ordered funnel view->click->purchase per user
-    (timeseries.funnel_conversion; chained conditional min-aggregates,
-    scalar per-user state)."""
-    from cliner_spark.timeseries import funnel_conversion
-
-    return funnel_conversion(load(spark, sf_dir, "events"))
 
 
 @register(
@@ -3579,56 +2775,8 @@ def q_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ===========================================================================
-# Round-2 batch 5: window stats, pivot, ntile, salted skew join
+# Round-2 batch 5: pivot, ntile
 # ===========================================================================
-
-
-@register(
-    "q_moving_zscore",
-    """
-WITH hourly AS (
-  SELECT event_type, date_trunc('hour', ts) AS hour, CAST(count(*) AS BIGINT) AS n
-  FROM events GROUP BY 1, 2
-),
-w AS (
-  SELECT event_type, hour, n,
-         avg(n) OVER (PARTITION BY event_type ORDER BY hour
-                      ROWS BETWEEN 5 PRECEDING AND 1 PRECEDING) AS mu,
-         stddev_samp(n) OVER (PARTITION BY event_type ORDER BY hour
-                      ROWS BETWEEN 5 PRECEDING AND 1 PRECEDING) AS sd,
-         count(*) OVER (PARTITION BY event_type ORDER BY hour
-                      ROWS BETWEEN 5 PRECEDING AND 1 PRECEDING) AS nw
-  FROM hourly
-)
-SELECT event_type, hour, n,
-       round(CASE WHEN nw >= 3 AND sd > 0 THEN (n - mu) / sd END, 6) AS zscore
-FROM w
-""",
-)
-def q_moving_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Trailing-window z-score anomaly signal over hourly event counts:
-    mean/stddev of the 5 PRECEDING hours (current row excluded), null until
-    the window holds >= 3 points. One aggregation + one window sort over
-    the (tiny) hourly rollup — the window runs on groups x hours rows, not
-    events."""
-    ev = load(spark, sf_dir, "events")
-    hourly = ev.groupBy(
-        "event_type", F.date_trunc("hour", F.col("ts")).alias("hour")
-    ).agg(F.count(F.lit(1)).alias("n"))
-    w = (
-        Window.partitionBy("event_type")
-        .orderBy("hour")
-        .rowsBetween(-5, -1)
-    )
-    mu, sd, nw = F.avg("n").over(w), F.stddev_samp("n").over(w), F.count(F.lit(1)).over(w)
-    return hourly.select(
-        "event_type",
-        "hour",
-        "n",
-        F.round(
-            F.when((nw >= 3) & (sd > 0), (F.col("n") - mu) / sd), 6
-        ).alias("zscore"),
-    )
 
 
 @register(
@@ -3693,48 +2841,8 @@ def q_length_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "q_salted_join",
-    """
-WITH dim AS (
-  SELECT DISTINCT user_id, 'grp_' || CAST(user_id % 7 AS VARCHAR) AS grp
-  FROM events
-)
-SELECT d.grp, CAST(count(*) AS BIGINT) AS n_events,
-       CAST(sum(CAST(e.value AS DECIMAL(38,4))) AS DOUBLE) AS total_value
-FROM events e JOIN dim d ON e.user_id = d.user_id
-GROUP BY d.grp
-""",
-)
-def q_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Skew-salted fact-to-dim join: the fact side carries a random-free
-    deterministic salt (pmod(xxhash64(event_id), 8)); the dim side is
-    EXPLODED 8x so every salted fact key finds its replica — the classic
-    hot-key defence when the dim is too big to broadcast and one user_id
-    dominates the stream. Result is provably salt-invariant (the oracle is
-    the plain unsalted join)."""
-    n_salt = 8
-    ev = load(spark, sf_dir, "events")
-    dim = ev.select("user_id").distinct().select(
-        "user_id",
-        F.concat(F.lit("grp_"), (F.col("user_id") % 7).cast("string")).alias("grp"),
-    )
-    fact = ev.withColumn("_salt", F.pmod(F.xxhash64("event_id"), F.lit(n_salt)))
-    dim_r = dim.withColumn(
-        "_salt", F.explode(F.array([F.lit(i) for i in range(n_salt)]))
-    )
-    return (
-        fact.join(dim_r, ["user_id", "_salt"])
-        .groupBy("grp")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast("decimal(38,4)")).cast("double").alias("total_value"),
-        )
-    )
-
-
 # ===========================================================================
-# Round-2 batch 6: trend regression, winsorized mean, cohort retention
+# Round-2 batch 6: trend regression
 # ===========================================================================
 
 
@@ -3773,210 +2881,10 @@ def q_concept_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "q_winsorized_mean",
-    """
-WITH b AS (
-  SELECT event_type,
-         percentile_cont(0.05) WITHIN GROUP (ORDER BY value) AS lo,
-         percentile_cont(0.95) WITHIN GROUP (ORDER BY value) AS hi
-  FROM events GROUP BY event_type
-)
-SELECT e.event_type,
-       CAST(count(*) AS BIGINT) AS n,
-       round(avg(CASE WHEN e.value < b.lo THEN b.lo
-                      WHEN e.value > b.hi THEN b.hi
-                      ELSE e.value END), 6) AS wmean,
-       round(avg(e.value), 6) AS mean
-FROM events e JOIN b USING (event_type)
-GROUP BY e.event_type
-""",
-)
-def q_winsorized_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Winsorized mean per event type (outlier-robust cleaning stat): exact
-    p5/p95 bounds per group, values clamped, then averaged. The bounds
-    table is group-cardinality (broadcast back); the clamp+avg is one more
-    grouped pass — two shuffles total, no global sort."""
-    ev = load(spark, sf_dir, "events")
-    b = ev.groupBy("event_type").agg(
-        F.percentile("value", F.lit(0.05)).alias("lo"),
-        F.percentile("value", F.lit(0.95)).alias("hi"),
-    )
-    clamped = F.when(F.col("value") < F.col("lo"), F.col("lo")).when(
-        F.col("value") > F.col("hi"), F.col("hi")
-    ).otherwise(F.col("value"))
-    return (
-        ev.join(F.broadcast(b), "event_type")
-        .groupBy("event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.avg(clamped), 6).alias("wmean"),
-            F.round(F.avg("value"), 6).alias("mean"),
-        )
-    )
-
-
-@register(
-    "q_user_retention",
-    """
-WITH wk AS (
-  SELECT user_id, CAST(date_diff('day', TIMESTAMP '2024-01-01', ts) // 7 AS INTEGER) AS week
-  FROM events
-),
-cohort AS (SELECT user_id, min(week) AS cohort_week FROM wk GROUP BY 1),
-activity AS (SELECT DISTINCT user_id, week FROM wk)
-SELECT c.cohort_week, CAST(a.week - c.cohort_week AS INTEGER) AS week_offset,
-       CAST(count(DISTINCT a.user_id) AS BIGINT) AS n_users
-FROM activity a JOIN cohort c USING (user_id)
-GROUP BY 1, 2
-""",
-)
-def q_user_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cohort retention matrix: users bucketed by first-active week, counted
-    in each later active week offset. Cohort table is user-cardinality
-    (broadcast); activity is a distinct aggregate — two shuffles, no
-    user x week crossing."""
-    ev = load(spark, sf_dir, "events")
-    week = F.floor(
-        F.datediff(F.col("ts").cast("date"), F.lit("2024-01-01").cast("date")) / 7
-    ).cast("int")
-    wk = ev.select("user_id", week.alias("week"))
-    cohort = wk.groupBy("user_id").agg(F.min("week").alias("cohort_week"))
-    activity = wk.distinct()
-    return (
-        activity.join(F.broadcast(cohort), "user_id")
-        .groupBy(
-            "cohort_week",
-            (F.col("week") - F.col("cohort_week")).cast("int").alias("week_offset"),
-        )
-        .agg(F.countDistinct("user_id").alias("n_users"))
-    )
-
-
 # ===========================================================================
-# Round-2 batch 7: grouping sets, min_by/max_by, JSON extraction
+# Round-2 batch 7 onward: turn stats, agreement, coreference, KG walks,
+# link priors
 # ===========================================================================
-
-
-@register(
-    "q_grouping_sets",
-    """
-SELECT coalesce(event_type, '<all>') AS event_type,
-       coalesce(CAST(extract(hour FROM ts) AS VARCHAR), '<all>') AS hour_of_day,
-       CAST(count(*) AS BIGINT) AS n,
-       CAST(grouping(event_type) * 2 + grouping(extract(hour FROM ts)) AS INTEGER) AS gid
-FROM events
-GROUP BY GROUPING SETS ((event_type), (extract(hour FROM ts)), ())
-""",
-)
-def q_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Explicit GROUPING SETS aggregation (marginals by type, by hour, and
-    the grand total in ONE pass — Spark expands the sets inside a single
-    Expand+Aggregate, not three scans) with grouping_id disambiguation."""
-    ev = load(spark, sf_dir, "events").select(
-        "event_type", F.hour("ts").alias("hod")
-    )
-    g = ev.groupingSets(
-        [["event_type"], ["hod"], []], "event_type", "hod"
-    ).agg(
-        F.count(F.lit(1)).alias("n"),
-        (F.grouping("event_type") * 2 + F.grouping("hod")).cast("int").alias("gid"),
-    )
-    return g.select(
-        F.coalesce(F.col("event_type"), F.lit("<all>")).alias("event_type"),
-        F.coalesce(F.col("hod").cast("string"), F.lit("<all>")).alias("hour_of_day"),
-        "n",
-        "gid",
-    )
-
-
-@register(
-    "q_first_last_event",
-    """
-SELECT user_id,
-       CAST(min_by(event_id, ts) AS BIGINT) AS first_event,
-       min_by(event_type, ts) AS first_type,
-       CAST(max_by(event_id, ts) AS BIGINT) AS last_event,
-       max_by(event_type, ts) AS last_type,
-       CAST(count(*) AS BIGINT) AS n
-FROM events GROUP BY user_id
-""",
-)
-def q_first_last_event(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """First/last event per user via min_by/max_by — ONE aggregation, no
-    row_number window over the full stream (the window formulation sorts
-    every user's events; the argmin aggregate keeps one candidate per
-    partition). ts ties cannot occur in this data (microsecond event grid);
-    at scale break ties by (ts, event_id) struct ordering."""
-    ev = load(spark, sf_dir, "events")
-    return ev.groupBy("user_id").agg(
-        F.min_by("event_id", "ts").alias("first_event"),
-        F.min_by("event_type", "ts").alias("first_type"),
-        F.max_by("event_id", "ts").alias("last_event"),
-        F.max_by("event_type", "ts").alias("last_type"),
-        F.count(F.lit(1)).alias("n"),
-    )
-
-
-@register(
-    "q_json_props",
-    """
-SELECT event_type,
-       CAST(count(*) AS BIGINT) AS n,
-       CAST(min(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS min_k,
-       CAST(max(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS max_k,
-       CAST(sum(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS sum_k
-FROM events
-GROUP BY event_type
-""",
-)
-def q_json_props(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Semi-structured property extraction: JSON path into the `props`
-    column, aggregated per type. get_json_object evaluates in the scan
-    stage (codegen'd Jackson parse, no UDF); at scale prefer from_json with
-    an explicit schema once the shape is known — this is the
-    exploratory-path twin."""
-    ev = load(spark, sf_dir, "events")
-    k = F.get_json_object("props", "$.k").cast("bigint")
-    return ev.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.min(k).alias("min_k"),
-        F.max(k).alias("max_k"),
-        F.sum(k).alias("sum_k"),
-    )
-
-
-@register(
-    "q_event_trigrams",
-    """
-WITH s AS (
-  SELECT user_id, event_type AS a,
-         lead(event_type, 1) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS b,
-         lead(event_type, 2) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS c
-  FROM events
-)
-SELECT a, b, c, CAST(count(*) AS BIGINT) AS n
-FROM s WHERE b IS NOT NULL AND c IS NOT NULL
-GROUP BY a, b, c
-""",
-)
-def q_event_trigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Behavioral 3-gram mining over per-user event sequences (lead x2 over
-    a deterministic (ts, event_id) order, then one aggregation) — the
-    sequence-pattern rollup a session-modeling pipeline feeds on. The
-    window partitions by user, so state per sort is one user's events."""
-    ev = load(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    s = ev.select(
-        F.col("event_type").alias("a"),
-        F.lead("event_type", 1).over(w).alias("b"),
-        F.lead("event_type", 2).over(w).alias("c"),
-    )
-    return (
-        s.filter(F.col("b").isNotNull() & F.col("c").isNotNull())
-        .groupBy("a", "b", "c")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
 
 
 @register(
@@ -4257,119 +3165,6 @@ def q_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     the whole point of sketch-then-verify at 100 TB (the shuffle carries only
     candidate tokens, not the full vocabulary)."""
     return _ts.heavy_hitters(load_docs(spark, sf_dir), phi=0.01)
-
-
-@register(
-    "q_tpch_q14",
-    """
-SELECT CAST(sum(CAST(CASE WHEN p.p_type = 'PROMO'
-                     THEN l.l_extendedprice * (1 - l.l_discount) ELSE 0 END
-                AS DECIMAL(38,4))) AS DOUBLE) AS promo_revenue,
-       CAST(sum(CAST(l.l_extendedprice * (1 - l.l_discount) AS DECIMAL(38,4)))
-            AS DOUBLE) AS total_revenue
-FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
-WHERE l.l_shipdate >= TIMESTAMP '1996-01-01'
-  AND l.l_shipdate < TIMESTAMP '1996-02-01'
-""",
-)
-def q_tpch_q14(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H q14 (promo revenue share) on the testdata's column subset: the
-    month filter prunes the lineitem scan (PushedFilters on l_shipdate
-    min/max footer stats), part is the broadcast side. Revenues published as
-    exact DECIMALs; the percentage is downstream arithmetic."""
-    li = load(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
-        & (F.col("l_shipdate") < F.lit("1996-02-01").cast("timestamp"))
-    )
-    p = load(spark, sf_dir, "part").select("p_partkey", "p_type")
-    rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    return li.join(F.broadcast(p), li.l_partkey == p.p_partkey).agg(
-        F.sum(F.when(F.col("p_type") == "PROMO", rev).otherwise(0).cast("decimal(38,4)"))
-        .cast("double")
-        .alias("promo_revenue"),
-        F.sum(rev.cast("decimal(38,4)")).cast("double").alias("total_revenue"),
-    )
-
-
-@register(
-    "q_tpch_q19",
-    """
-SELECT CAST(sum(CAST(l.l_extendedprice * (1 - l.l_discount) AS DECIMAL(38,4)))
-            AS DOUBLE) AS revenue,
-       CAST(count(*) AS BIGINT) AS n_lines
-FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
-WHERE (p.p_brand = 'Brand#1' AND p.p_size BETWEEN 1 AND 5
-       AND l.l_quantity BETWEEN 1 AND 11)
-   OR (p.p_brand = 'Brand#7' AND p.p_size BETWEEN 1 AND 10
-       AND l.l_quantity BETWEEN 10 AND 20)
-   OR (p.p_brand = 'Brand#13' AND p.p_size BETWEEN 1 AND 15
-       AND l.l_quantity BETWEEN 20 AND 30)
-""",
-)
-def q_tpch_q19(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H q19 shape (disjunctive multi-column predicates spanning both
-    join sides) on the testdata's column subset. The single-side conjuncts
-    Catalyst can factor out (l_quantity BETWEEN 1 AND 30, p_size BETWEEN 1
-    AND 15, p_brand IN (...)) push into the scans; the cross-side
-    disjunction evaluates post-join. Part is broadcast."""
-    li = load(spark, sf_dir, "lineitem")
-    p = load(spark, sf_dir, "part").select("p_partkey", "p_brand", "p_size")
-    j = li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
-    cond = (
-        (F.col("p_brand") == "Brand#1")
-        & F.col("p_size").between(1, 5)
-        & F.col("l_quantity").between(1, 11)
-    ) | (
-        (F.col("p_brand") == "Brand#7")
-        & F.col("p_size").between(1, 10)
-        & F.col("l_quantity").between(10, 20)
-    ) | (
-        (F.col("p_brand") == "Brand#13")
-        & F.col("p_size").between(1, 15)
-        & F.col("l_quantity").between(20, 30)
-    )
-    return j.filter(cond).agg(
-        F.sum((F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast("decimal(38,4)"))
-        .cast("double")
-        .alias("revenue"),
-        F.count(F.lit(1)).alias("n_lines"),
-    )
-
-
-@register(
-    "q_tpch_q12",
-    """
-SELECT l.l_returnflag,
-       CAST(sum(CASE WHEN o.o_orderpriority IN ('1-URGENT', '2-HIGH')
-                     THEN 1 ELSE 0 END) AS BIGINT) AS high_line_count,
-       CAST(sum(CASE WHEN o.o_orderpriority NOT IN ('1-URGENT', '2-HIGH')
-                     THEN 1 ELSE 0 END) AS BIGINT) AS low_line_count
-FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-WHERE l.l_shipdate >= TIMESTAMP '1997-01-01'
-  AND l.l_shipdate < TIMESTAMP '1998-01-01'
-GROUP BY l.l_returnflag
-""",
-)
-def q_tpch_q12(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H q12 shape (priority-class CASE-sum after a fact-fact join) on
-    the testdata's column subset (l_returnflag stands in for l_shipmode).
-    The year filter reduces lineitem BEFORE the shuffle join with orders;
-    the CASE-sums ride the same aggregation (one shuffle each side, one
-    agg)."""
-    li = load(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp"))
-        & (F.col("l_shipdate") < F.lit("1998-01-01").cast("timestamp"))
-    )
-    o = load(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
-    hi = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-    return (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .groupBy("l_returnflag")
-        .agg(
-            F.sum(F.when(hi, 1).otherwise(0)).cast("bigint").alias("high_line_count"),
-            F.sum(F.when(~hi, 1).otherwise(0)).cast("bigint").alias("low_line_count"),
-        )
-    )
 
 
 @register(
@@ -4799,78 +3594,6 @@ def q_context_disambiguation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "q_window_analytics",
-    """
-SELECT user_id, event_id,
-       CAST(ntile(4) OVER w AS INTEGER) AS quartile,
-       percent_rank() OVER w AS pct_rank,
-       cume_dist() OVER w AS cum_dist,
-       nth_value(value, 2) OVER (PARTITION BY user_id ORDER BY value DESC, event_id
-                                 ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
-         AS second_best
-FROM events
-WINDOW w AS (PARTITION BY user_id ORDER BY value DESC, event_id)
-""",
-)
-def q_window_analytics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Analytic-window completeness (SURVEY §2.5): ntile quartiles,
-    percent_rank, cume_dist, and an unbounded nth_value over one shared
-    per-user ordering — Catalyst plans all four over a SINGLE sort (one
-    Window node), which is the point: adding analytics to an existing
-    ordering is free at scale."""
-    ev = load(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy(F.desc("value"), F.asc("event_id"))
-    wall = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    return ev.select(
-        "user_id",
-        "event_id",
-        F.ntile(4).over(w).cast("int").alias("quartile"),
-        F.percent_rank().over(w).alias("pct_rank"),
-        F.cume_dist().over(w).alias("cum_dist"),
-        F.nth_value("value", 2).over(wall).alias("second_best"),
-    )
-
-
-@register(
-    "q_set_ops",
-    """
-WITH early AS (
-  SELECT DISTINCT event_type FROM events WHERE extract(hour FROM ts) < 12
-),
-late AS (
-  SELECT DISTINCT event_type FROM events WHERE extract(hour FROM ts) >= 12
-)
-SELECT 'both' AS bucket, CAST(count(*) AS BIGINT) AS n
-FROM (SELECT event_type FROM early INTERSECT SELECT event_type FROM late)
-UNION ALL
-SELECT 'early_only', CAST(count(*) AS BIGINT)
-FROM (SELECT event_type FROM early EXCEPT SELECT event_type FROM late)
-UNION ALL
-SELECT 'late_only', CAST(count(*) AS BIGINT)
-FROM (SELECT event_type FROM late EXCEPT SELECT event_type FROM early)
-""",
-)
-def q_set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Set-operation completeness (SURVEY §2.7): INTERSECT / EXCEPT / UNION
-    ALL over the morning-vs-afternoon event-type vocabularies. Spark plans
-    intersect/except as left-semi/anti joins on the distinct sets —
-    dimension-sized, no full-fact shuffle."""
-    ev = load(spark, sf_dir, "events")
-    early = ev.filter(F.hour("ts") < 12).select("event_type").distinct()
-    late = ev.filter(F.hour("ts") >= 12).select("event_type").distinct()
-    both = early.intersect(late).agg(F.count(F.lit(1)).alias("n")).select(
-        F.lit("both").alias("bucket"), "n"
-    )
-    eo = early.exceptAll(late).agg(F.count(F.lit(1)).alias("n")).select(
-        F.lit("early_only").alias("bucket"), "n"
-    )
-    lo = late.exceptAll(early).agg(F.count(F.lit(1)).alias("n")).select(
-        F.lit("late_only").alias("bucket"), "n"
-    )
-    return both.unionByName(eo).unionByName(lo)
-
-
-@register(
     "q_link_priors",
     f"""
 WITH {SQL_DOCS_TOKS}, {SQL_KEPT_MENTIONS},
@@ -5074,7 +3797,7 @@ def q_temporal_relations(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("src", F.lit("PRECEDES").alias("pred"), "dst", "n_convs", "min_gap", "max_gap")
 
 
-# Round-2 additions (remaining TPC-H shapes + corpus document operators)
+# Round-2 additions (corpus document operators)
 # register themselves via this module's @register; imported last so every
 # helper above is defined. queries_r2's OWN tail imports queries_r3 (round-3
 # registrations) — chaining the tail imports keeps every import order

@@ -2,8 +2,8 @@
 surfaces not covered by the scalar/iterator UDFs or the UDTFs):
 ``groupBy(...).applyInPandas`` and ``cogroup(...).applyInPandas``.
 
-Both operators here are deterministic and have exact DuckDB twins
-(registered in queries_r2), so the surfaces themselves are hash-verified:
+Both operators here are deterministic; tests/test_grouped.py checks them
+against hand-computed results:
 
 - ``robust_user_outliers`` — per-user robust outlier summary via
   median/MAD (the estimator a quality pipeline uses when event values are
@@ -13,11 +13,11 @@ Both operators here are deterministic and have exact DuckDB twins
   3·1.4826·MAD cut threshold compares identically across engines.
 
 - ``asof_align`` — per-user as-of alignment of one event stream against
-  another via ``pandas.merge_asof`` inside a cogrouped map (the pandas
-  formulation of the q_asof_join window algebra; DuckDB twin is a native
-  ASOF LEFT JOIN). The right side is pre-aggregated to one row per
-  (user_id, ts) so backward-search ties cannot make output depend on
-  intra-group row order.
+  another via ``pandas.merge_asof`` inside a cogrouped map: each left row
+  takes the latest right row at or before its timestamp (a backward as-of
+  join, the same rule as DuckDB's ASOF LEFT JOIN). The right side is
+  pre-aggregated to one row per (user_id, ts) so backward-search ties
+  cannot make output depend on intra-group row order.
 
 Scale notes: both shuffle once on the grouping key (user_id) and hold ONE
 group in memory at a time — group size is per-user event count, bounded and

@@ -240,27 +240,11 @@ def write_bucketed(
 _SPREAD_ROUNDS = ((8, 0x00FF00FF), (4, 0x0F0F0F0F), (2, 0x33333333), (1, 0x55555555))
 
 
-def morton_sql(a_expr: str, b_expr: str) -> str:
-    """ANSI-SQL text of the 2-D Morton code of two 16-bit-bucketed keys.
-
-    Standard magic-number bit spreading (each round doubles the gap between
-    occupied bits), identical algebra on any engine with <<, &, | on
-    integers — used verbatim by the DuckDB oracle twin of q_zorder_layout.
-    """
-
-    def spread(e: str) -> str:
-        s = f"({e} & 65535)"
-        for sh, m in _SPREAD_ROUNDS:
-            s = f"(({s} | ({s} << {sh})) & {m})"
-        return s
-
-    return f"({spread(a_expr)} | ({spread(b_expr)} << 1))"
-
-
 def morton_col(a, b):
-    """Column form of morton_sql: pure JVM bitwise expressions (shiftleft /
-    bitwiseAND / bitwiseOR on longs), zero Python in the row path, fully
-    codegen-able — at 100 TB the z-value costs the same as any arithmetic
+    """2-D Morton code of two 16-bit-bucketed keys: magic-number bit
+    spreading (each round doubles the gap between occupied bits), as pure
+    JVM bitwise expressions (shiftleft / bitwiseAND / bitwiseOR on longs),
+    zero Python in the row path, fully codegen-able — at 100 TB the z-value costs the same as any arithmetic
     projection."""
 
     def spread(c):

@@ -1,5 +1,4 @@
-"""Round-2 query registrations: the remaining TPC-H query shapes adapted to
-the testdata's column subset, plus corpus-pipeline document operators (RAG
+"""Round-2 query registrations: corpus-pipeline document operators (RAG
 chunking, lexical diversity, Zipf fit, cross-doc boilerplate spans).
 
 Registered into cliner_spark.entry_queries.REGISTRY via its @register
@@ -24,540 +23,6 @@ from cliner_spark.entry_queries import (
     register,
 )
 from cliner_spark.tokenization import WS_TRIM, sql_tokens, tokens_col
-
-_DEC = "decimal(38,4)"
-
-
-def _rev(price="l_extendedprice", disc="l_discount"):
-    """Line revenue accumulated in exact decimal (engine-order-independent)."""
-    return (F.col(price) * (1 - F.col(disc))).cast(_DEC)
-
-
-# --------------------------------------------------------------------------
-# TPC-H shapes (remaining queries, adapted to the testdata column subset)
-# --------------------------------------------------------------------------
-
-
-@register(
-    "q_tpch_q4",
-    """
-SELECT o.o_orderpriority, CAST(count(*) AS BIGINT) AS order_count
-FROM orders o
-WHERE o.o_orderdate >= TIMESTAMP '1997-01-01'
-  AND o.o_orderdate < TIMESTAMP '1997-04-01'
-  AND EXISTS (SELECT 1 FROM lineitem l
-              WHERE l.l_orderkey = o.o_orderkey AND l.l_returnflag = 'R')
-GROUP BY o.o_orderpriority
-""",
-)
-def q_tpch_q4(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H q4 shape (EXISTS decorrelated to a LEFT SEMI join): priority
-    counts for one quarter's orders that have at least one returned line.
-    The date filter prunes orders BEFORE the semi join; the semi join keeps
-    the build side to matching keys only (no row multiplication, no
-    distinct needed)."""
-    o = load(spark, sf_dir, "orders").filter(
-        (F.col("o_orderdate") >= F.lit("1997-01-01").cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit("1997-04-01").cast("timestamp"))
-    )
-    ret = load(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
-    return (
-        o.join(ret, o.o_orderkey == ret.l_orderkey, "left_semi")
-        .groupBy("o_orderpriority")
-        .agg(F.count(F.lit(1)).alias("order_count"))
-    )
-
-
-@register(
-    "q_tpch_q7",
-    """
-SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
-       CAST(year(l.l_shipdate) AS INTEGER) AS l_year,
-       CAST(sum(CAST(l.l_extendedprice * (1 - l.l_discount) AS DECIMAL(38,4)))
-            AS DOUBLE) AS revenue
-FROM lineitem l
-JOIN supplier s ON l.l_suppkey = s.s_suppkey
-JOIN orders o   ON l.l_orderkey = o.o_orderkey
-JOIN customer c ON o.o_custkey = c.c_custkey
-JOIN nation n1  ON s.s_nationkey = n1.n_nationkey
-JOIN nation n2  ON c.c_nationkey = n2.n_nationkey
-WHERE (n1.n_name = 'NATION_1' AND n2.n_name = 'NATION_2')
-   OR (n1.n_name = 'NATION_2' AND n2.n_name = 'NATION_1')
-GROUP BY 1, 2, 3
-""",
-)
-def q_tpch_q7(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H q7 shape (volume shipping between a nation pair, by year).
-    Join graph: the two fact tables (lineitem, orders) shuffle once on
-    orderkey; supplier/customer/nation are broadcast dims. The nation-name
-    disjunction is applied to the PRE-JOIN dim rows (each nation filter
-    halves its dim before broadcast); the pair condition evaluates
-    post-join on two tiny code columns."""
-    li = load(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey", "l_shipdate", "l_extendedprice", "l_discount"
-    )
-    o = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    s = load(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    c = load(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    n = load(spark, sf_dir, "nation").filter(
-        F.col("n_name").isin("NATION_1", "NATION_2")
-    )
-    n1 = n.select(F.col("n_nationkey").alias("sn_key"), F.col("n_name").alias("supp_nation"))
-    n2 = n.select(F.col("n_nationkey").alias("cn_key"), F.col("n_name").alias("cust_nation"))
-    j = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n1), F.col("s_nationkey") == F.col("sn_key"))
-        .join(F.broadcast(n2), F.col("c_nationkey") == F.col("cn_key"))
-        .filter(F.col("supp_nation") != F.col("cust_nation"))
-    )
-    return j.groupBy(
-        "supp_nation", "cust_nation", F.year("l_shipdate").cast("int").alias("l_year")
-    ).agg(F.sum(_rev()).cast("double").alias("revenue"))
-
-
-@register(
-    "q_tpch_q8",
-    """
-WITH vol AS (
-  SELECT CAST(year(o.o_orderdate) AS INTEGER) AS o_year,
-         CAST(l.l_extendedprice * (1 - l.l_discount) AS DECIMAL(38,4)) AS volume,
-         n1.n_name AS supp_nation
-  FROM lineitem l
-  JOIN part p     ON l.l_partkey = p.p_partkey
-  JOIN supplier s ON l.l_suppkey = s.s_suppkey
-  JOIN orders o   ON l.l_orderkey = o.o_orderkey
-  JOIN customer c ON o.o_custkey = c.c_custkey
-  JOIN nation n1  ON s.s_nationkey = n1.n_nationkey
-  JOIN nation n2  ON c.c_nationkey = n2.n_nationkey
-  JOIN region r   ON n2.n_regionkey = r.r_regionkey
-  WHERE r.r_name = 'ASIA' AND p.p_type = 'ECONOMY'
-)
-SELECT o_year,
-       CAST(sum(CASE WHEN supp_nation = 'NATION_3' THEN volume
-                     ELSE CAST(0 AS DECIMAL(38,4)) END) AS DOUBLE) AS nation_volume,
-       CAST(sum(volume) AS DOUBLE) AS total_volume,
-       round(CAST(sum(CASE WHEN supp_nation = 'NATION_3' THEN volume
-                           ELSE CAST(0 AS DECIMAL(38,4)) END) AS DOUBLE)
-             / CAST(sum(volume) AS DOUBLE), 6) AS mkt_share
-FROM vol GROUP BY o_year
-""",
-)
-def q_tpch_q8(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H q8 shape (national market share within a region+part segment,
-    by order year). The selective dims (part type, region via nation)
-    broadcast and prune lineitem before the single fact-fact shuffle on
-    orderkey. Share = decimal-exact conditional sum over decimal-exact
-    total, divided once in DOUBLE (both engines do the identical two exact
-    operands -> identical quotient), rounded for hash stability."""
-    li = load(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_partkey", "l_suppkey", "l_extendedprice", "l_discount"
-    )
-    p = (
-        load(spark, sf_dir, "part")
-        .filter(F.col("p_type") == "ECONOMY")
-        .select("p_partkey")
-    )
-    s = load(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    o = load(spark, sf_dir, "orders").select("o_orderkey", "o_custkey", "o_orderdate")
-    c = load(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    nat = load(spark, sf_dir, "nation")
-    reg = load(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
-    n2 = nat.join(F.broadcast(reg), nat.n_regionkey == reg.r_regionkey).select(
-        F.col("n_nationkey").alias("cn_key")
-    )
-    n1 = nat.select(F.col("n_nationkey").alias("sn_key"), F.col("n_name").alias("supp_nation"))
-    vol = (
-        li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
-        .join(o, li.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .join(F.broadcast(n2), F.col("c_nationkey") == F.col("cn_key"))
-        .join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
-        .join(F.broadcast(n1), F.col("s_nationkey") == F.col("sn_key"))
-        .select(
-            F.year("o_orderdate").cast("int").alias("o_year"),
-            _rev().alias("volume"),
-            "supp_nation",
-        )
-    )
-    zero = F.lit(0).cast(_DEC)
-    nv = F.sum(F.when(F.col("supp_nation") == "NATION_3", F.col("volume")).otherwise(zero))
-    tv = F.sum("volume")
-    return vol.groupBy("o_year").agg(
-        nv.cast("double").alias("nation_volume"),
-        tv.cast("double").alias("total_volume"),
-        F.round(nv.cast("double") / tv.cast("double"), 6).alias("mkt_share"),
-    )
-
-
-@register(
-    "q_tpch_q9",
-    """
-SELECT n.n_name AS nation, CAST(year(o.o_orderdate) AS INTEGER) AS o_year,
-       CAST(sum(CAST(l.l_extendedprice * (1 - l.l_discount)
-                     - p.p_retailprice * 0.1 * l.l_quantity AS DECIMAL(38,4)))
-            AS DOUBLE) AS sum_profit
-FROM lineitem l
-JOIN part p     ON l.l_partkey = p.p_partkey
-JOIN supplier s ON l.l_suppkey = s.s_suppkey
-JOIN orders o   ON l.l_orderkey = o.o_orderkey
-JOIN nation n   ON s.s_nationkey = n.n_nationkey
-WHERE p.p_name LIKE '%widget%'
-GROUP BY 1, 2
-""",
-)
-def q_tpch_q9(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H q9 shape (product-line profit by supplier nation and year;
-    p_retailprice*0.1 stands in for ps_supplycost — the testdata has no
-    partsupp). The LIKE filter prunes part before broadcast, which prunes
-    lineitem before the orderkey shuffle; profit accumulates in exact
-    decimal."""
-    li = load(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_partkey", "l_suppkey", "l_quantity",
-        "l_extendedprice", "l_discount",
-    )
-    p = (
-        load(spark, sf_dir, "part")
-        .filter(F.col("p_name").like("%widget%"))
-        .select("p_partkey", "p_retailprice")
-    )
-    s = load(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    o = load(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
-    n = load(spark, sf_dir, "nation").select(
-        "n_nationkey", F.col("n_name").alias("nation")
-    )
-    profit = (
-        F.col("l_extendedprice") * (1 - F.col("l_discount"))
-        - F.col("p_retailprice") * F.lit(0.1) * F.col("l_quantity")
-    ).cast(_DEC)
-    j = (
-        li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
-        .join(o, li.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
-        .join(F.broadcast(n), F.col("s_nationkey") == F.col("n_nationkey"))
-    )
-    return j.groupBy(
-        "nation", F.year("o_orderdate").cast("int").alias("o_year")
-    ).agg(F.sum(profit).cast("double").alias("sum_profit"))
-
-
-@register(
-    "q_tpch_q11",
-    """
-WITH val AS (
-  SELECT n.n_name AS nation, l.l_partkey,
-         sum(CAST(l.l_extendedprice * (1 - l.l_discount) AS DECIMAL(38,4))) AS part_value
-  FROM lineitem l
-  JOIN supplier s ON l.l_suppkey = s.s_suppkey
-  JOIN nation n   ON s.s_nationkey = n.n_nationkey
-  GROUP BY 1, 2
-),
-tot AS (SELECT sum(part_value) AS total_value FROM val)
-SELECT v.nation, v.l_partkey, CAST(v.part_value AS DOUBLE) AS part_value
-FROM val v, tot t
-WHERE v.part_value * 20000 > t.total_value
-""",
-)
-def q_tpch_q11(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H q11 shape (HAVING against a global scalar aggregate):
-    (nation, part) inventory values exceeding 0.005% of the grand total. The
-    fraction predicate is the exact decimal cross-multiplication
-    part_value*20000 > total (no float division); the 1-row total joins via
-    broadcast — the detail table is never re-shuffled for the comparison."""
-    li = load(spark, sf_dir, "lineitem").select(
-        "l_suppkey", "l_partkey", "l_extendedprice", "l_discount"
-    )
-    s = load(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    n = load(spark, sf_dir, "nation").select(
-        "n_nationkey", F.col("n_name").alias("nation")
-    )
-    val = (
-        li.join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
-        .join(F.broadcast(n), F.col("s_nationkey") == F.col("n_nationkey"))
-        .groupBy("nation", "l_partkey")
-        .agg(F.sum(_rev()).alias("part_value"))
-    )
-    tot = val.agg(F.sum("part_value").alias("total_value"))
-    return (
-        val.crossJoin(F.broadcast(tot))
-        .filter(F.col("part_value") * 20000 > F.col("total_value"))
-        .select("nation", "l_partkey", F.col("part_value").cast("double").alias("part_value"))
-    )
-
-
-@register(
-    "q_tpch_q13",
-    """
-SELECT c_count, CAST(count(*) AS BIGINT) AS custdist
-FROM (
-  SELECT c.c_custkey, CAST(count(o.o_orderkey) AS BIGINT) AS c_count
-  FROM customer c
-  LEFT JOIN orders o ON c.c_custkey = o.o_custkey
-                    AND o.o_orderpriority <> '1-URGENT'
-  GROUP BY c.c_custkey
-)
-GROUP BY c_count
-""",
-)
-def q_tpch_q13(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H q13 shape (customer order-count distribution): LEFT OUTER join
-    with a pushed-into-the-join predicate on the right side (customers with
-    zero qualifying orders must survive with c_count=0), then a two-level
-    aggregation. count(o_orderkey) counts only matched rows — the null row
-    from the outer join contributes 0, exactly the SQL count(col)
-    semantics."""
-    c = load(spark, sf_dir, "customer").select("c_custkey")
-    o = load(spark, sf_dir, "orders").filter(
-        F.col("o_orderpriority") != "1-URGENT"
-    ).select("o_custkey", "o_orderkey")
-    per_cust = (
-        c.join(o, c.c_custkey == o.o_custkey, "left")
-        .groupBy("c_custkey")
-        .agg(F.count("o_orderkey").alias("c_count"))
-    )
-    return per_cust.groupBy("c_count").agg(F.count(F.lit(1)).alias("custdist"))
-
-
-@register(
-    "q_tpch_q15",
-    """
-WITH rev AS (
-  SELECT l_suppkey,
-         sum(CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(38,4))) AS total_rev
-  FROM lineitem
-  WHERE l_shipdate >= TIMESTAMP '1997-01-01' AND l_shipdate < TIMESTAMP '1997-04-01'
-  GROUP BY l_suppkey
-)
-SELECT s.s_suppkey, s.s_name, CAST(r.total_rev AS DOUBLE) AS total_revenue
-FROM rev r JOIN supplier s ON r.l_suppkey = s.s_suppkey
-WHERE r.total_rev = (SELECT max(total_rev) FROM rev)
-""",
-)
-def q_tpch_q15(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H q15 shape (top supplier by quarterly revenue, ties kept): the
-    revenue CTE computes once, its 1-row max broadcasts back — equality on
-    the exact DECIMAL sums, so ties are engine-exact (a float max-equality
-    would be hash-roulette). Supplier dim broadcasts for the name lookup."""
-    li = load(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp"))
-        & (F.col("l_shipdate") < F.lit("1997-04-01").cast("timestamp"))
-    )
-    rev = li.groupBy("l_suppkey").agg(F.sum(_rev()).alias("total_rev"))
-    rev = rev.localCheckpoint(eager=True)  # consumed twice: detail + max
-    mx = rev.agg(F.max("total_rev").alias("_mx"))
-    s = load(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
-    return (
-        rev.crossJoin(F.broadcast(mx))
-        .filter(F.col("total_rev") == F.col("_mx"))
-        .join(F.broadcast(s), F.col("l_suppkey") == F.col("s_suppkey"))
-        .select("s_suppkey", "s_name", F.col("total_rev").cast("double").alias("total_revenue"))
-    )
-
-
-@register(
-    "q_tpch_q16",
-    """
-SELECT p.p_brand, p.p_type, p.p_size,
-       CAST(count(DISTINCT l.l_suppkey) AS BIGINT) AS supplier_cnt
-FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
-WHERE p.p_brand <> 'Brand#1'
-  AND p.p_type NOT IN ('PROMO', 'ECONOMY')
-  AND p.p_size IN (1, 4, 7, 10, 13, 16, 19, 22)
-  AND l.l_suppkey NOT IN (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
-GROUP BY 1, 2, 3
-""",
-)
-def q_tpch_q16(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H q16 shape (supplier diversity per part segment with a NOT IN
-    exclusion list): the NOT IN decorrelates to a LEFT ANTI join against
-    the (tiny, broadcast) excluded-supplier keys — safe here because
-    s_suppkey is non-null, so NOT IN and ANTI agree. Part predicates prune
-    the dim before broadcast; count(DISTINCT) rides one shuffle on the
-    3-column group key."""
-    p = (
-        load(spark, sf_dir, "part")
-        .filter(
-            (F.col("p_brand") != "Brand#1")
-            & ~F.col("p_type").isin("PROMO", "ECONOMY")
-            & F.col("p_size").isin(1, 4, 7, 10, 13, 16, 19, 22)
-        )
-        .select("p_partkey", "p_brand", "p_type", "p_size")
-    )
-    bad = load(spark, sf_dir, "supplier").filter(F.col("s_acctbal") < 0).select(
-        "s_suppkey"
-    )
-    li = load(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey")
-    return (
-        li.join(F.broadcast(bad), li.l_suppkey == bad.s_suppkey, "left_anti")
-        .join(F.broadcast(p), F.col("l_partkey") == F.col("p_partkey"))
-        .groupBy("p_brand", "p_type", "p_size")
-        .agg(F.count_distinct("l_suppkey").alias("supplier_cnt"))
-    )
-
-
-@register(
-    "q_tpch_q17",
-    """
-WITH pq AS (
-  SELECT l_partkey,
-         sum(CAST(l_quantity AS DECIMAL(38,4))) AS sum_qty,
-         count(*) AS cnt
-  FROM lineitem GROUP BY l_partkey
-)
-SELECT CAST(sum(CAST(l.l_extendedprice AS DECIMAL(38,4))) AS DOUBLE)
-         AS small_qty_revenue,
-       CAST(count(*) AS BIGINT) AS n_lines
-FROM lineitem l
-JOIN part p ON l.l_partkey = p.p_partkey
-JOIN pq    ON l.l_partkey = pq.l_partkey
-WHERE p.p_brand = 'Brand#3'
-  AND CAST(l.l_quantity AS DECIMAL(38,4)) * pq.cnt * 5 < pq.sum_qty
-""",
-)
-def q_tpch_q17(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H q17 shape (small-quantity lines vs 20% of the per-part mean).
-    The correlated AVG decorrelates to one per-part aggregate joined back;
-    the l_quantity < 0.2*avg predicate is rewritten exactly as
-    qty*cnt*5 < sum_qty in DECIMAL — no float division, no engine drift on
-    boundary rows. The per-part aggregate is part-key-sized, broadcast back
-    onto the fact."""
-    li = load(spark, sf_dir, "lineitem").select(
-        "l_partkey", "l_quantity", "l_extendedprice"
-    )
-    pq = li.groupBy("l_partkey").agg(
-        F.sum(F.col("l_quantity").cast(_DEC)).alias("sum_qty"),
-        F.count(F.lit(1)).alias("cnt"),
-    )
-    p = (
-        load(spark, sf_dir, "part")
-        .filter(F.col("p_brand") == "Brand#3")
-        .select("p_partkey")
-    )
-    j = (
-        li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
-        .join(pq.withColumnRenamed("l_partkey", "_pk"), F.col("l_partkey") == F.col("_pk"))
-        .filter(F.col("l_quantity").cast(_DEC) * F.col("cnt") * 5 < F.col("sum_qty"))
-    )
-    return j.agg(
-        F.sum(F.col("l_extendedprice").cast(_DEC)).cast("double").alias("small_qty_revenue"),
-        F.count(F.lit(1)).alias("n_lines"),
-    )
-
-
-@register(
-    "q_tpch_q21",
-    """
-SELECT s.s_name, CAST(count(*) AS BIGINT) AS numwait
-FROM supplier s
-JOIN lineitem l1 ON s.s_suppkey = l1.l_suppkey
-JOIN orders o    ON o.o_orderkey = l1.l_orderkey
-WHERE o.o_orderstatus = 'F' AND l1.l_returnflag = 'R'
-  AND EXISTS (SELECT 1 FROM lineitem l2
-              WHERE l2.l_orderkey = l1.l_orderkey
-                AND l2.l_suppkey <> l1.l_suppkey)
-  AND NOT EXISTS (SELECT 1 FROM lineitem l3
-                  WHERE l3.l_orderkey = l1.l_orderkey
-                    AND l3.l_suppkey <> l1.l_suppkey
-                    AND l3.l_returnflag = 'R')
-GROUP BY s.s_name
-""",
-)
-def q_tpch_q21(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H q21 shape (suppliers solely responsible for returned lines in
-    multi-supplier finished orders): EXISTS -> LEFT SEMI and NOT EXISTS ->
-    LEFT ANTI self-joins on lineitem, equi on orderkey with the
-    supplier-inequality riding the same hash join as a residual predicate
-    (no cartesian, no window). The distinct (orderkey, suppkey) projection
-    keeps both probe sides minimal before the semi/anti."""
-    li = load(spark, sf_dir, "lineitem")
-    o = load(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F").select(
-        "o_orderkey"
-    )
-    l1 = (
-        li.filter(F.col("l_returnflag") == "R")
-        .select("l_orderkey", "l_suppkey")
-        .join(o, F.col("l_orderkey") == o.o_orderkey, "left_semi")
-    )
-    pairs = li.select(
-        F.col("l_orderkey").alias("p_ok"), F.col("l_suppkey").alias("p_sk")
-    ).distinct()
-    rpairs = (
-        li.filter(F.col("l_returnflag") == "R")
-        .select(F.col("l_orderkey").alias("r_ok"), F.col("l_suppkey").alias("r_sk"))
-        .distinct()
-    )
-    cand = l1.join(
-        pairs,
-        (l1.l_orderkey == pairs.p_ok) & (l1.l_suppkey != pairs.p_sk),
-        "left_semi",
-    ).join(
-        rpairs,
-        (l1.l_orderkey == rpairs.r_ok) & (l1.l_suppkey != rpairs.r_sk),
-        "left_anti",
-    )
-    s = load(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
-    return (
-        cand.join(F.broadcast(s), cand.l_suppkey == s.s_suppkey)
-        .groupBy("s_name")
-        .agg(F.count(F.lit(1)).alias("numwait"))
-    )
-
-
-@register(
-    "q_tpch_q22",
-    """
-WITH pos AS (
-  SELECT c_custkey, c_acctbal, CAST(c_custkey % 10 AS INTEGER) AS cust_code
-  FROM customer WHERE c_custkey % 10 IN (1, 3, 5, 7)
-),
-stats AS (
-  SELECT sum(CAST(c_acctbal AS DECIMAL(38,6))) AS sum_bal,
-         count(*) AS cnt
-  FROM pos WHERE c_acctbal > 0
-)
-SELECT cust_code, CAST(count(*) AS BIGINT) AS numcust,
-       CAST(sum(CAST(c_acctbal AS DECIMAL(38,6))) AS DOUBLE) AS totacctbal
-FROM pos, stats
-WHERE CAST(c_acctbal AS DECIMAL(38,6)) * stats.cnt > stats.sum_bal
-  AND NOT EXISTS (SELECT 1 FROM orders o WHERE o.o_custkey = pos.c_custkey
-                    AND o.o_orderpriority = '1-URGENT')
-GROUP BY cust_code
-""",
-)
-def q_tpch_q22(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H q22 shape (rich customers with no orders, by code bucket;
-    custkey%10 stands in for the phone country code). The global-average
-    predicate is the exact decimal cross-multiplication bal*cnt > sum_bal
-    (one broadcast 1-row stats join); the NOT EXISTS (no urgent orders —
-    every testdata customer has some order, so the classic no-orders form
-    would be vacuously empty) decorrelates to a LEFT ANTI against the
-    urgent-order custkeys."""
-    cust = load(spark, sf_dir, "customer").select("c_custkey", "c_acctbal")
-    pos = cust.filter((F.col("c_custkey") % 10).isin(1, 3, 5, 7)).select(
-        "c_custkey",
-        "c_acctbal",
-        (F.col("c_custkey") % 10).cast("int").alias("cust_code"),
-    )
-    bal6 = F.col("c_acctbal").cast("decimal(38,6)")
-    stats = pos.filter(F.col("c_acctbal") > 0).agg(
-        F.sum(bal6).alias("sum_bal"), F.count(F.lit(1)).alias("cnt")
-    )
-    okeys = (
-        load(spark, sf_dir, "orders")
-        .filter(F.col("o_orderpriority") == "1-URGENT")
-        .select("o_custkey")
-    )
-    return (
-        pos.crossJoin(F.broadcast(stats))
-        .filter(bal6 * F.col("cnt") > F.col("sum_bal"))
-        .join(okeys, pos.c_custkey == okeys.o_custkey, "left_anti")
-        .groupBy("cust_code")
-        .agg(
-            F.count(F.lit(1)).alias("numcust"),
-            F.sum(bal6).cast("double").alias("totacctbal"),
-        )
-    )
 
 
 # --------------------------------------------------------------------------
@@ -1223,134 +688,6 @@ def q_ssjoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     return ssjoin_prefix(load_docs(spark, sf_dir), n=3, theta_pct=50)
 
 
-@register(
-    "q_tpch_q2",
-    """
-WITH costs AS (
-  SELECT l_partkey, l_suppkey, min(l_extendedprice) AS cost
-  FROM lineitem GROUP BY 1, 2
-),
-eu AS (
-  SELECT s.s_suppkey, s.s_name
-  FROM supplier s JOIN nation n ON s.s_nationkey = n.n_nationkey
-  JOIN region r ON n.n_regionkey = r.r_regionkey
-  WHERE r.r_name = 'EUROPE'
-),
-elig AS (
-  SELECT c.l_partkey, c.l_suppkey, c.cost, e.s_name
-  FROM costs c JOIN eu e ON c.l_suppkey = e.s_suppkey
-),
-mc AS (SELECT l_partkey, min(cost) AS min_cost FROM elig GROUP BY 1)
-SELECT p.p_partkey, p.p_name, el.l_suppkey AS s_suppkey, el.s_name,
-       el.cost AS supply_cost
-FROM elig el
-JOIN mc ON el.l_partkey = mc.l_partkey AND el.cost = mc.min_cost
-JOIN part p ON el.l_partkey = p.p_partkey
-WHERE p.p_size IN (5, 15, 25)
-""",
-)
-def q_tpch_q2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H q2 shape (min-cost supplier per part within a region, ties
-    kept; min l_extendedprice per (part, supplier) stands in for
-    ps_supplycost). The correlated MIN decorrelates to a per-part aggregate
-    joined back on (part, cost) — equality on a double MIN is exact (min
-    SELECTS an input value, both engines compare the identical bits). The
-    region filter prunes the supplier dim before anything joins it."""
-    li = load(spark, sf_dir, "lineitem").select(
-        "l_partkey", "l_suppkey", "l_extendedprice"
-    )
-    costs = li.groupBy("l_partkey", "l_suppkey").agg(
-        F.min("l_extendedprice").alias("cost")
-    )
-    n = load(spark, sf_dir, "nation")
-    r = load(spark, sf_dir, "region").filter(F.col("r_name") == "EUROPE")
-    eu = (
-        load(spark, sf_dir, "supplier")
-        .join(F.broadcast(n.join(F.broadcast(r), n.n_regionkey == r.r_regionkey)),
-              F.col("s_nationkey") == F.col("n_nationkey"))
-        .select("s_suppkey", "s_name")
-    )
-    elig = costs.join(F.broadcast(eu), costs.l_suppkey == eu.s_suppkey).select(
-        "l_partkey", "l_suppkey", "cost", "s_name"
-    )
-    elig = elig.localCheckpoint(eager=True)  # consumed by detail + min
-    mc = elig.groupBy(F.col("l_partkey").alias("_pk")).agg(
-        F.min("cost").alias("min_cost")
-    )
-    p = (
-        load(spark, sf_dir, "part")
-        .filter(F.col("p_size").isin(5, 15, 25))
-        .select("p_partkey", "p_name")
-    )
-    return (
-        elig.join(mc, (elig.l_partkey == mc._pk) & (elig.cost == mc.min_cost))
-        .join(F.broadcast(p), F.col("l_partkey") == F.col("p_partkey"))
-        .select(
-            "p_partkey", "p_name",
-            F.col("l_suppkey").alias("s_suppkey"), "s_name",
-            F.col("cost").alias("supply_cost"),
-        )
-    )
-
-
-@register(
-    "q_tpch_q20",
-    """
-WITH qty AS (
-  SELECT l_suppkey, l_partkey,
-         sum(CAST(l_quantity AS DECIMAL(38,4))) AS sq
-  FROM lineitem
-  WHERE l_shipdate >= TIMESTAMP '1997-01-01' AND l_shipdate < TIMESTAMP '1998-01-01'
-  GROUP BY 1, 2
-),
-tot AS (SELECT l_partkey, sum(sq) AS tq FROM qty GROUP BY 1)
-SELECT DISTINCT s.s_suppkey, s.s_name
-FROM supplier s
-WHERE s.s_acctbal > 0
-  AND s.s_suppkey IN (
-    SELECT q.l_suppkey FROM qty q
-    JOIN tot t ON q.l_partkey = t.l_partkey
-    WHERE q.sq * 2 > t.tq
-      AND q.l_partkey IN (SELECT p_partkey FROM part WHERE p_name LIKE 'small%')
-  )
-""",
-)
-def q_tpch_q20(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H q20 shape (double-nested IN: suppliers responsible for more
-    than half a part's annual volume, over a name-filtered part subset).
-    Both INs decorrelate to LEFT SEMI joins; the majority predicate is the
-    exact decimal cross-multiplication sq*2 > total. The per-(supp, part)
-    aggregate reuses its own rollup for the denominator — one shuffle, one
-    re-aggregation, no second scan."""
-    li = load(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp"))
-        & (F.col("l_shipdate") < F.lit("1998-01-01").cast("timestamp"))
-    )
-    qty = li.groupBy("l_suppkey", "l_partkey").agg(
-        F.sum(F.col("l_quantity").cast(_DEC)).alias("sq")
-    )
-    qty = qty.localCheckpoint(eager=True)  # detail + per-part rollup
-    tot = qty.groupBy(F.col("l_partkey").alias("_pk")).agg(F.sum("sq").alias("tq"))
-    small = (
-        load(spark, sf_dir, "part")
-        .filter(F.col("p_name").like("small%"))
-        .select("p_partkey")
-    )
-    majors = (
-        qty.join(tot, (qty.l_partkey == tot._pk))
-        .filter(F.col("sq") * 2 > F.col("tq"))
-        .join(F.broadcast(small), F.col("l_partkey") == F.col("p_partkey"), "left_semi")
-        .select("l_suppkey")
-        .distinct()
-    )
-    s = load(spark, sf_dir, "supplier").filter(F.col("s_acctbal") > 0)
-    return (
-        s.join(majors, s.s_suppkey == majors.l_suppkey, "left_semi")
-        .select("s_suppkey", "s_name")
-        .distinct()
-    )
-
-
 # --------------------------------------------------------------------------
 # KG consumption: pattern matching and star summaries over the TRIPLES table
 # --------------------------------------------------------------------------
@@ -1542,34 +879,6 @@ def q_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load(spark, sf_dir, "embeddings")
     return kmeans_fixed_point(emb, k=4, rounds=3)
-
-
-@register(
-    "q_corr_matrix",
-    """
-SELECT
-  round(corr(l_quantity, l_extendedprice), 6) AS qty_price,
-  round(corr(l_quantity, l_discount), 6) AS qty_disc,
-  round(corr(l_extendedprice, l_tax), 6) AS price_tax,
-  round(corr(l_discount, l_tax), 6) AS disc_tax,
-  CAST(count(*) AS BIGINT) AS n_rows
-FROM lineitem
-""",
-)
-def q_corr_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pairwise Pearson correlations across the lineitem measures — the
-    one-pass profiling statistic a feature-engineering pass reads first.
-    corr is a single-pass algebraic aggregate in both engines (no window,
-    no second scan); rounded to 6 dp because float accumulation order
-    differs across engines."""
-    li = load(spark, sf_dir, "lineitem")
-    return li.agg(
-        F.round(F.corr("l_quantity", "l_extendedprice"), 6).alias("qty_price"),
-        F.round(F.corr("l_quantity", "l_discount"), 6).alias("qty_disc"),
-        F.round(F.corr("l_extendedprice", "l_tax"), 6).alias("price_tax"),
-        F.round(F.corr("l_discount", "l_tax"), 6).alias("disc_tax"),
-        F.count(F.lit(1)).alias("n_rows"),
-    )
 
 
 @register(
@@ -1840,102 +1149,9 @@ def q_udtf_sentences(spark: SparkSession, sf_dir: str) -> DataFrame:
     return split_sentences(load_docs(spark, sf_dir))
 
 
-@register(
-    "q_udtf_sessions",
-    """
-WITH flagged AS (
-  SELECT user_id, ts,
-         CASE WHEN lag(ts) OVER w IS NULL
-                OR epoch(ts) - epoch(lag(ts) OVER w) > 1800 THEN 1 ELSE 0 END
-           AS new_s
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts)
-),
-sess AS (
-  SELECT user_id, ts,
-         CAST(sum(new_s) OVER (PARTITION BY user_id ORDER BY ts
-                               ROWS UNBOUNDED PRECEDING) - 1 AS INT)
-           AS session_id
-  FROM flagged
-)
-SELECT user_id, session_id, CAST(count(*) AS BIGINT) AS n_events,
-       min(ts) AS start_ts, max(ts) AS end_ts
-FROM sess GROUP BY user_id, session_id
-""",
-)
-def q_udtf_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gaps-and-islands sessionization as a TABLE-argument Python UDTF with
-    PARTITION BY user_id ORDER BY ts (tablefuncs.SessionizeEvents): a single
-    O(n) streaming pass per user holding O(1) state — the third formulation
-    of the same algebra next to q_sessionize (window functions) and the
-    event-time session window (streaming), each hash-checked against the
-    same oracle shape. Session-id ties on equal ts are boundary-safe (equal
-    ts ⇒ gap 0 ⇒ same session regardless of intra-tie order)."""
-    from cliner_spark.tablefuncs import sessionize
-
-    out = sessionize(load(spark, sf_dir, "events"))
-    return out.withColumn("n_events", F.col("n_events").cast("bigint"))
-
-
 # --------------------------------------------------------------------------
-# Grouped-map / cogrouped-map pandas surface — cliner_spark.grouped
+# Snapshot diff, unpivot stats, weighted sampling, SCD2 point-in-time
 # --------------------------------------------------------------------------
-
-
-@register(
-    "q_grouped_outliers",
-    """
-WITH med AS (SELECT user_id, median(value) AS med FROM events GROUP BY 1),
-dev AS (SELECT e.user_id, abs(e.value - m.med) AS ad, m.med
-        FROM events e JOIN med m USING (user_id)),
-mad AS (SELECT user_id, median(ad) AS mad FROM dev GROUP BY 1)
-SELECT d.user_id, CAST(count(*) AS BIGINT) AS n_events,
-       any_value(d.med) AS med, any_value(m.mad) AS mad,
-       CAST(CASE WHEN any_value(m.mad) > 0
-            THEN sum(CASE WHEN d.ad > 3.0 * 1.4826 * m.mad THEN 1 ELSE 0 END)
-            ELSE 0 END AS BIGINT) AS n_outliers
-FROM dev d JOIN mad m USING (user_id)
-GROUP BY d.user_id
-""",
-)
-def q_grouped_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user robust (median/MAD) outlier summary via
-    groupBy(user_id).applyInPandas (grouped.robust_user_outliers). numpy's
-    linear-interpolated median is bitwise-identical to DuckDB median on
-    float64 (validated at sf0.01 and sf0.1), so even the 3*1.4826*MAD cut
-    booleans hash-match. One shuffle on user_id; one user's events per
-    pandas group."""
-    from cliner_spark.grouped import robust_user_outliers
-
-    return robust_user_outliers(load(spark, sf_dir, "events"))
-
-
-@register(
-    "q_cogroup_asof",
-    """
-WITH l AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'click'),
-r AS (SELECT user_id, ts, max(value) AS rv FROM events
-      WHERE event_type = 'purchase' GROUP BY 1, 2)
-SELECT l.event_id, l.user_id, l.ts, r.rv AS last_right_value,
-       epoch_ms(l.ts) - epoch_ms(r.ts) AS gap_ms
-FROM l ASOF LEFT JOIN r ON l.user_id = r.user_id AND r.ts <= l.ts
-""",
-)
-def q_cogroup_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user backward as-of alignment (clicks vs latest prior purchase)
-    via cogroup(...).applyInPandas + pandas merge_asof (grouped.asof_align)
-    — the pandas formulation of the q_asof_join window algebra, with a
-    native DuckDB ASOF LEFT JOIN as the oracle. Right side pre-aggregated
-    per (user_id, ts) so backward ties are impossible; gaps in whole ms
-    (per-side epoch-ms floor) because the synthetic ts carries microsecond
-    fractions."""
-    from cliner_spark.grouped import asof_align
-
-    ev = load(spark, sf_dir, "events")
-    return asof_align(
-        ev.filter(F.col("event_type") == "click"),
-        ev.filter(F.col("event_type") == "purchase"),
-    )
 
 
 @register(
@@ -1971,57 +1187,6 @@ def q_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("text"),
     )
     return snapshot_diff(v1, v2, "doc_id", ["text"])
-
-
-@register(
-    "q_incr_agg_merge",
-    """
-WITH base AS (
-  SELECT event_type, count(*) AS n,
-         sum(CAST(value AS DECIMAL(38,4))) AS sv
-  FROM events WHERE ts < TIMESTAMP '2024-04-01' GROUP BY 1
-),
-delta AS (
-  SELECT event_type, count(*) AS n,
-         sum(CAST(value AS DECIMAL(38,4))) AS sv
-  FROM events WHERE ts >= TIMESTAMP '2024-04-01' GROUP BY 1
-),
-merged AS (
-  SELECT event_type, n, sv FROM base
-  UNION ALL SELECT event_type, n, sv FROM delta
-)
-SELECT event_type, CAST(sum(n) AS BIGINT) AS n_events,
-       CAST(sum(sv) AS DOUBLE) AS sum_value
-FROM merged GROUP BY event_type
-""",
-)
-def q_incr_agg_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental view maintenance of a per-type aggregate: the BASE
-    snapshot's partial aggregates (count, decimal sum — both algebraic,
-    therefore mergeable) are merged with a DELTA batch's partials instead of
-    rescanning the base — the 100 TB pattern where the materialized agg is
-    table-sized metadata and each refresh touches only the new partition.
-    The oracle recomputes the same merge; decimal accumulation keeps the
-    float result order-independent across engines."""
-    ev = load(spark, sf_dir, "events")
-    cutoff = F.lit("2024-04-01").cast("timestamp")
-
-    def partial(df):
-        return df.groupBy("event_type").agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("value").cast(_DEC)).alias("sv"),
-        )
-
-    base = partial(ev.filter(F.col("ts") < cutoff))
-    delta = partial(ev.filter(F.col("ts") >= cutoff))
-    return (
-        base.unionByName(delta)
-        .groupBy("event_type")
-        .agg(
-            F.sum("n").cast("bigint").alias("n_events"),
-            F.sum("sv").cast("double").alias("sum_value"),
-        )
-    )
 
 
 @register(
@@ -2191,41 +1356,6 @@ def q_scd2_pit(spark: SparkSession, sf_dir: str) -> DataFrame:
         j.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)
         .select("term", F.col("as_of").cast("int").alias("as_of"), "cui", "score")
-    )
-
-
-@register(
-    "q_variant_props",
-    """
-SELECT event_type,
-       CAST(min(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS vmin,
-       CAST(percentile_cont(0.5) WITHIN GROUP
-            (ORDER BY CAST(json_extract_string(props, '$.k') AS BIGINT)) AS DOUBLE)
-         AS vmedian,
-       CAST(max(CAST(json_extract_string(props, '$.k') AS BIGINT)) AS BIGINT) AS vmax
-FROM events
-GROUP BY event_type
-""",
-)
-def q_variant_props(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Semi-structured extraction through Spark 4's VariantType:
-    parse_json(props) -> variant, then typed variant_get path access — the
-    open-schema sibling of q_json_props' string-path get_json_object.
-    Variant stores a parsed binary form, so repeated path probes don't
-    re-parse the JSON text (the 100 TB difference when many fields are
-    read); the exact median is computable because the variant path is
-    extracted as a typed bigint before aggregation. Oracle reproduces the
-    identical algebra over DuckDB's JSON functions."""
-    ev = load(spark, sf_dir, "events")
-    v = F.parse_json(F.col("props"))
-    k = F.try_variant_get(v, "$.k", "bigint")
-    return ev.groupBy("event_type").agg(
-        F.min(k).alias("vmin"),
-        F.expr(
-            "CAST(percentile(try_variant_get(parse_json(props), '$.k', 'bigint'),"
-            " 0.5) AS DOUBLE)"
-        ).alias("vmedian"),
-        F.max(k).alias("vmax"),
     )
 
 
@@ -2780,92 +1910,10 @@ def q_hier_link_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# KMV join-cardinality sketch, reciprocal-rank-fusion hybrid retrieval,
-# transcript ingest gap audit
+# Reciprocal-rank-fusion hybrid retrieval, transcript ingest gap audit
 # --------------------------------------------------------------------------
 
 from cliner_spark.entry_queries import BM25_QUERY  # noqa: E402
-
-_KMV_H = "CAST(('0x' || substr(md5(CAST(key AS VARCHAR)), 1, 13)) AS BIGINT)"
-_KMV_EST = "CAST(139611588448485376 AS DOUBLE)"  # (k-1) * 2^52, k=32
-
-
-@register(
-    "q_kmv_join_estimate",
-    f"""
-WITH
-da AS (SELECT DISTINCT o_custkey AS key FROM orders),
-db AS (SELECT DISTINCT c_custkey AS key FROM customer),
-ka AS (SELECT {_KMV_H} AS h FROM da ORDER BY 1 LIMIT 32),
-kb AS (SELECT {_KMV_H} AS h FROM db ORDER BY 1 LIMIT 32),
-kg AS (SELECT h FROM (SELECT h FROM ka UNION SELECT h FROM kb) ORDER BY h LIMIT 32),
-ov AS (SELECT count(*) AS overlap FROM kg
-       WHERE h IN (SELECT h FROM ka) AND h IN (SELECT h FROM kb)),
-m AS (SELECT
-  (SELECT count(*) FROM da) AS exact_a,
-  (SELECT max(h) FROM ka) AS ua,
-  (SELECT count(*) FROM db) AS exact_b,
-  (SELECT max(h) FROM kb) AS ub,
-  (SELECT count(*) FROM da JOIN db USING (key)) AS exact_inter,
-  (SELECT max(h) FROM kg) AS ug,
-  (SELECT overlap FROM ov) AS overlap)
-SELECT CAST(exact_a AS BIGINT) AS exact_a,
-       round({_KMV_EST} / ua, 2) AS est_a,
-       CAST(exact_b AS BIGINT) AS exact_b,
-       round({_KMV_EST} / ub, 2) AS est_b,
-       CAST(exact_inter AS BIGINT) AS exact_inter,
-       round((overlap / 32.0) * ({_KMV_EST} / ug), 2) AS est_inter
-FROM m
-""",
-)
-def q_kmv_join_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Join-cardinality estimation from KMV (k-minimum-values) distinct
-    sketches (Bar-Yossef 2002 / Beyer 2007): sketch orders.o_custkey and
-    customer.c_custkey (k=32 smallest md5 values each), merge to the union
-    sketch, estimate |A|, |B| and |A∩B| = (overlap/k) * D_union — the
-    shuffle-free sizing pass a planner runs before picking a join strategy
-    — and audit every estimate against the exact distinct counts in the
-    same row. Sketches are TakeOrdered top-k (no full sort, mergeable by
-    construction); the only full-width work is the exact audit itself,
-    which a production planner would skip."""
-    from cliner_spark.sketch import KMV_SPACE, kmv_sketch
-
-    o = load(spark, sf_dir, "orders")
-    c = load(spark, sf_dir, "customer")
-    ka = kmv_sketch(o, "o_custkey").localCheckpoint(eager=True)
-    kb = kmv_sketch(c, "c_custkey").localCheckpoint(eager=True)
-    kg = (
-        ka.unionByName(kb).distinct().orderBy("h").limit(32).localCheckpoint(eager=True)
-    )
-    est = F.lit(31.0) * F.lit(KMV_SPACE)
-    da = o.select(F.col("o_custkey").alias("key")).distinct()
-    db = c.select(F.col("c_custkey").alias("key")).distinct()
-    one = lambda df, expr, name: df.agg(expr.alias(name))  # noqa: E731
-    m = (
-        one(da, F.count(F.lit(1)).cast("bigint"), "exact_a")
-        .crossJoin(one(ka, F.max("h"), "ua"))
-        .crossJoin(one(db, F.count(F.lit(1)).cast("bigint"), "exact_b"))
-        .crossJoin(one(kb, F.max("h"), "ub"))
-        .crossJoin(one(da.join(db, "key"), F.count(F.lit(1)).cast("bigint"), "exact_inter"))
-        .crossJoin(one(kg, F.max("h"), "ug"))
-        .crossJoin(
-            one(
-                kg.join(ka, "h", "left_semi").join(kb, "h", "left_semi"),
-                F.count(F.lit(1)),
-                "overlap",
-            )
-        )
-    )
-    return m.select(
-        "exact_a",
-        F.round(est / F.col("ua").cast("double"), 2).alias("est_a"),
-        "exact_b",
-        F.round(est / F.col("ub").cast("double"), 2).alias("est_b"),
-        "exact_inter",
-        F.round(
-            (F.col("overlap") / F.lit(32.0)) * (est / F.col("ug").cast("double")), 2
-        ).alias("est_inter"),
-    )
 
 
 @register(
@@ -4507,7 +3555,7 @@ def q_ambiguous_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Round 2i: curriculum phase assignment, corrupt-JSON ingest audit
+# Round 2i: curriculum phase assignment
 # --------------------------------------------------------------------------
 
 
@@ -4569,76 +3617,6 @@ def q_curriculum_phases(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(3)
         .cast("int")
         .alias("phase"),
-    )
-
-
-@register(
-    "q_json_corrupt_audit",
-    """
-WITH ev AS (
-  SELECT event_type,
-         CASE WHEN event_id % 7 = 0
-              THEN substr(props, 1, len(props) - 1) ELSE props END AS props
-  FROM events
-),
-parsed AS (
-  SELECT event_type, json_valid(props) AS ok,
-         CASE WHEN json_valid(props)
-              THEN TRY_CAST(json_extract_string(props, '$.k') AS BIGINT) END AS k
-  FROM ev
-)
-SELECT event_type,
-       CAST(count(*) AS BIGINT) AS n_rows,
-       CAST(sum(CASE WHEN NOT ok THEN 1 ELSE 0 END) AS BIGINT) AS n_corrupt,
-       CAST(sum(CASE WHEN ok AND k IS NULL THEN 1 ELSE 0 END) AS BIGINT)
-         AS n_missing_k,
-       CAST(sum(CASE WHEN k IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_valid,
-       CAST(sum(k) AS BIGINT) AS sum_k,
-       CAST(min(k) AS BIGINT) AS min_k,
-       CAST(max(k) AS BIGINT) AS max_k
-FROM parsed GROUP BY event_type
-""",
-)
-def q_json_corrupt_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corrupt-record ingest audit for a semi-structured column: rows whose
-    JSON fails to parse are COUNTED (never silently dropped or nulled into
-    the stats) alongside the valid-row aggregate — the permissive-mode
-    bookkeeping every JSON ingest needs before trusting a field. Corruption
-    is synthesized deterministically (event_id % 7 loses its closing brace
-    — truncation, because BOTH parsers must agree it is malformed; a
-    TRAILING-garbage corruption exposed that Spark's get_json_object
-    accepts 'valid object + junk' while DuckDB's json_valid rejects it)
-    since the fixture JSON is all-valid.
-
-    Per ADVICE r2: unparseable JSON (n_corrupt — explicit validity
-    predicate: Spark get_json_object($) IS NULL vs DuckDB json_valid) is
-    counted SEPARATELY from valid JSON whose $.k is absent or non-numeric
-    (n_missing_k — Spark's cast nulls non-numerics, the oracle uses
-    TRY_CAST for the same semantics). One projection + one
-    partial-aggregated groupBy."""
-    ev = load(spark, sf_dir, "events").select(
-        "event_type",
-        F.when(
-            F.col("event_id") % 7 == 0,
-            F.expr("substring(props, 1, length(props) - 1)"),
-        ).otherwise(F.col("props")).alias("props"),
-    )
-    ok = F.get_json_object("props", "$").isNotNull()
-    parsed = ev.select(
-        "event_type",
-        ok.alias("ok"),
-        F.when(ok, F.get_json_object("props", "$.k").cast("long")).alias("k"),
-    )
-    return parsed.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n_rows"),
-        F.sum((~F.col("ok")).cast("long")).alias("n_corrupt"),
-        F.sum((F.col("ok") & F.col("k").isNull()).cast("long")).alias(
-            "n_missing_k"
-        ),
-        F.sum(F.col("k").isNotNull().cast("long")).alias("n_valid"),
-        F.sum("k").alias("sum_k"),
-        F.min("k").alias("min_k"),
-        F.max("k").alias("max_k"),
     )
 
 

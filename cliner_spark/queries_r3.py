@@ -21,83 +21,6 @@ from cliner_spark.tokenization import sql_tokens, tokens_col
 
 
 # --------------------------------------------------------------------------
-# Round 3a: pure-JVM window twin of the cogrouped-pandas as-of join
-# (r2 verdict item 6 — the last >10 s Python surface gets a demonstrably
-# cheaper whole-stage-codegen plan producing the identical result)
-# --------------------------------------------------------------------------
-
-# identical oracle to q_cogroup_asof: native DuckDB ASOF LEFT JOIN
-_ASOF_SQL = """
-WITH l AS (SELECT event_id, user_id, ts FROM events WHERE event_type = 'click'),
-r AS (SELECT user_id, ts, max(value) AS rv FROM events
-      WHERE event_type = 'purchase' GROUP BY 1, 2)
-SELECT l.event_id, l.user_id, l.ts, r.rv AS last_right_value,
-       epoch_ms(l.ts) - epoch_ms(r.ts) AS gap_ms
-FROM l ASOF LEFT JOIN r ON l.user_id = r.user_id AND r.ts <= l.ts
-"""
-
-
-@register("q_asof_union_window", _ASOF_SQL)
-def q_asof_union_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Backward as-of join as a UNION + last_value window — the built-in
-    twin of q_cogroup_asof (same DuckDB ASOF JOIN oracle, byte-identical
-    result): tag left (clicks) and pre-aggregated right (purchases) rows,
-    sort within user by (ts, side) with right-before-left on ties so
-    r.ts <= l.ts is inclusive, and carry the last non-null right value /
-    timestamp forward with an ignorenulls last() over ROWS UNBOUNDED
-    PRECEDING. The whole plan is one shuffle on user_id and stays inside
-    WholeStageCodegen — no Python workers, no Arrow transfer — which is why
-    it beats the cogrouped-pandas formulation at any scale. Gap in whole
-    ms via integer unix_micros div (exactly DuckDB's epoch_ms floor; the
-    synthetic ts carries microsecond fractions so float ms would be
-    engine-dependent)."""
-    ev = load(spark, sf_dir, "events")
-    l = ev.filter(F.col("event_type") == "click").select(
-        "event_id",
-        "user_id",
-        "ts",
-        F.lit(None).cast("double").alias("rv"),
-        F.lit(None).cast("timestamp").alias("rts"),
-        F.lit(1).alias("is_left"),
-    )
-    r = (
-        ev.filter(F.col("event_type") == "purchase")
-        .groupBy("user_id", "ts")
-        .agg(F.max("value").alias("rv"))
-        .select(
-            F.lit(None).cast("long").alias("event_id"),
-            "user_id",
-            "ts",
-            "rv",
-            F.col("ts").alias("rts"),
-            F.lit(0).alias("is_left"),
-        )
-    )
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "is_left")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    carried = (
-        l.unionByName(r)
-        .withColumn("last_right_value", F.last("rv", ignorenulls=True).over(w))
-        .withColumn("lrts", F.last("rts", ignorenulls=True).over(w))
-    )
-    # parquet ts is TIMESTAMP_NTZ; session tz is pinned UTC (session.py) so
-    # the cast reads the wall-clock as UTC — DuckDB's naive-epoch_ms algebra
-    ms = lambda c: F.expr(  # noqa: E731
-        f"unix_micros(cast({c} as timestamp)) div 1000"
-    )
-    return carried.filter(F.col("is_left") == 1).select(
-        "event_id",
-        "user_id",
-        "ts",
-        "last_right_value",
-        (ms("ts") - ms("lrts")).cast("bigint").alias("gap_ms"),
-    )
-
-
-# --------------------------------------------------------------------------
 # Round 3b: new KG graph operators — SCC, label-propagation communities,
 # eccentricity/diameter (cliner_spark.graph additions)
 # --------------------------------------------------------------------------
@@ -598,7 +521,7 @@ def q_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------------------------------------------------
 # Round 3d: KG schema induction, RAG context packing, FIM rendering,
-# watermark-lateness profiling, skew salt planning
+# skew salt planning
 # --------------------------------------------------------------------------
 
 from cliner_spark.queries_r2 import SQL_TR_CTE  # noqa: E402
@@ -730,56 +653,6 @@ def q_fim_transform(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(" <SUF> "), part("p2 + 1", "n - p2"),
             F.lit(" <MID> "), part("p1 + 1", "p2 - p1"),
         ).alias("psm_text"),
-    )
-
-
-@register(
-    "q_watermark_profile",
-    """
-WITH seen AS (
-  SELECT user_id, event_id, ts,
-         max(ts) OVER (PARTITION BY user_id ORDER BY event_id
-                       ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-           AS prior_max
-  FROM events
-)
-SELECT user_id,
-       CAST(count(*) AS BIGINT) AS n_events,
-       CAST(sum(CASE WHEN ts < prior_max THEN 1 ELSE 0 END) AS BIGINT) AS n_late,
-       CAST(coalesce(max(CASE WHEN ts < prior_max
-                 THEN epoch_ms(prior_max) - epoch_ms(ts) END), 0) AS BIGINT)
-         AS max_disorder_ms
-FROM seen GROUP BY user_id
-""",
-)
-def q_watermark_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Event-time disorder profile per key — the measurement that SIZES a
-    streaming watermark: replaying the batch in arrival order (event_id),
-    how many events arrive with ts behind the running per-user max, and by
-    how much at worst. `withWatermark(delay)` drops exactly the events
-    whose disorder exceeds delay, so max_disorder_ms IS the minimum safe
-    delay per key (streaming.py's session/interval-join operators consume
-    such a bound). One window + one groupBy on the same user_id shuffle;
-    ms gaps via integer epoch-ms floor on both engines."""
-    ev = load(spark, sf_dir, "events")
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("event_id")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    ms = lambda c: F.expr(f"unix_micros(cast({c} as timestamp)) div 1000")  # noqa: E731
-    seen = ev.select(
-        "user_id",
-        "ts",
-        F.max("ts").over(w).alias("prior_max"),
-    )
-    late = F.col("ts") < F.col("prior_max")
-    return seen.groupBy("user_id").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.sum(late.cast("long")).alias("n_late"),
-        F.coalesce(
-            F.max(F.when(late, ms("prior_max") - ms("ts"))), F.lit(0)
-        ).cast("bigint").alias("max_disorder_ms"),
     )
 
 
@@ -1044,97 +917,8 @@ def q_embedding_dim_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Round 3g: zone-map pruning audit, golden-record survivorship, KG path
-# explanations
+# Round 3g: golden-record survivorship, KG path explanations
 # --------------------------------------------------------------------------
-
-from cliner_spark.maintenance import morton_col, morton_sql  # noqa: E402
-
-_Z3 = morton_sql("l_partkey", "l_suppkey")
-# fixed audit predicate, valid at every SF (partkey/suppkey start at 1)
-_PRED_SQL = "l_partkey BETWEEN 10 AND 50 AND l_suppkey BETWEEN 1 AND 5"
-
-
-@register(
-    "q_zonemap_prune_audit",
-    f"""
-WITH z AS (SELECT l_partkey, l_suppkey, {_Z3} AS zval FROM lineitem),
-b AS (
-  SELECT zval >> 16 AS zbucket, count(*) AS n_rows,
-         min(l_partkey) AS min_p, max(l_partkey) AS max_p,
-         min(l_suppkey) AS min_s, max(l_suppkey) AS max_s,
-         sum(CASE WHEN {_PRED_SQL} THEN 1 ELSE 0 END) AS n_match
-  FROM z GROUP BY 1
-),
-s AS (
-  SELECT b.*, CASE WHEN min_p <= 50 AND max_p >= 10
-                    AND min_s <= 5 AND max_s >= 1 THEN 1 ELSE 0 END AS scanned
-  FROM b
-)
-SELECT CAST(count(*) AS BIGINT) AS n_buckets,
-       CAST(sum(scanned) AS BIGINT) AS n_scanned,
-       CAST(sum(n_rows) AS BIGINT) AS rows_total,
-       CAST(sum(CASE WHEN scanned = 1 THEN n_rows ELSE 0 END) AS BIGINT)
-         AS rows_scanned,
-       CAST(sum(n_match) AS BIGINT) AS rows_matched,
-       CASE WHEN sum(n_match) > 0
-            THEN round(CAST(sum(CASE WHEN scanned = 1 THEN n_rows ELSE 0 END)
-                            AS DOUBLE) / sum(n_match), 6) END AS read_amp
-FROM s
-""",
-)
-def q_zonemap_prune_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Zone-map pruning EFFECTIVENESS audit for the Z-order layout
-    (q_zorder_layout's buckets): for a two-dimensional predicate, how many
-    z-buckets a min/max-stats planner would actually scan, how many rows
-    that touches, and the read amplification vs the true match count — the
-    number that decides whether a table REWRITE (zorder) pays for itself
-    before anyone runs it at 100 TB. Every quantity is integer-exact; the
-    single ratio is one rounded division (NULL when the predicate matches
-    nothing)."""
-    li = load(spark, sf_dir, "lineitem")
-    z = morton_col(F.col("l_partkey").cast("long"), F.col("l_suppkey").cast("long"))
-    pred = (
-        F.col("l_partkey").between(10, 50) & F.col("l_suppkey").between(1, 5)
-    )
-    b = (
-        li.select(
-            F.shiftright(z, 16).alias("zbucket"), "l_partkey", "l_suppkey",
-            pred.cast("long").alias("m"),
-        )
-        .groupBy("zbucket")
-        .agg(
-            F.count(F.lit(1)).alias("n_rows"),
-            F.min("l_partkey").alias("min_p"),
-            F.max("l_partkey").alias("max_p"),
-            F.min("l_suppkey").alias("min_s"),
-            F.max("l_suppkey").alias("max_s"),
-            F.sum("m").alias("n_match"),
-        )
-    )
-    scanned = (
-        (F.col("min_p") <= 50) & (F.col("max_p") >= 10)
-        & (F.col("min_s") <= 5) & (F.col("max_s") >= 1)
-    ).cast("long")
-    return b.select(b["*"], scanned.alias("scanned")).agg(
-        F.count(F.lit(1)).alias("n_buckets"),
-        F.sum("scanned").alias("n_scanned"),
-        F.sum("n_rows").alias("rows_total"),
-        F.sum(F.when(F.col("scanned") == 1, F.col("n_rows")).otherwise(0)).alias(
-            "rows_scanned"
-        ),
-        F.sum("n_match").alias("rows_matched"),
-    ).select(
-        F.col("n_buckets").cast("bigint").alias("n_buckets"),
-        F.col("n_scanned").cast("bigint").alias("n_scanned"),
-        F.col("rows_total").cast("bigint").alias("rows_total"),
-        F.col("rows_scanned").cast("bigint").alias("rows_scanned"),
-        F.col("rows_matched").cast("bigint").alias("rows_matched"),
-        F.when(
-            F.col("rows_matched") > 0,
-            F.round(F.col("rows_scanned").cast("double") / F.col("rows_matched"), 6),
-        ).alias("read_amp"),
-    )
 
 
 @register(
@@ -1810,7 +1594,7 @@ def q_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --------------------------------------------------------------------------
 # Round 3j: PRF query expansion, ANN ranking quality (nDCG), classifier
-# calibration bins, lead-lag series cross-moments, exact KS drift test
+# calibration bins, exact KS drift test
 # --------------------------------------------------------------------------
 
 from cliner_spark.entry_queries import (  # noqa: E402
@@ -2123,115 +1907,6 @@ def q_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(spm.cast("double") / (1000 * n), 6).alias("mean_pred"),
         F.round(npos.cast("double") / n, 6).alias("frac_pos"),
         F.round(gap_num.cast("double") / (1000 * n), 6).alias("gap"),
-    )
-
-
-_SQL_LEADLAG = """
-WITH ev AS (SELECT epoch_ms(ts) // 3600000 AS h, event_type FROM events
-            WHERE event_type IN ('click', 'purchase')),
-bounds AS (SELECT min(h) AS h0, max(h) AS h1 FROM ev),
-grid AS (SELECT unnest(generate_series(h0, h1)) AS h FROM bounds),
-c AS (SELECT h, CAST(count(*) AS BIGINT) AS c FROM ev
-      WHERE event_type = 'click' GROUP BY 1),
-p AS (SELECT h, CAST(count(*) AS BIGINT) AS p FROM ev
-      WHERE event_type = 'purchase' GROUP BY 1),
-s AS (SELECT g.h, coalesce(c.c, 0) AS c, coalesce(p.p, 0) AS p
-      FROM grid g LEFT JOIN c USING (h) LEFT JOIN p USING (h)),
-lags AS (SELECT unnest([0, 1, 2, 3]) AS lag),
-m AS (SELECT l.lag, CAST(count(*) AS BIGINT) AS n,
-             CAST(sum(a.c) AS BIGINT) AS sx, CAST(sum(b.p) AS BIGINT) AS sy,
-             CAST(sum(a.c * b.p) AS BIGINT) AS sxy,
-             CAST(sum(a.c * a.c) AS BIGINT) AS sxx,
-             CAST(sum(b.p * b.p) AS BIGINT) AS syy
-      FROM lags l CROSS JOIN s a JOIN s b ON b.h = a.h + l.lag
-      GROUP BY 1)
-SELECT CAST(lag AS INTEGER) AS lag, n, sx, sy, sxy, sxx, syy,
-       CAST(n * sxy - sx * sy AS BIGINT) AS cov_num,
-       CASE WHEN (n * sxx - sx * sx) * (n * syy - sy * sy) > 0
-            THEN round((n * sxy - sx * sy)
-                       / sqrt(CAST(n * sxx - sx * sx AS DOUBLE)
-                              * (n * syy - sy * sy)), 6) END AS xcorr
-FROM m
-"""
-
-
-@register("q_leadlag_xcorr", _SQL_LEADLAG)
-def q_leadlag_xcorr(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Lead-lag cross-correlation between the hourly click series and the
-    hourly purchase series at lags 0..3 — does click volume this hour
-    predict purchase volume L hours later? Both series are zero-filled
-    over the dense hour grid (a missing hour is a 0 observation, not an
-    absent row — dropping it would bias every moment), and all five
-    cross-moments (n, sx, sy, sxy, sxx, syy) are EXACT BIGINT sums of
-    integer counts, as is the covariance numerator n*sxy - sx*sy; only the
-    final Pearson ratio touches floats, one rounded division by one sqrt,
-    guarded against zero-variance series. This is the campaign-attribution
-    / leading-indicator scan an events pipeline runs across metric pairs.
-
-    Scale plan: the corpus-sized work is the two partial-aggregated
-    hourly count groupBys; the grid is |hours| rows (tiny even at 100 TB —
-    a decade is ~90k hours), the lag fan-out is a 4-row broadcast, and the
-    shifted self-join keys on the hour grid, so everything after the first
-    aggregation is dimension-sized."""
-    ev = (
-        load(spark, sf_dir, "events")
-        .filter(F.col("event_type").isin("click", "purchase"))
-        .select(
-            F.expr(
-                "unix_micros(cast(ts as timestamp)) div 3600000000"
-            ).alias("h"),
-            "event_type",
-        )
-    )
-    bounds = ev.agg(F.min("h").alias("h0"), F.max("h").alias("h1"))
-    grid = bounds.select(F.explode(F.sequence("h0", "h1")).alias("h"))
-    c = (
-        ev.filter(F.col("event_type") == "click")
-        .groupBy("h").agg(F.count(F.lit(1)).alias("c"))
-    )
-    p = (
-        ev.filter(F.col("event_type") == "purchase")
-        .groupBy("h").agg(F.count(F.lit(1)).alias("p"))
-    )
-    s = (
-        grid.join(c, "h", "left")
-        .join(p, "h", "left")
-        .select(
-            "h",
-            F.coalesce("c", F.lit(0)).alias("c"),
-            F.coalesce("p", F.lit(0)).alias("p"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    lags = spark.range(4).select(F.col("id").cast("int").alias("lag"))
-    a = s.crossJoin(F.broadcast(lags))
-    b = s.select(
-        F.col("h").alias("bh"), F.col("p").alias("bp")
-    )
-    m = (
-        a.join(b, F.col("bh") == F.col("h") + F.col("lag"))
-        .groupBy("lag")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n"),
-            F.sum("c").cast("long").alias("sx"),
-            F.sum("bp").cast("long").alias("sy"),
-            F.sum(F.col("c") * F.col("bp")).cast("long").alias("sxy"),
-            F.sum(F.col("c") * F.col("c")).cast("long").alias("sxx"),
-            F.sum(F.col("bp") * F.col("bp")).cast("long").alias("syy"),
-        )
-    )
-    num = F.col("n") * F.col("sxy") - F.col("sx") * F.col("sy")
-    denx = F.col("n") * F.col("sxx") - F.col("sx") * F.col("sx")
-    deny = F.col("n") * F.col("syy") - F.col("sy") * F.col("sy")
-    return m.select(
-        "lag", "n", "sx", "sy", "sxy", "sxx", "syy",
-        num.cast("long").alias("cov_num"),
-        F.when(
-            denx * deny > 0,
-            F.round(
-                num / F.sqrt(denx.cast("double") * deny), 6
-            ),
-        ).alias("xcorr"),
     )
 
 
@@ -4427,10 +4102,9 @@ def q_winnow_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Round 3u (batch 18): privacy-preserving publication + warehouse integrity
-# — consistent entity pseudonymization over the materialized KG (with an
-# exact collision audit) and a cross-table orphan-FK audit (the first gate
-# a warehouse ingest runs). Exact end to end.
+# Round 3u (batch 18): privacy-preserving publication — consistent entity
+# pseudonymization over the materialized KG (with an exact collision
+# audit). Exact end to end.
 # --------------------------------------------------------------------------
 
 
@@ -4494,310 +4168,6 @@ def q_pseudonymize(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("bigint").alias("n_entities"),
         F.min("entity").alias("example_entity"),
         (F.count(F.lit(1)) > 1).alias("collision"),
-    )
-
-
-@register(
-    "q_fk_integrity",
-    """
-SELECT 'lineitem.l_orderkey->orders' AS fk,
-       CAST(count(*) AS BIGINT) AS n_rows,
-       CAST(count(*) FILTER (o.o_orderkey IS NULL) AS BIGINT) AS n_orphans,
-       CAST(count(DISTINCT CASE WHEN o.o_orderkey IS NULL
-            THEN l.l_orderkey END) AS BIGINT) AS n_orphan_keys
-FROM lineitem l LEFT JOIN orders o ON l.l_orderkey = o.o_orderkey
-UNION ALL
-SELECT 'orders.o_custkey->customer',
-       CAST(count(*) AS BIGINT),
-       CAST(count(*) FILTER (c.c_custkey IS NULL) AS BIGINT),
-       CAST(count(DISTINCT CASE WHEN c.c_custkey IS NULL
-            THEN o.o_custkey END) AS BIGINT)
-FROM orders o LEFT JOIN customer c ON o.o_custkey = c.c_custkey
-UNION ALL
-SELECT 'customer.c_nationkey->nation',
-       CAST(count(*) AS BIGINT),
-       CAST(count(*) FILTER (n.n_nationkey IS NULL) AS BIGINT),
-       CAST(count(DISTINCT CASE WHEN n.n_nationkey IS NULL
-            THEN c.c_nationkey END) AS BIGINT)
-FROM customer c LEFT JOIN nation n ON c.c_nationkey = n.n_nationkey
-UNION ALL
-SELECT 'lineitem.l_partkey->part',
-       CAST(count(*) AS BIGINT),
-       CAST(count(*) FILTER (p.p_partkey IS NULL) AS BIGINT),
-       CAST(count(DISTINCT CASE WHEN p.p_partkey IS NULL
-            THEN l.l_partkey END) AS BIGINT)
-FROM lineitem l LEFT JOIN part p ON l.l_partkey = p.p_partkey
-UNION ALL
-SELECT 'lineitem.l_suppkey->supplier',
-       CAST(count(*) AS BIGINT),
-       CAST(count(*) FILTER (s.s_suppkey IS NULL) AS BIGINT),
-       CAST(count(DISTINCT CASE WHEN s.s_suppkey IS NULL
-            THEN l.l_suppkey END) AS BIGINT)
-FROM lineitem l LEFT JOIN supplier s ON l.l_suppkey = s.s_suppkey
-""",
-)
-def q_fk_integrity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Referential-integrity audit across the warehouse star schema: for
-    each declared FK edge, total rows, orphan rows (FK value with no parent
-    key), and distinct orphan key values — the first gate an ingest runs
-    before any join-based query is trusted (an orphan rate > 0 silently
-    deflates every inner join downstream). All-integer output; a healthy
-    load shows n_orphans = 0 on every row, so the hash check doubles as a
-    fixture contract.
-
-    Scale plan: each audit is a left join against a DIMENSION (orders/
-    customer/nation/part/supplier keys) — broadcastable or bucket-co-
-    located; counts are map-side-combined. The fact table (lineitem) is
-    scanned once per declared FK; production fuses the two lineitem audits
-    into one scan with two broadcast probes, which Spark's AQE already
-    does here (both dimension sides broadcast)."""
-    li = load(spark, sf_dir, "lineitem")
-    od = load(spark, sf_dir, "orders")
-    cu = load(spark, sf_dir, "customer")
-    na = load(spark, sf_dir, "nation")
-    pa = load(spark, sf_dir, "part")
-    su = load(spark, sf_dir, "supplier")
-
-    def audit(fact, fk_col, dim, pk_col, label):
-        j = fact.select(F.col(fk_col)).join(
-            dim.select(F.col(pk_col)), fact[fk_col] == dim[pk_col], "left"
-        )
-        orphan = F.col(pk_col).isNull()
-        return j.agg(
-            F.lit(label).alias("fk"),
-            F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-            F.sum(orphan.cast("long")).cast("bigint").alias("n_orphans"),
-            F.countDistinct(F.when(orphan, F.col(fk_col)))
-            .cast("bigint")
-            .alias("n_orphan_keys"),
-        ).select("fk", "n_rows", "n_orphans", "n_orphan_keys")
-
-    return (
-        audit(li, "l_orderkey", od, "o_orderkey", "lineitem.l_orderkey->orders")
-        .unionAll(audit(od, "o_custkey", cu, "c_custkey", "orders.o_custkey->customer"))
-        .unionAll(audit(cu, "c_nationkey", na, "n_nationkey", "customer.c_nationkey->nation"))
-        .unionAll(audit(li, "l_partkey", pa, "p_partkey", "lineitem.l_partkey->part"))
-        .unionAll(audit(li, "l_suppkey", su, "s_suppkey", "lineitem.l_suppkey->supplier"))
-    )
-
-
-# --------------------------------------------------------------------------
-# Round 3v (batch 19): monitoring + forensic audits — exact-integer CUSUM
-# changepoint localization over the daily event series, and a Benford
-# first-digit audit over order totals. Zero float surface in either.
-# --------------------------------------------------------------------------
-
-
-@register(
-    "q_cusum_changepoint",
-    """
-WITH daily AS (
-  SELECT CAST(ts AS DATE) AS day, CAST(count(*) AS BIGINT) AS x
-  FROM events GROUP BY 1
-),
-b AS (SELECT min(day) AS dmin, max(day) AS dmax FROM daily),
-spine AS (
-  SELECT CAST(g.gs AS DATE) AS day
-  FROM b, unnest(generate_series(b.dmin, b.dmax, INTERVAL 1 DAY)) AS g(gs)
-),
-dense AS (
-  SELECT s.day, coalesce(d.x, 0) AS x
-  FROM spine s LEFT JOIN daily d USING (day)
-),
-c AS (
-  SELECT day, x,
-         CAST(sum(x) OVER (ORDER BY day ROWS UNBOUNDED PRECEDING) AS BIGINT) AS s_k,
-         CAST(row_number() OVER (ORDER BY day) AS BIGINT) AS k,
-         CAST(count(*) OVER () AS BIGINT) AS n,
-         CAST(sum(x) OVER () AS BIGINT) AS t
-  FROM dense
-),
-cu AS (
-  SELECT day, x, n * s_k - k * t AS cusum_num,
-         row_number() OVER (ORDER BY abs(n * s_k - k * t) DESC, day ASC) AS pr
-  FROM c
-)
-SELECT CAST(day AS VARCHAR) AS day, x,
-       CAST(cusum_num AS BIGINT) AS cusum_num, (pr = 1) AS is_peak
-FROM cu
-""",
-)
-def q_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact-integer CUSUM changepoint localization over the daily event
-    volume: with S_k the prefix sum and T/n the series total/length, the
-    classic CUSUM deviation S_k - k*(T/n) is scaled by n to the INTEGER
-    n*S_k - k*T (same argmax, no division), and the changepoint is the
-    day maximizing |cusum_num| (ties -> earliest day). Zero-filled dense
-    day grid so silent outage days shift the peak exactly like traffic
-    spikes do — the monitoring primitive that localizes WHEN drift
-    started, complementing q_ks_drift (which only says THAT two windows
-    differ) and q_moving_zscore (pointwise outliers, not level shifts).
-
-    Scale plan: one map-side-combined daily rollup, then every window
-    runs on the |days|-sized frame (dimension, not corpus). Production
-    partitions the same windows by key for per-tenant changepoints."""
-    ev = load(spark, sf_dir, "events")
-    daily = ev.groupBy(F.col("ts").cast("date").alias("day")).agg(
-        F.count(F.lit(1)).cast("bigint").alias("x")
-    )
-    b = daily.agg(F.min("day").alias("dmin"), F.max("day").alias("dmax"))
-    spine = b.select(
-        F.explode(F.sequence("dmin", "dmax", F.expr("interval 1 day"))).alias("day")
-    )
-    dense = spine.join(daily, "day", "left").select(
-        "day", F.coalesce("x", F.lit(0)).cast("bigint").alias("x")
-    )
-    wcum = Window.orderBy("day").rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    wall = Window.partitionBy()
-    c = dense.select(
-        "day",
-        "x",
-        F.sum("x").over(wcum).cast("bigint").alias("s_k"),
-        F.row_number().over(Window.orderBy("day")).cast("bigint").alias("k"),
-        F.count(F.lit(1)).over(wall).cast("bigint").alias("n"),
-        F.sum("x").over(wall).cast("bigint").alias("t"),
-    )
-    cu = c.select(
-        "day",
-        "x",
-        (F.col("n") * F.col("s_k") - F.col("k") * F.col("t")).alias("cusum_num"),
-    ).withColumn(
-        "pr",
-        F.row_number().over(Window.orderBy(F.abs(F.col("cusum_num")).desc(), F.asc("day"))),
-    )
-    return cu.select(
-        # ISO string on both engines: the harness's pandas bridge widens a
-        # DuckDB DATE to datetime64 (…T00:00:00) while Spark keeps date
-        F.col("day").cast("string").alias("day"),
-        "x",
-        F.col("cusum_num").cast("bigint").alias("cusum_num"),
-        (F.col("pr") == 1).alias("is_peak"),
-    )
-
-
-@register(
-    "q_benford_audit",
-    """
-WITH cents AS (
-  SELECT CAST(round(o_totalprice * 100) AS BIGINT) AS c
-  FROM orders WHERE o_totalprice > 0
-),
-d AS (SELECT CAST(substr(CAST(c AS VARCHAR), 1, 1) AS INTEGER) AS digit FROM cents)
-SELECT digit,
-       CAST(count(*) AS BIGINT) AS n_orders,
-       CAST(sum(count(*)) OVER () AS BIGINT) AS n_total
-FROM d GROUP BY digit
-""",
-)
-def q_benford_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Benford first-significant-digit audit of order totals — the
-    classic forensic screen for fabricated or truncated monetary data
-    (organic multiplicative amounts follow P(d) = log10(1+1/d); a flat or
-    spiked digit histogram flags synthetic injection or a capped field).
-    The digit is extracted with integer/string algebra only (2-dp doubles
-    -> exact BIGINT cents -> leading char), so the histogram is engine-
-    exact; the consumer compares n_orders/n_total per digit against the
-    Benford curve with whatever test it prefers — the sufficient
-    statistics here are exact.
-
-    Scale plan: stateless per-row digit extraction + one 9-key groupBy;
-    the windowed total runs on the 9-row result. Nothing scales past the
-    single fact-table scan."""
-    od = load(spark, sf_dir, "orders").filter(F.col("o_totalprice") > 0)
-    d = od.select(
-        F.substring(
-            F.round(F.col("o_totalprice") * 100).cast("bigint").cast("string"), 1, 1
-        )
-        .cast("int")
-        .alias("digit")
-    )
-    g = d.groupBy("digit").agg(F.count(F.lit(1)).cast("bigint").alias("n_orders"))
-    return g.select(
-        "digit",
-        "n_orders",
-        F.sum("n_orders").over(Window.partitionBy()).cast("bigint").alias("n_total"),
-    )
-
-
-# --------------------------------------------------------------------------
-# Round 3w (batch 20): interval concurrency sweep — peak simultaneous user
-# activity via the classic +1/-1 boundary-point scan. Exact integers.
-# --------------------------------------------------------------------------
-
-
-@register(
-    "q_concurrency_peak",
-    """
-WITH spans AS (
-  SELECT user_id, min(ts) AS t0, max(ts) AS t1
-  FROM events GROUP BY user_id
-),
-pts AS (
-  SELECT user_id, t0 AS ts, 1 AS delta FROM spans
-  UNION ALL
-  SELECT user_id, t1, -1 FROM spans
-),
-sweep AS (
-  SELECT user_id, ts, delta,
-         CAST(sum(delta) OVER (
-           ORDER BY ts, delta DESC, user_id
-           ROWS UNBOUNDED PRECEDING) AS BIGINT) AS concurrency
-  FROM pts
-),
-rk AS (
-  SELECT user_id, ts, delta, concurrency,
-         row_number() OVER (
-           ORDER BY concurrency DESC, ts ASC, delta DESC, user_id ASC) AS pr
-  FROM sweep
-)
-SELECT user_id, ts, CAST(delta AS INTEGER) AS delta, concurrency,
-       (pr = 1) AS is_peak
-FROM rk
-""",
-)
-def q_concurrency_peak(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Peak-concurrency sweep over user activity spans: each user's
-    [first event, last event] interval contributes a +1 boundary at its
-    start and a -1 at its end; sorting ALL boundaries by (ts, starts
-    before ends, user_id) and running-summing the deltas gives the exact
-    number of simultaneously-active users at every boundary instant —
-    the capacity/staffing statistic (peak flagged, earliest-instant tie
-    rule). The total order includes user_id so equal-timestamp boundaries
-    have one deterministic scan order — without it the intermediate
-    concurrency values would be permutation-dependent.
-
-    Scale plan: spans are one map-side-combined groupBy; the sweep is a
-    single window over the 2x|users| boundary frame (dimension-sized).
-    Production partitions the sweep by calendar shard and stitches with
-    per-shard carry-in offsets — the same distributed-prefix-sum shape as
-    q_pps_sample's token grid."""
-    ev = load(spark, sf_dir, "events")
-    spans = ev.groupBy("user_id").agg(
-        F.min("ts").alias("t0"), F.max("ts").alias("t1")
-    )
-    pts = spans.select(
-        "user_id", F.col("t0").alias("ts"), F.lit(1).alias("delta")
-    ).unionAll(
-        spans.select("user_id", F.col("t1").alias("ts"), F.lit(-1).alias("delta"))
-    )
-    wsweep = Window.orderBy(
-        F.asc("ts"), F.desc("delta"), F.asc("user_id")
-    ).rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    sweep = pts.select(
-        "user_id", "ts", "delta",
-        F.sum("delta").over(wsweep).cast("bigint").alias("concurrency"),
-    )
-    rk = sweep.withColumn(
-        "pr",
-        F.row_number().over(
-            Window.orderBy(
-                F.desc("concurrency"), F.asc("ts"), F.desc("delta"), F.asc("user_id")
-            )
-        ),
-    )
-    return rk.select(
-        "user_id", "ts", F.col("delta").cast("int").alias("delta"),
-        "concurrency", (F.col("pr") == 1).alias("is_peak"),
     )
 
 

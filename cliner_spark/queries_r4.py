@@ -181,99 +181,9 @@ def q_pq_residual_gain(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Round 4o: graph / text / layout — bipartite HITS, k-truss peel, longest
-# common token run over near-dup pairs, corpus BLEU between near-dup pairs,
-# and a Z-order vs linear file-layout pruning audit.
+# Round 4o: graph / text — k-truss peel, longest common token run over
+# near-dup pairs, and corpus BLEU between near-dup pairs.
 # --------------------------------------------------------------------------
-
-_HITS_SQL = """
-WITH w AS (
-  SELECT user_id AS u, event_type AS t, CAST(count(*) AS BIGINT) AS w
-  FROM events GROUP BY 1, 2
-),
-h1 AS (SELECT u, sum(w) AS h FROM w GROUP BY u),
-a1 AS (SELECT t, sum(w.w * h1.h) AS a FROM w JOIN h1 USING (u) GROUP BY t),
-h2 AS (SELECT u, sum(w.w * a1.a) AS h FROM w JOIN a1 USING (t) GROUP BY u),
-a2 AS (SELECT t, sum(w.w * h2.h) AS a FROM w JOIN h2 USING (u) GROUP BY t),
-hub AS (
-  SELECT 'hub' AS side, CAST(u AS VARCHAR) AS id,
-         CAST(h1.h AS BIGINT) AS score1, CAST(h2.h AS BIGINT) AS score2
-  FROM h1 JOIN h2 USING (u)
-),
-auth AS (
-  SELECT 'auth' AS side, t AS id,
-         CAST(a1.a AS BIGINT) AS score1, CAST(a2.a AS BIGINT) AS score2
-  FROM a1 JOIN a2 USING (t)
-),
-uni AS (SELECT * FROM hub UNION ALL SELECT * FROM auth)
-SELECT side, id, score1, score2,
-       round(CAST(score2 AS DOUBLE)
-             / max(score2) OVER (PARTITION BY side), 6) AS share
-FROM uni
-"""
-
-
-@register("q_hits_bipartite", _HITS_SQL)
-def q_hits_bipartite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """HITS (Kleinberg 1999) on the weighted user x event-type bipartite
-    graph, two exact unrolled iterations from a_0 = 1: hubs are users
-    (h = W a), authorities are event types (a = W^T h). Normalization is
-    deferred to the END (share = score / side-max as a rounded
-    convenience), so every intermediate is an exact BIGINT — the same
-    integer-fixed-point trick as q_pagerank / q_katz_centrality, here in
-    its bipartite mutual-reinforcement form: a user scores high when
-    they do high-authority things; an event type scores high when heavy
-    users do it.
-
-    Scale plan: each half-iteration is one equi-join of the weighted edge
-    list against a node-score dimension + a map-side-combined groupBy —
-    the textbook distributed HITS step; the authority side is tiny and
-    broadcasts. Two iterations keep BIGINT exact (score2 <= W_tot^2 *
-    max_w); deeper fixpoints switch to the pagerank fixed-point scaling."""
-    ev = load(spark, sf_dir, "events")
-    w = ev.groupBy(
-        F.col("user_id").alias("u"), F.col("event_type").alias("t")
-    ).agg(F.count(F.lit(1)).cast("bigint").alias("w"))
-    h1 = w.groupBy("u").agg(F.sum("w").alias("h"))
-    a1 = (
-        w.join(h1, "u")
-        .groupBy("t")
-        .agg(F.sum(F.col("w") * F.col("h")).alias("a"))
-    )
-    h2 = (
-        w.join(a1, "t")
-        .groupBy("u")
-        .agg(F.sum(F.col("w") * F.col("a")).alias("h"))
-    )
-    a2 = (
-        w.join(h2, "u")
-        .groupBy("t")
-        .agg(F.sum(F.col("w") * F.col("h")).alias("a"))
-    )
-    hub = h1.join(h2.withColumnRenamed("h", "h2"), "u").select(
-        F.lit("hub").alias("side"),
-        F.col("u").cast("string").alias("id"),
-        F.col("h").cast("bigint").alias("score1"),
-        F.col("h2").cast("bigint").alias("score2"),
-    )
-    auth = a1.join(a2.withColumnRenamed("a", "a2"), "t").select(
-        F.lit("auth").alias("side"),
-        F.col("t").alias("id"),
-        F.col("a").cast("bigint").alias("score1"),
-        F.col("a2").cast("bigint").alias("score2"),
-    )
-    uni = hub.unionAll(auth)
-    return uni.select(
-        "side",
-        "id",
-        "score1",
-        "score2",
-        F.round(
-            F.col("score2").cast("double")
-            / F.max("score2").over(Window.partitionBy("side")),
-            6,
-        ).alias("share"),
-    )
 
 
 _LCS_SQL = f"""
@@ -527,107 +437,8 @@ def q_bleu_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _interleave_expr(xa: str, xb: str) -> str:
-    """Engine-portable 8+8-bit Morton/Z-order interleave as pure integer
-    arithmetic (no bit intrinsics — identical text runs on Spark SQL and
-    DuckDB): bit i of xa lands at position 2i+1, bit i of xb at 2i."""
-    terms = []
-    for i in range(8):
-        p = 1 << i
-        terms.append(
-            f"(CASE WHEN ({xa} % {2 * p}) >= {p} THEN {1 << (2 * i + 1)} ELSE 0 END)"
-        )
-        terms.append(
-            f"(CASE WHEN ({xb} % {2 * p}) >= {p} THEN {1 << (2 * i)} ELSE 0 END)"
-        )
-    return " + ".join(terms)
-
-
-_ZORDER_SQL = f"""
-WITH k AS (
-  SELECT CAST(user_id % 256 AS BIGINT) AS ub,
-         CAST((day(ts) * 24 + hour(ts)) % 256 AS BIGINT) AS hb
-  FROM events
-),
-z AS (
-  SELECT ub, hb, {_interleave_expr('ub', 'hb')} AS zval,
-         ub * 256 + hb AS lin
-  FROM k
-),
-f AS (
-  SELECT 'zorder' AS layout, CAST((zval - zval % 2048) // 2048 AS INT)
-           AS file_id, ub, hb
-  FROM z
-  UNION ALL
-  SELECT 'linear', CAST((lin - lin % 2048) // 2048 AS INT), ub, hb FROM z
-)
-SELECT layout, file_id,
-       CAST(count(*) AS BIGINT) AS n_rows,
-       CAST(min(ub) AS BIGINT) AS ub_min, CAST(max(ub) AS BIGINT) AS ub_max,
-       CAST(min(hb) AS BIGINT) AS hb_min, CAST(max(hb) AS BIGINT) AS hb_max,
-       CAST(max(ub) - min(ub) + max(hb) - min(hb) AS BIGINT) AS span_sum
-FROM f GROUP BY 1, 2
-"""
-
-
-@register("q_zorder_layout", _ZORDER_SQL)
-def q_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Z-order (Morton) vs linear file-layout audit — the data-layout
-    decision behind Delta/Iceberg OPTIMIZE ZORDER: events keyed by
-    (user bucket, hour bucket) are assigned to 32 files either by the
-    8+8-bit Morton interleave (built from pure integer arithmetic — the
-    SAME expression text runs on both engines) or by the linear
-    concatenation ub*256+hb, and each file reports its min/max span in
-    BOTH dimensions. Z-order bounds both spans at ~sqrt(cells-per-file)
-    so min/max file skipping prunes on EITHER predicate; linear bounds
-    only the leading dimension and every file spans the full trailing
-    range — span_sum makes the difference a single comparable number per
-    file. All exact integers.
-
-    Scale plan: stateless per-row key arithmetic + one 64-key groupBy —
-    the audit itself is trivially distributed; the real win it certifies
-    is at the table-layout layer (range-pruned scans at 100 TB)."""
-    ev = load(spark, sf_dir, "events")
-    k = ev.select(
-        (F.col("user_id") % 256).cast("bigint").alias("ub"),
-        (
-            (F.dayofmonth("ts") * 24 + F.hour("ts")) % 256
-        ).cast("bigint").alias("hb"),
-    )
-    z = k.select(
-        "ub",
-        "hb",
-        F.expr(_interleave_expr("ub", "hb")).alias("zval"),
-        (F.col("ub") * 256 + F.col("hb")).alias("lin"),
-    )
-    zf = z.select(
-        F.lit("zorder").alias("layout"),
-        F.floor(F.col("zval") / 2048).cast("int").alias("file_id"),
-        "ub",
-        "hb",
-    )
-    lf = z.select(
-        F.lit("linear").alias("layout"),
-        F.floor(F.col("lin") / 2048).cast("int").alias("file_id"),
-        "ub",
-        "hb",
-    )
-    f = zf.unionAll(lf)
-    return f.groupBy("layout", "file_id").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_rows"),
-        F.min("ub").cast("bigint").alias("ub_min"),
-        F.max("ub").cast("bigint").alias("ub_max"),
-        F.min("hb").cast("bigint").alias("hb_min"),
-        F.max("hb").cast("bigint").alias("hb_max"),
-        (F.max("ub") - F.min("ub") + F.max("hb") - F.min("hb"))
-        .cast("bigint")
-        .alias("span_sum"),
-    )
-
-
 # --------------------------------------------------------------------------
-# Round 4r: systems/streaming operations — consistent-hashing ring audit,
-# Fano-factor burstiness ledger, and a watermark-lateness histogram.
+# Round 4r: systems operations — consistent-hashing ring audit.
 # --------------------------------------------------------------------------
 
 _CHASH_SQL = """
@@ -759,177 +570,9 @@ def q_consistent_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_FANO_SQL = """
-WITH daily AS (
-  SELECT event_type, CAST(ts AS DATE) AS day,
-         CAST(count(*) AS BIGINT) AS x
-  FROM events GROUP BY 1, 2
-),
-b AS (SELECT min(day) AS dmin, max(day) AS dmax FROM daily),
-spine AS (
-  SELECT et.event_type, CAST(g.gs AS DATE) AS day
-  FROM (SELECT DISTINCT event_type FROM events) et, b,
-       unnest(generate_series(b.dmin, b.dmax, INTERVAL 1 DAY)) AS g(gs)
-),
-dense AS (
-  SELECT s.event_type, coalesce(d.x, 0) AS x
-  FROM spine s LEFT JOIN daily d
-    ON d.event_type = s.event_type AND d.day = s.day
-)
-SELECT event_type,
-       CAST(count(*) AS BIGINT) AS n_days,
-       CAST(sum(x) AS BIGINT) AS total,
-       CAST(sum(x * x) AS BIGINT) AS sumsq,
-       CAST(count(*) * sum(x * x) - sum(x) * sum(x) AS BIGINT)
-         AS var_num,
-       CAST(count(*) * sum(x) AS BIGINT) AS fano_den,
-       round(CAST(count(*) * sum(x * x) - sum(x) * sum(x) AS DOUBLE)
-             / (count(*) * sum(x)), 6) AS fano
-FROM dense GROUP BY 1
-"""
-
-
-@register("q_fano_burstiness", _FANO_SQL)
-def q_fano_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Fano-factor burstiness ledger per event type over the zero-filled
-    day grid: F = Var/Mean with the population identity n*Var = n*sum(x^2)
-    - sum(x)^2, so the statistic is the exact BIGINT rational
-    (n*sumsq - total^2) / (n*total) — F ~ 1 is Poisson traffic, F >> 1 is
-    bursty (retry storms, batch backfills), F << 1 is suspiciously
-    uniform (synthetic injection, rate caps). The per-type complement to
-    q_ewma_anomaly (which days) and q_cusum_changepoint (which
-    changepoint): this one says which STREAMS need burst-tolerant
-    capacity at all.
-
-    Scale plan: one map-side-combined (type, day) rollup; the grid
-    zero-fill is |types| x |days| dimension frames; final rollup is
-    |types|-sized."""
-    ev = load(spark, sf_dir, "events")
-    daily = ev.groupBy(
-        "event_type", F.col("ts").cast("date").alias("day")
-    ).agg(F.count(F.lit(1)).cast("bigint").alias("x"))
-    b = daily.agg(F.min("day").alias("dmin"), F.max("day").alias("dmax"))
-    et = ev.select("event_type").distinct()
-    spine = et.crossJoin(b).select(
-        "event_type",
-        F.explode(F.sequence("dmin", "dmax", F.expr("interval 1 day"))).alias(
-            "day"
-        ),
-    )
-    dense = spine.join(daily, ["event_type", "day"], "left").select(
-        "event_type", F.coalesce("x", F.lit(0)).cast("bigint").alias("x")
-    )
-    n, tot, ss = F.count(F.lit(1)), F.sum("x"), F.sum(F.col("x") * F.col("x"))
-    return dense.groupBy("event_type").agg(
-        n.cast("bigint").alias("n_days"),
-        tot.cast("bigint").alias("total"),
-        ss.cast("bigint").alias("sumsq"),
-        (n * ss - tot * tot).cast("bigint").alias("var_num"),
-        (n * tot).cast("bigint").alias("fano_den"),
-        F.round((n * ss - tot * tot).cast("double") / (n * tot), 6).alias(
-            "fano"
-        ),
-    )
-
-
-_LATE_SQL = """
-WITH o AS (
-  SELECT event_id, ts,
-         max(ts) OVER (ORDER BY md5(event_id::VARCHAR), event_id
-                       ROWS UNBOUNDED PRECEDING) AS watermark
-  FROM events
-),
-l AS (
-  SELECT CAST(date_diff('second', ts, watermark) AS BIGINT) AS late_s
-  FROM o
-),
-bkt AS (
-  SELECT CASE WHEN late_s <= 0 THEN -1
-              ELSE length(bin(late_s)) - position('1' IN bin(late_s)) END
-           AS bucket,
-         late_s
-  FROM l
-)
-SELECT CAST(bucket AS INT) AS bucket,
-       CAST(CASE WHEN bucket = -1 THEN 0
-                 ELSE CAST(1 AS BIGINT) << bucket END AS BIGINT)
-         AS bucket_floor_s,
-       CAST(count(*) AS BIGINT) AS n_events,
-       CAST(max(late_s) AS BIGINT) AS max_late_s,
-       CAST(sum(count(*)) OVER () AS BIGINT) AS n_total,
-       round(CAST(sum(count(*)) OVER (ORDER BY bucket
-                                      ROWS UNBOUNDED PRECEDING) AS DOUBLE)
-             / sum(count(*)) OVER (), 6) AS cum_frac
-FROM bkt GROUP BY bucket
-"""
-
-
-@register("q_watermark_lateness", _LATE_SQL)
-def q_watermark_lateness(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Watermark-lateness histogram — the number that CHOOSES a streaming
-    watermark delay: each event's lateness is (running max event-time) -
-    (its own event-time) in arrival order; the synthetic corpus arrives
-    perfectly ts-sorted (lateness would be vacuously 0 — the dup_discovery
-    lesson), so arrival is SIMULATED as the md5(event_id) permutation and
-    documented as such — production swaps in the real ingest sequence and
-    the ledger machinery is identical. Lateness is bucketed into
-    power-of-two second bands via the HLL bit-length trick (in-order
-    events land in bucket -1). cum_frac per bucket reads directly as 'a
-    watermark of 2^k seconds would have admitted this fraction of
-    events'; everything except the rounded fraction is exact integers.
-    The batch-side calibration for streaming.run_stream_triples'
-    withWatermark choice — measured from the data instead of guessed.
-
-    Scale plan: the running max is ONE global-order window (at production
-    scale: per-partition arrival sequences, same shape as the PPS
-    prefix-sum sharding); buckets collapse map-side to <=34 rows and the
-    cumulative window runs on that dimension frame."""
-    ev = load(spark, sf_dir, "events")
-    w = Window.orderBy(
-        F.md5(F.col("event_id").cast("string")), F.col("event_id")
-    ).rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    o = ev.select(
-        "event_id", "ts", F.max("ts").over(w).alias("watermark")
-    )
-    late = o.select(
-        (
-            F.unix_timestamp("watermark") - F.unix_timestamp("ts")
-        ).cast("bigint").alias("late_s")
-    )
-    bucket = F.when(F.col("late_s") <= 0, F.lit(-1)).otherwise(
-        F.length(F.expr("bin(late_s)"))
-        - F.expr("position('1' IN bin(late_s))")
-    )
-    bkt = late.select(bucket.cast("int").alias("bucket"), "late_s")
-    g = bkt.groupBy("bucket").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_events"),
-        F.max("late_s").cast("bigint").alias("max_late_s"),
-    )
-    wall = Window.partitionBy()
-    wcum = Window.orderBy("bucket").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    return g.select(
-        "bucket",
-        F.when(F.col("bucket") == -1, F.lit(0))
-        .otherwise(F.expr("shiftleft(CAST(1 AS BIGINT), bucket)"))
-        .cast("bigint")
-        .alias("bucket_floor_s"),
-        "n_events",
-        "max_late_s",
-        F.sum("n_events").over(wall).cast("bigint").alias("n_total"),
-        F.round(
-            F.sum("n_events").over(wcum).cast("double")
-            / F.sum("n_events").over(wall),
-            6,
-        ).alias("cum_frac"),
-    )
-
-
 # --------------------------------------------------------------------------
-# Round 4s: distribution distance + shuffle-skew forensics — exact
-# Wasserstein-1 between source length distributions, and a join-key skew
-# audit that recommends salting factors.
+# Round 4s: distribution distance — exact Wasserstein-1 between source
+# length distributions.
 # --------------------------------------------------------------------------
 
 _W1_SQL = """
@@ -1048,83 +691,9 @@ def q_wasserstein_lengths(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SKEW_SQL = """
-WITH k1 AS (
-  SELECT 'lineitem.l_orderkey' AS join_key, l_orderkey AS k FROM lineitem
-),
-k2 AS (SELECT 'orders.o_custkey', o_custkey FROM orders),
-k3 AS (SELECT 'events.user_id', user_id FROM events),
-ks AS (SELECT * FROM k1 UNION ALL SELECT * FROM k2 UNION ALL SELECT * FROM k3),
-c AS (
-  SELECT join_key, k, CAST(count(*) AS BIGINT) AS n
-  FROM ks GROUP BY 1, 2
-)
-SELECT join_key,
-       CAST(count(*) AS BIGINT) AS n_keys,
-       CAST(sum(n) AS BIGINT) AS n_rows,
-       CAST(max(n) AS BIGINT) AS max_key_rows,
-       CAST(max(n) * count(*) AS BIGINT) AS skew_num,
-       CAST(sum(n) AS BIGINT) AS skew_den,
-       round(CAST(max(n) * count(*) AS DOUBLE) / sum(n), 6) AS skew_ratio,
-       CAST(CASE WHEN max(n) * count(*) <= 4 * sum(n) THEN 1
-                 ELSE (max(n) * count(*) + 4 * sum(n) - 1)
-                      // (4 * sum(n)) END AS BIGINT) AS rec_salt
-FROM c GROUP BY 1
-"""
-
-
-@register("q_skew_audit", _SKEW_SQL)
-def q_skew_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Join-key skew audit over the three hottest shuffle keys in the
-    schema (lineitem->orders, orders->customer, events per user): per key
-    the exact cardinality/row counts, the skew ratio max_key_rows /
-    mean_key_rows as the cross-multiplied rational max·n_keys / n_rows,
-    and the SALTING FACTOR a shuffle planner would apply — ceil(skew_ratio
-    / 4) with tolerance 4x-mean, computed in exact integer ceiling
-    division. This is the table that decides, BEFORE the job runs, which
-    joins get salted/AQE-skew-split at 100 TB; the whole mechanism the
-    triple sink's salted_partition_col implements is sized by exactly
-    this number.
-
-    Scale plan: three map-side-combined per-key counts unioned, one
-    |keys|-frame rollup per audit row. No joins at all — the audit of
-    joins costs less than any join it tunes."""
-    li = load(spark, sf_dir, "lineitem").select(
-        F.lit("lineitem.l_orderkey").alias("join_key"),
-        F.col("l_orderkey").alias("k"),
-    )
-    od = load(spark, sf_dir, "orders").select(
-        F.lit("orders.o_custkey").alias("join_key"),
-        F.col("o_custkey").alias("k"),
-    )
-    ev = load(spark, sf_dir, "events").select(
-        F.lit("events.user_id").alias("join_key"), F.col("user_id").alias("k")
-    )
-    c = (
-        li.unionAll(od)
-        .unionAll(ev)
-        .groupBy("join_key", "k")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-    )
-    nk, nr, mx = F.count(F.lit(1)), F.sum("n"), F.max("n")
-    rec = F.when(mx * nk <= 4 * nr, F.lit(1)).otherwise(
-        F.floor((mx * nk + 4 * nr - 1) / (4 * nr))
-    )
-    return c.groupBy("join_key").agg(
-        nk.cast("bigint").alias("n_keys"),
-        nr.cast("bigint").alias("n_rows"),
-        mx.cast("bigint").alias("max_key_rows"),
-        (mx * nk).cast("bigint").alias("skew_num"),
-        nr.cast("bigint").alias("skew_den"),
-        F.round((mx * nk).cast("double") / nr, 6).alias("skew_ratio"),
-        rec.cast("bigint").alias("rec_salt"),
-    )
-
-
 # --------------------------------------------------------------------------
-# Round 4t: graph health + Bayesian smoothing — dup-cluster conductance
-# over the doc-similarity graph, the degree CCDF spectrum, and
-# Laplace-smoothed per-user conversion rates.
+# Round 4t: graph health — dup-cluster conductance over the doc-similarity
+# graph, and the degree CCDF spectrum.
 # --------------------------------------------------------------------------
 
 from cliner_spark.entry_queries import SQL_DUP_CLUSTER_CTES  # noqa: E402
@@ -1321,84 +890,6 @@ def q_degree_ccdf(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum("n_d").over(wc).cast("double") / F.col("n_nodes"), 6
             ).alias("ccdf"),
         )
-    )
-
-
-_LAPLACE_SQL = """
-WITH u AS (
-  SELECT user_id,
-         CAST(sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
-              AS BIGINT) AS n_purch,
-         CAST(sum(CASE WHEN event_type = 'click' THEN 1 ELSE 0 END)
-              AS BIGINT) AS n_click
-  FROM events GROUP BY 1
-),
-g AS (
-  SELECT CAST(sum(n_purch) AS BIGINT) AS tot_p,
-         CAST(sum(n_click) AS BIGINT) AS tot_c FROM u
-)
-SELECT u.user_id, u.n_purch, u.n_click,
-       CAST(u.n_purch + 1 AS BIGINT) AS post_num,
-       CAST(u.n_click + 2 AS BIGINT) AS post_den,
-       round(CAST(u.n_purch + 1 AS DOUBLE) / (u.n_click + 2), 6)
-         AS smoothed_rate,
-       round(CAST(u.n_purch AS DOUBLE) / nullif(u.n_click, 0), 6)
-         AS raw_rate,
-       round(CAST(g.tot_p AS DOUBLE) / g.tot_c, 6) AS global_rate,
-       (CAST(u.n_purch + 1 AS BIGINT) * g.tot_c
-        > CAST(u.n_click + 2 AS BIGINT) * g.tot_p) AS above_global
-FROM u, g
-"""
-
-
-@register("q_laplace_rates", _LAPLACE_SQL)
-def q_laplace_rates(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Laplace (add-one Beta(1,1)) smoothed per-user purchase-per-click
-    rates: the posterior mean (purchases+1)/(clicks+2) as an exact
-    integer rational beside the undefined-prone raw rate — the standard
-    fix for ranking users (or documents, or sources) by a rate when most
-    denominators are tiny: zero-click users shrink to 1/2 instead of
-    dividing by zero, one-click converters stop topping the leaderboard.
-    above_global is the exact cross-multiplied comparison of the
-    posterior against the global rate — no float in the decision bit.
-
-    Scale plan: one map-side-combined per-user rollup + a 1-row global
-    carry (whitelisted broadcast); pure projection afterwards."""
-    ev = load(spark, sf_dir, "events")
-    u = ev.groupBy("user_id").agg(
-        F.sum(F.when(F.col("event_type") == "purchase", 1).otherwise(0))
-        .cast("bigint")
-        .alias("n_purch"),
-        F.sum(F.when(F.col("event_type") == "click", 1).otherwise(0))
-        .cast("bigint")
-        .alias("n_click"),
-    )
-    g = u.agg(
-        F.sum("n_purch").cast("bigint").alias("tot_p"),
-        F.sum("n_click").cast("bigint").alias("tot_c"),
-    )
-    out = u.crossJoin(F.broadcast(g))
-    return out.select(
-        "user_id",
-        "n_purch",
-        "n_click",
-        (F.col("n_purch") + 1).cast("bigint").alias("post_num"),
-        (F.col("n_click") + 2).cast("bigint").alias("post_den"),
-        F.round(
-            (F.col("n_purch") + 1).cast("double") / (F.col("n_click") + 2), 6
-        ).alias("smoothed_rate"),
-        F.round(
-            F.col("n_purch").cast("double")
-            / F.nullif(F.col("n_click").cast("double"), F.lit(0.0)),
-            6,
-        ).alias("raw_rate"),
-        F.round(F.col("tot_p").cast("double") / F.col("tot_c"), 6).alias(
-            "global_rate"
-        ),
-        (
-            (F.col("n_purch") + 1) * F.col("tot_c")
-            > (F.col("n_click") + 2) * F.col("tot_p")
-        ).alias("above_global"),
     )
 
 
@@ -1924,409 +1415,10 @@ def q_bellman_ford_hubs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Round 4: query-optimizer trio — System-R cardinality estimation audit
-# (q-error), left-deep join-order costing with actual-vs-estimated
-# regret, and a partition-key layout advisor.
+# Round 4: scheduling/stat pair — critical-path method over a layered task
+# DAG (max-plus relaxation), and the exact-integer Cramér-von Mises
+# two-sample statistic.
 # --------------------------------------------------------------------------
-
-_JOINCARD_SQL = """
-WITH m AS (
-  SELECT 'orders_customer' AS join_name,
-         (SELECT CAST(count(*) AS BIGINT) FROM orders) AS n_left,
-         (SELECT CAST(count(*) AS BIGINT) FROM customer) AS n_right,
-         (SELECT CAST(count(DISTINCT o_custkey) AS BIGINT) FROM orders)
-           AS d_left,
-         (SELECT CAST(count(DISTINCT c_custkey) AS BIGINT) FROM customer)
-           AS d_right,
-         (SELECT CAST(count(*) AS BIGINT)
-          FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey)
-           AS actual
-  UNION ALL
-  SELECT 'lineitem_orders',
-         (SELECT CAST(count(*) AS BIGINT) FROM lineitem),
-         (SELECT CAST(count(*) AS BIGINT) FROM orders),
-         (SELECT CAST(count(DISTINCT l_orderkey) AS BIGINT) FROM lineitem),
-         (SELECT CAST(count(DISTINCT o_orderkey) AS BIGINT) FROM orders),
-         (SELECT CAST(count(*) AS BIGINT)
-          FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey)
-  UNION ALL
-  SELECT 'lineitem_part',
-         (SELECT CAST(count(*) AS BIGINT) FROM lineitem),
-         (SELECT CAST(count(*) AS BIGINT) FROM part),
-         (SELECT CAST(count(DISTINCT l_partkey) AS BIGINT) FROM lineitem),
-         (SELECT CAST(count(DISTINCT p_partkey) AS BIGINT) FROM part),
-         (SELECT CAST(count(*) AS BIGINT)
-          FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey)
-)
-SELECT join_name, n_left, n_right, d_left, d_right,
-       CAST(n_left * n_right AS BIGINT) AS est_num,
-       CAST(greatest(d_left, d_right) AS BIGINT) AS est_den,
-       round(CAST(n_left AS DOUBLE) * n_right / greatest(d_left, d_right), 4)
-         AS est_rows,
-       actual,
-       round(greatest(
-         (CAST(n_left AS DOUBLE) * n_right / greatest(d_left, d_right))
-           / actual,
-         actual / (CAST(n_left AS DOUBLE) * n_right
-                   / greatest(d_left, d_right))), 6) AS q_error
-FROM m
-"""
-
-
-@register("q_join_cardinality", _JOINCARD_SQL)
-def q_join_cardinality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """System-R cardinality estimation audit (Selinger 1979): for the
-    three canonical TPC-H join edges, the uniformity-assumption estimate
-    |A||B| / max(d_A, d_B) ships as an exact integer RATIONAL
-    (est_num / est_den) beside the true join size, and the verdict is
-    the q-error max(est/actual, actual/est) — the metric the learned-
-    cardinality literature standardized on. On FK joins the containment
-    assumption is exact, so q-error should sit at ~1.0: this query is
-    the regression gate a cost model runs after every stats refresh,
-    and the place a 100 TB planner discovers its distinct counts are
-    stale before a broadcast decision burns the cluster.
-
-    Scale plan: six count/distinct aggregates (map-side combined; at
-    production scale the distinct counts come from the HLL sketches the
-    repo already audits in q_hll_audit) + three equi-join counts —
-    everything collapses to a 3-row ledger."""
-    o = load(spark, sf_dir, "orders")
-    c = load(spark, sf_dir, "customer")
-    li = load(spark, sf_dir, "lineitem")
-    p = load(spark, sf_dir, "part")
-
-    def edge(name, a, b, ka, kb):
-        na = a.count()
-        nb = b.count()
-        da = a.select(ka).distinct().count()
-        db = b.select(kb).distinct().count()
-        actual = a.join(b, a[ka] == b[kb]).count()
-        return (name, na, nb, da, db, actual)
-
-    rows = [
-        edge("orders_customer", o, c, "o_custkey", "c_custkey"),
-        edge("lineitem_orders", li, o, "l_orderkey", "o_orderkey"),
-        edge("lineitem_part", li, p, "l_partkey", "p_partkey"),
-    ]
-    m = spark.createDataFrame(
-        rows,
-        "join_name string, n_left long, n_right long, d_left long, "
-        "d_right long, actual long",
-    )
-    est = F.col("n_left").cast("double") * F.col("n_right") / F.greatest(
-        "d_left", "d_right"
-    )
-    return m.select(
-        "join_name", "n_left", "n_right", "d_left", "d_right",
-        (F.col("n_left") * F.col("n_right")).cast("long").alias("est_num"),
-        F.greatest("d_left", "d_right").cast("long").alias("est_den"),
-        F.round(est, 4).alias("est_rows"),
-        "actual",
-        F.round(
-            F.greatest(est / F.col("actual"), F.col("actual") / est), 6
-        ).alias("q_error"),
-    )
-
-
-_JOINORDER_SQL = """
-WITH stats AS (
-  SELECT
-    (SELECT CAST(count(*) AS BIGINT) FROM customer) AS n_c,
-    (SELECT CAST(count(*) AS BIGINT) FROM orders) AS n_o,
-    (SELECT CAST(count(*) AS BIGINT) FROM lineitem) AS n_l,
-    (SELECT CAST(count(*) AS BIGINT) FROM orders WHERE o_orderstatus = 'F')
-      AS n_of,
-    (SELECT CAST(count(DISTINCT c_custkey) AS BIGINT) FROM customer) AS d_cc,
-    (SELECT CAST(count(DISTINCT o_custkey) AS BIGINT) FROM orders) AS d_oc,
-    (SELECT CAST(count(DISTINCT o_orderkey) AS BIGINT) FROM orders) AS d_ok,
-    (SELECT CAST(count(DISTINCT l_orderkey) AS BIGINT) FROM lineitem) AS d_lk
-),
-act AS (
-  SELECT
-    (SELECT CAST(count(*) AS BIGINT)
-     FROM customer c JOIN orders o ON c.c_custkey = o.o_custkey) AS a_co,
-    (SELECT CAST(count(*) AS BIGINT)
-     FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey) AS a_ol,
-    (SELECT CAST(count(*) AS BIGINT)
-     FROM customer c JOIN orders o ON c.c_custkey = o.o_custkey
-     JOIN lineitem l ON o.o_orderkey = l.l_orderkey) AS a_col,
-    (SELECT CAST(count(*) AS BIGINT)
-     FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey
-     WHERE o.o_orderstatus = 'F') AS a_ofl,
-    (SELECT CAST(count(*) AS BIGINT)
-     FROM customer c JOIN orders o ON c.c_custkey = o.o_custkey
-     JOIN lineitem l ON o.o_orderkey = l.l_orderkey
-     WHERE o.o_orderstatus = 'F') AS a_ofcl
-),
-plans AS (
-  SELECT 'co_then_l' AS plan,
-         CAST(s.n_c AS DOUBLE) * s.n_o / greatest(s.d_cc, s.d_oc)
-         + (CAST(s.n_c AS DOUBLE) * s.n_o / greatest(s.d_cc, s.d_oc))
-           * s.n_l / greatest(s.d_ok, s.d_lk) AS est_cost,
-         a.a_co + a.a_col AS actual_cost
-  FROM stats s CROSS JOIN act a
-  UNION ALL
-  SELECT 'ol_then_c',
-         CAST(s.n_o AS DOUBLE) * s.n_l / greatest(s.d_ok, s.d_lk)
-         + (CAST(s.n_o AS DOUBLE) * s.n_l / greatest(s.d_ok, s.d_lk))
-           * s.n_c / greatest(s.d_oc, s.d_cc),
-         a.a_ol + a.a_col
-  FROM stats s CROSS JOIN act a
-  UNION ALL
-  SELECT 'filtered_ofl_then_c',
-         CAST(s.n_of AS DOUBLE) * s.n_l / greatest(s.d_ok, s.d_lk)
-         + (CAST(s.n_of AS DOUBLE) * s.n_l / greatest(s.d_ok, s.d_lk))
-           * s.n_c / greatest(s.d_oc, s.d_cc),
-         a.a_ofl + a.a_ofcl
-  FROM stats s CROSS JOIN act a
-),
-best AS (
-  SELECT min(actual_cost) AS best_actual FROM plans
-),
-pick AS (
-  SELECT plan AS picked FROM (
-    SELECT plan, row_number() OVER (ORDER BY est_cost, plan) AS rn FROM plans
-  ) WHERE rn = 1
-)
-SELECT p.plan, round(p.est_cost, 4) AS est_cost, p.actual_cost,
-       CASE WHEN p.plan = pk.picked THEN 1 ELSE 0 END AS picked,
-       b.best_actual,
-       round(CAST(p.actual_cost AS DOUBLE) / b.best_actual, 6)
-         AS cost_vs_best
-FROM plans p CROSS JOIN best b CROSS JOIN pick pk
-"""
-
-
-@register("q_join_order_cost", _JOINORDER_SQL)
-def q_join_order_cost(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Left-deep join-order mini-optimizer over customer-orders-lineitem
-    (the Selinger enumeration in miniature): three valid left-deep plans
-    — (C JOIN O) then L, (O JOIN L) then C, and the predicate-pushed
-    sigma_F(O) JOIN L then C — are each costed by the materialization
-    model (sum of estimated intermediate sizes under the System-R
-    uniformity estimate) and by the TRUE intermediate sizes, and the
-    picked = argmin-estimate plan carries its regret cost_vs_best
-    against the actual optimum. The filtered plan demonstrates WHY
-    pushdown wins (the selectivity multiplies through both
-    intermediates); a regret near 1.0 is the certificate that the
-    estimate ordering matches the true ordering — the property a
-    planner actually needs, not accurate absolute numbers.
-
-    Scale plan: the costing inputs are count/distinct aggregates and
-    three join counts (stats-table lookups in production); the plan
-    frame is 3 rows. Estimate ties pinned by plan name."""
-    c = load(spark, sf_dir, "customer")
-    o = load(spark, sf_dir, "orders")
-    li = load(spark, sf_dir, "lineitem")
-    n_c, n_o, n_l = c.count(), o.count(), li.count()
-    n_of = o.filter(F.col("o_orderstatus") == "F").count()
-    d_cc = c.select("c_custkey").distinct().count()
-    d_oc = o.select("o_custkey").distinct().count()
-    d_ok = o.select("o_orderkey").distinct().count()
-    d_lk = li.select("l_orderkey").distinct().count()
-    a_co = c.join(o, c["c_custkey"] == o["o_custkey"]).count()
-    a_ol = o.join(li, o["o_orderkey"] == li["l_orderkey"]).count()
-    col3 = c.join(o, c["c_custkey"] == o["o_custkey"]).join(
-        li, F.col("o_orderkey") == li["l_orderkey"]
-    )
-    a_col = col3.count()
-    of = o.filter(F.col("o_orderstatus") == "F")
-    a_ofl = of.join(li, of["o_orderkey"] == li["l_orderkey"]).count()
-    a_ofcl = (
-        c.join(of, c["c_custkey"] == of["o_custkey"])
-        .join(li, F.col("o_orderkey") == li["l_orderkey"])
-        .count()
-    )
-    e_co = n_c * n_o / max(d_cc, d_oc)
-    e_ol = n_o * n_l / max(d_ok, d_lk)
-    e_ofl = n_of * n_l / max(d_ok, d_lk)
-    plans = [
-        ("co_then_l", e_co + e_co * n_l / max(d_ok, d_lk), a_co + a_col),
-        ("ol_then_c", e_ol + e_ol * n_c / max(d_oc, d_cc), a_ol + a_col),
-        (
-            "filtered_ofl_then_c",
-            e_ofl + e_ofl * n_c / max(d_oc, d_cc),
-            a_ofl + a_ofcl,
-        ),
-    ]
-    best_actual = min(a for _p, _e, a in plans)
-    picked = min(plans, key=lambda pea: (pea[1], pea[0]))[0]
-    df = spark.createDataFrame(
-        plans, "plan string, est_cost_raw double, actual_cost long"
-    )
-    return df.select(
-        "plan",
-        F.round("est_cost_raw", 4).alias("est_cost"),
-        "actual_cost",
-        F.when(F.col("plan") == picked, 1).otherwise(0).alias("picked"),
-        F.lit(best_actual).cast("long").alias("best_actual"),
-        F.round(F.col("actual_cost").cast("double") / best_actual, 6).alias(
-            "cost_vs_best"
-        ),
-    )
-
-
-_PARTADV_SQL = """
-WITH base AS (
-  SELECT event_type, CAST(ts AS DATE) AS day,
-         CAST(user_id % 64 AS BIGINT) AS user_bucket,
-         date_trunc('hour', ts) AS hr
-  FROM events
-),
-cand AS (
-  SELECT 'event_type' AS cand, CAST(event_type AS VARCHAR) AS pk FROM base
-  UNION ALL SELECT 'day', CAST(day AS VARCHAR) FROM base
-  UNION ALL SELECT 'user_bucket', CAST(user_bucket AS VARCHAR) FROM base
-  UNION ALL SELECT 'hour', CAST(hr AS VARCHAR) FROM base
-),
-per AS (
-  SELECT cand, pk, CAST(count(*) AS BIGINT) AS n FROM cand GROUP BY 1, 2
-)
-SELECT cand,
-       CAST(count(*) AS BIGINT) AS n_partitions,
-       CAST(sum(n) AS BIGINT) AS n_rows,
-       CAST(max(n) AS BIGINT) AS max_rows,
-       CAST(min(n) AS BIGINT) AS min_rows,
-       CAST(count(CASE WHEN n < 64 THEN 1 END) AS BIGINT) AS n_small,
-       CAST(max(n) * count(*) AS BIGINT) AS skew_num,
-       CAST(sum(n) AS BIGINT) AS skew_den,
-       round(CAST(max(n) AS DOUBLE) * count(*) / sum(n), 6) AS skew_ratio,
-       CASE WHEN sum(n) // count(*) BETWEEN 64 AND 8192 THEN 1 ELSE 0 END
-         AS avg_in_band
-FROM per GROUP BY cand
-"""
-
-
-@register("q_partition_advisor", _PARTADV_SQL)
-def q_partition_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Partition-key layout advisor — the decision every lakehouse table
-    makes once and lives with: four candidate partition schemes for the
-    event stream (event_type, day, user_id%64, hour) each report exact
-    partition counts, max/min partition sizes, the small-partition count
-    (< 64 rows — the small-files problem), and the skew ratio max*P/N as
-    a cross-multiplied exact rational (1.0 = perfectly even) with an
-    avg-rows-in-band verdict. Too few partitions starve parallelism,
-    too many drown the metadata layer, and a hot key serializes one
-    task — the three failure modes this table makes visible side by
-    side before anyone writes a CREATE TABLE ... PARTITIONED BY.
-
-    Scale plan: the 4-way candidate fanout is a projection union; one
-    map-side-combinable groupBy per (candidate, key) then a 4-row
-    rollup. No joins."""
-    ev = load(spark, sf_dir, "events")
-    base = ev.select(
-        "event_type",
-        F.col("ts").cast("date").alias("day"),
-        (F.col("user_id") % 64).cast("long").alias("user_bucket"),
-        F.date_trunc("hour", "ts").alias("hr"),
-    )
-    cand = (
-        base.select(
-            F.lit("event_type").alias("cand"),
-            F.col("event_type").cast("string").alias("pk"),
-        )
-        .unionAll(
-            base.select(F.lit("day").alias("cand"), F.col("day").cast("string"))
-        )
-        .unionAll(
-            base.select(
-                F.lit("user_bucket").alias("cand"),
-                F.col("user_bucket").cast("string"),
-            )
-        )
-        .unionAll(
-            base.select(F.lit("hour").alias("cand"), F.col("hr").cast("string"))
-        )
-    )
-    per = cand.groupBy("cand", "pk").agg(F.count(F.lit(1)).cast("long").alias("n"))
-    return per.groupBy("cand").agg(
-        F.count(F.lit(1)).cast("long").alias("n_partitions"),
-        F.sum("n").cast("long").alias("n_rows"),
-        F.max("n").cast("long").alias("max_rows"),
-        F.min("n").cast("long").alias("min_rows"),
-        F.count(F.when(F.col("n") < 64, 1)).cast("long").alias("n_small"),
-        (F.max("n") * F.count(F.lit(1))).cast("long").alias("skew_num"),
-        F.sum("n").cast("long").alias("skew_den"),
-        F.round(
-            F.max("n").cast("double") * F.count(F.lit(1)) / F.sum("n"), 6
-        ).alias("skew_ratio"),
-        F.when(
-            F.floor(F.sum("n") / F.count(F.lit(1))).between(64, 8192), 1
-        )
-        .otherwise(0)
-        .alias("avg_in_band"),
-    )
-
-
-# --------------------------------------------------------------------------
-# Round 4: relational/scheduling/stat trio — the skyline (Pareto-front)
-# operator via RANGE-frame running maxima, critical-path method over a
-# layered task DAG (max-plus relaxation), and the exact-integer
-# Cramér-von Mises two-sample statistic.
-# --------------------------------------------------------------------------
-
-_SKYLINE_SQL = """
-WITH p AS (
-  SELECT p_partkey, CAST(floor(p_retailprice * 100 + 0.5) AS BIGINT) AS cents,
-         CAST(p_size AS BIGINT) AS size
-  FROM part
-),
-m AS (
-  SELECT p_partkey, cents, size,
-         max(size) OVER (ORDER BY cents
-           RANGE BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS m_strict,
-         max(size) OVER (ORDER BY cents
-           RANGE BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS m_incl
-  FROM p
-),
-tot AS (SELECT CAST(count(*) AS BIGINT) AS n_total FROM p)
-SELECT m.p_partkey, m.cents, m.size, t.n_total
-FROM m CROSS JOIN tot t
-WHERE (m.m_strict IS NULL OR m.m_strict < m.size) AND m.m_incl <= m.size
-"""
-
-
-@register("q_skyline", _SKYLINE_SQL)
-def q_skyline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Skyline / Pareto-front operator (Borzsony-Kossmann-Stocker 2001)
-    over parts, minimizing price and maximizing size — the
-    multi-objective SELECT that relational engines never got as a
-    keyword: a part is dominated iff some part is strictly cheaper with
-    at least equal size, or at most equal price with strictly larger
-    size, and BOTH conditions collapse into two RANGE-frame running
-    maxima over the price axis (max size strictly below this price; max
-    size at-or-below it) — one sort, one window pass, no pair join, the
-    formulation that makes 2-D skylines linear after sort at any scale.
-    Equal (price, size) twins survive together (neither dominates).
-    Exact integer cents; the replica cross-checks with the O(n^2)
-    dominance scan and verifies the front is an antichain.
-
-    Scale plan: one global sort window (dist_dense_rank shape at
-    production scale); the RANGE frames are value-based so price ties
-    are handled exactly; output is front-sized. 1-row count carry."""
-    p = load(spark, sf_dir, "part").select(
-        "p_partkey",
-        F.floor(F.col("p_retailprice") * 100 + 0.5).cast("long").alias("cents"),
-        F.col("p_size").cast("long").alias("size"),
-    )
-    w_strict = (
-        Window.orderBy("cents").rangeBetween(Window.unboundedPreceding, -1)
-    )
-    w_incl = Window.orderBy("cents").rangeBetween(Window.unboundedPreceding, 0)
-    m = p.select(
-        "p_partkey", "cents", "size",
-        F.max("size").over(w_strict).alias("m_strict"),
-        F.max("size").over(w_incl).alias("m_incl"),
-    )
-    tot = p.agg(F.count(F.lit(1)).cast("long").alias("n_total"))
-    return (
-        m.filter(
-            (F.col("m_strict").isNull() | (F.col("m_strict") < F.col("size")))
-            & (F.col("m_incl") <= F.col("size"))
-        )
-        .crossJoin(F.broadcast(tot))
-        .select("p_partkey", "cents", "size", "n_total")
-    )
 
 
 def _cpm_sql() -> str:
@@ -2590,10 +1682,8 @@ def q_cramer_von_mises(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
-# Round 4: KG-eval / IVM / mergeable-sampling trio — TransE link
-# prediction ranking in exact integer L1 geometry, incremental view
-# maintenance audited against full recompute, and the bottom-k
-# mergeability certificate.
+# Round 4: KG eval — TransE link prediction ranking in exact integer L1
+# geometry.
 # --------------------------------------------------------------------------
 
 
@@ -2797,474 +1887,4 @@ def q_transe_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         F.min("n_cands").cast("long").alias("min_cands"),
         F.max("n_cands").cast("long").alias("max_cands"),
-    )
-
-
-_IVM_SQL = """
-WITH base AS (
-  SELECT o_orderkey AS k, o_orderstatus AS status,
-         CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS cents,
-         substr(md5('u:' || CAST(o_orderkey AS VARCHAR)), 1, 1) < '6' AS upd,
-         substr(md5('d:' || CAST(o_orderkey AS VARCHAR)), 1, 1) < '2' AS del
-  FROM orders
-),
-full_v AS (
-  SELECT status, CAST(count(*) AS BIGINT) AS f_count,
-         CAST(sum(CASE WHEN upd THEN cents + 100 ELSE cents END) AS BIGINT)
-           AS f_cents
-  FROM base WHERE NOT del GROUP BY 1
-),
-agg AS (
-  SELECT status,
-         CAST(count(*) AS BIGINT) AS b_count,
-         CAST(sum(cents) AS BIGINT) AS b_cents,
-         CAST(count(CASE WHEN del THEN 1 END) AS BIGINT) AS n_del,
-         CAST(count(CASE WHEN upd THEN 1 END) AS BIGINT) AS n_upd,
-         CAST(sum(CASE WHEN del THEN cents
-                       + CASE WHEN upd THEN 100 ELSE 0 END
-                  ELSE 0 END) AS BIGINT) AS del_cents_final
-  FROM base GROUP BY 1
-)
-SELECT a.status, a.b_count, a.b_cents, a.n_del, a.n_upd,
-       a.del_cents_final,
-       CAST(a.b_count - a.n_del AS BIGINT) AS i_count,
-       CAST(a.b_cents + 100 * a.n_upd - a.del_cents_final AS BIGINT)
-         AS i_cents,
-       f.f_count, f.f_cents,
-       CASE WHEN a.b_count - a.n_del = f.f_count THEN 1 ELSE 0 END
-         AS count_match,
-       CASE WHEN a.b_cents + 100 * a.n_upd - a.del_cents_final
-                 = f.f_cents THEN 1 ELSE 0 END AS cents_match
-FROM agg a JOIN full_v f USING (status)
-"""
-
-
-@register("q_ivm_audit", _IVM_SQL)
-def q_ivm_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental view maintenance audit — the algebra that lets a
-    materialized SUM/COUNT view absorb a CDC delta without rereading
-    the base table, PROVEN against full recompute in the same query:
-    under q_cdc_apply's md5 delta (6/16 updated +$1, 2/16 deleted) the
-    incremental update is dCount = -n_del and dSum = +100*n_upd -
-    del_cents_final — n_upd counts ALL updates because an
-    updated-then-deleted row's +100 is applied by the update delta and
-    then removed inside its last-value departure; the first draft used
-    only live updates and the replica caught the exact 100*n_upd_del
-    discrepancy, the classic IVM miscount this audit exists to catch —
-    and the
-    count_match/cents_match columns ship the exact-equality verdict
-    in-row. At 10^12 rows this identity is the difference between a
-    5-second view refresh and a full-table rescan.
-
-    Scale plan: two map-side-combinable groupBys over one projection,
-    a 3-row equi-join; no windows, no corpus joins."""
-    orders = load(spark, sf_dir, "orders")
-    base = orders.select(
-        F.col("o_orderstatus").alias("status"),
-        F.floor(F.col("o_totalprice") * 100 + 0.5).cast("long").alias("cents"),
-        (
-            F.substring(
-                F.md5(F.concat(F.lit("u:"), F.col("o_orderkey").cast("string"))),
-                1, 1,
-            )
-            < "6"
-        ).alias("upd"),
-        (
-            F.substring(
-                F.md5(F.concat(F.lit("d:"), F.col("o_orderkey").cast("string"))),
-                1, 1,
-            )
-            < "2"
-        ).alias("del"),
-    )
-    full_v = base.filter(~F.col("del")).groupBy("status").agg(
-        F.count(F.lit(1)).cast("long").alias("f_count"),
-        F.sum(
-            F.when(F.col("upd"), F.col("cents") + 100).otherwise(F.col("cents"))
-        )
-        .cast("long")
-        .alias("f_cents"),
-    )
-    agg = base.groupBy("status").agg(
-        F.count(F.lit(1)).cast("long").alias("b_count"),
-        F.sum("cents").cast("long").alias("b_cents"),
-        F.count(F.when(F.col("del"), 1)).cast("long").alias("n_del"),
-        F.count(F.when(F.col("upd"), 1)).cast("long").alias("n_upd"),
-        F.sum(
-            F.when(
-                F.col("del"),
-                F.col("cents") + F.when(F.col("upd"), 100).otherwise(0),
-            ).otherwise(0)
-        )
-        .cast("long")
-        .alias("del_cents_final"),
-    )
-    i_count = F.col("b_count") - F.col("n_del")
-    i_cents = F.col("b_cents") + 100 * F.col("n_upd") - F.col(
-        "del_cents_final"
-    )
-    return agg.join(full_v, "status").select(
-        "status", "b_count", "b_cents", "n_del", "n_upd",
-        "del_cents_final",
-        i_count.cast("long").alias("i_count"),
-        i_cents.cast("long").alias("i_cents"),
-        "f_count", "f_cents",
-        F.when(i_count == F.col("f_count"), 1).otherwise(0).alias("count_match"),
-        F.when(i_cents == F.col("f_cents"), 1).otherwise(0).alias("cents_match"),
-    )
-
-
-_BOTTOMK_SQL = """
-WITH h AS (
-  SELECT o_orderkey AS k, CAST(o_orderkey % 8 AS BIGINT) AS shard,
-         md5('bk:' || CAST(o_orderkey AS VARCHAR)) AS hash
-  FROM orders
-),
-shard_bk AS (
-  SELECT shard, k, hash,
-         row_number() OVER (PARTITION BY shard ORDER BY hash, k) AS srk
-  FROM h QUALIFY srk <= 16
-),
-merged AS (
-  SELECT shard, k, hash,
-         row_number() OVER (ORDER BY hash, k) AS rk
-  FROM shard_bk QUALIFY rk <= 16
-),
-direct AS (
-  SELECT k, hash, row_number() OVER (ORDER BY hash, k) AS rk
-  FROM h QUALIFY rk <= 16
-)
-SELECT m.rk AS rank, m.hash AS merged_hash, d.hash AS direct_hash,
-       m.k AS merged_key, d.k AS direct_key, m.shard AS from_shard,
-       CASE WHEN m.hash = d.hash AND m.k = d.k THEN 1 ELSE 0 END AS match
-FROM merged m JOIN direct d ON d.rk = m.rk
-"""
-
-
-@register("q_bottomk_merge", _BOTTOMK_SQL)
-def q_bottomk_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Bottom-k mergeability certificate (the property that makes KMV /
-    bottom-k sketches distributed-sound, Cohen-Kaplan 2007): every shard
-    keeps its own 16 smallest md5 hashes, the 8 shard summaries union
-    into 128 rows, and the global bottom-16 of THAT must equal the
-    bottom-16 computed directly over all keys — true by the subset
-    argument (a shard's contribution to the global bottom-16 is always
-    inside its own bottom-16), and shipped here rank by rank with the
-    per-rank match flag and the origin shard, because this identity is
-    what licenses tree-reduce aggregation of distinct-count sketches
-    with NO accuracy loss. Ties pinned by key; all comparisons exact
-    string/integer.
-
-    Scale plan: the shard pass is one per-shard window (parallel by
-    construction); the merge ranks a 128-row frame; the direct pass is
-    the audit-only baseline (production never runs it — that is the
-    point)."""
-    orders = load(spark, sf_dir, "orders")
-    h = orders.select(
-        F.col("o_orderkey").alias("k"),
-        (F.col("o_orderkey") % 8).cast("long").alias("shard"),
-        F.md5(F.concat(F.lit("bk:"), F.col("o_orderkey").cast("string"))).alias(
-            "hash"
-        ),
-    )
-    ws = Window.partitionBy("shard").orderBy("hash", "k")
-    shard_bk = h.select(
-        "shard", "k", "hash", F.row_number().over(ws).alias("srk")
-    ).filter(F.col("srk") <= 16)
-    wm = Window.orderBy("hash", "k")
-    merged = shard_bk.select(
-        "shard", "k", "hash", F.row_number().over(wm).alias("rk")
-    ).filter(F.col("rk") <= 16)
-    direct = h.select(
-        F.col("k").alias("dk"), F.col("hash").alias("dhash"),
-        F.row_number().over(wm).alias("rk"),
-    ).filter(F.col("rk") <= 16)
-    return merged.join(direct, "rk").select(
-        F.col("rk").alias("rank"),
-        F.col("hash").alias("merged_hash"),
-        F.col("dhash").alias("direct_hash"),
-        F.col("k").alias("merged_key"),
-        F.col("dk").alias("direct_key"),
-        F.col("shard").alias("from_shard"),
-        F.when(
-            (F.col("hash") == F.col("dhash")) & (F.col("k") == F.col("dk")), 1
-        )
-        .otherwise(0)
-        .alias("match"),
-    )
-
-
-# --------------------------------------------------------------------------
-# Round 4: training/experimentation/storage-cost trio — gradient-clipping
-# bias ledger, 2x2 factorial interaction contrast, and the LSM
-# leveled-vs-tiered compaction cost model.
-# --------------------------------------------------------------------------
-
-_CLIP_SQL = """
-WITH v AS (
-  SELECT CAST(floor(abs(value) * 1000) AS BIGINT) AS x FROM events
-),
-cs AS (SELECT CAST(c.c AS BIGINT) AS clip
-       FROM (VALUES (1000), (4000), (16000)) AS c(c))
-SELECT cs.clip,
-       CAST(count(*) AS BIGINT) AS n,
-       CAST(count(CASE WHEN v.x > cs.clip THEN 1 END) AS BIGINT) AS n_clipped,
-       CAST(sum(v.x) AS BIGINT) AS sum_raw,
-       CAST(sum(least(v.x, cs.clip)) AS BIGINT) AS sum_clipped,
-       CAST(sum(least(v.x, cs.clip)) - sum(v.x) AS BIGINT) AS bias_num,
-       round(CAST(sum(least(v.x, cs.clip)) - sum(v.x) AS DOUBLE) / count(*),
-             6) AS mean_bias,
-       round(CAST(count(CASE WHEN v.x > cs.clip THEN 1 END) AS DOUBLE)
-             / count(*), 6) AS clip_frac
-FROM v CROSS JOIN cs GROUP BY 1
-"""
-
-
-@register("q_clip_bias", _CLIP_SQL)
-def q_clip_bias(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gradient-clipping bias ledger (the DP-SGD pre-flight, Abadi
-    2016's clip-then-noise step): clipping per-example magnitudes at C
-    trades variance for a DETERMINISTIC downward bias, and this audit
-    prices it exactly at three clip norms — bias_num = sum(min(x, C)) -
-    sum(x) is an exact nonpositive BIGINT, beside the clipped fraction
-    that drives the privacy accountant's sensitivity. The C ladder is
-    the tuning curve: too low and the bias swamps the signal, too high
-    and the noise scaled to C does; the replica holds the monotone
-    identities (bias shrinks toward zero and clip_frac falls as C
-    grows) and the exact sums. At scale this is one pass of
-    map-side-combined conditional sums — the cheapest audit a training
-    pipeline ever runs before spending a privacy budget.
-
-    Scale plan: one scan x a 3-row broadcast clip spine (whitelisted),
-    collapsed map-side to 3 rows."""
-    ev = load(spark, sf_dir, "events")
-    v = ev.select(F.floor(F.abs(F.col("value")) * 1000).cast("long").alias("x"))
-    cs = spark.createDataFrame([(1000,), (4000,), (16000,)], "clip long")
-    j = v.crossJoin(F.broadcast(cs))
-    clipped = F.least("x", "clip")
-    return j.groupBy("clip").agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.count(F.when(F.col("x") > F.col("clip"), 1))
-        .cast("long")
-        .alias("n_clipped"),
-        F.sum("x").cast("long").alias("sum_raw"),
-        F.sum(clipped).cast("long").alias("sum_clipped"),
-        (F.sum(clipped) - F.sum("x")).cast("long").alias("bias_num"),
-        F.round(
-            (F.sum(clipped) - F.sum("x")).cast("double") / F.count(F.lit(1)), 6
-        ).alias("mean_bias"),
-        F.round(
-            F.count(F.when(F.col("x") > F.col("clip"), 1)).cast("double")
-            / F.count(F.lit(1)),
-            6,
-        ).alias("clip_frac"),
-    )
-
-
-_FACTORIAL_SQL = """
-WITH r AS (
-  SELECT CASE WHEN substr(md5('fa:' || CAST(event_id AS VARCHAR)), 1, 1)
-                   < '8' THEN 1 ELSE 0 END AS a,
-         CASE WHEN substr(md5('fb:' || CAST(event_id AS VARCHAR)), 1, 1)
-                   < '8' THEN 1 ELSE 0 END AS b,
-         CAST(('0x' || substr(md5('fo:' || CAST(event_id AS VARCHAR)), 1, 2))
-              AS BIGINT) AS coin
-  FROM events
-),
-cells AS (
-  SELECT a, b,
-         CAST(count(*) AS BIGINT) AS n,
-         CAST(count(CASE WHEN coin < 16 * (8 + 2 * a + 2 * b + 3 * a * b)
-                    THEN 1 END) AS BIGINT) AS s
-  FROM r GROUP BY 1, 2
-),
-wide AS (
-  SELECT max(CASE WHEN a = 0 AND b = 0 THEN n END) AS n00,
-         max(CASE WHEN a = 0 AND b = 0 THEN s END) AS s00,
-         max(CASE WHEN a = 1 AND b = 0 THEN n END) AS n10,
-         max(CASE WHEN a = 1 AND b = 0 THEN s END) AS s10,
-         max(CASE WHEN a = 0 AND b = 1 THEN n END) AS n01,
-         max(CASE WHEN a = 0 AND b = 1 THEN s END) AS s01,
-         max(CASE WHEN a = 1 AND b = 1 THEN n END) AS n11,
-         max(CASE WHEN a = 1 AND b = 1 THEN s END) AS s11
-  FROM cells
-)
-SELECT c.a, c.b, c.n, c.s,
-       round(CAST(c.s AS DOUBLE) / c.n, 6) AS rate,
-       CAST((w.s11 * w.n10 - w.s10 * w.n11) * w.n01 * w.n00
-            - (w.s01 * w.n00 - w.s00 * w.n01) * w.n11 * w.n10 AS BIGINT)
-         AS interaction_num,
-       CAST(w.n11 * w.n10 * w.n01 * w.n00 AS BIGINT) AS interaction_den,
-       round((CAST(w.s11 AS DOUBLE) / w.n11 - CAST(w.s10 AS DOUBLE) / w.n10)
-             - (CAST(w.s01 AS DOUBLE) / w.n01
-                - CAST(w.s00 AS DOUBLE) / w.n00), 6) AS interaction
-FROM cells c CROSS JOIN wide w
-"""
-
-
-@register("q_ab_interaction", _FACTORIAL_SQL)
-def q_ab_interaction(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """2x2 factorial interaction contrast — the question a platform
-    running two overlapping experiments must answer before shipping
-    both: with md5 factors A and B and a planted SUPER-ADDITIVE outcome
-    (success byte < 16*(8 + 2A + 2B + 3AB): each factor adds 2/16, the
-    combination adds 3/16 MORE than additivity predicts), the
-    interaction contrast (r11 - r10) - (r01 - r00) ships as an exact
-    cross-multiplied integer rational over the four cell denominators —
-    positive means the features synergize, negative means they fight
-    (the cannibalization case that makes naive one-at-a-time rollouts
-    overcount wins). Cell counts/successes are exact; rates and the
-    double contrast are single divisions. The replica rebuilds the four
-    cells, checks the rational against Fractions, and asserts the
-    planted synergy shows through (interaction ~ +3/16).
-
-    Scale plan: one scan into a 4-cell map-side rollup, a 1-row wide
-    carry (whitelisted); den envelope (n/4)^4 stays in BIGINT through
-    ~50M events."""
-    ev = load(spark, sf_dir, "events")
-    r = ev.select(
-        F.when(
-            F.substring(
-                F.md5(F.concat(F.lit("fa:"), F.col("event_id").cast("string"))),
-                1, 1,
-            )
-            < "8",
-            1,
-        )
-        .otherwise(0)
-        .alias("a"),
-        F.when(
-            F.substring(
-                F.md5(F.concat(F.lit("fb:"), F.col("event_id").cast("string"))),
-                1, 1,
-            )
-            < "8",
-            1,
-        )
-        .otherwise(0)
-        .alias("b"),
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.lit("fo:"), F.col("event_id").cast("string"))),
-                1, 2,
-            ),
-            16, 10,
-        ).cast("long").alias("coin"),
-    )
-    thr = 16 * (8 + 2 * F.col("a") + 2 * F.col("b") + 3 * F.col("a") * F.col("b"))
-    cells = r.groupBy("a", "b").agg(
-        F.count(F.lit(1)).cast("long").alias("n"),
-        F.count(F.when(F.col("coin") < thr, 1)).cast("long").alias("s"),
-    )
-    wide = cells.agg(
-        *[
-            F.max(
-                F.when((F.col("a") == ai) & (F.col("b") == bi), F.col(col))
-            ).alias(f"{col}{ai}{bi}")
-            for ai in (0, 1)
-            for bi in (0, 1)
-            for col in ("n", "s")
-        ]
-    )
-    inter_num = (
-        (F.col("s11") * F.col("n10") - F.col("s10") * F.col("n11"))
-        * F.col("n01")
-        * F.col("n00")
-        - (F.col("s01") * F.col("n00") - F.col("s00") * F.col("n01"))
-        * F.col("n11")
-        * F.col("n10")
-    )
-    return cells.crossJoin(F.broadcast(wide)).select(
-        "a", "b", "n", "s",
-        F.round(F.col("s").cast("double") / F.col("n"), 6).alias("rate"),
-        inter_num.cast("long").alias("interaction_num"),
-        (F.col("n11") * F.col("n10") * F.col("n01") * F.col("n00"))
-        .cast("long")
-        .alias("interaction_den"),
-        F.round(
-            (
-                F.col("s11").cast("double") / F.col("n11")
-                - F.col("s10").cast("double") / F.col("n10")
-            )
-            - (
-                F.col("s01").cast("double") / F.col("n01")
-                - F.col("s00").cast("double") / F.col("n00")
-            ),
-            6,
-        ).alias("interaction"),
-    )
-
-
-_LSM_SQL = """
-WITH ing AS (
-  SELECT CAST(count(*) * 100 AS BIGINT) AS total_bytes FROM events
-),
-fans AS (SELECT CAST(f.f AS BIGINT) AS fanout
-         FROM (VALUES (4), (8), (16)) AS f(f)),
-lv AS (SELECT CAST(t.i + 1 AS BIGINT) AS l FROM unnest(range(12)) AS t(i)),
-pw AS (
-  SELECT f.fanout, lv.l,
-         1048576 * power(f.fanout, lv.l) AS cap
-  FROM fans f CROSS JOIN lv
-),
-need AS (
-  SELECT pw.fanout, CAST(min(pw.l) AS BIGINT) AS levels
-  FROM pw CROSS JOIN ing
-  WHERE pw.cap >= ing.total_bytes
-  GROUP BY 1
-)
-SELECT n.fanout, i.total_bytes, n.levels,
-       CAST(n.levels * n.fanout AS BIGINT) AS wa_leveled,
-       n.levels AS wa_tiered,
-       n.levels AS ra_leveled,
-       CAST(n.levels * n.fanout AS BIGINT) AS ra_tiered,
-       round(CAST(n.levels * n.fanout AS DOUBLE) / n.levels, 4)
-         AS leveled_write_penalty
-FROM need n CROSS JOIN ing i
-"""
-
-
-@register("q_lsm_cost_model", _LSM_SQL)
-def q_lsm_cost_model(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LSM-tree compaction cost model (O'Neil 1996; the RocksDB tuning
-    table): with a 1 MiB memtable and the event stream's byte mass
-    (100 B/row proxy), the level count is the SMALLEST L with
-    memtable * fanout^L >= total — found by an integer comparison over
-    a 12-row level spine, no logarithms — and the classic duality ships
-    in-row: leveled compaction pays write amplification ~ L * fanout
-    for read amplification ~ L, tiered pays the transpose. The fanout
-    ladder {4, 8, 16} is the actual knob: bigger fanout means fewer
-    levels but each leveled rewrite costs more — the replica recomputes
-    L by direct exponentiation and holds the monotone trade (levels
-    fall, leveled WA need not). cap stays a DOUBLE comparison column —
-    fanout^12 * 2^20 overflows BIGINT at fanout 16, and both engines
-    evaluate the identical power() double, so the crossing filter
-    agrees bit-for-bit.
-
-    Scale plan: one count aggregate + constant spines; the model frame
-    is 3 rows. Broadcast spines whitelisted."""
-    ev = load(spark, sf_dir, "events")
-    ing = ev.agg((F.count(F.lit(1)) * 100).cast("long").alias("total_bytes"))
-    fans = spark.createDataFrame([(4,), (8,), (16,)], "fanout long")
-    lv = spark.range(1, 13).select(F.col("id").cast("long").alias("l"))
-    pw = fans.crossJoin(F.broadcast(lv)).select(
-        "fanout", "l",
-        (1048576 * F.pow(F.col("fanout"), F.col("l"))).alias("cap"),
-    )
-    need = (
-        pw.crossJoin(F.broadcast(ing))
-        .filter(F.col("cap") >= F.col("total_bytes"))
-        .groupBy("fanout")
-        .agg(F.min("l").cast("long").alias("levels"))
-    )
-    return need.crossJoin(F.broadcast(ing)).select(
-        "fanout", "total_bytes", "levels",
-        (F.col("levels") * F.col("fanout")).cast("long").alias("wa_leveled"),
-        F.col("levels").alias("wa_tiered"),
-        F.col("levels").alias("ra_leveled"),
-        (F.col("levels") * F.col("fanout")).cast("long").alias("ra_tiered"),
-        F.round(
-            (F.col("levels") * F.col("fanout")).cast("double") / F.col("levels"),
-            4,
-        ).alias("leveled_write_penalty"),
     )

@@ -99,46 +99,3 @@ def countmin_estimates(
         "n_est",
         (F.col("n_est") - F.col("n_exact")).alias("overcount"),
     )
-
-
-# --------------------------------------------------------------------------
-# KMV (k-minimum-values) distinct sketch — Bar-Yossef et al. 2002 / Beyer
-# et al. 2007. Deterministic md5 hashing (same engine-reproducible idiom as
-# the Count-Min buckets above), so sketches, estimates, AND the exact-vs-
-# estimate audit are hash-checkable against a SQL oracle.
-# --------------------------------------------------------------------------
-
-# 16^13 = 2^52: md5's first 13 hex chars as an exactly-representable double
-KMV_SPACE = 4503599627370496.0
-
-
-def kmv_sketch(df: DataFrame, key_col: str, k: int = 32) -> DataFrame:
-    """The k smallest md5 hash values of the column's distinct keys — a
-    mergeable distinct-count sketch (union = min-k of concatenated
-    sketches). One distinct + a TakeOrdered top-k: no full sort, the
-    shuffle carries only distinct keys and the result is k rows.
-
-    At 100 TB this is the join-cardinality estimator a planner consults
-    BEFORE committing to a shuffle strategy: sketches are built per
-    partition (k rows each), merged on the driver/single reducer, and the
-    intersection estimate prices the join output without touching the fact
-    tables a second time."""
-    h = F.conv(
-        F.substring(F.md5(F.col("key").cast("string")), 1, 13), 16, 10
-    ).cast("bigint")
-    return (
-        df.select(F.col(key_col).alias("key"))
-        .distinct()
-        .select(h.alias("h"))
-        .orderBy("h")
-        .limit(k)
-    )
-
-
-def kmv_distinct_estimate(sketch: DataFrame, k: int = 32) -> DataFrame:
-    """(k-1)/u_k estimator over the normalized k-th minimum hash."""
-    return sketch.agg(
-        F.round(
-            F.lit(float(k - 1)) * F.lit(KMV_SPACE) / F.max("h").cast("double"), 2
-        ).alias("est_distinct")
-    )

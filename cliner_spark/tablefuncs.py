@@ -4,8 +4,8 @@ The Python-extension surface next to the pandas UDFs (tagger/scan): one input
 row → many output rows, usable from SQL via LATERAL or with a whole TABLE(...)
 argument.
 
-Two table functions, each with an exact DuckDB oracle twin registered in
-entry_queries:
+Two table functions (``sentence_split`` has an exact DuckDB oracle twin,
+q_udtf_sentences):
 
 - ``sentence_split`` — LATERAL form: one document row → one row per
   sentence (split on [.!?]+ runs, blank pieces dropped, whitespace-trimmed),
@@ -17,9 +17,9 @@ entry_queries:
 
 - ``sessionize_events`` — TABLE-argument form with PARTITION BY/ORDER BY:
   consumes each user's event stream in timestamp order and emits one row per
-  gap-delimited session (gaps-and-islands as a table function instead of the
-  window-function formulation in q_sessionize — same oracle algebra, second
-  engine surface).
+  gap-delimited session (gaps-and-islands as a table function): a new
+  session starts at a user's first event and at every event more than
+  SESSION_GAP_SEC after the previous one.
 
 Scale notes: a UDTF runs Python per input row, so neither belongs on the
 token-grain hot path (that stays in the Arrow-vectorized mapInPandas tagger);
@@ -37,7 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.functions import udtf
 
 _SENT_RE = re.compile(r"[.!?]+")
-SESSION_GAP_SEC = 1800  # 30 min, matches q_sessionize's gap rule
+SESSION_GAP_SEC = 1800  # 30 min; a gap of exactly this length stays in the session
 MAX_SENT_TOKENS = 12  # re-chunk window for unpunctuated pieces
 
 

@@ -1,53 +1,10 @@
-"""Time-series completion over event streams: dense spines for downstream
-window/lag math that must not skip empty buckets.
-
-(events_hourly, sessionize, as-of joins live in the query registry as pure
-DataFrame compositions; this module holds the ops that need a generated
-dimension.)
-"""
+"""Time-series operators over event streams: a banded temporal self-join,
+sliding-window counts and ordered funnel conversion."""
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def gap_fill_hours(
-    events: DataFrame,
-    group_col: str = "event_type",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """Zero-filled hourly counts per group: (group, hour, n) for EVERY hour
-    between the stream's global min and max, including hours where a group
-    saw nothing — the dense spine that lag/delta/moving-average math needs.
-
-    Plan: one aggregated pass for counts, a 1-row global min/max aggregate
-    exploded into the hour spine with F.sequence (generated driver-free on
-    an executor), cross-joined with the distinct group dimension, then a
-    left join of the (tiny) spine against the counts. The fact table is
-    scanned twice (counts + bounds) but shuffled once; the spine side is
-    dimension-sized (hours × groups), never fact-sized.
-    """
-    hour = F.date_trunc("hour", F.col(ts_col))
-    counts = events.groupBy(
-        F.col(group_col).alias("grp"), hour.alias("hour")
-    ).agg(F.count(F.lit(1)).alias("n"))
-    bounds = events.agg(
-        F.min(hour).alias("lo"), F.max(hour).alias("hi")
-    )
-    spine_hours = bounds.select(
-        F.explode(F.expr("sequence(lo, hi, interval 1 hour)")).alias("hour")
-    )
-    groups = events.select(F.col(group_col).alias("grp")).distinct()
-    spine = spine_hours.crossJoin(F.broadcast(groups))
-    return (
-        spine.join(counts, ["grp", "hour"], "left")
-        .select(
-            F.col("grp").alias(group_col),
-            "hour",
-            F.coalesce(F.col("n"), F.lit(0)).cast("bigint").alias("n"),
-        )
-    )
 
 
 def banded_interval_join(

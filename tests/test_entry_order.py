@@ -3,6 +3,8 @@ and the KG-construction core leads their order."""
 
 from __future__ import annotations
 
+import re
+
 import __spark_entry__ as entry
 from cliner_spark import entry_queries as EQ
 
@@ -16,3 +18,13 @@ def test_query_order_covers_registry_kg_core_first():
     assert names[len(EQ.KG_CORE):] == [
         n for n in EQ.REGISTRY if n not in EQ.KG_CORE
     ]
+
+
+def test_no_oracle_reads_tpch_or_events():
+    """The registry serves the transcript KG: no oracle reads the TPC-H
+    tables or the `events` stream, only `documents` and `embeddings`."""
+    word = re.compile(
+        r"\b(events|lineitem|orders|customer|supplier|part|nation|region)\b"
+    )
+    hits = {n: sorted(set(word.findall(s))) for n, s in entry.oracle_sql().items()}
+    assert {n: t for n, t in hits.items() if t} == {}

@@ -268,18 +268,6 @@ def test_triangle_count_known_graph(spark):
     assert got == {"a": 2, "b": 2, "c": 1, "d": 1}
 
 
-def test_key_skew_profile(spark):
-    from cliner_spark.profiling import key_skew
-
-    rows = [("hot",)] * 6 + [("w1",), ("w2",), ("w3",)]
-    df = spark.createDataFrame(rows, "k string")
-    out = key_skew(df, "k", top_k=2).collect()
-    assert [(r["key"], r["n"], r["rank"]) for r in out] == [("hot", 6, 1), ("w1", 1, 2)]
-    top = out[0]
-    # 6 of 9 rows, mean count = 9/4 keys
-    assert abs(top["share"] - 6 / 9) < 1e-6 and abs(top["skew"] - 6 / 2.25) < 1e-3
-
-
 def test_windowed_cooccurrence_equals_naive_theta_join(spark):
     """The banded range join (bucket expansion + equi-join) must count
     exactly the pairs the naive |ta-tb| <= w theta join counts — including

@@ -107,30 +107,3 @@ def test_curation_manifest_consistent_with_components(spark):
     hits = {r["doc_id"] for r in _q(spark, "q_decontaminate").collect()}
     for doc_id, r in man.items():
         assert r["keep_decontam"] == (doc_id not in hits)
-
-
-def test_watermark_profile_matches_python_replay(spark):
-    got = {r["user_id"]: r for r in _q(spark, "q_watermark_profile").collect()}
-    ev = (
-        spark.read.parquet(f"{SF}/events.parquet")
-        .select("user_id", "event_id", "ts")
-        .collect()
-    )
-    by_user = {}
-    for r in ev:
-        by_user.setdefault(r["user_id"], []).append((r["event_id"], r["ts"]))
-    for uid, rows in by_user.items():
-        rows.sort()
-        prior_max, n_late, max_dis = None, 0, 0
-        for _eid, ts in rows:
-            if prior_max is not None and ts < prior_max:
-                n_late += 1
-                dis = (prior_max - ts) // __import__("datetime").timedelta(
-                    microseconds=1000
-                )
-                max_dis = max(max_dis, int(dis))
-            prior_max = ts if prior_max is None else max(prior_max, ts)
-        g = got[uid]
-        assert g["n_events"] == len(rows)
-        assert g["n_late"] == n_late, (uid, g["n_late"], n_late)
-        assert g["max_disorder_ms"] == max_dis, (uid, g["max_disorder_ms"], max_dis)

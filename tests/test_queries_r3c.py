@@ -1,6 +1,5 @@
 """Independent-oracle property tests for the round-3j operators (Rocchio
-PRF retrieval, ANN nDCG, calibration bins, lead-lag cross-correlation,
-exact KS drift): straight-line Python replicas on the sf0.001 fixtures —
+PRF retrieval, ANN nDCG, calibration bins, exact KS drift): straight-line Python replicas on the sf0.001 fixtures —
 the error class a shared-formula SQL twin cannot catch."""
 
 from __future__ import annotations
@@ -174,44 +173,6 @@ def test_calibration_bins_match_python_replica(spark):
         assert abs(r["mean_pred"] - _round6(spm / (1000 * n))) < 1e-9
         assert abs(r["frac_pos"] - _round6(npos / n)) < 1e-9
         assert abs(r["gap"] - _round6(abs(spm - 1000 * npos) / (1000 * n))) < 1e-9
-
-
-def test_leadlag_xcorr_matches_python_replica(spark):
-    import pandas as pd
-
-    ev = pd.read_parquet(f"{SF}/events.parquet")
-    ev = ev[ev["event_type"].isin(["click", "purchase"])]
-    h = ev["ts"].astype("datetime64[us]").astype("int64") // 3_600_000_000
-    h0, h1 = int(h.min()), int(h.max())
-    c = h[ev["event_type"] == "click"].value_counts().to_dict()
-    p = h[ev["event_type"] == "purchase"].value_counts().to_dict()
-    series = [(c.get(x, 0), p.get(x, 0)) for x in range(h0, h1 + 1)]
-
-    rows = {r["lag"]: r for r in _q(spark, "q_leadlag_xcorr").collect()}
-    assert set(rows) == {0, 1, 2, 3}
-    for lag in range(4):
-        pairs = [
-            (series[i][0], series[i + lag][1])
-            for i in range(len(series) - lag)
-        ]
-        n = len(pairs)
-        sx = sum(x for x, _ in pairs)
-        sy = sum(y for _, y in pairs)
-        sxy = sum(x * y for x, y in pairs)
-        sxx = sum(x * x for x, _ in pairs)
-        syy = sum(y * y for _, y in pairs)
-        r = rows[lag]
-        assert (r["n"], r["sx"], r["sy"], r["sxy"], r["sxx"], r["syy"]) == (
-            n, sx, sy, sxy, sxx, syy,
-        )
-        assert r["cov_num"] == n * sxy - sx * sy
-        denx, deny = n * sxx - sx * sx, n * syy - sy * sy
-        if denx * deny > 0:
-            want = _round6((n * sxy - sx * sy) / math.sqrt(float(denx) * deny))
-            assert abs(r["xcorr"] - want) < 1e-9
-            assert -1.0 <= r["xcorr"] <= 1.0
-        else:
-            assert r["xcorr"] is None
 
 
 def test_ks_drift_matches_python_replica(spark):

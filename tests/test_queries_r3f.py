@@ -487,119 +487,14 @@ def test_pseudonymize_matches_python_replica(spark):
     assert sum(r["n_entities"] for r in rows.values()) == len(ents)
 
 
-def test_fk_integrity_matches_python_replica(spark):
-    li = spark.read.parquet(f"{SF}/lineitem.parquet").select(
-        "l_orderkey", "l_partkey", "l_suppkey"
-    ).collect()
-    okeys = {r["o_orderkey"] for r in spark.read.parquet(f"{SF}/orders.parquet").select("o_orderkey").collect()}
-    pkeys = {r["p_partkey"] for r in spark.read.parquet(f"{SF}/part.parquet").select("p_partkey").collect()}
-    skeys = {r["s_suppkey"] for r in spark.read.parquet(f"{SF}/supplier.parquet").select("s_suppkey").collect()}
-    rows = {r["fk"]: r for r in _q(spark, "q_fk_integrity").collect()}
-    assert len(rows) == 5
-    r = rows["lineitem.l_orderkey->orders"]
-    orphans = [x["l_orderkey"] for x in li if x["l_orderkey"] not in okeys]
-    assert (r["n_rows"], r["n_orphans"], r["n_orphan_keys"]) == (
-        len(li), len(orphans), len(set(orphans))
-    )
-    r = rows["lineitem.l_partkey->part"]
-    orphans = [x["l_partkey"] for x in li if x["l_partkey"] not in pkeys]
-    assert (r["n_rows"], r["n_orphans"], r["n_orphan_keys"]) == (
-        len(li), len(orphans), len(set(orphans))
-    )
-    r = rows["lineitem.l_suppkey->supplier"]
-    orphans = [x["l_suppkey"] for x in li if x["l_suppkey"] not in skeys]
-    assert (r["n_rows"], r["n_orphans"], r["n_orphan_keys"]) == (
-        len(li), len(orphans), len(set(orphans))
-    )
-
-
 # ---------------------------------------------------------------------------
 # batch 19: CUSUM changepoint + Benford audit
 # ---------------------------------------------------------------------------
 
 
-def test_cusum_changepoint_matches_python_replica(spark):
-    import datetime as dt
-
-    ev = spark.read.parquet(f"{SF}/events.parquet").select("ts").collect()
-    days = {}
-    for r in ev:
-        d = r["ts"].date()
-        days[d] = days.get(d, 0) + 1
-    dmin, dmax = min(days), max(days)
-    grid = []
-    d = dmin
-    while d <= dmax:
-        grid.append((d, days.get(d, 0)))
-        d += dt.timedelta(days=1)
-    n = len(grid)
-    t = sum(x for _, x in grid)
-    s = 0
-    expect = []
-    for k, (d, x) in enumerate(grid, 1):
-        s += x
-        expect.append((str(d), x, n * s - k * t))
-    peak = max(range(n), key=lambda i: (abs(expect[i][2]), -i))
-    rows = sorted(
-        _q(spark, "q_cusum_changepoint").collect(), key=lambda r: r["day"]
-    )
-    assert [(r["day"], r["x"], r["cusum_num"]) for r in rows] == expect
-    peaks = [i for i, r in enumerate(rows) if r["is_peak"]]
-    assert peaks == [peak]
-    # telescoping invariant: cusum_num ends at exactly 0 (n*T - n*T)
-    assert rows[-1]["cusum_num"] == 0
-
-
-def test_benford_audit_matches_python_replica(spark):
-    od = spark.read.parquet(f"{SF}/orders.parquet").select("o_totalprice").collect()
-    from collections import Counter
-
-    cnt = Counter()
-    for r in od:
-        p = r["o_totalprice"]
-        if p is None or p <= 0:
-            continue
-        cents = int(round(p * 100))
-        cnt[int(str(cents)[0])] += 1
-    rows = {r["digit"]: r for r in _q(spark, "q_benford_audit").collect()}
-    assert set(rows) == set(cnt)
-    total = sum(cnt.values())
-    for d, r in rows.items():
-        assert r["n_orders"] == cnt[d]
-        assert r["n_total"] == total
-
-
 # ---------------------------------------------------------------------------
 # batch 20: concurrency sweep
 # ---------------------------------------------------------------------------
-
-
-def test_concurrency_peak_matches_python_replica(spark):
-    ev = spark.read.parquet(f"{SF}/events.parquet").select("user_id", "ts").collect()
-    spans = {}
-    for r in ev:
-        u = r["user_id"]
-        t0, t1 = spans.get(u, (r["ts"], r["ts"]))
-        spans[u] = (min(t0, r["ts"]), max(t1, r["ts"]))
-    pts = []
-    for u, (t0, t1) in spans.items():
-        pts.append((t0, 1, u))
-        pts.append((t1, -1, u))
-    pts.sort(key=lambda p: (p[0], -p[1], p[2]))
-    expect, c = [], 0
-    for ts, d, u in pts:
-        c += d
-        expect.append((u, ts, d, c))
-    peak = max(range(len(expect)), key=lambda i: (expect[i][3], -i))
-    rows = sorted(
-        _q(spark, "q_concurrency_peak").collect(),
-        key=lambda r: (r["ts"], -r["delta"], r["user_id"]),
-    )
-    assert [(r["user_id"], r["ts"], r["delta"], r["concurrency"]) for r in rows] == expect
-    assert [i for i, r in enumerate(rows) if r["is_peak"]] == [peak]
-    # sweep invariants: ends at zero, never negative
-    assert rows[-1]["concurrency"] == 0
-    assert all(r["concurrency"] >= 0 for r in rows)
 
 
 # ---------------------------------------------------------------------------

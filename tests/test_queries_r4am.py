@@ -1,6 +1,5 @@
-"""Independent-oracle replica tests for the relational/scheduling/stat
-batch (q_skyline / q_critical_path / q_cramer_von_mises): an O(n^2)
-dominance scan with the antichain proof, a recursive longest-path CPM
+"""Independent-oracle replica tests for the scheduling/stat batch
+(q_critical_path / q_cramer_von_mises): a recursive longest-path CPM
 check with per-edge feasibility, and a Fractions CvM."""
 
 from __future__ import annotations
@@ -20,33 +19,6 @@ SF = "/root/testdata/sf0.001"
 
 def _md5(s: str) -> str:
     return hashlib.md5(s.encode()).hexdigest()
-
-
-def test_skyline_matches_replica(spark):
-    rows = duckdb.sql(
-        f"SELECT p_partkey, CAST(floor(p_retailprice * 100 + 0.5) AS BIGINT), "
-        f"p_size FROM read_parquet('{SF}/part.parquet')"
-    ).fetchall()
-
-    def dominated(b):
-        _kb, pb, sb = b
-        return any(
-            (pa < pb and sa >= sb) or (pa <= pb and sa > sb)
-            for _ka, pa, sa in rows
-        )
-
-    front = [r for r in rows if not dominated(r)]
-    got = {r["p_partkey"]: r for r in entry.queries()["q_skyline"](spark, SF).collect()}
-    assert set(got) == {k for k, _p, _s in front}
-    for k, p, s in front:
-        assert (got[k]["cents"], got[k]["size"]) == (p, s)
-        assert got[k]["n_total"] == len(rows)
-    # the front is an antichain: no skyline point dominates another
-    for a in front:
-        for b in front:
-            if a is b:
-                continue
-            assert not ((a[1] < b[1] and a[2] >= b[2]) or (a[1] <= b[1] and a[2] > b[2]))
 
 
 def test_critical_path_matches_replica(spark):

@@ -1,6 +1,6 @@
 """Independent-oracle property tests for the round-4o batch: straight-line
-Python replicas of bipartite HITS, longest-common-token-run chaining,
-near-dup BLEU-2, and the Z-order layout audit."""
+Python replicas of longest-common-token-run chaining and near-dup
+BLEU-2."""
 
 from __future__ import annotations
 
@@ -44,33 +44,6 @@ def _doc_toks():
         f"SELECT doc_id, text FROM read_parquet('{SF}/documents.parquet')"
     ).fetchall()
     return {d: [t.lower() for t in (txt or "").split()] for d, txt in docs}
-
-
-def test_hits_bipartite_matches_replica(spark):
-    ev = duckdb.sql(
-        f"SELECT user_id, event_type FROM read_parquet('{SF}/events.parquet')"
-    ).fetchall()
-    w = Counter(ev)
-    h1, a1, h2, a2 = Counter(), Counter(), Counter(), Counter()
-    for (u, t), c in w.items():
-        h1[u] += c
-    for (u, t), c in w.items():
-        a1[t] += c * h1[u]
-    for (u, t), c in w.items():
-        h2[u] += c * a1[t]
-    for (u, t), c in w.items():
-        a2[t] += c * h2[u]
-    got = [x.asDict() for x in _q(spark, "q_hits_bipartite").collect()]
-    hubs = {r["id"]: r for r in got if r["side"] == "hub"}
-    auths = {r["id"]: r for r in got if r["side"] == "auth"}
-    assert len(hubs) == len(h1) and len(auths) == len(a1)
-    for u, r in hubs.items():
-        assert r["score1"] == h1[int(u)] and r["score2"] == h2[int(u)]
-    for t, r in auths.items():
-        assert r["score1"] == a1[t] and r["score2"] == a2[t]
-    # the side-max rows carry share 1.0
-    assert any(r["share"] == 1.0 for r in hubs.values())
-    assert any(r["share"] == 1.0 for r in auths.values())
 
 
 def test_lcs_pairs_matches_replica(spark):
@@ -143,40 +116,3 @@ def test_bleu_neardup_matches_replica(spark):
         assert abs(r["bleu2"] - bp * math.sqrt(p1 * p2)) < 1e-5
         n_checked += 1
     assert n_checked > 0
-
-
-def _interleave(a, b):
-    z = 0
-    for i in range(8):
-        z |= ((a >> i) & 1) << (2 * i + 1)
-        z |= ((b >> i) & 1) << (2 * i)
-    return z
-
-
-def test_zorder_matches_replica_and_prunes_better(spark):
-    ev = duckdb.sql(
-        f"SELECT user_id, day(ts) * 24 + hour(ts) FROM "
-        f"read_parquet('{SF}/events.parquet')"
-    ).fetchall()
-    zfiles, lfiles = defaultdict(list), defaultdict(list)
-    for u, h in ev:
-        ub, hb = u % 256, h % 256
-        zfiles[_interleave(ub, hb) // 2048].append((ub, hb))
-        lfiles[(ub * 256 + hb) // 2048].append((ub, hb))
-    got = [x.asDict() for x in _q(spark, "q_zorder_layout").collect()]
-    for r in got:
-        files = zfiles if r["layout"] == "zorder" else lfiles
-        pts = files[r["file_id"]]
-        assert r["n_rows"] == len(pts)
-        assert r["ub_min"] == min(p[0] for p in pts)
-        assert r["ub_max"] == max(p[0] for p in pts)
-        assert r["hb_min"] == min(p[1] for p in pts)
-        assert r["hb_max"] == max(p[1] for p in pts)
-    # the point of Z-order: total span over both dims is no worse than
-    # linear's (linear files span the full trailing dimension)
-    span = {
-        lay: sum(r["span_sum"] * r["n_rows"] for r in got if r["layout"] == lay)
-        / sum(r["n_rows"] for r in got if r["layout"] == lay)
-        for lay in ("zorder", "linear")
-    }
-    assert span["zorder"] <= span["linear"]

@@ -1,13 +1,11 @@
 """Independent-oracle property tests for the round-4r batch: python
-replicas of the consistent-hashing ring audit, the Fano burstiness ledger,
-and the watermark-lateness histogram, plus the defining consistent-hashing
-invariant (old shards never exchange keys)."""
+replica of the consistent-hashing ring audit, plus the defining
+consistent-hashing invariant (old shards never exchange keys)."""
 
 from __future__ import annotations
 
-import datetime
 import hashlib
-from collections import Counter, defaultdict
+from collections import Counter
 
 import duckdb
 
@@ -65,65 +63,3 @@ def test_consistent_hashing_matches_replica(spark):
         assert r["total_moved"] == total_moved
     # roughly 1/9 of keys move (generous band for a small fixture)
     assert 0 < total_moved < len(docs) // 2
-
-
-def test_fano_matches_replica(spark):
-    rows = duckdb.sql(
-        f"SELECT event_type, CAST(ts AS DATE), count(*) FROM "
-        f"read_parquet('{SF}/events.parquet') GROUP BY 1, 2"
-    ).fetchall()
-    cnt = {(t, d): n for t, d, n in rows}
-    days = sorted({d for _t, d in cnt})
-    dmin, dmax = min(days), max(days)
-    grid = []
-    d = dmin
-    while d <= dmax:
-        grid.append(d)
-        d += datetime.timedelta(days=1)
-    types = sorted({t for t, _d in cnt})
-    got = {r["event_type"]: r for r in (x.asDict() for x in _q(spark, "q_fano_burstiness").collect())}
-    assert set(got) == set(types)
-    for t in types:
-        xs = [cnt.get((t, d), 0) for d in grid]
-        n, tot, ss = len(xs), sum(xs), sum(x * x for x in xs)
-        r = got[t]
-        assert r["n_days"] == n and r["total"] == tot and r["sumsq"] == ss
-        assert r["var_num"] == n * ss - tot * tot
-        assert r["fano_den"] == n * tot
-        assert abs(r["fano"] - (n * ss - tot * tot) / (n * tot)) < 1e-6
-
-
-def test_watermark_lateness_matches_replica(spark):
-    rows = duckdb.sql(
-        f"SELECT event_id, ts FROM read_parquet('{SF}/events.parquet')"
-    ).fetchall()
-    order = sorted(rows, key=lambda r: (hashlib.md5(str(r[0]).encode()).hexdigest(), r[0]))
-    wm = None
-    hist = Counter()
-    mx = defaultdict(int)
-    for _eid, ts in order:
-        wm = ts if wm is None or ts > wm else wm
-        # second-boundary semantics: both engines truncate each timestamp
-        # to seconds before differencing (unix_timestamp / date_diff)
-        late = int(
-            (
-                wm.replace(microsecond=0) - ts.replace(microsecond=0)
-            ).total_seconds()
-        )
-        b = -1 if late <= 0 else late.bit_length() - 1
-        hist[b] += 1
-        mx[b] = max(mx[b], late)
-    got = {r["bucket"]: r for r in (x.asDict() for x in _q(spark, "q_watermark_lateness").collect())}
-    assert set(got) == set(hist)
-    n_total = sum(hist.values())
-    cum = 0
-    for b in sorted(hist):
-        r = got[b]
-        assert r["n_events"] == hist[b]
-        assert r["max_late_s"] == mx[b]
-        assert r["n_total"] == n_total
-        assert r["bucket_floor_s"] == (0 if b == -1 else 1 << b)
-        cum += hist[b]
-        assert abs(r["cum_frac"] - cum / n_total) < 1e-6
-    # the md5 arrival permutation produces real lateness (non-vacuous)
-    assert len(hist) > 1

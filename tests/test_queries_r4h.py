@@ -1,6 +1,6 @@
 """Independent-oracle property tests for the round-4s batch: python
-replicas of the exact Wasserstein-1 length distance (vs a transport-based
-alternative formulation) and the join-skew audit."""
+replica of the exact Wasserstein-1 length distance (vs a transport-based
+alternative formulation)."""
 
 from __future__ import annotations
 
@@ -58,28 +58,3 @@ def test_wasserstein_matches_transport_replica(spark):
     for_b.sort()
     transport = sum(abs(x - y) for x, y in zip(steps, for_b))
     assert w1_num == transport
-
-
-def test_skew_audit_matches_replica(spark):
-    got = {r["join_key"]: r for r in (x.asDict() for x in _q(spark, "q_skew_audit").collect())}
-    specs = {
-        "lineitem.l_orderkey": ("lineitem", "l_orderkey"),
-        "orders.o_custkey": ("orders", "o_custkey"),
-        "events.user_id": ("events", "user_id"),
-    }
-    assert set(got) == set(specs)
-    for name, (tbl, col) in specs.items():
-        rows = duckdb.sql(
-            f"SELECT {col}, count(*) FROM read_parquet('{SF}/{tbl}.parquet') GROUP BY 1"
-        ).fetchall()
-        counts = [n for _k, n in rows]
-        r = got[name]
-        assert r["n_keys"] == len(counts)
-        assert r["n_rows"] == sum(counts)
-        assert r["max_key_rows"] == max(counts)
-        assert r["skew_num"] == max(counts) * len(counts)
-        ratio = max(counts) * len(counts) / sum(counts)
-        assert abs(r["skew_ratio"] - ratio) < 1e-6
-        expect_salt = 1 if ratio <= 4 else -(-(max(counts) * len(counts)) // (4 * sum(counts)))
-        assert r["rec_salt"] == expect_salt
-        assert r["rec_salt"] >= 1

@@ -1,6 +1,6 @@
 """Independent-oracle property tests for the round-4t batch: python
-replicas of dup-cluster conductance (union-find clusters + edge ledger),
-the degree CCDF spectrum, and Laplace-smoothed rates."""
+replicas of dup-cluster conductance (union-find clusters + edge ledger)
+and the degree CCDF spectrum."""
 
 from __future__ import annotations
 
@@ -134,28 +134,3 @@ def test_degree_ccdf_matches_replica(spark):
         assert r["n_nodes"] == n_nodes
     # CCDF at the minimum degree covers every node
     assert got[min(hist)]["n_ge"] == n_nodes
-
-
-def test_laplace_rates_matches_replica(spark):
-    rows = duckdb.sql(
-        f"SELECT user_id, "
-        f"sum(CASE WHEN event_type='purchase' THEN 1 ELSE 0 END), "
-        f"sum(CASE WHEN event_type='click' THEN 1 ELSE 0 END) "
-        f"FROM read_parquet('{SF}/events.parquet') GROUP BY 1"
-    ).fetchall()
-    tot_p = sum(p for _u, p, _c in rows)
-    tot_c = sum(c for _u, _p, c in rows)
-    got = {
-        r["user_id"]: r
-        for r in (x.asDict() for x in _q(spark, "q_laplace_rates").collect())
-    }
-    assert len(got) == len(rows)
-    for u, p, c in rows:
-        r = got[u]
-        assert (r["n_purch"], r["n_click"]) == (p, c)
-        assert (r["post_num"], r["post_den"]) == (p + 1, c + 2)
-        assert r["above_global"] == ((p + 1) * tot_c > (c + 2) * tot_p)
-        # smoothing: always defined and positive (raw rate may divide by
-        # zero; purchases are NOT a subset of clicks so >1 is legitimate)
-        assert r["smoothed_rate"] > 0
-        assert abs(r["smoothed_rate"] - (p + 1) / (c + 2)) < 1e-6

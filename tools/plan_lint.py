@@ -96,7 +96,6 @@ ALLOWED: dict[str, list[tuple[str, str]]] = {
     ],
     "q_lm_doc_score": [("BroadcastNestedLoopJoin", "1-row vocab-size carry")],
     "q_dsir_weights": [("BroadcastNestedLoopJoin", "1-row vocab carries (x2)")],
-    "q_gap_fill": [("BroadcastNestedLoopJoin", "hour-spine x group dim (both tiny)")],
     "q_mix_weights": [("BroadcastNestedLoopJoin", "1-row total carry")],
     "q_embedding_ivf_seeded": [("BroadcastNestedLoopJoin", "16-row centroid table probe")],
     "q_embedding_ivf_topk": [
@@ -105,7 +104,6 @@ ALLOWED: dict[str, list[tuple[str, str]]] = {
          "+ 1-row recall numerator/denominator carries (assert formulation)"),
         ("CartesianProduct", "1-row hits x 1-row denom scalar carry"),
     ],
-    "q_value_hist": [("BroadcastNestedLoopJoin", "1-row min/max bounds carry")],
     "q_quality_filter": [("BroadcastNestedLoopJoin", "1-row percentile bounds carry")],
     "q_curation_manifest": [
         ("BroadcastNestedLoopJoin", "1-row length-bounds carry (curate.length_bounds)")
@@ -116,9 +114,6 @@ ALLOWED: dict[str, list[tuple[str, str]]] = {
         ("CartesianProduct", "1-row x 1-row audit-count carry"),
     ],
     "q_scd2_pit": [("BroadcastNestedLoopJoin", "2-row release-version spine cross")],
-    "q_kmv_join_estimate": [
-        ("BroadcastNestedLoopJoin", "1-row sketch-stat carries (ua/ub/ug/overlap/exact audits)")
-    ],
     "q_rrf_fusion": [
         (
             "BroadcastNestedLoopJoin",
@@ -144,7 +139,6 @@ ALLOWED: dict[str, list[tuple[str, str]]] = {
         ("BroadcastNestedLoopJoin",
          "1-row vocab carry (LM) + 1-row total/tertile-bounds carries")
     ],
-    "q_key_skew": [("BroadcastNestedLoopJoin", "1-row total-rows carry")],
     "q_embedding_topk": [
         ("BroadcastNestedLoopJoin",
          "broadcast query-spine x corpus: the brute-force exact baseline BY "
@@ -159,9 +153,6 @@ ALLOWED: dict[str, list[tuple[str, str]]] = {
         ("CartesianProduct",
          "<=20-row query spine x 2-row method literal (bookkeeping base)")
     ],
-    "q_tpch_q11": [("BroadcastNestedLoopJoin", "1-row grand-total carry into the HAVING predicate")],
-    "q_tpch_q15": [("BroadcastNestedLoopJoin", "1-row max-revenue carry (top-supplier tie filter)")],
-    "q_tpch_q22": [("BroadcastNestedLoopJoin", "1-row sum/count balance-stats carry")],
     "q_rocchio_prf": [
         ("BroadcastNestedLoopJoin",
          "1-row n_docs/avgdl carry x2 passes + 1-row N carry into the "
@@ -171,11 +162,6 @@ ALLOWED: dict[str, list[tuple[str, str]]] = {
         ("BroadcastNestedLoopJoin",
          "broadcast <=20-row query spine x corpus inside the exact "
          "brute-force baseline (same shape as q_embedding_topk)")
-    ],
-    "q_leadlag_xcorr": [
-        ("BroadcastNestedLoopJoin",
-         "4-row lag spine x hour grid (both dimension-sized; corpus "
-         "already collapsed to hourly counts)")
     ],
     "q_ks_drift": [
         ("BroadcastNestedLoopJoin",
@@ -240,11 +226,6 @@ ALLOWED: dict[str, list[tuple[str, str]]] = {
          "(collapsed map-side to one row per doc) + 1-row ring-min "
          "wrap carry")
     ],
-    "q_fano_burstiness": [
-        ("BroadcastNestedLoopJoin",
-         "1-row day-bounds carry building the |types| x |days| zero-fill "
-         "spine (dimension-sized)")
-    ],
     "q_cluster_conductance": [
         ("BroadcastNestedLoopJoin",
          "1-row total-volume carry onto the |clusters|-sized ledger")
@@ -252,15 +233,6 @@ ALLOWED: dict[str, list[tuple[str, str]]] = {
     "q_degree_ccdf": [
         ("BroadcastNestedLoopJoin",
          "1-row node-total carry onto the |distinct degrees| spectrum")
-    ],
-    "q_laplace_rates": [
-        ("BroadcastNestedLoopJoin",
-         "1-row global-rate carry onto the per-user rollup (exact "
-         "cross-multiplied above_global bit)")
-    ],
-    "q_skyline": [
-        ("BroadcastNestedLoopJoin",
-         "1-row part-count carry onto the front-sized skyline output")
     ],
     "q_critical_path": [
         ("BroadcastNestedLoopJoin",
@@ -278,20 +250,6 @@ ALLOWED: dict[str, list[tuple[str, str]]] = {
          "entity-universe carry — the KGE filtered-ranking fanout, "
          "collapsed by 65-row windows")
     ],
-    "q_clip_bias": [
-        ("BroadcastNestedLoopJoin",
-         "3-row broadcast clip spine x the value scan, collapsed "
-         "map-side to 3 rows")
-    ],
-    "q_ab_interaction": [
-        ("BroadcastNestedLoopJoin",
-         "1-row wide-cell carry onto the 4-row factorial table")
-    ],
-    "q_lsm_cost_model": [
-        ("BroadcastNestedLoopJoin",
-         "constant fanout x level spines + 1-row ingest-bytes carry — a "
-         "36-row model frame")
-    ],
 }
 
 # Queries allowed to contain a Window with NO partition spec (round-4
@@ -302,24 +260,17 @@ ALLOWED: dict[str, list[tuple[str, str]]] = {
 # global window runs over corpus-scale rows must be restructured (e.g. a
 # bucketed lag + boundary stitch), not whitelisted.
 ALLOWED_GLOBAL_WINDOW: dict[str, str] = {
-    "q_benford_audit": "OVER() total on the 9-row leading-digit ledger",
     "q_bm25_search": "top-10 rank over the per-query scored match set — the "
                      "global top-k (TakeOrdered) shape",
-    "q_bottomk_merge": "shard-merge rank over the 128-row (8 shards x k=16) "
-                       "sketch union; direct pass ranks the same k-bounded "
-                       "frame",
     "q_compaction_plan": "cumulative-sum packing over the FILE LISTING "
                          "(metadata-sized: one row per data file, the "
                          "planner's own input)",
-    "q_concurrency_peak": "sweep-line cumsum over the 2x|users| "
-                          "boundary-event frame (dimension-sized)",
     "q_consistent_hashing": "ring-position rank over the 32/36-row vnode "
                             "ring",
     "q_cramer_von_mises": "ECDF cumulative window over the distinct-value "
                           "frame (value-domain bounded)",
     "q_curriculum_phases": "cumulative count over the DISTINCT-length "
                            "frequency table (length domain, not corpus)",
-    "q_cusum_changepoint": "CUSUM/rank windows on the |days| daily rollup",
     "q_degree_ccdf": "CCDF cumulative window over the |distinct degrees| "
                      "spectrum",
     "q_dup_discovery": "rank/cum windows over the <=12-row checkpoint "
@@ -327,8 +278,6 @@ ALLOWED_GLOBAL_WINDOW: dict[str, str] = {
     "q_epoch_shuffle": "global row_number IS the demonstrated operator "
                        "(epoch shuffle): gate-SF demonstration by design; "
                        "docstring documents the sharded production loader",
-    "q_key_skew": "rank over the top-k heavy-hitter table (k rows, "
-                  "TakeOrdered upstream)",
     "q_kg_negative_samples": "row_number over the OBJECT VOCABULARY "
                              "(dimension-sized index build, broadcast "
                              "afterwards)",
@@ -352,8 +301,6 @@ ALLOWED_GLOBAL_WINDOW: dict[str, str] = {
                          "(shuffle-quality audit) — gate-SF demonstration; "
                          "docstring documents the per-shard production "
                          "form",
-    "q_skyline": "ONE dominance sort window (dist_dense_rank shape); "
-                 "output front-sized",
     "q_vocab_coverage": "row_number over the VOCAB table (dimension-sized; "
                         "two-pass threshold trick documented for real "
                         "vocabularies)",
@@ -363,9 +310,6 @@ ALLOWED_GLOBAL_WINDOW: dict[str, str] = {
                    "table (dimension-sized BY DESIGN)",
     "q_wasserstein_lengths": "CDF windows over the merged distinct-value "
                              "grid (value-domain bounded)",
-    "q_watermark_lateness": "running event-time max — the audited "
-                            "streaming operator; docstring documents "
-                            "per-partition arrival sharding",
     "q_weighted_sample": "global top-k by hash-exponential key "
                          "(TakeOrdered shape, A-ES sampling)",
     "q_zipf_fit": "frequency rank over the aggregated token VOCAB "
