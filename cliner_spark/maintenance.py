@@ -244,8 +244,8 @@ def morton_col(a, b):
     """2-D Morton code of two 16-bit-bucketed keys: magic-number bit
     spreading (each round doubles the gap between occupied bits), as pure
     JVM bitwise expressions (shiftleft / bitwiseAND / bitwiseOR on longs),
-    zero Python in the row path, fully codegen-able — at 100 TB the z-value costs the same as any arithmetic
-    projection."""
+    zero Python in the row path, fully codegen-able — at 100 TB the z-value
+    costs the same as any arithmetic projection."""
 
     def spread(c):
         s = c.bitwiseAND(F.lit(65535))

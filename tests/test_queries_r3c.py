@@ -1,6 +1,7 @@
 """Independent-oracle property tests for the round-3j operators (Rocchio
-PRF retrieval, ANN nDCG, calibration bins, exact KS drift): straight-line Python replicas on the sf0.001 fixtures —
-the error class a shared-formula SQL twin cannot catch."""
+PRF retrieval, ANN nDCG, calibration bins, exact KS drift): straight-line
+Python replicas on the sf0.001 fixtures — the error class a shared-formula
+SQL twin cannot catch."""
 
 from __future__ import annotations
 
